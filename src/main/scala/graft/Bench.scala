@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: runs the headline queries on SPARK_GRAFT_SF_DIR and
   * prints ONE JSON line {"metric":...,"queries":{...}}. Each query's plan is
@@ -181,7 +180,7 @@ object Bench {
     // Gopher/MassiveText rule bundle over the composite corpus
     "text_gopher_rules",
     // Leiden-style refinement over the MEMOIZED louvain partition —
-    // preStage warms the shared ascent memo, so this entry times the
+    // Memo.stage warms the shared ascent memo, so this entry times the
     // refinement cc ALONE (round 15; previously ascent + cc, with the
     // refinement cost recoverable only by subtracting two noisy numbers)
     "graph_louvain_refine",
@@ -209,15 +208,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession(s"local[$cpus]", cpus.toInt)
 
     def time(f: => Unit): Double = {
       val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
@@ -256,30 +247,28 @@ object Bench {
     // archived 0.002 s "timings" for queries whose analysis failed, and the
     // JSON read as a speedup. Failures record a -1 sentinel and the name
     // lands in the "failed" array of the output line.
+    val stagedSec = scala.collection.mutable.LinkedHashMap.empty[String, Double]
     val results = measured.map { name =>
       val fn = SparkEntry.queries(name)
       // One-time inputs an entry deliberately does NOT measure — streaming
-      // source fixtures + the NB serving model, and curate_funnel's shared
-      // label memo — are staged OUTSIDE the timed region (round 13): the
-      // r12 single-shot stream numbers co-moved with temp-IO contention
-      // because each included its fixture write, and curate_funnel's time
-      // depended on run order leaving the label memo warm.
-      PipelineQueries.preStage(name, spark, sfDir)
-      // memo-backed entries (PipelineQueries.memoBackedQueries, and the
-      // streaming entries' result memos) share a per-session result cache:
-      // without busting it, the second run — and any run after another
-      // sharer — times a ConcurrentHashMap lookup instead of the pipeline.
-      // Clear the memo before every timed run so the reported number is
-      // the cold pipeline cost. With fixtures staged, stream entries
-      // re-run like every other entry — the bust no longer re-pays
-      // fixture churn, so the min strips one-off contention stalls
-      // (ADVICE r12: a single-shot stall used to land in the archived
-      // JSON unchallenged).
+      // source fixtures + the NB serving model, and the shared-input memos
+      // its warm-family consumers read — are staged OUTSIDE the timed
+      // region (round 13): the r12 single-shot stream numbers co-moved
+      // with temp-IO contention because each included its fixture write,
+      // and curate_funnel's time depended on run order leaving the label
+      // memo warm. The staging cost is recorded next to the entry.
+      val st = time(Memo.stage(name, spark, sfDir))
+      if (Memo.prestaged(name)) stagedSec(name) = st
+      // memo-cold entries share a per-session memo: without busting it,
+      // the second run — and any run after another sharer — times a
+      // memo lookup instead of the pipeline. Bust it before every timed
+      // run so the reported number is the cold pipeline cost. With
+      // fixtures staged, stream entries re-run like every other entry —
+      // the bust no longer re-pays fixture churn, so the min strips
+      // one-off contention stalls (ADVICE r12: a single-shot stall used
+      // to land in the archived JSON unchallenged).
       def once(): Double = {
-        if (PipelineQueries.memoBackedQueries(name))
-          PipelineQueries.clearMemos(spark, sfDir)
-        if (PipelineQueries.streamMemoQueries(name))
-          PipelineQueries.clearStreamMemos(spark, sfDir)
+        Memo.bustBefore(name, spark, sfDir)
         val t0 = System.nanoTime()
         try {
           fn(spark, sfDir).write.mode("overwrite").format("noop").save()
@@ -312,18 +301,19 @@ object Bench {
     val total = buildSec + results.map(_._2).filter(_ >= 0).sum
     // memo_cold names the entries timed with their shared per-session
     // memo cleared before every run (cold pipeline cost, not cache hits)
-    val cold = measured.filter(n => PipelineQueries.memoBackedQueries(n)
-        || PipelineQueries.streamMemoQueries(n))
+    val cold = measured.filter(Memo.coldEntries)
       .map("\"" + _ + "\"").mkString("[", ",", "]")
     // prestaged names the entries whose one-time inputs (stream fixtures,
-    // serving models, shared-input memos) are staged UNTIMED via preStage
-    // — so the archived record says exactly which numbers exclude a
-    // staged input (round 17; additive field, like memo_cold before it)
-    val staged = measured.filter(PipelineQueries.preStagedQueries)
-      .map("\"" + _ + "\"").mkString("[", ",", "]")
+    // serving models, shared-input memos) are staged UNTIMED — so the
+    // archived record says exactly which numbers exclude a staged input —
+    // and staged_sec what staging them cost (additive fields, like
+    // memo_cold before them)
+    val staged = stagedSec.keys.map("\"" + _ + "\"").mkString("[", ",", "]")
+    val stagedJson = stagedSec
+      .map { case (k, v) => "\"" + k + f"""":$v%.3f""" }.mkString("{", ",", "}")
     val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     val json =
-      f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"memo_cold":$cold,"prestaged":$staged,"failed":$failedJson,"sf":"$sfDir"}"""
+      f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"memo_cold":$cold,"prestaged":$staged,"staged_sec":$stagedJson,"failed":$failedJson,"sf":"$sfDir"}"""
     println(json)
     // also persist the record to a file: the driver captures the JSON from
     // the process tail, and a truncated tail (it happened in round 7 —

@@ -15,23 +15,6 @@ import graft.pipeline.{Dedup, Similarity, TextAnalysis}
   */
 object PipelineQueries {
 
-  // Staged streaming fixtures per (session, dir, name): the INPUT parquet
-  // a streaming entry reads. Staging is SEPARATE from the stream run so
-  // the bench can pay the fixture write untimed and time only stream
-  // start→sink-commit (round 13, VERDICT r12 #3: single-shot cold numbers
-  // that included the fixture write co-moved with temp-IO contention —
-  // events_stream_dedup swung 4.3→9.4 s with no code change — and a real
-  // stream regression could hide inside that band). Never busted by the
-  // bench: the fixture is the one-time input, not the measured pipeline.
-  private val streamFixtureCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), String]
-  private def streamFixture(name: String, s: SparkSession, d: String)
-                           (mk: String => Unit): String =
-    streamFixtureCache.computeIfAbsent((s, d, name), { _ =>
-      val tmp = java.nio.file.Files.createTempDirectory("graft-fx").toString
-      mk(tmp); tmp
-    })
-
   // the (event_id, ts, user_id, event_type, value, props) frame the three
   // event-shaped stream fixtures share
   private def streamEventsFrame(s: SparkSession, d: String): DataFrame =
@@ -40,72 +23,46 @@ object PipelineQueries {
       col("user_id"), col("event_type"),
       col("value").cast("double").as("value"), lit("").as("props"))
 
-  private def dedupStreamFixture(s: SparkSession, d: String): String =
-    streamFixture("events_stream_dedup", s, d) { tmp =>
+  // How each streaming entry writes its INPUT parquet into a fresh dir.
+  private val streamFixtureWriters = Map[String, (SparkSession, String, String) => Unit](
+    ("events_stream_dedup", { (s, d, tmp) =>
       val ev = streamEventsFrame(s, d)
       ev.unionByName(ev.where(col("event_id") % 7 === 0))
         .write.mode("overwrite").parquet(tmp)
-    }
-
-  private def sigDedupStreamFixture(s: SparkSession, d: String): String =
-    streamFixture("stream_sig_dedup", s, d) { tmp =>
+    }),
+    ("stream_sig_dedup", { (s, d, tmp) =>
       dedupCorpus(s, d)
         .select(timestamp_seconds(lit(946684800)).as("ts"), col("text"))
         .write.mode("overwrite").parquet(tmp)
-    }
-
-  /** Recursively delete a local scratch tree (children before parents).
-    * Used by entries that materialize a temp artifact, checkpoint the
-    * result, and no longer need the files — keeps memo-bust + recompute
-    * cycles (Bench iterations) from accumulating orphaned dirs. */
-  private def deleteDirTree(dir: String): Unit = {
-    val root = java.nio.file.Paths.get(dir)
-    if (java.nio.file.Files.exists(root)) {
-      val walk = java.nio.file.Files.walk(root)
-      try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        .forEach(p => { java.nio.file.Files.deleteIfExists(p); () })
-      finally walk.close()
-    }
-  }
-
-  private def assetStreamFixture(s: SparkSession, d: String): String =
-    streamFixture("stream_asset_features", s, d) { tmp =>
+    }),
+    ("stream_asset_features", { (s, _, tmp) =>
       pipeline.Multimodal.syntheticImageAssets(s, 60)
         .write.mode("overwrite").parquet(tmp)
-    }
-
-  // staged multi-file source of NEW embeddings (every 3rd vector re-keyed
-  // +10000) for stream_ann_ingest — 3 files => 3 micro-batches at
-  // maxFilesPerTrigger=1
-  private def annStreamFixture(s: SparkSession, d: String): String =
-    streamFixture("stream_ann_ingest", s, d) { tmp =>
+    }),
+    // a multi-file source of NEW embeddings (every 3rd vector re-keyed
+    // +10000) — 3 files => 3 micro-batches at maxFilesPerTrigger=1
+    ("stream_ann_ingest", { (s, d, tmp) =>
       embeddings(s, d).where(col("vec_id") % 3 === 0)
         .select((col("vec_id") + 10000L).as("vec_id"), col("embedding"))
         .repartition(3).write.mode("overwrite").parquet(tmp)
-    }
-
-  private def nbStreamFixture(s: SparkSession, d: String): String =
-    streamFixture("stream_nb_classify", s, d) { tmp =>
+    }),
+    ("stream_nb_classify", { (s, d, tmp) =>
       docs(s, d).repartition(8).write.mode("overwrite").parquet(tmp)
-    }
-
-  private def driftStreamFixture(s: SparkSession, d: String): String =
-    streamFixture("stream_label_drift", s, d) { tmp =>
+    }),
+    ("stream_label_drift", { (s, d, tmp) =>
       streamEventsFrame(s, d).write.mode("overwrite").parquet(tmp)
-    }
-
-  // partitioned into 6 TIME-RANGE files arriving oldest-first — the real
-  // streaming arrival shape, and the one the event-time watermark needs:
-  // ranges are disjoint and ordered, so every batch's rows are at or past
-  // the previous batch's max event time and the late-data filter drops
-  // nothing (a user-keyed or unordered fixture puts the global max ts in
-  // batch 1 and the watermark then discards most later batches). Mod
-  // times are pinned ascending in range order because the file source
-  // processes oldest-first: part files finish writing in task order, not
-  // range order, so without the pin the arrival order — and therefore
-  // which rows count as late — would be nondeterministic.
-  private def sessionStreamFixture(s: SparkSession, d: String): String =
-    streamFixture("stream_sessionize", s, d) { tmp =>
+    }),
+    // partitioned into 6 TIME-RANGE files arriving oldest-first — the real
+    // streaming arrival shape, and the one the event-time watermark needs:
+    // ranges are disjoint and ordered, so every batch's rows are at or past
+    // the previous batch's max event time and the late-data filter drops
+    // nothing (a user-keyed or unordered fixture puts the global max ts in
+    // batch 1 and the watermark then discards most later batches). Mod
+    // times are pinned ascending in range order because the file source
+    // processes oldest-first: part files finish writing in task order, not
+    // range order, so without the pin the arrival order — and therefore
+    // which rows count as late — would be nondeterministic.
+    ("stream_sessionize", { (s, d, tmp) =>
       streamEventsFrame(s, d).repartitionByRange(6, col("ts"))
         .write.mode("overwrite").parquet(tmp)
       val listing = java.nio.file.Files.list(java.nio.file.Paths.get(tmp))
@@ -121,248 +78,102 @@ object PipelineQueries {
         java.nio.file.Files.setLastModifiedTime(p,
           java.nio.file.attribute.FileTime.fromMillis(1000000000000L + i * 60000L))
       }
-    }
+    }))
+
+  // Staged streaming fixtures per (session, dir, entry): the INPUT parquet
+  // a streaming entry reads. Staging is SEPARATE from the stream run so
+  // the bench can pay the fixture write untimed and time only stream
+  // start→sink-commit (round 13, VERDICT r12 #3: single-shot cold numbers
+  // that included the fixture write co-moved with temp-IO contention —
+  // events_stream_dedup swung 4.3→9.4 s with no code change — and a real
+  // stream regression could hide inside that band). A Fixture: the
+  // one-time input, not the measured pipeline.
+  private val streamFixtures = Memo.keyed[String, String]("stream_fixture", Memo.Fixture,
+      stagedFor = streamFixtureWriters.keys.map(e => e -> e).toMap) { (s, d, entry) =>
+    val tmp = Memo.tempDir("graft-fx")
+    streamFixtureWriters(entry)(s, d, tmp)
+    tmp
+  }
 
   // the fitted NB model stream_nb_classify SERVES — the production
   // one-time cost beside the fixture (model trained once, stream scored
   // per micro-batch), checkpointed so repeated serving runs replay no
   // training lineage; staged untimed with the fixture
-  private val nbServeModelCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), (DataFrame, DataFrame)]
-  private def nbServeModel(s: SparkSession, d: String): (DataFrame, DataFrame) =
-    nbServeModelCache.computeIfAbsent((s, d), { _ =>
-      val (wm, lt) = TextAnalysis.naiveBayesModel(docs(s, d), "text", "lang")
-      (wm.localCheckpoint(true), lt.localCheckpoint(true))
-    })
-
-  /** Pre-stage hook for [[Bench]]: pays an entry's one-time, deliberately
-    * UNTIMED inputs before its timed region — streaming fixtures (and the
-    * NB serving model) for [[streamMemoQueries]], and the shared near-dup
-    * label memo for curate_funnel (that entry benches the warm-memo
-    * serving form; without an explicit warm, its number depended on
-    * whether an earlier memo-backed entry happened to leave the memo
-    * filled — ADVICE r12 run-order coupling). No-op for everything else;
-    * Verify never calls it (correctness is temperature-independent). */
-  def preStage(name: String, s: SparkSession, d: String): Unit = name match {
-    case "events_stream_dedup" => dedupStreamFixture(s, d); ()
-    case "stream_sig_dedup"    => sigDedupStreamFixture(s, d); ()
-    case "stream_asset_features" => assetStreamFixture(s, d); ()
-    case "stream_nb_classify"  => nbStreamFixture(s, d); nbServeModel(s, d); ()
-    case "stream_label_drift"  => driftStreamFixture(s, d); ()
-    case "stream_sessionize"   => sessionStreamFixture(s, d); ()
-    case "stream_ann_ingest"   => annStreamFixture(s, d); ivfPqIdx(s, d); ivfPqCodes(s, d); ()
-    case "stream_graph_ingest" => GraphQueries.stageIngestFixture(s, d)
-    case "curate_funnel"       => neardupLabels(s, d); ()
-    // the louvain CONSUMERS time only their own work (refinement cc /
-    // modularity rollup) over the shared partition memo; graph_louvain
-    // itself stays memo-busted so the ascent is still timed cold
-    case "graph_louvain_refine" | "graph_louvain_quality" =>
-      GraphQueries.stageLouvainPartition(s, d)
-    // leiden quality consumes BOTH partition memos (graph_leiden itself
-    // stays memo-busted so the interleaved ascent is timed cold)
-    case "graph_leiden_quality" =>
-      GraphQueries.stageLeidenPartition(s, d)
-    // the warm-family co-purchase consumers (round 17): each times ONLY
-    // its own algorithm over the materialized pair-frame memo — the one
-    // pre-pass per corpus version. Without the explicit warm, whether an
-    // entry paid the lineitem self-join depended on run order (a
-    // preceding memo-cold entry busts the memo — the ADVICE r12
-    // coupling). The memo-cold ascent/walk-corpus entries stay unstaged
-    // and re-pay the build inside their cold pipelines.
-    case "graph_ktruss" | "graph_kcore_df" | "graph_adamic_adar"
-       | "graph_assortativity" | "graph_clustering_coeff"
-       | "graph_louvain_move" | "graph_weighted_walks"
-       | "graph_walk_pairs_long" | "graph_node2vec_walks"
-       | "graph_node2vec_walks_long" =>
-      GraphQueries.stageCoPairs(s, d)
-    // the triangle twins share the memoized exact-dup clique graph —
-    // each times its triangle algorithm, not the identical input build
-    case "graphx_triangles" | "graph_triangles_df" =>
-      stageCliquePairs(s, d)
-    case _ => ()
+  private val nbServeModel = Memo("nb_serve_model", Memo.Fixture,
+      stagedFor = Set("stream_nb_classify")) { (s, d) =>
+    val (wm, lt) = TextAnalysis.naiveBayesModel(docs(s, d), "text", "lang")
+    (wm.localCheckpoint(true), lt.localCheckpoint(true))
   }
 
-  /** Entries whose [[preStage]] case does nontrivial untimed staging —
-    * published in the bench JSON (`prestaged`) so every archived record
-    * names exactly which numbers exclude a staged one-time input
-    * (fixture, serving model, or shared-input memo). Keep in sync with
-    * the match above. */
-  val preStagedQueries: Set[String] = Set(
-    "events_stream_dedup", "stream_sig_dedup", "stream_asset_features",
-    "stream_nb_classify", "stream_label_drift", "stream_sessionize",
-    "stream_ann_ingest", "stream_graph_ingest", "curate_funnel",
-    "graph_louvain_refine", "graph_louvain_quality", "graph_leiden_quality",
-    "graph_ktruss", "graph_kcore_df", "graph_adamic_adar",
-    "graph_assortativity", "graph_clustering_coeff", "graph_louvain_move",
-    "graph_weighted_walks", "graph_walk_pairs_long", "graph_node2vec_walks",
-    "graph_node2vec_walks_long", "graphx_triangles", "graph_triangles_df")
-
-  private val streamDedupCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]
-
-  private val streamSigDedupCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]
-
-  private val streamAssetCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]
-
-  private val streamNbCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]
-
-  private val exportManifestCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]
-
-  private val streamDriftCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]
-
-  private val streamSessionCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]
-
-  private val streamAnnCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]
-
-  // the near-dup cluster labels over the planted-dup corpus are the
-  // shared input of curate_dup_clusters_df and curate_cluster_histogram —
-  // memoized per (session, dir) like the graph build, so the LSH propose +
-  // verify pipeline AND the cc iteration run once per session, not once
-  // per consumer (both stages materialize eagerly via localCheckpoint, so
-  // the cached frame is a cheap scan of the final checkpoint)
   // the exact-dup CLIQUE pair graph (bounded expansion) is the shared
   // input of the two triangle-counting twins (graphx_triangles /
   // graph_triangles_df — the bridge-vs-DataFrame comparison the entries
   // exist to make): memoized + materialized per (session, dir) — round
-  // 17, same shape as GraphQueries.coPairsCache — so each twin times its
-  // TRIANGLE COUNTING, not a private rebuild of the identical input
-  // graph (~1-1.5 s apiece at sf0.1). preStage warms it untimed;
-  // clearMemos drops it with the other shared-input memos.
-  private val cliquePairsCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]
-  private def cliquePairs(s: SparkSession, d: String): DataFrame =
-    cliquePairsCache.computeIfAbsent((s, d), { _ =>
-      pipeline.Curation.exactDupCliquePairs(
-        dedupCorpus(s, d), "doc_id", "text", maxGroupSize = 256)
-        .localCheckpoint(true)
-    })
-  /** Pre-stage hook for the triangle twins: warm the clique-pair memo
-    * without timing it. */
-  private def stageCliquePairs(s: SparkSession, d: String): Unit = {
-    cliquePairs(s, d); ()
+  // 17, same shape as GraphQueries' co-purchase pairs — so each twin
+  // times its TRIANGLE COUNTING, not a private rebuild of the identical
+  // input graph (~1-1.5 s apiece at sf0.1); both are staged untimed.
+  private val cliquePairs = Memo("clique_pairs", Memo.Shared,
+      stagedFor = Set("graphx_triangles", "graph_triangles_df")) { (s, d) =>
+    pipeline.Curation.exactDupCliquePairs(
+      dedupCorpus(s, d), "doc_id", "text", maxGroupSize = 256)
+      .localCheckpoint(true)
   }
 
-  private val neardupLabelsCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]
-  private def neardupLabels(s: SparkSession, d: String): DataFrame =
-    neardupLabelsCache.computeIfAbsent((s, d), { _ =>
-      pipeline.ConnectedComponents.labels(
-        Dedup.ngramJaccardViaMinhash(dedupCorpus(s, d), "doc_id", "text",
-          n = 3, k = 4, minSim = 0.5).select("a", "b"))
-    })
-
-  /** Queries whose result frame is memoized per (session, dir) — a repeat
-    * invocation is a cache lookup, not a pipeline run. The bench clears
-    * these memos before EVERY timed run (see [[Bench]]) so its numbers
-    * measure the cold pipeline; Verify keeps them (correctness is
-    * temperature-independent, and the memo is what keeps repeated harness
-    * invocations from accumulating temp dirs and streaming sinks). */
-  val memoBackedQueries: Set[String] = Set(
-    "curate_dup_clusters_df", "curate_cluster_histogram",
-    "curate_leakage_split",
-    "curate_export_manifest",
-    // the shared walk-corpus memo: each entry timed cold pays the full
-    // walk build (same convention as the funnel family above)
-    "graph_random_walks", "graph_walk_pairs", "graph_walk_negatives",
-    "graph_walk_subsample",
-    // the shared louvain/leiden-partition memos: the ascent entries are
-    // timed cold; the refine/quality consumers re-warm via preStage
-    "graph_louvain", "graph_louvain_weighted", "graph_leiden")
-
-  /** Drop the per-(session, dir) memos behind [[memoBackedQueries]]. The
-    * streaming memos live behind [[streamMemoQueries]]/[[clearStreamMemos]]
-    * instead: the bench busts them ONCE per entry and times that single
-    * cold run (re-running would alternate real-stream and memo-lookup
-    * timings, and the min would report the lookup). */
-  def clearMemos(s: SparkSession, d: String): Unit = {
-    neardupLabelsCache.remove((s, d))
-    exportManifestCache.remove((s, d))
-    cliquePairsCache.remove((s, d))
-    GraphQueries.clearWalkMemo(s, d)
-    GraphQueries.clearLouvainMemo(s, d)
-    // the co-purchase pair-frame memo (round 17): memo-cold entries must
-    // re-pay the pair build inside their own cold pipeline; the
-    // warm-family consumers re-warm it via preStage
-    GraphQueries.clearCoPairsMemo(s, d)
-  }
-
-  /** Headline entries whose result is a memoized REAL streaming run
-    * (fixture write + watermarked stream + checkpointed result). Each is
-    * timed SINGLE-SHOT with its memo cleared first: without the bust the
-    * recorded min was a ConcurrentHashMap lookup (~0.02 s for multi-second
-    * pipelines — archived through r11), making regressions on these paths
-    * invisible; busting before EVERY run would instead benchmark temp-file
-    * churn twice. One cold run per bench measures the pipeline once. */
-  val streamMemoQueries: Set[String] = Set(
-    "events_stream_dedup", "stream_sig_dedup", "stream_asset_features",
-    "stream_nb_classify", "stream_label_drift", "stream_graph_ingest",
-    "stream_sessionize", "stream_ann_ingest")
-
-  /** Drop the per-(session, dir) streaming memos (see
-    * [[streamMemoQueries]]). Verify never calls this — correctness is
-    * temperature-independent and keeping the memo stops repeated harness
-    * invocations from accumulating temp dirs and streaming sinks. */
-  def clearStreamMemos(s: SparkSession, d: String): Unit = {
-    streamDedupCache.remove((s, d))
-    streamSigDedupCache.remove((s, d))
-    streamAssetCache.remove((s, d))
-    streamNbCache.remove((s, d))
-    streamDriftCache.remove((s, d))
-    streamSessionCache.remove((s, d))
-    streamAnnCache.remove((s, d))
-    GraphQueries.clearIngestMemo(s, d)
+  // the near-dup cluster labels over the planted-dup corpus are the
+  // shared input of curate_dup_clusters_df, curate_cluster_histogram,
+  // curate_leakage_split and curate_funnel — memoized per (session, dir)
+  // like the graph build, so the LSH propose + verify pipeline AND the cc
+  // iteration run once per session, not once per consumer (both stages
+  // materialize eagerly via localCheckpoint, so the cached frame is a
+  // cheap scan of the final checkpoint). The first three are timed cold;
+  // curate_funnel benches the warm-memo serving form and is staged —
+  // without the explicit warm, its number depended on whether an earlier
+  // memo-cold entry happened to leave the memo filled (ADVICE r12
+  // run-order coupling).
+  private val neardupLabels = Memo("neardup_labels", Memo.Shared,
+      stagedFor = Set("curate_funnel"),
+      coldFor = Set("curate_dup_clusters_df", "curate_cluster_histogram",
+        "curate_leakage_split")) { (s, d) =>
+    pipeline.ConnectedComponents.labels(
+      Dedup.ngramJaccardViaMinhash(dedupCorpus(s, d), "doc_id", "text",
+        n = 3, k = 4, minSim = 0.5).select("a", "b"))
   }
 
   // Trained IVF-PQ index per (session, dir) — the production lifecycle
   // (index built once, served by every query); ann_ivfpq_topk and the
-  // recall report share it. NOT memo-busted by the bench: busting would
-  // re-time index TRAINING inside every serving measurement.
-  private val ivfPqIndexCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), (DataFrame, DataFrame)]
-  private def ivfPqIdx(s: SparkSession, d: String): (DataFrame, DataFrame) =
-    ivfPqIndexCache.computeIfAbsent((s, d), { _ =>
-      pipeline.Quantization.ivfPqIndex(embeddings(s, d), "vec_id", "embedding",
-        nlist = 16, m = 16, codewords = 256, iters = 2)
-    })
+  // recall report share it. A Fixture: busting it would re-time index
+  // TRAINING inside every serving measurement.
+  private val ivfPqIdx = Memo("ivfpq_index", Memo.Fixture,
+      stagedFor = Set("stream_ann_ingest")) { (s, d) =>
+    pipeline.Quantization.ivfPqIndex(embeddings(s, d), "vec_id", "embedding",
+      nlist = 16, m = 16, codewords = 256, iters = 2)
+  }
+
+  // Encoded corpus codes per (session, dir) — the index's PERSISTED
+  // representation, encoded ONCE beside the trained quantizers (the same
+  // build-once lifecycle as ivfPqIdx, also a Fixture). ann_ivfpq_topk
+  // serves from these stored codes, so its bench number is per-query
+  // cost; the encode pass itself is benched by its own entry
+  // (ann_ivfpq_encode), which bypasses this memo by construction.
+  private val ivfPqCodes = Memo("ivfpq_codes", Memo.Fixture,
+      stagedFor = Set("stream_ann_ingest")) { (s, d) =>
+    val (cent, cb) = ivfPqIdx(s, d)
+    pipeline.Quantization
+      .ivfPqEncode(embeddings(s, d), "vec_id", "embedding", 16, cent, cb)
+      .localCheckpoint(true)
+  }
 
   // Saved on-disk IVF-PQ index per (session, dir) — built + written ONCE
   // (the production one-time cost); ann_ivfpq_serve then measures the
   // serving path alone: load the parquet index, search the stored codes,
-  // never touch the raw embeddings. NOT memo-busted by the bench, same
-  // rationale as ivfPqIdx.
-  // Encoded corpus codes per (session, dir) — the index's PERSISTED
-  // representation, encoded ONCE beside the trained quantizers (the same
-  // build-once lifecycle as ivfPqIdx; NOT memo-busted by the bench).
-  // ann_ivfpq_topk serves from these stored codes, so its bench number is
-  // per-query cost; the encode pass itself is benched by its own entry
-  // (ann_ivfpq_encode), which bypasses this memo by construction.
-  private val ivfPqCodesCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]
-  private def ivfPqCodes(s: SparkSession, d: String): DataFrame =
-    ivfPqCodesCache.computeIfAbsent((s, d), { _ =>
-      val (cent, cb) = ivfPqIdx(s, d)
-      pipeline.Quantization
-        .ivfPqEncode(embeddings(s, d), "vec_id", "embedding", 16, cent, cb)
-        .localCheckpoint(true)
-    })
-
-  private val annIndexPathCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]
-  private def savedAnnIndex(s: SparkSession, d: String): String =
-    annIndexPathCache.computeIfAbsent((s, d), { _ =>
-      val dir = java.nio.file.Files.createTempDirectory("graft-annidx").toString
-      val (cent, cb) = ivfPqIdx(s, d)
-      val codes = ivfPqCodes(s, d).withColumnRenamed("vec_id", "id")
-      pipeline.AnnIndex.save(pipeline.AnnIndex.IvfPq(cent, cb, codes, 16), dir)
-      dir
-    })
+  // never touch the raw embeddings. A Fixture, same rationale as ivfPqIdx.
+  private val savedAnnIndex = Memo("saved_ann_index", Memo.Fixture) { (s, d) =>
+    val dir = Memo.tempDir("graft-annidx")
+    val (cent, cb) = ivfPqIdx(s, d)
+    val codes = ivfPqCodes(s, d).withColumnRenamed("vec_id", "id")
+    pipeline.AnnIndex.save(pipeline.AnnIndex.IvfPq(cent, cb, codes, 16), dir)
+    dir
+  }
 
   private def docs(spark: SparkSession, dir: String): DataFrame =
     TpchGraph.table(spark, dir, "documents")
@@ -789,16 +600,16 @@ object PipelineQueries {
     // is staged via the shared fixture memo (untimed in the bench), the
     // stream run + memory-sink table are memoized per (session, dir) so
     // repeated harness invocations don't accumulate sinks
-    "events_stream_dedup" -> ((s, d) => streamDedupCache.computeIfAbsent((s, d), { _ =>
-      graft.streaming.EventStreams.runToMemory(s, dedupStreamFixture(s, d),
+    "events_stream_dedup" -> Memo.coldResult("events_stream_dedup", Memo.Stream) { (s, d) =>
+      graft.streaming.EventStreams.runToMemory(s, streamFixtures(s, d, "events_stream_dedup"),
         df => graft.streaming.EventStreams.streamingDedup(df).select("event_id"))
-    })),
+    },
     // streaming NEAR-dup dedup: per-row minhash signatures through the
     // real streaming engine (readStream → dropDuplicatesWithinWatermark on
     // the signature tuple → memory sink) over the planted-dup corpus; the
     // output is the distinct signature set — arrival-order independent
-    "stream_sig_dedup" -> ((s, d) => streamSigDedupCache.computeIfAbsent((s, d), { _ =>
-      val tmp = sigDedupStreamFixture(s, d)
+    "stream_sig_dedup" -> Memo.coldResult("stream_sig_dedup", Memo.Stream) { (s, d) =>
+      val tmp = streamFixtures(s, d, "stream_sig_dedup")
       val schema = org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField("ts",
           org.apache.spark.sql.types.TimestampType),
@@ -807,33 +618,33 @@ object PipelineQueries {
       graft.streaming.EventStreams.runToMemory(s, tmp,
         df => graft.streaming.EventStreams.streamingSignatureDedup(df),
         schema = schema)
-    })),
+    },
     // streaming multimodal ingest: the BATCH image decoder runs unchanged
     // on a readStream of asset files (filter + typed mapPartitions are
     // streaming-legal narrow ops), the continuous-media-ingest shape —
     // per micro-batch, per partition, one decoder; no state, no shuffle
-    "stream_asset_features" -> ((s, d) => streamAssetCache.computeIfAbsent((s, d), { _ =>
-      val tmp = assetStreamFixture(s, d)
+    "stream_asset_features" -> Memo.coldResult("stream_asset_features", Memo.Stream) { (s, d) =>
+      val tmp = streamFixtures(s, d, "stream_asset_features")
       graft.streaming.EventStreams.runToMemory(s, tmp,
         df => pipeline.Multimodal.imageFeatures(df).toDF()
           .withColumn("width", col("width").cast("long"))
           .withColumn("height", col("height").cast("long")),
         schema = pipeline.Multimodal.assetWriteSchema)
-    })),
+    },
     // streaming model serving: fit NB on the labeled batch corpus, score a
     // readStream of the same documents per micro-batch (foreachBatch replays
     // the oracle-verified batch scorer; whole-file batches keep per-doc
     // scoring single-shot), append scored rows to a parquet sink
-    "stream_nb_classify" -> ((s, d) => streamNbCache.computeIfAbsent((s, d), { _ =>
+    "stream_nb_classify" -> Memo.coldResult("stream_nb_classify", Memo.Stream) { (s, d) =>
       val (wm, lt) = nbServeModel(s, d)
-      val src = nbStreamFixture(s, d)
+      val src = streamFixtures(s, d, "stream_nb_classify")
       // the parquet SINK is part of the serving pipeline (fresh per run —
       // a streaming parquet sink appends, never overwrites), unlike the
       // staged source fixture and the once-fitted model
-      val out = java.nio.file.Files.createTempDirectory("graft-nbout").toString
+      val out = Memo.tempDir("graft-nbout")
       graft.streaming.EventStreams.streamingNbClassify(s, src, out, wm, lt,
         "doc_id", "text", docs(s, d).schema, maxFilesPerTrigger = 3)
-    })),
+    },
     // BPE-style merge-rule learning: 4 rounds of top-pair promotion with
     // literal two-pass rewrites; later rounds merge against merged tokens
     "curate_bpe_merges" -> ((s, d) =>
@@ -970,7 +781,7 @@ object PipelineQueries {
     // the pipeline SINK: corpus written partitioned by (split, lang) and
     // the manifest aggregated from the read-back directory tree — counts
     // prove partition values survive the layout round-trip
-    "curate_export_manifest" -> ((s, d) => exportManifestCache.computeIfAbsent((s, d), { _ =>
+    "curate_export_manifest" -> Memo.coldResult("curate_export_manifest", Memo.Shared) { (s, d) =>
       val labeled = pipeline.Curation.splitLabel(docs(s, d), "doc_id")
         .withColumn("lang_guess", TextAnalysis.langId(col("text")))
         .select("doc_id", "split", "lang_guess")
@@ -986,7 +797,7 @@ object PipelineQueries {
         s"graft-export-$dirKey-${System.getProperty("user.name", "u")}-${ProcessHandle.current.pid}").toString
       pipeline.Curation.exportPartitioned(labeled, tmp, Seq("split", "lang_guess"))
         .localCheckpoint(true)
-    })),
+    },
     // JSONL sink + source round-trip: write the corpus as JSON Lines,
     // read it back under the original schema, aggregate the read-back —
     // counts/sums prove the values survived the text format (the
@@ -1038,12 +849,12 @@ object PipelineQueries {
     // aggregation through the real streaming engine (closed windows emit
     // once), drift reported over the emitted frame; memoized like the
     // other stream fixtures
-    "stream_label_drift" -> ((s, d) => streamDriftCache.computeIfAbsent((s, d), { _ =>
-      graft.streaming.EventStreams.streamingLabelDrift(s, driftStreamFixture(s, d))
+    "stream_label_drift" -> Memo.coldResult("stream_label_drift", Memo.Stream) { (s, d) =>
+      graft.streaming.EventStreams.streamingLabelDrift(s, streamFixtures(s, d, "stream_label_drift"))
         .select(col("window_start").cast("long").as("w_start"),
           col("n_events"), col("drift_micro"))
         .localCheckpoint(true)
-    })),
+    },
     // streaming sessionization: the flatMapGroupsWithState session
     // assembler through the REAL streaming engine (multi-batch file
     // source, maxFilesPerTrigger=2 over the user-partitioned fixture)
@@ -1052,15 +863,15 @@ object PipelineQueries {
     // users' state flushes deterministically with the data and the
     // end-of-run output is a pure function of the input (the oracle
     // replays both emission rules)
-    "stream_sessionize" -> ((s, d) => streamSessionCache.computeIfAbsent((s, d), { _ =>
-      graft.streaming.EventStreams.runToMemory(s, sessionStreamFixture(s, d),
+    "stream_sessionize" -> Memo.coldResult("stream_sessionize", Memo.Stream) { (s, d) =>
+      graft.streaming.EventStreams.runToMemory(s, streamFixtures(s, d, "stream_sessionize"),
           df => graft.streaming.EventStreams
             .sessionizeEventTime(df, gapSeconds = 1800, watermarkDelay = "10 minutes").toDF()
             .select(col("userId").as("user_id"), col("nEvents").as("n_events"),
               col("firstTs").as("first_ts"), col("lastTs").as("last_ts")),
           maxFilesPerTrigger = Some(2))
         .localCheckpoint(true)
-    })),
+    },
     // distribution-shift screen: PSI of the document word-count histogram
     // between the train and test split slices (fixed 10-wide buckets
     // capped at 20, +1 Laplace smoothing over the 21-bucket domain)
@@ -1409,11 +1220,12 @@ object PipelineQueries {
     // frozen quantizers), so the re-keyed copies decode identically to
     // their originals and the oracle replays the whole ingest as a
     // re-keyed projection of the base encode. The index dir is fresh per
-    // run (appends are cumulative); quantizers/codes come from the
-    // build-once memo, staged untimed by preStage.
-    "stream_ann_ingest" -> ((s, d) => streamAnnCache.computeIfAbsent((s, d), { _ =>
-      val src = annStreamFixture(s, d)
-      val idxDir = java.nio.file.Files.createTempDirectory("graft-annidx-ingest").toString
+    // run (appends are cumulative) and outlives the served checkpoint until
+    // the memo is busted; quantizers/codes come from the build-once memo,
+    // staged untimed.
+    "stream_ann_ingest" -> Memo.coldResult("stream_ann_ingest", Memo.Stream) { (s, d) =>
+      val src = streamFixtures(s, d, "stream_ann_ingest")
+      val idxDir = Memo.tempDir("graft-annidx-ingest")
       val (cent, cb) = ivfPqIdx(s, d)
       pipeline.AnnIndex.save(
         pipeline.AnnIndex.IvfPq(cent, cb,
@@ -1430,22 +1242,10 @@ object PipelineQueries {
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .start()
       q.awaitTermination()
-      val served = pipeline.AnnIndex.search(pipeline.AnnIndex.load(s, idxDir),
+      pipeline.AnnIndex.search(pipeline.AnnIndex.load(s, idxDir),
           e.where(col("vec_id") < 5), "vec_id", "embedding", k = 3, nprobe = 8)
         .localCheckpoint(true)
-      // the checkpoint materialized the served rows — the on-disk index is
-      // no longer referenced, so drop it here instead of leaking one temp
-      // index dir per memo compute (ADVICE r14: Bench's clearStreamMemos +
-      // recompute cycle accumulated orphaned parquet dirs). LOCAL-ONLY
-      // assumption (ADVICE r15): localCheckpoint blocks are executor-local
-      // and non-reliable, so deleting their parquet lineage is safe only
-      // in this single-JVM bench/gate harness; a cluster caller would
-      // defer the delete to the memo-bust path (clearStreamMemos) so the
-      // files outlive any consumer that might need to recompute lost
-      // blocks.
-      deleteDirTree(idxDir)
-      served
-    })),
+    },
     // ANN QA: measured recall@k per approximate method (LSH buckets, IVF
     // probing, IVF-PQ ADC) against the exact brute-force top-k over the
     // same query slice — the vector-space sibling of dedup_recall_report

@@ -47,22 +47,14 @@ object PlanDump {
     val names = args(2).split(",").map(_.trim).filter(_.nonEmpty)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession(s"local[$cpus]", cpus.toInt)
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     names.foreach { name =>
       val df = special.get(name) match {
         case Some(mk) => mk(spark, sfDir)
         case None =>
           val fn = SparkEntry.queries(name)
-          PipelineQueries.preStage(name, spark, sfDir)
+          Memo.stage(name, spark, sfDir)
           fn(spark, sfDir)
       }
       val txt = df.queryExecution.explainString(

@@ -38,13 +38,7 @@ object TpchGraph {
     * the whole union subtree per use site — without this, traversal plans
     * that touch vertices/props many times blow up Catalyst/AQE planning
     * time multiplicatively. */
-  // ConcurrentHashMap.computeIfAbsent guarantees ONE evaluation per key —
-  // TrieMap.getOrElseUpdate may run the builder twice under a race, which
-  // here means double repartition+persist+count jobs for the same table
-  private val cache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), GraphStore]
-  private val tableCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), DataFrame]
+  def build(spark: SparkSession, dir: String): GraphStore = graphs(spark, dir)
 
   /** Canonical event-time contract: a `ts` column is ALWAYS long
     * nanoseconds-since-epoch downstream of this boundary, regardless of how
@@ -74,49 +68,50 @@ object TpchGraph {
     * fewer splits than the session's parallelism, repartition once and keep
     * the parallel copy cached for the session's query stream. */
   def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    tableCache.computeIfAbsent((spark, dir, name), { _ =>
-      val raw = canonicalTs(spark.read.parquet(s"$dir/$name.parquet"))
-      val target = spark.sparkContext.defaultParallelism
-      val df =
-        if (raw.rdd.getNumPartitions < target) raw.repartition(target) else raw
-      df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      df.count()
-      df
-    })
+    tables(spark, dir, name)
+
+  private val tables = Memo.keyed[String, DataFrame]("base_table", Memo.Fixture) { (spark, dir, name) =>
+    val raw = canonicalTs(spark.read.parquet(s"$dir/$name.parquet"))
+    val target = spark.sparkContext.defaultParallelism
+    val df =
+      if (raw.rdd.getNumPartitions < target) raw.repartition(target) else raw
+    df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    df.count()
+    df
+  }
 
   /** The base tables the graph mapping reads. */
   val graphBaseTables: Seq[String] =
     Seq("region", "nation", "customer", "supplier", "part", "orders")
 
-  def build(spark: SparkSession, dir: String): GraphStore =
-    cache.computeIfAbsent((spark, dir), { _ =>
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.ExecutionContext.Implicits.global
-      import scala.concurrent.duration.Duration
-      // warm the base tables concurrently (table() is single-eval per key,
-      // so this also coalesces with any warms already in flight)
-      graphBaseTables.map(n => Future(table(spark, dir, n)))
-        .foreach(Await.result(_, Duration.Inf))
-      val raw = rawBuild(spark, dir)
-      // The union-built tables inherit the SUM of their branches' partitions
-      // (7 branches x 32 = 224 for vertices), and broadcast joins preserve
-      // the left side's partitioning — so traversal chains accumulate
-      // thousands of micro-tasks of pure scheduling overhead. Re-key each
-      // table to the session parallelism before caching (at cluster scale
-      // the same repartition doubles as the bucketing write, SCALE.md).
-      val n = spark.sparkContext.defaultParallelism
-      val g = GraphStore(
-        raw.vertices.repartition(n, col("id")),
-        raw.edges.repartition(n, col("src")),
-        raw.props.repartition(n, col("hash")),
-        raw.propRefs.repartition(n, col("parent_hash"))).persistAll()
-      // force materialization (concurrently) so every query reuses the
-      // cached tables
-      val mats = Seq(g.vertices, g.edges, g.props, g.propRefs)
-        .map(t => Future(t.count()))
-      mats.foreach(Await.result(_, Duration.Inf))
-      g
-    })
+  private val graphs = Memo("tpch_graph", Memo.Fixture) { (spark, dir) =>
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration.Duration
+    // warm the base tables concurrently (table() is single-eval per key,
+    // so this also coalesces with any warms already in flight)
+    graphBaseTables.map(n => Future(table(spark, dir, n)))
+      .foreach(Await.result(_, Duration.Inf))
+    val raw = rawBuild(spark, dir)
+    // The union-built tables inherit the SUM of their branches' partitions
+    // (7 branches x 32 = 224 for vertices), and broadcast joins preserve
+    // the left side's partitioning — so traversal chains accumulate
+    // thousands of micro-tasks of pure scheduling overhead. Re-key each
+    // table to the session parallelism before caching (at cluster scale
+    // the same repartition doubles as the bucketing write, SCALE.md).
+    val n = spark.sparkContext.defaultParallelism
+    val g = GraphStore(
+      raw.vertices.repartition(n, col("id")),
+      raw.edges.repartition(n, col("src")),
+      raw.props.repartition(n, col("hash")),
+      raw.propRefs.repartition(n, col("parent_hash"))).persistAll()
+    // force materialization (concurrently) so every query reuses the
+    // cached tables
+    val mats = Seq(g.vertices, g.edges, g.props, g.propRefs)
+      .map(t => Future(t.count()))
+    mats.foreach(Await.result(_, Duration.Inf))
+    g
+  }
 
   /** {"Variant":"<payload>"} built column-level; payloads here are TPC-H
     * identifiers/names which contain no JSON-special characters. */

@@ -26,15 +26,8 @@ import graft.ql.ZoeJson
 object ZoeCli {
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
-      .appName("graft-cli")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession(sys.env.getOrElse("SPARK_MASTER", "local[4]"),
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt, appName = "graft-cli")
     // graft_dot / graft_cosine available in the script/repl SQL verbs
     graft.functions.GraftExtensions.register(spark)
     try run(spark, args.toList)

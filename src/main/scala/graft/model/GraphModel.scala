@@ -159,6 +159,10 @@ final case class GraphStore(
       val dst = new org.apache.hadoop.fs.Path(s"$path/$name")
       if (fs.exists(dst)) fs.delete(dst, true)
       fs.rename(tmp, dst)
+      // the swap happens outside Spark: a cached relation over this path
+      // (an earlier load + persistAll) would otherwise keep serving the
+      // old files to every later load of the path
+      spark.catalog.refreshByPath(dst.toString)
     }
   }
 }

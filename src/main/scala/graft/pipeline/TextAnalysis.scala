@@ -357,21 +357,6 @@ object TextAnalysis {
       .select(col(idCol), concat_ws(" ", (0 until n).map(k => col(s"w$k")): _*).as("shingle"))
   }
 
-  /** [[shingleRowsFromTokens]] keeping each shingle's START position —
-    * (id, pos, shingle) — for span-level operators that must map grams
-    * back onto token offsets (e.g. [[Dedup.hotSpanCoverage]]). Same
-    * single lead() window by document id. */
-  def shingleRowsWithPos(toks: DataFrame, idCol: String, n: Int): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window.partitionBy(idCol).orderBy("pos")
-    val withLeads = toks
-      .select(col(idCol) +: col("pos") +: col("word").as("w0") +:
-        (1 until n).map(k => lead("word", k).over(w).as(s"w$k")): _*)
-    withLeads
-      .where(col(s"w${n - 1}").isNotNull)
-      .select(col(idCol), col("pos"),
-        concat_ws(" ", (0 until n).map(k => col(s"w$k")): _*).as("shingle"))
-  }
-
   /** Zipf-law fit over the top `topV` vocabulary terms — the corpus
     * naturalness screen: least-squares slope/intercept of ln(term_freq)
     * against ln(rank). Natural text reads slope ≈ −1; templated or

@@ -89,10 +89,8 @@ final class GraphBatch {
     }
   }
 
-  def nodeIds: Seq[String] = nodes.keys.toSeq
   def edgeIds: Seq[String] = edges.keys.toSeq
   def propKeys: Seq[String] = props.keys.toSeq
-  def nodeProp(id: String): Option[String] = nodes.get(id)
   def edge(id: String): Option[(String, String, String)] = edges.get(id)
 
   /** Storage-layout parity helper: the exact node record JSON the reference

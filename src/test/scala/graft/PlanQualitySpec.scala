@@ -870,26 +870,75 @@ class PlanQualitySpec extends SparkSuite {
     assert(exchanges <= 20, s"composed chain grew to $exchanges exchanges:\n$plan")
   }
 
-  test("shared-input memos (co-purchase pairs, clique pairs) are state-independent: cold rebuild equals warm read") {
-    // round 17: warm-family entries read the materialized pair-frame
-    // memos (coPairsCache / cliquePairsCache) instead of re-executing the
-    // build in-plan. The memo must be a pure materialization: busting it
-    // and recomputing must yield bit-identical query results (the
-    // walkCache/louvainCache determinism argument, pinned here so a
-    // future memo of a nondeterministic frame fails fast).
+  test("every memo is state-independent (cold build = warm read) and a bust releases what it built") {
+    // a memo must be a pure materialization: busting it and rebuilding
+    // must yield bit-identical query results (pinned for every memo, so a
+    // future memo of a nondeterministic frame fails fast), and a bust must
+    // unpersist the memo's frames and checkpoints and delete its temp dirs
+    // before the next build, not when the JVM exits. One consumer entry
+    // per memo; a memo that is a whole entry's result is its own consumer.
+    val consumer = Map(
+      "base_table" -> "agg_pricing_summary",
+      "tpch_graph" -> "zoe_v_all",
+      "sym_edges" -> "graph_lpa_df",
+      "co_purchase_probe" -> "graph_kcore_df",
+      "co_purchase_pairs" -> "graph_louvain_move",
+      "walk_corpus" -> "graph_random_walks",
+      "louvain_partition" -> "graph_louvain_refine",
+      "leiden_partition" -> "graph_leiden",
+      "stream_graph_ingest_fixture" -> "stream_graph_ingest",
+      "stream_fixture" -> "events_stream_dedup",
+      "nb_serve_model" -> "stream_nb_classify",
+      "clique_pairs" -> "graph_triangles_df",
+      "neardup_labels" -> "curate_dup_clusters_df",
+      "ivfpq_index" -> "ann_ivfpq_rerank",
+      "ivfpq_codes" -> "ann_ivfpq_topk",
+      "saved_ann_index" -> "ann_ivfpq_serve")
     def rows(name: String): Seq[String] =
       SparkEntry.queries(name)(spark, dir).collect().map(_.toString).sorted.toSeq
-    PipelineQueries.clearMemos(spark, dir)
-    val coldMove = rows("graph_louvain_move")
-    val coldTri = rows("graph_triangles_df")
-    // warm path: preStage fills the memos untimed, queries read them
-    PipelineQueries.preStage("graph_louvain_move", spark, dir)
-    PipelineQueries.preStage("graph_triangles_df", spark, dir)
-    assert(rows("graph_louvain_move") == coldMove)
-    assert(rows("graph_triangles_df") == coldTri)
-    // and a second bust-and-rebuild still agrees
-    PipelineQueries.clearMemos(spark, dir)
-    assert(rows("graph_louvain_move") == coldMove)
-    assert(rows("graph_triangles_df") == coldTri)
+    // a Fixture feeds memos of every kind, so its bust takes them all
+    def bustKinds(kind: Memo.Kind): Seq[Memo.Kind] =
+      if (kind == Memo.Fixture) Memo.kinds else Seq(kind)
+    def frames(v: Any): Seq[org.apache.spark.sql.DataFrame] = v match {
+      case ds: org.apache.spark.sql.Dataset[_] => Seq(ds.toDF())
+      case p: Product => p.productIterator.flatMap(frames).toSeq
+      case _ => Nil
+    }
+    def isCached(df: org.apache.spark.sql.DataFrame): Boolean =
+      df.storageLevel != org.apache.spark.storage.StorageLevel.NONE
+    def cachedEntries: Int = org.apache.spark.sql.GraftCacheProbe.cachedEntryCount(spark)
+    for (m <- Memo.all) {
+      val entry = consumer.getOrElse(m.name, m.name)
+      assert(SparkEntry.queries.contains(entry), s"${m.name}: no consumer entry")
+      val kinds = bustKinds(m.kind)
+      kinds.foreach(Memo.bust(_, spark, dir))
+      val cold = rows(entry)
+      assert(rows(entry) == cold, s"${m.name}: warm read differs from the cold build")
+      val held = m.held(spark, dir)
+      assert(held.nonEmpty, s"${m.name}: $entry did not build it")
+      val fs = held.flatMap(b => frames(b.value))
+      val rdds = fs.flatMap(_.queryExecution.analyzed.collect {
+        case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.id
+      }).toSet
+      // the cache entries every memo the bust drops holds right now
+      val dropped = Memo.all.filter(o => kinds.contains(o.kind))
+        .flatMap(_.held(spark, dir)).flatMap(b => frames(b.value)).count(isCached)
+      val before = cachedEntries
+      kinds.foreach(Memo.bust(_, spark, dir))
+      assert(m.held(spark, dir).isEmpty, s"${m.name}: bust left values")
+      assert(cachedEntries == before - dropped, s"${m.name}: bust left cached relations")
+      assert(!fs.exists(isCached), s"${m.name}: bust left a persisted frame")
+      val left = rdds & spark.sparkContext.getPersistentRDDs.keySet.toSet
+      assert(left.isEmpty, s"${m.name}: bust left checkpoints $left")
+      held.flatMap(_.tempDirs).foreach(d =>
+        assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(d)), s"${m.name}: bust left $d"))
+      assert(rows(entry) == cold, s"${m.name}: rebuild after a second bust differs")
+    }
+  }
+
+  test("every entry a memo is staged or timed cold for is a query entry") {
+    val names = Memo.all.flatMap(m => m.stagedFor.keys ++ m.coldFor)
+    assert(names.nonEmpty)
+    names.foreach(n => assert(SparkEntry.queries.contains(n), s"$n is not in SparkEntry.queries"))
   }
 }

@@ -5,21 +5,9 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** One shared local session for the whole test JVM. */
 object TestSpark {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.adaptive.enabled", "true")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .getOrCreate()
+  lazy val spark: SparkSession = GraftSession("local[4]", 4, appName = "graft-test")
 }
 
 trait SparkSuite extends AnyFunSuite {
-  lazy val spark: SparkSession = {
-    val s = TestSpark.spark
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = TestSpark.spark
 }

@@ -82,6 +82,23 @@ class StoreAndIoSpec extends SparkSuite {
     assert(loaded.propRefs.count() == 2)
   }
 
+  test("GraphStore save over a path whose loaded tables are cached: the next load reads the new rows") {
+    def store(names: String*): GraphStore = {
+      val b = new GraphBatch
+      names.foreach(n => b.createNode(s"v:$n", PropValue.typed("Thing", Some(n))))
+      b.toStore(spark)
+    }
+    def ids(g: GraphStore): Set[String] =
+      g.vertices.select("id").as[String].collect().toSet
+    val dir = java.nio.file.Files.createTempDirectory("graft-resave").toString
+    store("a", "b").save(dir)
+    val cached = GraphStore.load(spark, dir).persistAll()
+    assert(ids(cached) == Set("v:a", "v:b"))
+    store("c").save(dir)
+    assert(ids(GraphStore.load(spark, dir)) == Set("v:c"))
+    Seq(cached.vertices, cached.edges, cached.props, cached.propRefs).foreach(_.unpersist())
+  }
+
   test("CLI renderResult emits the reference QueryResult JSON shape") {
     val b = new GraphBatch
     val n1 = b.createNode("n1", PropValue.typed("Thing", Some("x")))

@@ -1,22 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Round-16 temporary probe: decompose graph_build's one-shot cost into
   * (a) base-table load+persist, (b) graph construction, and (c) JVM/codegen
   * warmup — by re-running the identical build against an aliased dir path
   * (fresh memo key, same files) inside the warmed session. */
 object BuildProbe {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession("local[32]", 32)
     def time(name: String)(f: => Unit): Unit = {
       val t0 = System.nanoTime(); f
       println(f"MARKER $name ${(System.nanoTime() - t0) / 1e9}%.2f s")

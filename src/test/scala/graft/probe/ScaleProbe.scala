@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Round-10 empirical scale-up probe (VERDICT r9 next-round item 3):
@@ -12,16 +12,7 @@ import org.apache.spark.sql.functions._
   * of artificial cross-copy duplicates. */
 object ScaleProbe {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[32]").appName("graft-scale-probe")
-      .config("spark.sql.shuffle.partitions", "64")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.driver.memory", "48g")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession("local[32]", 64, appName = "graft-scale-probe")
     val base = "/root/testdata/sf0.1"
     val big = "target/scaleprobe/sf10x"
 
@@ -82,10 +73,10 @@ object ScaleProbe {
       // factor is measured in the same JVM as the 1->10 one.
       val qs = graft.PipelineQueries.queries
       for (name <- Seq("curate_neardup_corpus", "curate_funnel_rare")) {
-        graft.PipelineQueries.clearMemos(spark, base)
+        graft.Memo.bust(graft.Memo.Shared, spark, base)
         qs(name)(spark, base).count() // warm
         for ((dir, tag) <- Seq((base, "1x"), (big, "10x"), (big100, "100x"))) {
-          graft.PipelineQueries.clearMemos(spark, dir)
+          graft.Memo.bust(graft.Memo.Shared, spark, dir)
           time(s"${name}_$tag") { qs(name)(spark, dir).count() }
         }
       }
@@ -886,12 +877,12 @@ object ScaleProbe {
       // warm codegen/JIT on the 1x plans once so the 1x numbers measure
       // the operator, not first-query compilation
       for (name <- wave2Docs) {
-        graft.PipelineQueries.clearMemos(spark, base)
+        graft.Memo.bust(graft.Memo.Shared, spark, base)
         qs2(name)(spark, base).count()
       }
       for ((dir, tag) <- Seq((base, "1x"), (big, "10x"))) {
         for (name <- wave2Docs) {
-          graft.PipelineQueries.clearMemos(spark, dir)
+          graft.Memo.bust(graft.Memo.Shared, spark, dir)
           time(s"${name}_$tag") { qs2(name)(spark, dir).count() }
         }
       }
@@ -952,7 +943,7 @@ object ScaleProbe {
           // in the prefixed replica) and IVF hard negatives (fixed anchor
           // set over 10x inverted lists)
           "text_nb_classify", "ann_hard_negatives")) {
-        graft.PipelineQueries.clearMemos(spark, dir)
+        graft.Memo.bust(graft.Memo.Shared, spark, dir)
         time(s"${name}_$tag") { qs(name)(spark, dir).count() }
       }
     }
