@@ -177,38 +177,37 @@ object BulkMutations {
     g.copy(edges = g.edges.join(edgeIds.select("edge_id"), Seq("edge_id"), "left_anti"))
 
   /** The reference's reference-counting GC (backlink delete cascade,
-    * kv_graph_store.rs:736-752) as an iterated anti-join sweep: drop props
-    * referenced by no vertex, edge, or surviving parent property. The prop
-    * DAG is shallow (schema-type lattice), so this converges in a few
-    * rounds; maxRounds bounds the worst case.
+    * kv_graph_store.rs:736-752) as a delta sweep to the fixpoint: a prop
+    * survives iff a vertex, an edge, or a ref whose parent survives
+    * references it; a ref survives iff its parent survives.
+    *
+    * The backlinks (hash, parent) are materialized once: the props vertices
+    * and edges hold, and the refs whose parent is a prop. Each round is one
+    * action that materializes its orphans: round 1 the props without a
+    * backlink, round r+1 the children of round r's orphans left without one.
+    * Orphan sets scale with the deletions and never repeat a hash; rounds =
+    * cascade depth + 1. All are local checkpoints the returned store reads
+    * and releases with it; nothing enters the session's cache.
     */
-  def gcOrphanProps(g: GraphStore, maxRounds: Int = 10): GraphStore = {
+  def gcOrphanProps(g: GraphStore): GraphStore = {
+    var links = g.vertices.select("prop_hash").unionByName(g.edges.select("prop_hash"))
+      .select(col("prop_hash").as("hash"), lit(null).cast("string").as("parent"))
+      .unionByName(g.propRefs
+        .join(g.props.select(col("hash").as("parent_hash")), Seq("parent_hash"), "left_semi")
+        .select(col("child_hash").as("hash"), col("parent_hash").as("parent")))
+      .localCheckpoint(eager = true)
     var props = g.props
-    var refs = g.propRefs
-    var cached: DataFrame = null
-    var changed = true
-    var round = 0
-    while (changed && round < maxRounds) {
-      val live = props
-        .join(g.vertices.select(col("prop_hash").as("hash")), Seq("hash"), "left_semi")
-        .select("hash")
-        .unionByName(props.join(g.edges.select(col("prop_hash").as("hash")), Seq("hash"), "left_semi").select("hash"))
-        .unionByName(props.join(refs.select(col("child_hash").as("hash")), Seq("hash"), "left_semi").select("hash"))
-        .distinct()
-      val nextProps = props.join(live, Seq("hash"), "left_semi").cache()
-      val removedCount = props.count() - nextProps.count()
-      // refs whose parent died die too (cascades to children next round)
-      refs = refs.join(nextProps.select(col("hash").as("parent_hash")), Seq("parent_hash"), "left_semi")
-      // the superseded generation's cache is dead weight once nextProps is
-      // materialized (the count above) — release it instead of leaking one
-      // cached DataFrame per sweep round into the session
-      if (cached != null) cached.unpersist()
-      cached = nextProps
-      props = nextProps
-      changed = removedCount > 0
-      round += 1
+    var dead = props.select("hash").join(links, Seq("hash"), "left_anti")
+      .localCheckpoint(false) // lazy: the round's count materializes it
+    while (dead.count() > 0) {
+      val parents = dead.select(col("hash").as("parent"))
+      val children = links.join(parents, Seq("parent"), "left_semi").select("hash")
+      props = props.join(dead, Seq("hash"), "left_anti")
+      links = links.join(parents, Seq("parent"), "left_anti")
+      dead = children.join(links, Seq("hash"), "left_anti").localCheckpoint(false)
     }
-    g.copy(props = props, propRefs = refs)
+    g.copy(props = props, propRefs = links.where(col("parent").isNotNull)
+      .select(col("parent").as("parent_hash"), col("hash").as("child_hash")))
   }
 
   /** CLI get_or_create semantics (cli_helpers.rs:118-174): if the property is

@@ -39,6 +39,142 @@ class StoreAndIoSpec extends SparkSuite {
     assert(left.contains(PropValue.schemaType("Thing").hash))
   }
 
+  private def propRows(ps: Seq[PropValue]) =
+    ps.flatMap(_.withNested).map(p => (p.hash, p.json, p.variant)).distinct
+      .toDF("hash", "value", "schema_type")
+  private def refRows(ps: Seq[PropValue]) =
+    ps.flatMap(_.withNested).flatMap(p => p.nested.map(c => (p.hash, c.hash))).distinct
+      .toDF("parent_hash", "child_hash")
+  private def hashes(g: GraphStore): Set[String] = g.props.select("hash").as[String].collect().toSet
+  private def refPairs(g: GraphStore): Set[(String, String)] =
+    g.propRefs.select("parent_hash", "child_hash").as[(String, String)].collect().toSet
+
+  test("gcOrphanProps: a ref whose parent is not a prop keeps nothing alive") {
+    val kept = PropValue.typed("Thing", Some("kept"))
+    val orphan = PropValue("Loose", Some("x"))
+    val ghost = PropValue("Ghost", Some("never stored"))
+    var g = BulkMutations.createProperties(GraphStore.empty(spark), propRows(Seq(kept, orphan)),
+      Some(refRows(Seq(kept)).unionByName(Seq((ghost.hash, orphan.hash)).toDF("parent_hash", "child_hash"))))
+    g = BulkMutations.createNodes(g, Seq(("a", kept.hash)).toDF("id", "prop_hash"))
+    val swept = BulkMutations.gcOrphanProps(g)
+    assert(hashes(swept) == kept.withNested.map(_.hash).toSet)
+    assert(refPairs(swept) == Set((kept.hash, PropValue.schemaType("Thing").hash)))
+  }
+
+  test("gcOrphanProps: a 12-level nested chain is swept to the leaf") {
+    val root = (1 to 11).foldLeft(PropValue("Level", Some("0"))) { (child, i) =>
+      PropValue("Level", Some(i.toString), Seq(child))
+    }
+    assert(root.withNested.size == 12)
+    var g = BulkMutations.createProperties(GraphStore.empty(spark), propRows(Seq(root)), Some(refRows(Seq(root))))
+    g = BulkMutations.createNodes(g, Seq(("a", root.hash)).toDF("id", "prop_hash"))
+    val swept = BulkMutations.gcOrphanProps(BulkMutations.deleteNodes(g, Seq("a").toDF("id")))
+    assert(hashes(swept).isEmpty)
+    assert(refPairs(swept).isEmpty)
+  }
+
+  test("gcOrphanProps matches GraphBatch's reference counting on random stores") {
+    // element props nest a three-level DAG (Elem -> Group -> Kind -> Leaf)
+    // whose inner levels are shared; the GraphBatch replay frees props one
+    // backlink at a time, the sweep once over the whole mutated store
+    var deepest = 0
+    (1 to 4).foreach { seed =>
+      val rnd = new scala.util.Random(seed)
+      def pick[T](xs: Seq[T]): T = xs(rnd.nextInt(xs.size))
+      def level(variant: String, n: Int, below: Seq[PropValue]) = (0 until n).map { i =>
+        val shared = if (rnd.nextInt(4) == 0) Seq(pick(below)) else Nil
+        PropValue(variant, Some(s"$i"), (below(i % below.size) +: shared).distinct)
+      }
+      val groups = level("Group", 14, level("Kind", 10, (0 until 10).map(i => PropValue("Leaf", Some(s"$i")))))
+      def elem(n: Int) = {
+        val grp = pick(groups)
+        PropValue("Elem", Some(s"${rnd.nextInt(n)}/${grp.payload.get}"), Seq(grp))
+      }
+      val b = new GraphBatch
+      val ids = (0 until 16).map(i => b.createNode(s"n$i", elem(10)))
+      (0 until 12).foreach(_ => b.createEdge(pick(ids), pick(ids), elem(10)))
+      val before = b.toStore(spark)
+      val variantOf = before.props.select("hash", "schema_type").as[(String, String)].collect().toMap
+
+      var live = ids
+      var edgeIds = b.edgeIds
+      val deletedNodes, deletedEdges = Seq.newBuilder[String]
+      val updates = scala.collection.mutable.LinkedHashMap[String, PropValue]()
+      (0 until 20).foreach { _ =>
+        rnd.nextInt(3) match {
+          case 0 if live.size > 1 =>
+            val id = pick(live)
+            b.deleteNode(id); live = live.filterNot(_ == id); updates.remove(id); deletedNodes += id
+          case 1 if edgeIds.nonEmpty =>
+            val id = pick(edgeIds)
+            b.deleteEdge(id); edgeIds = edgeIds.filterNot(_ == id); deletedEdges += id
+          case _ =>
+            val (id, p) = (pick(live), elem(20))
+            b.updateNode(id, p); updates(id) = p
+        }
+      }
+      val dead = (variantOf.keySet -- b.propKeys).map(variantOf)
+      deepest = deepest max Seq("Elem", "Group", "Kind", "Leaf").lastIndexWhere(dead.contains)
+
+      var g = BulkMutations.createProperties(before, propRows(updates.values.toSeq),
+        Some(refRows(updates.values.toSeq)))
+      g = BulkMutations.deleteNodes(g, (deletedNodes.result() ++ updates.keys).toDF("id"))
+      g = BulkMutations.createNodes(g, updates.toSeq.map { case (id, p) => (id, p.hash) }.toDF("id", "prop_hash"))
+      g = BulkMutations.deleteEdges(g, deletedEdges.result().toDF("edge_id"))
+      val swept = BulkMutations.gcOrphanProps(g)
+      val want = b.toStore(spark)
+      assert(hashes(swept) == hashes(want), s"seed $seed props")
+      assert(refPairs(swept) == refPairs(want), s"seed $seed prop_refs")
+    }
+    assert(deepest == 3, "no seed cascaded from an element prop down to a leaf")
+  }
+
+  test("gcOrphanProps: one job per round plus one, nothing left in the session cache") {
+    val counter = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          jobStart: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        counter.incrementAndGet(); ()
+      }
+    }
+    val kept = PropValue.typed("Thing", Some("kept"))
+    val doc = PropValue("Doc", Some("x"), Seq(PropValue("Part", Some("y"))))
+    val link = PropValue("Link")
+    // the protocol of AnalyticsSpec's one-job-per-round pins: no AQE, no
+    // broadcast, so one action is one job
+    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
+    val prevBc = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try {
+      var g = BulkMutations.createProperties(GraphStore.empty(spark),
+        propRows(Seq(kept, doc, link)), Some(refRows(Seq(kept, doc))))
+      g = BulkMutations.createNodes(g, Seq(("a", kept.hash), ("d", doc.hash)).toDF("id", "prop_hash"))
+      g = BulkMutations.createEdges(g, Seq(("a", "d", link.hash)).toDF("src", "dst", "prop_hash"))
+      g = BulkMutations.deleteNodes(g, Seq("d").toDF("id"))
+      val cachedBefore = org.apache.spark.sql.GraftCacheProbe.cachedEntryCount(spark)
+      org.apache.spark.GraftSchedulerProbe.drainListenerBus(spark.sparkContext)
+      spark.sparkContext.addSparkListener(listener)
+      val swept =
+        try BulkMutations.gcOrphanProps(g)
+        finally {
+          org.apache.spark.GraftSchedulerProbe.drainListenerBus(spark.sparkContext)
+          spark.sparkContext.removeSparkListener(listener)
+        }
+      assert(org.apache.spark.sql.GraftCacheProbe.cachedEntryCount(spark) == cachedBefore,
+        "sweep left entries in the session cache")
+      // Doc orphaned in round 1, Part in round 2, round 3 empty: budget =
+      // 1 held-set job + 3 round jobs, +1 slack
+      val jobs = counter.get()
+      assert(jobs <= 5, s"sweep spent $jobs jobs for 3 rounds + the held set")
+      assert(hashes(swept) == (kept.withNested :+ link).map(_.hash).toSet)
+      assert(refPairs(swept) == Set((kept.hash, PropValue.schemaType("Thing").hash)))
+    } finally {
+      spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevBc)
+    }
+  }
+
   test("get_or_create: 0 -> create, 1 -> reuse, >1 -> error (CLI parity)") {
     val p = PropValue.typed("Thing", Some("shared"))
     var g = GraphStore.empty(spark)
