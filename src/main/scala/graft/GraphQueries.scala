@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.analytics.GraphAnalytics
+import graft.analytics.{GraphAnalytics, Superstep}
 import graft.exec.ZoeCompiler
 import graft.model.{GraphStore, Hashing, PropValue}
 import graft.ql._
@@ -202,28 +202,12 @@ object GraphQueries {
     * winner per round) without the GraphStore vertex frame, for graphs
     * that exist only as edges (the co-purchase graph). Used by the
     * quality row as the cheap-baseline partition. */
-  private def lpaOverSym(sym: DataFrame, rounds: Int): DataFrame = {
-    // per-round checkpoints go through the scrubbed helper (ADVICE r15):
-    // raw localCheckpoint keeps the origin's exact BigInt size stats, and
-    // a J-join plan checkpointed every round compounds a J-fold stats
-    // product — harmless at 3 rounds, a driver-wedge trap beyond ~10
-    var labels = GraphAnalytics.checkpointScrubbed(
-      sym.select(col("a").as("vid")).distinct()
-        .select(col("vid"), col("vid").as("lbl")))
-    for (_ <- 1 to rounds) {
-      val counts = sym.join(labels.select(col("vid").as("a"), col("lbl")), Seq("a"))
-        .groupBy(col("b").as("vid"), col("lbl"))
-        .agg(count(lit(1)).as("__c"))
-      val winner = counts
-        .select(col("vid"), struct((-col("__c")).as("nc"), col("lbl").as("l")).as("__s"))
-        .groupBy("vid").agg(min("__s").as("__s"))
-        .select(col("vid"), col("__s.l").as("__w"))
-      labels = GraphAnalytics.checkpointScrubbed(labels
-        .join(winner, Seq("vid"), "left")
-        .select(col("vid"), coalesce(col("__w"), col("lbl")).as("lbl")))
-    }
-    labels.select(col("vid"), col("lbl").as("label"))
-  }
+  private def lpaOverSym(sym: DataFrame, rounds: Int): DataFrame =
+    GraphAnalytics.labelPropagation(sym,
+        Superstep.checkpointScrubbed(
+          sym.select(col("a").as("vid")).distinct().select(col("vid"), col("vid").as("lbl"))),
+        rounds)
+      .select(col("vid"), col("lbl").as("label"))
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // stream→graph ingestion through the REAL streaming engine: events are

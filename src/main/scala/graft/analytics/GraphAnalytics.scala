@@ -6,6 +6,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 import graft.model.GraphStore
+import Superstep.checkpointScrubbed
 
 /** The reference's declared-but-unimplemented analytics surface
   * (`Graph`/`DirectedGraph` traits, lib.rs:16-65; design target
@@ -128,9 +129,9 @@ object GraphAnalytics {
     * edge direction, dangling mass not redistributed, final ranks
     * normalized to sum |V|) without the RDD round-trip: per-source shares
     * and per-destination sums are codegen'd hash aggregations, AQE sizes
-    * every shuffle, and an eager localCheckpoint per iteration keeps plan
-    * depth constant. On a real cluster the rank table and edge list
-    * co-partition on the vertex key across iterations, so the join
+    * every shuffle, and a checkpoint every 5 rounds ([[Superstep.rounds]])
+    * keeps plan depth bounded. On a real cluster the rank table and edge
+    * list co-partition on the vertex key across iterations, so the join
     * reuses one exchange per side per round. */
   def pageRankDF(g: GraphStore, toLong: Column => Column, numIter: Int = 10,
                  resetProb: Double = 0.15): DataFrame = {
@@ -158,19 +159,17 @@ object GraphAnalytics {
       // bounded; one materialization per 5 rounds, not per 3).
       val outDegT = edges.groupBy(col("src").as("vid"))
         .agg(count(lit(1)).as("__outdeg")).localCheckpoint(true)
-      // GraphX initializes every rank to 1.0 — on cyclic graphs the init
-      // still influences the 10th iterate (decays as ~0.85^t), so parity
-      // requires matching it, not starting at resetProb
-      var rr = outDegT.withColumn("r", lit(1.0)).localCheckpoint(true)
       def inbound(cur: DataFrame): DataFrame =
         edges.join(cur.select(col("vid").as("src"),
             (col("r") / col("__outdeg")).as("__share")), Seq("src"))
           .groupBy(col("dst").as("vid")).agg(sum("__share").as("__in"))
-      for (i <- 1 until numIter) {
-        rr = outDegT.join(inbound(rr), Seq("vid"), "left")
+      // GraphX initializes every rank to 1.0 — on cyclic graphs the init
+      // still influences the 10th iterate (decays as ~0.85^t), so parity
+      // requires matching it, not starting at resetProb
+      val rr = Superstep.rounds(outDegT.withColumn("r", lit(1.0)), numIter - 1, every = 5) {
+        (cur, _) => outDegT.join(inbound(cur), Seq("vid"), "left")
           .select(col("vid"), col("__outdeg"),
             (lit(resetProb) + lit(1.0 - resetProb) * coalesce(col("__in"), lit(0.0))).as("r"))
-        if (i % 5 == 0 || i == numIter - 1) rr = rr.localCheckpoint(true)
       }
       // final round assembles ranks for EVERY vertex (sinks included) from
       // the last message pass, then GraphX-style normalizes the sum to |V|
@@ -238,19 +237,17 @@ object GraphAnalytics {
         .select(col("vid"), col("__outdeg"),
           coalesce(col("__sd"), zero).as("__sd"))
         .localCheckpoint(true)
-      var rr = outDegT.withColumn("r", (reset * col("__sd")).cast(mass))
-        .localCheckpoint(true)
       def inbound(cur: DataFrame): DataFrame =
         edges.join(cur.select(col("vid").as("src"),
             (col("r") / col("__outdeg")).cast(mass).as("__share")), Seq("src"))
           .groupBy(col("dst").as("vid"))
           .agg(sum("__share").cast(mass).as("__in"))
-      for (i <- 1 until numIter) {
-        rr = outDegT.join(inbound(rr), Seq("vid"), "left")
+      val rr = Superstep.rounds(outDegT.withColumn("r", (reset * col("__sd")).cast(mass)),
+          numIter - 1, every = 5) {
+        (cur, _) => outDegT.join(inbound(cur), Seq("vid"), "left")
           .select(col("vid"), col("__outdeg"), col("__sd"),
             (reset * col("__sd") +
               damp * coalesce(col("__in"), zero)).cast(mass).as("r"))
-        if (i % 5 == 0 || i == numIter - 1) rr = rr.localCheckpoint(true)
       }
       verts
         .join(inbound(rr), Seq("vid"), "left")
@@ -259,6 +256,15 @@ object GraphAnalytics {
           (reset * coalesce(col("__sd"), zero) +
             damp * coalesce(col("__in"), zero)).cast(mass).as("rank"))
     } finally { verts.unpersist(); edges.unpersist() }
+  }
+
+  /** Build the symmetrized, deduplicated (a, b) long edge table
+    * [[labelPropagationDF]] iterates over. Exposed so a session can
+    * persist it ONCE next to its graph tables and share it across calls
+    * (the build is a union + distinct shuffle that is loop-invariant). */
+  def symmetrizedEdges(g: GraphStore, toLong: Column => Column): DataFrame = {
+    val dir = g.edges.select(toLong(col("src")).as("a"), toLong(col("dst")).as("b"))
+    dir.unionByName(dir.select(col("b").as("a"), col("a").as("b"))).distinct()
   }
 
   /** Synchronous label propagation (community detection) without the RDD
@@ -271,22 +277,12 @@ object GraphAnalytics {
     * Scale: per round, one equi-join (symmetrized edges × labels on the
     * source key) and one map-side-combinable min(struct(-count, label))
     * argmax per destination — the IVF-assignment shape, no window over
-    * the message stream — with an eager localCheckpoint keeping plan
+    * the message stream — with an eager checkpoint per round keeping plan
     * depth constant. Labels and edges co-partition on the vertex key
     * across rounds on a real cluster. */
-  /** Build the symmetrized, deduplicated (a, b) long edge table
-    * [[labelPropagationDF]] iterates over. Exposed so a session can
-    * persist it ONCE next to its graph tables and share it across calls
-    * (the build is a union + distinct shuffle that is loop-invariant). */
-  def symmetrizedEdges(g: GraphStore, toLong: Column => Column): DataFrame = {
-    val dir = g.edges.select(toLong(col("src")).as("a"), toLong(col("dst")).as("b"))
-    dir.unionByName(dir.select(col("b").as("a"), col("a").as("b"))).distinct()
-  }
-
   def labelPropagationDF(g: GraphStore, toLong: Column => Column,
                          rounds: Int = 3,
                          symEdges: Option[DataFrame] = None): DataFrame = {
-    require(rounds >= 1, s"need rounds >= 1; got $rounds")
     val verts = g.vertices.select(toLong(col("id")).as("vid"), col("id"))
       .persist(StorageLevel.MEMORY_AND_DISK)
     // caller-provided symmetrized edges are caller-owned (persisted next
@@ -295,24 +291,29 @@ object GraphAnalytics {
     val edges = symEdges.getOrElse(
       symmetrizedEdges(g, toLong).persist(StorageLevel.MEMORY_AND_DISK))
     try {
-      var labels = verts.select(col("vid"), col("vid").as("lbl")).localCheckpoint(true)
-      for (_ <- 1 to rounds) {
-        val counts = edges.join(labels.select(col("vid").as("a"), col("lbl")), Seq("a"))
-          .groupBy(col("b").as("vid"), col("lbl"))
-          .agg(count(lit(1)).as("__c"))
-        val winner = counts
-          .select(col("vid"), struct((-col("__c")).as("nc"), col("lbl").as("l")).as("__s"))
-          .groupBy("vid").agg(min("__s").as("__s"))
-          .select(col("vid"), col("__s.l").as("__w"))
-        labels = labels
-          .join(winner, Seq("vid"), "left")
-          .select(col("vid"), coalesce(col("__w"), col("lbl")).as("lbl"))
-          .localCheckpoint(true)
-      }
-      labels.join(verts, Seq("vid")).select(col("id"), col("lbl").as("label"))
+      labelPropagation(edges, verts.select(col("vid"), col("vid").as("lbl")), rounds)
+        .join(verts, Seq("vid")).select(col("id"), col("lbl").as("label"))
     } finally {
       verts.unpersist()
       if (symEdges.isEmpty) edges.unpersist()
+    }
+  }
+
+  /** The [[labelPropagationDF]] rounds over a symmetrized (a, b) edge
+    * table from initial (vid, lbl) labels; returns the (vid, lbl) labels
+    * after `rounds` rounds. */
+  private[graft] def labelPropagation(sym: DataFrame, init: DataFrame, rounds: Int): DataFrame = {
+    require(rounds >= 1, s"need rounds >= 1; got $rounds")
+    Superstep.rounds(init, rounds, every = 1) { (labels, _) =>
+      val winner = sym.join(labels.select(col("vid").as("a"), col("lbl")), Seq("a"))
+        .groupBy(col("b").as("vid"), col("lbl"))
+        .agg(count(lit(1)).as("__c"))
+        .select(col("vid"), struct((-col("__c")).as("nc"), col("lbl").as("l")).as("__s"))
+        .groupBy("vid").agg(min("__s").as("__s"))
+        .select(col("vid"), col("__s.l").as("__w"))
+      labels
+        .join(winner, Seq("vid"), "left")
+        .select(col("vid"), coalesce(col("__w"), col("lbl")).as("lbl"))
     }
   }
 
@@ -345,31 +346,18 @@ object GraphAnalytics {
     try {
       // landmark ids that are not graph vertices seed nothing (GraphX
       // parity: only vertices can carry the initial 0)
-      var dist = verts
+      val seed = verts
         .where(col("vid").isin(landmarks: _*))
         .select(col("vid"), col("vid").as("landmark"), lit(0L).as("dist"))
-        .localCheckpoint(true)
-      var prevCount = -1L
-      var prevSum = -1L
-      var converged = false
-      var iter = 0
-      while (!converged && iter < maxIters) {
-        iter += 1
+      Superstep.fixpoint(seed, maxIters, "shortest paths") { (dist, _) =>
         val msgs = edges
           .join(dist.select(col("vid").as("dst"), col("landmark"), col("dist")), Seq("dst"))
           .select(col("src").as("vid"), col("landmark"), (col("dist") + 1L).as("dist"))
-        val next = dist.unionByName(msgs)
-          .groupBy("vid", "landmark").agg(min("dist").as("dist"))
-          .localCheckpoint(false) // lazy: the probe agg materializes it
-        val probe = next
-          .agg(count(lit(1)).as("c"), coalesce(sum("dist"), lit(0L)).as("s")).first()
-        val (c, s) = (probe.getLong(0), probe.getLong(1))
-        converged = c == prevCount && s == prevSum
-        prevCount = c; prevSum = s
-        dist = next
-      }
-      require(converged, s"shortest paths did not converge in $maxIters rounds")
-      dist.join(verts, Seq("vid")).select(col("id"), col("landmark"), col("dist"))
+        dist.unionByName(msgs).groupBy("vid", "landmark").agg(min("dist").as("dist"))
+      }(Superstep.unchanged { next =>
+        val p = next.agg(count(lit(1)), coalesce(sum("dist"), lit(0L))).first()
+        (p.getLong(0), p.getLong(1))
+      }).join(verts, Seq("vid")).select(col("id"), col("landmark"), col("dist"))
     } finally { verts.unpersist(); edges.unpersist() }
   }
 
@@ -393,63 +381,6 @@ object GraphAnalytics {
       .select(col("id"), col("landmark"), col("dist"))
   }
 
-  /** Vertices of the k-core: the maximal induced subgraph in which every
-    * vertex has UNDIRECTED degree ≥ k, computed by iterative peeling —
-    * each round drops vertices whose degree in the surviving subgraph is
-    * below k, until a fixpoint. Takes an (a, b) pair table (any numeric
-    * ids — the [[graft.pipeline.ConnectedComponents.labels]] input
-    * contract); returns (vid, degree) for surviving vertices, degree
-    * being the within-core degree. A standard corpus/graph-quality
-    * primitive (the dense backbone that survives after stripping
-    * tendrils).
-    *
-    * Scale: per round, one map-side-combinable degree aggregation over
-    * the surviving symmetrized edge list + two semi-joins to restrict
-    * edges to survivors; the survivor count IS the convergence probe
-    * (peeling is monotone — an unchanged count is the fixpoint), fused
-    * with the round's materialization. Rounds are bounded by the peeling
-    * depth (the graph's degeneracy ordering length), small for the
-    * heavy-tailed graphs where k-core matters; each round's state is one
-    * (vid) column. */
-  /** Deterministic random-walk corpus generation — the DeepWalk/node2vec
-    * sequence-sampling step that turns a graph into training sequences for
-    * embedding models: one fixed-length walk per distinct source node over
-    * a directed edge list. The step choice is the engine-portable md5
-    * uniform the sampling operators use (md5(seed|walk|step) mod degree
-    * picks a rank in the node's dst-ordered adjacency), so walks are
-    * bit-reproducible across engines and runs — no RNG state, no
-    * Math.random. Walks that reach a node with no out-edges truncate
-    * (inner-join semantics), so symmetrize the edge list for walks that
-    * must survive.
-    *
-    * Scale: the dst-sorted adjacency is grouped ONCE into one array row
-    * per node (persisted, node-partitioned — round 16; the former
-    * (node, row_number) rank table needed a degree-lookup join AND a
-    * rank-fetch join per hop, both of which re-sorted the edge set per
-    * hop once it outgrew the broadcast threshold); each of the `walkLen`
-    * hops is ONE equi-join on exactly one row per walk — never a
-    * degree-expanded candidate set — and the step is an O(1) array
-    * index. The walk STATE carries its own path (an array column
-    * appended per hop, ≤ walkLen+1 longs), so the corpus is ONE
-    * posexplode of the final frame — no per-step union, no per-step
-    * replay — and the blocking localCheckpoint is a pure lineage/plan-
-    * size knob paid every `WalkCheckpointEvery` hops instead of every
-    * hop (walkLen 40 = 5 scheduling barriers, not 40; measured 23 → ~8 s
-    * on the len-40 bench arm). Dead ends park: the left joins pass a
-    * stuck walk through with its path unchanged, and posexplode emits
-    * only the steps it actually took (same truncation semantics as the
-    * former inner-join form) — and at every checkpoint barrier the
-    * finished walks are SPLIT OUT of the hop frame (a parked walk's path
-    * never changes again, so it only needs to rejoin at the final
-    * posexplode): on a sink-heavy graph the live frame shrinks
-    * geometrically instead of dragging every finished row through dozens
-    * of joins (round 13; 81.9 → 76.2 s at len 40 on a 40%-sink 1M-node
-    * graph at sf0.1-scale — modest there because per-hop cost is
-    * plan/scheduling-bound at 600k walks, but the row-volume term this
-    * removes is the one that grows 100× with the graph). The split costs
-    * nothing extra — it filters the barrier's already-materialized
-    * checkpoint. Returns (walk_id, step, node): the long-form sequence
-    * corpus, step 0 = the start node. */
   /** Co-occurrence pair graph from a (key, item) long table — the
     * market-basket / co-purchase / co-citation edge builder: undirected
     * pairs (a, b), a < b, weighted by the number of DISTINCT keys the two
@@ -527,61 +458,47 @@ object GraphAnalytics {
     !r.isNullAt(0) && r.getLong(0) > maxPerKey
   }
 
-  def randomWalks(edges: DataFrame, walkLen: Int, seed: String = "walk",
-                  eager: Boolean = true): DataFrame = {
-    require(walkLen >= 1, s"need walkLen >= 1; got $walkLen")
-    val e = edges.select(col("src").cast("long").as("src"),
-      col("dst").cast("long").as("dst")).distinct()
-    // adjacency as ONE dst-sorted array row per node (round 16 — the
-    // broadcast-independent shape the n2vhops probe motivated, see
-    // [[node2vecWalks]]): each hop is a single equi-join of the
-    // one-row-per-walk frontier against the persisted, node-partitioned
-    // array table, and the step is try_element_at(nbrs, pick) — the
-    // same md5-uniform rank the former (node, row_number) fetch picked,
-    // bit-for-bit, with no per-hop edge-set re-sort when the edge table
-    // outgrows the broadcast threshold
-    val eAdj = e.groupBy(col("src").as("node"))
-      .agg(sort_array(collect_list(col("dst"))).as("__nb"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      var cur = e.select(col("src").as("walk_id")).distinct()
-        .select(col("walk_id"), col("walk_id").as("node"),
-          array(col("walk_id")).as("__path"))
-      // parked = finished-walk frames split out at checkpoint barriers;
-      // each is a narrow filter over an already-materialized checkpoint,
-      // so re-reading it at assembly replays no hop joins
-      var parked = List.empty[DataFrame]
-      for (s <- 1 to walkLen) {
-        val pick = conv(substring(md5(concat_ws("|", lit(seed),
-            col("walk_id").cast("string"), lit(s.toString))), 1, 12), 16, 10)
-          .cast("long") % array_size(col("__nb")) + 1
-        // __dead ⟺ the node has no out-edges (null __nb) — stable once
-        // true; pick ∈ [1, size] always resolves for live walks
-        val hopped = cur
-          .join(eAdj, Seq("node"), "left")
-          .withColumn("__dst", try_element_at(col("__nb"), pick.cast("int")))
-          .select(col("walk_id"),
-            coalesce(col("__dst"), col("node")).as("node"),
-            when(col("__dst").isNotNull, concat(col("__path"), array(col("__dst"))))
-              .otherwise(col("__path")).as("__path"),
-            col("__dst").isNull.as("__dead"))
-        // eager=false keeps the whole hop chain as one live plan (plan
-        // inspection, embedding in a larger lazy pipeline) — no split
-        // there: an un-checkpointed parked filter would replay its hops
-        if (eager && (s % WalkCheckpointEvery == 0 || s == walkLen)) {
-          val settled = hopped.localCheckpoint(true)
-          parked = settled.where(col("__dead"))
-            .select("walk_id", "node", "__path") :: parked
-          cur = settled.where(!col("__dead"))
-            .select("walk_id", "node", "__path")
-        } else cur = hopped.select("walk_id", "node", "__path")
-      }
-      parked.foldLeft(cur)(_ unionByName _)
-        .select(col("walk_id"), posexplode(col("__path")))
-        .select(col("walk_id"), col("pos").cast("long").as("step"),
-          col("col").as("node"))
-    } finally eAdj.unpersist()
-  }
+  /** Deterministic random-walk corpus generation — the DeepWalk/node2vec
+    * sequence-sampling step that turns a graph into training sequences for
+    * embedding models: one fixed-length walk per distinct source node over
+    * a directed edge list. The step choice is the engine-portable md5
+    * uniform the sampling operators use (md5(seed|walk|step) mod degree
+    * picks a rank in the node's dst-ordered adjacency), so walks are
+    * bit-reproducible across engines and runs — no RNG state, no
+    * Math.random. Walks that reach a node with no out-edges truncate
+    * (inner-join semantics), so symmetrize the edge list for walks that
+    * must survive.
+    *
+    * Scale: the dst-sorted adjacency is grouped ONCE into one array row
+    * per node (persisted, node-partitioned — round 16; the former
+    * (node, row_number) rank table needed a degree-lookup join AND a
+    * rank-fetch join per hop, both of which re-sorted the edge set per
+    * hop once it outgrew the broadcast threshold); each of the `walkLen`
+    * hops is ONE equi-join on exactly one row per walk — never a
+    * degree-expanded candidate set — and the step is an O(1) array
+    * index. The walk STATE carries its own path (an array column
+    * appended per hop, ≤ walkLen+1 longs), so the corpus is ONE
+    * posexplode of the final frame — no per-step union, no per-step
+    * replay — and the blocking checkpoint ([[walkLoop]]) is a pure lineage/
+    * plan-size knob paid every `WalkCheckpointEvery` hops instead of every
+    * hop (walkLen 40 = 5 scheduling barriers, not 40; measured 23 → ~8 s
+    * on the len-40 bench arm). Dead ends park: the left joins pass a
+    * stuck walk through with its path unchanged, and posexplode emits
+    * only the steps it actually took (same truncation semantics as the
+    * former inner-join form) — and at every checkpoint barrier the
+    * finished walks are SPLIT OUT of the hop frame (a parked walk's path
+    * never changes again, so it only needs to rejoin at the final
+    * posexplode): on a sink-heavy graph the live frame shrinks
+    * geometrically instead of dragging every finished row through dozens
+    * of joins (round 13; 81.9 → 76.2 s at len 40 on a 40%-sink 1M-node
+    * graph at sf0.1-scale — modest there because per-hop cost is
+    * plan/scheduling-bound at 600k walks, but the row-volume term this
+    * removes is the one that grows 100× with the graph). The split costs
+    * nothing extra — it filters the barrier's already-materialized
+    * checkpoint. Returns (walk_id, step, node): the long-form sequence
+    * corpus, step 0 = the start node. */
+  def randomWalks(edges: DataFrame, walkLen: Int, seed: String = "walk"): DataFrame =
+    walkLoop(uniformWalk(edges), walkLen, seed)
 
   /** [[randomWalks]] with edge-weight-proportional step choice — the
     * weighted-graph walk (node2vec's static-bias case): a neighbor is
@@ -591,87 +508,15 @@ object GraphAnalytics {
     * upstream if fractional) so the ladder is exact in both engines;
     * duplicate (src, dst) edges collapse to their max weight.
     *
-    * Scale: the ladder is ONE window keyed by src (degree-bounded, built
-    * once and persisted); each hop joins on the source node with the
-    * ladder-interval containment as the join residual — the interval
-    * test evaluates during the join without materializing a
-    * degree-expanded row set, and exactly one adjacency row survives per
-    * live walk. Same output shape and truncation semantics as
-    * [[randomWalks]]. */
-  def weightedRandomWalks(edges: DataFrame, walkLen: Int, seed: String = "wwalk",
-                          eager: Boolean = true): DataFrame = {
-    require(walkLen >= 1, s"need walkLen >= 1; got $walkLen")
-    val e = edges.select(col("src").cast("long").as("src"),
-        col("dst").cast("long").as("dst"), col("weight").cast("long").as("w"))
-      .where(col("w") > 0)
-      .groupBy("src", "dst").agg(max("w").as("w"))
-    // adjacency as ONE dst-sorted (dst, w) struct-array row per node with
-    // the ladder total precomputed (round 16 — same broadcast-independent
-    // shape as [[randomWalks]]/[[node2vecWalks]]: the former per-edge
-    // lo/hi interval table re-sorted under SMJ every hop once it outgrew
-    // the broadcast threshold); the slot landing is a row-local
-    // exact-integer aggregate over the sorted array — the same
-    // cumulative-weight intervals, bit-for-bit
-    val eAdj = e.groupBy(col("src").as("node"))
-      .agg(sort_array(collect_list(struct(col("dst"), col("w")))).as("__nbw"))
-      .withColumn("__tot", aggregate(col("__nbw"), lit(0L),
-        (acc, x) => acc + x.getField("w")))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      // same path-carrying state, checkpoint cadence AND parked-walk
-      // split as [[randomWalks]] (tot NULL → null pick → null chosen ⟺
-      // dead; tot non-NULL → exactly one slot contains the pick, so the
-      // step is always set for live walks)
-      var cur = e.select(col("src").as("walk_id")).distinct()
-        .select(col("walk_id"), col("walk_id").as("node"),
-          array(col("walk_id")).as("__path"))
-      var parked = List.empty[DataFrame]
-      for (s <- 1 to walkLen) {
-        val pick = conv(substring(md5(concat_ws("|", lit(seed),
-            col("walk_id").cast("string"), lit(s.toString))), 1, 12), 16, 10)
-          .cast("long") % col("__tot")
-        val hopped = cur
-          .join(eAdj, Seq("node"), "left")
-          .withColumn("__dst", aggregate(col("__nbw"),
-            struct(lit(0L).as("cum"), lit(-1L).as("ch")),
-            (acc, x) => struct(
-              (acc.getField("cum") + x.getField("w")).as("cum"),
-              when(acc.getField("ch") >= 0, acc.getField("ch"))
-                .when(pick < acc.getField("cum") + x.getField("w"), x.getField("dst"))
-                .otherwise(lit(-1L)).as("ch")),
-            acc => when(acc.getField("ch") >= 0, acc.getField("ch"))))
-          .select(col("walk_id"),
-            coalesce(col("__dst"), col("node")).as("node"),
-            when(col("__dst").isNotNull, concat(col("__path"), array(col("__dst"))))
-              .otherwise(col("__path")).as("__path"),
-            col("__dst").isNull.as("__dead"))
-        if (eager && (s % WalkCheckpointEvery == 0 || s == walkLen)) {
-          val settled = hopped.localCheckpoint(true)
-          parked = settled.where(col("__dead"))
-            .select("walk_id", "node", "__path") :: parked
-          cur = settled.where(!col("__dead"))
-            .select("walk_id", "node", "__path")
-        } else cur = hopped.select("walk_id", "node", "__path")
-      }
-      parked.foldLeft(cur)(_ unionByName _)
-        .select(col("walk_id"), posexplode(col("__path")))
-        .select(col("walk_id"), col("pos").cast("long").as("step"),
-          col("col").as("node"))
-    } finally eAdj.unpersist()
-  }
+    * Scale: the adjacency is ONE dst-sorted (dst, w) array row per node
+    * with its ladder total (built once and persisted); each hop is one
+    * equi-join on the node and the slot landing is a row-local
+    * exact-integer aggregate over the array — no degree-expanded row set,
+    * no per-hop edge-set re-sort. Same output shape and truncation
+    * semantics as [[randomWalks]]. */
+  def weightedRandomWalks(edges: DataFrame, walkLen: Int, seed: String = "wwalk"): DataFrame =
+    walkLoop(weightedWalk(edges), walkLen, seed)
 
-  /** Skip-gram training pairs from a walk corpus ([[randomWalks]] output):
-    * every (center, context) node pair co-occurring within `window` steps
-    * of the same walk, tallied — the word2vec-over-walks batch feed.
-    *
-    * The 2·window·|walk rows| bound is STRUCTURAL: each center row
-    * explodes into its ±window context step offsets (a narrow 2·window
-    * fan-out) and equi-joins the corpus on `(walk_id, step)` — one
-    * matching context row per offset, since a walk has one node per step.
-    * A walk_id-only join with the window test as a residual would pay
-    * (walkLen+1)² comparisons per walk before filtering — 10-20× the CPU
-    * at DeepWalk-typical walkLen 40-80. Pairs aggregate map-side into
-    * (center, context) counts. */
   /** PMI over a skip-gram pair table ([[walkSkipGramPairs]] output) —
     * the word2vec-SGNS objective's implicit factorization target
     * (Levy & Goldberg 2014): pmi(c, x) = ln( n(c,x)·N / (n(c·)·n(·x)) )
@@ -741,38 +586,72 @@ object GraphAnalytics {
     * by walks that visit it — segment hubs upstream if that bites.
     * Reference node2vec implementations pay O(Σ deg²) alias-table
     * precomputation instead; this form needs no per-edge-pair state.
-    * Dead ends park exactly like [[randomWalks]] (checkpoint-barrier
-    * split, eager only). Same truncation semantics and output shape:
+    * Dead ends park exactly like [[randomWalks]] (the [[walkLoop]]
+    * barrier split). Same truncation semantics and output shape:
     * (walk_id, step, node). */
   def node2vecWalks(edges: DataFrame, walkLen: Int,
                     retMilli: Long = 1000, outMilli: Long = 1000,
-                    seed: String = "n2v", eager: Boolean = true): DataFrame =
-    node2vecWalksCore(edges, walkLen, retMilli, outMilli, seed, eager, null)
+                    seed: String = "n2v"): DataFrame =
+    walkLoop(node2vecWalk(edges, retMilli, outMilli), walkLen, seed)
 
-  /** [[node2vecWalks]] with a per-checkpoint-barrier observation hook for
-    * the scale probes: after each barrier's blocking localCheckpoint the
-    * hook sees (hop index, live-walk frame, parked-walk frame since last
-    * barrier) — both already materialized, so inspecting them replays no
-    * hop joins. Production callers pass null (zero cost). */
-  private[graft] def node2vecWalksCore(edges: DataFrame, walkLen: Int,
-                    retMilli: Long, outMilli: Long,
-                    seed: String, eager: Boolean,
-                    onBarrier: (Int, DataFrame, DataFrame) => Unit): DataFrame = {
-    require(walkLen >= 1, s"need walkLen >= 1; got $walkLen")
+  /** One walk family for [[walkLoop]]. `adj` is its (node, …) adjacency,
+    * one row per node with out-edges. `state` names the extra frontier
+    * columns the family carries, with their values at the start.
+    * `hop(joined, u, s)` takes the frontier left-joined to `adj` on node,
+    * hop s's md5 uniform `u`, and adds the step `__dst` (null = dead
+    * end); it may overwrite the carried state columns. */
+  private[graft] final case class WalkFamily(adj: DataFrame, state: Seq[(String, Column)],
+                                             hop: (DataFrame, Column, Int) => DataFrame)
+
+  /** Distinct (src, dst) longs grouped into one dst-sorted `__nb` array
+    * row per source node. */
+  private def sortedAdjacency(edges: DataFrame): DataFrame =
+    edges.select(col("src").cast("long").as("src"), col("dst").cast("long").as("dst"))
+      .distinct()
+      .groupBy(col("src").as("node"))
+      .agg(sort_array(collect_list(col("dst"))).as("__nb"))
+
+  /** [[randomWalks]]: the step is the md5-uniform rank in the node's
+    * sorted neighbor array. */
+  private[graft] def uniformWalk(edges: DataFrame): WalkFamily =
+    WalkFamily(sortedAdjacency(edges), Nil, (j, u, _) =>
+      j.withColumn("__dst",
+        try_element_at(col("__nb"), (u % array_size(col("__nb")) + 1).cast("int"))))
+
+  /** [[weightedRandomWalks]]: one dst-sorted (dst, w) struct array per
+    * node with the ladder total precomputed; the slot landing is a
+    * row-local exact-integer aggregate over the sorted array (tot NULL →
+    * null pick → dead; otherwise exactly one slot contains the pick). */
+  private[graft] def weightedWalk(edges: DataFrame): WalkFamily = {
+    val adj = edges.select(col("src").cast("long").as("src"),
+        col("dst").cast("long").as("dst"), col("weight").cast("long").as("w"))
+      .where(col("w") > 0)
+      .groupBy("src", "dst").agg(max("w").as("w"))
+      .groupBy(col("src").as("node"))
+      .agg(sort_array(collect_list(struct(col("dst"), col("w")))).as("__nbw"))
+      .withColumn("__tot", aggregate(col("__nbw"), lit(0L),
+        (acc, x) => acc + x.getField("w")))
+    WalkFamily(adj, Nil, (j, u, _) => {
+      val pick = u % col("__tot")
+      j.withColumn("__dst", aggregate(col("__nbw"),
+        struct(lit(0L).as("cum"), lit(-1L).as("ch")),
+        (acc, x) => struct(
+          (acc.getField("cum") + x.getField("w")).as("cum"),
+          when(acc.getField("ch") >= 0, acc.getField("ch"))
+            .when(pick < acc.getField("cum") + x.getField("w"), x.getField("dst"))
+            .otherwise(lit(-1L)).as("ch")),
+        acc => when(acc.getField("ch") >= 0, acc.getField("ch"))))
+    })
+  }
+
+  /** [[node2vecWalks]]: the frontier carries the previous node and its
+    * neighbor array (`prev`, `__pn`); the bias ladder runs row-locally
+    * with a merge pointer into sorted nbrs ∩ prev-nbrs. */
+  private[graft] def node2vecWalk(edges: DataFrame, retMilli: Long, outMilli: Long): WalkFamily = {
     require(retMilli >= 1 && outMilli >= 1,
       s"need positive milli-weights; got retMilli=$retMilli outMilli=$outMilli")
-    val e = edges.select(col("src").cast("long").as("src"),
-      col("dst").cast("long").as("dst")).distinct()
-    val eAdj = e.groupBy(col("src").as("node"))
-      .agg(sort_array(collect_list(col("dst"))).as("__nb"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      var cur = e.select(col("src").as("walk_id")).distinct()
-        .select(col("walk_id"), col("walk_id").as("prev"),
-          col("walk_id").as("node"), array(col("walk_id")).as("__path"),
-          array().cast("array<bigint>").as("__pn"))
-      var parked = List.empty[DataFrame]
-      for (s <- 1 to walkLen) {
+    WalkFamily(sortedAdjacency(edges),
+      Seq("prev" -> col("node"), "__pn" -> array().cast("array<bigint>")), (j, u, s) => {
         // ladder weight of candidate d given the merge pointer ip into
         // __inter (sorted nbrs ∩ prev-nbrs): the d(prev, dst) = 1 test
         // without a membership join. First step is uniform (no prev).
@@ -788,11 +667,8 @@ object GraphAnalytics {
           if (s == 1) ip
           else ip + when(ip < array_size(col("__inter")) &&
             try_element_at(col("__inter"), ip + lit(1)) === d, lit(1)).otherwise(lit(0))
-        val pick = conv(substring(md5(concat_ws("|", lit(seed),
-            col("walk_id").cast("string"), lit(s.toString))), 1, 12), 16, 10)
-          .cast("long") % col("__tot")
-        val hopped = cur.join(eAdj, Seq("node"), "left")
-          .withColumn("__inter",
+        val pick = u % col("__tot")
+        j.withColumn("__inter",
             if (s == 1) array().cast("array<bigint>")
             else sort_array(array_intersect(col("__nb"), col("__pn"))))
           // tot in CLOSED FORM (no ladder scan): all candidates default
@@ -820,27 +696,63 @@ object GraphAnalytics {
                 .when(pick < acc.getField("cum") + wOf(d, acc.getField("ip")), d)
                 .otherwise(lit(-1L)).as("ch")),
             acc => when(acc.getField("ch") >= 0, acc.getField("ch"))))
-          .select(col("walk_id"), col("node").as("prev"),
-            coalesce(col("__dst"), col("node")).as("node"),
-            when(col("__dst").isNotNull, concat(col("__path"), array(col("__dst"))))
-              .otherwise(col("__path")).as("__path"),
-            when(col("__dst").isNotNull, col("__nb"))
-              .otherwise(col("__pn")).as("__pn"),
-            col("__dst").isNull.as("__dead"))
-        if (eager && (s % WalkCheckpointEvery == 0 || s == walkLen)) {
-          val settled = hopped.localCheckpoint(true)
-          parked = settled.where(col("__dead"))
-            .select("walk_id", "prev", "node", "__path") :: parked
-          cur = settled.where(!col("__dead"))
-            .select("walk_id", "prev", "node", "__path", "__pn")
-          if (onBarrier != null) onBarrier(s, cur, parked.head)
-        } else cur = hopped.select("walk_id", "prev", "node", "__path", "__pn")
-      }
-      parked.foldLeft(cur.select("walk_id", "prev", "node", "__path"))(_ unionByName _)
+          .withColumn("prev", col("node"))
+          .withColumn("__pn", when(col("__dst").isNotNull, col("__nb")).otherwise(col("__pn")))
+      })
+  }
+
+  /** The frontier a walk family starts from: one walk per adjacency node,
+    * walk_id = the start node, its path holding just that node. */
+  private[graft] def walkStart(w: WalkFamily): DataFrame =
+    w.adj.select(Seq(col("node").as("walk_id"), col("node"), array(col("node")).as("__path")) ++
+      w.state.map { case (name, c) => c.as(name) }: _*)
+
+  /** Hop `s` of a walk family: one left equi-join of the frontier with
+    * the adjacency, the family's step at the md5 uniform
+    * md5(seed|walk_id|s), and the path carry. A dead end parks in place —
+    * node and path unchanged, `__dead` set. */
+  private[graft] def walkHop(w: WalkFamily, seed: String)(cur: DataFrame, s: Int): DataFrame = {
+    val u = conv(substring(md5(concat_ws("|", lit(seed),
+        col("walk_id").cast("string"), lit(s.toString))), 1, 12), 16, 10).cast("long")
+    w.hop(cur.join(w.adj, Seq("node"), "left"), u, s)
+      .select(Seq(col("walk_id"),
+          coalesce(col("__dst"), col("node")).as("node"),
+          when(col("__dst").isNotNull, concat(col("__path"), array(col("__dst"))))
+            .otherwise(col("__path")).as("__path")) ++
+        w.state.map { case (name, _) => col(name) } :+
+        col("__dst").isNull.as("__dead"): _*)
+  }
+
+  /** The walk loop the three walk generators share: `walkLen` hops of
+    * [[walkHop]] over a persisted adjacency, a checkpoint barrier every
+    * `WalkCheckpointEvery` hops and at the last ([[Superstep.rounds]]),
+    * finished walks split out at each barrier, and one posexplode of the
+    * carried paths into (walk_id, step, node). `onBarrier(hop, live,
+    * parked)` observes each barrier's live frontier and newly parked
+    * walks — both already materialized, so inspecting them replays no hop
+    * joins (the scale probes' per-barrier hook). */
+  private[graft] def walkLoop(w: WalkFamily, walkLen: Int, seed: String,
+                              onBarrier: (Int, DataFrame, DataFrame) => Unit =
+                                (_, _, _) => ()): DataFrame = {
+    require(walkLen >= 1, s"need walkLen >= 1; got $walkLen")
+    val fam = w.copy(adj = w.adj.persist(StorageLevel.MEMORY_AND_DISK))
+    try {
+      val start = walkStart(fam)
+      // parked = finished-walk frames split out at checkpoint barriers;
+      // each is a narrow filter over an already-materialized checkpoint,
+      // so re-reading it at assembly replays no hop joins
+      var parked = List.empty[DataFrame]
+      val live = Superstep.rounds(start, walkLen, WalkCheckpointEvery, barrier = (settled, s) => {
+        parked ::= settled.where(col("__dead")).select("walk_id", "__path")
+        val live = settled.where(!col("__dead")).select(start.columns.map(col): _*)
+        onBarrier(s, live, parked.head)
+        live
+      })(walkHop(fam, seed))
+      parked.foldLeft(live.select("walk_id", "__path"))(_ unionByName _)
         .select(col("walk_id"), posexplode(col("__path")))
         .select(col("walk_id"), col("pos").cast("long").as("step"),
           col("col").as("node"))
-    } finally eAdj.unpersist()
+    } finally fam.adj.unpersist()
   }
 
   /** Deterministic SGNS negative-sampling table over a skip-gram pair
@@ -959,6 +871,18 @@ object GraphAnalytics {
       .select(col("walk_id"), (col("__rn") - 1).cast("long").as("step"), col("node"))
   }
 
+  /** Skip-gram training pairs from a walk corpus ([[randomWalks]] output):
+    * every (center, context) node pair co-occurring within `window` steps
+    * of the same walk, tallied — the word2vec-over-walks batch feed.
+    *
+    * The 2·window·|walk rows| bound is STRUCTURAL: each center row
+    * explodes into its ±window context step offsets (a narrow 2·window
+    * fan-out) and equi-joins the corpus on `(walk_id, step)` — one
+    * matching context row per offset, since a walk has one node per step.
+    * A walk_id-only join with the window test as a residual would pay
+    * (walkLen+1)² comparisons per walk before filtering — 10-20× the CPU
+    * at DeepWalk-typical walkLen 40-80. Pairs aggregate map-side into
+    * (center, context) counts. */
   def walkSkipGramPairs(walks: DataFrame, window: Int = 2): DataFrame = {
     require(window >= 1, s"need window >= 1; got $window")
     val offsets = array(((-window to window).filter(_ != 0).map(o => lit(o.toLong))): _*)
@@ -1092,6 +1016,24 @@ object GraphAnalytics {
     } finally canon.unpersist()
   }
 
+  /** Vertices of the k-core: the maximal induced subgraph in which every
+    * vertex has UNDIRECTED degree ≥ k, computed by iterative peeling —
+    * each round drops vertices whose degree in the surviving subgraph is
+    * below k, until a fixpoint. Takes an (a, b) pair table (any numeric
+    * ids — the [[graft.pipeline.ConnectedComponents.labels]] input
+    * contract); returns (vid, degree) for surviving vertices, degree
+    * being the within-core degree. A standard corpus/graph-quality
+    * primitive (the dense backbone that survives after stripping
+    * tendrils).
+    *
+    * Scale: per round, one map-side-combinable degree aggregation over
+    * the surviving symmetrized edge list + two semi-joins to restrict
+    * edges to survivors; the survivor count IS the convergence probe
+    * (peeling is monotone — an unchanged count is the fixpoint), fused
+    * with the round's materialization. Rounds are bounded by the peeling
+    * depth (the graph's degeneracy ordering length), small for the
+    * heavy-tailed graphs where k-core matters; each round's state is one
+    * (vid) column. */
   def kCore(pairs: DataFrame, k: Int, maxIters: Int = 100): DataFrame = {
     require(k >= 1, s"need k >= 1; got $k")
     val e0 = pairs.select(col("a").cast("long").as("u"), col("b").cast("long").as("v"))
@@ -1101,26 +1043,14 @@ object GraphAnalytics {
     val sym = canon.unionByName(canon.select(col("b").as("a"), col("a").as("b")))
       .persist(StorageLevel.MEMORY_AND_DISK)
     try {
-      var live = sym.select(col("a").as("vid")).distinct().localCheckpoint(true)
-      var prevCount = -1L
-      var converged = false
-      var iter = 0
-      while (!converged && iter < maxIters) {
-        iter += 1
-        val liveEdges = sym
+      Superstep.fixpoint(sym.select(col("a").as("vid")).distinct(), maxIters,
+          "k-core peeling") { (live, _) =>
+        sym
           .join(live.select(col("vid").as("a")), Seq("a"), "left_semi")
           .join(live.select(col("vid").as("b")), Seq("b"), "left_semi")
-        val next = liveEdges.groupBy(col("a").as("vid"))
-          .agg(count(lit(1)).as("__deg"))
+          .groupBy(col("a").as("vid")).agg(count(lit(1)).as("__deg"))
           .where(col("__deg") >= k)
-          .localCheckpoint(false) // lazy: the probe count materializes it
-        val c = next.count()
-        converged = c == prevCount
-        prevCount = c
-        live = next
-      }
-      require(converged, s"k-core peeling did not converge in $maxIters rounds")
-      live.select(col("vid"), col("__deg").as("degree"))
+      }(Superstep.unchanged(_.count())).select(col("vid"), col("__deg").as("degree"))
     } finally sym.unpersist()
   }
 
@@ -1166,33 +1096,20 @@ object GraphAnalytics {
     try {
       val spark = edges.sparkSession
       import spark.implicits._
-      var dist = landmarks.toDF("vid")
+      val seed = landmarks.toDF("vid")
         .select(col("vid"), col("vid").as("landmark"),
           lit(BigDecimal(0)).cast("decimal(28,6)").as("dist"))
-        .localCheckpoint(true)
-      var prevCount = -1L
-      var prevSum: java.math.BigDecimal = null
-      var converged = false
-      var iter = 0
-      while (!converged && iter < maxIters) {
-        iter += 1
-        val msgs = e
-          .join(dist.select(col("vid").as("dst"), col("landmark"), col("dist")), Seq("dst"))
-          .select(col("src").as("vid"), col("landmark"),
-            (col("dist") + col("weight")).cast("decimal(28,6)").as("dist"))
-        val next = dist.unionByName(msgs)
-          .groupBy("vid", "landmark").agg(min("dist").as("dist"))
-          .localCheckpoint(false) // lazy: the probe agg materializes it
-        val probe = next.agg(count(lit(1)).as("c"),
-          coalesce(sum("dist"), lit(BigDecimal(0))).as("s")).first()
-        val (c, s) = (probe.getLong(0), probe.getDecimal(1))
-        converged = c == prevCount && s.compareTo(prevSum) == 0
-        prevCount = c; prevSum = s
-        dist = next
-      }
-      require(converged,
-        s"weighted shortest paths did not converge in $maxIters rounds (negative cycle?)")
-      dist.select(col("vid"), col("landmark"), col("dist").cast("double").as("dist"))
+      Superstep.fixpoint(seed, maxIters, "weighted shortest paths (negative cycle?)") {
+        (dist, _) =>
+          val msgs = e
+            .join(dist.select(col("vid").as("dst"), col("landmark"), col("dist")), Seq("dst"))
+            .select(col("src").as("vid"), col("landmark"),
+              (col("dist") + col("weight")).cast("decimal(28,6)").as("dist"))
+          dist.unionByName(msgs).groupBy("vid", "landmark").agg(min("dist").as("dist"))
+      }(Superstep.unchanged { next =>
+        val p = next.agg(count(lit(1)), coalesce(sum("dist"), lit(BigDecimal(0)))).first()
+        (p.getLong(0), BigDecimal(p.getDecimal(1)))
+      }).select(col("vid"), col("landmark"), col("dist").cast("double").as("dist"))
     } finally e.unpersist()
   }
 
@@ -1229,11 +1146,6 @@ object GraphAnalytics {
     } finally { verts.unpersist(); canon.unpersist() }
   }
 
-  /** Compact-forward core shared by [[triangleCountDF]] and
-    * [[clusteringCoefficients]]: per-vertex triangle corner counts
-    * (vid, __n) and simple-graph degrees (vid, __deg) over a
-    * canonicalized (a < b, distinct, loop-free) edge table. See
-    * [[triangleCountDF]] for the O(m^1.5) degree-ordered wedge bound. */
   /** Leiden-style partition refinement (the core fix of Traag et al.
     * 2019, arXiv:1810.08473 — "From Louvain to Leiden"): local-move
     * community assignment can leave a community internally DISCONNECTED
@@ -1262,27 +1174,6 @@ object GraphAnalytics {
       .select(col("vid"), coalesce(col("cluster"), col("vid")).as("label"))
   }
 
-  /** k-truss of an undirected edge table (a, b) — the EDGE-cohesion
-    * analog of [[kCore]] and the strongest of the classic cohesion
-    * filters: the maximal subgraph in which every edge closes at least
-    * k−2 triangles WITHIN the subgraph. Synchronous peel: per round,
-    * per-edge support is counted over the surviving edges and every edge
-    * below k−2 drops, including triangle-free edges; idempotent at the
-    * fixpoint, so a fixed oracle unroll past convergence replays the run
-    * exactly (the kCore argument). Returns (a, b, support), a < b.
-    *
-    * Scale: per round the surviving edges are RE-ORIENTED low→high by
-    * (current degree, id) — the [[triangleCorners]] trick — so wedges
-    * apex at each edge's LOWEST-degree endpoint and the round's wedge
-    * fan-out is Σ C(outdeg⁺, 2) = O(m^1.5) REGARDLESS of skew (the
-    * id-oriented form this replaced paid C(deg, 2) at any low-id hub —
-    * one 10⁴-degree hub emitted ~5·10⁷ wedge rows per round, every
-    * round; VERDICT r14 #1). Each triangle is enumerated exactly once
-    * (apex = min endpoint, closing edge oriented t1→t2) and credits all
-    * three edges in canonical least/greatest form, so support totals are
-    * bit-identical to the canonical a<b<c enumeration. Everything is
-    * vertex-keyed equi-joins + one map-side-combinable rollup; rounds
-    * shrink the edge set monotonically. */
   /** The per-round enumeration core of [[kTruss]], exposed for the skew
     * spec: re-orients a canonical (a < b) surviving-edge set low→high by
     * (CURRENT degree, id) and emits the apex wedges. Returns (oriented
@@ -1313,39 +1204,52 @@ object GraphAnalytics {
     (oriented, wedges)
   }
 
+  /** k-truss of an undirected edge table (a, b) — the EDGE-cohesion
+    * analog of [[kCore]] and the strongest of the classic cohesion
+    * filters: the maximal subgraph in which every edge closes at least
+    * k−2 triangles WITHIN the subgraph. Synchronous peel: per round,
+    * per-edge support is counted over the surviving edges and every edge
+    * below k−2 drops, including triangle-free edges; idempotent at the
+    * fixpoint, so a fixed oracle unroll past convergence replays the run
+    * exactly (the kCore argument). Returns (a, b, support), a < b.
+    *
+    * Scale: per round the surviving edges are RE-ORIENTED low→high by
+    * (current degree, id) — the [[triangleCorners]] trick — so wedges
+    * apex at each edge's LOWEST-degree endpoint and the round's wedge
+    * fan-out is Σ C(outdeg⁺, 2) = O(m^1.5) REGARDLESS of skew (the
+    * id-oriented form this replaced paid C(deg, 2) at any low-id hub —
+    * one 10⁴-degree hub emitted ~5·10⁷ wedge rows per round, every
+    * round; VERDICT r14 #1). Each triangle is enumerated exactly once
+    * (apex = min endpoint, closing edge oriented t1→t2) and credits all
+    * three edges in canonical least/greatest form, so support totals are
+    * bit-identical to the canonical a<b<c enumeration. Everything is
+    * vertex-keyed equi-joins + one map-side-combinable rollup; rounds
+    * shrink the edge set monotonically. */
   def kTruss(pairs: DataFrame, k: Int, maxRounds: Int = 50): DataFrame = {
     require(k >= 3, s"need k >= 3; got $k")
-    var e = checkpointScrubbed(
-      pairs.select(col("a").cast("long").as("u"), col("b").cast("long").as("v"))
-        .where(col("u") =!= col("v"))
-        .select(least(col("u"), col("v")).as("a"), greatest(col("u"), col("v")).as("b"))
-        .distinct())
-    var prevCount = -1L
-    var converged = false
-    var round = 0
-    var lastSup: DataFrame = null
-    while (!converged && round < maxRounds) {
-      round += 1
-      val (oriented, wedges) = trussWedges(e)
+    val canon = pairs.select(col("a").cast("long").as("u"), col("b").cast("long").as("v"))
+      .where(col("u") =!= col("v"))
+      .select(least(col("u"), col("v")).as("a"), greatest(col("u"), col("v")).as("b"))
+      .distinct()
+    Superstep.fixpoint(canon, maxRounds, "k-truss peeling") { (e, _) =>
+      val (oriented, wedges) = trussWedges(e.select("a", "b"))
       // the closing edge is oriented exactly t1→t2 (both endpoints above
       // the apex, t1 below t2), so one semi-probe admits each triangle once
       val tri = wedges.join(
         oriented.select(col("s").as("t1"), col("t").as("t2")), Seq("t1", "t2"), "left_semi")
-      val sup = tri.select(least(col("s"), col("t1")).as("a"), greatest(col("s"), col("t1")).as("b"))
+      tri.select(least(col("s"), col("t1")).as("a"), greatest(col("s"), col("t1")).as("b"))
         .unionByName(tri.select(least(col("s"), col("t2")).as("a"), greatest(col("s"), col("t2")).as("b")))
         .unionByName(tri.select(least(col("t1"), col("t2")).as("a"), greatest(col("t1"), col("t2")).as("b")))
         .groupBy("a", "b").agg(count(lit(1)).as("support"))
-      val next = checkpointScrubbed(sup.where(col("support") >= k - 2))
-      val c = next.count()
-      converged = c == prevCount
-      prevCount = c
-      lastSup = next
-      e = next.select("a", "b")
-    }
-    require(converged, s"k-truss peeling did not converge in $maxRounds rounds")
-    lastSup
+        .where(col("support") >= k - 2)
+    }(Superstep.unchanged(_.count()))
   }
 
+  /** Compact-forward core shared by [[triangleCountDF]] and
+    * [[clusteringCoefficients]]: per-vertex triangle corner counts
+    * (vid, __n) and simple-graph degrees (vid, __deg) over a
+    * canonicalized (a < b, distinct, loop-free) edge table. See
+    * [[triangleCountDF]] for the O(m^1.5) degree-ordered wedge bound. */
   private def triangleCorners(canon: DataFrame): (DataFrame, DataFrame) = {
     val deg = canon.select(col("a").as("vid")).unionByName(canon.select(col("b").as("vid")))
       .groupBy("vid").agg(count(lit(1)).as("__deg"))
@@ -1434,32 +1338,6 @@ object GraphAnalytics {
         (-col("__best.ns")).as("gain_cmp"))
   }
 
-  /** One parity-restricted weighted local-move round for [[louvain]]:
-    * vertices with vid % 2 == parity evaluate the gain comparator
-    * (weighted twin of [[louvainMoveRound]]'s, self-loop weight excluded
-    * from k_{v,c} — it joins every candidate community with v, a
-    * constant offset) and adopt the argmax; the other parity class
-    * passes through unchanged. Tie-breaks: on equal score the OWN
-    * community wins (no zero-gain churn), equal-score foreign candidates
-    * break label asc. `e` is (a, b, w) directed-symmetric with intra
-    * weight on the diagonal; `deg`/`bigM` are level constants the caller
-    * precomputed. */
-  /** localCheckpoint + STATS SCRUB for iterative loops: the LogicalRDD a
-    * checkpoint produces PRESERVES the origin plan's sizeInBytes
-    * estimate, so a loop that checkpoints a ~J-join plan every round
-    * compounds a J-fold BigInt size product per round — by round ~10 the
-    * driver spends minutes multiplying million-digit stats inside
-    * SizeInBytesOnlyStatsPlanVisitor (observed wedging the louvain spec
-    * on a 6-node graph). Rebuilding the frame from the already-
-    * materialized RDD drops the origin stats back to the default
-    * estimate. Join strategy is unaffected here: the loops' joins are
-    * equi-keyed shuffles, and the one broadcast (bigM) is an explicit
-    * hint. */
-  private[graft] def checkpointScrubbed(df: DataFrame): DataFrame = {
-    val ck = df.localCheckpoint(true)
-    ck.sparkSession.createDataFrame(ck.rdd, ck.schema)
-  }
-
   /** Optimization-round tooling (graft.PlanDump): the level-1 loop-body
     * plan of [[louvain]]/[[leiden]] on a caller-supplied symmetrized edge
     * table — the plan executed (maxLevels × maxRounds) times per ascent,
@@ -1475,6 +1353,16 @@ object GraphAnalytics {
     louvainParityRound(lab, e, deg, bigM, 0)
   }
 
+  /** One parity-restricted weighted local-move round for [[louvain]]:
+    * vertices with vid % 2 == parity evaluate the gain comparator
+    * (weighted twin of [[louvainMoveRound]]'s, self-loop weight excluded
+    * from k_{v,c} — it joins every candidate community with v, a
+    * constant offset) and adopt the argmax; the other parity class
+    * passes through unchanged. Tie-breaks: on equal score the OWN
+    * community wins (no zero-gain churn), equal-score foreign candidates
+    * break label asc. `e` is (a, b, w) directed-symmetric with intra
+    * weight on the diagonal; `deg`/`bigM` are level constants the caller
+    * precomputed. */
   private[analytics] def louvainParityRound(lab: DataFrame, e: DataFrame, deg: DataFrame,
                                  bigM: DataFrame, parity: Int): DataFrame = {
     val dC = lab.join(deg, Seq("vid"), "left")

@@ -1,0 +1,91 @@
+package graft.analytics
+
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge}
+
+/** The superstep kernel of graft's iterative graph algorithms: every
+  * ported vertex program is a `step` — one join + group-by dataflow over
+  * the previous round's state — run under ONE checkpoint policy and ONE
+  * convergence loop (the Pregelix shape, PAPERS.md). The algorithms
+  * supply only their round body and, for fixpoints, their probe; the
+  * cadence, the checkpoint, the round bookkeeping and the
+  * non-convergence failure live here.
+  *
+  *   - [[rounds]] runs a fixed number of rounds (PageRank, PPR, LPA, the
+  *     random-walk hop chain), materializing every `every`-th round and
+  *     the last.
+  *   - [[fixpoint]] runs until a round changes nothing (SSSP, weighted
+  *     SSSP, k-core, k-truss, connected components). Each round is the
+  *     step, a LAZY checkpoint, and the probe — the round's one Spark
+  *     action, which also materializes the checkpoint.
+  *
+  * Every per-round checkpoint is [[checkpointScrubbed]]: a deep loop over
+  * plain `localCheckpoint` compounds plan statistics round over round
+  * (SCALE.md, "localCheckpoint stats explosion").
+  */
+object Superstep {
+
+  /** `n` rounds of `step(state, round)`, rounds numbered 1..n, starting
+    * from `init` as given. Every `every`-th round and the last end in an
+    * eager [[checkpointScrubbed]]; the rounds between chain lazily, so
+    * plan depth stays bounded by `every`. `barrier(settled, round)` sees
+    * each materialized round and returns the state the next round reads
+    * (the walks split finished walks out there). */
+  def rounds(init: DataFrame, n: Int, every: Int,
+             barrier: (DataFrame, Int) => DataFrame = (df, _) => df)
+            (step: (DataFrame, Int) => DataFrame): DataFrame =
+    (1 to n).foldLeft(init) { (cur, i) =>
+      val next = step(cur, i)
+      if (i % every == 0 || i == n) barrier(checkpointScrubbed(next), i) else next
+    }
+
+  /** Rounds of `step(state, round)` from `init` (eagerly materialized
+    * once) until `probe` reports that the round's state changed nothing.
+    * Each round's output is lazily checkpointed and `probe` materializes
+    * it: one action that reads every row (a count or global aggregate —
+    * a bare `limit`/`isEmpty` would leave partitions unread and a second
+    * job to fill them). Fails naming `what` when `maxIters` rounds pass
+    * without convergence. */
+  def fixpoint(init: DataFrame, maxIters: Int, what: String)
+              (step: (DataFrame, Int) => DataFrame)
+              (probe: DataFrame => Boolean): DataFrame = {
+    var cur = checkpointScrubbed(init)
+    var converged = false
+    var round = 0
+    while (!converged && round < maxIters) {
+      round += 1
+      cur = checkpointScrubbed(step(cur, round), eager = false)
+      converged = probe(cur)
+    }
+    require(converged, s"$what did not converge in $maxIters rounds")
+    cur
+  }
+
+  /** A [[fixpoint]] probe for monotone iterates: the round converged when
+    * `fingerprint` (e.g. row count and value sum) equals the previous
+    * round's. One fresh probe per fixpoint run — it remembers the last
+    * fingerprint. */
+  def unchanged[A](fingerprint: DataFrame => A): DataFrame => Boolean = {
+    var last: Option[A] = None
+    df => {
+      val now = Some(fingerprint(df))
+      val same = now == last
+      last = now
+      same
+    }
+  }
+
+  /** localCheckpoint + STATS SCRUB: the LogicalRDD a checkpoint produces
+    * PRESERVES the origin plan's sizeInBytes estimate, so a loop that
+    * checkpoints a ~J-join plan every round compounds a J-fold BigInt
+    * size product per round — by round ~10 query planning spends minutes
+    * multiplying million-digit stats inside SizeInBytesOnlyStatsPlanVisitor
+    * (observed wedging the louvain spec on a 6-node graph). The scrub caps
+    * the inherited estimate at `spark.sql.defaultSizeInBytes`, the estimate
+    * of a frame without statistics, so no product can compound across
+    * rounds; a sane estimate passes through, and with it the join choice a
+    * plain checkpoint would get (a small frontier still broadcasts). Lazy
+    * (`eager = false`) checkpoints materialize on the first action over
+    * the returned frame. */
+  def checkpointScrubbed(df: DataFrame, eager: Boolean = true): DataFrame =
+    GraftSqlBridge.capSizeEstimate(df.localCheckpoint(eager))
+}

@@ -3,6 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
+import graft.analytics.Superstep
 
 /** Connected components over an undirected edge list as pure DataFrame
   * operations — the RDD-free alternative to the GraphX bridge in
@@ -22,11 +23,14 @@ import org.apache.spark.storage.StorageLevel
   *     table stays (id, label) longs end-to-end, and whole-stage codegen
   *     covers the join+agg pipeline; nothing round-trips through
   *     RDD[Edge] object serialization;
-  *   - per-round state is truncated with a LAZY localCheckpoint whose
-  *     materializing action IS the convergence probe: the old label rides
-  *     through the round as a column, and one aggregate over the
-  *     checkpointed frame both persists the new labels and returns the
-  *     changed-count — ONE job per round, not checkpoint + probe (at ~20
+  *   - the rounds run on [[graft.analytics.Superstep.fixpoint]]: each
+  *     round's labels are a LAZY scrubbed checkpoint whose materializing
+  *     action IS the convergence probe — the old label rides through the
+  *     round as a column, and one aggregate over the checkpointed frame
+  *     both persists the new labels and returns the changed-count. The
+  *     pointer jump is the HEAD of the next round's step, reading the
+  *     previous round's checkpoint, so a round that moves labels costs
+  *     ONE job too, not the probe plus an eager jump checkpoint (at ~20
   *     rounds on a real cluster the saved scheduler round-trips are
   *     latency that matters);
   *   - no step materializes a neighborhood list: a boilerplate mega-group
@@ -66,52 +70,38 @@ object ConnectedComponents {
       // never hold its own id (its smaller neighbor's label is ≤ that
       // neighbor's id < it), so the limit is the component minimum —
       // pinned by the existing random-graph fuzz spec.
-      var labels = und.groupBy(col("u"))
+      val seed = und.groupBy(col("u"))
         .agg(least(col("u"), min(col("v"))).as("label"))
         .select(col("u").as("id"), col("label"))
-        .localCheckpoint(true)
-      var converged = false
-      var iter = 0
-      while (!converged && iter < maxIters) {
-        iter += 1
+      // convergence is checked on the PROPAGATION result, before the next
+      // round's pointer jump: "no label changed under closed-neighborhood
+      // min" IS the fixpoint condition (the jump is purely an accelerator
+      // — label(label) = label whenever propagation is stationary, since
+      // every held label is a component-minimum id that points to
+      // itself). Star/clique graphs — the shape dedup clustering
+      // produces, already at the fixpoint in the seed — confirm in one
+      // jump-free round.
+      Superstep.fixpoint(seed, maxIters, "connected components") { (prev, round) =>
+        // pointer jump of the previous round's labels: every label is
+        // itself a node id with a row (labels start as ids and min() only
+        // selects existing ids), so this inner join is total
+        val labels =
+          if (round == 1) prev
+          else prev.join(prev.select(col("id").as("__jid"), col("label").as("__jlabel")),
+              col("label") === col("__jid"))
+            .select(col("id"), col("__jlabel").as("label"))
         // closed-neighborhood minimum: neighbor labels in, own label kept
         // (carried as __old so the convergence check needs no extra join)
-        val nbrMin = und.join(labels, und("v") === labels("id"))
-          .select(und("u").as("id"), col("label"))
-          .groupBy("id").agg(min("label").as("__nmin"))
-        val prop = labels.select(col("id"), col("label").as("__old"))
+        val nbrMin = und.join(labels, col("v") === col("id"))
+          .groupBy(col("u").as("id")).agg(min("label").as("__nmin"))
+        labels.select(col("id"), col("label").as("__old"))
           .join(nbrMin, Seq("id"), "left")
           .select(col("id"), col("__old"),
             least(col("__old"), coalesce(col("__nmin"), col("__old"))).as("label"))
-          .localCheckpoint(false) // lazy: the changed-count materializes it
-        // convergence is checked on the PROPAGATION result, before the
-        // pointer jump: "no label changed under closed-neighborhood min"
-        // IS the fixpoint condition (the jump is purely an accelerator —
-        // label(label) = label whenever propagation is stationary, since
-        // every held label is a component-minimum id that points to
-        // itself). Star/clique graphs — the shape dedup clustering
-        // produces, already at the fixpoint in the seed — now confirm in
-        // one jump-free round; deep graphs pay the jump as a second job
-        // only in the rounds that actually move.
-        val changed = prop
-          .agg(coalesce(sum(when(col("label") =!= col("__old"), 1L)
-            .otherwise(0L)), lit(0L)))
-          .first().getLong(0)
-        converged = changed == 0L
-        labels =
-          if (converged) prop.select("id", "label")
-          else {
-            // pointer jump: every label is itself a node id with a row in
-            // prop (labels start as ids and min() only selects existing
-            // ids), so this inner join is total
-            val jump = prop.select(col("id").as("__jid"), col("label").as("__jlabel"))
-            prop.join(jump, prop("label") === jump("__jid"))
-              .select(prop("id"), col("__jlabel").as("label"))
-              .localCheckpoint(true)
-          }
-      }
-      require(converged, s"connected components did not converge in $maxIters rounds")
-      labels.select(col("id"), col("label").as("cluster"))
+      } { prop =>
+        prop.agg(coalesce(sum(when(col("label") =!= col("__old"), 1L)
+          .otherwise(0L)), lit(0L))).first().getLong(0) == 0L
+      }.select(col("id"), col("label").as("cluster"))
     } finally e.unpersist()
   }
 }

@@ -40,28 +40,22 @@ object GraphChange {
       .unionByName(modifiedNodes.select(col("prop_hash").as("hash")))
       .unionByName(createdEdges.select(col("prop_hash").as("hash")))
       .distinct()
-    // depends_on closure: follow the nested() DAG so SchemaType children (and
-    // their children) travel with the change; the lattice is shallow, so a
-    // bounded iterative expansion converges in a few rounds
-    val maxRounds = 16
-    var all = direct
-    var frontier = direct
-    var converged = frontier.isEmpty
-    var round = 0
-    while (round < maxRounds && !converged) {
-      val children = to.propRefs
-        .join(frontier.withColumnRenamed("hash", "parent_hash"), Seq("parent_hash"), "left_semi")
+    // depends_on closure as a delta sweep over the nested() DAG: each
+    // frontier holds the children of the last one that no earlier frontier
+    // reached, is checkpointed lazily, and is materialized by its
+    // emptiness probe (one action per DAG level). A frontier never repeats
+    // a hash, so the sweep ends at the DAG's depth, whatever that is.
+    var seen = List.empty[DataFrame]
+    var frontier = direct.localCheckpoint(false)
+    while (frontier.count() > 0) {
+      seen ::= frontier
+      frontier = to.propRefs
+        .join(frontier.select(col("hash").as("parent_hash")), Seq("parent_hash"), "left_semi")
         .select(col("child_hash").as("hash")).distinct()
-      frontier = children.join(all, Seq("hash"), "left_anti")
-      all = all.unionByName(frontier).distinct()
-      converged = frontier.isEmpty  // evaluated ONCE per round
-      round += 1
+        .join(seen.reduce(_ unionByName _), Seq("hash"), "left_anti")
+        .localCheckpoint(false)
     }
-    // fail loudly rather than ship an incomplete closure (a deeper DAG would
-    // leave dangling child prop_hash references on the receiving store)
-    require(converged,
-      s"depends_on closure did not converge within $maxRounds rounds — " +
-        "nested-property DAG deeper than expected")
+    val all = (frontier :: seen).reduce(_ unionByName _)
     val requiredProps = to.props.join(all, Seq("hash"), "left_semi")
     val requiredRefs = to.propRefs
       .join(all.withColumnRenamed("hash", "parent_hash"), Seq("parent_hash"), "left_semi")

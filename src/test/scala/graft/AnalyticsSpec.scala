@@ -84,37 +84,13 @@ class AnalyticsSpec extends SparkSuite {
   }
 
   test("label propagation: one scheduler job per round (checkpoint IS the round)") {
-    val counter = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          jobStart: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        counter.incrementAndGet(); ()
-      }
-    }
-    // under AQE every shuffle stage is its own job, and broadcast builds
-    // submit theirs from a side thread — disable both so one action = one
-    // job and the counter measures actions per round (the cc-probe pin's
-    // protocol, CurationSpec)
-    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
-    val prevBc = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val out = GraphAnalytics.labelPropagationDF(g, toLong, rounds = 2).collect()
-      assert(out.length == 7)
-      org.apache.spark.GraftSchedulerProbe.drainListenerBus(spark.sparkContext)
-      // budget: 1 init-checkpoint job + 1 checkpoint job per round (2) +
-      // the final collect = 4, +2 slack for the verts/edges persist
-      // materializations the first action may split out
-      val jobs = counter.get()
-      assert(jobs <= 6, s"lpa spent $jobs jobs for 2 rounds + init + collect " +
-        "(round no longer materializes in one action?)")
-    } finally {
-      spark.sparkContext.removeSparkListener(listener)
-      spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevBc)
-    }
+    val (out, jobs) = countJobs(GraphAnalytics.labelPropagationDF(g, toLong, rounds = 2).collect())
+    assert(out.length == 7)
+    // budget: 1 init-checkpoint job + 1 checkpoint job per round (2) +
+    // the final collect = 4, +2 slack for the verts/edges persist
+    // materializations the first action may split out
+    assert(jobs <= 6, s"lpa spent $jobs jobs for 2 rounds + init + collect " +
+      "(round no longer materializes in one action?)")
   }
 
   test("shortest paths: hop counts along edge direction to the landmark") {
@@ -128,35 +104,15 @@ class AnalyticsSpec extends SparkSuite {
   }
 
   test("shortest paths DF: one scheduler job per round (probe rides the materialization)") {
-    val counter = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          jobStart: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        counter.incrementAndGet(); ()
-      }
-    }
-    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
-    val prevBc = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val out = GraphAnalytics.shortestPathsDF(g, toLong, Seq(4L)).collect()
-      assert(out.length == 6) // loner unreachable
-      org.apache.spark.GraftSchedulerProbe.drainListenerBus(spark.sparkContext)
-      // this fixture converges in 3 productive BFS rounds + 1 confirming
-      // round. budget: 1 seed-checkpoint job + 1 fused probe/
-      // materialization job per round (4) + the final collect = 6, +3
-      // slack for the verts/edges persist materializations the first
-      // action may split out
-      val jobs = counter.get()
-      assert(jobs <= 9, s"ssspDF spent $jobs jobs for 5 rounds + init + collect " +
-        "(probe no longer fused with the round materialization?)")
-    } finally {
-      spark.sparkContext.removeSparkListener(listener)
-      spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevBc)
-    }
+    val (out, jobs) = countJobs(GraphAnalytics.shortestPathsDF(g, toLong, Seq(4L)).collect())
+    assert(out.length == 6) // loner unreachable
+    // this fixture converges in 3 productive BFS rounds + 1 confirming
+    // round. budget: 1 seed-checkpoint job + 1 fused probe/
+    // materialization job per round (4) + the final collect = 6, +3
+    // slack for the verts/edges persist materializations the first
+    // action may split out
+    assert(jobs <= 9, s"ssspDF spent $jobs jobs for 5 rounds + init + collect " +
+      "(probe no longer fused with the round materialization?)")
   }
 
   test("shortest paths: DataFrame min-propagation matches GraphX exactly") {
@@ -1332,70 +1288,109 @@ class AnalyticsSpec extends SparkSuite {
     assert(tc("v:a") == 1 && tc("v:e") == 1 && tc("v:lone") == 0)
   }
 
+  // A deliberately DEEP graph — a 48-node directed path — maximizes the
+  // round count of the iterative operators, so any accidental per-round
+  // job blowup (a probe no longer fused with the round's materialization,
+  // an extra eager action in the loop) multiplies by the round count.
+  private val nPath = 48
+  private val pathEdges = (0 until nPath - 1).map(i => (i.toLong, i.toLong + 1))
+
   test("deep path graph: k-core and weighted sssp stay one job per round") {
-    // A deliberately DEEP graph — a 48-node directed path — maximizes the
-    // round count of both iterative operators, so any accidental
-    // per-round job blowup (a probe no longer fused with the round's
-    // materialization, an extra eager action in the loop) multiplies by
-    // ~50 and trips the budget, as the cc/lpa/sssp pins already guard.
     import spark.implicits._
-    val nPath = 48
-    val pathEdges = (0 until nPath - 1).map(i => (i.toLong, i.toLong + 1))
-    val counter = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          jobStart: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        counter.incrementAndGet(); ()
-      }
+    // k=2 peeling eats the path from both ends: 24 peel rounds + 1
+    // confirming round, empty core. Budget: 1 init checkpoint + 1 fused
+    // probe/materialization job per round (25) + slack for the sym
+    // persist's first-touch split
+    val (core, kcoreJobs) = countJobs(GraphAnalytics.kCore(
+      pathEdges.toDF("a", "b"), k = 2, maxIters = 40).collect())
+    assert(core.isEmpty, s"a pure path has no 2-core, got ${core.length} rows")
+    assert(kcoreJobs <= 31, s"kCore spent $kcoreJobs jobs for ~25 peel rounds " +
+      "(probe no longer fused with the round materialization?)")
+    // ...and a cycle closing the path peels nothing: every vertex keeps
+    // degree 2, so round 1 sets the count and round 2 confirms it
+    val (cycle, cycleJobs) = countJobs(GraphAnalytics.kCore(
+      (pathEdges :+ ((nPath - 1).toLong, 0L)).toDF("a", "b"), k = 2,
+      maxIters = 5).collect())
+    assert(cycle.length == nPath && cycle.forall(_.getLong(1) == 2L))
+    assert(cycleJobs <= 8, s"kCore on the converged cycle spent $cycleJobs jobs " +
+      "for 2 rounds")
+    // weighted min-plus from landmark 47: distance walks back one hop
+    // per round — 47 productive rounds + 1 confirming round. Budget:
+    // 1 seed checkpoint + 1 fused probe job per round (48) + slack
+    val (dist, wssspJobs) = countJobs(GraphAnalytics.weightedShortestPathsDF(
+        pathEdges.map { case (s, d) => (s, d, 1.5) }.toDF("src", "dst", "weight"),
+        landmarks = Seq(nPath - 1L), maxIters = 60).collect()
+      .map(r => r.getLong(0) -> r.getDouble(2)).toMap)
+    assert(dist.size == nPath) // every path vertex reaches the end
+    assert(dist(0L) == (nPath - 1) * 1.5 && dist(nPath - 1L) == 0.0)
+    assert(dist(24L) == (nPath - 25) * 1.5)
+    assert(wssspJobs <= 55, s"wsssp spent $wssspJobs jobs for ~48 rounds " +
+      "(probe no longer fused with the round materialization?)")
+  }
+
+  test("deep path graph: connected components spend one job per round, jumps included") {
+    import spark.implicits._
+    // plain-Scala replay of ConnectedComponents.labels' schedule: seed with the
+    // closed-neighborhood min, then per round propagate it, stop when no
+    // label moved, else pointer-jump
+    val nbrs = (pathEdges ++ pathEdges.map(_.swap)).groupMap(_._1)(_._2)
+    var lab = nbrs.map { case (u, vs) => u -> (vs :+ u).min }
+    var rounds = 0
+    var moved = true
+    while (moved) {
+      rounds += 1
+      val prop = lab.map { case (u, l) => u -> (nbrs(u).map(lab) :+ l).min }
+      moved = prop != lab
+      lab = if (moved) prop.map { case (u, l) => u -> prop(l) } else prop
     }
-    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
-    val prevBc = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      // k=2 peeling eats the path from both ends: 24 peel rounds + 1
-      // confirming round, empty core. Budget: 1 init checkpoint + 1 fused
-      // probe/materialization job per round (25) + slack for the sym
-      // persist's first-touch split
-      counter.set(0)
-      val core = GraphAnalytics.kCore(
-        pathEdges.toDF("a", "b"), k = 2, maxIters = 40).collect()
-      org.apache.spark.GraftSchedulerProbe.drainListenerBus(spark.sparkContext)
-      assert(core.isEmpty, s"a pure path has no 2-core, got ${core.length} rows")
-      val kcoreJobs = counter.get()
-      assert(kcoreJobs <= 31, s"kCore spent $kcoreJobs jobs for ~25 peel rounds " +
-        "(probe no longer fused with the round materialization?)")
-      // ...and a cycle closing the path peels nothing: every vertex keeps
-      // degree 2, so round 1 sets the count and round 2 confirms it
-      counter.set(0)
-      val cycle = GraphAnalytics.kCore(
-        (pathEdges :+ ((nPath - 1).toLong, 0L)).toDF("a", "b"), k = 2,
-        maxIters = 5).collect()
-      org.apache.spark.GraftSchedulerProbe.drainListenerBus(spark.sparkContext)
-      assert(cycle.length == nPath && cycle.forall(_.getLong(1) == 2L))
-      val cycleJobs = counter.get()
-      assert(cycleJobs <= 8, s"kCore on the converged cycle spent $cycleJobs jobs " +
-        "for 2 rounds")
-      // weighted min-plus from landmark 47: distance walks back one hop
-      // per round — 47 productive rounds + 1 confirming round. Budget:
-      // 1 seed checkpoint + 1 fused probe job per round (48) + slack
-      counter.set(0)
-      val dist = GraphAnalytics.weightedShortestPathsDF(
-          pathEdges.map { case (s, d) => (s, d, 1.5) }.toDF("src", "dst", "weight"),
-          landmarks = Seq(nPath - 1L), maxIters = 60).collect()
-        .map(r => r.getLong(0) -> r.getDouble(2)).toMap
-      org.apache.spark.GraftSchedulerProbe.drainListenerBus(spark.sparkContext)
-      assert(dist.size == nPath) // every path vertex reaches the end
-      assert(dist(0L) == (nPath - 1) * 1.5 && dist(nPath - 1L) == 0.0)
-      assert(dist(24L) == (nPath - 25) * 1.5)
-      val wssspJobs = counter.get()
-      assert(wssspJobs <= 55, s"wsssp spent $wssspJobs jobs for ~48 rounds " +
-        "(probe no longer fused with the round materialization?)")
-    } finally {
-      spark.sparkContext.removeSparkListener(listener)
-      spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevBc)
+    assert(rounds >= 4, s"the path converged in $rounds rounds — too shallow to pin")
+    val (labels, jobs) = countJobs(
+      graft.pipeline.ConnectedComponents.labels(pathEdges.toDF("a", "b")).collect())
+    assert(labels.length == nPath && labels.forall(_.getLong(1) == 0L))
+    // budget: the edge-list fill + the seed checkpoint + 1 job per round
+    // (the pointer jump rides the next round's job) + the collect. A
+    // separate eager jump checkpoint costs a second job per moving round.
+    assert(jobs <= rounds + 3, s"cc spent $jobs jobs for $rounds rounds")
+  }
+
+  test("kTruss spends at most two jobs per peel round") {
+    import spark.implicits._
+    // a triangulated cylinder (6 rings of 5) peels at k=4 from both rims
+    // inward, one edge class per round, down to nothing; a disjoint K5 is
+    // the 4-truss that survives with support 3 on every edge
+    val (rows, cols) = (6, 5)
+    def v(r: Int, c: Int) = (r * cols + (c % cols)).toLong
+    val cylinder = for {
+      r <- 0 until rows; c <- 0 until cols
+      e <- Seq((v(r, c), v(r, c + 1))) ++
+        (if (r + 1 < rows) Seq((v(r, c), v(r + 1, c)), (v(r, c), v(r + 1, c + 1))) else Nil)
+    } yield e
+    val k5 = for (a <- 100L to 104L; b <- a + 1 to 104L) yield (a, b)
+    val edges = (cylinder ++ k5).map { case (a, b) => (a min b, a max b) }.toSet
+    // plain-Scala replay of kTruss's synchronous peel and its convergence test
+    def support(e: Set[(Long, Long)]) = {
+      val nb = (e.toSeq ++ e.toSeq.map(_.swap)).groupMap(_._1)(_._2).map { case (k, vs) => k -> vs.toSet }
+      e.map { case (a, b) => (a, b) -> (nb(a) & nb(b)).size }.toMap
     }
+    var live = edges
+    var last = Map.empty[(Long, Long), Int]
+    var prevCount = -1
+    var rounds = 0
+    var converged = false
+    while (!converged) {
+      rounds += 1
+      last = support(live).filter(_._2 >= 2)
+      converged = last.size == prevCount
+      prevCount = last.size
+      live = last.keySet
+    }
+    assert(rounds >= 5, s"the fixture peeled in $rounds rounds — too shallow to pin")
+    val (got, jobs) = countJobs(
+      GraphAnalytics.kTruss(edges.toSeq.toDF("a", "b"), k = 4).collect())
+    assert(got.map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2).toInt).toMap == last)
+    assert(last.size == 10 && last.values.forall(_ == 3))
+    // budget: the edge checkpoint + per round the oriented-edge checkpoint
+    // and the fused probe/materialization + the collect
+    assert(jobs <= 2 * rounds + 2, s"kTruss spent $jobs jobs for $rounds rounds")
   }
 }

@@ -562,40 +562,16 @@ class CurationSpec extends SparkSuite {
 
   test("cc spends ONE job per round: convergence fused into the checkpoint action") {
     import graft.pipeline.ConnectedComponents
-    val counter = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          jobStart: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        counter.incrementAndGet(); ()
-      }
-    }
-    // under AQE every shuffle stage is its own job, and broadcast builds
-    // submit theirs from a side thread — disable both so one action = one
-    // job and the counter measures actions per round
-    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
-    val prevBc = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      // star 1-{2,3}: round 1 relabels, round 2 proves the fixpoint
-      val pairs = Seq((1L, 2L), (1L, 3L)).toDF("a", "b")
-      val labels = ConnectedComponents.labels(pairs)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(labels == Map(1L -> 1L, 2L -> 1L, 3L -> 1L))
-      org.apache.spark.GraftSchedulerProbe.drainListenerBus(spark.sparkContext)
-      // budget: 1 init-checkpoint job + 1 job per round (2 rounds) + the
-      // final collect = 4 (+1 slack for first()'s incremental partition
-      // scan). The old separate limit(1).count() probe spent 2 jobs per
-      // round and needed 6+.
-      val jobs = counter.get()
-      assert(jobs <= 5, s"cc spent $jobs jobs for 2 rounds + init + collect " +
-        "(convergence probe no longer fused?)")
-    } finally {
-      spark.sparkContext.removeSparkListener(listener)
-      spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevBc)
-    }
+    // star 1-{2,3}: round 1 relabels, round 2 proves the fixpoint
+    val (labels, jobs) = countJobs(ConnectedComponents.labels(Seq((1L, 2L), (1L, 3L)).toDF("a", "b"))
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap)
+    assert(labels == Map(1L -> 1L, 2L -> 1L, 3L -> 1L))
+    // budget: 1 init-checkpoint job + 1 job per round (2 rounds) + the
+    // final collect = 4 (+1 slack for first()'s incremental partition
+    // scan). The old separate limit(1).count() probe spent 2 jobs per
+    // round and needed 6+.
+    assert(jobs <= 5, s"cc spent $jobs jobs for 2 rounds + init + collect " +
+      "(convergence probe no longer fused?)")
   }
 
   test("semanticPairs caps mega-cluster pair fan-out via deterministic sub-split") {

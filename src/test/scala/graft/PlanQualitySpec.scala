@@ -635,19 +635,25 @@ class PlanQualitySpec extends SparkSuite {
     }
   }
 
+  /** The executed plan of hop `hop` of a walk family from its start
+    * frontier — one hop of the shared walk loop, before any barrier. */
+  private def walkHopPlan(w: graft.analytics.GraphAnalytics.WalkFamily, hop: Int): String = {
+    val out = graft.analytics.GraphAnalytics.walkHop(w, seed = "plan")(
+      graft.analytics.GraphAnalytics.walkStart(w), hop)
+    out.collect()
+    out.queryExecution.executedPlan.toString.split("== Initial Plan ==").head
+  }
+
   test("random walks: hop joins are equi-keyed, no cartesian or nested loop") {
     import spark.implicits._
     val edges = Seq((0L, 1L), (1L, 2L), (2L, 0L), (1L, 0L), (2L, 1L), (0L, 2L))
       .toDF("src", "dst")
-    // eager=false keeps every hop join in ONE live plan (the default
-    // checkpoints each hop, which would hide the joins from inspection)
-    val out = graft.analytics.GraphAnalytics.randomWalks(edges, walkLen = 2,
-      eager = false)
-    out.collect()
+    // one hop of the shared walk loop, as a live plan (the loop itself
+    // checkpoints at its barriers, which would hide the joins)
+    val plan = walkHopPlan(graft.analytics.GraphAnalytics.uniformWalk(edges), hop = 1)
     // each hop must join exactly one adjacency row per live walk — a
     // degree-expanded candidate set (join on src alone, rank filtered
     // after) or a nested loop would blow up on hub nodes at corpus scale
-    val plan = out.queryExecution.executedPlan.toString.split("== Initial Plan ==").head
     assert(plan.contains("Join"), s"hop joins missing from the live plan:\n$plan")
     assert(!plan.contains("CartesianProduct"), s"cartesian in walk plan:\n$plan")
     assert(!plan.contains("BroadcastNestedLoopJoin"), s"nested loop in walk plan:\n$plan")
@@ -657,10 +663,7 @@ class PlanQualitySpec extends SparkSuite {
     import spark.implicits._
     val edges = Seq((0L, 1L, 2L), (0L, 2L, 3L), (1L, 0L, 1L), (2L, 0L, 1L))
       .toDF("src", "dst", "weight")
-    val out = graft.analytics.GraphAnalytics.weightedRandomWalks(edges,
-      walkLen = 2, eager = false)
-    out.collect()
-    val plan = out.queryExecution.executedPlan.toString.split("== Initial Plan ==").head
+    val plan = walkHopPlan(graft.analytics.GraphAnalytics.weightedWalk(edges), hop = 1)
     // each hop equi-joins the frontier against the (node, ladder-array)
     // adjacency and lands the slot inside the row (round 16) — a
     // pure-theta plan (nested loop) would evaluate every walk against
@@ -688,10 +691,9 @@ class PlanQualitySpec extends SparkSuite {
     import spark.implicits._
     val edges = Seq((0L, 1L), (1L, 0L), (1L, 2L), (2L, 1L), (2L, 0L), (0L, 2L))
       .toDF("src", "dst")
-    val out = graft.analytics.GraphAnalytics.node2vecWalks(edges, walkLen = 2,
-      retMilli = 250, outMilli = 2000, eager = false)
-    out.collect()
-    val plan = out.queryExecution.executedPlan.toString.split("== Initial Plan ==").head
+    // hop 2: the first hop is uniform, later hops run the biased ladder
+    val plan = walkHopPlan(
+      graft.analytics.GraphAnalytics.node2vecWalk(edges, retMilli = 250, outMilli = 2000), hop = 2)
     // each hop joins the one-row-per-walk frontier against the adjacency
     // ARRAY table on its node equi-key (round 16: the bias ladder and the
     // (prev, dst) membership test are row-local array aggregates, not a

@@ -1,5 +1,8 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.GraftSchedulerProbe
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -10,4 +13,34 @@ object TestSpark {
 
 trait SparkSuite extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.spark
+
+  /** Runs `body` and returns its result with the number of Spark jobs it
+    * started. AQE and broadcast joins are off meanwhile: under AQE every
+    * shuffle stage is its own job, and broadcast builds submit theirs from
+    * a side thread, so with both off one action is one job and the count
+    * measures actions. The listener bus is drained before and after, so
+    * no earlier job leaks in and no job of `body` is missed. */
+  def countJobs[A](body: => A): (A, Int) = {
+    val counter = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(jobStart: SparkListenerJobStart): Unit = {
+        counter.incrementAndGet(); ()
+      }
+    }
+    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
+    val prevBc = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    GraftSchedulerProbe.drainListenerBus(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val out = body
+      GraftSchedulerProbe.drainListenerBus(spark.sparkContext)
+      (out, counter.get())
+    } finally {
+      spark.sparkContext.removeSparkListener(listener)
+      spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevBc)
+    }
+  }
 }

@@ -130,50 +130,25 @@ class StoreAndIoSpec extends SparkSuite {
   }
 
   test("gcOrphanProps: one job per round plus one, nothing left in the session cache") {
-    val counter = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          jobStart: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        counter.incrementAndGet(); ()
-      }
-    }
     val kept = PropValue.typed("Thing", Some("kept"))
     val doc = PropValue("Doc", Some("x"), Seq(PropValue("Part", Some("y"))))
     val link = PropValue("Link")
-    // the protocol of AnalyticsSpec's one-job-per-round pins: no AQE, no
-    // broadcast, so one action is one job
-    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
-    val prevBc = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
-      var g = BulkMutations.createProperties(GraphStore.empty(spark),
-        propRows(Seq(kept, doc, link)), Some(refRows(Seq(kept, doc))))
-      g = BulkMutations.createNodes(g, Seq(("a", kept.hash), ("d", doc.hash)).toDF("id", "prop_hash"))
-      g = BulkMutations.createEdges(g, Seq(("a", "d", link.hash)).toDF("src", "dst", "prop_hash"))
-      g = BulkMutations.deleteNodes(g, Seq("d").toDF("id"))
-      val cachedBefore = org.apache.spark.sql.GraftCacheProbe.cachedEntryCount(spark)
-      org.apache.spark.GraftSchedulerProbe.drainListenerBus(spark.sparkContext)
-      spark.sparkContext.addSparkListener(listener)
-      val swept =
-        try BulkMutations.gcOrphanProps(g)
-        finally {
-          org.apache.spark.GraftSchedulerProbe.drainListenerBus(spark.sparkContext)
-          spark.sparkContext.removeSparkListener(listener)
-        }
-      assert(org.apache.spark.sql.GraftCacheProbe.cachedEntryCount(spark) == cachedBefore,
-        "sweep left entries in the session cache")
-      // Doc orphaned in round 1, Part in round 2, round 3 empty: budget =
-      // 1 held-set job + 3 round jobs, +1 slack
-      val jobs = counter.get()
-      assert(jobs <= 5, s"sweep spent $jobs jobs for 3 rounds + the held set")
-      assert(hashes(swept) == (kept.withNested :+ link).map(_.hash).toSet)
-      assert(refPairs(swept) == Set((kept.hash, PropValue.schemaType("Thing").hash)))
-    } finally {
-      spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevBc)
-    }
+    var g = BulkMutations.createProperties(GraphStore.empty(spark),
+      propRows(Seq(kept, doc, link)), Some(refRows(Seq(kept, doc))))
+    g = BulkMutations.createNodes(g, Seq(("a", kept.hash), ("d", doc.hash)).toDF("id", "prop_hash"))
+    g = BulkMutations.createEdges(g, Seq(("a", "d", link.hash)).toDF("src", "dst", "prop_hash"))
+    g = BulkMutations.deleteNodes(g, Seq("d").toDF("id"))
+    val cachedBefore = org.apache.spark.sql.GraftCacheProbe.cachedEntryCount(spark)
+    val (swept, jobs) = countJobs(BulkMutations.gcOrphanProps(g))
+    assert(org.apache.spark.sql.GraftCacheProbe.cachedEntryCount(spark) == cachedBefore,
+      "sweep left entries in the session cache")
+    // Doc orphaned in round 1, Part in round 2, round 3 empty: budget =
+    // 1 held-set job + 3 round jobs, +1 slack
+    assert(jobs <= 5, s"sweep spent $jobs jobs for 3 rounds + the held set")
+    assert(hashes(swept) == (kept.withNested :+ link).map(_.hash).toSet)
+    assert(refPairs(swept) == Set((kept.hash, PropValue.schemaType("Thing").hash)))
   }
+
 
   test("get_or_create: 0 -> create, 1 -> reuse, >1 -> error (CLI parity)") {
     val p = PropValue.typed("Thing", Some("shared"))
@@ -294,6 +269,23 @@ class StoreAndIoSpec extends SparkSuite {
       .unionByName(applied.edges.select(col("prop_hash").as("hash")))
       .join(applied.props, Seq("hash"), "left_anti")
     assert(dangling.count() == 0)
+  }
+
+  test("GraphChange diff: the depends_on closure follows a 20-level nested chain to its leaf") {
+    val root = (1 to 19).foldLeft(PropValue("Level", Some("0"))) { (child, i) =>
+      PropValue("Level", Some(i.toString), Seq(child))
+    }
+    assert(root.withNested.size == 20)
+    val b1 = new GraphBatch
+    b1.createNode("a", PropValue("Level", Some("flat")))
+    val b2 = new GraphBatch
+    b2.createNode("a", root)
+    val c = graft.store.GraphChange.diff(b1.toStore(spark), b2.toStore(spark))
+    assert(c.modifiedNodes.select("id").as[String].collect().toSeq == Seq("a"))
+    assert(c.requiredProps.select("hash").as[String].collect().toSet ==
+      root.withNested.map(_.hash).toSet)
+    assert(c.requiredRefs.select("parent_hash", "child_hash").as[(String, String)].collect().toSet ==
+      root.withNested.flatMap(p => p.nested.map(n => (p.hash, n.hash))).toSet)
   }
 
   test("GraphML export round-trips through the importer; dot export renders") {

@@ -552,9 +552,9 @@ object ScaleProbe {
         var Seq(sw0, sp0, gc0, rn0) =
           Seq(shufW, spill, gcMs, runMs).map(_.sum())
         val total0 = System.nanoTime()
-        val walks = graft.analytics.GraphAnalytics.node2vecWalksCore(
-          e, walkLen = 40, retMilli = 250, outMilli = 2000, seed = "n2v",
-          eager = true,
+        val walks = graft.analytics.GraphAnalytics.walkLoop(
+          graft.analytics.GraphAnalytics.node2vecWalk(e, retMilli = 250, outMilli = 2000),
+          walkLen = 40, seed = "n2v",
           onBarrier = (hop, cur, parkedNew) => {
             val wall = (System.nanoTime() - t0) / 1e9
             val Seq(sw, sp, gc, rn) = Seq(shufW, spill, gcMs, runMs).map(_.sum())
