@@ -3,8 +3,9 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.analytics.{GraphAnalytics, Superstep}
+import graft.analytics.GraphAnalytics
 import graft.exec.ZoeCompiler
+import graft.Materialize.{checkpoint, persist}
 import graft.model.{GraphStore, Hashing, PropValue}
 import graft.ql._
 
@@ -75,10 +76,8 @@ object GraphQueries {
   // call-invariant — persist it once per (session, dir) next to the graph
   // tables instead of paying its union+distinct shuffle on every call
   private val symEdges = Memo("sym_edges", Memo.Fixture) { (s, d) =>
-    val df = GraphAnalytics.symmetrizedEdges(analyticsSubgraph(graph(s, d)), analyticsToLong)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    df.count() // materialize eagerly so every consumer reads the cache
-    df
+    persist(GraphAnalytics.symmetrizedEdges(analyticsSubgraph(graph(s, d)), analyticsToLong),
+      fill = true)
   }
 
   /** The thresholded co-purchase pair graph every walk / community /
@@ -102,9 +101,10 @@ object GraphQueries {
     * lineitem self-join + countDistinct rollup is the one pre-pass a
     * deployment pays per corpus version, and ~13 graph entries were each
     * re-executing it inside their own timed plan (~1-1.5 s apiece at
-    * sf0.1). Consumers now read one eager localCheckpoint (plain, NOT
-    * stats-scrubbed: LogicalRDD keeps the origin plan's size estimate,
-    * so downstream join strategies are the ones the in-plan subtree got).
+    * sf0.1). Consumers now read one eager [[Materialize.checkpoint]]: its
+    * LogicalRDD keeps the origin plan's size estimate (the cap binds only
+    * on an estimate above spark.sql.defaultSizeInBytes), so downstream
+    * join strategies are the ones the in-plan subtree got.
     * Bench semantics: a Shared memo, so every memo-cold entry (louvain/
     * leiden ascents, the walk-corpus family) still times the build inside
     * its cold pipeline; the warm-family consumers (ktruss/kcore/quality/
@@ -124,9 +124,8 @@ object GraphQueries {
       // the louvain/leiden consumers read the pairs directly too, and a
       // warm partition memo short-circuits before touching them
       "graph_louvain_refine", "graph_louvain_quality", "graph_leiden_quality")) { (s, d) =>
-    GraphAnalytics.coPurchasePairs(coPurchaseLineitems(s, d), "o", "p", minShared = 2,
-      capDecided = Some(coPairsProbe(s, d)))
-      .localCheckpoint(true)
+    checkpoint(GraphAnalytics.coPurchasePairs(coPurchaseLineitems(s, d), "o", "p", minShared = 2,
+      capDecided = Some(coPairsProbe(s, d))))
   }
   private def coPurchaseLineitems(s: SparkSession, d: String): DataFrame =
     t(s, d, "lineitem").select(col("l_orderkey").as("o"), col("l_partkey").as("p"))
@@ -204,7 +203,7 @@ object GraphQueries {
     * quality row as the cheap-baseline partition. */
   private def lpaOverSym(sym: DataFrame, rounds: Int): DataFrame =
     GraphAnalytics.labelPropagation(sym,
-        Superstep.checkpointScrubbed(
+        checkpoint(
           sym.select(col("a").as("vid")).distinct().select(col("vid"), col("vid").as("lbl"))),
         rounds)
       .select(col("vid"), col("lbl").as("label"))
@@ -665,9 +664,9 @@ object GraphQueries {
     // so the benched time is the two modularity rollups alone
     "graph_leiden_quality" -> ((s, d) => {
       val pairs = coPairs(s, d)
-      val sym = pairs.select(col("a"), col("b"))
-        .unionByName(pairs.select(col("b").as("a"), col("a").as("b")))
-        .localCheckpoint(true) // feeds two modularity rollups
+      // feeds two modularity rollups
+      val sym = checkpoint(pairs.select(col("a"), col("b"))
+        .unionByName(pairs.select(col("b").as("a"), col("a").as("b"))))
       def q(method: String, labels: DataFrame): DataFrame =
         GraphAnalytics.modularityTotal(labels, sym)
           .select(lit(method).as("method"), col("n_communities"),
@@ -684,9 +683,9 @@ object GraphQueries {
     // it); Q is the exact-integer one-division form (modularityTotal)
     "graph_louvain_quality" -> ((s, d) => {
       val pairs = coPairs(s, d)
-      val sym = pairs.select(col("a"), col("b"))
-        .unionByName(pairs.select(col("b").as("a"), col("a").as("b")))
-        .localCheckpoint(true) // feeds three modularity rollups + LPA
+      // feeds three modularity rollups + LPA
+      val sym = checkpoint(pairs.select(col("a"), col("b"))
+        .unionByName(pairs.select(col("b").as("a"), col("a").as("b"))))
       val singles = sym.select(col("a").as("vid")).distinct()
         .select(col("vid"), col("vid").as("label"))
       def q(method: String, labels: DataFrame): DataFrame =

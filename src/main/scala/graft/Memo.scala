@@ -2,8 +2,7 @@ package graft
 
 import java.util.concurrent.{ConcurrentHashMap, CopyOnWriteArrayList}
 import scala.jdk.CollectionConverters._
-import org.apache.spark.sql.{Dataset, SparkSession}
-import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.SparkSession
 
 /** One per-(session, dir) memo of the query inventory: a build evaluated
   * once per key, registered under a name and a [[Memo.Kind]] together with
@@ -83,7 +82,7 @@ object Memo {
 
   private[graft] final case class Built[V](value: V, tempDirs: Seq[String])
 
-  private def release(b: Built[_]): Unit = { unpersist(b.value); b.tempDirs.foreach(deleteTree) }
+  private def release(b: Built[_]): Unit = { Materialize.release(b.value); b.tempDirs.foreach(deleteTree) }
 
   private val registry = new CopyOnWriteArrayList[Memo[_, _]]
 
@@ -149,19 +148,6 @@ object Memo {
     pendingDirs.set(Nil)
     try Built(body, pendingDirs.get)
     finally pendingDirs.set(outer)
-  }
-
-  /** Unpersist every frame in a value (a frame, or a GraphStore or tuple
-    * of frames) and the checkpointed RDDs it scans. */
-  private def unpersist(v: Any): Unit = v match {
-    case ds: Dataset[_] =>
-      ds.queryExecution.analyzed.foreach {
-        case r: LogicalRDD => r.rdd.unpersist(blocking = false); ()
-        case _ => ()
-      }
-      ds.unpersist(blocking = false); ()
-    case p: Product => p.productIterator.foreach(unpersist)
-    case _ => ()
   }
 
   /** Delete a local dir tree, children before parents. */

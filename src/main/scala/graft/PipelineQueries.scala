@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.pipeline.{Dedup, Similarity, TextAnalysis}
+import graft.Materialize.checkpoint
 
 /** Driver-facing inventory for the training-data-pipeline operators (dedup,
   * similarity search, text analysis), each with a DuckDB oracle reproducing
@@ -102,7 +103,7 @@ object PipelineQueries {
   private val nbServeModel = Memo("nb_serve_model", Memo.Fixture,
       stagedFor = Set("stream_nb_classify")) { (s, d) =>
     val (wm, lt) = TextAnalysis.naiveBayesModel(docs(s, d), "text", "lang")
-    (wm.localCheckpoint(true), lt.localCheckpoint(true))
+    (checkpoint(wm), checkpoint(lt))
   }
 
   // the exact-dup CLIQUE pair graph (bounded expansion) is the shared
@@ -114,9 +115,8 @@ object PipelineQueries {
   // input graph (~1-1.5 s apiece at sf0.1); both are staged untimed.
   private val cliquePairs = Memo("clique_pairs", Memo.Shared,
       stagedFor = Set("graphx_triangles", "graph_triangles_df")) { (s, d) =>
-    pipeline.Curation.exactDupCliquePairs(
-      dedupCorpus(s, d), "doc_id", "text", maxGroupSize = 256)
-      .localCheckpoint(true)
+    checkpoint(pipeline.Curation.exactDupCliquePairs(
+      dedupCorpus(s, d), "doc_id", "text", maxGroupSize = 256))
   }
 
   // the near-dup cluster labels over the planted-dup corpus are the
@@ -158,9 +158,8 @@ object PipelineQueries {
   private val ivfPqCodes = Memo("ivfpq_codes", Memo.Fixture,
       stagedFor = Set("stream_ann_ingest")) { (s, d) =>
     val (cent, cb) = ivfPqIdx(s, d)
-    pipeline.Quantization
-      .ivfPqEncode(embeddings(s, d), "vec_id", "embedding", 16, cent, cb)
-      .localCheckpoint(true)
+    checkpoint(pipeline.Quantization
+      .ivfPqEncode(embeddings(s, d), "vec_id", "embedding", 16, cent, cb))
   }
 
   // Saved on-disk IVF-PQ index per (session, dir) — built + written ONCE
@@ -795,8 +794,7 @@ object PipelineQueries {
         .digest(d.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(16)
       val tmp = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
         s"graft-export-$dirKey-${System.getProperty("user.name", "u")}-${ProcessHandle.current.pid}").toString
-      pipeline.Curation.exportPartitioned(labeled, tmp, Seq("split", "lang_guess"))
-        .localCheckpoint(true)
+      checkpoint(pipeline.Curation.exportPartitioned(labeled, tmp, Seq("split", "lang_guess")))
     },
     // JSONL sink + source round-trip: write the corpus as JSON Lines,
     // read it back under the original schema, aggregate the read-back —
@@ -850,10 +848,9 @@ object PipelineQueries {
     // once), drift reported over the emitted frame; memoized like the
     // other stream fixtures
     "stream_label_drift" -> Memo.coldResult("stream_label_drift", Memo.Stream) { (s, d) =>
-      graft.streaming.EventStreams.streamingLabelDrift(s, streamFixtures(s, d, "stream_label_drift"))
+      checkpoint(graft.streaming.EventStreams.streamingLabelDrift(s, streamFixtures(s, d, "stream_label_drift"))
         .select(col("window_start").cast("long").as("w_start"),
-          col("n_events"), col("drift_micro"))
-        .localCheckpoint(true)
+          col("n_events"), col("drift_micro")))
     },
     // streaming sessionization: the flatMapGroupsWithState session
     // assembler through the REAL streaming engine (multi-batch file
@@ -864,13 +861,12 @@ object PipelineQueries {
     // end-of-run output is a pure function of the input (the oracle
     // replays both emission rules)
     "stream_sessionize" -> Memo.coldResult("stream_sessionize", Memo.Stream) { (s, d) =>
-      graft.streaming.EventStreams.runToMemory(s, streamFixtures(s, d, "stream_sessionize"),
+      checkpoint(graft.streaming.EventStreams.runToMemory(s, streamFixtures(s, d, "stream_sessionize"),
           df => graft.streaming.EventStreams
             .sessionizeEventTime(df, gapSeconds = 1800, watermarkDelay = "10 minutes").toDF()
             .select(col("userId").as("user_id"), col("nEvents").as("n_events"),
               col("firstTs").as("first_ts"), col("lastTs").as("last_ts")),
-          maxFilesPerTrigger = Some(2))
-        .localCheckpoint(true)
+          maxFilesPerTrigger = Some(2)))
     },
     // distribution-shift screen: PSI of the document word-count histogram
     // between the train and test split slices (fixed 10-wide buckets
@@ -954,20 +950,18 @@ object PipelineQueries {
       val corpus = dedupCorpus(s, d)
       val q = TextAnalysis.qualityTable(corpus, "doc_id", "text")
         .select(col("doc_id"), col("quality"), col("n_words"))
-      val filtered = corpus
+      // decon scans it twice; the regex predicates run once
+      val filtered = checkpoint(corpus
         .join(q, Seq("doc_id"))
         .withColumn("lang_guess", TextAnalysis.langId(col("text")))
         .where(col("n_words") >= 5 && col("lang_guess") === "en"
           && col("quality") >= 0.35)
-        .select("doc_id", "text", "n_words")
-        .localCheckpoint(true) // decon scans it twice; the regex predicates run once
-      val decon = pipeline.Curation.decontaminate(filtered,
-          docs(s, d).where(col("doc_id") % 10 === 3), "doc_id", "text", n = 5)
-        .localCheckpoint(true)
-      val exact = decon.join(
+        .select("doc_id", "text", "n_words"))
+      val decon = checkpoint(pipeline.Curation.decontaminate(filtered,
+          docs(s, d).where(col("doc_id") % 10 === 3), "doc_id", "text", n = 5))
+      val exact = checkpoint(decon.join(
           decon.groupBy(md5(col("text")).as("__h")).agg(min("doc_id").as("doc_id")),
-          Seq("doc_id"), "left_semi")
-        .localCheckpoint(true)
+          Seq("doc_id"), "left_semi"))
       val labels = pipeline.ConnectedComponents.labels(
         Dedup.ngramJaccardViaMinhash(exact, "doc_id", "text", n = 3, k = 4, minSim = 0.5)
           .select("a", "b"))
@@ -1242,9 +1236,8 @@ object PipelineQueries {
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .start()
       q.awaitTermination()
-      pipeline.AnnIndex.search(pipeline.AnnIndex.load(s, idxDir),
-          e.where(col("vec_id") < 5), "vec_id", "embedding", k = 3, nprobe = 8)
-        .localCheckpoint(true)
+      checkpoint(pipeline.AnnIndex.search(pipeline.AnnIndex.load(s, idxDir),
+          e.where(col("vec_id") < 5), "vec_id", "embedding", k = 3, nprobe = 8))
     },
     // ANN QA: measured recall@k per approximate method (LSH buckets, IVF
     // probing, IVF-PQ ADC) against the exact brute-force top-k over the

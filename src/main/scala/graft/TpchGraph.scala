@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Materialize.persist
 import graft.model.{GraphStore, Hashing, PropValue}
 
 /** Deterministic property graph derived from the TPC-H-ish testdata, used by
@@ -73,11 +74,8 @@ object TpchGraph {
   private val tables = Memo.keyed[String, DataFrame]("base_table", Memo.Fixture) { (spark, dir, name) =>
     val raw = canonicalTs(spark.read.parquet(s"$dir/$name.parquet"))
     val target = spark.sparkContext.defaultParallelism
-    val df =
-      if (raw.rdd.getNumPartitions < target) raw.repartition(target) else raw
-    df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    df.count()
-    df
+    persist(if (raw.rdd.getNumPartitions < target) raw.repartition(target) else raw,
+      fill = true)
   }
 
   /** The base tables the graph mapping reads. */

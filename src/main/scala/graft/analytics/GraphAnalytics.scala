@@ -6,7 +6,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 import graft.model.GraphStore
-import Superstep.checkpointScrubbed
+import graft.Materialize.{checkpoint, using}
 
 /** The reference's declared-but-unimplemented analytics surface
   * (`Graph`/`DirectedGraph` traits, lib.rs:16-65; design target
@@ -88,7 +88,7 @@ object GraphAnalytics {
     val parts = math.max(2, math.min(
       g.vertices.sparkSession.sparkContext.defaultParallelism,
       (g.edges.count() / 1000000L).toInt + 1))
-    val vRDD = g.vertices.select(toLong(col("id")).as("vid"), col("id"))
+    val vRDD = longVerts(g, toLong)
       .rdd.map(r => (r.getLong(0): VertexId, r.getString(1)))
       .coalesce(parts)
     val eRDD = g.edges.select(toLong(col("src")), toLong(col("dst")))
@@ -99,6 +99,21 @@ object GraphAnalytics {
       vertexStorageLevel = StorageLevel.MEMORY_AND_DISK)
   }
 
+  /** The long-id vertex map (vid, id) of `g`. */
+  private def longVerts(g: GraphStore, toLong: Column => Column): DataFrame =
+    g.vertices.select(toLong(col("id")).as("vid"), col("id"))
+
+  /** `body` over `g`'s [[longVerts]] and its directed long-id (src, dst)
+    * edges, both persisted for the call and released after it — the
+    * prologue of the iterative algorithms that read both every round. */
+  private def withLongIds[A](g: GraphStore, toLong: Column => Column)
+                            (body: (DataFrame, DataFrame) => A): A =
+    using(longVerts(g, toLong)) { verts =>
+      using(g.edges.select(toLong(col("src")).as("src"), toLong(col("dst")).as("dst"))) {
+        body(verts, _)
+      }
+    }
+
   /** Connected components (undirected). Returns (id, component) where
     * component = the minimum mapped long id in the component. */
   def connectedComponents(g: GraphStore, toLong: Column => Column): DataFrame = {
@@ -107,7 +122,7 @@ object GraphAnalytics {
     import spark.implicits._
     val cc = graph.connectedComponents().vertices.map { case (vid, comp) => (vid, comp) }
       .toDF("vid", "component")
-    g.vertices.select(toLong(col("id")).as("vid"), col("id"))
+    longVerts(g, toLong)
       .join(cc, Seq("vid"))
       .select(col("id"), col("component"))
   }
@@ -119,7 +134,7 @@ object GraphAnalytics {
     import spark.implicits._
     val ranks = graph.staticPageRank(numIter).vertices
       .map { case (vid, r) => (vid, r) }.toDF("vid", "rank")
-    g.vertices.select(toLong(col("id")).as("vid"), col("id"))
+    longVerts(g, toLong)
       .join(ranks, Seq("vid"))
       .select(col("id"), col("rank"))
   }
@@ -136,12 +151,7 @@ object GraphAnalytics {
   def pageRankDF(g: GraphStore, toLong: Column => Column, numIter: Int = 10,
                  resetProb: Double = 0.15): DataFrame = {
     require(numIter >= 1, s"need numIter >= 1; got $numIter")
-    val verts = g.vertices.select(toLong(col("id")).as("vid"), col("id"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val edges = g.edges
-      .select(toLong(col("src")).as("src"), toLong(col("dst")).as("dst"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    try {
+    withLongIds(g, toLong) { (verts, edges) =>
       // every join below is a USING join on a shared column name (never a
       // df("col") condition): iteration i+1's rank table carries the edge
       // lineage of iteration i, so dataset-tagged column references would
@@ -157,8 +167,8 @@ object GraphAnalytics {
       // 16k-vertex graph — pure scheduler overhead; this shape is 2/5 of
       // the stages and checkpoints on a 5-round cadence (plan depth stays
       // bounded; one materialization per 5 rounds, not per 3).
-      val outDegT = edges.groupBy(col("src").as("vid"))
-        .agg(count(lit(1)).as("__outdeg")).localCheckpoint(true)
+      val outDegT = checkpoint(edges.groupBy(col("src").as("vid"))
+        .agg(count(lit(1)).as("__outdeg")))
       def inbound(cur: DataFrame): DataFrame =
         edges.join(cur.select(col("vid").as("src"),
             (col("r") / col("__outdeg")).as("__share")), Seq("src"))
@@ -173,17 +183,16 @@ object GraphAnalytics {
       }
       // final round assembles ranks for EVERY vertex (sinks included) from
       // the last message pass, then GraphX-style normalizes the sum to |V|
-      val ranks = verts.select("vid")
+      val ranks = checkpoint(verts.select("vid")
         .join(inbound(rr), Seq("vid"), "left")
         .select(col("vid"),
-          (lit(resetProb) + lit(1.0 - resetProb) * coalesce(col("__in"), lit(0.0))).as("r"))
-        .localCheckpoint(true)
+          (lit(resetProb) + lit(1.0 - resetProb) * coalesce(col("__in"), lit(0.0))).as("r")))
       val norm = ranks.agg(sum("r").as("__s"), count(lit(1)).as("__n"))
       ranks.crossJoin(broadcast(norm))
         .select(col("vid"), (col("r") * col("__n") / col("__s")).as("rank"))
         .join(verts, Seq("vid"))
         .select(col("id"), col("rank"))
-    } finally { verts.unpersist(); edges.unpersist() }
+    }
   }
 
   /** Personalized PageRank over a seed set — the seed-conditioned
@@ -223,20 +232,14 @@ object GraphAnalytics {
     val reset = lit(BigDecimal.decimal(resetProb))
     val damp = lit(BigDecimal.decimal(1.0 - resetProb))
     val zero = lit(BigDecimal(0)).cast(mass)
-    val verts = g.vertices.select(toLong(col("id")).as("vid"), col("id"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val edges = g.edges
-      .select(toLong(col("src")).as("src"), toLong(col("dst")).as("dst"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    try {
+    withLongIds(g, toLong) { (verts, edges) =>
       val seedT = seeds.select(col("vid").cast("long").as("vid"),
         lit(BigDecimal(1)).cast(mass).as("__sd")).distinct()
-      val outDegT = edges.groupBy(col("src").as("vid"))
+      val outDegT = checkpoint(edges.groupBy(col("src").as("vid"))
         .agg(count(lit(1)).as("__outdeg"))
         .join(seedT, Seq("vid"), "left")
         .select(col("vid"), col("__outdeg"),
-          coalesce(col("__sd"), zero).as("__sd"))
-        .localCheckpoint(true)
+          coalesce(col("__sd"), zero).as("__sd")))
       def inbound(cur: DataFrame): DataFrame =
         edges.join(cur.select(col("vid").as("src"),
             (col("r") / col("__outdeg")).cast(mass).as("__share")), Seq("src"))
@@ -255,7 +258,7 @@ object GraphAnalytics {
         .select(col("id"),
           (reset * coalesce(col("__sd"), zero) +
             damp * coalesce(col("__in"), zero)).cast(mass).as("rank"))
-    } finally { verts.unpersist(); edges.unpersist() }
+    }
   }
 
   /** Build the symmetrized, deduplicated (a, b) long edge table
@@ -283,19 +286,17 @@ object GraphAnalytics {
   def labelPropagationDF(g: GraphStore, toLong: Column => Column,
                          rounds: Int = 3,
                          symEdges: Option[DataFrame] = None): DataFrame = {
-    val verts = g.vertices.select(toLong(col("id")).as("vid"), col("id"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // caller-provided symmetrized edges are caller-owned (persisted next
-    // to the graph tables and reused across calls); the local build is
-    // scoped to this call
-    val edges = symEdges.getOrElse(
-      symmetrizedEdges(g, toLong).persist(StorageLevel.MEMORY_AND_DISK))
-    try {
-      labelPropagation(edges, verts.select(col("vid"), col("vid").as("lbl")), rounds)
-        .join(verts, Seq("vid")).select(col("id"), col("lbl").as("label"))
-    } finally {
-      verts.unpersist()
-      if (symEdges.isEmpty) edges.unpersist()
+    using(longVerts(g, toLong)) { verts =>
+      def run(edges: DataFrame) =
+        labelPropagation(edges, verts.select(col("vid"), col("vid").as("lbl")), rounds)
+          .join(verts, Seq("vid")).select(col("id"), col("lbl").as("label"))
+      // caller-provided symmetrized edges are caller-owned (persisted next
+      // to the graph tables and reused across calls); the local build is
+      // scoped to this call
+      symEdges match {
+        case Some(edges) => run(edges)
+        case None => using(symmetrizedEdges(g, toLong))(run)
+      }
     }
   }
 
@@ -338,12 +339,7 @@ object GraphAnalytics {
   def shortestPathsDF(g: GraphStore, toLong: Column => Column,
                       landmarks: Seq[Long], maxIters: Int = 50): DataFrame = {
     require(landmarks.nonEmpty, "need at least one landmark")
-    val verts = g.vertices.select(toLong(col("id")).as("vid"), col("id"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val edges = g.edges
-      .select(toLong(col("src")).as("src"), toLong(col("dst")).as("dst"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    try {
+    withLongIds(g, toLong) { (verts, edges) =>
       // landmark ids that are not graph vertices seed nothing (GraphX
       // parity: only vertices can carry the initial 0)
       val seed = verts
@@ -358,7 +354,7 @@ object GraphAnalytics {
         val p = next.agg(count(lit(1)), coalesce(sum("dist"), lit(0L))).first()
         (p.getLong(0), p.getLong(1))
       }).join(verts, Seq("vid")).select(col("id"), col("landmark"), col("dist"))
-    } finally { verts.unpersist(); edges.unpersist() }
+    }
   }
 
   /** Single-source-style shortest paths to a LANDMARK set (GraphX
@@ -376,7 +372,7 @@ object GraphAnalytics {
       .vertices
       .flatMap { case (vid, dists) => dists.map { case (lm, d) => (vid, lm, d.toLong) } }
       .toDF("vid", "landmark", "dist")
-    g.vertices.select(toLong(col("id")).as("vid"), col("id"))
+    longVerts(g, toLong)
       .join(sp, Seq("vid"))
       .select(col("id"), col("landmark"), col("dist"))
   }
@@ -735,8 +731,8 @@ object GraphAnalytics {
                               onBarrier: (Int, DataFrame, DataFrame) => Unit =
                                 (_, _, _) => ()): DataFrame = {
     require(walkLen >= 1, s"need walkLen >= 1; got $walkLen")
-    val fam = w.copy(adj = w.adj.persist(StorageLevel.MEMORY_AND_DISK))
-    try {
+    using(w.adj) { adj =>
+      val fam = w.copy(adj = adj)
       val start = walkStart(fam)
       // parked = finished-walk frames split out at checkpoint barriers;
       // each is a narrow filter over an already-materialized checkpoint,
@@ -752,7 +748,7 @@ object GraphAnalytics {
         .select(col("walk_id"), posexplode(col("__path")))
         .select(col("walk_id"), col("pos").cast("long").as("step"),
           col("col").as("node"))
-    } finally fam.adj.unpersist()
+    }
   }
 
   /** Deterministic SGNS negative-sampling table over a skip-gram pair
@@ -789,11 +785,10 @@ object GraphAnalytics {
     require(k >= 1, s"need k >= 1; got $k")
     // vocabulary-sized, consumed by the total AND the ladder: checkpoint
     // once instead of re-aggregating the pair table per consumer
-    val wt = pairs.groupBy("context").agg(sum("n_pairs").as("__nx"))
+    val wt = checkpoint(pairs.groupBy("context").agg(sum("n_pairs").as("__nx"))
       .select(col("context"),
         floor(sqrt(sqrt(col("__nx")) * sqrt(col("__nx")) * sqrt(col("__nx")))
-          * lit(1000.0) + lit(0.5)).cast("long").as("__w"))
-      .localCheckpoint(true)
+          * lit(1000.0) + lit(0.5)).cast("long").as("__w")))
     val totRow = wt.agg(sum("__w"), max("__w"), count(lit(1))).first()
     require(!totRow.isNullAt(0), "sgnsNegatives: empty pair table")
     val tot = totRow.getLong(0)
@@ -916,12 +911,7 @@ object GraphAnalytics {
     * report hub (resp. auth) 0. Returns (id, hub, auth). */
   def hitsDF(g: GraphStore, toLong: Column => Column, numIter: Int = 2): DataFrame = {
     require(numIter >= 1, s"need numIter >= 1; got $numIter")
-    val verts = g.vertices.select(toLong(col("id")).as("vid"), col("id"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val edges = g.edges
-      .select(toLong(col("src")).as("src"), toLong(col("dst")).as("dst"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    try {
+    withLongIds(g, toLong) { (verts, edges) =>
       // Overflow guard: iterates grow like λ_max^numIter, and a plain
       // sum(Long) would WRAP silently and return wrong rankings. try_sum
       // yields NULL on Long overflow instead; scores entering the sum are
@@ -931,7 +921,7 @@ object GraphAnalytics {
       // round, never as wrapped scores. Cost: one limit-1 scan of a
       // v-row cached frame per half-round.
       def guarded(scores: DataFrame, c: String, round: Int): DataFrame = {
-        val out = scores.localCheckpoint(true)
+        val out = checkpoint(scores)
         if (out.where(col(c).isNull).limit(1).count() > 0)
           throw new ArithmeticException(
             s"hitsDF: Long overflow in '$c' at iteration $round (scores " +
@@ -939,8 +929,8 @@ object GraphAnalytics {
         out
       }
       // round 1 folds a₀ ≡ 1 into a plain degree count
-      var h = edges.groupBy(col("src").as("vid"))
-        .agg(count(lit(1)).as("h")).localCheckpoint(true)
+      var h = checkpoint(edges.groupBy(col("src").as("vid"))
+        .agg(count(lit(1)).as("h")))
       var a = guarded(edges.join(h.select(col("vid").as("src"), col("h")), Seq("src"))
         .groupBy(col("dst").as("vid")).agg(try_sum(col("h")).as("a")), "a", 1)
       for (i <- 2 to numIter) {
@@ -954,7 +944,7 @@ object GraphAnalytics {
         .join(a, Seq("vid"), "left")
         .select(col("id"), coalesce(col("h"), lit(0L)).as("hub"),
           coalesce(col("a"), lit(0L)).as("auth"))
-    } finally { verts.unpersist(); edges.unpersist() }
+    }
   }
 
   /** Adamic–Adar link prediction over an undirected pair graph (a, b):
@@ -975,45 +965,52 @@ object GraphAnalytics {
     * deg-1 vertices can never be common neighbors and are dropped with
     * the same filter. The final top-k is TakeOrdered (per-partition
     * heaps), never a full sort. Returns (u, v, n_common, aa_micro). */
-  def adamicAdar(pairs: DataFrame, topK: Int, maxDegree: Int = 1000,
-                 eager: Boolean = true): DataFrame = {
+  def adamicAdar(pairs: DataFrame, topK: Int, maxDegree: Int = 1000): DataFrame = {
     require(topK > 0, s"need topK > 0; got $topK")
     require(maxDegree >= 2, s"need maxDegree >= 2; got $maxDegree")
-    val e0 = pairs.select(col("a").cast("long").as("u"), col("b").cast("long").as("v"))
-    val canon = e0.where(col("u") =!= col("v"))
-      .select(least(col("u"), col("v")).as("a"), greatest(col("u"), col("v")).as("b"))
-      .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      val sym = canon.unionByName(canon.select(col("b").as("a"), col("a").as("b")))
-      val zw = sym.groupBy(col("a").as("z")).agg(count(lit(1)).as("__deg"))
-        .where(col("__deg") >= 2 && col("__deg") <= maxDegree)
-        .select(col("z"),
-          floor(lit(1000000.0) / log(col("__deg").cast("double")) + 0.5)
-            .cast("long").as("__w"))
+    using(canonicalPairs(pairs)) { canon =>
       // adjacency rows of capped-degree centers feed BOTH wedge sides —
       // persist once, the self-join otherwise recomputes the deg join per
       // side (identical sibling subtrees, same trap as the verify sets)
-      val adj = sym.select(col("a").as("z"), col("b").as("n"))
-        .join(zw, Seq("z"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      try {
-        adj.count() // eager fill: both wedge sides are concurrent cold consumers
-        val scored = adj.select(col("z"), col("n").as("u"), col("__w"))
-          .join(adj.select(col("z"), col("n").as("v")), Seq("z"))
-          .where(col("u") < col("v"))
-          .groupBy("u", "v")
-          .agg(count(lit(1)).as("n_common"), sum("__w").as("aa_micro"))
-        val out = scored
-          .join(canon, scored("u") === canon("a") && scored("v") === canon("b"),
-            "left_anti")
-          .orderBy(desc("aa_micro"), col("u").asc, col("v").asc)
-          .limit(topK)
-        // eager=false keeps the live plan inspectable (plan-shape tests);
-        // the default checkpoint cuts lineage above the persisted frames
-        if (eager) out.localCheckpoint(true) else out
-      } finally adj.unpersist()
-    } finally canon.unpersist()
+      using(adamicAdarAdjacency(canon, maxDegree), fill = true) { adj =>
+        checkpoint(adamicAdarTopK(canon, adj, topK))
+      }
+    }
+  }
+
+  /** The undirected simple-graph form of an (a, b) pair table: ids cast
+    * to long, self-loops dropped, one (a < b) row per edge. */
+  private[graft] def canonicalPairs(pairs: DataFrame): DataFrame =
+    pairs.select(col("a").cast("long").as("u"), col("b").cast("long").as("v"))
+      .where(col("u") =!= col("v"))
+      .select(least(col("u"), col("v")).as("a"), greatest(col("u"), col("v")).as("b"))
+      .distinct()
+
+  /** [[adamicAdar]]'s wedge-center adjacency over canonical pairs: (z, n,
+    * __w) for every neighbor n of a center z with 2 ≤ deg(z) ≤ maxDegree,
+    * __w = z's quantized 1/ln(deg z) weight. */
+  private[graft] def adamicAdarAdjacency(canon: DataFrame, maxDegree: Int): DataFrame = {
+    val sym = canon.unionByName(canon.select(col("b").as("a"), col("a").as("b")))
+    val zw = sym.groupBy(col("a").as("z")).agg(count(lit(1)).as("__deg"))
+      .where(col("__deg") >= 2 && col("__deg") <= maxDegree)
+      .select(col("z"),
+        floor(lit(1000000.0) / log(col("__deg").cast("double")) + 0.5)
+          .cast("long").as("__w"))
+    sym.select(col("a").as("z"), col("b").as("n")).join(zw, Seq("z"))
+  }
+
+  /** [[adamicAdar]]'s live body: the wedge self-join over `adj`, the
+    * adjacency anti-join against `canon`, and the top-`topK` selection. */
+  private[graft] def adamicAdarTopK(canon: DataFrame, adj: DataFrame, topK: Int): DataFrame = {
+    val scored = adj.select(col("z"), col("n").as("u"), col("__w"))
+      .join(adj.select(col("z"), col("n").as("v")), Seq("z"))
+      .where(col("u") < col("v"))
+      .groupBy("u", "v")
+      .agg(count(lit(1)).as("n_common"), sum("__w").as("aa_micro"))
+    scored
+      .join(canon, scored("u") === canon("a") && scored("v") === canon("b"), "left_anti")
+      .orderBy(desc("aa_micro"), col("u").asc, col("v").asc)
+      .limit(topK)
   }
 
   /** Vertices of the k-core: the maximal induced subgraph in which every
@@ -1036,13 +1033,8 @@ object GraphAnalytics {
     * (vid) column. */
   def kCore(pairs: DataFrame, k: Int, maxIters: Int = 100): DataFrame = {
     require(k >= 1, s"need k >= 1; got $k")
-    val e0 = pairs.select(col("a").cast("long").as("u"), col("b").cast("long").as("v"))
-    val canon = e0.where(col("u") =!= col("v"))
-      .select(least(col("u"), col("v")).as("a"), greatest(col("u"), col("v")).as("b"))
-      .distinct()
-    val sym = canon.unionByName(canon.select(col("b").as("a"), col("a").as("b")))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    try {
+    val canon = canonicalPairs(pairs)
+    using(canon.unionByName(canon.select(col("b").as("a"), col("a").as("b")))) { sym =>
       Superstep.fixpoint(sym.select(col("a").as("vid")).distinct(), maxIters,
           "k-core peeling") { (live, _) =>
         sym
@@ -1051,17 +1043,16 @@ object GraphAnalytics {
           .groupBy(col("a").as("vid")).agg(count(lit(1)).as("__deg"))
           .where(col("__deg") >= k)
       }(Superstep.unchanged(_.count())).select(col("vid"), col("__deg").as("degree"))
-    } finally sym.unpersist()
+    }
   }
 
   /** [[kCore]] over a [[GraphStore]]: canonicalized undirected edges from
     * the store, result mapped back to string vertex ids. */
   def kCoreDF(g: GraphStore, toLong: Column => Column, k: Int,
               maxIters: Int = 100): DataFrame = {
-    val verts = g.vertices.select(toLong(col("id")).as("vid"), col("id"))
     kCore(g.edges.select(toLong(col("src")).as("a"), toLong(col("dst")).as("b")),
         k, maxIters)
-      .join(verts, Seq("vid"))
+      .join(longVerts(g, toLong), Seq("vid"))
       .select(col("id"), col("degree"))
   }
 
@@ -1090,10 +1081,8 @@ object GraphAnalytics {
   def weightedShortestPathsDF(edges: DataFrame, landmarks: Seq[Long],
                               maxIters: Int = 50): DataFrame = {
     require(landmarks.nonEmpty, "need at least one landmark")
-    val e = edges.select(col("src").cast("long"), col("dst").cast("long"),
-        col("weight").cast("decimal(28,6)").as("weight"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    try {
+    using(edges.select(col("src").cast("long"), col("dst").cast("long"),
+        col("weight").cast("decimal(28,6)").as("weight"))) { e =>
       val spark = edges.sparkSession
       import spark.implicits._
       val seed = landmarks.toDF("vid")
@@ -1110,7 +1099,7 @@ object GraphAnalytics {
         val p = next.agg(count(lit(1)), coalesce(sum("dist"), lit(BigDecimal(0)))).first()
         (p.getLong(0), BigDecimal(p.getDecimal(1)))
       }).select(col("vid"), col("landmark"), col("dist").cast("double").as("dist"))
-    } finally e.unpersist()
+    }
   }
 
   /** DataFrame-native per-vertex triangle count — [[triangleCount]]
@@ -1132,18 +1121,16 @@ object GraphAnalytics {
     * joins are equi-joins on vertex keys; corner counts are a
     * map-side-combinable sum over the three exploded corners. */
   def triangleCountDF(g: GraphStore, toLong: Column => Column): DataFrame = {
-    val verts = g.vertices.select(toLong(col("id")).as("vid"), col("id"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
     val e0 = g.edges.select(toLong(col("src")).as("u"), toLong(col("dst")).as("v"))
-    val canon = e0.where(col("u") =!= col("v"))
-      .select(least(col("u"), col("v")).as("a"), greatest(col("u"), col("v")).as("b"))
-      .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      val (corners, _) = triangleCorners(canon)
-      verts.join(corners, Seq("vid"), "left")
-        .select(col("id"), coalesce(col("__n"), lit(0L)).as("triangles"))
-    } finally { verts.unpersist(); canon.unpersist() }
+    using(longVerts(g, toLong)) { verts =>
+      using(e0.where(col("u") =!= col("v"))
+          .select(least(col("u"), col("v")).as("a"), greatest(col("u"), col("v")).as("b"))
+          .distinct()) { canon =>
+        val (corners, _) = triangleCorners(canon)
+        verts.join(corners, Seq("vid"), "left")
+          .select(col("id"), coalesce(col("__n"), lit(0L)).as("triangles"))
+      }
+    }
   }
 
   /** Leiden-style partition refinement (the core fix of Traag et al.
@@ -1163,7 +1150,7 @@ object GraphAnalytics {
     * most of a real graph's — never enter the iteration), one left join
     * for isolated members. Returns (vid, label). */
   def refineCommunities(labels: DataFrame, symEdges: DataFrame): DataFrame = {
-    val lab = checkpointScrubbed(labels.select(col("vid"), col("label")))
+    val lab = checkpoint(labels.select(col("vid"), col("label")))
     val intra = symEdges
       .join(lab.select(col("vid").as("a"), col("label").as("__la")), Seq("a"))
       .join(lab.select(col("vid").as("b"), col("label").as("__lb")), Seq("b"))
@@ -1192,7 +1179,7 @@ object GraphAnalytics {
     // oriented: s→t with (deg, id)-struct(s) < struct(t); __kt carries
     // t's sort key so the wedge join can order (t1, t2) without a
     // second degree lookup. Materialized once — it feeds three scans.
-    val oriented = checkpointScrubbed(keyed.select(
+    val oriented = checkpoint(keyed.select(
       when(aLower, col("a")).otherwise(col("b")).as("s"),
       when(aLower, col("b")).otherwise(col("a")).as("t"),
       when(aLower, struct(col("__db").as("d"), col("b").as("v")))
@@ -1257,10 +1244,9 @@ object GraphAnalytics {
       .join(deg.select(col("vid").as("a"), col("__deg").as("__da")), Seq("a"))
       .join(deg.select(col("vid").as("b"), col("__deg").as("__db")), Seq("b"))
     val aLower = struct(col("__da"), col("a")) < struct(col("__db"), col("b"))
-    val oriented = keyed.select(
+    val oriented = checkpoint(keyed.select(
       when(aLower, col("a")).otherwise(col("b")).as("s"),
-      when(aLower, col("b")).otherwise(col("a")).as("t"))
-      .localCheckpoint(true)
+      when(aLower, col("b")).otherwise(col("a")).as("t")))
     // wedges from each apex s; the probe on the ORIENTED (t1 -> t2)
     // edge admits exactly one of the pair's two orderings
     val wedges = oriented
@@ -1302,8 +1288,8 @@ object GraphAnalytics {
     // the edge frame feeds three scans (degrees, M, link counts) and the
     // label frame two — materialize both once so an expensive upstream
     // build (the co-purchase self-join) isn't recomputed per scan
-    val se = symEdges.localCheckpoint(true)
-    val lab = labels.select(col("vid"), col("label")).localCheckpoint(true)
+    val se = checkpoint(symEdges)
+    val lab = checkpoint(labels.select(col("vid"), col("label")))
     val deg = se.groupBy(col("a").as("vid")).agg(count(lit(1)).as("__kv"))
     val dC = lab.join(deg, Seq("vid"), "left")
       .groupBy("label").agg(sum(coalesce(col("__kv"), lit(0L))).as("__dc"))
@@ -1344,12 +1330,12 @@ object GraphAnalytics {
     * with the level inputs prepared exactly as [[louvain]] prepares them. */
   private[graft] def louvainRoundPlanForDump(symEdges: DataFrame): DataFrame = {
     val hasW = symEdges.columns.contains("w")
-    val e = checkpointScrubbed(symEdges.select(col("a").cast("long").as("a"),
+    val e = checkpoint(symEdges.select(col("a").cast("long").as("a"),
       col("b").cast("long").as("b"),
       (if (hasW) col("w").cast("long") else lit(1L)).as("w")))
-    val deg = checkpointScrubbed(e.groupBy(col("a").as("vid")).agg(sum("w").as("__kv")))
-    val bigM = checkpointScrubbed(e.agg(sum("w").as("__M")))
-    val lab = checkpointScrubbed(deg.select(col("vid"), col("vid").as("label")))
+    val deg = checkpoint(e.groupBy(col("a").as("vid")).agg(sum("w").as("__kv")))
+    val bigM = checkpoint(e.agg(sum("w").as("__M")))
+    val lab = checkpoint(deg.select(col("vid"), col("vid").as("label")))
     louvainParityRound(lab, e, deg, bigM, 0)
   }
 
@@ -1447,33 +1433,33 @@ object GraphAnalytics {
     require(maxLevels >= 1, s"need maxLevels >= 1; got $maxLevels")
     require(maxRounds >= 2, s"need maxRounds >= 2; got $maxRounds")
     val hasW = symEdges.columns.contains("w")
-    var e = checkpointScrubbed(symEdges.select(col("a").cast("long").as("a"),
+    var e = checkpoint(symEdges.select(col("a").cast("long").as("a"),
       col("b").cast("long").as("b"),
       (if (hasW) col("w").cast("long") else lit(1L)).as("w")))
     var mapping: DataFrame = null
     var level = 0
     var levelMoved = true
     while (level < maxLevels && levelMoved) {
-      val deg = checkpointScrubbed(e.groupBy(col("a").as("vid")).agg(sum("w").as("__kv")))
-      val bigM = checkpointScrubbed(e.agg(sum("w").as("__M")))
-      var lab = checkpointScrubbed(deg.select(col("vid"), col("vid").as("label")))
+      val deg = checkpoint(e.groupBy(col("a").as("vid")).agg(sum("w").as("__kv")))
+      val bigM = checkpoint(e.agg(sum("w").as("__M")))
+      var lab = checkpoint(deg.select(col("vid"), col("vid").as("label")))
       var round = 0
       var zeroStreak = 0
       while (round < maxRounds && zeroStreak < 2) {
-        val next = checkpointScrubbed(louvainParityRound(lab, e, deg, bigM, round % 2))
+        val next = checkpoint(louvainParityRound(lab, e, deg, bigM, round % 2))
         val moved = next.agg(coalesce(sum("__moved"), lit(0L))).head().getLong(0)
         zeroStreak = if (moved == 0L) zeroStreak + 1 else 0
         lab = next.select("vid", "label")
         round += 1
       }
       levelMoved = lab.where(col("label") =!= col("vid")).limit(1).count() > 0
-      mapping = checkpointScrubbed(
+      mapping = checkpoint(
         if (mapping == null) lab
         else mapping.select(col("vid"), col("label").as("__mid"))
           .join(lab.select(col("vid").as("__mid"), col("label")), Seq("__mid"))
           .select("vid", "label"))
       if (levelMoved && level + 1 < maxLevels) {
-        e = checkpointScrubbed(
+        e = checkpoint(
           e.join(lab.select(col("vid").as("a"), col("label").as("__ca")), Seq("a"))
             .join(lab.select(col("vid").as("b"), col("label").as("__cb")), Seq("b"))
             .groupBy(col("__ca").as("a"), col("__cb").as("b"))
@@ -1528,21 +1514,21 @@ object GraphAnalytics {
     require(maxLevels >= 1, s"need maxLevels >= 1; got $maxLevels")
     require(maxRounds >= 2, s"need maxRounds >= 2; got $maxRounds")
     val hasW = symEdges.columns.contains("w")
-    var e = checkpointScrubbed(symEdges.select(col("a").cast("long").as("a"),
+    var e = checkpoint(symEdges.select(col("a").cast("long").as("a"),
       col("b").cast("long").as("b"),
       (if (hasW) col("w").cast("long") else lit(1L)).as("w")))
     var map: DataFrame = null  // (vid, cur): original vid -> current-level vertex
     var init: DataFrame = null // (vid, label): this level's starting communities
     var lab: DataFrame = null
     for (level <- 1 to maxLevels) {
-      val deg = checkpointScrubbed(e.groupBy(col("a").as("vid")).agg(sum("w").as("__kv")))
-      val bigM = checkpointScrubbed(e.agg(sum("w").as("__M")))
-      lab = checkpointScrubbed(
+      val deg = checkpoint(e.groupBy(col("a").as("vid")).agg(sum("w").as("__kv")))
+      val bigM = checkpoint(e.agg(sum("w").as("__M")))
+      lab = checkpoint(
         if (init == null) deg.select(col("vid"), col("vid").as("label")) else init)
       var round = 0
       var zeroStreak = 0
       while (round < maxRounds && zeroStreak < 2) {
-        val next = checkpointScrubbed(louvainParityRound(lab, e, deg, bigM, round % 2))
+        val next = checkpoint(louvainParityRound(lab, e, deg, bigM, round % 2))
         val moved = next.agg(coalesce(sum("__moved"), lit(0L))).head().getLong(0)
         zeroStreak = if (moved == 0L) zeroStreak + 1 else 0
         lab = next.select("vid", "label")
@@ -1551,20 +1537,20 @@ object GraphAnalytics {
       if (level < maxLevels) {
         // refine on the MOVE-phase partition (self-loops excluded: the
         // diagonal carries coarse intra WEIGHT, not adjacency)
-        val frag = checkpointScrubbed(
+        val frag = checkpoint(
           refineCommunities(lab, e.where(col("a") =!= col("b")).select("a", "b"))
             .withColumnRenamed("label", "__frag"))
         // every fragment starts the next level in its HOME community —
         // fragments never straddle communities, so members agree on the
         // label (min is determinism belt-and-braces, not a choice)
-        init = checkpointScrubbed(
+        init = checkpoint(
           frag.join(lab, Seq("vid"))
             .groupBy(col("__frag").as("vid")).agg(min("label").as("label")))
-        map = checkpointScrubbed(
+        map = checkpoint(
           if (map == null) frag.select(col("vid"), col("__frag").as("cur"))
           else map.join(frag.select(col("vid").as("cur"), col("__frag")), Seq("cur"))
             .select(col("vid"), col("__frag").as("cur")))
-        e = checkpointScrubbed(
+        e = checkpoint(
           e.join(frag.select(col("vid").as("a"), col("__frag").as("__fa")), Seq("a"))
             .join(frag.select(col("vid").as("b"), col("__frag").as("__fb")), Seq("b"))
             .groupBy(col("__fa").as("a"), col("__fb").as("b"))
@@ -1629,10 +1615,9 @@ object GraphAnalytics {
     * in > 4.6e12 triangles). Returns (vid, degree, triangles,
     * coeff_micro). */
   def clusteringCoefficients(edges: DataFrame): DataFrame = {
-    val canon = edges.select(col("a"), col("b")).where(col("a") =!= col("b"))
+    val canon = checkpoint(edges.select(col("a"), col("b")).where(col("a") =!= col("b"))
       .select(least(col("a"), col("b")).as("a"), greatest(col("a"), col("b")).as("b"))
-      .distinct()
-      .localCheckpoint(true)
+      .distinct())
     val (corners, deg) = triangleCorners(canon)
     deg.join(corners, Seq("vid"), "left")
       .select(col("vid"), col("__deg").as("degree"),
@@ -1672,7 +1657,7 @@ object GraphAnalytics {
     // the edge frame is read three times (degree pass + both decoration
     // joins); materialize it once so an expensive upstream build (e.g. the
     // co-purchase self-join) isn't recomputed per scan
-    val se = symEdges.localCheckpoint(true)
+    val se = checkpoint(symEdges)
     val deg = se.groupBy(col("a").as("__v")).agg(count(lit(1)).as("__deg"))
     val scored = se
       .join(deg.select(col("__v").as("a"), col("__deg").as("__da")), Seq("a"))
@@ -1750,7 +1735,7 @@ object GraphAnalytics {
     import spark.implicits._
     val tc = graph.triangleCount().vertices
       .map { case (vid, n) => (vid, n) }.toDF("vid", "triangles")
-    g.vertices.select(toLong(col("id")).as("vid"), col("id"))
+    longVerts(g, toLong)
       .join(tc, Seq("vid"))
       .select(col("id"), col("triangles"))
   }

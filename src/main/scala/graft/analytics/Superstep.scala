@@ -1,6 +1,7 @@
 package graft.analytics
 
-import org.apache.spark.sql.{DataFrame, GraftSqlBridge}
+import org.apache.spark.sql.DataFrame
+import graft.Materialize.checkpoint
 
 /** The superstep kernel of graft's iterative graph algorithms: every
   * ported vertex program is a `step` — one join + group-by dataflow over
@@ -18,15 +19,16 @@ import org.apache.spark.sql.{DataFrame, GraftSqlBridge}
   *     step, a LAZY checkpoint, and the probe — the round's one Spark
   *     action, which also materializes the checkpoint.
   *
-  * Every per-round checkpoint is [[checkpointScrubbed]]: a deep loop over
-  * plain `localCheckpoint` compounds plan statistics round over round
-  * (SCALE.md, "localCheckpoint stats explosion").
+  * Every per-round checkpoint is [[graft.Materialize.checkpoint]], whose
+  * capped size estimate keeps a deep loop's plan statistics from
+  * compounding round over round (SCALE.md, "localCheckpoint stats
+  * explosion").
   */
 object Superstep {
 
   /** `n` rounds of `step(state, round)`, rounds numbered 1..n, starting
     * from `init` as given. Every `every`-th round and the last end in an
-    * eager [[checkpointScrubbed]]; the rounds between chain lazily, so
+    * eager checkpoint; the rounds between chain lazily, so
     * plan depth stays bounded by `every`. `barrier(settled, round)` sees
     * each materialized round and returns the state the next round reads
     * (the walks split finished walks out there). */
@@ -35,7 +37,7 @@ object Superstep {
             (step: (DataFrame, Int) => DataFrame): DataFrame =
     (1 to n).foldLeft(init) { (cur, i) =>
       val next = step(cur, i)
-      if (i % every == 0 || i == n) barrier(checkpointScrubbed(next), i) else next
+      if (i % every == 0 || i == n) barrier(checkpoint(next), i) else next
     }
 
   /** Rounds of `step(state, round)` from `init` (eagerly materialized
@@ -48,12 +50,12 @@ object Superstep {
   def fixpoint(init: DataFrame, maxIters: Int, what: String)
               (step: (DataFrame, Int) => DataFrame)
               (probe: DataFrame => Boolean): DataFrame = {
-    var cur = checkpointScrubbed(init)
+    var cur = checkpoint(init)
     var converged = false
     var round = 0
     while (!converged && round < maxIters) {
       round += 1
-      cur = checkpointScrubbed(step(cur, round), eager = false)
+      cur = checkpoint(step(cur, round), eager = false)
       converged = probe(cur)
     }
     require(converged, s"$what did not converge in $maxIters rounds")
@@ -73,19 +75,4 @@ object Superstep {
       same
     }
   }
-
-  /** localCheckpoint + STATS SCRUB: the LogicalRDD a checkpoint produces
-    * PRESERVES the origin plan's sizeInBytes estimate, so a loop that
-    * checkpoints a ~J-join plan every round compounds a J-fold BigInt
-    * size product per round — by round ~10 query planning spends minutes
-    * multiplying million-digit stats inside SizeInBytesOnlyStatsPlanVisitor
-    * (observed wedging the louvain spec on a 6-node graph). The scrub caps
-    * the inherited estimate at `spark.sql.defaultSizeInBytes`, the estimate
-    * of a frame without statistics, so no product can compound across
-    * rounds; a sane estimate passes through, and with it the join choice a
-    * plain checkpoint would get (a small frontier still broadcasts). Lazy
-    * (`eager = false`) checkpoints materialize on the first action over
-    * the returned frame. */
-  def checkpointScrubbed(df: DataFrame, eager: Boolean = true): DataFrame =
-    GraftSqlBridge.capSizeEstimate(df.localCheckpoint(eager))
 }

@@ -2,6 +2,7 @@ package graft.exec
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.Materialize.checkpoint
 import graft.model.GraphStore
 import graft.ql._
 
@@ -287,12 +288,12 @@ final class ZoeCompiler(g: GraphStore, initialVariables: Map[String, String] = M
   // ---- result assembly ----
 
   // Assembly reads the traversal up to 3x (ids, stores, paths).
-  // localCheckpoint materializes it exactly once; unlike session-lifetime
-  // .cache() (which evicted the shared graph tables and caused recompute
+  // A checkpoint materializes it exactly once; unlike a session-lifetime
+  // cache (which evicted the shared graph tables and caused recompute
   // storms) the checkpoint blocks are released with the RDD when the result
   // is garbage-collected.
   private def assembleV(df: DataFrame): ZoeResult = {
-    val d = df.localCheckpoint(eager = true)
+    val d = checkpoint(df)
     val vs = d.select("id")
       .unionByName(liveStoreIds(d, "v_store", vStoreTables))
       .distinct()
@@ -304,7 +305,7 @@ final class ZoeCompiler(g: GraphStore, initialVariables: Map[String, String] = M
   }
 
   private def assembleE(df: DataFrame): ZoeResult = {
-    val d = df.localCheckpoint(eager = true)
+    val d = checkpoint(df)
     val es = d.select("id")
       .unionByName(liveStoreIds(d, "e_store", eStoreTables))
       .distinct()
@@ -372,8 +373,7 @@ final class ZoeCompiler(g: GraphStore, initialVariables: Map[String, String] = M
     // localCheckpoint (not cache): __pid must be stable across reads, and
     // the checkpoint is dropped with the RDD instead of occupying session
     // cache space
-    val pathsId = r.paths.withColumn("__pid", monotonically_increasing_id())
-      .localCheckpoint(eager = true)
+    val pathsId = checkpoint(r.paths.withColumn("__pid", monotonically_increasing_id()))
 
     // The start-edge property (position -1, edge slot only) and end-vertex
     // property (position MAX, vertex slot only) are FUSED into the exploded

@@ -3,6 +3,7 @@ package graft.model
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.Materialize.persist
 
 /** Content-addressed hashing, matching the reference's key scheme:
   * uppercase-hex SHA-256 of the serialized bytes
@@ -139,7 +140,7 @@ final case class GraphStore(
     propRefs: DataFrame) {
 
   def persistAll(): GraphStore =
-    GraphStore(vertices.cache(), edges.cache(), props.cache(), propRefs.cache())
+    GraphStore(persist(vertices), persist(edges), persist(props), persist(propRefs))
 
   /** Persist the four tables. Writes stage into `<name>._tmp` and swap in
     * afterwards, so saving a store whose plans READ from the same path

@@ -2,6 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.Materialize.checkpoint
 import graft.functions.VectorFunctions.dotNative
 
 /** Deterministic distributed k-means (Lloyd's) over an embedding column —
@@ -37,9 +38,8 @@ object Clustering {
                       k: Int, iters: Int): DataFrame = {
     require(k > 0 && iters >= 0, s"need k > 0, iters >= 0; got k=$k iters=$iters")
     val corpus = df.select(col(idCol).as("__id"), col(vecCol).cast("array<double>").as("__v"))
-    var cents = corpus.orderBy("__id").limit(k)
-      .select(col("__id").as("cid"), col("__v").as("centroid"))
-      .localCheckpoint(true)
+    var cents = checkpoint(corpus.orderBy("__id").limit(k)
+      .select(col("__id").as("cid"), col("__v").as("centroid")))
     (0 until iters).foreach { _ =>
       val assigned = assign(corpus, cents)
       val sums = assigned
@@ -51,9 +51,8 @@ object Clustering {
       val fresh = sums.groupBy("cid")
         .agg(transform(array_sort(collect_list(struct(col("pos"), col("m")))),
           x => x.getField("m")).as("fresh"))
-      cents = cents.join(fresh, Seq("cid"), "left")
-        .select(col("cid"), coalesce(col("fresh"), col("centroid")).as("centroid"))
-        .localCheckpoint(true)
+      cents = checkpoint(cents.join(fresh, Seq("cid"), "left")
+        .select(col("cid"), coalesce(col("fresh"), col("centroid")).as("centroid")))
     }
     cents
   }
@@ -282,9 +281,8 @@ object Clustering {
     * row id. */
   def covariance(df: DataFrame, vecCol: String): DataFrame = {
     // one row; checkpointed because cells and means both consume it
-    val m = df.agg(graft.functions.CovMatrix
-        .covMatrix(col(vecCol).cast("array<double>")).as("__m"))
-      .localCheckpoint(true)
+    val m = checkpoint(df.agg(graft.functions.CovMatrix
+        .covMatrix(col(vecCol).cast("array<double>")).as("__m")))
     val pairs = m.select(explode(col("__m.cells")).as("e"))
       .select(col("e.i").as("i"), col("e.j").as("j"),
         col("e.n").as("n_vals"), col("e.sxy").as("__sxy"))
@@ -327,12 +325,10 @@ object Clustering {
     * iteration's product AND its max) would otherwise re-run the whole
     * scan as the plan tree doubled per iteration. */
   private def symmetricCov(df: DataFrame, vecCol: String): DataFrame = {
-    val cov = covariance(df, vecCol).select(col("i"), col("j"), col("cov"))
-      .localCheckpoint(true)
-    cov.unionByName(
+    val cov = checkpoint(covariance(df, vecCol).select(col("i"), col("j"), col("cov")))
+    checkpoint(cov.unionByName(
       cov.where(col("i") =!= col("j"))
-        .select(col("j").as("i"), col("i").as("j"), col("cov")))
-      .localCheckpoint(true)
+        .select(col("j").as("i"), col("i").as("j"), col("cov"))))
   }
 
   /** Power iteration v ← C·v from v₀ = 1⃗ over an (i, j, cov) matrix frame,
@@ -347,11 +343,10 @@ object Clustering {
     var v = full.select(col("i").as("d")).distinct().withColumn("v", lit(1.0))
     for (_ <- 0 until iters) {
       // checkpoint each d-row iterate too: the rescale reads it twice
-      val w = full.join(broadcast(v.select(col("d").as("j"), col("v"))), Seq("j"))
+      val w = checkpoint(full.join(broadcast(v.select(col("d").as("j"), col("v"))), Seq("j"))
         .groupBy("i")
         .agg(sum((col("cov") * col("v")).cast("decimal(30,10)")).as("__s"))
-        .select(col("i").as("d"), col("__s").cast("double").as("v"))
-        .localCheckpoint(true)
+        .select(col("i").as("d"), col("__s").cast("double").as("v")))
       // rescale to max|v| = 1 every round: eigenvalues < 1 would otherwise
       // shrink v into the DECIMAL(30,10) quantum and the next product sum
       // would lose relative precision (max/divide are exact double ops, so
@@ -410,7 +405,7 @@ object Clustering {
       p: Int, iters: Int, needLambda: Boolean = true): Seq[(DataFrame, DataFrame)] = {
     var cur = symmetricCov(df, vecCol)
     (0 until p).map { k =>
-      val lk = normalizedLoadings(powerIterate(cur, iters)).localCheckpoint(true)
+      val lk = checkpoint(normalizedLoadings(powerIterate(cur, iters)))
       val vi = broadcast(lk.select(col("d").as("i"), col("loading").as("__vi")))
       val vj = broadcast(lk.select(col("d").as("j"), col("loading").as("__vj")))
       val lamLazy = cur.join(vi, Seq("i")).join(vj, Seq("j"))
@@ -421,13 +416,12 @@ object Clustering {
       // callers (needLambda) read every λ including the last. pcaProject
       // passes needLambda=false, so its final component's λ frame stays
       // lazy and discarding it costs zero scheduled jobs.
-      val lam = if (k < p - 1 || needLambda) lamLazy.localCheckpoint(true)
+      val lam = if (k < p - 1 || needLambda) checkpoint(lamLazy)
                 else lamLazy
       if (k < p - 1) {
-        cur = cur.join(vi, Seq("i")).join(vj, Seq("j")).crossJoin(broadcast(lam))
+        cur = checkpoint(cur.join(vi, Seq("i")).join(vj, Seq("j")).crossJoin(broadcast(lam))
           .select(col("i"), col("j"),
-            (col("cov") - col("__lam") * col("__vi") * col("__vj")).as("cov"))
-          .localCheckpoint(true)
+            (col("cov") - col("__lam") * col("__vi") * col("__vj")).as("cov")))
       }
       (lk.withColumn("component", lit(k.toLong)),
         lam.withColumn("component", lit(k.toLong)))

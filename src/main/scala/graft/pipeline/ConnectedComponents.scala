@@ -2,7 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
+import graft.Materialize.using
 import graft.analytics.Superstep
 
 /** Connected components over an undirected edge list as pure DataFrame
@@ -46,17 +46,15 @@ object ConnectedComponents {
     * any numeric type — cast to long). `cluster` is the minimum node id
     * of the node's connected component. */
   def labels(pairs: DataFrame, maxIters: Int = 50): DataFrame = {
-    val e = pairs.select(col("a").cast("long").as("u"), col("b").cast("long").as("v"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      // materialize the CANONICAL edge list first (round 12): callers may
-      // hand a live propose/verify chain, and the symmetrizing union
-      // below references it twice — on a cold lazy cache both union
-      // branches would compute the whole upstream chain (measured +4 s on
-      // the funnel arm). One eager fill makes the union two cache scans,
-      // lets callers skip their own pre-cc checkpoints entirely, and
-      // caches half the rows the old symmetrized persist held.
-      e.count()
+    // fill the CANONICAL edge list first (round 12): callers may hand a
+    // live propose/verify chain, and the symmetrizing union below
+    // references it twice — on a cold lazy cache both union branches
+    // would compute the whole upstream chain (measured +4 s on the funnel
+    // arm). One eager fill makes the union two cache scans, lets callers
+    // skip their own pre-cc checkpoints entirely, and caches half the rows
+    // the old symmetrized persist held.
+    using(pairs.select(col("a").cast("long").as("u"), col("b").cast("long").as("v")),
+        fill = true) { e =>
       val und = e.unionByName(e.select(col("v").as("u"), col("u").as("v")))
       // Seed with the closed-neighborhood minimum instead of the identity:
       // the groupBy costs exactly what the identity init's distinct() cost
@@ -102,6 +100,6 @@ object ConnectedComponents {
         prop.agg(coalesce(sum(when(col("label") =!= col("__old"), 1L)
           .otherwise(0L)), lit(0L))).first().getLong(0) == 0L
       }.select(col("id"), col("label").as("cluster"))
-    } finally e.unpersist()
+    }
   }
 }

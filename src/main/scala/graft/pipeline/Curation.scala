@@ -3,6 +3,7 @@ package graft.pipeline
 import org.apache.spark.graphx.{Edge, Graph => XGraph}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.Materialize.{checkpoint, using}
 
 /** Corpus-curation operators for training-data pipelines: survivor
   * selection, duplicate clustering, deterministic sampling/splits,
@@ -73,19 +74,16 @@ object Curation {
     // the sizing count and the edge scan share one materialization —
     // without the scoped persist the pair plan (groupBy + join upstream)
     // would execute twice, once for count() and once for the RDD pass
-    val p = pairs.select(col("a").cast("long"), col("b").cast("long"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    using(pairs.select(col("a").cast("long"), col("b").cast("long"))) { p =>
       val parts = math.max(2, math.min(
         spark.sparkContext.defaultParallelism,
         (p.count() / 1000000L).toInt + 1))
       val edges = p.rdd.map(r => Edge(r.getLong(0), r.getLong(1), 1)).coalesce(parts)
-      XGraph.fromEdges(edges, defaultValue = 0)
+      checkpoint(XGraph.fromEdges(edges, defaultValue = 0)
         .connectedComponents().vertices
         .map { case (vid, comp) => (vid, comp) }
-        .toDF("id", "cluster")
-        .localCheckpoint(true)
-    } finally p.unpersist()
+        .toDF("id", "cluster"))
+    }
   }
 
   /** End-to-end NEAR-duplicate curation, the composed 100 TB dedup
@@ -285,13 +283,11 @@ object Curation {
                      n: Int = 5, minDf: Int = 2): DataFrame = {
     require(n >= 2 && minDf >= 2, s"need n >= 2, minDf >= 2; got n=$n minDf=$minDf")
     val nPart = df.sparkSession.sessionState.conf.numShufflePartitions
-    val sh = df
+    val positional = df
       .select(col(idCol),
         posexplode(TextAnalysis.wordShingles(col(textCol), n)).as(Seq("pos", "shingle")))
       .coalesce(nPart)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      sh.count() // eager cache fill — see ngramJaccardOnShingles
+    using(positional, fill = true) { sh =>
       val hot = sh.select(col(idCol), col("shingle")).distinct()
         .groupBy("shingle").agg(count(lit(1)).as("__df"))
         .where(col("__df") >= minDf).select("shingle")
@@ -305,7 +301,7 @@ object Curation {
       // excludes it (hotSpanCoverage applies the same length>0 filter).
       // Positions are unaffected: words() yields "" ONLY as the sole
       // element of the all-separator case, never mid-array.
-      df.select(col(idCol),
+      checkpoint(df.select(col(idCol),
           filter(TextAnalysis.words(col(textCol)), w => length(w) > 0).as("__w"))
         .where(size(col("__w")) > 0)
         .join(cov, Seq(idCol), "left")
@@ -314,9 +310,8 @@ object Curation {
           array_join(filter(col("__w"),
             (_, i) => !array_contains(col("__cov"), i)), " ").as("clean_text"),
           size(col("__w")).cast("long").as("n_tokens"),
-          size(col("__cov")).cast("long").as("n_removed"))
-        .localCheckpoint(true)
-    } finally sh.unpersist()
+          size(col("__cov")).cast("long").as("n_removed")))
+    }
   }
 
   /** Pattern redaction: emails and long digit runs replaced with typed
@@ -708,42 +703,49 @@ object Curation {
     * to the same (score, id) total order the window replays inside the
     * boundary. Returns the kept (groupCol, idCol, tokensCol). */
   def tokenBudgetSelect(df: DataFrame, idCol: String, tokensCol: String,
-                        scoreCol: String, groupCol: String, budget: Long,
-                        eager: Boolean = true): DataFrame = {
+                        scoreCol: String, groupCol: String, budget: Long): DataFrame = {
     require(budget > 0, s"need budget > 0; got $budget")
-    val base = df.select(col(groupCol).as("__g"), col(idCol),
+    // filled: the bucket aggregate and both join-backs share it
+    using(budgetBase(df, idCol, tokensCol, scoreCol, groupCol), fill = true) { base =>
+      checkpoint(budgetKept(base, idCol, budget)
+        .select(col("__g").as(groupCol), col(idCol), col("__tk").as(tokensCol)))
+    }
+  }
+
+  /** [[tokenBudgetSelect]]'s input rows: (__g, idCol, __tk, __sc, __qb),
+    * __qb the quantized score bucket. */
+  private[graft] def budgetBase(df: DataFrame, idCol: String, tokensCol: String,
+                                scoreCol: String, groupCol: String): DataFrame =
+    df.select(col(groupCol).as("__g"), col(idCol),
         col(tokensCol).cast("long").as("__tk"), col(scoreCol).cast("double").as("__sc"))
       .withColumn("__qb", floor(col("__sc") * 10000.0).cast("long"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      base.count() // eager: the bucket aggregate and both join-backs share it
-      val wB = org.apache.spark.sql.expressions.Window
-        .partitionBy("__g").orderBy(col("__qb").desc)
-      // the boundary finder has TWO consumers (whole filter + boundary
-      // filter) — checkpoint the tiny (group × bucket) frame once, or the
-      // prefix-sum subtree plans and runs twice
-      val cum = base.groupBy("__g", "__qb").agg(sum("__tk").as("__bt"))
-        .withColumn("__before", coalesce(sum("__bt").over(
-          wB.rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)),
-          lit(0L)))
-        .localCheckpoint(true)
-      val keptWhole = base.join(
-        cum.where(col("__before") + col("__bt") <= budget).select("__g", "__qb"),
-        Seq("__g", "__qb"), "left_semi")
-      val wD = org.apache.spark.sql.expressions.Window
-        .partitionBy("__g").orderBy(col("__sc").desc, col(idCol).asc)
-      val keptBoundary = base.join(
-          cum.where(col("__before") < budget && col("__before") + col("__bt") > budget)
-            .select(col("__g"), col("__qb"), col("__before")),
-          Seq("__g", "__qb"))
-        .withColumn("__cum", sum("__tk").over(wD))
-        .where(col("__before") + col("__cum") <= budget)
-        .select(col("__g"), col(idCol), col("__tk"), col("__sc"), col("__qb"))
-      val out = keptWhole.unionByName(keptBoundary)
-        .select(col("__g").as(groupCol), col(idCol), col("__tk").as(tokensCol))
-      // eager=false keeps the live plan inspectable (plan-shape tests)
-      if (eager) out.localCheckpoint(true) else out
-    } finally if (eager) base.unpersist()
+
+  /** [[tokenBudgetSelect]]'s live body: the kept [[budgetBase]] rows —
+    * whole buckets inside the budget plus the greedy cut of each group's
+    * boundary bucket. */
+  private[graft] def budgetKept(base: DataFrame, idCol: String, budget: Long): DataFrame = {
+    val wB = org.apache.spark.sql.expressions.Window
+      .partitionBy("__g").orderBy(col("__qb").desc)
+    // the boundary finder has TWO consumers (whole filter + boundary
+    // filter) — checkpoint the tiny (group × bucket) frame once, or the
+    // prefix-sum subtree plans and runs twice
+    val cum = checkpoint(base.groupBy("__g", "__qb").agg(sum("__tk").as("__bt"))
+      .withColumn("__before", coalesce(sum("__bt").over(
+        wB.rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)),
+        lit(0L))))
+    val keptWhole = base.join(
+      cum.where(col("__before") + col("__bt") <= budget).select("__g", "__qb"),
+      Seq("__g", "__qb"), "left_semi")
+    val wD = org.apache.spark.sql.expressions.Window
+      .partitionBy("__g").orderBy(col("__sc").desc, col(idCol).asc)
+    val keptBoundary = base.join(
+        cum.where(col("__before") < budget && col("__before") + col("__bt") > budget)
+          .select(col("__g"), col("__qb"), col("__before")),
+        Seq("__g", "__qb"))
+      .withColumn("__cum", sum("__tk").over(wD))
+      .where(col("__before") + col("__cum") <= budget)
+      .select(col("__g"), col(idCol), col("__tk"), col("__sc"), col("__qb"))
+    keptWhole.unionByName(keptBoundary)
   }
 
   /** JSONL corpus sink + source — the interchange format LLM data
@@ -838,7 +840,6 @@ object Curation {
     // exchanges the old tokenize-once window design required. The 4-row
     // result is checkpointed eagerly so the persists can be released
     // before returning.
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     // cache the INPUT corpus eagerly before anything consumes it: callers
     // hand unions-with-transforms over raw parquet, and the exact-dedup
     // semi-join below references it on BOTH sides — left cold, AQE
@@ -850,122 +851,111 @@ object Curation {
     // k-way union otherwise caches at k× the partition count and every
     // downstream narrow stage pays k× the task overhead.
     val nPart = corpus.sparkSession.sessionState.conf.numShufflePartitions
-    val c0 = corpus.coalesce(nPart).persist(lvl)
-    c0.count()
-    val s1 = dedupExactKeepFirst(c0, idCol, textCol).persist(lvl)
-    s1.count()
-    // ONE per-doc signature+set frame serves BOTH verify stages (round
-    // 12): the near-dup propose/verify reads signatures and Jaccard sets
-    // from it, and the rare-containment arm's verify reads the SAME
-    // __set arrays (identical per doc) — the arm's former
-    // candidate-bounded set aggregation is gone. Built with the
-    // codegen'd aggregation form (measured faster than a row-local
-    // higher-order-function projection — see ngramJaccardViaMinhash) and
-    // only when something consumes it (internal labels or the arm); its
-    // fill is one scan of the cached s1.
-    val perDoc =
-      if (dupLabels.isEmpty || rareShingleArm)
-        Dedup.perDocSigsAndSet(
-          TextAnalysis.shingleRowsDistinct(s1, idCol, textCol, n)
-            .withColumnRenamed(idCol, "doc"), k).persist(lvl)
-      else null
-    if (perDoc != null) perDoc.count() // eager: verify reads it on 2 sides
-    try {
-      {
-        // the near-dup stage (r7-measured 9 s of the funnel's ~15 at sf0.1)
-        // accepts precomputed duplicate-cluster labels: labels over the RAW
-        // corpus are drop-equivalent on exact survivors (an exact-copy node
-        // has the same text as its original, so it adds no connectivity
-        // among survivors and never owns a component minimum), which lets a
-        // session that also runs the dup-cluster queries share ONE
-        // LSH+verify+cc pass via the caller's memo
-        // the verified pair list rides LAZILY into cc: labels() persists
-        // the symmetrized edges and its seed aggregation is their single
-        // first consumer, so the propose/verify chain runs exactly once
-        // during that fill — a checkpoint here would be one extra job
-        // re-scanning what the cc cache is about to hold anyway
-        val labels = dupLabels.getOrElse {
-          ConnectedComponents.labels(
-            Dedup.verifyJaccard(perDoc, Dedup.bandedCandidates(perDoc, k), minSim)
-              .select("a", "b"))
-        }
-        val drop = labels
-          .where(col("id") =!= col("cluster"))
-          .select(col("id").as("__drop_id"))
-        val s2 = s1.join(drop, s1(idCol).cast("long") === col("__drop_id"),
-          "left_anti").persist(lvl)
-        try {
-          // eager fill: s2 feeds several branches of the ONE final
-          // checkpoint job (its stage count, the decontam semi-join, the
-          // s3 anti-join, and the arm when on) — concurrent branches over
-          // a cold cache each recompute the anti-join (the measured ~25%
-          // composed-pipeline overhead), so materialize once up front
-          s2.count()
-          // optional containment recall arm: cluster engulfed-prefix pairs
-          // over the near-dup survivors, keep the min-id member per
-          // cluster. Shingles come from the funnel-shared cached table,
-          // narrowed to near-dup survivors — no second text scan
-          val s2b = if (!rareShingleArm) s2 else {
-            // FUSED arm (round 12): propose rare-df pairs from the shared
-            // shingle cache narrowed to near-dup survivors (one shuffle),
-            // then verify against the ALREADY-BUILT perDoc sets — the
-            // arm's former per-call set aggregation and both its
-            // checkpoints are gone. The whole propose→verify chain is
-            // single-consumer (candidates feed only the verify, verified
-            // pairs feed only cc) and rides lazily into cc's edge
-            // persist, which materializes it exactly once.
-            // (doc, __h) comes from EXPLODING the cached perDoc __set
-            // arrays of the survivors — no third text scan / shingle
-            // kernel / hash pass for any doc UNDER the verify cap (the
-            // overwhelming majority; chunked corpora sit far below it).
-            // Docs OVER the cap re-derive their FULL distinct hash
-            // stream from the cached survivor text (round 13, ADVICE
-            // r12): proposing from the bottom-8192 sketch silently lost
-            // containment recall and undercounted shingle DF at exactly
-            // the un-chunked mega-doc scale the cap guards — the
-            // standalone containmentViaRareShingles always proposed over
-            // all hashes, and the fused arm now matches it. The
-            // re-shingle is semi-join-bounded to the capped docs, so its
-            // cost is zero when no doc hits the cap.
-            val candRare = Dedup.rarePairsOnHashed(
-              rareProposalHashes(perDoc, s2, idCol, textCol, n), rareMaxDf)
-            val cDrop = ConnectedComponents.labels(
-                Dedup.verifyContainment(perDoc.select(col("doc"), col("__set")),
-                    candRare, minContain)
-                  .select("a", "b"))
-              .where(col("id") =!= col("cluster"))
-              .select(col("id").as("__cdrop_id"))
-            val armed = s2.join(cDrop, s2(idCol).cast("long") === col("__cdrop_id"),
-              "left_anti").persist(lvl)
-            armed.count() // eager fill — same multi-branch rationale as s2
-            armed
+    using(corpus.coalesce(nPart), fill = true) { c0 =>
+      using(dedupExactKeepFirst(c0, idCol, textCol), fill = true) { s1 =>
+        // ONE per-doc signature+set frame serves BOTH verify stages (round
+        // 12): the near-dup propose/verify reads signatures and Jaccard sets
+        // from it, and the rare-containment arm's verify reads the SAME
+        // __set arrays (identical per doc) — the arm's former
+        // candidate-bounded set aggregation is gone. Built with the
+        // codegen'd aggregation form (measured faster than a row-local
+        // higher-order-function projection — see ngramJaccardViaMinhash) and
+        // only when something consumes it (internal labels or the arm); its
+        // fill is one scan of the cached s1, and verify reads it on 2 sides.
+        def withPerDoc(body: DataFrame => DataFrame): DataFrame =
+          if (dupLabels.nonEmpty && !rareShingleArm) body(null)
+          else using(Dedup.perDocSigsAndSet(
+              TextAnalysis.shingleRowsDistinct(s1, idCol, textCol, n)
+                .withColumnRenamed(idCol, "doc"), k), fill = true)(body)
+        withPerDoc { perDoc =>
+          // the near-dup stage (r7-measured 9 s of the funnel's ~15 at sf0.1)
+          // accepts precomputed duplicate-cluster labels: labels over the RAW
+          // corpus are drop-equivalent on exact survivors (an exact-copy node
+          // has the same text as its original, so it adds no connectivity
+          // among survivors and never owns a component minimum), which lets a
+          // session that also runs the dup-cluster queries share ONE
+          // LSH+verify+cc pass via the caller's memo
+          // the verified pair list rides LAZILY into cc: labels() persists
+          // the symmetrized edges and its seed aggregation is their single
+          // first consumer, so the propose/verify chain runs exactly once
+          // during that fill — a checkpoint here would be one extra job
+          // re-scanning what the cc cache is about to hold anyway
+          val labels = dupLabels.getOrElse {
+            ConnectedComponents.labels(
+              Dedup.verifyJaccard(perDoc, Dedup.bandedCandidates(perDoc, k), minSim)
+                .select("a", "b"))
           }
-          try {
-            val benchGrams = TextAnalysis
-              .shingleRows(benchmark, idCol, textCol, decontamN)
-              .select("shingle").distinct()
-            // NO (id, shingle) dedup shuffle before the probe: the bench
-            // grams are broadcast and the trailing distinct() on idCol
-            // collapses repeated hits anyway — deduping the full survivor
-            // shingle stream first would shuffle it once for nothing
-            val contaminated = TextAnalysis.shingleRows(s2b, idCol, textCol, decontamN)
-              .join(broadcast(benchGrams), Seq("shingle"), "left_semi")
-              .select(idCol).distinct()
-            val s3 = s2b.join(contaminated, Seq(idCol), "left_anti")
-            def stage(name: String, df: DataFrame) =
-              df.agg(count(lit(1)).as("n_docs")).select(lit(name).as("stage"), col("n_docs"))
-            val head = stage("raw", c0)
-              .unionByName(stage("exact_dedup", s1))
-              .unionByName(stage("near_dedup", s2))
-            val tail = (if (rareShingleArm) head.unionByName(stage("contain_dedup", s2b)) else head)
-              .unionByName(stage("decontaminated", s3))
-            tail.localCheckpoint(true)
-          } finally if (rareShingleArm) s2b.unpersist()
-        } finally s2.unpersist()
+          val drop = labels
+            .where(col("id") =!= col("cluster"))
+            .select(col("id").as("__drop_id"))
+          // filled: s2 feeds several branches of the ONE final checkpoint job
+          // (its stage count, the decontam semi-join, the s3 anti-join, and
+          // the arm when on)
+          using(s1.join(drop, s1(idCol).cast("long") === col("__drop_id"), "left_anti"),
+              fill = true) { s2 =>
+            // optional containment recall arm: cluster engulfed-prefix pairs
+            // over the near-dup survivors, keep the min-id member per
+            // cluster. Shingles come from the funnel-shared cached table,
+            // narrowed to near-dup survivors — no second text scan
+            def withArm(body: DataFrame => DataFrame): DataFrame =
+              if (!rareShingleArm) body(s2) else {
+                // FUSED arm (round 12): propose rare-df pairs from the shared
+                // shingle cache narrowed to near-dup survivors (one shuffle),
+                // then verify against the ALREADY-BUILT perDoc sets — the
+                // arm's former per-call set aggregation and both its
+                // checkpoints are gone. The whole propose→verify chain is
+                // single-consumer (candidates feed only the verify, verified
+                // pairs feed only cc) and rides lazily into cc's edge
+                // persist, which materializes it exactly once.
+                // (doc, __h) comes from EXPLODING the cached perDoc __set
+                // arrays of the survivors — no third text scan / shingle
+                // kernel / hash pass for any doc UNDER the verify cap (the
+                // overwhelming majority; chunked corpora sit far below it).
+                // Docs OVER the cap re-derive their FULL distinct hash
+                // stream from the cached survivor text (round 13, ADVICE
+                // r12): proposing from the bottom-8192 sketch silently lost
+                // containment recall and undercounted shingle DF at exactly
+                // the un-chunked mega-doc scale the cap guards — the
+                // standalone containmentViaRareShingles always proposed over
+                // all hashes, and the fused arm now matches it. The
+                // re-shingle is semi-join-bounded to the capped docs, so its
+                // cost is zero when no doc hits the cap.
+                val candRare = Dedup.rarePairsOnHashed(
+                  rareProposalHashes(perDoc, s2, idCol, textCol, n), rareMaxDf)
+                val cDrop = ConnectedComponents.labels(
+                    Dedup.verifyContainment(perDoc.select(col("doc"), col("__set")),
+                        candRare, minContain)
+                      .select("a", "b"))
+                  .where(col("id") =!= col("cluster"))
+                  .select(col("id").as("__cdrop_id"))
+                // filled — same multi-branch rationale as s2
+                using(s2.join(cDrop, s2(idCol).cast("long") === col("__cdrop_id"), "left_anti"),
+                  fill = true)(body)
+              }
+            withArm { s2b =>
+              val benchGrams = TextAnalysis
+                .shingleRows(benchmark, idCol, textCol, decontamN)
+                .select("shingle").distinct()
+              // NO (id, shingle) dedup shuffle before the probe: the bench
+              // grams are broadcast and the trailing distinct() on idCol
+              // collapses repeated hits anyway — deduping the full survivor
+              // shingle stream first would shuffle it once for nothing
+              val contaminated = TextAnalysis.shingleRows(s2b, idCol, textCol, decontamN)
+                .join(broadcast(benchGrams), Seq("shingle"), "left_semi")
+                .select(idCol).distinct()
+              val s3 = s2b.join(contaminated, Seq(idCol), "left_anti")
+              def stage(name: String, df: DataFrame) =
+                df.agg(count(lit(1)).as("n_docs")).select(lit(name).as("stage"), col("n_docs"))
+              val head = stage("raw", c0)
+                .unionByName(stage("exact_dedup", s1))
+                .unionByName(stage("near_dedup", s2))
+              val tail = (if (rareShingleArm) head.unionByName(stage("contain_dedup", s2b)) else head)
+                .unionByName(stage("decontaminated", s3))
+              checkpoint(tail)
+            }
+          }
+        }
       }
-    } finally {
-      if (perDoc != null) perDoc.unpersist()
-      s1.unpersist(); c0.unpersist()
     }
   }
 
@@ -1053,8 +1043,7 @@ object Curation {
     // its last cumulative value, so deriving cutoffs needs no second
     // corpus aggregation (corpus touched exactly twice — histogram + the
     // final filtered scan)
-    val cum = hist.select(col("n_tokens"), sum(col("__c")).over(w).as("__cum"))
-      .localCheckpoint(true)
+    val cum = checkpoint(hist.select(col("n_tokens"), sum(col("__c")).over(w).as("__cum")))
     val tot = cum.agg(max(col("__cum")).as("__n"))
     val cuts = cum.crossJoin(broadcast(tot))
       .agg(min(when(col("__cum") >= ceil(col("__n") * pLo), col("n_tokens"))).as("__lo"),
@@ -1155,10 +1144,8 @@ object Curation {
                          idCol: String, textCol: String, n: Int = 8,
                          bitsPerItem: Int = 10): DataFrame = {
     import graft.functions.BloomFunctions
-    val benchGrams = TextAnalysis.shingleRows(benchmark, idCol, textCol, n)
-      .select("shingle").distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    using(TextAnalysis.shingleRows(benchmark, idCol, textCol, n)
+        .select("shingle").distinct()) { benchGrams =>
       val nGrams = benchGrams.count()
       if (nGrams == 0L) corpus
       else {
@@ -1172,7 +1159,7 @@ object Curation {
           .select(idCol).distinct()
         corpus.join(hits, Seq(idCol), "left_anti")
       }
-    } finally benchGrams.unpersist()
+    }
   }
 
   /** C4-style line-level cleaning: drop lines with fewer than `minWords`

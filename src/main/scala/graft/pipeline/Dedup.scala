@@ -2,6 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.Materialize.{checkpoint, using}
 
 /** Deduplication operators for training-data pipelines. Scale design:
   *
@@ -125,28 +126,25 @@ object Dedup {
         Seq("shingle"), "left_semi")
     // The shingle table feeds three consumers (sizes + both join sides), so
     // it is persisted — but scoped to THIS call: the small pair result is
-    // materialized eagerly (localCheckpoint cuts its lineage off the cache)
+    // materialized eagerly (the checkpoint cuts its lineage off the cache)
     // and the persist released before returning. A session-lifetime cache
     // entry per corpus would accumulate until executors evict hot data;
     // measured alternative (no persist, exchange reuse) was 3× slower.
-    val distinctShingles = bounded.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      distinctShingles.count() // eager cache fill — see ngramJaccardOnShingles
+    using(bounded, fill = true) { distinctShingles =>
       val sizes = distinctShingles.groupBy("doc").agg(count(lit(1)).as("n_sh"))
       val exploded = distinctShingles
       val inter = exploded.select(col("doc").as("a"), col("shingle"))
         .join(exploded.select(col("doc").as("b"), col("shingle")), Seq("shingle"))
         .where(col("a") < col("b"))
         .groupBy("a", "b").agg(count(lit(1)).as("inter"))
-      inter
+      checkpoint(inter
         .join(sizes.select(col("doc").as("a"), col("n_sh").as("na")), Seq("a"))
         .join(sizes.select(col("doc").as("b"), col("n_sh").as("nb")), Seq("b"))
         .select(col("a"), col("b"),
           round(col("inter").cast("double") /
             (col("na") + col("nb") - col("inter")).cast("double"), 4).as("jaccard"))
-        .where(col("jaccard") >= minSim)
-        .localCheckpoint(true)
-    } finally distinctShingles.unpersist()
+        .where(col("jaccard") >= minSim))
+    }
   }
 
   /** Exact n-gram Jaccard restricted to an explicit candidate pair set
@@ -169,7 +167,7 @@ object Dedup {
     * the signature and verify stages, so it is persisted (measured 2×
     * faster than recompute, 3× faster than relying on exchange reuse) —
     * but scoped to this call: the small pair result is materialized
-    * eagerly (localCheckpoint cuts its lineage off the cache) and the
+    * eagerly (the checkpoint cuts its lineage off the cache) and the
     * persist released before returning, so repeated calls over different
     * corpora leave nothing in the session CacheManager (asserted by
     * PipelineSpec's leak test). */
@@ -194,17 +192,11 @@ object Dedup {
     * checkpoint flow, over the one-pass [[perDocSigsAndSet]] frame. */
   def ngramJaccardOnShingles(shingles: DataFrame, idCol: String,
                              k: Int = 4, minSim: Double = 0.5): DataFrame = {
-    val perDoc = perDocSigsAndSet(shingles.withColumnRenamed(idCol, "doc"), k)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      // materialize the persist BEFORE wiring the consumers: the final
-      // eager checkpoint otherwise runs the candidate and verify subtrees
-      // concurrently against a cold cache, and each recomputes the
-      // aggregation for partitions not yet cached (measured ~25% of the
-      // composed pipeline at sf0.1)
-      perDoc.count()
-      verifyJaccard(perDoc, bandedCandidates(perDoc, k), minSim).localCheckpoint(true)
-    } finally perDoc.unpersist()
+    // filled before the candidate and verify subtrees read it
+    // concurrently ([[graft.Materialize]], eager fill)
+    using(perDocSigsAndSet(shingles.withColumnRenamed(idCol, "doc"), k), fill = true) { perDoc =>
+      checkpoint(verifyJaccard(perDoc, bandedCandidates(perDoc, k), minSim))
+    }
   }
 
   /** ONE doc-keyed aggregation producing the k banded min-hash signatures
@@ -313,17 +305,14 @@ object Dedup {
                        minContain: Double = 0.9): DataFrame = {
     // aggregation-form signatures+sets — measured faster than the
     // row-local projection (see ngramJaccardViaMinhash)
-    val perDoc = perDocSigsAndSet(
-        TextAnalysis.shingleRows(df, idCol, textCol, n).withColumnRenamed(idCol, "doc"), k)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      perDoc.count() // eager cache fill — see ngramJaccardOnShingles
+    val shingles = TextAnalysis.shingleRows(df, idCol, textCol, n).withColumnRenamed(idCol, "doc")
+    using(perDocSigsAndSet(shingles, k), fill = true) { perDoc =>
       val cand = bandedCandidates(perDoc, k)
       // same array-based verify as verifyOverlap, scoring BOTH measures
       // from the one intersection projection; per-doc arrays capped like
       // shingleSets (mega-doc fat-row guard)
       val sets = perDoc
-      cand
+      checkpoint(cand
         .join(sets.select(col("doc").as("a"), col("__set").as("__sa")), Seq("a"))
         .join(sets.select(col("doc").as("b"), col("__set").as("__sb")), Seq("b"))
         .select(col("a"), col("b"),
@@ -335,9 +324,8 @@ object Dedup {
             .as("jaccard"),
           round(col("inter").cast("double") / least(col("na"), col("nb")).cast("double"), 4)
             .as("containment"))
-        .where(col("jaccard") >= minSim || col("containment") >= minContain)
-        .localCheckpoint(true)
-    } finally perDoc.unpersist()
+        .where(col("jaccard") >= minSim || col("containment") >= minContain))
+    }
   }
 
   /** Incremental exact dedup — the daily-ingest production shape: dedupe
@@ -480,13 +468,11 @@ object Dedup {
                       n: Int = 5, minDf: Int = 2): DataFrame = {
     require(n >= 2 && minDf >= 2, s"need n >= 2, minDf >= 2; got n=$n minDf=$minDf")
     val nPart = df.sparkSession.sessionState.conf.numShufflePartitions
-    val sh = df
+    val positional = df
       .select(col(idCol),
         posexplode(TextAnalysis.wordShingles(col(textCol), n)).as(Seq("pos", "shingle")))
       .coalesce(nPart)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      sh.count() // eager cache fill — see ngramJaccardOnShingles
+    using(positional, fill = true) { sh =>
       val hot = sh.select(col(idCol), col("shingle")).distinct()
         .groupBy("shingle").agg(count(lit(1)).as("__df"))
         .where(col("__df") >= minDf).select("shingle")
@@ -494,7 +480,7 @@ object Dedup {
         .select(col(idCol),
           explode(sequence(col("pos"), col("pos") + (n - 1))).as("__cp"))
         .groupBy(idCol).agg(countDistinct(col("__cp")).as("__cov"))
-      df.select(col(idCol),
+      checkpoint(df.select(col(idCol),
           size(filter(TextAnalysis.words(col(textCol)), w => length(w) > 0))
             .cast("long").as("n_tokens"))
         .where(col("n_tokens") > 0)
@@ -502,9 +488,8 @@ object Dedup {
         .select(col(idCol), col("n_tokens"),
           coalesce(col("__cov"), lit(0L)).as("covered_tokens"),
           round(coalesce(col("__cov"), lit(0L)).cast("double") /
-            col("n_tokens").cast("double"), 4).as("coverage"))
-        .localCheckpoint(true)
-    } finally sh.unpersist()
+            col("n_tokens").cast("double"), 4).as("coverage")))
+    }
   }
 
   /** LSH recall measured, not assumed: run the exact all-pairs Jaccard
@@ -622,13 +607,10 @@ object Dedup {
                             n: Int = 3, k: Int = 4, minContain: Double = 0.9): DataFrame = {
     // aggregation-form signatures+sets — measured faster than the
     // row-local projection (see ngramJaccardViaMinhash)
-    val perDoc = perDocSigsAndSet(
-        TextAnalysis.shingleRows(df, idCol, textCol, n).withColumnRenamed(idCol, "doc"), k)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      perDoc.count() // eager cache fill — see ngramJaccardOnShingles
-      verifyContainment(perDoc, bandedCandidates(perDoc, k), minContain).localCheckpoint(true)
-    } finally perDoc.unpersist()
+    val shingles = TextAnalysis.shingleRows(df, idCol, textCol, n).withColumnRenamed(idCol, "doc")
+    using(perDocSigsAndSet(shingles, k), fill = true) { perDoc =>
+      checkpoint(verifyContainment(perDoc, bandedCandidates(perDoc, k), minContain))
+    }
   }
 
   /** Exact containment restricted to an explicit candidate pair set —
@@ -666,25 +648,23 @@ object Dedup {
     // per-doc collect_set aggregation is gone. Same capped-set semantics
     // as capShingleSet (sorted ascending, MaxVerifyShinglesPerDoc cap).
     val nPart = df.sparkSession.sessionState.conf.numShufflePartitions
-    val perDoc = df
+    val hashed = df
       .select(col(idCol).as("doc"),
         array_sort(array_distinct(transform(
           graft.functions.TextFunctions.shinglesDistinctNative(col(textCol), n),
           s => xxhash64(s)))).as("__hs"))
       .where(size(col("__hs")) > 0)
       .coalesce(nPart)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    using(hashed) { perDoc =>
       // the rare-pair checkpoint below is the cache's sole first consumer
       // (one blocking job fills it as it scans); the verify join re-reads
       // the warm cache for its two set sides
-      val cand = rarePairsOnHashed(
-          perDoc.select(col("doc"), explode(col("__hs")).as("__h")), maxDf)
-        .localCheckpoint(true)
+      val cand = checkpoint(rarePairsOnHashed(
+          perDoc.select(col("doc"), explode(col("__hs")).as("__h")), maxDf))
       val sets = perDoc.select(col("doc"),
         slice(col("__hs"), 1, MaxVerifyShinglesPerDoc).as("__set"))
-      verifyContainment(sets, cand, minContain).localCheckpoint(true)
-    } finally perDoc.unpersist()
+      checkpoint(verifyContainment(sets, cand, minContain))
+    }
   }
 
   /** DF-bounded rare-shingle candidate pairs over a hashed `(doc, __h)`
@@ -694,7 +674,7 @@ object Dedup {
     * its a<b pairs with a narrow transform, deduped across shingles. The
     * pre-r11 form — a df-count aggregation, a rare semi-join, and a
     * self-join — paid THREE corpus-wide passes for the same pair list. */
-  private[pipeline] def rarePairsOnHashed(sh: DataFrame, maxDf: Int): DataFrame =
+  private[graft] def rarePairsOnHashed(sh: DataFrame, maxDf: Int): DataFrame =
     sh.groupBy("__h")
       .agg(sort_array(collect_set(col("doc"))).as("__ds"))
       .where(size(col("__ds")) >= 2 && size(col("__ds")) <= maxDf)
@@ -703,82 +683,6 @@ object Dedup {
           b => struct(a.as("a"), b.as("b")))))).as("__p"))
       .select(col("__p.a").as("a"), col("__p.b").as("b"))
       .distinct()
-
-  /** [[containmentViaRareShingles]]' core over a PRECOMPUTED `(doc,
-    * shingle)` table — callers that already hold a shingle table skip the
-    * tokenize+explode pass. Rows need not be distinct per (doc, shingle)
-    * unless `inputDistinct` promises it (e.g. the fused-dedup kernel of
-    * [[TextAnalysis.shingleRowsDistinct]]) — promising it skips the
-    * corpus-wide dropDuplicates exchange. */
-  def containmentOnShingles(shingles: DataFrame, maxDf: Int = 8,
-                            minContain: Double = 0.9,
-                            inputDistinct: Boolean = false,
-                            eager: Boolean = true,
-                            inputPersisted: Boolean = false): DataFrame = {
-    require(maxDf >= 2, s"need maxDf >= 2; got $maxDf")
-    // hash at the source: every downstream exchange (df counts, the rare
-    // candidate self-join, the per-doc set aggregation) moves and compares
-    // fixed-width longs instead of shingle text — the same 2⁻⁶⁴-collision
-    // tolerance as the verify sets, which are hash-based already
-    val raw = shingles.select(col("doc"), xxhash64(col("shingle")).as("__h"))
-    // cache at the session's shuffle parallelism: a narrow shingle kernel
-    // over a unioned input otherwise persists at 2× the partition count,
-    // and every downstream scan of the cache pays 2× the task overhead.
-    // inputPersisted = the caller vouches `shingles` is already a cached
-    // distinct table (e.g. the funnel's shared shingle cache, narrowed by
-    // a broadcast semi-join): re-materializing a second copy here would
-    // pay a barrier job and duplicate cache for rows one narrow re-scan
-    // of the caller's cache reproduces — the two consumers below each
-    // just re-read it.
-    val nPart = shingles.sparkSession.sessionState.conf.numShufflePartitions
-    val sh =
-      if (inputPersisted) { require(inputDistinct,
-        "inputPersisted callers must also promise inputDistinct"); raw }
-      else (if (inputDistinct) raw else raw.dropDuplicates("doc", "__h"))
-        .coalesce(nPart)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      // eager fill only when the cold cache would face CONCURRENT
-      // consumers: with eager=true the candidate checkpoint below is the
-      // sole first consumer (one blocking job that fills the cache as it
-      // scans), so a separate count() pass would re-scan for nothing;
-      // with eager=false everything executes as one job whose branches
-      // race the cold cache (the round-10 recompute trap) — fill first.
-      if (!inputPersisted && !eager)
-        sh.count()
-      val candLive = rarePairsOnHashed(sh, maxDf)
-      // the candidate list has TWO consumers (the verify join and the
-      // set-bounding semi-join below). A lazy persist does NOT protect it:
-      // AQE compiles independent query stages concurrently, and both
-      // consumers race to compute the full pair list before either fills
-      // the cache — measured as ~2× the task time of the whole query. An
-      // EAGER checkpoint is one extra scheduled job but computes the
-      // df-bounded pair list exactly once.
-      val cand = if (eager) candLive.localCheckpoint(true) else candLive
-      // verify sets are built for CANDIDATE docs only: with a rare-
-      // shingle df window most docs never pair, and a corpus-wide
-      // per-doc collect_set is pure waste — the containment join drops
-      // every non-candidate set anyway. The semi-join keeps set
-      // building candidate-bounded at any corpus size. No distinct on
-      // candDocs: the left-semi join absorbs duplicates for free.
-      val candDocs = cand.select(col("a").as("doc"))
-        .unionByName(cand.select(col("b").as("doc")))
-      // sets feed BOTH sides of the verify join, and Spark builds each
-      // broadcast side independently — without a barrier the semi-join +
-      // collect_set pipeline runs TWICE (observed in the physical plan as
-      // two sibling BroadcastExchanges over identical aggregate subtrees).
-      // The candidate-bounded output is small; checkpoint it once.
-      val setsLive = sh.join(candDocs, Seq("doc"), "left_semi")
-        .groupBy("doc")
-        .agg(collect_set(col("__h")).as("__hs"))
-        .select(col("doc"), capShingleSet(col("__hs")).as("__set"))
-      val sets = if (eager) setsLive.localCheckpoint(true) else setsLive
-      val out = verifyContainment(sets, cand, minContain)
-      // eager=false keeps the live plan inspectable (plan-shape tests);
-      // the default checkpoint cuts lineage above the persisted shingles
-      if (eager) out.localCheckpoint(true) else out
-    } finally if (!inputPersisted) sh.unpersist()
-  }
 
   /** SimHash near-duplicate pairs: the `bits`-bit signature is split into
     * `bands` equal-width chunks and documents sharing any chunk value become
@@ -842,12 +746,10 @@ object Dedup {
     // n-word strings, 2⁻⁶⁴ collision tolerance; cached at the session
     // shuffle parallelism so a unioned input doesn't tax every stage
     val nPart = df.sparkSession.sessionState.conf.numShufflePartitions
-    val win = TextAnalysis.shingleRows(df, idCol, textCol, n)
+    val windows = TextAnalysis.shingleRows(df, idCol, textCol, n)
       .select(col(idCol), xxhash64(col("shingle")).as("__h"))
       .coalesce(nPart)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      win.count() // eager cache fill — see ngramJaccardOnShingles
+    using(windows, fill = true) { win =>
       val shared = win.groupBy("__h")
         .agg(countDistinct(col(idCol)).as("__docs"))
         .where(col("__docs") > 1)
@@ -855,16 +757,15 @@ object Dedup {
       val total = win.groupBy(idCol).agg(count(lit(1)).as("__nw"))
       val dup = win.join(shared, Seq("__h"), "left_semi")
         .groupBy(idCol).agg(count(lit(1)).as("__dup"))
-      df.select(col(idCol))
+      checkpoint(df.select(col(idCol))
         .join(total, Seq(idCol), "left")
         .join(dup, Seq(idCol), "left")
         .select(col(idCol),
           coalesce(col("__nw"), lit(0L)).as("n_windows"),
           coalesce(col("__dup"), lit(0L)).as("dup_windows"),
           round(coalesce(col("__dup").cast("double") / col("__nw"), lit(0.0)), 4)
-            .as("dup_frac"))
-        .localCheckpoint(true)
-    } finally win.unpersist()
+            .as("dup_frac")))
+    }
   }
 
   /** Semantic near-duplicate pairs (the SemDeDup shape): embeddings are

@@ -2,6 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.Materialize.{checkpoint, using}
 
 /** Embedding quantization for storage/serving-scale vector pipelines:
   * symmetric per-vector int8 codes (the layout faiss-style scalar
@@ -50,9 +51,8 @@ object Quantization {
     * (n_queries, n_exact, n_found, n_hit, recall). */
   def int8Recall(corpus: DataFrame, queries: DataFrame,
                  idCol: String, vecCol: String, k: Int): DataFrame = {
-    val exact = Similarity.bruteForceTopK(corpus, queries, idCol, vecCol, k)
-      .select(col("query_id"), col("neighbor_id"))
-      .localCheckpoint(true)
+    val exact = checkpoint(Similarity.bruteForceTopK(corpus, queries, idCol, vecCol, k)
+      .select(col("query_id"), col("neighbor_id")))
     val den = exact.agg(countDistinct("query_id").as("n_queries"),
       count(lit(1)).as("n_exact"))
     val recon = corpus
@@ -257,10 +257,9 @@ object Quantization {
   def ivfPqIndex(corpus: DataFrame, idCol: String, vecCol: String,
                  nlist: Int = 16, m: Int = 16, codewords: Int = 256,
                  iters: Int = 2): (DataFrame, DataFrame) = {
-    val cent = Clustering
+    val cent = checkpoint(Clustering
       .kmeansCentroids(corpus.select(col(idCol), col(vecCol)), idCol, vecCol, nlist, iters)
-      .select(col("cid").cast("long").as("lcid"), col("centroid"))
-      .localCheckpoint(true)
+      .select(col("cid").cast("long").as("lcid"), col("centroid")))
     val centSub = broadcast(subVectors(
         cent.select(col("lcid"), col("centroid")), "lcid", "centroid", m)
       .select(col("lcid").cast("long").as("lcid"), col("s"), col("x").as("c")))
@@ -455,27 +454,24 @@ object Quantization {
                                      centSub: DataFrame, idCol: String,
                                      nlist: Int, codewords: Int,
                                      iters: Int): DataFrame = {
-    var cb = sv.where(col(idCol) >= nlist && col(idCol) < nlist + codewords)
+    var cb = checkpoint(sv.where(col(idCol) >= nlist && col(idCol) < nlist + codewords)
       .join(assign, col(idCol) === col("__vid"))
       .join(centSub, Seq("lcid", "s"))
       .select(col("s"), col(idCol).cast("long").as("cid"),
-        zip_with(col("x"), col("c"), (a, b) => a - b).as("cw"))
-      .localCheckpoint(true)
+        zip_with(col("x"), col("c"), (a, b) => a - b).as("cw")))
     if (iters > 0) {
-      // residual components (id, s, pos, rval), computed once: scalar
-      // subtraction against the broadcast centroid component table — no
-      // higher-order lambda in the corpus-sized path
+      // residual components (id, s, pos, rval), computed and filled once
+      // (every iteration reads them): scalar subtraction against the
+      // broadcast centroid component table — no higher-order lambda in the
+      // corpus-sized path
       val centComp = broadcast(centSub.select(col("lcid"), col("s"),
         posexplode(col("c")).as(Seq("pos", "cval"))))
-      val rcomp = sv.join(assign, col(idCol) === col("__vid"))
+      using(sv.join(assign, col(idCol) === col("__vid"))
         .select(col(idCol), col("lcid"), col("s"),
           posexplode(col("x")).as(Seq("pos", "xval")))
         .join(centComp, Seq("lcid", "s", "pos"))
         .select(col(idCol), col("s"), col("pos"),
-          (col("xval") - col("cval")).as("rval"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        rcomp.count() // eager fill: consumed once per iteration
+          (col("xval") - col("cval")).as("rval")), fill = true) { rcomp =>
         (0 until iters).foreach { _ =>
           val assigned = sv
             .join(assign, col(idCol) === col("__vid"))
@@ -494,12 +490,11 @@ object Quantization {
           val fresh = means.groupBy("s", "cid")
             .agg(transform(array_sort(collect_list(struct(col("pos"), col("mv")))),
               x => x.getField("mv")).as("fresh"))
-          cb = cb.join(fresh, Seq("s", "cid"), "left")
+          cb = checkpoint(cb.join(fresh, Seq("s", "cid"), "left")
             .select(col("s"), col("cid"),
-              coalesce(col("fresh"), col("cw")).as("cw"))
-            .localCheckpoint(true)
+              coalesce(col("fresh"), col("cw")).as("cw")))
         }
-      } finally rcomp.unpersist()
+      }
     }
     cb
   }

@@ -3,6 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Materialize.{checkpoint, using}
 
 /** Similarity search over embedding columns (array<float>).
   *
@@ -85,9 +86,8 @@ object Similarity {
                        prefixes: Seq[Int]): DataFrame = {
     require(prefixes.nonEmpty, "need at least one prefix length")
     require(prefixes.forall(_ > 0), s"prefix lengths must be positive; got $prefixes")
-    val exact = bruteForceTopK(corpus, queries, idCol, vecCol, k)
-      .select(col("query_id"), col("neighbor_id"))
-      .localCheckpoint(true)
+    val exact = checkpoint(bruteForceTopK(corpus, queries, idCol, vecCol, k)
+      .select(col("query_id"), col("neighbor_id")))
     val den = exact.agg(countDistinct("query_id").as("n_queries"),
       count(lit(1)).as("n_exact"))
     val rungs = prefixes.map { d =>
@@ -464,16 +464,14 @@ object Similarity {
     // ONE shared-core pass at the deepest rung (assignment + probe ranking
     // + exact scoring); every shallower rung is a filter on the emitted
     // probe_rank — no per-rung re-scan
-    val scored = ivfScoredPairs(
+    val scored = checkpoint(ivfScoredPairs(
         corpus.select(col(idCol), col(vecCol)),
         queries.select(col(idCol), col(vecCol)),
         corpus.where(col(idCol) < nlist)
           .select(col(idCol).cast("long").as("cid"), col(vecCol).as("centroid")),
-        idCol, vecCol, maxP)
-      .localCheckpoint(true)
-    val exact = bruteForceTopK(corpus, queries, idCol, vecCol, k)
-      .select(col("query_id").cast("long"), col("neighbor_id").cast("long"))
-      .localCheckpoint(true)
+        idCol, vecCol, maxP))
+    val exact = checkpoint(bruteForceTopK(corpus, queries, idCol, vecCol, k)
+      .select(col("query_id").cast("long"), col("neighbor_id").cast("long")))
     val denom = broadcast(exact.agg(
       countDistinct(col("query_id")).as("n_queries"),
       count(lit(1)).as("n_exact")))
@@ -503,49 +501,45 @@ object Similarity {
                       ivfPqIdx: Option[(DataFrame, DataFrame)] = None): DataFrame = {
     // ground truth consumed by every arm's join AND the denominator — one
     // materialization, not one brute-force scan per consumer
-    val exact = bruteForceTopK(corpus, queries, idCol, vecCol, k)
-      .select(col("query_id").cast("long"), col("neighbor_id").cast("long"))
-      .localCheckpoint(true)
+    val exact = checkpoint(bruteForceTopK(corpus, queries, idCol, vecCol, k)
+      .select(col("query_id").cast("long"), col("neighbor_id").cast("long")))
     def arm(name: String, df: DataFrame): DataFrame =
       df.select(lit(name).as("method"), col("query_id").cast("long"),
         col("neighbor_id").cast("long"))
     val (cent, cb) = ivfPqIdx.getOrElse(
       Quantization.ivfPqIndex(corpus, idCol, vecCol, nlist, m, codewords))
-    // ONE corpus-scan encode shared by BOTH ivfpq arms (round 16): the
-    // plain-ADC arm and the rerank arm consumed bit-identical encode
-    // output yet each paid its own corpus encode inside one report.
-    // Lazily persisted, not eagerly checkpointed: the arms' subtrees run
-    // concurrently inside the one report job, so an eager encode would
-    // serialize a step the scheduler otherwise overlaps with the lsh/ivf
-    // arms (measured +1.5 s); the cache's block locking makes the first
-    // computing arm fill it and the other read it.
-    val codes = Quantization.ivfPqEncode(corpus, idCol, vecCol, m, cent, cb)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val arms = arm("lsh", lshTopK(corpus, queries, idCol, vecCol, k, planes))
-      .unionByName(arm("ivf", ivfTopK(corpus, queries, idCol, vecCol, k, nlist, nprobe)))
-      .unionByName(arm("ivfpq",
-        Quantization.ivfPqSearchCodes(codes, queries, idCol, vecCol, k, ivfPqNprobe, m, cent, cb)))
-      .unionByName(arm("ivfpq_rerank",
-        Quantization.ivfPqTopKRerankCodes(codes, corpus, queries, idCol, vecCol,
-          k, 4, ivfPqNprobe, m, cent, cb)))
-    val perArm = arms
-      .join(exact.withColumn("__hit", lit(1L)), Seq("query_id", "neighbor_id"), "left")
-      .groupBy("method")
-      .agg(count(lit(1)).as("n_found"),
-        coalesce(sum(col("__hit")), lit(0L)).as("n_hit"))
     val denom = broadcast(exact.agg(
       countDistinct(col("query_id")).as("n_queries"),
       count(lit(1)).as("n_exact")))
-    val report = perArm.crossJoin(denom)
-      .select(col("method"), col("n_queries"), col("n_exact"),
-        col("n_found"), col("n_hit"),
-        round(when(col("n_exact") === 0, 1.0)
-          .otherwise(col("n_hit").cast("double") / col("n_exact")), 4).as("recall"))
-      // evaluate the 4-row report eagerly so the shared-codes cache can be
-      // released before returning (the curationFunnel persist-scoping
-      // pattern — a lazily returned frame could never unpersist safely)
-      .localCheckpoint(true)
-    codes.unpersist()
-    report
+    // ONE corpus-scan encode shared by BOTH ivfpq arms (round 16): the
+    // plain-ADC arm and the rerank arm consumed bit-identical encode
+    // output yet each paid its own corpus encode inside one report.
+    // Persisted without a fill, not eagerly checkpointed: the arms'
+    // subtrees run concurrently inside the one report job, so an eager
+    // encode would serialize a step the scheduler otherwise overlaps with
+    // the lsh/ivf arms (measured +1.5 s); the cache's block locking makes
+    // the first computing arm fill it and the other read it.
+    using(Quantization.ivfPqEncode(corpus, idCol, vecCol, m, cent, cb)) { codes =>
+      val arms = arm("lsh", lshTopK(corpus, queries, idCol, vecCol, k, planes))
+        .unionByName(arm("ivf", ivfTopK(corpus, queries, idCol, vecCol, k, nlist, nprobe)))
+        .unionByName(arm("ivfpq",
+          Quantization.ivfPqSearchCodes(codes, queries, idCol, vecCol, k, ivfPqNprobe, m, cent, cb)))
+        .unionByName(arm("ivfpq_rerank",
+          Quantization.ivfPqTopKRerankCodes(codes, corpus, queries, idCol, vecCol,
+            k, 4, ivfPqNprobe, m, cent, cb)))
+      val perArm = arms
+        .join(exact.withColumn("__hit", lit(1L)), Seq("query_id", "neighbor_id"), "left")
+        .groupBy("method")
+        .agg(count(lit(1)).as("n_found"),
+          coalesce(sum(col("__hit")), lit(0L)).as("n_hit"))
+      // the 4-row report is evaluated eagerly so the shared-codes cache is
+      // released before returning — a lazily returned frame could never
+      // release it safely
+      checkpoint(perArm.crossJoin(denom)
+        .select(col("method"), col("n_queries"), col("n_exact"),
+          col("n_found"), col("n_hit"),
+          round(when(col("n_exact") === 0, 1.0)
+            .otherwise(col("n_hit").cast("double") / col("n_exact")), 4).as("recall")))
+    }
   }
 }

@@ -343,20 +343,6 @@ object TextAnalysis {
       explode(graft.functions.TextFunctions.shinglesDistinctNative(col(textCol), n))
         .as("shingle"))
 
-  /** [[shingleRows]] over an ALREADY-tokenized (id, pos, word) frame —
-    * the seam that lets a multi-stage pipeline (e.g.
-    * [[Curation.curationFunnel]]) tokenize its corpus once and derive
-    * shingle tables at several n from the same persisted token rows. */
-  def shingleRowsFromTokens(toks: DataFrame, idCol: String, n: Int): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window.partitionBy(idCol).orderBy("pos")
-    val withLeads = toks
-      .select(col(idCol) +: col("word").as("w0") +:
-        (1 until n).map(k => lead("word", k).over(w).as(s"w$k")): _*)
-    withLeads
-      .where(col(s"w${n - 1}").isNotNull) // drop incomplete tail windows
-      .select(col(idCol), concat_ws(" ", (0 until n).map(k => col(s"w$k")): _*).as("shingle"))
-  }
-
   /** Zipf-law fit over the top `topV` vocabulary terms — the corpus
     * naturalness screen: least-squares slope/intercept of ln(term_freq)
     * against ln(rank). Natural text reads slope ≈ −1; templated or

@@ -2,6 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.Materialize.{checkpoint, persist, unpersist}
 
 /** Tokenizer learning for training pipelines: BPE-style merge-rule
   * induction over the corpus. Each round counts adjacent token pairs,
@@ -31,58 +32,59 @@ import org.apache.spark.sql.functions._
   */
 object Tokenizer {
 
-  /** The learning loop: returns the merge list and the PERSISTED final
-    * rewritten texts (caller must unpersist). */
-  private def learn(df: DataFrame, idCol: String, textCol: String,
-                    rounds: Int): (Seq[(Int, String, String, Long)], DataFrame) = {
+  /** The learning loop: `body` over the merge list and the persisted
+    * final rewritten texts, which are released when `body` returns or
+    * throws. */
+  private def learn[A](df: DataFrame, idCol: String, textCol: String, rounds: Int)
+                      (body: (Seq[(Int, String, String, Long)], DataFrame) => A): A = {
     require(rounds >= 1, s"need rounds >= 1; got $rounds")
     // space-padded normalized text; @@ survives later rounds because the
     // rewrite operates on the padded string, never re-normalizing
-    var texts = df.select(col(idCol),
-        concat(lit(" "), TextAnalysis.normalized(col(textCol)), lit(" ")).as("__t"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    var texts = persist(df.select(col(idCol),
+        concat(lit(" "), TextAnalysis.normalized(col(textCol)), lit(" ")).as("__t")))
     val merges = Seq.newBuilder[(Int, String, String, Long)]
-    for (r <- 0 until rounds) {
-      // adjacent pairs ROW-LOCALLY (round 16, guide §2.4): zip each doc's
-      // token array with its own tail instead of posexplode + per-doc
-      // window — the former paid a doc-keyed exchange AND sort of the
-      // full token table EVERY round just to see each token's successor;
-      // this shape pays only the map-side-combinable pair count. The pair
-      // multiset is identical (array order = pos order, empty tokens
-      // dropped before pairing in both shapes), so winners, tie-breaks
-      // and merges match bit-for-bit.
-      val toksArr = filter(split(trim(col("__t")), " "), t => t =!= lit(""))
-      val pairsArr = when(size(toksArr) >= 2,
-          transform(sequence(lit(0), size(toksArr) - lit(2)),
-            i => concat_ws(" ", element_at(toksArr, i + lit(1)),
-              element_at(toksArr, i + lit(2)))))
-        .otherwise(array().cast("array<string>"))
-      val top = texts
-        .select(explode(pairsArr).as("pair"))
-        .groupBy("pair").agg(count(lit(1)).as("cnt"))
-        .orderBy(desc("cnt"), asc("pair"))
-        .limit(1).collect()
-      if (top.nonEmpty) {
-        val pair = top.head.getString(0)
-        val cnt = top.head.getLong(1)
-        val Array(l, rt) = pair.split(" ", 2)
-        merges += ((r, l, rt, cnt))
-        // token content rides as LITERALS through the Column API — never
-        // spliced into SQL source text (normalization restricts tokens to
-        // [a-z0-9] today, but the rewrite must not become a parse error /
-        // injection point the day that changes)
-        val from = lit(s" $pair ")
-        val to = lit(s" $l@@$rt ")
-        def rep(c: org.apache.spark.sql.Column) =
-          call_function("replace", c, from, to)
-        val next = texts.select(col(idCol), rep(rep(col("__t"))).as("__t"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        next.count() // materialize before dropping the parent
-        texts.unpersist()
-        texts = next
+    try {
+      for (r <- 0 until rounds) {
+        // adjacent pairs ROW-LOCALLY (round 16, guide §2.4): zip each doc's
+        // token array with its own tail instead of posexplode + per-doc
+        // window — the former paid a doc-keyed exchange AND sort of the
+        // full token table EVERY round just to see each token's successor;
+        // this shape pays only the map-side-combinable pair count. The pair
+        // multiset is identical (array order = pos order, empty tokens
+        // dropped before pairing in both shapes), so winners, tie-breaks
+        // and merges match bit-for-bit.
+        val toksArr = filter(split(trim(col("__t")), " "), t => t =!= lit(""))
+        val pairsArr = when(size(toksArr) >= 2,
+            transform(sequence(lit(0), size(toksArr) - lit(2)),
+              i => concat_ws(" ", element_at(toksArr, i + lit(1)),
+                element_at(toksArr, i + lit(2)))))
+          .otherwise(array().cast("array<string>"))
+        val top = texts
+          .select(explode(pairsArr).as("pair"))
+          .groupBy("pair").agg(count(lit(1)).as("cnt"))
+          .orderBy(desc("cnt"), asc("pair"))
+          .limit(1).collect()
+        if (top.nonEmpty) {
+          val pair = top.head.getString(0)
+          val cnt = top.head.getLong(1)
+          val Array(l, rt) = pair.split(" ", 2)
+          merges += ((r, l, rt, cnt))
+          // token content rides as LITERALS through the Column API — never
+          // spliced into SQL source text (normalization restricts tokens to
+          // [a-z0-9] today, but the rewrite must not become a parse error /
+          // injection point the day that changes)
+          val from = lit(s" $pair ")
+          val to = lit(s" $l@@$rt ")
+          def rep(c: org.apache.spark.sql.Column) =
+            call_function("replace", c, from, to)
+          // filled before dropping the parent generation
+          val next = persist(texts.select(col(idCol), rep(rep(col("__t"))).as("__t")), fill = true)
+          unpersist(texts)
+          texts = next
+        }
       }
-    }
-    (merges.result(), texts)
+      body(merges.result(), texts)
+    } finally unpersist(texts)
   }
 
   /** Optimization-round tooling (graft.PlanDump): ONE learn round's
@@ -129,9 +131,7 @@ object Tokenizer {
                 rounds: Int): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    val (merges, texts) = learn(df, idCol, textCol, rounds)
-    texts.unpersist()
-    merges
+    learn(df, idCol, textCol, rounds)((merges, _) => merges)
       .toDF("merge_round", "merge_left", "merge_right", "pair_count")
       .select(col("merge_round").cast("long"), col("merge_left"),
         col("merge_right"), col("pair_count"))
@@ -142,16 +142,14 @@ object Tokenizer {
     * evaluation signal). Returns (idCol, n_tokens_raw, n_tokens_merged). */
   def bpeTokenCounts(df: DataFrame, idCol: String, textCol: String,
                      rounds: Int): DataFrame = {
-    val (_, texts) = learn(df, idCol, textCol, rounds)
-    try {
+    learn(df, idCol, textCol, rounds) { (_, texts) =>
       def nTokens(c: org.apache.spark.sql.Column) =
         size(filter(split(trim(c), " "), t => t =!= lit("")))
-      df.select(col(idCol),
+      checkpoint(df.select(col(idCol),
           nTokens(TextAnalysis.normalized(col(textCol))).cast("long").as("n_tokens_raw"))
         .join(texts.select(col(idCol),
-          nTokens(col("__t")).cast("long").as("n_tokens_merged")), Seq(idCol))
-        .localCheckpoint(true)
-    } finally texts.unpersist()
+          nTokens(col("__t")).cast("long").as("n_tokens_merged")), Seq(idCol)))
+    }
   }
 
   /** Tokenizer FERTILITY report per corpus slice — the tokenizer-QA
@@ -175,8 +173,7 @@ object Tokenizer {
     * per-doc in the narrow projection). */
   def fertilityReport(df: DataFrame, idCol: String, textCol: String,
                       groupCols: Seq[String], rounds: Int): DataFrame = {
-    val (_, texts) = learn(df, idCol, textCol, rounds)
-    try {
+    learn(df, idCol, textCol, rounds) { (_, texts) =>
       def nTokens(c: org.apache.spark.sql.Column) =
         size(filter(split(trim(c), " "), t => t =!= lit("")))
       val norm = TextAnalysis.normalized(col(textCol))
@@ -187,7 +184,7 @@ object Tokenizer {
         .where(col("__nw") > 0)
         .join(texts.select(col(idCol),
           nTokens(col("__t")).cast("long").as("__nt")), Seq(idCol))
-      perDoc.groupBy(groupCols.map(col): _*)
+      checkpoint(perDoc.groupBy(groupCols.map(col): _*)
         .agg(count(lit(1)).as("n_docs"),
           sum("__nw").as("n_words"), sum("__nt").as("n_tokens"),
           sum("__nc").as("n_chars"))
@@ -196,8 +193,7 @@ object Tokenizer {
           TextAnalysis.microRatio("n_tokens", "n_words", "fertilityReport")
             .as("fertility_micro") :+
           TextAnalysis.microRatio("n_chars", "n_tokens", "fertilityReport")
-            .as("chars_per_token_micro")): _*)
-        .localCheckpoint(true)
-    } finally texts.unpersist()
+            .as("chars_per_token_micro")): _*))
+    }
   }
 }

@@ -2,6 +2,7 @@ package graft.store
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.Materialize.checkpoint
 import graft.model.GraphStore
 
 /** Store diff/sync — the reference's declared-but-dead VCS-sync surface
@@ -46,14 +47,13 @@ object GraphChange {
     // emptiness probe (one action per DAG level). A frontier never repeats
     // a hash, so the sweep ends at the DAG's depth, whatever that is.
     var seen = List.empty[DataFrame]
-    var frontier = direct.localCheckpoint(false)
+    var frontier = checkpoint(direct, eager = false)
     while (frontier.count() > 0) {
       seen ::= frontier
-      frontier = to.propRefs
+      frontier = checkpoint(to.propRefs
         .join(frontier.select(col("hash").as("parent_hash")), Seq("parent_hash"), "left_semi")
         .select(col("child_hash").as("hash")).distinct()
-        .join(seen.reduce(_ unionByName _), Seq("hash"), "left_anti")
-        .localCheckpoint(false)
+        .join(seen.reduce(_ unionByName _), Seq("hash"), "left_anti"), eager = false)
     }
     val all = (frontier :: seen).reduce(_ unionByName _)
     val requiredProps = to.props.join(all, Seq("hash"), "left_semi")

@@ -3,6 +3,7 @@ package graft.store
 import scala.collection.mutable
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Materialize.checkpoint
 import graft.model.{GraphStore, Hashing, PropValue}
 
 final case class NodeExistsException(id: String)
@@ -190,21 +191,20 @@ object BulkMutations {
     * and releases with it; nothing enters the session's cache.
     */
   def gcOrphanProps(g: GraphStore): GraphStore = {
-    var links = g.vertices.select("prop_hash").unionByName(g.edges.select("prop_hash"))
+    var links = checkpoint(g.vertices.select("prop_hash").unionByName(g.edges.select("prop_hash"))
       .select(col("prop_hash").as("hash"), lit(null).cast("string").as("parent"))
       .unionByName(g.propRefs
         .join(g.props.select(col("hash").as("parent_hash")), Seq("parent_hash"), "left_semi")
-        .select(col("child_hash").as("hash"), col("parent_hash").as("parent")))
-      .localCheckpoint(eager = true)
+        .select(col("child_hash").as("hash"), col("parent_hash").as("parent"))))
     var props = g.props
-    var dead = props.select("hash").join(links, Seq("hash"), "left_anti")
-      .localCheckpoint(false) // lazy: the round's count materializes it
+    // lazy: the round's count materializes it
+    var dead = checkpoint(props.select("hash").join(links, Seq("hash"), "left_anti"), eager = false)
     while (dead.count() > 0) {
       val parents = dead.select(col("hash").as("parent"))
       val children = links.join(parents, Seq("parent"), "left_semi").select("hash")
       props = props.join(dead, Seq("hash"), "left_anti")
       links = links.join(parents, Seq("parent"), "left_anti")
-      dead = children.join(links, Seq("hash"), "left_anti").localCheckpoint(false)
+      dead = checkpoint(children.join(links, Seq("hash"), "left_anti"), eager = false)
     }
     g.copy(props = props, propRefs = links.where(col("parent").isNotNull)
       .select(col("parent").as("parent_hash"), col("hash").as("child_hash")))

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types._
+import graft.Materialize.checkpoint
 
 /** Structured-Streaming operators over the events table shape
   * (event_id, ts, user_id, event_type, value, props). The reference has no
@@ -125,7 +126,7 @@ object EventStreams {
     // snapshot the (bounded, window × type) emitted frame out of the
     // memory-sink view: driftFromCounts self-joins its input, and a join
     // of two references to one MemoryPlan view fails attribute dedup
-    driftFromCounts(spark.table(name).localCheckpoint(true), windowLen)
+    driftFromCounts(checkpoint(spark.table(name)), windowLen)
   }
 
   /** Per-user behavioral sequences — the sequence-model training feed:

@@ -704,31 +704,21 @@ class PlanQualitySpec extends SparkSuite {
     assert(!plan.contains("BroadcastNestedLoopJoin"), s"nested loop in node2vec plan:\n$plan")
   }
 
-  test("containment verify sets are candidate-bounded: set agg input rides a doc-keyed semi-join") {
+  test("rare-shingle candidates: one per-shingle aggregation, no shingle-keyed join") {
     import spark.implicits._
-    // docs 1/2 share a rare shingle (candidates); 3..6 have singleton
-    // shingles and must never reach the per-doc collect_set
+    // docs 1/2 share a rare shingle hash (the one candidate pair); 3..6
+    // hold singleton hashes and form no pair
     val sh = Seq(
-      (1L, "x"), (1L, "a"), (2L, "x"), (2L, "b"),
-      (3L, "c"), (4L, "d"), (5L, "e"), (6L, "f")).toDF("doc", "shingle")
-    val out = graft.pipeline.Dedup.containmentOnShingles(sh,
-      maxDf = 8, minContain = 0.4, inputDistinct = true, eager = false)
-    out.collect()
-    // round 10 built verify sets for EVERY doc in the corpus — pure waste
-    // when the rare-df window pairs only a sliver of docs (the 1.5 → 3-5 s
-    // regression on dedup_containment_rare). The collect_set aggregation
-    // must sit above a doc-keyed left-semi join against the candidate ids,
-    // and the candidate pairs must come from ONE per-shingle aggregation
-    // (pair arrays unfolded in place), never a rare-table self-join.
+      (1L, 10L), (1L, 11L), (2L, 10L), (2L, 12L),
+      (3L, 13L), (4L, 14L), (5L, 15L), (6L, 16L)).toDF("doc", "__h")
+    val out = graft.pipeline.Dedup.rarePairsOnHashed(sh, maxDf = 8)
+    assert(out.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq == Seq((1L, 2L)))
+    // the candidate pairs must come from ONE per-shingle aggregation
+    // (pair arrays unfolded in place), never a rare-table self-join: a
+    // join keyed on the shingle hash would be the three-pass self-join
+    // shape this rewrite removed
     val plan = out.queryExecution.executedPlan.toString.split("== Initial Plan ==").head
-    assert(plan.contains("collect_set"), s"no set aggregation in plan:\n$plan")
-    assert("""(SortMergeJoin|ShuffledHashJoin|BroadcastHashJoin) \[doc#\d+L?\], \[doc#\d+L?\], LeftSemi"""
-      .r.findFirstIn(plan).isDefined,
-      s"set-agg input not semi-joined on doc:\n$plan")
-    // the candidate stage joins nothing: all Join operators in the plan
-    // are either the set-bounding LeftSemi or the two verify Inner joins
-    // on the pair keys — a join keyed on the shingle hash would be the
-    // three-pass self-join shape this rewrite removed
+    assert(plan.contains("collect_set"), s"no per-shingle doc-set aggregation in plan:\n$plan")
     assert(!"""Join \[__h#\d+L?\]""".r.findFirstIn(plan).isDefined,
       s"shingle-keyed join survived (self-join candidate shape):\n$plan")
   }
@@ -797,7 +787,10 @@ class PlanQualitySpec extends SparkSuite {
   test("adamic-adar: wedge join stays equi-keyed, selection is TakeOrdered") {
     import spark.implicits._
     val pairs = Seq((1L, 3L), (2L, 3L), (1L, 4L), (2L, 4L), (3L, 4L)).toDF("a", "b")
-    val df = graft.analytics.GraphAnalytics.adamicAdar(pairs, topK = 3, eager = false)
+    // the live body the public function checkpoints
+    val ga = graft.analytics.GraphAnalytics
+    val canon = ga.canonicalPairs(pairs)
+    val df = ga.adamicAdarTopK(canon, ga.adamicAdarAdjacency(canon, maxDegree = 1000), topK = 3)
     df.collect()
     val plan = df.queryExecution.executedPlan.toString.split("== Initial Plan ==").head
     assert(!plan.contains("CartesianProduct") && !plan.contains("BroadcastNestedLoopJoin"),
@@ -813,8 +806,9 @@ class PlanQualitySpec extends SparkSuite {
     import spark.implicits._
     val rows = (1L to 40L).map(i => ("g" + (i % 2), i, 10L, (i % 7) / 10.0))
       .toDF("grp", "doc_id", "tk", "sc")
-    val df = graft.pipeline.Curation.tokenBudgetSelect(rows, "doc_id", "tk", "sc",
-      "grp", 60L, eager = false)
+    // the live body the public function checkpoints
+    val cur = graft.pipeline.Curation
+    val df = cur.budgetKept(cur.budgetBase(rows, "doc_id", "tk", "sc", "grp"), "doc_id", 60L)
     df.collect()
     val plan = df.queryExecution.executedPlan.toString.split("== Initial Plan ==").head
     // whole-bucket membership is a semi-join, not an ordered scan
