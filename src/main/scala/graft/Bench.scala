@@ -8,7 +8,7 @@ package graft
   * time, the shape of a long-lived engine. */
 object Bench {
   // a representative slice: traversals, paths, set algebra, aggregation,
-  // joins, windows, GraphX, dedup, ANN, text.
+  // joins, windows, graph analytics, dedup, ANN, text.
   //
   // WHICH GATE ENTRIES ARE *NOT* BENCHED — the rule (two classes only):
   //  1. micro fixtures: entries whose input is a hand-built toy (the
@@ -197,10 +197,13 @@ object Bench {
     "graph_leiden_quality",
     // round-14: the formerly-unbenched non-micro gate entries (VERDICT r13
     // item #3) — real computations whose perf regressions were invisible:
-    // the three remaining GraphX bridge algorithms, the salted skew join,
-    // k-means fit, SimHash near-dup pairs, and the multimodal dispatch
-    // entry (the per-modality decode entries were already timed; this is
-    // the combined fan-out path)
+    // the three graphx_* algorithm entries, the salted skew join, k-means
+    // fit, SimHash near-dup pairs, and the multimodal dispatch entry (the
+    // per-modality decode entries were already timed; this is the
+    // combined fan-out path). graphx_pagerank, graphx_shortest_paths and
+    // graphx_triangles run the same body as their graph_*_df twins —
+    // identical-plan siblings, kept so the per-entry record keeps its
+    // names across rounds.
     "graphx_pagerank", "graphx_shortest_paths", "graphx_triangles",
     "join_salted_skew", "embedding_kmeans", "dedup_simhash_pairs",
     "multimodal_features")

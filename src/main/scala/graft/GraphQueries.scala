@@ -48,9 +48,10 @@ object GraphQueries {
       .ingoing.intersect(edgeProp("InNation")).ingoing
       .intersect(vType("Customer"))
 
-  /** Deterministic long ids for the GraphX bridge (region/nation/supplier/
-    * customer subgraph): disjoint offset ranges so connectedComponents' "min
-    * id in component" is reproducibly the region's key. */
+  /** Deterministic long ids for the whole-graph algorithms over the
+    * region/nation/supplier/customer subgraph: disjoint offset ranges so
+    * connectedComponents' "min id in component" is reproducibly the
+    * region's key. */
   private val analyticsToLong: Column => Column = { id =>
     val prefix = split(id, ":").getItem(0)
     val key = split(id, ":").getItem(1).cast("long")
@@ -69,6 +70,18 @@ object GraphQueries {
       edges = g.edges.where(col("prop_hash").isin(
         TpchGraph.unitHash("InNation"), TpchGraph.unitHash("InRegion"))))
   }
+
+  /** graphx_pagerank / graph_pagerank_df: 10-round static PageRank over
+    * the analytics subgraph, ranks rounded to 5 places. */
+  private def analyticsPageRank(s: SparkSession, d: String): DataFrame =
+    GraphAnalytics.pageRankDF(analyticsSubgraph(graph(s, d)), analyticsToLong, numIter = 10)
+      .select(col("id"), round(col("rank"), 5).as("rank"))
+
+  /** graphx_shortest_paths / graph_sssp_df: hop counts to the five region
+    * landmarks along the member->nation->region edge direction. */
+  private def analyticsShortestPaths(s: SparkSession, d: String): DataFrame =
+    GraphAnalytics.shortestPathsDF(analyticsSubgraph(graph(s, d)), analyticsToLong,
+      landmarks = Seq(0L, 1L, 2L, 3L, 4L))
 
   // -- inventory -------------------------------------------------------------
 
@@ -466,22 +479,17 @@ object GraphQueries {
     }),
     // §2.5 neighbors
     "graph_neighbors" -> ((s, d) => GraphAnalytics.neighbors(graph(s, d), "nation:7")),
-    // GraphX connected components with deterministic long mapping
+    // connected components with deterministic long mapping
     "graphx_cc" -> ((s, d) =>
       GraphAnalytics.connectedComponents(analyticsSubgraph(graph(s, d)), analyticsToLong)),
-    // GraphX static PageRank. On the 3-level member->nation->region DAG the
-    // 10-iteration fixed point has a closed form (members 0.15, nations
-    // 0.15+0.85*0.15*m, regions 0.15+0.85*sum(nation ranks)), which GraphX
-    // then normalizes to sum to |V| — all SQL-expressible, so this is
-    // oracle-checked despite being an iterative algorithm.
-    "graphx_pagerank" -> ((s, d) =>
-      GraphAnalytics.pageRank(analyticsSubgraph(graph(s, d)), analyticsToLong, numIter = 10)
-        .select(col("id"), round(col("rank"), 5).as("rank"))),
-    // the same static PageRank as pure DataFrame power iteration (no
-    // GraphX/RDD round-trip) — identical semantics, same oracle
-    "graph_pagerank_df" -> ((s, d) =>
-      GraphAnalytics.pageRankDF(analyticsSubgraph(graph(s, d)), analyticsToLong, numIter = 10)
-        .select(col("id"), round(col("rank"), 5).as("rank"))),
+    // static PageRank (both names, one body). On the 3-level
+    // member->nation->region DAG the 10-iteration fixed point has a closed
+    // form (members 0.15, nations 0.15+0.85*0.15*m, regions
+    // 0.15+0.85*sum(nation ranks)), then normalized to sum to |V| — all
+    // SQL-expressible, so this is oracle-checked despite being an
+    // iterative algorithm.
+    "graphx_pagerank" -> analyticsPageRank,
+    "graph_pagerank_df" -> analyticsPageRank,
     // personalized PageRank: seed-conditioned relevance from every 10th
     // customer; mass stays seed-local (no |V| normalization), closed-form
     // oracle on the member->nation->region DAG. Emitted as integer
@@ -505,19 +513,10 @@ object GraphQueries {
     "graph_lpa_df" -> ((s, d) =>
       GraphAnalytics.labelPropagationDF(analyticsSubgraph(graph(s, d)),
         analyticsToLong, rounds = 3, symEdges = Some(symEdges(s, d)))),
-    // GraphX ShortestPaths to the region landmarks: hop counts along the
-    // member->nation->region edge direction (regions 0, nations 1,
-    // customers/suppliers 2 — the closed form IS the oracle)
-    "graphx_shortest_paths" -> ((s, d) =>
-      GraphAnalytics.shortestPaths(analyticsSubgraph(graph(s, d)), analyticsToLong,
-        landmarks = Seq(0L, 1L, 2L, 3L, 4L))),
-    // the RDD-free twin: iterated min-propagation with the fused
-    // count+sum convergence probe — same closed-form oracle as the
-    // GraphX bridge (completes the DataFrame-native set: cc, PageRank,
-    // LPA, shortest paths)
-    "graph_sssp_df" -> ((s, d) =>
-      GraphAnalytics.shortestPathsDF(analyticsSubgraph(graph(s, d)), analyticsToLong,
-        landmarks = Seq(0L, 1L, 2L, 3L, 4L))),
+    // shortest paths to the region landmarks (both names, one body):
+    // iterated min-propagation with the fused count+sum convergence probe
+    "graphx_shortest_paths" -> analyticsShortestPaths,
+    "graph_sssp_df" -> analyticsShortestPaths,
     // k-core of the THRESHOLDED co-purchase graph (parts sharing >= 2
     // orders): iterative peeling to the dense backbone. At sf0.01 the
     // 3-core keeps ~935 of 1880 parts after 11 peel rounds — real
@@ -1164,9 +1163,18 @@ object GraphQueries {
   private val custInSegment = edgeIdSql("InSegment", "'customer:'||c_custkey", "'segment:'||c_mktsegment")
   private val orderPlacedBy = edgeIdSql("PlacedBy", "'order:'||o_orderkey", "'customer:'||o_custkey")
 
-  // shared by graphx_pagerank and graph_pagerank_df: on the 3-level
-  // member->nation->region DAG the 10-iteration fixed point has a closed
-  // form, which both engines then normalize to sum |V|
+  // shared by graphx_shortest_paths and graph_sssp_df (one body): hop
+  // counts along the member->nation->region edge direction have a closed
+  // form (regions 0, nations 1, customers/suppliers 2)
+  private val shortestPathsSql =
+    """SELECT 'region:'||r_regionkey AS id, CAST(r_regionkey AS BIGINT) AS landmark, CAST(0 AS BIGINT) AS dist FROM region
+      |UNION ALL SELECT 'nation:'||n_nationkey, CAST(n_regionkey AS BIGINT), CAST(1 AS BIGINT) FROM nation
+      |UNION ALL SELECT 'customer:'||c_custkey, CAST(n_regionkey AS BIGINT), CAST(2 AS BIGINT) FROM customer JOIN nation ON c_nationkey = n_nationkey
+      |UNION ALL SELECT 'supplier:'||s_suppkey, CAST(n_regionkey AS BIGINT), CAST(2 AS BIGINT) FROM supplier JOIN nation ON s_nationkey = n_nationkey""".stripMargin
+
+  // shared by graphx_pagerank and graph_pagerank_df (one body): on the
+  // 3-level member->nation->region DAG the 10-iteration fixed point has a
+  // closed form, normalized to sum |V|
   private val pageRankSql =
     """WITH mem AS (
       |  SELECT n_nationkey, n_regionkey,
@@ -1780,18 +1788,8 @@ object GraphQueries {
         |UNION ALL SELECT 'nation:'||n_nationkey, CAST(n_regionkey AS BIGINT) FROM nation
         |UNION ALL SELECT 'supplier:'||s_suppkey, CAST(n_regionkey AS BIGINT) FROM supplier JOIN nation ON s_nationkey = n_nationkey
         |UNION ALL SELECT 'customer:'||c_custkey, CAST(n_regionkey AS BIGINT) FROM customer JOIN nation ON c_nationkey = n_nationkey""".stripMargin,
-    "graphx_shortest_paths" ->
-      """SELECT 'region:'||r_regionkey AS id, CAST(r_regionkey AS BIGINT) AS landmark, CAST(0 AS BIGINT) AS dist FROM region
-        |UNION ALL SELECT 'nation:'||n_nationkey, CAST(n_regionkey AS BIGINT), CAST(1 AS BIGINT) FROM nation
-        |UNION ALL SELECT 'customer:'||c_custkey, CAST(n_regionkey AS BIGINT), CAST(2 AS BIGINT) FROM customer JOIN nation ON c_nationkey = n_nationkey
-        |UNION ALL SELECT 'supplier:'||s_suppkey, CAST(n_regionkey AS BIGINT), CAST(2 AS BIGINT) FROM supplier JOIN nation ON s_nationkey = n_nationkey""".stripMargin,
-    // the DataFrame min-propagation BFS matches GraphX ShortestPaths
-    // semantics exactly, so both answer to the same closed-form oracle
-    "graph_sssp_df" ->
-      """SELECT 'region:'||r_regionkey AS id, CAST(r_regionkey AS BIGINT) AS landmark, CAST(0 AS BIGINT) AS dist FROM region
-        |UNION ALL SELECT 'nation:'||n_nationkey, CAST(n_regionkey AS BIGINT), CAST(1 AS BIGINT) FROM nation
-        |UNION ALL SELECT 'customer:'||c_custkey, CAST(n_regionkey AS BIGINT), CAST(2 AS BIGINT) FROM customer JOIN nation ON c_nationkey = n_nationkey
-        |UNION ALL SELECT 'supplier:'||s_suppkey, CAST(n_regionkey AS BIGINT), CAST(2 AS BIGINT) FROM supplier JOIN nation ON s_nationkey = n_nationkey""".stripMargin,
+    "graphx_shortest_paths" -> shortestPathsSql,
+    "graph_sssp_df" -> shortestPathsSql,
     "graph_kcore_df" -> kCoreSql,
     "graph_adamic_adar" ->
       """WITH e AS MATERIALIZED (
@@ -1853,8 +1851,6 @@ object GraphQueries {
         |              WHERE n_regionkey = r_regionkey)
         |  FROM region)
         |SELECT id, CAST(u AS BIGINT) AS rank_u6 FROM ranks""".stripMargin,
-    // the DataFrame power iteration matches GraphX static PageRank
-    // semantics exactly, so both answer to the same closed-form oracle
     "graph_pagerank_df" -> pageRankSql,
     // unrolled 2-iteration integer HITS over the same member→nation→region
     // edges the pagerank oracle walks

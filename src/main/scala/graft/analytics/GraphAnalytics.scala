@@ -1,17 +1,17 @@
 package graft.analytics
 
-import org.apache.spark.graphx.{Edge, Graph => XGraph, VertexId}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 import graft.model.GraphStore
 import graft.Materialize.{checkpoint, using}
 
 /** The reference's declared-but-unimplemented analytics surface
   * (`Graph`/`DirectedGraph` traits, lib.rs:16-65; design target
-  * docs/gravity.adoc:240-305) realized on DataFrames, plus a GraphX bridge
-  * for whole-graph algorithms (BASELINE: "GraphX for analytics queries").
+  * docs/gravity.adoc:240-305) realized on DataFrames, plus whole-graph
+  * algorithms, each on one DataFrame kernel. GraphX stays the parity
+  * oracle of the test suite (BASELINE: "GraphX for analytics queries"),
+  * not an engine path.
   */
 object GraphAnalytics {
 
@@ -76,74 +76,42 @@ object GraphAnalytics {
     if (rows.head.isNullAt(0)) None else Some(rows.head.getDouble(0))
   }
 
-  /** Bridge to GraphX. `toLong` must be a deterministic, collision-free
-    * mapping from the string vertex id to a long (GraphX VertexId) — results
-    * of id-sensitive algorithms (e.g. connectedComponents returns the MIN
-    * long id per component) are then reproducible across runs/partitionings,
-    * unlike zipWithIndex. */
-  def toGraphX(g: GraphStore, toLong: Column => Column): XGraph[String, Int] = {
-    // Pregel supersteps pay fixed per-partition scheduling cost per
-    // iteration; size partition count to the data (~1M edges per partition,
-    // capped at the session parallelism) instead of inheriting the input's.
-    val parts = math.max(2, math.min(
-      g.vertices.sparkSession.sparkContext.defaultParallelism,
-      (g.edges.count() / 1000000L).toInt + 1))
-    val vRDD = longVerts(g, toLong)
-      .rdd.map(r => (r.getLong(0): VertexId, r.getString(1)))
-      .coalesce(parts)
-    val eRDD = g.edges.select(toLong(col("src")), toLong(col("dst")))
-      .rdd.map(r => Edge(r.getLong(0), r.getLong(1), 1))
-      .coalesce(parts)
-    XGraph(vRDD, eRDD, defaultVertexAttr = null.asInstanceOf[String],
-      edgeStorageLevel = StorageLevel.MEMORY_AND_DISK,
-      vertexStorageLevel = StorageLevel.MEMORY_AND_DISK)
-  }
-
-  /** The long-id vertex map (vid, id) of `g`. */
+  /** The long-id vertex map (vid, id) of `g`. `toLong` must be a
+    * deterministic, collision-free mapping from the string vertex id to a
+    * long — results of id-sensitive algorithms (e.g. connectedComponents
+    * returns the MIN long id per component) are then reproducible across
+    * runs and partitionings, unlike zipWithIndex. */
   private def longVerts(g: GraphStore, toLong: Column => Column): DataFrame =
     g.vertices.select(toLong(col("id")).as("vid"), col("id"))
 
   /** `body` over `g`'s [[longVerts]] and its directed long-id (src, dst)
-    * edges, both persisted for the call and released after it — the
-    * prologue of the iterative algorithms that read both every round. */
+    * edges — the prologue of the iterative algorithms that read the edges
+    * every round. The edges are persisted for the call and released after
+    * it; the vertex map stays a plain projection, because the algorithms
+    * read it only in the frame they return, after the scope has ended. */
   private def withLongIds[A](g: GraphStore, toLong: Column => Column)
                             (body: (DataFrame, DataFrame) => A): A =
-    using(longVerts(g, toLong)) { verts =>
-      using(g.edges.select(toLong(col("src")).as("src"), toLong(col("dst")).as("dst"))) {
-        body(verts, _)
-      }
+    using(g.edges.select(toLong(col("src")).as("src"), toLong(col("dst")).as("dst"))) {
+      body(longVerts(g, toLong), _)
     }
 
-  /** Connected components (undirected). Returns (id, component) where
-    * component = the minimum mapped long id in the component. */
+  /** Connected components (undirected). Returns (id, component) for every
+    * vertex, where component = the minimum mapped long id in the
+    * component: [[graft.pipeline.ConnectedComponents.labels]] over the
+    * long-id edges, so an isolated vertex keeps its own long id. */
   def connectedComponents(g: GraphStore, toLong: Column => Column): DataFrame = {
-    val graph = toGraphX(g, toLong)
-    val spark = g.vertices.sparkSession
-    import spark.implicits._
-    val cc = graph.connectedComponents().vertices.map { case (vid, comp) => (vid, comp) }
-      .toDF("vid", "component")
+    val labels = graft.pipeline.ConnectedComponents.labels(
+      g.edges.select(toLong(col("src")).as("a"), toLong(col("dst")).as("b")))
     longVerts(g, toLong)
-      .join(cc, Seq("vid"))
-      .select(col("id"), col("component"))
+      .join(labels.select(col("id").as("vid"), col("cluster")), Seq("vid"), "left")
+      .select(col("id"), coalesce(col("cluster"), col("vid")).as("component"))
   }
 
-  /** Static PageRank (numIter fixed iterations, resetProb 0.15). */
-  def pageRank(g: GraphStore, toLong: Column => Column, numIter: Int = 10): DataFrame = {
-    val graph = toGraphX(g, toLong)
-    val spark = g.vertices.sparkSession
-    import spark.implicits._
-    val ranks = graph.staticPageRank(numIter).vertices
-      .map { case (vid, r) => (vid, r) }.toDF("vid", "rank")
-    longVerts(g, toLong)
-      .join(ranks, Seq("vid"))
-      .select(col("id"), col("rank"))
-  }
-
-  /** Static PageRank as pure DataFrame power iteration — same semantics
-    * as [[pageRank]] (resetProb restart, contributions r/outdeg along
-    * edge direction, dangling mass not redistributed, final ranks
-    * normalized to sum |V|) without the RDD round-trip: per-source shares
-    * and per-destination sums are codegen'd hash aggregations, AQE sizes
+  /** Static PageRank as pure DataFrame power iteration, with GraphX's
+    * static PageRank semantics (resetProb restart, contributions r/outdeg
+    * along edge direction, dangling mass not redistributed, final ranks
+    * normalized to sum |V|; the test suite checks the parity): per-source
+    * shares and per-destination sums are codegen'd hash aggregations, AQE sizes
     * every shuffle, and a checkpoint every 5 rounds ([[Superstep.rounds]])
     * keeps plan depth bounded. On a real cluster the rank table and edge
     * list co-partition on the vertex key across iterations, so the join
@@ -181,17 +149,16 @@ object GraphAnalytics {
           .select(col("vid"), col("__outdeg"),
             (lit(resetProb) + lit(1.0 - resetProb) * coalesce(col("__in"), lit(0.0))).as("r"))
       }
-      // final round assembles ranks for EVERY vertex (sinks included) from
-      // the last message pass, then GraphX-style normalizes the sum to |V|
-      val ranks = checkpoint(verts.select("vid")
-        .join(inbound(rr), Seq("vid"), "left")
-        .select(col("vid"),
-          (lit(resetProb) + lit(1.0 - resetProb) * coalesce(col("__in"), lit(0.0))).as("r")))
+      // the last message pass is checkpointed; the returned frame assembles
+      // ranks for EVERY vertex (sinks included) from it, then GraphX-style
+      // normalizes the sum to |V|
+      val lastIn = checkpoint(inbound(rr))
+      val ranks = verts.join(lastIn, Seq("vid"), "left")
+        .select(col("id"),
+          (lit(resetProb) + lit(1.0 - resetProb) * coalesce(col("__in"), lit(0.0))).as("r"))
       val norm = ranks.agg(sum("r").as("__s"), count(lit(1)).as("__n"))
       ranks.crossJoin(broadcast(norm))
-        .select(col("vid"), (col("r") * col("__n") / col("__s")).as("rank"))
-        .join(verts, Seq("vid"))
-        .select(col("id"), col("rank"))
+        .select(col("id"), (col("r") * col("__n") / col("__s")).as("rank"))
     }
   }
 
@@ -318,11 +285,11 @@ object GraphAnalytics {
     }
   }
 
-  /** DataFrame-native landmark shortest paths — [[shortestPaths]] (the
-    * GraphX bridge) without the RDD round-trip, same semantics: hop
-    * counts following edge direction from each vertex toward the
-    * landmarks, one row per (vertex, REACHABLE landmark), unreachable
-    * pairs absent, landmarks at distance 0 to themselves. Distances
+  /** DataFrame-native landmark shortest paths with GraphX ShortestPaths
+    * semantics (the test suite checks the parity): hop counts following
+    * edge direction from each vertex toward the landmarks, one row per
+    * (vertex, REACHABLE landmark), unreachable pairs absent, landmarks
+    * at distance 0 to themselves. Distances
     * propagate dst→src — an edge (s, d) lets s reach every landmark d
     * reaches at one more hop — the exact dual of GraphX's Pregel
     * message flow in ShortestPaths.
@@ -355,26 +322,6 @@ object GraphAnalytics {
         (p.getLong(0), p.getLong(1))
       }).join(verts, Seq("vid")).select(col("id"), col("landmark"), col("dist"))
     }
-  }
-
-  /** Single-source-style shortest paths to a LANDMARK set (GraphX
-    * ShortestPaths: hop counts following edge direction from each vertex
-    * toward the landmarks). Returns one row per (vertex, reachable
-    * landmark): (id, landmark, dist) — unreachable pairs are absent,
-    * matching the reference Graph-trait reachability semantics where a
-    * query simply returns no result. */
-  def shortestPaths(g: GraphStore, toLong: Column => Column,
-                    landmarks: Seq[Long]): DataFrame = {
-    val graph = toGraphX(g, toLong)
-    val spark = g.vertices.sparkSession
-    import spark.implicits._
-    val sp = org.apache.spark.graphx.lib.ShortestPaths.run(graph, landmarks)
-      .vertices
-      .flatMap { case (vid, dists) => dists.map { case (lm, d) => (vid, lm, d.toLong) } }
-      .toDF("vid", "landmark", "dist")
-    longVerts(g, toLong)
-      .join(sp, Seq("vid"))
-      .select(col("id"), col("landmark"), col("dist"))
   }
 
   /** Co-occurrence pair graph from a (key, item) long table — the
@@ -1102,8 +1049,8 @@ object GraphAnalytics {
     }
   }
 
-  /** DataFrame-native per-vertex triangle count — [[triangleCount]]
-    * (the GraphX bridge) without the RDD round-trip, same semantics:
+  /** DataFrame-native per-vertex triangle count with GraphX
+    * triangleCount semantics (the test suite checks the parity):
     * the graph is treated as undirected simple (duplicate edges merged,
     * self-loops dropped), and EVERY vertex is reported, 0 when
     * triangle-free.
@@ -1122,14 +1069,12 @@ object GraphAnalytics {
     * map-side-combinable sum over the three exploded corners. */
   def triangleCountDF(g: GraphStore, toLong: Column => Column): DataFrame = {
     val e0 = g.edges.select(toLong(col("src")).as("u"), toLong(col("dst")).as("v"))
-    using(longVerts(g, toLong)) { verts =>
-      using(e0.where(col("u") =!= col("v"))
-          .select(least(col("u"), col("v")).as("a"), greatest(col("u"), col("v")).as("b"))
-          .distinct()) { canon =>
-        val (corners, _) = triangleCorners(canon)
-        verts.join(corners, Seq("vid"), "left")
-          .select(col("id"), coalesce(col("__n"), lit(0L)).as("triangles"))
-      }
+    using(e0.where(col("u") =!= col("v"))
+        .select(least(col("u"), col("v")).as("a"), greatest(col("u"), col("v")).as("b"))
+        .distinct()) { canon =>
+      val (corners, _) = triangleCorners(canon)
+      longVerts(g, toLong).join(corners, Seq("vid"), "left")
+        .select(col("id"), coalesce(col("__n"), lit(0L)).as("triangles"))
     }
   }
 
@@ -1723,20 +1668,5 @@ object GraphAnalytics {
             col("degree_sum").cast(dec) * col("degree_sum").cast(dec)).cast("double"),
           (col("__M").cast(dec) * col("__M").cast(dec)).cast("double")), 6)
           .as("q_contrib"))
-  }
-
-  /** Per-vertex triangle count (GraphX semantics: graph treated as
-    * undirected, needs canonical edge orientation). */
-  def triangleCount(g: GraphStore, toLong: Column => Column): DataFrame = {
-    val graph = toGraphX(g, toLong)
-      .convertToCanonicalEdges()
-      .partitionBy(org.apache.spark.graphx.PartitionStrategy.RandomVertexCut)
-    val spark = g.vertices.sparkSession
-    import spark.implicits._
-    val tc = graph.triangleCount().vertices
-      .map { case (vid, n) => (vid, n) }.toDF("vid", "triangles")
-    longVerts(g, toLong)
-      .join(tc, Seq("vid"))
-      .select(col("id"), col("triangles"))
   }
 }

@@ -6,8 +6,9 @@ import graft.Materialize.using
 import graft.analytics.Superstep
 
 /** Connected components over an undirected edge list as pure DataFrame
-  * operations — the RDD-free alternative to the GraphX bridge in
-  * [[Curation.dupClusters]] for the duplicate-clustering path.
+  * operations — graft's one cc kernel: the duplicate-clustering path,
+  * Leiden refinement and [[graft.analytics.GraphAnalytics.connectedComponents]]
+  * all run on it (GraphX's cc is only the test suite's parity oracle).
   *
   * Algorithm: min-label propagation with pointer jumping. Each round
   * every node takes the minimum label in its closed neighborhood (one
@@ -18,7 +19,7 @@ import graft.analytics.Superstep
   * O(log diameter) rounds — 1-2 for the star/clique graphs duplicate
   * detection produces, ~20 even for a path of a million nodes.
   *
-  * Scale design (the reason this exists alongside GraphX):
+  * Scale design (why a DataFrame kernel rather than GraphX's Pregel):
   *   - every step is a Catalyst plan — AQE sizes the shuffles, the label
   *     table stays (id, label) longs end-to-end, and whole-stage codegen
   *     covers the join+agg pipeline; nothing round-trips through

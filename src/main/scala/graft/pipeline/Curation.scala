@@ -1,6 +1,5 @@
 package graft.pipeline
 
-import org.apache.spark.graphx.{Edge, Graph => XGraph}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.Materialize.{checkpoint, using}
@@ -63,27 +62,6 @@ object Curation {
       .select(explode(col("ids")).as("a"), col("ids"))
       .select(col("a"), explode(col("ids")).as("b"))
       .where(col("a") < col("b"))
-  }
-
-  /** Duplicate clusters from a candidate-pair list (a, b numeric ids):
-    * connected components over the pair graph (GraphX), cluster id = the
-    * minimum member id. Returns (id, cluster) for every id in some pair. */
-  def dupClusters(pairs: DataFrame): DataFrame = {
-    val spark = pairs.sparkSession
-    import spark.implicits._
-    // the sizing count and the edge scan share one materialization —
-    // without the scoped persist the pair plan (groupBy + join upstream)
-    // would execute twice, once for count() and once for the RDD pass
-    using(pairs.select(col("a").cast("long"), col("b").cast("long"))) { p =>
-      val parts = math.max(2, math.min(
-        spark.sparkContext.defaultParallelism,
-        (p.count() / 1000000L).toInt + 1))
-      val edges = p.rdd.map(r => Edge(r.getLong(0), r.getLong(1), 1)).coalesce(parts)
-      checkpoint(XGraph.fromEdges(edges, defaultValue = 0)
-        .connectedComponents().vertices
-        .map { case (vid, comp) => (vid, comp) }
-        .toDF("id", "cluster"))
-    }
   }
 
   /** End-to-end NEAR-duplicate curation, the composed 100 TB dedup
@@ -1144,21 +1122,23 @@ object Curation {
                          idCol: String, textCol: String, n: Int = 8,
                          bitsPerItem: Int = 10): DataFrame = {
     import graft.functions.BloomFunctions
-    using(TextAnalysis.shingleRows(benchmark, idCol, textCol, n)
-        .select("shingle").distinct()) { benchGrams =>
-      val nGrams = benchGrams.count()
-      if (nGrams == 0L) corpus
-      else {
-        val sketch = benchGrams
-          .agg(BloomFunctions.bloomAgg(col("shingle"), nGrams, bitsPerItem))
-          .head.getAs[Array[Byte]](0)
-        val hits = TextAnalysis.shingleRows(corpus, idCol, textCol, n)
-          .where(BloomFunctions.mightContain(lit(sketch), col("shingle")))
-          .dropDuplicates(idCol, "shingle")
-          .join(benchGrams, Seq("shingle"), "left_semi") // exact FP removal
-          .select(idCol).distinct()
-        corpus.join(hits, Seq(idCol), "left_anti")
-      }
+    // a checkpoint, not a scoped cache: the returned frame's exact
+    // verification reads the gram set lazily, after this call; the count
+    // is the action that fills it
+    val benchGrams = checkpoint(TextAnalysis.shingleRows(benchmark, idCol, textCol, n)
+      .select("shingle").distinct(), eager = false)
+    val nGrams = benchGrams.count()
+    if (nGrams == 0L) corpus
+    else {
+      val sketch = benchGrams
+        .agg(BloomFunctions.bloomAgg(col("shingle"), nGrams, bitsPerItem))
+        .head.getAs[Array[Byte]](0)
+      val hits = TextAnalysis.shingleRows(corpus, idCol, textCol, n)
+        .where(BloomFunctions.mightContain(lit(sketch), col("shingle")))
+        .dropDuplicates(idCol, "shingle")
+        .join(benchGrams, Seq("shingle"), "left_semi") // exact FP removal
+        .select(idCol).distinct()
+      corpus.join(hits, Seq(idCol), "left_anti")
     }
   }
 

@@ -43,7 +43,7 @@ class AnalyticsSpec extends SparkSuite {
   }
 
   test("pagerank: bridge target accumulates more rank than the loner") {
-    val pr = GraphAnalytics.pageRank(g, toLong, numIter = 10).collect()
+    val pr = GraphAnalytics.pageRankDF(g, toLong, numIter = 10).collect()
       .map(r => r.getString(0) -> r.getDouble(1)).toMap
     assert(pr("v:d") > pr("v:lone"))
     assert(pr.values.forall(_ > 0))
@@ -53,7 +53,7 @@ class AnalyticsSpec extends SparkSuite {
     // cyclic graph (the triangles), a dangling sink path, and an isolated
     // vertex — exercises non-closed-form convergence, dangling leakage,
     // and the final sum-to-|V| normalization
-    val gx = GraphAnalytics.pageRank(g, toLong, numIter = 10).collect()
+    val gx = GraphXReference.pageRank(g, toLong, numIter = 10).collect()
       .map(r => r.getString(0) -> r.getDouble(1)).toMap
     val df = GraphAnalytics.pageRankDF(g, toLong, numIter = 10).collect()
       .map(r => r.getString(0) -> r.getDouble(1)).toMap
@@ -96,7 +96,7 @@ class AnalyticsSpec extends SparkSuite {
   test("shortest paths: hop counts along edge direction to the landmark") {
     // landmark d (=4): a->b->c->d = 3, c->d = 1, d = 0; e/f reach d via
     // e->f->d; the loner has no path -> absent from the result
-    val sp = GraphAnalytics.shortestPaths(g, toLong, landmarks = Seq(4L)).collect()
+    val sp = GraphAnalytics.shortestPathsDF(g, toLong, landmarks = Seq(4L)).collect()
       .map(r => r.getString(0) -> r.getLong(2)).toMap
     assert(sp("v:d") == 0L && sp("v:c") == 1L && sp("v:b") == 2L && sp("v:a") == 3L)
     assert(sp("v:f") == 1L && sp("v:e") == 2L)
@@ -119,7 +119,7 @@ class AnalyticsSpec extends SparkSuite {
     // multi-landmark (one on each triangle), cycles, an unreachable
     // loner — the full reachability surface, keyed by (id, landmark)
     val lms = Seq(1L, 4L)
-    val gx = GraphAnalytics.shortestPaths(g, toLong, lms).collect()
+    val gx = GraphXReference.shortestPaths(g, toLong, lms).collect()
       .map(r => (r.getString(0), r.getLong(1)) -> r.getLong(2)).toMap
     val df = GraphAnalytics.shortestPathsDF(g, toLong, lms).collect()
       .map(r => (r.getString(0), r.getLong(1)) -> r.getLong(2)).toMap
@@ -131,7 +131,7 @@ class AnalyticsSpec extends SparkSuite {
   }
 
   test("triangle count: DataFrame compact-forward matches GraphX exactly") {
-    val gx = GraphAnalytics.triangleCount(g, toLong).collect()
+    val gx = GraphXReference.triangleCount(g, toLong).collect()
       .map(r => r.getString(0) -> r.getAs[Number](1).longValue).toMap
     val df = GraphAnalytics.triangleCountDF(g, toLong).collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
@@ -1259,32 +1259,29 @@ class AnalyticsSpec extends SparkSuite {
       val rg = b.toStore(spark).persistAll()
       val tl: org.apache.spark.sql.Column => org.apache.spark.sql.Column =
         id => split(id, ":").getItem(1).cast("long")
-      val gxT = GraphAnalytics.triangleCount(rg, tl).collect()
+      val gxT = GraphXReference.triangleCount(rg, tl).collect()
         .map(r => r.getString(0) -> r.getAs[Number](1).longValue).toMap
       val dfT = GraphAnalytics.triangleCountDF(rg, tl).collect()
         .map(r => r.getString(0) -> r.getLong(1)).toMap
       assert(dfT == gxT, s"seed $seed triangles: df $dfT vs gx $gxT")
       val lms = Seq(0L, 1L, 2L)
-      val gxS = GraphAnalytics.shortestPaths(rg, tl, lms).collect()
+      val gxS = GraphXReference.shortestPaths(rg, tl, lms).collect()
         .map(r => (r.getString(0), r.getLong(1)) -> r.getLong(2)).toMap
       val dfS = GraphAnalytics.shortestPathsDF(rg, tl, lms).collect()
         .map(r => (r.getString(0), r.getLong(1)) -> r.getLong(2)).toMap
       assert(dfS == gxS, s"seed $seed sssp diverged")
-      val gxC = GraphAnalytics.connectedComponents(rg, tl).collect()
+      val gxC = GraphXReference.connectedComponents(rg, tl).collect()
         .map(r => r.getString(0) -> r.getLong(1)).toMap
-      val dfC = pipeline.ConnectedComponents.labels(
-          rg.edges.select(tl(col("src")).as("a"), tl(col("dst")).as("b"))).collect()
-        .map(r => "r:" + r.getLong(0) -> r.getLong(1)).toMap
-      // the DF cc runs on edge-touched vertices only; compare that slice
-      dfC.foreach { case (id, c) =>
-        assert(gxC(id) == c, s"seed $seed cc: $id df $c vs gx ${gxC(id)}")
-      }
+      val dfC = GraphAnalytics.connectedComponents(rg, tl).collect()
+        .map(r => r.getString(0) -> r.getLong(1)).toMap
+      // every vertex, isolated ones (own long id) included
+      assert(dfC.size == n && dfC == gxC, s"seed $seed cc: df $dfC vs gx $gxC")
     }
   }
 
   test("triangle count: every triangle member counts its triangle") {
-    val tc = GraphAnalytics.triangleCount(g, toLong).collect()
-      .map(r => r.getString(0) -> r.getInt(1)).toMap
+    val tc = GraphAnalytics.triangleCountDF(g, toLong).collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(tc("v:a") == 1 && tc("v:e") == 1 && tc("v:lone") == 0)
   }
 

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.pipeline.Curation
+import graft.pipeline.{ConnectedComponents, Curation}
 
 class CurationSpec extends SparkSuite {
 
@@ -110,9 +110,9 @@ class CurationSpec extends SparkSuite {
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(star == Set((1L, 2L), (1L, 3L), (4L, 5L)))
     // cc over the star edges labels identically to cc over the full clique
-    val viaStar = Curation.dupClusters(Curation.exactDupStarPairs(docs, "doc_id", "text"))
+    val viaStar = ConnectedComponents.labels(Curation.exactDupStarPairs(docs, "doc_id", "text"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val viaClique = Curation.dupClusters(Curation.exactDupCliquePairs(docs, "doc_id", "text"))
+    val viaClique = ConnectedComponents.labels(Curation.exactDupCliquePairs(docs, "doc_id", "text"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(viaStar == viaClique)
     assert(viaStar == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 4L, 5L -> 4L))
@@ -128,9 +128,9 @@ class CurationSpec extends SparkSuite {
     assert(capped == Set((4L, 5L)))
   }
 
-  test("dupClusters: connected components label each dup group by min id") {
+  test("ConnectedComponents.labels: each dup group labeled by its min id") {
     val pairs = Seq((1L, 2L), (2L, 3L), (4L, 5L)).toDF("a", "b")
-    val clusters = Curation.dupClusters(pairs)
+    val clusters = ConnectedComponents.labels(pairs)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(clusters == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 4L, 5L -> 4L))
   }
@@ -511,7 +511,6 @@ class CurationSpec extends SparkSuite {
   }
 
   test("ConnectedComponents.labels matches GraphX dupClusters on assorted graphs") {
-    import graft.pipeline.ConnectedComponents
     // a long path (deep propagation), a clique, a star, reversed edges,
     // and two joined chains — the shapes near-dup pair graphs produce
     val path = (0L until 40L).sliding(2).map(w => (w(1), w(0))).toSeq // reversed
@@ -521,14 +520,13 @@ class CurationSpec extends SparkSuite {
     val pairs = (path ++ clique ++ star ++ vee).toDF("a", "b")
     val df = ConnectedComponents.labels(pairs)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val gx = Curation.dupClusters(pairs)
+    val gx = GraphXReference.dupClusters(pairs)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(df == gx)
     assert(df(39L) == 0L && df(55L) == 50L && df(70L) == 60L && df(85L) == 80L)
   }
 
   test("ConnectedComponents.labels: randomized graphs vs driver union-find") {
-    import graft.pipeline.ConnectedComponents
     val rnd = new scala.util.Random(20260813L) // fixed seed: reproducible
     for (trial <- 1 to 3) {
       val nNodes = 60 + trial * 30
@@ -551,7 +549,6 @@ class CurationSpec extends SparkSuite {
   }
 
   test("ConnectedComponents.labels converges fast on a path graph") {
-    import graft.pipeline.ConnectedComponents
     // 200-node path: plain min-propagation would need ~200 rounds; the
     // pointer-jumping variant must land well inside the default budget
     val pairs = (0L until 200L).sliding(2).map(w => (w(0), w(1))).toSeq.toDF("a", "b")
@@ -561,7 +558,6 @@ class CurationSpec extends SparkSuite {
   }
 
   test("cc spends ONE job per round: convergence fused into the checkpoint action") {
-    import graft.pipeline.ConnectedComponents
     // star 1-{2,3}: round 1 relabels, round 2 proves the fixpoint
     val (labels, jobs) = countJobs(ConnectedComponents.labels(Seq((1L, 2L), (1L, 3L)).toDF("a", "b"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap)

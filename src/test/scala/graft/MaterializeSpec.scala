@@ -80,27 +80,41 @@ class MaterializeSpec extends SparkSuite {
     }
   }
 
-  test("no module but graft.Materialize checkpoints, persists or unpersists") {
-    val root = Paths.get("src/main/scala")
-    assert(Files.isDirectory(root), s"source tree not found under ${root.toAbsolutePath}")
-    val call = """localCheckpoint\(|\.persist\(|\.cache\(\)|\.unpersist\(""".r
-    val walk = Files.walk(root)
+  private val mainRoot = Paths.get("src/main/scala")
+
+  /** Every `src/main` Scala source with its numbered code lines: block
+    * comments blanked (newlines kept, so line numbers hold), line
+    * comments cut. */
+  private def mainSources: List[(Path, Seq[(String, Int)])] = {
+    assert(Files.isDirectory(mainRoot), s"source tree not found under ${mainRoot.toAbsolutePath}")
+    val walk = Files.walk(mainRoot)
     val sources = try walk.iterator.asScala.filter(_.toString.endsWith(".scala")).toList
     finally walk.close()
-    def code(p: Path): Seq[(String, Int)] = {
-      // blank block comments out (newlines kept, so line numbers hold),
-      // then cut line comments
+    sources.map { p =>
       val text = """(?s)/\*.*?\*/""".r.replaceAllIn(new String(Files.readAllBytes(p), "UTF-8"),
         m => m.matched.replaceAll("[^\n]", " "))
-      text.split("\n", -1).toSeq.zipWithIndex.map { case (l, i) =>
+      p -> text.split("\n", -1).toSeq.zipWithIndex.map { case (l, i) =>
         (l.indexOf("//") match { case -1 => l; case k => l.take(k) }, i + 1)
       }
     }
+  }
+
+  test("no module but graft.Materialize checkpoints, persists or unpersists") {
+    val call = """localCheckpoint\(|\.persist\(|\.cache\(\)|\.unpersist\(""".r
+    val sources = mainSources
     val offenders = for {
-      p <- sources if p.getFileName.toString != "Materialize.scala"
-      (line, n) <- code(p) if call.findFirstIn(line).isDefined
-    } yield s"${root.relativize(p)}:$n: ${line.trim}"
-    assert(sources.exists(_.getFileName.toString == "Materialize.scala"))
+      (p, lines) <- sources if p.getFileName.toString != "Materialize.scala"
+      (line, n) <- lines if call.findFirstIn(line).isDefined
+    } yield s"${mainRoot.relativize(p)}:$n: ${line.trim}"
+    assert(sources.exists(_._1.getFileName.toString == "Materialize.scala"))
     assert(offenders.isEmpty, offenders.mkString("materialization outside graft.Materialize:\n", "\n", ""))
+  }
+
+  test("no src/main module uses org.apache.spark.graphx (GraphX is the test oracle)") {
+    val offenders = for {
+      (p, lines) <- mainSources
+      (line, n) <- lines if line.contains("org.apache.spark.graphx")
+    } yield s"${mainRoot.relativize(p)}:$n: ${line.trim}"
+    assert(offenders.isEmpty, offenders.mkString("GraphX in the engine:\n", "\n", ""))
   }
 }

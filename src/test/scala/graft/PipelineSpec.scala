@@ -145,7 +145,7 @@ class PipelineSpec extends SparkSuite {
         .write.mode("overwrite").format("noop").save()
       Dedup.ngramJaccardPairs(corpus, "doc_id", "text", minSim = 0.3)
         .write.mode("overwrite").format("noop").save()
-      graft.pipeline.Curation.dupClusters(
+      graft.pipeline.ConnectedComponents.labels(
           graft.pipeline.Curation.exactDupStarPairs(corpus, "doc_id", "text"))
         .write.mode("overwrite").format("noop").save()
     }

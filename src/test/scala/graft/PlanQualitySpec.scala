@@ -298,6 +298,29 @@ class PlanQualitySpec extends SparkSuite {
       s"probe not upstream of any exchange (nothing left to save):\n$plan")
   }
 
+  test("bloom decontamination verifies against a checkpoint of the benchmark grams") {
+    import spark.implicits._
+    import org.apache.spark.sql.catalyst.plans.LeftSemi
+    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Deduplicate, Join}
+    import org.apache.spark.sql.execution.LogicalRDD
+    val corpus = Seq((1L, "one two three four five six"),
+      (2L, "clean words nothing shared here at all")).toDF("doc_id", "text")
+    val bench = Seq((9L, "one two three four five")).toDF("doc_id", "text")
+    val dc = graft.pipeline.Curation.decontaminateBloom(corpus, bench, "doc_id", "text", n = 5)
+    // the returned frame is lazy: each action on it reads the benchmark
+    // side of the exact FP-removal semi-join, which must be a checkpoint
+    // scan, not the benchmark's shingle distinct run again
+    val plan = dc.queryExecution.analyzed
+    val benchSides = plan.collect { case j: Join if j.joinType == LeftSemi => j.right }
+    assert(benchSides.nonEmpty, s"no exact verification semi-join:\n$plan")
+    benchSides.foreach { side =>
+      assert(side.exists(_.isInstanceOf[LogicalRDD]), s"benchmark side not a checkpoint scan:\n$side")
+      assert(!side.exists(p => p.isInstanceOf[Aggregate] || p.isInstanceOf[Deduplicate]),
+        s"benchmark side recomputes the shingle distinct:\n$side")
+    }
+    assert(dc.collect().map(_.getLong(0)).toSet == Set(2L))
+  }
+
   test("sketch aggregates: kmv partial-aggregates map-side, countmin broadcasts counters") {
     import spark.implicits._
     val df = spark.range(500).select(concat(lit("k"), col("id") % 7).as("v"))
