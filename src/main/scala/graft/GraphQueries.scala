@@ -8,6 +8,7 @@ import graft.exec.ZoeCompiler
 import graft.Materialize.{checkpoint, persist}
 import graft.model.{GraphStore, Hashing, PropValue}
 import graft.ql._
+import graft.SparkEntry.{Entry, Micro, SiblingOf}
 
 /** Driver-facing query inventory: one entry per operator of SURVEY.md §2,
   * exercised over the deterministic TpchGraph mapping so each graph query has
@@ -220,715 +221,6 @@ object GraphQueries {
           sym.select(col("a").as("vid")).distinct().select(col("vid"), col("vid").as("lbl"))),
         rounds)
       .select(col("vid"), col("lbl").as("label"))
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // stream→graph ingestion through the REAL streaming engine: events are
-    // written as a multi-file source, read with maxFilesPerTrigger=2 (3
-    // micro-batches), and folded into a persisted store via foreachBatch +
-    // idempotent bulk mutations; the oracle recomputes the expected
-    // vertex/edge counts relationally (memoized per (session, dir) so
-    // repeated harness invocations don't accumulate temp stores)
-    "stream_graph_ingest" -> Memo.coldResult("stream_graph_ingest", Memo.Stream) { (s, d) =>
-      val src = ingestFixture(s, d)
-      // the graph STORE is the stream's sink — fresh per run, its writes
-      // are part of the measured ingest (only the source is staged)
-      val db = Memo.tempDir("graft-sgi-db")
-      graft.streaming.EventStreams.streamIntoGraph(s, src, db, maxFilesPerTrigger = 2)
-      val g = graft.model.GraphStore.load(s, db)
-      g.vertices.agg(count(lit(1)).as("n_vertices"))
-        .crossJoin(g.edges.agg(count(lit(1)).as("n_edges")))
-    },
-    // §2.1 V.All
-    "zoe_v_all" -> ((s, d) => compiler(s, d).run(VertexQuery.all).vertices),
-    // §2.1 V.Specific (NOT existence-checked, reference parity)
-    "zoe_v_specific" -> ((s, d) =>
-      compiler(s, d).run(VertexQuery.fromIds(Seq("nation:1", "nation:7", "ghost:99"))).vertices),
-    // §2.1 V.Property via index equi-join
-    "zoe_v_property" -> ((s, d) => compiler(s, d).run(nationV("NATION_7")).vertices),
-    // §2.3 ReferencingProperties + V.Property: SchemaType lattice lookup
-    "zoe_v_property_schema" -> ((s, d) => compiler(s, d).run(vType("Customer")).vertices),
-    // §2.3 P.FromTo as a top-level P query (custom orderable keys)
-    "zoe_p_fromto" -> ((s, d) =>
-      compiler(s, d).run(PropertyQuery.fromTo("psz_010", "psz_021")).properties),
-    // §2.3 FromTo range -> vertices
-    "zoe_v_fromto" -> ((s, d) =>
-      compiler(s, d).run(PropertyQuery.fromTo("psz_010", "psz_021").referencingVertices).vertices),
-    // §2.1 V.In of E.In: one hop back along InNation
-    "zoe_hop_in" -> ((s, d) => compiler(s, d).run(membersOf("NATION_7")).vertices),
-    // §2.1 V.Out of E.Out: forward hop to the region
-    "zoe_hop_out" -> ((s, d) => compiler(s, d).run(
-      nationV("NATION_3").outgoing.intersect(edgeProp("InRegion")).outgoing).vertices),
-    // two-hop traversal with type intersections
-    "zoe_two_hop" -> ((s, d) => compiler(s, d).run(customersOfRegion("EUROPE")).vertices),
-    // §2.1 set algebra
-    "zoe_union" -> ((s, d) =>
-      compiler(s, d).run(customersOf("NATION_7").union(customersOf("NATION_3"))).vertices),
-    "zoe_intersect" -> ((s, d) =>
-      compiler(s, d).run(customersOf("NATION_7").intersect(customersInSegment("BUILDING"))).vertices),
-    "zoe_substract" -> ((s, d) =>
-      compiler(s, d).run(customersOf("NATION_7").substract(customersInSegment("BUILDING"))).vertices),
-    // documented symmetric-difference semantics (SURVEY §7.4 decision 2)
-    "zoe_disjunctive_union" -> ((s, d) =>
-      compiler(s, d).run(customersOf("NATION_7")
-        .disjunctiveUnion(customersInSegment("BUILDING"))).vertices),
-    // §2.1 V.Filter with the engine-native sql interpreter
-    "zoe_filter_sql" -> ((s, d) => compiler(s, d).run(
-      VertexQuery.all.filter(ZFilter("sql",
-        "schema_type = 'Nation' AND value LIKE '%1%'"))).vertices),
-    // §2.1 V.Filter with the engine-native registry interpreter
-    "zoe_filter_registry" -> ((s, d) => {
-      graft.exec.FilterRegistry.register("nations_only")(
-        df => df.where(col("id").startsWith("nation:")))
-      compiler(s, d).run(
-        VertexQuery.all.filter(ZFilter("registry", "nations_only"))).vertices
-    }),
-    // §2.6 mutation lifecycle end-to-end: create props/nodes/edge, delete a
-    // node (dangling edge parity), GC the orphaned property — the surviving
-    // store state is fully content-addressed, so a literal-SQL oracle can
-    // reproduce every id
-    "mutations_lifecycle" -> ((s, d) => {
-      import s.implicits._
-      val p1 = PropValue.typed("Thing", Some("one"))
-      val p2 = PropValue.typed("Thing", Some("two"))
-      val link = PropValue("Link")
-      val allProps = (p1.withNested ++ p2.withNested :+ link)
-      var g = graft.store.BulkMutations.createProperties(GraphStore.empty(s),
-        allProps.map(p => (p.hash, p.json, p.variant)).distinct.toDF("hash", "value", "schema_type"),
-        Some(allProps.flatMap(p => p.nested.map(c => (p.hash, c.hash))).distinct
-          .toDF("parent_hash", "child_hash")))
-      g = graft.store.BulkMutations.createNodes(g,
-        Seq(("a", p1.hash), ("b", p2.hash)).toDF("id", "prop_hash"))
-      g = graft.store.BulkMutations.createEdges(g,
-        Seq(("a", "b", link.hash)).toDF("src", "dst", "prop_hash"))
-      g = graft.store.BulkMutations.deleteNodes(g, Seq("b").toDF("id"))
-      g = graft.store.BulkMutations.gcOrphanProps(g)
-      g.vertices.select(lit("vertex").as("kind"), col("id"))
-        .unionByName(g.edges.select(lit("edge").as("kind"), col("edge_id").as("id")))
-        .unionByName(g.props.select(lit("prop").as("kind"), col("hash").as("id")))
-    }),
-    // §2.6 driver-side batch lifecycle: update_node repoints + GCs the old
-    // property, delete_edge GCs the edge property — reference-exact
-    // semantics (GraphBatch), surviving state fully content-addressed
-    "mutations_update_delete" -> ((s, d) => {
-      val b = new graft.store.GraphBatch
-      val a = b.createNode("a", PropValue.typed("Thing", Some("one")))
-      val bb = b.createNode("b", PropValue.typed("Thing", Some("two")))
-      val e1 = b.createEdge(a, bb, PropValue("Link"))
-      b.updateNode(a, PropValue.typed("Thing", Some("three"))) // GCs {"Thing":"one"}
-      b.deleteEdge(e1)                                         // GCs "Link"
-      val g = b.toStore(s)
-      g.vertices.select(lit("vertex").as("kind"), col("id"))
-        .unionByName(g.edges.select(lit("edge").as("kind"), col("edge_id").as("id")))
-        .unionByName(g.props.select(lit("prop").as("kind"), col("hash").as("id")))
-    }),
-    // §2.6 Change/ChangeSet (the reference's dead VCS-sync surface made
-    // real): anti-join diff of two stores — deleted segments + InSegment
-    // edges, one created node, one repointed node
-    "changeset_diff" -> ((s, d) => {
-      import s.implicits._
-      val from = graph(s, d)
-      val to = from.copy(
-        vertices = from.vertices
-          .where(!col("id").startsWith("segment:"))
-          .withColumn("prop_hash", when(col("id") === "nation:7",
-            lit(TpchGraph.unitHash("InNation"))).otherwise(col("prop_hash")))
-          .unionByName(Seq(("extra:1", TpchGraph.unitHash("Link"))).toDF("id", "prop_hash")),
-        edges = from.edges.where(col("prop_hash") =!= TpchGraph.unitHash("InSegment")))
-      val c = graft.store.GraphChange.diff(from, to)
-      c.createdNodes.select(lit("created_node").as("kind"), col("id"))
-        .unionByName(c.modifiedNodes.select(lit("modified_node").as("kind"), col("id")))
-        .unionByName(c.deletedNodes.select(lit("deleted_node").as("kind"), col("id")))
-        .unionByName(c.deletedEdges.select(lit("deleted_edge").as("kind"), col("edge_id").as("id")))
-    }),
-    // §2.7 GraphML import with a deterministic node-key mapper: the imported
-    // store's ids/hashes are all reproducible from the fixture text
-    "graphml_import" -> ((s, d) => {
-      val xml =
-        """<graph>
-          |  <node id="1"><Label>Node 1</Label></node>
-          |  <node id="2"><Label>Node 2</Label></node>
-          |  <edge source="1" target="2"><Label>Edge from Node 1 to Node 2</Label></edge>
-          |</graph>""".stripMargin
-      val res = graft.io.GraphML.importString(xml,
-        nodeKeyMapper = (id, seen) => seen.getOrElseUpdate(id, s"n$id"))
-      val g = res.batch.toStore(s)
-      g.vertices.select(lit("vertex").as("kind"), col("id"))
-        .unionByName(g.edges.select(lit("edge").as("kind"), col("edge_id").as("id")))
-        .unionByName(g.props.select(lit("prop").as("kind"), col("hash").as("id")))
-    }),
-    // §2.7 GraphML EXPORT round-trip (the reference's own import test
-    // shape, test_import_graphml.rs:8-41, driven backwards): a typed
-    // graph is exported with toGraphML, re-imported with an id-preserving
-    // mapper, and the re-imported store is queried THROUGH THE ENGINE
-    // (V.All / E.All); any asymmetry vs the original store surfaces as
-    // missing_*/extra_* rows the oracle does not have
-    "graphml_export_roundtrip" -> ((s, d) => {
-      val b = new graft.store.GraphBatch
-      b.createNode("a", PropValue.typed("City", Some("Berlin")))
-      b.createNode("b", PropValue.typed("City", Some("Paris")))
-      b.createNode("c", PropValue.typed("Person", Some("Ada")))
-      b.createEdge("a", "b", PropValue.typed("Road", Some("A2")))
-      b.createEdge("c", "a", PropValue.typed("Lives", Some("home")))
-      val g1 = b.toStore(s)
-      val xml = graft.io.GraphExport.toGraphML(g1)
-      val g2 = graft.io.GraphML.importString(xml,
-        nodeKeyMapper = (id, seen) => seen.getOrElseUpdate(id, id)).batch.toStore(s)
-      val zc = new ZoeCompiler(g2)
-      val v2 = zc.run(VertexQuery.all).vertices.select(col("id"))
-      val e2 = zc.run(EdgeQuery.all).edges.select(col("id"))
-      val v1 = g1.vertices.select(col("id"))
-      val e1 = g1.edges.select(col("edge_id").as("id"))
-      v2.select(lit("vertex").as("kind"), col("id"))
-        .unionByName(e2.select(lit("edge").as("kind"), col("id")))
-        .unionByName(g2.props.select(lit("prop").as("kind"), col("hash").as("id")))
-        .unionByName(v1.except(v2).select(lit("missing_vertex").as("kind"), col("id")))
-        .unionByName(v2.except(v1).select(lit("extra_vertex").as("kind"), col("id")))
-        .unionByName(e1.except(e2).select(lit("missing_edge").as("kind"), col("id")))
-        .unionByName(e2.except(e1).select(lit("extra_edge").as("kind"), col("id")))
-    }),
-    // §1.3 SchemaConstraint enforcement (declared-never-enforced in the
-    // reference; enforced here): one satisfied Required, one failing
-    // Required, one failing Prohibited with a data-dependent match count
-    "schema_validate" -> ((s, d) => {
-      import s.implicits._
-      import graft.exec.{SchemaConstraint, SchemaValidator}
-      val violations = SchemaValidator.validate(graph(s, d), Seq(
-        SchemaConstraint.Required(BasicQuery.V(nationV("NATION_7"))),
-        SchemaConstraint.Required(BasicQuery.V(nationV("NO_SUCH_NATION"))),
-        SchemaConstraint.Prohibited(BasicQuery.V(customersInSegment("BUILDING")))))
-      violations.map(v => (v.kind, v.matches)).toDF("kind", "matches")
-    }),
-    // §2.1 V.Store: side-effect snapshot union'd into the result
-    "zoe_store_hop" -> ((s, d) => compiler(s, d).run(
-      customersOf("NATION_7").store.outgoing.intersect(edgeProp("InNation")).outgoing).vertices),
-    // §2.4 path accumulation + extract_path_properties
-    "zoe_paths_europe" -> ((s, d) => {
-      val zc = compiler(s, d)
-      zc.extractPathProperties(zc.run(customersOfRegion("EUROPE")))
-        .select(col("end").as("path_end"), concat_ws("->", col("props")).as("path_str"))
-    }),
-    // §2.2 E.All: every edge family's content-hash id
-    "zoe_e_all" -> ((s, d) => compiler(s, d).run(EdgeQuery.all).edges),
-    // §2.2 E.Specific: NOT existence-checked (reference parity,
-    // kv_graph_store.rs:229-233) — the ghost id must survive
-    "zoe_e_specific" -> ((s, d) => {
-      val rows = t(s, d, "nation").where(col("n_nationkey").isin(1, 7))
-        .select(col("n_nationkey").cast("string"), col("n_regionkey").cast("string"))
-        .collect()
-      val ids = rows.toSeq.map(r => Hashing.edgeId(TpchGraph.unitHash("InRegion"),
-        s"nation:${r.getString(0)}", s"region:${r.getString(1)}")) :+ "GHOST_EDGE"
-      compiler(s, d).run(EdgeQuery.fromIds(ids)).edges
-    }),
-    // §2.2 E.Union
-    "zoe_e_union" -> ((s, d) =>
-      compiler(s, d).run(edgeProp("InRegion").union(edgeProp("InSegment"))).edges),
-    // §2.2 E.Substract: InNation edges not pointing at NATION_7
-    "zoe_e_substract" -> ((s, d) =>
-      compiler(s, d).run(edgeProp("InNation").substract(nationV("NATION_7").ingoing)).edges),
-    // §2.2 E.DisjunctiveUnion (documented symmetric-difference semantics):
-    // edges into NATION_7 vs InNation edges of BUILDING-segment customers
-    "zoe_e_disjunctive_union" -> ((s, d) =>
-      compiler(s, d).run(nationV("NATION_7").ingoing.disjunctiveUnion(
-        customersInSegment("BUILDING").outgoing.intersect(edgeProp("InNation")))).edges),
-    // §2.2 E.Filter with the sql interpreter over the edge's property
-    "zoe_e_filter_sql" -> ((s, d) => compiler(s, d).run(
-      EdgeQuery.all.filter(ZFilter("sql", "schema_type = 'InRegion'"))).edges),
-    // §2.2 E.Store: snapshot InSegment edges, traverse on to InNation edges;
-    // the result unions the stored snapshot back in
-    "zoe_e_store" -> ((s, d) => compiler(s, d).run(
-      customersOf("NATION_7").outgoing.intersect(edgeProp("InSegment")).store
-        .ingoing.outgoing.intersect(edgeProp("InNation"))).edges),
-    // §2.2 E.Property
-    "zoe_e_property" -> ((s, d) =>
-      compiler(s, d).traceE(edgeProp("InSegment")).select("src", "dst")),
-    // §2.2 E.Out + E.Intersect
-    "zoe_e_out_intersect" -> ((s, d) =>
-      compiler(s, d).traceE(customersOf("NATION_7").outgoing.intersect(edgeProp("InSegment")))
-        .select("src", "dst")),
-    // content-addressed edge identity, cross-checked against DuckDB sha256
-    "zoe_e_ids" -> ((s, d) => compiler(s, d).run(edgeProp("InRegion")).edges),
-    // §2.3 ReferencingProperties (parents in the nested() DAG)
-    "zoe_p_referencing" -> ((s, d) => compiler(s, d).run(
-      Zoe.start(PropValue.schemaType("Segment")).referencingProperties).properties),
-    // §2.3 ReferencedProperties (children; unimplemented in the reference)
-    "zoe_p_referenced" -> ((s, d) => {
-      val name = t(s, d, "customer").where(col("c_custkey") === 1)
-        .select("c_name").head().getString(0)
-      compiler(s, d).run(
-        Zoe.start(PropValue.typed("Customer", Some(name))).referencedProperties).properties
-    }),
-    // §2.5 WeightedGraph surface: JSON-path weight extraction with default
-    // for non-numeric properties, summed over parallel edges
-    "graph_weighted_edges" -> ((s, d) => {
-      val b = new graft.store.GraphBatch
-      b.createNode("a", PropValue("Node", Some("a")))
-      b.createNode("b", PropValue("Node", Some("b")))
-      b.createNode("c", PropValue("Node", Some("c")))
-      b.createEdge("a", "b", PropValue("Weight", Some("2.5")))
-      b.createEdge("b", "c", PropValue("Link"))
-      GraphAnalytics.weightedEdges(b.toStore(s)).select("src", "dst", "weight")
-    }),
-    // §2.5 Graph trait surface: degree
-    "graph_degree" -> ((s, d) =>
-      GraphAnalytics.degrees(graph(s, d)).where(col("id").startsWith("nation:"))),
-    // §2.5 order/size
-    "graph_order_size" -> ((s, d) => {
-      val g = graph(s, d)
-      g.vertices.agg(count(lit(1)).as("graph_order"))
-        .crossJoin(g.edges.agg(count(lit(1)).as("graph_size")))
-    }),
-    // §2.5 neighbors
-    "graph_neighbors" -> ((s, d) => GraphAnalytics.neighbors(graph(s, d), "nation:7")),
-    // connected components with deterministic long mapping
-    "graphx_cc" -> ((s, d) =>
-      GraphAnalytics.connectedComponents(analyticsSubgraph(graph(s, d)), analyticsToLong)),
-    // static PageRank (both names, one body). On the 3-level
-    // member->nation->region DAG the 10-iteration fixed point has a closed
-    // form (members 0.15, nations 0.15+0.85*0.15*m, regions
-    // 0.15+0.85*sum(nation ranks)), then normalized to sum to |V| — all
-    // SQL-expressible, so this is oracle-checked despite being an
-    // iterative algorithm.
-    "graphx_pagerank" -> analyticsPageRank,
-    "graph_pagerank_df" -> analyticsPageRank,
-    // personalized PageRank: seed-conditioned relevance from every 10th
-    // customer; mass stays seed-local (no |V| normalization), closed-form
-    // oracle on the member->nation->region DAG. Emitted as integer
-    // micro-units (rank · 1e6, exact in this DAG because every out-degree
-    // is 1) — the repo-wide convention for quantized scores, after the
-    // round-10 double emit flipped round(rank, 5) between 16- and 32-core
-    // runs of the same build (partition-order float summation).
-    "graph_ppr_df" -> ((s, d) => {
-      val g = analyticsSubgraph(graph(s, d))
-      val seeds = g.vertices
-        .where(split(col("id"), ":").getItem(0) === "customer" &&
-          split(col("id"), ":").getItem(1).cast("long") % 10 === 0)
-        .select(analyticsToLong(col("id")).as("vid"))
-      GraphAnalytics.personalizedPageRankDF(g, analyticsToLong, seeds, numIter = 10)
-        .select(col("id"),
-          round(col("rank") * lit(1000000), 0).cast("long").as("rank_u6"))
-    }),
-    // DataFrame-native synchronous label propagation (community
-    // detection): 3 rounds, most-frequent-neighbor-label with smallest-
-    // label tie-break — integer-exact, oracle unrolls the rounds
-    "graph_lpa_df" -> ((s, d) =>
-      GraphAnalytics.labelPropagationDF(analyticsSubgraph(graph(s, d)),
-        analyticsToLong, rounds = 3, symEdges = Some(symEdges(s, d)))),
-    // shortest paths to the region landmarks (both names, one body):
-    // iterated min-propagation with the fused count+sum convergence probe
-    "graphx_shortest_paths" -> analyticsShortestPaths,
-    "graph_sssp_df" -> analyticsShortestPaths,
-    // k-core of the THRESHOLDED co-purchase graph (parts sharing >= 2
-    // orders): iterative peeling to the dense backbone. At sf0.01 the
-    // 3-core keeps ~935 of 1880 parts after 11 peel rounds — real
-    // multi-round dynamics, not a one-shot degree filter
-    "graph_kcore_df" -> ((s, d) => {
-      val pairs = coPairs(s, d)
-        .select("a", "b")
-      GraphAnalytics.kCore(pairs, k = 3)
-    }),
-    // HITS hubs/authorities (2 exact-integer iterations, unnormalized
-    // fixed-count form) over the directed analytics subgraph
-    "graph_hits" -> ((s, d) =>
-      GraphAnalytics.hitsDF(analyticsSubgraph(graph(s, d)), analyticsToLong,
-        numIter = 2)),
-    // Adamic–Adar link prediction over the same thresholded co-purchase
-    // graph: top-50 NON-adjacent pairs by Σ 1/ln(deg) over common
-    // neighbors, integer micro-units per vertex cell
-    "graph_adamic_adar" -> ((s, d) => {
-      val pairs = coPairs(s, d)
-        .select("a", "b")
-      GraphAnalytics.adamicAdar(pairs, topK = 50)
-    }),
-    // DeepWalk-style sequence sampling: one deterministic 4-step walk per
-    // node of the symmetrized co-purchase graph (md5-uniform step choice
-    // over the dst-ordered adjacency — bit-reproducible across engines)
-    "graph_random_walks" -> ((s, d) => coPurchaseWalks(s, d)),
-    // word2vec-over-walks batch feed: (center, context) tallies within a
-    // 2-step window of the shared walk corpus
-    "graph_walk_pairs" -> ((s, d) =>
-      GraphAnalytics.walkSkipGramPairs(coPurchaseWalks(s, d), window = 2)),
-    // the DeepWalk-PRODUCTION depth in the driver gate: 40-step walks,
-    // ±5 skip-gram window (the short entry above keeps the cheap smoke
-    // shape; this one pins the length the pair join must stay linear at)
-    "graph_walk_pairs_long" -> ((s, d) => {
-      val pairs = coPairs(s, d)
-      val sym = pairs.select(col("a").as("src"), col("b").as("dst"))
-        .unionByName(pairs.select(col("b").as("src"), col("a").as("dst")))
-      GraphAnalytics.walkSkipGramPairs(
-        GraphAnalytics.randomWalks(sym, walkLen = 40)
-          .select(col("walk_id").cast("long"), col("step"), col("node").cast("long")),
-        window = 5)
-    }),
-    // PMI over the skip-gram pairs (the SGNS implicit factorization
-    // target) — integer micro-ln per pair cell over exact counts
-    "graph_walk_pmi" -> ((s, d) =>
-      GraphAnalytics.walkPairPmi(
-        GraphAnalytics.walkSkipGramPairs(coPurchaseWalks(s, d), window = 2))),
-    // deterministic SGNS negatives: k=3 noise nodes per skip-gram pair
-    // from the unigram^0.75 context distribution (md5 uniform landed in
-    // the integer milli-weight ladder — bit-replayable in the oracle)
-    "graph_walk_negatives" -> ((s, d) =>
-      GraphAnalytics.sgnsNegatives(
-        GraphAnalytics.walkSkipGramPairs(coPurchaseWalks(s, d), window = 2), k = 3)),
-    // word2vec frequent-node subsampling of the walk corpus (t = 1e-3):
-    // hub occurrences thinned toward sqrt, steps compacted per walk
-    "graph_walk_subsample" -> ((s, d) =>
-      GraphAnalytics.subsampleFrequent(coPurchaseWalks(s, d), tMicro = 1000)),
-    // true second-order node2vec (p=4, q=0.5 → retMilli 250, outMilli
-    // 2000): step bias depends on the PREVIOUS node — return discouraged,
-    // venture-out favored; all-integer ladder, bit-replayable
-    "graph_node2vec_walks" -> ((s, d) => {
-      val pairs = coPairs(s, d)
-      val sym = pairs.select(col("a").as("src"), col("b").as("dst"))
-        .unionByName(pairs.select(col("b").as("src"), col("a").as("dst")))
-      GraphAnalytics.node2vecWalks(sym, walkLen = 4, retMilli = 250, outMilli = 2000)
-        .select(col("walk_id").cast("long"), col("step"), col("node").cast("long"))
-    }),
-    // node2vec at DeepWalk-PRODUCTION depth (walkLen 40): the len-4 entry
-    // above keeps the cheap smoke shape; this pins the depth a real
-    // embedding corpus samples at, the second-order twin of
-    // graph_walk_pairs_long (oracle: the same hop chain unrolled 40 deep)
-    "graph_node2vec_walks_long" -> ((s, d) => {
-      val pairs = coPairs(s, d)
-      val sym = pairs.select(col("a").as("src"), col("b").as("dst"))
-        .unionByName(pairs.select(col("b").as("src"), col("a").as("dst")))
-      GraphAnalytics.node2vecWalks(sym, walkLen = 40, retMilli = 250, outMilli = 2000)
-        .select(col("walk_id").cast("long"), col("step"), col("node").cast("long"))
-    }),
-    // community QUALITY metric over the LPA partition: per-community
-    // Newman modularity contribution Q_c = E_c/M - (D_c/M)^2 on the same
-    // symmetrized analytics edges LPA iterated over — exact-integer core
-    // (decimal(38,0) products), one double division per community
-    "graph_modularity" -> ((s, d) => {
-      val g = analyticsSubgraph(graph(s, d))
-      val labels = GraphAnalytics.labelPropagationDF(g, analyticsToLong,
-          rounds = 3, symEdges = Some(symEdges(s, d)))
-        .select(analyticsToLong(col("id")).as("vid"), col("label"))
-      GraphAnalytics.modularityByCommunity(labels, symEdges(s, d))
-    }),
-    // degree assortativity of the thresholded co-purchase graph: do hubs
-    // co-purchase with hubs? Pearson r between endpoint degrees over the
-    // directed-symmetric edge list — guarded-Long sums, one IEEE division
-    "graph_assortativity" -> ((s, d) => {
-      val pairs = coPairs(s, d)
-      val sym = pairs.select(col("a"), col("b"))
-        .unionByName(pairs.select(col("b").as("a"), col("a").as("b")))
-      GraphAnalytics.assortativity(sym)
-    }),
-    // k-truss of the thresholded co-purchase graph (k=3: every surviving
-    // edge closes >= 1 triangle among survivors; the 4-truss of this
-    // graph is empty — its densest cohesion is triangle-level) — the
-    // edge-cohesion analog of graph_kcore_df, synchronous peel to the
-    // fixpoint. maxRounds = 16 deliberately EQUALS the oracle's fixed
-    // unroll depth (kTrussSql): a denser future fixture that needs more
-    // peel rounds fails loudly here ("did not converge in 16 rounds")
-    // instead of surfacing as an opaque gate hash mismatch (ADVICE r14)
-    "graph_ktruss" -> ((s, d) =>
-      GraphAnalytics.kTruss(coPairs(s, d).select("a", "b"), k = 3, maxRounds = 16)),
-    // FULL multi-level Louvain on the co-purchase graph: parity-alternated
-    // local-move sweeps (8 per level), coarsen, repeat (3 levels) — the
-    // caps are pinned by the oracle's fixed 3x8 CTE unroll; converged
-    // rounds replay as no-ops (see GraphAnalytics.louvain on why bounded
-    // sweeps, not a movement fixpoint, is the termination rule here)
-    "graph_louvain" -> ((s, d) => louvainPartition(s, d, false)),
-    // Leiden-style refinement of the louvain partition: every community
-    // split into its connected components within the community-induced
-    // subgraph (Louvain can leave communities internally disconnected —
-    // the defect Leiden is named for fixing). The partition comes from
-    // the shared memo (Bench stages it), so the benched time is the
-    // refinement cc ALONE, not ascent + cc measured by subtraction.
-    "graph_louvain_refine" -> ((s, d) => {
-      val pairs = coPairs(s, d)
-      val sym = pairs.select(col("a"), col("b"))
-        .unionByName(pairs.select(col("b").as("a"), col("a").as("b")))
-      GraphAnalytics.refineCommunities(louvainPartition(s, d, false), sym)
-    }),
-    // the WEIGHTED ascent twin: shared-order counts as edge weights (the
-    // gate's only weighted-louvain path; unit-weight entry above pins the
-    // common case) — same caps, same oracle unroll with w carried through
-    "graph_louvain_weighted" -> ((s, d) => louvainPartition(s, d, true)),
-    // TRUE Leiden (Traag 2019 §III): refinement INTERLEAVED into the
-    // level loop — coarsen on connected fragments, start each fragment in
-    // its home community — so upper levels ascend on a well-formed base
-    // (vs graph_louvain_refine, which repairs only the final level).
-    // Same 3×8 caps; the oracle unrolls move rounds + per-level
-    // recursive-cc refinement + fragment coarsening
-    "graph_leiden" -> ((s, d) => leidenPartition(s, d)),
-    // quality twin of graph_louvain_quality for the INTERLEAVED schedule:
-    // whole-partition modularity of leiden vs louvain on the same
-    // co-purchase edges — pins the "+modularity at identical volume cost"
-    // claim (SCALE.md r15) as a gate row instead of prose, and guards
-    // future schedule changes that keep determinism but lose the gain.
-    // Both partitions come from the shared memos (Bench stages them),
-    // so the benched time is the two modularity rollups alone
-    "graph_leiden_quality" -> ((s, d) => {
-      val pairs = coPairs(s, d)
-      // feeds two modularity rollups
-      val sym = checkpoint(pairs.select(col("a"), col("b"))
-        .unionByName(pairs.select(col("b").as("a"), col("a").as("b"))))
-      def q(method: String, labels: DataFrame): DataFrame =
-        GraphAnalytics.modularityTotal(labels, sym)
-          .select(lit(method).as("method"), col("n_communities"),
-            col("internal_directed"), col("q"))
-      q("leiden", leidenPartition(s, d))
-        .unionByName(q("louvain", louvainPartition(s, d, false)))
-    }),
-    // partition-QUALITY row: whole-partition modularity of the louvain
-    // ascent vs 3-round LPA vs singletons on the SAME co-purchase edges —
-    // the gate pins exact labels elsewhere; this row asserts the ascent
-    // actually IMPROVES something, guarding future knob changes
-    // (maxRounds/levels/tie-breaks) that keep determinism but lose
-    // quality. Louvain labels come from the shared memo (Bench stages
-    // it); Q is the exact-integer one-division form (modularityTotal)
-    "graph_louvain_quality" -> ((s, d) => {
-      val pairs = coPairs(s, d)
-      // feeds three modularity rollups + LPA
-      val sym = checkpoint(pairs.select(col("a"), col("b"))
-        .unionByName(pairs.select(col("b").as("a"), col("a").as("b"))))
-      val singles = sym.select(col("a").as("vid")).distinct()
-        .select(col("vid"), col("vid").as("label"))
-      def q(method: String, labels: DataFrame): DataFrame =
-        GraphAnalytics.modularityTotal(labels, sym)
-          .select(lit(method).as("method"), col("n_communities"),
-            col("internal_directed"), col("q"))
-      q("louvain", louvainPartition(s, d, false))
-        .unionByName(q("lpa3", lpaOverSym(sym, rounds = 3)))
-        .unionByName(q("singletons", singles))
-    }),
-    // one synchronous Louvain local-move round from singleton communities
-    // on the co-purchase graph: per vertex, the modularity-gain argmax
-    // over neighbor communities (exact-integer comparator M*k_vc - kv*D'c)
-    "graph_louvain_move" -> ((s, d) => {
-      val pairs = coPairs(s, d)
-      val sym = pairs.select(col("a"), col("b"))
-        .unionByName(pairs.select(col("b").as("a"), col("a").as("b")))
-      val labels = sym.select(col("a").as("vid")).distinct()
-        .select(col("vid"), col("vid").as("label"))
-      GraphAnalytics.louvainMoveRound(labels, sym)
-    }),
-    // per-vertex local clustering coefficient of the thresholded
-    // co-purchase graph: triangles/(deg choose 2) in exact micro-units —
-    // the compact-forward triangle core shared with graph_triangles_df
-    "graph_clustering_coeff" -> ((s, d) => {
-      val pairs = coPairs(s, d)
-        .select("a", "b")
-      GraphAnalytics.clusteringCoefficients(pairs)
-    }),
-    // weight-proportional walks: step choice lands the md5 uniform in the
-    // neighbor's slot of the cumulative shared-order-count ladder
-    "graph_weighted_walks" -> ((s, d) => {
-      val pairs = coPairs(s, d)
-      val sym = pairs.select(col("a").as("src"), col("b").as("dst"), col("w").as("weight"))
-        .unionByName(pairs.select(col("b").as("src"), col("a").as("dst"), col("w").as("weight")))
-      GraphAnalytics.weightedRandomWalks(sym, walkLen = 4)
-        .select(col("walk_id").cast("long"), col("step"), col("node").cast("long"))
-    }),
-    // WEIGHTED shortest paths (min-plus over an explicit weighted edge
-    // table — the WeightedGraph surface with an actual algorithm):
-    // customer -> nation -> region with deterministic integer weights;
-    // paths are unique, so the closed form IS the oracle
-    "graph_wsssp_df" -> ((s, d) => {
-      val e1 = t(s, d, "nation").select(
-        (col("n_nationkey") + 100).cast("long").as("src"),
-        col("n_regionkey").cast("long").as("dst"),
-        (col("n_nationkey") % 5 + 1).cast("double").as("weight"))
-      val e2 = t(s, d, "customer").select(
-        (col("c_custkey") + 1000).cast("long").as("src"),
-        (col("c_nationkey") + 100).cast("long").as("dst"),
-        (col("c_custkey") % 7 + 1).cast("double").as("weight"))
-      GraphAnalytics.weightedShortestPathsDF(e1.unionByName(e2),
-        landmarks = Seq(0L, 1L, 2L, 3L, 4L))
-    }),
-
-    // §2.8 host-level aggregation patterns (cocktail_statistic analogues)
-    "agg_pricing_summary" -> ((s, d) =>
-      t(s, d, "lineitem").groupBy("l_returnflag", "l_linestatus").agg(
-        sum("l_quantity").as("sum_qty"),
-        round(sum(col("l_extendedprice").cast("decimal(18,2)")), 2).cast("double").as("sum_base_price"),
-        avg("l_quantity").as("avg_qty"),
-        count(lit(1)).as("cnt"))),
-    "agg_topk_parts" -> ((s, d) => {
-      val li = t(s, d, "lineitem"); val part = t(s, d, "part")
-      li.join(part, li("l_partkey") === part("p_partkey"))
-        .groupBy("p_name").agg(count(lit(1)).as("cnt"))
-        .orderBy(desc("cnt"), asc("p_name")).limit(5)
-    }),
-    "agg_order_stats" -> ((s, d) =>
-      t(s, d, "lineitem").groupBy("l_orderkey").agg(count(lit(1)).as("c"))
-        .agg(min("c").as("min_items"), max("c").as("max_items"),
-          round(avg("c"), 6).cast("double").as("avg_items"),
-          count(lit(1)).as("n_orders"))),
-    "join_revenue_by_nation" -> ((s, d) => {
-      val li = t(s, d, "lineitem"); val o = t(s, d, "orders")
-      val c = t(s, d, "customer"); val n = t(s, d, "nation")
-      li.join(o, li("l_orderkey") === o("o_orderkey"))
-        .join(c, o("o_custkey") === c("c_custkey"))
-        .join(n, c("c_nationkey") === n("n_nationkey"))
-        .groupBy("n_name")
-        .agg(round(sum(col("l_extendedprice").cast("decimal(18,2)") *
-          (lit(1) - col("l_discount").cast("decimal(18,2)"))), 2).cast("double").as("revenue"))
-    }),
-    // §2.8 + 100 TB checklist: salted equi-join — same rows as the plain
-    // join (the oracle is the UNSALTED SQL), hot keys spread over 8 reducers
-    "join_salted_skew" -> ((s, d) => {
-      val li = t(s, d, "lineitem").select(col("l_suppkey").as("suppkey"),
-        col("l_extendedprice"), col("l_discount"))
-      val sup = t(s, d, "supplier").select(col("s_suppkey").as("suppkey"), col("s_name"))
-      graft.pipeline.Skew.saltedJoin(li, sup, Seq("suppkey"), salt = 8)
-        .groupBy("s_name")
-        .agg(round(sum(col("l_extendedprice").cast("decimal(18,2)") *
-          (lit(1) - col("l_discount").cast("decimal(18,2)"))), 2).cast("double").as("revenue"))
-    }),
-    // exact distributed quantiles (sort-based percentile, linear
-    // interpolation — the same definition as SQL quantile_cont)
-    "agg_quantiles" -> ((s, d) =>
-      t(s, d, "orders").groupBy("o_orderstatus")
-        .agg(expr("percentile(o_totalprice, array(0.25, 0.5, 0.75))").as("qs"),
-          count(lit(1)).as("cnt"))
-        .select(col("o_orderstatus"),
-          round(col("qs").getItem(0), 4).as("q25"),
-          round(col("qs").getItem(1), 4).as("q50"),
-          round(col("qs").getItem(2), 4).as("q75"),
-          col("cnt"))),
-    "window_top_order" -> ((s, d) => {
-      val w = Window.partitionBy("o_custkey").orderBy(desc("o_totalprice"), asc("o_orderkey"))
-      t(s, d, "orders").withColumn("rn", row_number().over(w))
-        .where(col("rn") === 1)
-        .select("o_custkey", "o_orderkey", "o_totalprice")
-    }),
-    // stateful sessionization (flatMapGroupsWithState) run in batch mode:
-    // closed sessions only — each user's trailing open session stays in
-    // state, exactly what the streaming run would hold back too
-    "events_sessionize" -> ((s, d) => {
-      val ev = t(s, d, "events").select(col("user_id"),
-        timestamp_seconds(expr("ts DIV 1000000000")).as("ts"))
-      graft.streaming.EventStreams.sessionize(ev, gapSeconds = 1800).toDF()
-        .select(col("userId").as("user_id"), col("nEvents").as("n_events"),
-          col("firstTs").as("first_ts"), col("lastTs").as("last_ts"))
-    }),
-    // the NATIVE session_window twin of the custom-state sessionizer:
-    // Spark's built-in gap-session aggregation (groupBy user +
-    // session_window) — zero custom state code, emits EVERY session
-    // including each user's trailing one, window end = last event + gap.
-    // Boundary semantics MATCH sessionize: an event exactly gap seconds
-    // after the previous one merges (spec-pinned; a new session needs
-    // diff > gap)
-    "events_session_window" -> ((s, d) => {
-      val ev = t(s, d, "events").select(col("user_id"),
-        timestamp_seconds(expr("ts DIV 1000000000")).as("ts"))
-      ev.groupBy(col("user_id"), session_window(col("ts"), "1800 seconds").as("sw"))
-        .agg(count(lit(1)).as("n_events"))
-        .select(col("user_id"), col("n_events"),
-          unix_timestamp(col("sw.start")).as("first_ts"),
-          unix_timestamp(col("sw.end")).as("sess_end"))
-    }),
-    // DAU / trailing-7-day WAU / stickiness per event day; the rolling
-    // distinct fans (day, user) pairs to their 7 target days — bounded by
-    // distinct pairs, never by raw events
-    "events_active_users" -> ((s, d) =>
-      graft.streaming.EventStreams.activeUsersReport(
-        t(s, d, "events").select(col("user_id"),
-          timestamp_seconds(expr("ts DIV 1000000000")).as("ts")))),
-    // first-order Markov transitions over per-user event sequences
-    // ((ts, event_id)-ordered so ties replay identically): per (from, to)
-    // type pair, count + micro-unit transition probability
-    "events_transition_matrix" -> ((s, d) =>
-      graft.streaming.EventStreams.transitionMatrix(t(s, d, "events"))),
-    // stream-stream interval join run in batch form: click→view attribution
-    // within a trailing 1-day event-time window (watermarks bound the
-    // streaming state; identical rows in batch)
-    "events_interval_join" -> ((s, d) => {
-      val ev = t(s, d, "events").select(col("event_id"), col("user_id"),
-        col("event_type"), timestamp_seconds(expr("ts DIV 1000000000")).as("ts"))
-      graft.streaming.EventStreams.intervalJoin(
-        ev.where(col("event_type") === "click"),
-        ev.where(col("event_type") === "view"),
-        windowSeconds = 86400)
-    }),
-    // ts arrives as LONG nanoseconds (TpchGraph.table's canonical boundary
-    // normalizes whatever the parquet stores); bucket with exact integer
-    // division
-    "events_window_agg" -> ((s, d) =>
-      t(s, d, "events").groupBy(
-        col("event_type"),
-        expr("ts DIV 300000000000").as("bucket")).agg(
-        count(lit(1)).as("cnt"),
-        round(sum(col("value").cast("decimal(18,6)")), 4).cast("double").as("sum_value"))),
-    // SLIDING 10-minute windows every 5 minutes through the real streaming
-    // transform (Spark window() with slideDuration; batch==stream parity
-    // asserted in StreamingSpec) — each event lands in exactly 2 windows
-    "events_sliding_window" -> ((s, d) =>
-      graft.streaming.EventStreams.slidingCounts(
-          t(s, d, "events").select(
-            timestamp_seconds(expr("ts DIV 1000000000")).as("ts"),
-            col("event_type"), col("value")))
-        .select(col("window_start").cast("long").as("w_start"),
-          col("event_type"), col("cnt"), col("sum_value"))),
-    // event-type distribution DRIFT between consecutive hourly windows:
-    // integer micro-unit shares, L1 distance — the serving-pipeline
-    // health monitor (a data regression shifts the mix)
-    "events_label_drift" -> ((s, d) =>
-      graft.streaming.EventStreams.labelDrift(
-          t(s, d, "events").select(
-            timestamp_seconds(expr("ts DIV 1000000000")).as("ts"),
-            col("event_type")))
-        .select(col("window_start").cast("long").as("w_start"),
-          col("n_events"), col("drift_micro"))),
-    // per-user behavioral sequences: first-20 event-type prefix string in
-    // (ts, event_id) order + full event count — the sequence-model feed
-    "events_user_sequences" -> ((s, d) =>
-      graft.streaming.EventStreams.userSequences(
-        t(s, d, "events").select(col("user_id"), col("ts").as("tns"),
-          col("event_id"), col("event_type")))),
-    // weekly retention cohorts: users bucketed by first-seen week,
-    // distinct-user counts per (cohort, week offset)
-    "events_retention" -> ((s, d) =>
-      graft.streaming.EventStreams.retentionCohorts(
-        t(s, d, "events").select(col("user_id"),
-          timestamp_seconds(expr("ts DIV 1000000000")).as("ts")))),
-    // hourly per-type rate anomalies vs the trailing-24h window on a dense
-    // zero-filled hour grid — exact integer cross-multiplied thresholds
-    "events_rate_anomaly" -> ((s, d) =>
-      graft.streaming.EventStreams.rateAnomalies(
-        t(s, d, "events").select(col("event_type"),
-          timestamp_seconds(expr("ts DIV 1000000000")).as("ts")))),
-    // conversion funnel click→view→purchase with STRICT first-occurrence
-    // chaining: per user, the first click, the first view after it, the
-    // first purchase after that — three conditional-min aggregations all
-    // keyed by user_id (co-partitioned shuffles, exchange reuse at scale),
-    // reduced to one row of stage counts + conversion rates
-    "events_funnel" -> ((s, d) =>
-      graft.streaming.EventStreams.funnelCounts(t(s, d, "events"),
-        "user_id", "event_type", "ts", Seq("click", "view", "purchase"))),
-    // as-of join: each click matched to the user's most recent view at or
-    // before it (union + window carry-forward — one shuffle by user, no
-    // per-row range probe); clicks before any view keep nulls
-    "events_asof_join" -> ((s, d) => {
-      val ev = t(s, d, "events")
-      val clicks = ev.where(col("event_type") === "click")
-        .select(col("event_id"), col("user_id"), col("ts"))
-      val views = ev.where(col("event_type") === "view")
-        .select(col("user_id"), col("ts"), col("event_id").as("view_id"),
-          col("value").as("view_value"))
-      graft.pipeline.TemporalJoins.asofJoin(clicks, views, "user_id", "ts", "view_id")
-        .select(col("event_id"), col("user_id"),
-          col("asof_view_id").as("view_id"), col("asof_view_value").as("view_value"))
-    }),
-    // binned range join: purchases inside a 4-hour attribution window after
-    // each signup — intervals exploded onto 1-hour bins, equi-join on
-    // (user, bin), exact BETWEEN filter; never a nested-loop range join
-    "events_range_join" -> ((s, d) => {
-      val ev = t(s, d, "events")
-      val purchases = ev.where(col("event_type") === "purchase")
-        .select(col("event_id"), col("user_id"), col("ts"))
-      val windows = ev.where(col("event_type") === "signup")
-        .select(col("user_id"), col("event_id").as("w_id"), col("ts").as("w_start"),
-          (col("ts") + lit(14400000000000L)).as("w_end"))
-      graft.pipeline.TemporalJoins.rangeJoinBinned(purchases, windows,
-        "ts", "w_start", "w_end", binWidth = 3600000000000L, keys = Seq("user_id"))
-        .select("event_id", "w_id")
-    }),
-  )
 
   /** k-core oracle: peeling unrolled to a FIXED depth — peeling is
     * idempotent at the fixpoint, so unrolling past convergence (16 rounds
@@ -1546,18 +838,640 @@ object GraphQueries {
        |FROM s$rounds WHERE support >= 1""".stripMargin
   }
 
-  val oracles: Map[String, String] = Map(
-    "graph_lpa_df" -> lpaSql,
-    "graph_ktruss" -> kTrussSql,
-    "graph_louvain" -> louvainSql(levels = 3, rounds = 8),
-    "graph_louvain_weighted" -> louvainSql(levels = 3, rounds = 8, weighted = true),
-    "graph_leiden" -> leidenSql(levels = 3, rounds = 8),
-    "graph_leiden_quality" -> leidenQualitySql,
-    "graph_louvain_quality" -> louvainQualitySql,
-    // Leiden refinement replay: the full louvain unroll, then recursive
-    // min-reachable cc over INTRA-community edges only; members with no
-    // intra edge become singletons
-    "graph_louvain_refine" ->
+  val entries: Seq[Entry] = Seq(
+    // stream→graph ingestion through the REAL streaming engine: events are
+    // written as a multi-file source, read with maxFilesPerTrigger=2 (3
+    // micro-batches), and folded into a persisted store via foreachBatch +
+    // idempotent bulk mutations; the oracle recomputes the expected
+    // vertex/edge counts relationally (memoized per (session, dir) so
+    // repeated harness invocations don't accumulate temp stores)
+    Entry("stream_graph_ingest", Memo.coldResult("stream_graph_ingest", Memo.Stream) { (s, d) =>
+      val src = ingestFixture(s, d)
+      // the graph STORE is the stream's sink — fresh per run, its writes
+      // are part of the measured ingest (only the source is staged)
+      val db = Memo.tempDir("graft-sgi-db")
+      graft.streaming.EventStreams.streamIntoGraph(s, src, db, maxFilesPerTrigger = 2)
+      val g = graft.model.GraphStore.load(s, db)
+      g.vertices.agg(count(lit(1)).as("n_vertices"))
+        .crossJoin(g.edges.agg(count(lit(1)).as("n_edges")))
+    },
+      """SELECT
+        |  (SELECT count(DISTINCT user_id) + count(DISTINCT event_type) FROM events) AS n_vertices,
+        |  (SELECT count(*) FROM (SELECT DISTINCT user_id, event_type FROM events) t) AS n_edges""".stripMargin),
+    // §2.1 V.All
+    Entry("zoe_v_all", (s, d) => compiler(s, d).run(VertexQuery.all).vertices,
+      """SELECT 'region:'||r_regionkey AS id FROM region
+        |UNION ALL SELECT 'nation:'||n_nationkey FROM nation
+        |UNION ALL SELECT 'customer:'||c_custkey FROM customer
+        |UNION ALL SELECT 'supplier:'||s_suppkey FROM supplier
+        |UNION ALL SELECT 'part:'||p_partkey FROM part
+        |UNION ALL SELECT 'order:'||o_orderkey FROM orders
+        |UNION ALL SELECT DISTINCT 'segment:'||c_mktsegment FROM customer""".stripMargin),
+    // §2.1 V.Specific (NOT existence-checked, reference parity)
+    Entry("zoe_v_specific", (s, d) =>
+      compiler(s, d).run(VertexQuery.fromIds(Seq("nation:1", "nation:7", "ghost:99"))).vertices,
+      "SELECT 'nation:1' AS id UNION ALL SELECT 'nation:7' UNION ALL SELECT 'ghost:99'",
+      // three literal ids, no scan: the time is session overhead
+      Micro),
+    // §2.1 V.Property via index equi-join
+    Entry("zoe_v_property", (s, d) => compiler(s, d).run(nationV("NATION_7")).vertices,
+      "SELECT 'nation:'||n_nationkey AS id FROM nation WHERE n_name = 'NATION_7'",
+      // zoe_union looks up NATION_7 the same way
+      SiblingOf("zoe_union")),
+    // §2.3 ReferencingProperties + V.Property: SchemaType lattice lookup
+    Entry("zoe_v_property_schema", (s, d) => compiler(s, d).run(vType("Customer")).vertices,
+      "SELECT 'customer:'||c_custkey AS id FROM customer",
+      // zoe_union's customersOf intersects this lookup
+      SiblingOf("zoe_union")),
+    // §2.3 P.FromTo as a top-level P query (custom orderable keys)
+    Entry("zoe_p_fromto", (s, d) =>
+      compiler(s, d).run(PropertyQuery.fromTo("psz_010", "psz_021")).properties,
+      "SELECT printf('psz_%03d_%d', p_size, p_partkey) AS hash FROM part WHERE p_size BETWEEN 10 AND 20",
+      // zoe_v_fromto hops on from this range scan
+      SiblingOf("zoe_v_fromto")),
+    // §2.3 FromTo range -> vertices
+    Entry("zoe_v_fromto", (s, d) =>
+      compiler(s, d).run(PropertyQuery.fromTo("psz_010", "psz_021").referencingVertices).vertices,
+      "SELECT 'part:'||p_partkey AS id FROM part WHERE p_size BETWEEN 10 AND 20"),
+    // §2.1 V.In of E.In: one hop back along InNation
+    Entry("zoe_hop_in", (s, d) => compiler(s, d).run(membersOf("NATION_7")).vertices,
+      """SELECT 'customer:'||c_custkey AS id FROM customer JOIN nation ON c_nationkey = n_nationkey WHERE n_name = 'NATION_7'
+        |UNION ALL SELECT 'supplier:'||s_suppkey FROM supplier JOIN nation ON s_nationkey = n_nationkey WHERE n_name = 'NATION_7'""".stripMargin,
+      // membersOf("NATION_7") is a branch of zoe_union
+      SiblingOf("zoe_union")),
+    // §2.1 V.Out of E.Out: forward hop to the region
+    Entry("zoe_hop_out", (s, d) => compiler(s, d).run(
+      nationV("NATION_3").outgoing.intersect(edgeProp("InRegion")).outgoing).vertices,
+      "SELECT DISTINCT 'region:'||r_regionkey AS id FROM region JOIN nation ON n_regionkey = r_regionkey WHERE n_name = 'NATION_3'"),
+    // two-hop traversal with type intersections
+    Entry("zoe_two_hop", (s, d) => compiler(s, d).run(customersOfRegion("EUROPE")).vertices,
+      """SELECT 'customer:'||c_custkey AS id FROM customer
+        |JOIN nation ON c_nationkey = n_nationkey JOIN region ON n_regionkey = r_regionkey
+        |WHERE r_name = 'EUROPE'""".stripMargin),
+    // §2.1 set algebra
+    Entry("zoe_union", (s, d) =>
+      compiler(s, d).run(customersOf("NATION_7").union(customersOf("NATION_3"))).vertices,
+      """SELECT 'customer:'||c_custkey AS id FROM customer JOIN nation ON c_nationkey = n_nationkey
+        |WHERE n_name IN ('NATION_7','NATION_3')""".stripMargin),
+    Entry("zoe_intersect", (s, d) =>
+      compiler(s, d).run(customersOf("NATION_7").intersect(customersInSegment("BUILDING"))).vertices,
+      """SELECT 'customer:'||c_custkey AS id FROM customer JOIN nation ON c_nationkey = n_nationkey
+        |WHERE n_name = 'NATION_7' AND c_mktsegment = 'BUILDING'""".stripMargin),
+    Entry("zoe_substract", (s, d) =>
+      compiler(s, d).run(customersOf("NATION_7").substract(customersInSegment("BUILDING"))).vertices,
+      """SELECT 'customer:'||c_custkey AS id FROM customer JOIN nation ON c_nationkey = n_nationkey
+        |WHERE n_name = 'NATION_7' AND c_mktsegment <> 'BUILDING'""".stripMargin,
+      // the same anti join is one arm of zoe_disjunctive_union
+      SiblingOf("zoe_disjunctive_union")),
+    // documented symmetric-difference semantics (SURVEY §7.4 decision 2)
+    Entry("zoe_disjunctive_union", (s, d) =>
+      compiler(s, d).run(customersOf("NATION_7")
+        .disjunctiveUnion(customersInSegment("BUILDING"))).vertices,
+      """SELECT 'customer:'||c_custkey AS id FROM customer JOIN nation ON c_nationkey = n_nationkey
+        |WHERE (n_name = 'NATION_7') <> (c_mktsegment = 'BUILDING')""".stripMargin),
+    // §2.1 V.Filter with the engine-native sql interpreter
+    Entry("zoe_filter_sql", (s, d) => compiler(s, d).run(
+      VertexQuery.all.filter(ZFilter("sql",
+        "schema_type = 'Nation' AND value LIKE '%1%'"))).vertices,
+      "SELECT 'nation:'||n_nationkey AS id FROM nation WHERE n_name LIKE '%1%'"),
+    // §2.1 V.Filter with the engine-native registry interpreter
+    Entry("zoe_filter_registry", (s, d) => {
+      graft.exec.FilterRegistry.register("nations_only")(
+        df => df.where(col("id").startsWith("nation:")))
+      compiler(s, d).run(
+        VertexQuery.all.filter(ZFilter("registry", "nations_only"))).vertices
+    }, "SELECT 'nation:'||n_nationkey AS id FROM nation"),
+    // §2.6 mutation lifecycle end-to-end: create props/nodes/edge, delete a
+    // node (dangling edge parity), GC the orphaned property — the surviving
+    // store state is fully content-addressed, so a literal-SQL oracle can
+    // reproduce every id
+    Entry("mutations_lifecycle", (s, d) => {
+      import s.implicits._
+      val p1 = PropValue.typed("Thing", Some("one"))
+      val p2 = PropValue.typed("Thing", Some("two"))
+      val link = PropValue("Link")
+      val allProps = (p1.withNested ++ p2.withNested :+ link)
+      var g = graft.store.BulkMutations.createProperties(GraphStore.empty(s),
+        allProps.map(p => (p.hash, p.json, p.variant)).distinct.toDF("hash", "value", "schema_type"),
+        Some(allProps.flatMap(p => p.nested.map(c => (p.hash, c.hash))).distinct
+          .toDF("parent_hash", "child_hash")))
+      g = graft.store.BulkMutations.createNodes(g,
+        Seq(("a", p1.hash), ("b", p2.hash)).toDF("id", "prop_hash"))
+      g = graft.store.BulkMutations.createEdges(g,
+        Seq(("a", "b", link.hash)).toDF("src", "dst", "prop_hash"))
+      g = graft.store.BulkMutations.deleteNodes(g, Seq("b").toDF("id"))
+      g = graft.store.BulkMutations.gcOrphanProps(g)
+      g.vertices.select(lit("vertex").as("kind"), col("id"))
+        .unionByName(g.edges.select(lit("edge").as("kind"), col("edge_id").as("id")))
+        .unionByName(g.props.select(lit("prop").as("kind"), col("hash").as("id")))
+    },
+      """SELECT 'vertex' AS kind, 'a' AS id
+        |UNION ALL SELECT 'edge', upper(sha256('{"properties":"'||upper(sha256('"Link"'))||'","n1":"a","n2":"b"}'))
+        |UNION ALL SELECT 'prop', upper(sha256('{"Thing":"one"}'))
+        |UNION ALL SELECT 'prop', upper(sha256('{"SchemaType":"Thing"}'))
+        |UNION ALL SELECT 'prop', upper(sha256('"Link"'))""".stripMargin,
+      Micro),
+    // §2.6 driver-side batch lifecycle: update_node repoints + GCs the old
+    // property, delete_edge GCs the edge property — reference-exact
+    // semantics (GraphBatch), surviving state fully content-addressed
+    Entry("mutations_update_delete", (s, d) => {
+      val b = new graft.store.GraphBatch
+      val a = b.createNode("a", PropValue.typed("Thing", Some("one")))
+      val bb = b.createNode("b", PropValue.typed("Thing", Some("two")))
+      val e1 = b.createEdge(a, bb, PropValue("Link"))
+      b.updateNode(a, PropValue.typed("Thing", Some("three"))) // GCs {"Thing":"one"}
+      b.deleteEdge(e1)                                         // GCs "Link"
+      val g = b.toStore(s)
+      g.vertices.select(lit("vertex").as("kind"), col("id"))
+        .unionByName(g.edges.select(lit("edge").as("kind"), col("edge_id").as("id")))
+        .unionByName(g.props.select(lit("prop").as("kind"), col("hash").as("id")))
+    },
+      """SELECT 'vertex' AS kind, 'a' AS id
+        |UNION ALL SELECT 'vertex', 'b'
+        |UNION ALL SELECT 'prop', upper(sha256('{"Thing":"three"}'))
+        |UNION ALL SELECT 'prop', upper(sha256('{"Thing":"two"}'))
+        |UNION ALL SELECT 'prop', upper(sha256('{"SchemaType":"Thing"}'))""".stripMargin,
+      Micro),
+    // §2.6 Change/ChangeSet (the reference's dead VCS-sync surface made
+    // real): anti-join diff of two stores — deleted segments + InSegment
+    // edges, one created node, one repointed node
+    Entry("changeset_diff", (s, d) => {
+      import s.implicits._
+      val from = graph(s, d)
+      val to = from.copy(
+        vertices = from.vertices
+          .where(!col("id").startsWith("segment:"))
+          .withColumn("prop_hash", when(col("id") === "nation:7",
+            lit(TpchGraph.unitHash("InNation"))).otherwise(col("prop_hash")))
+          .unionByName(Seq(("extra:1", TpchGraph.unitHash("Link"))).toDF("id", "prop_hash")),
+        edges = from.edges.where(col("prop_hash") =!= TpchGraph.unitHash("InSegment")))
+      val c = graft.store.GraphChange.diff(from, to)
+      c.createdNodes.select(lit("created_node").as("kind"), col("id"))
+        .unionByName(c.modifiedNodes.select(lit("modified_node").as("kind"), col("id")))
+        .unionByName(c.deletedNodes.select(lit("deleted_node").as("kind"), col("id")))
+        .unionByName(c.deletedEdges.select(lit("deleted_edge").as("kind"), col("edge_id").as("id")))
+    },
+      s"""SELECT 'created_node' AS kind, 'extra:1' AS id
+         |UNION ALL SELECT 'modified_node', 'nation:7'
+         |UNION ALL SELECT 'deleted_node', 'segment:'||c_mktsegment FROM (SELECT DISTINCT c_mktsegment FROM customer) t
+         |UNION ALL SELECT 'deleted_edge', $custInSegment FROM customer""".stripMargin),
+    // §2.7 GraphML import with a deterministic node-key mapper: the imported
+    // store's ids/hashes are all reproducible from the fixture text
+    Entry("graphml_import", (s, d) => {
+      val xml =
+        """<graph>
+          |  <node id="1"><Label>Node 1</Label></node>
+          |  <node id="2"><Label>Node 2</Label></node>
+          |  <edge source="1" target="2"><Label>Edge from Node 1 to Node 2</Label></edge>
+          |</graph>""".stripMargin
+      val res = graft.io.GraphML.importString(xml,
+        nodeKeyMapper = (id, seen) => seen.getOrElseUpdate(id, s"n$id"))
+      val g = res.batch.toStore(s)
+      g.vertices.select(lit("vertex").as("kind"), col("id"))
+        .unionByName(g.edges.select(lit("edge").as("kind"), col("edge_id").as("id")))
+        .unionByName(g.props.select(lit("prop").as("kind"), col("hash").as("id")))
+    },
+      """SELECT 'vertex' AS kind, 'n1' AS id
+        |UNION ALL SELECT 'vertex', 'n2'
+        |UNION ALL SELECT 'edge', upper(sha256('{"properties":"'||upper(sha256('{"Label":"Edge from Node 1 to Node 2"}'))||'","n1":"n1","n2":"n2"}'))
+        |UNION ALL SELECT 'prop', upper(sha256('{"Label":"Node 1"}'))
+        |UNION ALL SELECT 'prop', upper(sha256('{"Label":"Node 2"}'))
+        |UNION ALL SELECT 'prop', upper(sha256('{"Label":"Edge from Node 1 to Node 2"}'))
+        |UNION ALL SELECT 'prop', upper(sha256('{"SchemaType":"Label"}'))""".stripMargin,
+      Micro),
+    // §2.7 GraphML EXPORT round-trip (the reference's own import test
+    // shape, test_import_graphml.rs:8-41, driven backwards): a typed
+    // graph is exported with toGraphML, re-imported with an id-preserving
+    // mapper, and the re-imported store is queried THROUGH THE ENGINE
+    // (V.All / E.All); any asymmetry vs the original store surfaces as
+    // missing_*/extra_* rows the oracle does not have
+    Entry("graphml_export_roundtrip", (s, d) => {
+      val b = new graft.store.GraphBatch
+      b.createNode("a", PropValue.typed("City", Some("Berlin")))
+      b.createNode("b", PropValue.typed("City", Some("Paris")))
+      b.createNode("c", PropValue.typed("Person", Some("Ada")))
+      b.createEdge("a", "b", PropValue.typed("Road", Some("A2")))
+      b.createEdge("c", "a", PropValue.typed("Lives", Some("home")))
+      val g1 = b.toStore(s)
+      val xml = graft.io.GraphExport.toGraphML(g1)
+      val g2 = graft.io.GraphML.importString(xml,
+        nodeKeyMapper = (id, seen) => seen.getOrElseUpdate(id, id)).batch.toStore(s)
+      val zc = new ZoeCompiler(g2)
+      val v2 = zc.run(VertexQuery.all).vertices.select(col("id"))
+      val e2 = zc.run(EdgeQuery.all).edges.select(col("id"))
+      val v1 = g1.vertices.select(col("id"))
+      val e1 = g1.edges.select(col("edge_id").as("id"))
+      v2.select(lit("vertex").as("kind"), col("id"))
+        .unionByName(e2.select(lit("edge").as("kind"), col("id")))
+        .unionByName(g2.props.select(lit("prop").as("kind"), col("hash").as("id")))
+        .unionByName(v1.except(v2).select(lit("missing_vertex").as("kind"), col("id")))
+        .unionByName(v2.except(v1).select(lit("extra_vertex").as("kind"), col("id")))
+        .unionByName(e1.except(e2).select(lit("missing_edge").as("kind"), col("id")))
+        .unionByName(e2.except(e1).select(lit("extra_edge").as("kind"), col("id")))
+    },
+      // export → reimport is EXACT for typed graphs: the oracle lists the
+      // original store's full content (ids + content hashes) and NO
+      // missing_*/extra_* rows — any asymmetry the engine reports after the
+      // round trip breaks the row/hash match
+      """SELECT 'vertex' AS kind, 'a' AS id
+        |UNION ALL SELECT 'vertex', 'b'
+        |UNION ALL SELECT 'vertex', 'c'
+        |UNION ALL SELECT 'edge', upper(sha256('{"properties":"'||upper(sha256('{"Road":"A2"}'))||'","n1":"a","n2":"b"}'))
+        |UNION ALL SELECT 'edge', upper(sha256('{"properties":"'||upper(sha256('{"Lives":"home"}'))||'","n1":"c","n2":"a"}'))
+        |UNION ALL SELECT 'prop', upper(sha256('{"City":"Berlin"}'))
+        |UNION ALL SELECT 'prop', upper(sha256('{"City":"Paris"}'))
+        |UNION ALL SELECT 'prop', upper(sha256('{"Person":"Ada"}'))
+        |UNION ALL SELECT 'prop', upper(sha256('{"Road":"A2"}'))
+        |UNION ALL SELECT 'prop', upper(sha256('{"Lives":"home"}'))
+        |UNION ALL SELECT 'prop', upper(sha256('{"SchemaType":"City"}'))
+        |UNION ALL SELECT 'prop', upper(sha256('{"SchemaType":"Person"}'))
+        |UNION ALL SELECT 'prop', upper(sha256('{"SchemaType":"Road"}'))
+        |UNION ALL SELECT 'prop', upper(sha256('{"SchemaType":"Lives"}'))""".stripMargin,
+      Micro),
+    // §1.3 SchemaConstraint enforcement (declared-never-enforced in the
+    // reference; enforced here): one satisfied Required, one failing
+    // Required, one failing Prohibited with a data-dependent match count
+    Entry("schema_validate", (s, d) => {
+      import s.implicits._
+      import graft.exec.{SchemaConstraint, SchemaValidator}
+      val violations = SchemaValidator.validate(graph(s, d), Seq(
+        SchemaConstraint.Required(BasicQuery.V(nationV("NATION_7"))),
+        SchemaConstraint.Required(BasicQuery.V(nationV("NO_SUCH_NATION"))),
+        SchemaConstraint.Prohibited(BasicQuery.V(customersInSegment("BUILDING")))))
+      violations.map(v => (v.kind, v.matches)).toDF("kind", "matches")
+    },
+      """SELECT 'required' AS kind, CAST(0 AS BIGINT) AS matches
+        |UNION ALL SELECT 'prohibited', (SELECT count(*) FROM customer WHERE c_mktsegment = 'BUILDING')""".stripMargin,
+      // its three lookups are branches of zoe_disjunctive_union, up to the nation name
+      SiblingOf("zoe_disjunctive_union")),
+    // §2.1 V.Store: side-effect snapshot union'd into the result
+    Entry("zoe_store_hop", (s, d) => compiler(s, d).run(
+      customersOf("NATION_7").store.outgoing.intersect(edgeProp("InNation")).outgoing).vertices,
+      """SELECT 'nation:'||n_nationkey AS id FROM nation WHERE n_name = 'NATION_7'
+        |UNION ALL SELECT 'customer:'||c_custkey FROM customer JOIN nation ON c_nationkey = n_nationkey WHERE n_name = 'NATION_7'""".stripMargin),
+    // §2.4 path accumulation + extract_path_properties
+    Entry("zoe_paths_europe", (s, d) => {
+      val zc = compiler(s, d)
+      zc.extractPathProperties(zc.run(customersOfRegion("EUROPE")))
+        .select(col("end").as("path_end"), concat_ws("->", col("props")).as("path_str"))
+    },
+      """SELECT 'customer:'||c_custkey AS path_end,
+        |'{"Region":"EUROPE"}->"InRegion"->{"Nation":"'||n_name||'"}->"InNation"->{"Customer":"'||c_name||'"}' AS path_str
+        |FROM customer JOIN nation ON c_nationkey = n_nationkey JOIN region ON n_regionkey = r_regionkey
+        |WHERE r_name = 'EUROPE'""".stripMargin),
+    // §2.2 E.All: every edge family's content-hash id
+    Entry("zoe_e_all", (s, d) => compiler(s, d).run(EdgeQuery.all).edges,
+      s"""SELECT $custInNation AS id FROM customer
+         |UNION ALL SELECT $suppInNation FROM supplier
+         |UNION ALL SELECT $nationInRegion FROM nation
+         |UNION ALL SELECT $custInSegment FROM customer
+         |UNION ALL SELECT $orderPlacedBy FROM orders""".stripMargin),
+    // §2.2 E.Specific: NOT existence-checked (reference parity,
+    // kv_graph_store.rs:229-233) — the ghost id must survive
+    Entry("zoe_e_specific", (s, d) => {
+      val rows = t(s, d, "nation").where(col("n_nationkey").isin(1, 7))
+        .select(col("n_nationkey").cast("string"), col("n_regionkey").cast("string"))
+        .collect()
+      val ids = rows.toSeq.map(r => Hashing.edgeId(TpchGraph.unitHash("InRegion"),
+        s"nation:${r.getString(0)}", s"region:${r.getString(1)}")) :+ "GHOST_EDGE"
+      compiler(s, d).run(EdgeQuery.fromIds(ids)).edges
+    },
+      s"""SELECT $nationInRegion AS id FROM nation WHERE n_nationkey IN (1, 7)
+         |UNION ALL SELECT 'GHOST_EDGE'""".stripMargin),
+    // §2.2 E.Union
+    Entry("zoe_e_union", (s, d) =>
+      compiler(s, d).run(edgeProp("InRegion").union(edgeProp("InSegment"))).edges,
+      s"""SELECT $nationInRegion AS id FROM nation
+         |UNION ALL SELECT $custInSegment FROM customer""".stripMargin,
+      // zoe_disjunctive_union unions the same edge-property lookups (InNation for InRegion)
+      SiblingOf("zoe_disjunctive_union")),
+    // §2.2 E.Substract: InNation edges not pointing at NATION_7
+    Entry("zoe_e_substract", (s, d) =>
+      compiler(s, d).run(edgeProp("InNation").substract(nationV("NATION_7").ingoing)).edges,
+      s"""SELECT $custInNation AS id FROM customer WHERE c_nationkey <> 7
+         |UNION ALL SELECT $suppInNation FROM supplier WHERE s_nationkey <> 7""".stripMargin),
+    // §2.2 E.DisjunctiveUnion (documented symmetric-difference semantics):
+    // edges into NATION_7 vs InNation edges of BUILDING-segment customers
+    Entry("zoe_e_disjunctive_union", (s, d) =>
+      compiler(s, d).run(nationV("NATION_7").ingoing.disjunctiveUnion(
+        customersInSegment("BUILDING").outgoing.intersect(edgeProp("InNation")))).edges,
+      s"""SELECT $custInNation AS id FROM customer WHERE (c_nationkey = 7) <> (c_mktsegment = 'BUILDING')
+         |UNION ALL SELECT $suppInNation FROM supplier WHERE s_nationkey = 7""".stripMargin),
+    // §2.2 E.Filter with the sql interpreter over the edge's property
+    Entry("zoe_e_filter_sql", (s, d) => compiler(s, d).run(
+      EdgeQuery.all.filter(ZFilter("sql", "schema_type = 'InRegion'"))).edges,
+      s"SELECT $nationInRegion AS id FROM nation"),
+    // §2.2 E.Store: snapshot InSegment edges, traverse on to InNation edges;
+    // the result unions the stored snapshot back in
+    Entry("zoe_e_store", (s, d) => compiler(s, d).run(
+      customersOf("NATION_7").outgoing.intersect(edgeProp("InSegment")).store
+        .ingoing.outgoing.intersect(edgeProp("InNation"))).edges,
+      s"""SELECT $custInNation AS id FROM customer WHERE c_nationkey = 7
+         |UNION ALL SELECT $custInSegment FROM customer WHERE c_nationkey = 7""".stripMargin),
+    // §2.2 E.Property
+    Entry("zoe_e_property", (s, d) =>
+      compiler(s, d).traceE(edgeProp("InSegment")).select("src", "dst"),
+      "SELECT 'customer:'||c_custkey AS src, 'segment:'||c_mktsegment AS dst FROM customer",
+      // customersInSegment in zoe_disjunctive_union compiles the same edge lookup
+      SiblingOf("zoe_disjunctive_union")),
+    // §2.2 E.Out + E.Intersect
+    Entry("zoe_e_out_intersect", (s, d) =>
+      compiler(s, d).traceE(customersOf("NATION_7").outgoing.intersect(edgeProp("InSegment")))
+        .select("src", "dst"),
+      """SELECT 'customer:'||c_custkey AS src, 'segment:'||c_mktsegment AS dst
+        |FROM customer JOIN nation ON c_nationkey = n_nationkey WHERE n_name = 'NATION_7'""".stripMargin),
+    // content-addressed edge identity, cross-checked against DuckDB sha256
+    Entry("zoe_e_ids", (s, d) => compiler(s, d).run(edgeProp("InRegion")).edges,
+      """SELECT upper(sha256('{"properties":"'||upper(sha256('"InRegion"'))||'","n1":"nation:'||n_nationkey||'","n2":"region:'||n_regionkey||'"}')) AS id
+        |FROM nation""".stripMargin,
+      // zoe_two_hop intersects the same InRegion edge lookup
+      SiblingOf("zoe_two_hop")),
+    // §2.3 ReferencingProperties (parents in the nested() DAG)
+    Entry("zoe_p_referencing", (s, d) => compiler(s, d).run(
+      Zoe.start(PropValue.schemaType("Segment")).referencingProperties).properties,
+      """SELECT DISTINCT upper(sha256('{"Segment":"'||c_mktsegment||'"}')) AS hash FROM customer""",
+      // zoe_union's vType lookup starts with this step (Customer for Segment)
+      SiblingOf("zoe_union")),
+    // §2.3 ReferencedProperties (children; unimplemented in the reference)
+    Entry("zoe_p_referenced", (s, d) => {
+      val name = t(s, d, "customer").where(col("c_custkey") === 1)
+        .select("c_name").head().getString(0)
+      compiler(s, d).run(
+        Zoe.start(PropValue.typed("Customer", Some(name))).referencedProperties).properties
+    },
+      "SELECT DISTINCT upper(sha256('{\"SchemaType\":\"Customer\"}')) AS hash FROM customer WHERE c_custkey = 1"),
+    // §2.5 WeightedGraph surface: JSON-path weight extraction with default
+    // for non-numeric properties, summed over parallel edges
+    Entry("graph_weighted_edges", (s, d) => {
+      val b = new graft.store.GraphBatch
+      b.createNode("a", PropValue("Node", Some("a")))
+      b.createNode("b", PropValue("Node", Some("b")))
+      b.createNode("c", PropValue("Node", Some("c")))
+      b.createEdge("a", "b", PropValue("Weight", Some("2.5")))
+      b.createEdge("b", "c", PropValue("Link"))
+      GraphAnalytics.weightedEdges(b.toStore(s)).select("src", "dst", "weight")
+    },
+      """SELECT 'a' AS src, 'b' AS dst, CAST(2.5 AS DOUBLE) AS weight
+        |UNION ALL SELECT 'b', 'c', CAST(1.0 AS DOUBLE)""".stripMargin,
+      Micro),
+    // §2.5 Graph trait surface: degree
+    Entry("graph_degree", (s, d) =>
+      GraphAnalytics.degrees(graph(s, d)).where(col("id").startsWith("nation:")),
+      """SELECT 'nation:'||n_nationkey AS id,
+        |(SELECT count(*) FROM customer WHERE c_nationkey = n_nationkey) + (SELECT count(*) FROM supplier WHERE s_nationkey = n_nationkey) AS in_deg,
+        |CAST(1 AS BIGINT) AS out_deg
+        |FROM nation""".stripMargin),
+    // §2.5 order/size
+    Entry("graph_order_size", (s, d) => {
+      val g = graph(s, d)
+      g.vertices.agg(count(lit(1)).as("graph_order"))
+        .crossJoin(g.edges.agg(count(lit(1)).as("graph_size")))
+    },
+      """SELECT
+        |((SELECT count(*) FROM region)+(SELECT count(*) FROM nation)+(SELECT count(*) FROM customer)
+        | +(SELECT count(*) FROM supplier)+(SELECT count(*) FROM part)+(SELECT count(*) FROM orders)
+        | +(SELECT count(DISTINCT c_mktsegment) FROM customer)) AS graph_order,
+        |(2*(SELECT count(*) FROM customer)+(SELECT count(*) FROM supplier)
+        | +(SELECT count(*) FROM nation)+(SELECT count(*) FROM orders)) AS graph_size""".stripMargin),
+    // §2.5 neighbors
+    Entry("graph_neighbors", (s, d) => GraphAnalytics.neighbors(graph(s, d), "nation:7"),
+      """SELECT 'customer:'||c_custkey AS id FROM customer WHERE c_nationkey = 7
+        |UNION ALL SELECT 'supplier:'||s_suppkey FROM supplier WHERE s_nationkey = 7
+        |UNION ALL SELECT 'region:'||n_regionkey FROM nation WHERE n_nationkey = 7""".stripMargin),
+    // connected components with deterministic long mapping
+    Entry("graphx_cc", (s, d) =>
+      GraphAnalytics.connectedComponents(analyticsSubgraph(graph(s, d)), analyticsToLong),
+      """SELECT 'region:'||r_regionkey AS id, CAST(r_regionkey AS BIGINT) AS component FROM region
+        |UNION ALL SELECT 'nation:'||n_nationkey, CAST(n_regionkey AS BIGINT) FROM nation
+        |UNION ALL SELECT 'supplier:'||s_suppkey, CAST(n_regionkey AS BIGINT) FROM supplier JOIN nation ON s_nationkey = n_nationkey
+        |UNION ALL SELECT 'customer:'||c_custkey, CAST(n_regionkey AS BIGINT) FROM customer JOIN nation ON c_nationkey = n_nationkey""".stripMargin),
+    // static PageRank (both names, one body). On the 3-level
+    // member->nation->region DAG the 10-iteration fixed point has a closed
+    // form (members 0.15, nations 0.15+0.85*0.15*m, regions
+    // 0.15+0.85*sum(nation ranks)), then normalized to sum to |V| — all
+    // SQL-expressible, so this is oracle-checked despite being an
+    // iterative algorithm. Both names stay benched so the per-entry
+    // record keeps its graphx_* names; likewise for the shortest-path and
+    // triangle pairs.
+    Entry("graphx_pagerank", analyticsPageRank, pageRankSql),
+    Entry("graph_pagerank_df", analyticsPageRank, pageRankSql),
+    // personalized PageRank: seed-conditioned relevance from every 10th
+    // customer; mass stays seed-local (no |V| normalization), closed-form
+    // oracle on the member->nation->region DAG. Emitted as integer
+    // micro-units (rank · 1e6, exact in this DAG because every out-degree
+    // is 1) — the repo-wide convention for quantized scores, after the
+    // round-10 double emit flipped round(rank, 5) between 16- and 32-core
+    // runs of the same build (partition-order float summation).
+    Entry("graph_ppr_df", (s, d) => {
+      val g = analyticsSubgraph(graph(s, d))
+      val seeds = g.vertices
+        .where(split(col("id"), ":").getItem(0) === "customer" &&
+          split(col("id"), ":").getItem(1).cast("long") % 10 === 0)
+        .select(analyticsToLong(col("id")).as("vid"))
+      GraphAnalytics.personalizedPageRankDF(g, analyticsToLong, seeds, numIter = 10)
+        .select(col("id"),
+          round(col("rank") * lit(1000000), 0).cast("long").as("rank_u6"))
+    },
+      // PPR closed form on the member->nation->region DAG, in exact integer
+      // micro-units (every out-degree is 1, so all mass values are exact
+      // multiples of 1e-6): a seed member holds 0.15 = 150000u; a nation
+      // collects 0.85 * 0.15 * |its seed members| = 127500u each; a region
+      // collects 0.85 * that = 108375u per seed member under it. Integer
+      // arithmetic on BOTH sides — no float summation order to diverge.
+      """WITH seedc AS (SELECT c_custkey, c_nationkey FROM customer WHERE c_custkey % 10 = 0),
+        |ranks AS (
+        |  SELECT 'customer:'||c_custkey AS id,
+        |    CASE WHEN c_custkey % 10 = 0 THEN 150000 ELSE 0 END AS u
+        |  FROM customer
+        |  UNION ALL SELECT 'supplier:'||s_suppkey, 0 FROM supplier
+        |  UNION ALL SELECT 'nation:'||n_nationkey,
+        |    127500 * (SELECT count(*) FROM seedc WHERE c_nationkey = n_nationkey)
+        |  FROM nation
+        |  UNION ALL SELECT 'region:'||r_regionkey,
+        |    108375 * (SELECT count(*) FROM seedc JOIN nation ON c_nationkey = n_nationkey
+        |              WHERE n_regionkey = r_regionkey)
+        |  FROM region)
+        |SELECT id, CAST(u AS BIGINT) AS rank_u6 FROM ranks""".stripMargin),
+    // DataFrame-native synchronous label propagation (community
+    // detection): 3 rounds, most-frequent-neighbor-label with smallest-
+    // label tie-break — integer-exact, oracle unrolls the rounds
+    Entry("graph_lpa_df", (s, d) =>
+      GraphAnalytics.labelPropagationDF(analyticsSubgraph(graph(s, d)),
+        analyticsToLong, rounds = 3, symEdges = Some(symEdges(s, d))), lpaSql),
+    // shortest paths to the region landmarks (both names, one body):
+    // iterated min-propagation with the fused count+sum convergence probe
+    Entry("graphx_shortest_paths", analyticsShortestPaths, shortestPathsSql),
+    Entry("graph_sssp_df", analyticsShortestPaths, shortestPathsSql),
+    // k-core of the THRESHOLDED co-purchase graph (parts sharing >= 2
+    // orders): iterative peeling to the dense backbone. At sf0.01 the
+    // 3-core keeps ~935 of 1880 parts after 11 peel rounds — real
+    // multi-round dynamics, not a one-shot degree filter
+    Entry("graph_kcore_df", (s, d) => {
+      val pairs = coPairs(s, d)
+        .select("a", "b")
+      GraphAnalytics.kCore(pairs, k = 3)
+    }, kCoreSql),
+    // HITS hubs/authorities (2 exact-integer iterations, unnormalized
+    // fixed-count form) over the directed analytics subgraph
+    Entry("graph_hits", (s, d) =>
+      GraphAnalytics.hitsDF(analyticsSubgraph(graph(s, d)), analyticsToLong,
+        numIter = 2),
+      // unrolled 2-iteration integer HITS over the same member→nation→region
+      // edges the pagerank oracle walks
+      """WITH e AS (
+        |  SELECT 'customer:'||c_custkey AS src, 'nation:'||c_nationkey AS dst FROM customer
+        |  UNION ALL SELECT 'supplier:'||s_suppkey, 'nation:'||s_nationkey FROM supplier
+        |  UNION ALL SELECT 'nation:'||n_nationkey, 'region:'||n_regionkey FROM nation),
+        |h1 AS (SELECT src, count(*) AS h FROM e GROUP BY src),
+        |a1 AS (SELECT dst, sum(h1.h) AS a FROM e JOIN h1 ON h1.src = e.src GROUP BY dst),
+        |h2 AS (SELECT e.src, sum(a1.a) AS h FROM e JOIN a1 ON a1.dst = e.dst GROUP BY e.src),
+        |a2 AS (SELECT e.dst, sum(h2.h) AS a FROM e JOIN h2 ON h2.src = e.src GROUP BY e.dst),
+        |ids AS (SELECT 'region:'||r_regionkey AS id FROM region
+        |  UNION ALL SELECT 'nation:'||n_nationkey FROM nation
+        |  UNION ALL SELECT 'supplier:'||s_suppkey FROM supplier
+        |  UNION ALL SELECT 'customer:'||c_custkey FROM customer)
+        |SELECT ids.id, CAST(coalesce(h2.h, 0) AS BIGINT) AS hub,
+        |  CAST(coalesce(a2.a, 0) AS BIGINT) AS auth
+        |FROM ids LEFT JOIN h2 ON h2.src = ids.id LEFT JOIN a2 ON a2.dst = ids.id""".stripMargin),
+    // Adamic–Adar link prediction over the same thresholded co-purchase
+    // graph: top-50 NON-adjacent pairs by Σ 1/ln(deg) over common
+    // neighbors, integer micro-units per vertex cell
+    Entry("graph_adamic_adar", (s, d) => {
+      val pairs = coPairs(s, d)
+        .select("a", "b")
+      GraphAnalytics.adamicAdar(pairs, topK = 50)
+    },
+      """WITH e AS MATERIALIZED (
+        |  SELECT a, b FROM (
+        |    SELECT l1.p AS a, l2.p AS b, count(DISTINCT l1.o) AS w
+        |    FROM (SELECT o, p FROM (SELECT l_orderkey AS o, l_partkey AS p,
+        |        dense_rank() OVER (PARTITION BY l_orderkey ORDER BY l_partkey) AS r
+        |        FROM lineitem) cb1 WHERE r <= 256) l1
+        |    JOIN (SELECT o, p FROM (SELECT l_orderkey AS o, l_partkey AS p,
+        |        dense_rank() OVER (PARTITION BY l_orderkey ORDER BY l_partkey) AS r
+        |        FROM lineitem) cb2 WHERE r <= 256) l2 ON l1.o = l2.o
+        |    WHERE l1.p < l2.p GROUP BY 1, 2)
+        |  WHERE w >= 2),
+        |sym AS MATERIALIZED (SELECT a, b FROM e UNION ALL SELECT b AS a, a AS b FROM e),
+        |zw AS (SELECT a AS z, CAST(floor(1000000.0 / ln(count(*)) + 0.5) AS BIGINT) AS w
+        |  FROM sym GROUP BY a HAVING count(*) BETWEEN 2 AND 1000),
+        |adj AS MATERIALIZED (SELECT s.a AS z, s.b AS n, zw.w FROM sym s JOIN zw ON zw.z = s.a),
+        |sc AS (SELECT x.n AS u, y.n AS v, count(*) AS n_common, sum(x.w) AS aa
+        |  FROM adj x JOIN adj y ON x.z = y.z AND x.n < y.n GROUP BY 1, 2)
+        |SELECT CAST(u AS BIGINT) AS u, CAST(v AS BIGINT) AS v,
+        |  CAST(n_common AS BIGINT) AS n_common, CAST(aa AS BIGINT) AS aa_micro
+        |FROM sc
+        |WHERE NOT EXISTS (SELECT 1 FROM e WHERE e.a = sc.u AND e.b = sc.v)
+        |ORDER BY aa_micro DESC, u ASC, v ASC LIMIT 50""".stripMargin),
+    // DeepWalk-style sequence sampling: one deterministic 4-step walk per
+    // node of the symmetrized co-purchase graph (md5-uniform step choice
+    // over the dst-ordered adjacency — bit-reproducible across engines)
+    Entry("graph_random_walks", (s, d) => coPurchaseWalks(s, d), randomWalksSql),
+    // word2vec-over-walks batch feed: (center, context) tallies within a
+    // 2-step window of the shared walk corpus
+    Entry("graph_walk_pairs", (s, d) =>
+      GraphAnalytics.walkSkipGramPairs(coPurchaseWalks(s, d), window = 2), walkPairsSql),
+    // the DeepWalk-PRODUCTION depth in the driver gate: 40-step walks,
+    // ±5 skip-gram window (the short entry above keeps the cheap smoke
+    // shape; this one pins the length the pair join must stay linear at)
+    Entry("graph_walk_pairs_long", (s, d) => {
+      val pairs = coPairs(s, d)
+      val sym = pairs.select(col("a").as("src"), col("b").as("dst"))
+        .unionByName(pairs.select(col("b").as("src"), col("a").as("dst")))
+      GraphAnalytics.walkSkipGramPairs(
+        GraphAnalytics.randomWalks(sym, walkLen = 40)
+          .select(col("walk_id").cast("long"), col("step"), col("node").cast("long")),
+        window = 5)
+    }, walkPairsLongSql),
+    // PMI over the skip-gram pairs (the SGNS implicit factorization
+    // target) — integer micro-ln per pair cell over exact counts
+    Entry("graph_walk_pmi", (s, d) =>
+      GraphAnalytics.walkPairPmi(
+        GraphAnalytics.walkSkipGramPairs(coPurchaseWalks(s, d), window = 2)), walkPmiSql),
+    // deterministic SGNS negatives: k=3 noise nodes per skip-gram pair
+    // from the unigram^0.75 context distribution (md5 uniform landed in
+    // the integer milli-weight ladder — bit-replayable in the oracle)
+    Entry("graph_walk_negatives", (s, d) =>
+      GraphAnalytics.sgnsNegatives(
+        GraphAnalytics.walkSkipGramPairs(coPurchaseWalks(s, d), window = 2), k = 3),
+      walkNegativesSql),
+    // word2vec frequent-node subsampling of the walk corpus (t = 1e-3):
+    // hub occurrences thinned toward sqrt, steps compacted per walk
+    Entry("graph_walk_subsample", (s, d) =>
+      GraphAnalytics.subsampleFrequent(coPurchaseWalks(s, d), tMicro = 1000), walkSubsampleSql),
+    // true second-order node2vec (p=4, q=0.5 → retMilli 250, outMilli
+    // 2000): step bias depends on the PREVIOUS node — return discouraged,
+    // venture-out favored; all-integer ladder, bit-replayable
+    Entry("graph_node2vec_walks", (s, d) => {
+      val pairs = coPairs(s, d)
+      val sym = pairs.select(col("a").as("src"), col("b").as("dst"))
+        .unionByName(pairs.select(col("b").as("src"), col("a").as("dst")))
+      GraphAnalytics.node2vecWalks(sym, walkLen = 4, retMilli = 250, outMilli = 2000)
+        .select(col("walk_id").cast("long"), col("step"), col("node").cast("long"))
+    }, node2vecSql),
+    // node2vec at DeepWalk-PRODUCTION depth (walkLen 40): the len-4 entry
+    // above keeps the cheap smoke shape; this pins the depth a real
+    // embedding corpus samples at, the second-order twin of
+    // graph_walk_pairs_long (oracle: the same hop chain unrolled 40 deep)
+    Entry("graph_node2vec_walks_long", (s, d) => {
+      val pairs = coPairs(s, d)
+      val sym = pairs.select(col("a").as("src"), col("b").as("dst"))
+        .unionByName(pairs.select(col("b").as("src"), col("a").as("dst")))
+      GraphAnalytics.node2vecWalks(sym, walkLen = 40, retMilli = 250, outMilli = 2000)
+        .select(col("walk_id").cast("long"), col("step"), col("node").cast("long"))
+    }, node2vecSqlN(40)),
+    // community QUALITY metric over the LPA partition: per-community
+    // Newman modularity contribution Q_c = E_c/M - (D_c/M)^2 on the same
+    // symmetrized analytics edges LPA iterated over — exact-integer core
+    // (decimal(38,0) products), one double division per community
+    Entry("graph_modularity", (s, d) => {
+      val g = analyticsSubgraph(graph(s, d))
+      val labels = GraphAnalytics.labelPropagationDF(g, analyticsToLong,
+          rounds = 3, symEdges = Some(symEdges(s, d)))
+        .select(analyticsToLong(col("id")).as("vid"), col("label"))
+      GraphAnalytics.modularityByCommunity(labels, symEdges(s, d))
+    }, modularitySql),
+    // degree assortativity of the thresholded co-purchase graph: do hubs
+    // co-purchase with hubs? Pearson r between endpoint degrees over the
+    // directed-symmetric edge list — guarded-Long sums, one IEEE division
+    Entry("graph_assortativity", (s, d) => {
+      val pairs = coPairs(s, d)
+      val sym = pairs.select(col("a"), col("b"))
+        .unionByName(pairs.select(col("b").as("a"), col("a").as("b")))
+      GraphAnalytics.assortativity(sym)
+    }, assortativitySql),
+    // k-truss of the thresholded co-purchase graph (k=3: every surviving
+    // edge closes >= 1 triangle among survivors; the 4-truss of this
+    // graph is empty — its densest cohesion is triangle-level) — the
+    // edge-cohesion analog of graph_kcore_df, synchronous peel to the
+    // fixpoint. maxRounds = 16 deliberately EQUALS the oracle's fixed
+    // unroll depth (kTrussSql): a denser future fixture that needs more
+    // peel rounds fails loudly here ("did not converge in 16 rounds")
+    // instead of surfacing as an opaque gate hash mismatch (ADVICE r14)
+    Entry("graph_ktruss", (s, d) =>
+      GraphAnalytics.kTruss(coPairs(s, d).select("a", "b"), k = 3, maxRounds = 16), kTrussSql),
+    // FULL multi-level Louvain on the co-purchase graph: parity-alternated
+    // local-move sweeps (8 per level), coarsen, repeat (3 levels) — the
+    // caps are pinned by the oracle's fixed 3x8 CTE unroll; converged
+    // rounds replay as no-ops (see GraphAnalytics.louvain on why bounded
+    // sweeps, not a movement fixpoint, is the termination rule here)
+    Entry("graph_louvain", (s, d) => louvainPartition(s, d, false),
+      louvainSql(levels = 3, rounds = 8)),
+    // Leiden-style refinement of the louvain partition: every community
+    // split into its connected components within the community-induced
+    // subgraph (Louvain can leave communities internally disconnected —
+    // the defect Leiden is named for fixing). The partition comes from
+    // the shared memo (Bench stages it), so the benched time is the
+    // refinement cc ALONE, not ascent + cc measured by subtraction.
+    Entry("graph_louvain_refine", (s, d) => {
+      val pairs = coPairs(s, d)
+      val sym = pairs.select(col("a"), col("b"))
+        .unionByName(pairs.select(col("b").as("a"), col("a").as("b")))
+      GraphAnalytics.refineCommunities(louvainPartition(s, d, false), sym)
+    },
+      // Leiden refinement replay: the full louvain unroll, then recursive
+      // min-reachable cc over INTRA-community edges only; members with no
+      // intra edge become singletons
       s"""${louvainCtes(3, 8).replaceFirst("WITH ", "WITH RECURSIVE ")},
          |intra AS MATERIALIZED (SELECT s.a, s.b FROM e1 s
          |  JOIN map3 la ON la.vid = s.a JOIN map3 lb ON lb.vid = s.b
@@ -1567,12 +1481,75 @@ object GraphQueries {
          |frag AS (SELECT a AS vid, least(a, min(b)) AS cluster FROM reach9 GROUP BY a)
          |SELECT CAST(m.vid AS BIGINT) AS vid,
          |  CAST(coalesce(f.cluster, m.vid) AS BIGINT) AS label
-         |FROM map3 m LEFT JOIN frag f ON f.vid = m.vid""".stripMargin,
-    "graph_modularity" -> modularitySql,
-    "graph_assortativity" -> assortativitySql,
-    // synchronous local-move replay from singleton labels: per vertex the
-    // (score desc, community asc) argmax of M*k_vc - kv*D'c — exact ints
-    "graph_louvain_move" ->
+         |FROM map3 m LEFT JOIN frag f ON f.vid = m.vid""".stripMargin),
+    // the WEIGHTED ascent twin: shared-order counts as edge weights (the
+    // gate's only weighted-louvain path; unit-weight entry above pins the
+    // common case) — same caps, same oracle unroll with w carried through
+    Entry("graph_louvain_weighted", (s, d) => louvainPartition(s, d, true),
+      louvainSql(levels = 3, rounds = 8, weighted = true),
+      // same plan and round count as graph_louvain; only the w column differs
+      SiblingOf("graph_louvain")),
+    // TRUE Leiden (Traag 2019 §III): refinement INTERLEAVED into the
+    // level loop — coarsen on connected fragments, start each fragment in
+    // its home community — so upper levels ascend on a well-formed base
+    // (vs graph_louvain_refine, which repairs only the final level).
+    // Same 3×8 caps; the oracle unrolls move rounds + per-level
+    // recursive-cc refinement + fragment coarsening
+    Entry("graph_leiden", (s, d) => leidenPartition(s, d), leidenSql(levels = 3, rounds = 8)),
+    // quality twin of graph_louvain_quality for the INTERLEAVED schedule:
+    // whole-partition modularity of leiden vs louvain on the same
+    // co-purchase edges — pins the "+modularity at identical volume cost"
+    // claim (SCALE.md r15) as a gate row instead of prose, and guards
+    // future schedule changes that keep determinism but lose the gain.
+    // Both partitions come from the shared memos (Bench stages them),
+    // so the benched time is the two modularity rollups alone
+    Entry("graph_leiden_quality", (s, d) => {
+      val pairs = coPairs(s, d)
+      // feeds two modularity rollups
+      val sym = checkpoint(pairs.select(col("a"), col("b"))
+        .unionByName(pairs.select(col("b").as("a"), col("a").as("b"))))
+      def q(method: String, labels: DataFrame): DataFrame =
+        GraphAnalytics.modularityTotal(labels, sym)
+          .select(lit(method).as("method"), col("n_communities"),
+            col("internal_directed"), col("q"))
+      q("leiden", leidenPartition(s, d))
+        .unionByName(q("louvain", louvainPartition(s, d, false)))
+    }, leidenQualitySql),
+    // partition-QUALITY row: whole-partition modularity of the louvain
+    // ascent vs 3-round LPA vs singletons on the SAME co-purchase edges —
+    // the gate pins exact labels elsewhere; this row asserts the ascent
+    // actually IMPROVES something, guarding future knob changes
+    // (maxRounds/levels/tie-breaks) that keep determinism but lose
+    // quality. Louvain labels come from the shared memo (Bench stages
+    // it); Q is the exact-integer one-division form (modularityTotal)
+    Entry("graph_louvain_quality", (s, d) => {
+      val pairs = coPairs(s, d)
+      // feeds three modularity rollups + LPA
+      val sym = checkpoint(pairs.select(col("a"), col("b"))
+        .unionByName(pairs.select(col("b").as("a"), col("a").as("b"))))
+      val singles = sym.select(col("a").as("vid")).distinct()
+        .select(col("vid"), col("vid").as("label"))
+      def q(method: String, labels: DataFrame): DataFrame =
+        GraphAnalytics.modularityTotal(labels, sym)
+          .select(lit(method).as("method"), col("n_communities"),
+            col("internal_directed"), col("q"))
+      q("louvain", louvainPartition(s, d, false))
+        .unionByName(q("lpa3", lpaOverSym(sym, rounds = 3)))
+        .unionByName(q("singletons", singles))
+    }, louvainQualitySql),
+    // one synchronous Louvain local-move round from singleton communities
+    // on the co-purchase graph: per vertex, the modularity-gain argmax
+    // over neighbor communities (exact-integer comparator M*k_vc - kv*D'c)
+    Entry("graph_louvain_move", (s, d) => {
+      val pairs = coPairs(s, d)
+      val sym = pairs.select(col("a"), col("b"))
+        .unionByName(pairs.select(col("b").as("a"), col("a").as("b")))
+      val labels = sym.select(col("a").as("vid")).distinct()
+        .select(col("vid"), col("vid").as("label"))
+      GraphAnalytics.louvainMoveRound(labels, sym)
+    },
+      // synchronous local-move replay from singleton labels: per vertex the
+      // (score desc, community asc) argmax of M*k_vc - kv*D'c — exact ints
       """WITH e AS MATERIALIZED (
         |  SELECT a, b FROM (
         |    SELECT l1.p AS a, l2.p AS b, count(DISTINCT l1.o) AS w
@@ -1605,10 +1582,17 @@ object GraphQueries {
         |  row_number() OVER (PARTITION BY vid ORDER BY score DESC, c ASC) AS rn FROM sc)
         |SELECT CAST(vid AS BIGINT) AS vid, CAST(old_label AS BIGINT) AS old_label,
         |  CAST(c AS BIGINT) AS new_label, CAST(score AS BIGINT) AS gain_cmp
-        |FROM r WHERE rn = 1""".stripMargin,
-    // per-vertex wedge-closure replay: tri(v) = closing (x < y) neighbor
-    // pairs; coefficient in integer micro-units, deg < 2 scores 0
-    "graph_clustering_coeff" ->
+        |FROM r WHERE rn = 1""".stripMargin),
+    // per-vertex local clustering coefficient of the thresholded
+    // co-purchase graph: triangles/(deg choose 2) in exact micro-units —
+    // the compact-forward triangle core shared with graph_triangles_df
+    Entry("graph_clustering_coeff", (s, d) => {
+      val pairs = coPairs(s, d)
+        .select("a", "b")
+      GraphAnalytics.clusteringCoefficients(pairs)
+    },
+      // per-vertex wedge-closure replay: tri(v) = closing (x < y) neighbor
+      // pairs; coefficient in integer micro-units, deg < 2 scores 0
       """WITH e AS MATERIALIZED (
         |  SELECT a, b FROM (
         |    SELECT l1.p AS a, l2.p AS b, count(DISTINCT l1.o) AS w
@@ -1630,317 +1614,131 @@ object GraphQueries {
         |  CAST(coalesce(t, 0) AS BIGINT) AS triangles,
         |  CASE WHEN dg < 2 THEN 0
         |    ELSE CAST((2000000 * coalesce(t, 0)) // (dg * (dg - 1)) AS BIGINT) END AS coeff_micro
-        |FROM deg LEFT JOIN tri ON tri.v = deg.v""".stripMargin,
-    "zoe_e_all" ->
-      s"""SELECT $custInNation AS id FROM customer
-         |UNION ALL SELECT $suppInNation FROM supplier
-         |UNION ALL SELECT $nationInRegion FROM nation
-         |UNION ALL SELECT $custInSegment FROM customer
-         |UNION ALL SELECT $orderPlacedBy FROM orders""".stripMargin,
-    "zoe_e_specific" ->
-      s"""SELECT $nationInRegion AS id FROM nation WHERE n_nationkey IN (1, 7)
-         |UNION ALL SELECT 'GHOST_EDGE'""".stripMargin,
-    "zoe_e_union" ->
-      s"""SELECT $nationInRegion AS id FROM nation
-         |UNION ALL SELECT $custInSegment FROM customer""".stripMargin,
-    "zoe_e_substract" ->
-      s"""SELECT $custInNation AS id FROM customer WHERE c_nationkey <> 7
-         |UNION ALL SELECT $suppInNation FROM supplier WHERE s_nationkey <> 7""".stripMargin,
-    "zoe_e_disjunctive_union" ->
-      s"""SELECT $custInNation AS id FROM customer WHERE (c_nationkey = 7) <> (c_mktsegment = 'BUILDING')
-         |UNION ALL SELECT $suppInNation FROM supplier WHERE s_nationkey = 7""".stripMargin,
-    "zoe_e_filter_sql" ->
-      s"SELECT $nationInRegion AS id FROM nation",
-    "zoe_e_store" ->
-      s"""SELECT $custInNation AS id FROM customer WHERE c_nationkey = 7
-         |UNION ALL SELECT $custInSegment FROM customer WHERE c_nationkey = 7""".stripMargin,
-    "zoe_v_all" ->
-      """SELECT 'region:'||r_regionkey AS id FROM region
-        |UNION ALL SELECT 'nation:'||n_nationkey FROM nation
-        |UNION ALL SELECT 'customer:'||c_custkey FROM customer
-        |UNION ALL SELECT 'supplier:'||s_suppkey FROM supplier
-        |UNION ALL SELECT 'part:'||p_partkey FROM part
-        |UNION ALL SELECT 'order:'||o_orderkey FROM orders
-        |UNION ALL SELECT DISTINCT 'segment:'||c_mktsegment FROM customer""".stripMargin,
-    "zoe_v_specific" ->
-      "SELECT 'nation:1' AS id UNION ALL SELECT 'nation:7' UNION ALL SELECT 'ghost:99'",
-    "zoe_v_property" ->
-      "SELECT 'nation:'||n_nationkey AS id FROM nation WHERE n_name = 'NATION_7'",
-    "zoe_v_property_schema" ->
-      "SELECT 'customer:'||c_custkey AS id FROM customer",
-    "zoe_p_fromto" ->
-      "SELECT printf('psz_%03d_%d', p_size, p_partkey) AS hash FROM part WHERE p_size BETWEEN 10 AND 20",
-    "zoe_v_fromto" ->
-      "SELECT 'part:'||p_partkey AS id FROM part WHERE p_size BETWEEN 10 AND 20",
-    "zoe_hop_in" ->
-      """SELECT 'customer:'||c_custkey AS id FROM customer JOIN nation ON c_nationkey = n_nationkey WHERE n_name = 'NATION_7'
-        |UNION ALL SELECT 'supplier:'||s_suppkey FROM supplier JOIN nation ON s_nationkey = n_nationkey WHERE n_name = 'NATION_7'""".stripMargin,
-    "zoe_hop_out" ->
-      "SELECT DISTINCT 'region:'||r_regionkey AS id FROM region JOIN nation ON n_regionkey = r_regionkey WHERE n_name = 'NATION_3'",
-    "zoe_two_hop" ->
-      """SELECT 'customer:'||c_custkey AS id FROM customer
-        |JOIN nation ON c_nationkey = n_nationkey JOIN region ON n_regionkey = r_regionkey
-        |WHERE r_name = 'EUROPE'""".stripMargin,
-    "zoe_union" ->
-      """SELECT 'customer:'||c_custkey AS id FROM customer JOIN nation ON c_nationkey = n_nationkey
-        |WHERE n_name IN ('NATION_7','NATION_3')""".stripMargin,
-    "zoe_intersect" ->
-      """SELECT 'customer:'||c_custkey AS id FROM customer JOIN nation ON c_nationkey = n_nationkey
-        |WHERE n_name = 'NATION_7' AND c_mktsegment = 'BUILDING'""".stripMargin,
-    "zoe_substract" ->
-      """SELECT 'customer:'||c_custkey AS id FROM customer JOIN nation ON c_nationkey = n_nationkey
-        |WHERE n_name = 'NATION_7' AND c_mktsegment <> 'BUILDING'""".stripMargin,
-    "zoe_disjunctive_union" ->
-      """SELECT 'customer:'||c_custkey AS id FROM customer JOIN nation ON c_nationkey = n_nationkey
-        |WHERE (n_name = 'NATION_7') <> (c_mktsegment = 'BUILDING')""".stripMargin,
-    "zoe_filter_sql" ->
-      "SELECT 'nation:'||n_nationkey AS id FROM nation WHERE n_name LIKE '%1%'",
-    "zoe_filter_registry" ->
-      "SELECT 'nation:'||n_nationkey AS id FROM nation",
-    "schema_validate" ->
-      """SELECT 'required' AS kind, CAST(0 AS BIGINT) AS matches
-        |UNION ALL SELECT 'prohibited', (SELECT count(*) FROM customer WHERE c_mktsegment = 'BUILDING')""".stripMargin,
-    "mutations_lifecycle" ->
-      """SELECT 'vertex' AS kind, 'a' AS id
-        |UNION ALL SELECT 'edge', upper(sha256('{"properties":"'||upper(sha256('"Link"'))||'","n1":"a","n2":"b"}'))
-        |UNION ALL SELECT 'prop', upper(sha256('{"Thing":"one"}'))
-        |UNION ALL SELECT 'prop', upper(sha256('{"SchemaType":"Thing"}'))
-        |UNION ALL SELECT 'prop', upper(sha256('"Link"'))""".stripMargin,
-    "changeset_diff" ->
-      s"""SELECT 'created_node' AS kind, 'extra:1' AS id
-         |UNION ALL SELECT 'modified_node', 'nation:7'
-         |UNION ALL SELECT 'deleted_node', 'segment:'||c_mktsegment FROM (SELECT DISTINCT c_mktsegment FROM customer) t
-         |UNION ALL SELECT 'deleted_edge', $custInSegment FROM customer""".stripMargin,
-    "mutations_update_delete" ->
-      """SELECT 'vertex' AS kind, 'a' AS id
-        |UNION ALL SELECT 'vertex', 'b'
-        |UNION ALL SELECT 'prop', upper(sha256('{"Thing":"three"}'))
-        |UNION ALL SELECT 'prop', upper(sha256('{"Thing":"two"}'))
-        |UNION ALL SELECT 'prop', upper(sha256('{"SchemaType":"Thing"}'))""".stripMargin,
-    // export → reimport is EXACT for typed graphs: the oracle lists the
-    // original store's full content (ids + content hashes) and NO
-    // missing_*/extra_* rows — any asymmetry the engine reports after the
-    // round trip breaks the row/hash match
-    "graphml_export_roundtrip" ->
-      """SELECT 'vertex' AS kind, 'a' AS id
-        |UNION ALL SELECT 'vertex', 'b'
-        |UNION ALL SELECT 'vertex', 'c'
-        |UNION ALL SELECT 'edge', upper(sha256('{"properties":"'||upper(sha256('{"Road":"A2"}'))||'","n1":"a","n2":"b"}'))
-        |UNION ALL SELECT 'edge', upper(sha256('{"properties":"'||upper(sha256('{"Lives":"home"}'))||'","n1":"c","n2":"a"}'))
-        |UNION ALL SELECT 'prop', upper(sha256('{"City":"Berlin"}'))
-        |UNION ALL SELECT 'prop', upper(sha256('{"City":"Paris"}'))
-        |UNION ALL SELECT 'prop', upper(sha256('{"Person":"Ada"}'))
-        |UNION ALL SELECT 'prop', upper(sha256('{"Road":"A2"}'))
-        |UNION ALL SELECT 'prop', upper(sha256('{"Lives":"home"}'))
-        |UNION ALL SELECT 'prop', upper(sha256('{"SchemaType":"City"}'))
-        |UNION ALL SELECT 'prop', upper(sha256('{"SchemaType":"Person"}'))
-        |UNION ALL SELECT 'prop', upper(sha256('{"SchemaType":"Road"}'))
-        |UNION ALL SELECT 'prop', upper(sha256('{"SchemaType":"Lives"}'))""".stripMargin,
-    "graphml_import" ->
-      """SELECT 'vertex' AS kind, 'n1' AS id
-        |UNION ALL SELECT 'vertex', 'n2'
-        |UNION ALL SELECT 'edge', upper(sha256('{"properties":"'||upper(sha256('{"Label":"Edge from Node 1 to Node 2"}'))||'","n1":"n1","n2":"n2"}'))
-        |UNION ALL SELECT 'prop', upper(sha256('{"Label":"Node 1"}'))
-        |UNION ALL SELECT 'prop', upper(sha256('{"Label":"Node 2"}'))
-        |UNION ALL SELECT 'prop', upper(sha256('{"Label":"Edge from Node 1 to Node 2"}'))
-        |UNION ALL SELECT 'prop', upper(sha256('{"SchemaType":"Label"}'))""".stripMargin,
-    "zoe_store_hop" ->
-      """SELECT 'nation:'||n_nationkey AS id FROM nation WHERE n_name = 'NATION_7'
-        |UNION ALL SELECT 'customer:'||c_custkey FROM customer JOIN nation ON c_nationkey = n_nationkey WHERE n_name = 'NATION_7'""".stripMargin,
-    "zoe_paths_europe" ->
-      """SELECT 'customer:'||c_custkey AS path_end,
-        |'{"Region":"EUROPE"}->"InRegion"->{"Nation":"'||n_name||'"}->"InNation"->{"Customer":"'||c_name||'"}' AS path_str
-        |FROM customer JOIN nation ON c_nationkey = n_nationkey JOIN region ON n_regionkey = r_regionkey
-        |WHERE r_name = 'EUROPE'""".stripMargin,
-    "zoe_e_property" ->
-      "SELECT 'customer:'||c_custkey AS src, 'segment:'||c_mktsegment AS dst FROM customer",
-    "zoe_e_out_intersect" ->
-      """SELECT 'customer:'||c_custkey AS src, 'segment:'||c_mktsegment AS dst
-        |FROM customer JOIN nation ON c_nationkey = n_nationkey WHERE n_name = 'NATION_7'""".stripMargin,
-    "zoe_e_ids" ->
-      """SELECT upper(sha256('{"properties":"'||upper(sha256('"InRegion"'))||'","n1":"nation:'||n_nationkey||'","n2":"region:'||n_regionkey||'"}')) AS id
-        |FROM nation""".stripMargin,
-    "zoe_p_referencing" ->
-      """SELECT DISTINCT upper(sha256('{"Segment":"'||c_mktsegment||'"}')) AS hash FROM customer""",
-    "zoe_p_referenced" ->
-      "SELECT DISTINCT upper(sha256('{\"SchemaType\":\"Customer\"}')) AS hash FROM customer WHERE c_custkey = 1",
-    "graph_weighted_edges" ->
-      """SELECT 'a' AS src, 'b' AS dst, CAST(2.5 AS DOUBLE) AS weight
-        |UNION ALL SELECT 'b', 'c', CAST(1.0 AS DOUBLE)""".stripMargin,
-    "graph_degree" ->
-      """SELECT 'nation:'||n_nationkey AS id,
-        |(SELECT count(*) FROM customer WHERE c_nationkey = n_nationkey) + (SELECT count(*) FROM supplier WHERE s_nationkey = n_nationkey) AS in_deg,
-        |CAST(1 AS BIGINT) AS out_deg
-        |FROM nation""".stripMargin,
-    "graph_order_size" ->
-      """SELECT
-        |((SELECT count(*) FROM region)+(SELECT count(*) FROM nation)+(SELECT count(*) FROM customer)
-        | +(SELECT count(*) FROM supplier)+(SELECT count(*) FROM part)+(SELECT count(*) FROM orders)
-        | +(SELECT count(DISTINCT c_mktsegment) FROM customer)) AS graph_order,
-        |(2*(SELECT count(*) FROM customer)+(SELECT count(*) FROM supplier)
-        | +(SELECT count(*) FROM nation)+(SELECT count(*) FROM orders)) AS graph_size""".stripMargin,
-    "graph_neighbors" ->
-      """SELECT 'customer:'||c_custkey AS id FROM customer WHERE c_nationkey = 7
-        |UNION ALL SELECT 'supplier:'||s_suppkey FROM supplier WHERE s_nationkey = 7
-        |UNION ALL SELECT 'region:'||n_regionkey FROM nation WHERE n_nationkey = 7""".stripMargin,
-    "graphx_cc" ->
-      """SELECT 'region:'||r_regionkey AS id, CAST(r_regionkey AS BIGINT) AS component FROM region
-        |UNION ALL SELECT 'nation:'||n_nationkey, CAST(n_regionkey AS BIGINT) FROM nation
-        |UNION ALL SELECT 'supplier:'||s_suppkey, CAST(n_regionkey AS BIGINT) FROM supplier JOIN nation ON s_nationkey = n_nationkey
-        |UNION ALL SELECT 'customer:'||c_custkey, CAST(n_regionkey AS BIGINT) FROM customer JOIN nation ON c_nationkey = n_nationkey""".stripMargin,
-    "graphx_shortest_paths" -> shortestPathsSql,
-    "graph_sssp_df" -> shortestPathsSql,
-    "graph_kcore_df" -> kCoreSql,
-    "graph_adamic_adar" ->
-      """WITH e AS MATERIALIZED (
-        |  SELECT a, b FROM (
-        |    SELECT l1.p AS a, l2.p AS b, count(DISTINCT l1.o) AS w
-        |    FROM (SELECT o, p FROM (SELECT l_orderkey AS o, l_partkey AS p,
-        |        dense_rank() OVER (PARTITION BY l_orderkey ORDER BY l_partkey) AS r
-        |        FROM lineitem) cb1 WHERE r <= 256) l1
-        |    JOIN (SELECT o, p FROM (SELECT l_orderkey AS o, l_partkey AS p,
-        |        dense_rank() OVER (PARTITION BY l_orderkey ORDER BY l_partkey) AS r
-        |        FROM lineitem) cb2 WHERE r <= 256) l2 ON l1.o = l2.o
-        |    WHERE l1.p < l2.p GROUP BY 1, 2)
-        |  WHERE w >= 2),
-        |sym AS MATERIALIZED (SELECT a, b FROM e UNION ALL SELECT b AS a, a AS b FROM e),
-        |zw AS (SELECT a AS z, CAST(floor(1000000.0 / ln(count(*)) + 0.5) AS BIGINT) AS w
-        |  FROM sym GROUP BY a HAVING count(*) BETWEEN 2 AND 1000),
-        |adj AS MATERIALIZED (SELECT s.a AS z, s.b AS n, zw.w FROM sym s JOIN zw ON zw.z = s.a),
-        |sc AS (SELECT x.n AS u, y.n AS v, count(*) AS n_common, sum(x.w) AS aa
-        |  FROM adj x JOIN adj y ON x.z = y.z AND x.n < y.n GROUP BY 1, 2)
-        |SELECT CAST(u AS BIGINT) AS u, CAST(v AS BIGINT) AS v,
-        |  CAST(n_common AS BIGINT) AS n_common, CAST(aa AS BIGINT) AS aa_micro
-        |FROM sc
-        |WHERE NOT EXISTS (SELECT 1 FROM e WHERE e.a = sc.u AND e.b = sc.v)
-        |ORDER BY aa_micro DESC, u ASC, v ASC LIMIT 50""".stripMargin,
-    "graph_random_walks" -> randomWalksSql,
-    "graph_walk_pairs" -> walkPairsSql,
-    "graph_walk_pairs_long" -> walkPairsLongSql,
-    "graph_walk_pmi" -> walkPmiSql,
-    "graph_walk_negatives" -> walkNegativesSql,
-    "graph_walk_subsample" -> walkSubsampleSql,
-    "graph_node2vec_walks" -> node2vecSql,
-    "graph_node2vec_walks_long" -> node2vecSqlN(40),
-    "graph_weighted_walks" -> weightedWalksSql,
-    // unique-path closed form: region 0 to itself, nation = its own
-    // edge weight, customer = customer-edge + nation-edge weights
-    "graph_wsssp_df" ->
+        |FROM deg LEFT JOIN tri ON tri.v = deg.v""".stripMargin),
+    // weight-proportional walks: step choice lands the md5 uniform in the
+    // neighbor's slot of the cumulative shared-order-count ladder
+    Entry("graph_weighted_walks", (s, d) => {
+      val pairs = coPairs(s, d)
+      val sym = pairs.select(col("a").as("src"), col("b").as("dst"), col("w").as("weight"))
+        .unionByName(pairs.select(col("b").as("src"), col("a").as("dst"), col("w").as("weight")))
+      GraphAnalytics.weightedRandomWalks(sym, walkLen = 4)
+        .select(col("walk_id").cast("long"), col("step"), col("node").cast("long"))
+    }, weightedWalksSql),
+    // WEIGHTED shortest paths (min-plus over an explicit weighted edge
+    // table — the WeightedGraph surface with an actual algorithm):
+    // customer -> nation -> region with deterministic integer weights;
+    // paths are unique, so the closed form IS the oracle
+    Entry("graph_wsssp_df", (s, d) => {
+      val e1 = t(s, d, "nation").select(
+        (col("n_nationkey") + 100).cast("long").as("src"),
+        col("n_regionkey").cast("long").as("dst"),
+        (col("n_nationkey") % 5 + 1).cast("double").as("weight"))
+      val e2 = t(s, d, "customer").select(
+        (col("c_custkey") + 1000).cast("long").as("src"),
+        (col("c_nationkey") + 100).cast("long").as("dst"),
+        (col("c_custkey") % 7 + 1).cast("double").as("weight"))
+      GraphAnalytics.weightedShortestPathsDF(e1.unionByName(e2),
+        landmarks = Seq(0L, 1L, 2L, 3L, 4L))
+    },
+      // unique-path closed form: region 0 to itself, nation = its own
+      // edge weight, customer = customer-edge + nation-edge weights
       """SELECT CAST(r_regionkey AS BIGINT) AS vid, CAST(r_regionkey AS BIGINT) AS landmark, CAST(0 AS DOUBLE) AS dist FROM region
         |UNION ALL SELECT CAST(100 + n_nationkey AS BIGINT), CAST(n_regionkey AS BIGINT), CAST(n_nationkey % 5 + 1 AS DOUBLE) FROM nation
-        |UNION ALL SELECT CAST(1000 + c_custkey AS BIGINT), CAST(n_regionkey AS BIGINT), CAST((c_custkey % 7 + 1) + (n_nationkey % 5 + 1) AS DOUBLE) FROM customer JOIN nation ON c_nationkey = n_nationkey""".stripMargin,
-    "graphx_pagerank" -> pageRankSql,
-    // PPR closed form on the member->nation->region DAG, in exact integer
-    // micro-units (every out-degree is 1, so all mass values are exact
-    // multiples of 1e-6): a seed member holds 0.15 = 150000u; a nation
-    // collects 0.85 * 0.15 * |its seed members| = 127500u each; a region
-    // collects 0.85 * that = 108375u per seed member under it. Integer
-    // arithmetic on BOTH sides — no float summation order to diverge.
-    "graph_ppr_df" ->
-      """WITH seedc AS (SELECT c_custkey, c_nationkey FROM customer WHERE c_custkey % 10 = 0),
-        |ranks AS (
-        |  SELECT 'customer:'||c_custkey AS id,
-        |    CASE WHEN c_custkey % 10 = 0 THEN 150000 ELSE 0 END AS u
-        |  FROM customer
-        |  UNION ALL SELECT 'supplier:'||s_suppkey, 0 FROM supplier
-        |  UNION ALL SELECT 'nation:'||n_nationkey,
-        |    127500 * (SELECT count(*) FROM seedc WHERE c_nationkey = n_nationkey)
-        |  FROM nation
-        |  UNION ALL SELECT 'region:'||r_regionkey,
-        |    108375 * (SELECT count(*) FROM seedc JOIN nation ON c_nationkey = n_nationkey
-        |              WHERE n_regionkey = r_regionkey)
-        |  FROM region)
-        |SELECT id, CAST(u AS BIGINT) AS rank_u6 FROM ranks""".stripMargin,
-    "graph_pagerank_df" -> pageRankSql,
-    // unrolled 2-iteration integer HITS over the same member→nation→region
-    // edges the pagerank oracle walks
-    "graph_hits" ->
-      """WITH e AS (
-        |  SELECT 'customer:'||c_custkey AS src, 'nation:'||c_nationkey AS dst FROM customer
-        |  UNION ALL SELECT 'supplier:'||s_suppkey, 'nation:'||s_nationkey FROM supplier
-        |  UNION ALL SELECT 'nation:'||n_nationkey, 'region:'||n_regionkey FROM nation),
-        |h1 AS (SELECT src, count(*) AS h FROM e GROUP BY src),
-        |a1 AS (SELECT dst, sum(h1.h) AS a FROM e JOIN h1 ON h1.src = e.src GROUP BY dst),
-        |h2 AS (SELECT e.src, sum(a1.a) AS h FROM e JOIN a1 ON a1.dst = e.dst GROUP BY e.src),
-        |a2 AS (SELECT e.dst, sum(h2.h) AS a FROM e JOIN h2 ON h2.src = e.src GROUP BY e.dst),
-        |ids AS (SELECT 'region:'||r_regionkey AS id FROM region
-        |  UNION ALL SELECT 'nation:'||n_nationkey FROM nation
-        |  UNION ALL SELECT 'supplier:'||s_suppkey FROM supplier
-        |  UNION ALL SELECT 'customer:'||c_custkey FROM customer)
-        |SELECT ids.id, CAST(coalesce(h2.h, 0) AS BIGINT) AS hub,
-        |  CAST(coalesce(a2.a, 0) AS BIGINT) AS auth
-        |FROM ids LEFT JOIN h2 ON h2.src = ids.id LEFT JOIN a2 ON a2.dst = ids.id""".stripMargin,
-    "agg_pricing_summary" ->
+        |UNION ALL SELECT CAST(1000 + c_custkey AS BIGINT), CAST(n_regionkey AS BIGINT), CAST((c_custkey % 7 + 1) + (n_nationkey % 5 + 1) AS DOUBLE) FROM customer JOIN nation ON c_nationkey = n_nationkey""".stripMargin),
+
+    // §2.8 host-level aggregation patterns (cocktail_statistic analogues)
+    Entry("agg_pricing_summary", (s, d) =>
+      t(s, d, "lineitem").groupBy("l_returnflag", "l_linestatus").agg(
+        sum("l_quantity").as("sum_qty"),
+        round(sum(col("l_extendedprice").cast("decimal(18,2)")), 2).cast("double").as("sum_base_price"),
+        avg("l_quantity").as("avg_qty"),
+        count(lit(1)).as("cnt")),
       """SELECT l_returnflag, l_linestatus, sum(l_quantity) AS sum_qty,
         |CAST(round(sum(CAST(l_extendedprice AS DECIMAL(18,2))), 2) AS DOUBLE) AS sum_base_price,
         |avg(l_quantity) AS avg_qty, count(*) AS cnt
-        |FROM lineitem GROUP BY l_returnflag, l_linestatus""".stripMargin,
-    "agg_topk_parts" ->
+        |FROM lineitem GROUP BY l_returnflag, l_linestatus""".stripMargin),
+    Entry("agg_topk_parts", (s, d) => {
+      val li = t(s, d, "lineitem"); val part = t(s, d, "part")
+      li.join(part, li("l_partkey") === part("p_partkey"))
+        .groupBy("p_name").agg(count(lit(1)).as("cnt"))
+        .orderBy(desc("cnt"), asc("p_name")).limit(5)
+    },
       """SELECT p_name, count(*) AS cnt FROM lineitem JOIN part ON l_partkey = p_partkey
-        |GROUP BY p_name ORDER BY cnt DESC, p_name ASC LIMIT 5""".stripMargin,
-    "agg_order_stats" ->
+        |GROUP BY p_name ORDER BY cnt DESC, p_name ASC LIMIT 5""".stripMargin),
+    Entry("agg_order_stats", (s, d) =>
+      t(s, d, "lineitem").groupBy("l_orderkey").agg(count(lit(1)).as("c"))
+        .agg(min("c").as("min_items"), max("c").as("max_items"),
+          round(avg("c"), 6).cast("double").as("avg_items"),
+          count(lit(1)).as("n_orders")),
       """SELECT min(c) AS min_items, max(c) AS max_items,
         |CAST(round(avg(c), 6) AS DOUBLE) AS avg_items, count(*) AS n_orders
-        |FROM (SELECT count(*) AS c FROM lineitem GROUP BY l_orderkey) t""".stripMargin,
-    "join_revenue_by_nation" ->
+        |FROM (SELECT count(*) AS c FROM lineitem GROUP BY l_orderkey) t""".stripMargin),
+    Entry("join_revenue_by_nation", (s, d) => {
+      val li = t(s, d, "lineitem"); val o = t(s, d, "orders")
+      val c = t(s, d, "customer"); val n = t(s, d, "nation")
+      li.join(o, li("l_orderkey") === o("o_orderkey"))
+        .join(c, o("o_custkey") === c("c_custkey"))
+        .join(n, c("c_nationkey") === n("n_nationkey"))
+        .groupBy("n_name")
+        .agg(round(sum(col("l_extendedprice").cast("decimal(18,2)") *
+          (lit(1) - col("l_discount").cast("decimal(18,2)"))), 2).cast("double").as("revenue"))
+    },
       """SELECT n_name,
         |CAST(round(sum(CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l_discount AS DECIMAL(18,2)))), 2) AS DOUBLE) AS revenue
         |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
         |JOIN customer ON o_custkey = c_custkey JOIN nation ON c_nationkey = n_nationkey
-        |GROUP BY n_name""".stripMargin,
-    "join_salted_skew" ->
+        |GROUP BY n_name""".stripMargin),
+    // §2.8 + 100 TB checklist: salted equi-join — same rows as the plain
+    // join (the oracle is the UNSALTED SQL), hot keys spread over 8 reducers
+    Entry("join_salted_skew", (s, d) => {
+      val li = t(s, d, "lineitem").select(col("l_suppkey").as("suppkey"),
+        col("l_extendedprice"), col("l_discount"))
+      val sup = t(s, d, "supplier").select(col("s_suppkey").as("suppkey"), col("s_name"))
+      graft.pipeline.Skew.saltedJoin(li, sup, Seq("suppkey"), salt = 8)
+        .groupBy("s_name")
+        .agg(round(sum(col("l_extendedprice").cast("decimal(18,2)") *
+          (lit(1) - col("l_discount").cast("decimal(18,2)"))), 2).cast("double").as("revenue"))
+    },
       """SELECT s_name,
         |CAST(round(sum(CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l_discount AS DECIMAL(18,2)))), 2) AS DOUBLE) AS revenue
         |FROM lineitem JOIN supplier ON l_suppkey = s_suppkey
-        |GROUP BY s_name""".stripMargin,
-    "agg_quantiles" ->
+        |GROUP BY s_name""".stripMargin),
+    // exact distributed quantiles (sort-based percentile, linear
+    // interpolation — the same definition as SQL quantile_cont)
+    Entry("agg_quantiles", (s, d) =>
+      t(s, d, "orders").groupBy("o_orderstatus")
+        .agg(expr("percentile(o_totalprice, array(0.25, 0.5, 0.75))").as("qs"),
+          count(lit(1)).as("cnt"))
+        .select(col("o_orderstatus"),
+          round(col("qs").getItem(0), 4).as("q25"),
+          round(col("qs").getItem(1), 4).as("q50"),
+          round(col("qs").getItem(2), 4).as("q75"),
+          col("cnt")),
       """SELECT o_orderstatus,
         |round(qs[1], 4) AS q25, round(qs[2], 4) AS q50, round(qs[3], 4) AS q75, cnt
         |FROM (SELECT o_orderstatus,
         |  quantile_cont(o_totalprice, [0.25, 0.5, 0.75]) AS qs, count(*) AS cnt
-        |FROM orders GROUP BY o_orderstatus)""".stripMargin,
-    "window_top_order" ->
+        |FROM orders GROUP BY o_orderstatus)""".stripMargin),
+    Entry("window_top_order", (s, d) => {
+      val w = Window.partitionBy("o_custkey").orderBy(desc("o_totalprice"), asc("o_orderkey"))
+      t(s, d, "orders").withColumn("rn", row_number().over(w))
+        .where(col("rn") === 1)
+        .select("o_custkey", "o_orderkey", "o_totalprice")
+    },
       """SELECT o_custkey, o_orderkey, o_totalprice FROM (
         |SELECT o_custkey, o_orderkey, o_totalprice,
         |row_number() OVER (PARTITION BY o_custkey ORDER BY o_totalprice DESC, o_orderkey ASC) AS rn
-        |FROM orders) t WHERE rn = 1""".stripMargin,
-    "events_active_users" ->
-      """WITH e AS (SELECT DISTINCT (epoch_ns(ts) // 1000000000) // 86400 AS day, user_id FROM events),
-        |dau AS (SELECT day, count(DISTINCT user_id) AS dau FROM e GROUP BY day),
-        |ex AS (SELECT day + g AS day2, user_id FROM
-        |  (SELECT day, user_id, unnest(range(0, 7)) AS g FROM e)),
-        |wau AS (SELECT day2 AS day, count(DISTINCT user_id) AS wau FROM ex GROUP BY day2)
-        |SELECT CAST(d.day AS BIGINT) AS day, CAST(d.dau AS BIGINT) AS dau,
-        |  CAST(w.wau AS BIGINT) AS wau,
-        |  CAST((1000000 * d.dau) // w.wau AS BIGINT) AS stickiness_micro
-        |FROM dau d JOIN wau w ON w.day = d.day""".stripMargin,
-    // (ts, event_id)-ordered per-user lead pairs; Spark ts is canonical
-    // long NANOSECONDS, matched by epoch_ns here
-    "events_transition_matrix" ->
-      """WITH e AS (SELECT user_id, event_id, event_type, epoch_ns(ts) AS tn FROM events),
-        |s AS (SELECT user_id, event_type AS f,
-        |    lead(event_type) OVER (PARTITION BY user_id ORDER BY tn, event_id) AS t
-        |  FROM e),
-        |c AS (SELECT f, t, count(*) AS n FROM s WHERE t IS NOT NULL GROUP BY 1, 2),
-        |tot AS (SELECT f, sum(n) AS tt FROM c GROUP BY f)
-        |SELECT c.f AS from_type, c.t AS to_type, CAST(n AS BIGINT) AS n,
-        |  CAST((1000000 * n) // tot.tt AS BIGINT) AS p_micro
-        |FROM c JOIN tot ON c.f = tot.f""".stripMargin,
-    // the built-in session_window rule: a new session needs diff > gap
-    // (an exact-gap event merges — spec-pinned); every session emits,
-    // end = last event + gap
-    "events_session_window" ->
-      """WITH e AS (SELECT user_id, epoch_ns(ts) // 1000000000 AS sec FROM events),
-        |o AS (SELECT user_id, sec,
-        |  CASE WHEN sec - lag(sec) OVER (PARTITION BY user_id ORDER BY sec) > 1800 THEN 1 ELSE 0 END AS brk
-        |FROM e),
-        |g AS (SELECT user_id, sec,
-        |  sum(brk) OVER (PARTITION BY user_id ORDER BY sec ROWS UNBOUNDED PRECEDING) AS grp
-        |FROM o)
-        |SELECT user_id, count(*) AS n_events, min(sec) AS first_ts,
-        |  max(sec) + 1800 AS sess_end
-        |FROM g GROUP BY user_id, grp""".stripMargin,
-    "events_sessionize" ->
+        |FROM orders) t WHERE rn = 1""".stripMargin),
+    // stateful sessionization (flatMapGroupsWithState) run in batch mode:
+    // closed sessions only — each user's trailing open session stays in
+    // state, exactly what the streaming run would hold back too
+    Entry("events_sessionize", (s, d) => {
+      val ev = t(s, d, "events").select(col("user_id"),
+        timestamp_seconds(expr("ts DIV 1000000000")).as("ts"))
+      graft.streaming.EventStreams.sessionize(ev, gapSeconds = 1800).toDF()
+        .select(col("userId").as("user_id"), col("nEvents").as("n_events"),
+          col("firstTs").as("first_ts"), col("lastTs").as("last_ts"))
+    },
       """WITH e AS (SELECT user_id, epoch_ns(ts) // 1000000000 AS sec FROM events),
         |o AS (SELECT user_id, sec,
         |  CASE WHEN sec - lag(sec) OVER (PARTITION BY user_id ORDER BY sec) > 1800 THEN 1 ELSE 0 END AS brk
@@ -1952,19 +1750,126 @@ object GraphQueries {
         |  FROM g GROUP BY 1, 2),
         |last AS (SELECT user_id, max(grp) AS maxg FROM sess GROUP BY 1)
         |SELECT s.user_id, n_events, first_ts, last_ts
-        |FROM sess s JOIN last l ON s.user_id = l.user_id AND s.grp < l.maxg""".stripMargin,
-    "events_interval_join" ->
+        |FROM sess s JOIN last l ON s.user_id = l.user_id AND s.grp < l.maxg""".stripMargin),
+    // the NATIVE session_window twin of the custom-state sessionizer:
+    // Spark's built-in gap-session aggregation (groupBy user +
+    // session_window) — zero custom state code, emits EVERY session
+    // including each user's trailing one, window end = last event + gap.
+    // Boundary semantics MATCH sessionize: an event exactly gap seconds
+    // after the previous one merges (spec-pinned; a new session needs
+    // diff > gap)
+    Entry("events_session_window", (s, d) => {
+      val ev = t(s, d, "events").select(col("user_id"),
+        timestamp_seconds(expr("ts DIV 1000000000")).as("ts"))
+      ev.groupBy(col("user_id"), session_window(col("ts"), "1800 seconds").as("sw"))
+        .agg(count(lit(1)).as("n_events"))
+        .select(col("user_id"), col("n_events"),
+          unix_timestamp(col("sw.start")).as("first_ts"),
+          unix_timestamp(col("sw.end")).as("sess_end"))
+    },
+      // the built-in session_window rule: a new session needs diff > gap
+      // (an exact-gap event merges — spec-pinned); every session emits,
+      // end = last event + gap
+      """WITH e AS (SELECT user_id, epoch_ns(ts) // 1000000000 AS sec FROM events),
+        |o AS (SELECT user_id, sec,
+        |  CASE WHEN sec - lag(sec) OVER (PARTITION BY user_id ORDER BY sec) > 1800 THEN 1 ELSE 0 END AS brk
+        |FROM e),
+        |g AS (SELECT user_id, sec,
+        |  sum(brk) OVER (PARTITION BY user_id ORDER BY sec ROWS UNBOUNDED PRECEDING) AS grp
+        |FROM o)
+        |SELECT user_id, count(*) AS n_events, min(sec) AS first_ts,
+        |  max(sec) + 1800 AS sess_end
+        |FROM g GROUP BY user_id, grp""".stripMargin),
+    // DAU / trailing-7-day WAU / stickiness per event day; the rolling
+    // distinct fans (day, user) pairs to their 7 target days — bounded by
+    // distinct pairs, never by raw events
+    Entry("events_active_users", (s, d) =>
+      graft.streaming.EventStreams.activeUsersReport(
+        t(s, d, "events").select(col("user_id"),
+          timestamp_seconds(expr("ts DIV 1000000000")).as("ts"))),
+      """WITH e AS (SELECT DISTINCT (epoch_ns(ts) // 1000000000) // 86400 AS day, user_id FROM events),
+        |dau AS (SELECT day, count(DISTINCT user_id) AS dau FROM e GROUP BY day),
+        |ex AS (SELECT day + g AS day2, user_id FROM
+        |  (SELECT day, user_id, unnest(range(0, 7)) AS g FROM e)),
+        |wau AS (SELECT day2 AS day, count(DISTINCT user_id) AS wau FROM ex GROUP BY day2)
+        |SELECT CAST(d.day AS BIGINT) AS day, CAST(d.dau AS BIGINT) AS dau,
+        |  CAST(w.wau AS BIGINT) AS wau,
+        |  CAST((1000000 * d.dau) // w.wau AS BIGINT) AS stickiness_micro
+        |FROM dau d JOIN wau w ON w.day = d.day""".stripMargin),
+    // first-order Markov transitions over per-user event sequences
+    // ((ts, event_id)-ordered so ties replay identically): per (from, to)
+    // type pair, count + micro-unit transition probability
+    Entry("events_transition_matrix", (s, d) =>
+      graft.streaming.EventStreams.transitionMatrix(t(s, d, "events")),
+      // (ts, event_id)-ordered per-user lead pairs; Spark ts is canonical
+      // long NANOSECONDS, matched by epoch_ns here
+      """WITH e AS (SELECT user_id, event_id, event_type, epoch_ns(ts) AS tn FROM events),
+        |s AS (SELECT user_id, event_type AS f,
+        |    lead(event_type) OVER (PARTITION BY user_id ORDER BY tn, event_id) AS t
+        |  FROM e),
+        |c AS (SELECT f, t, count(*) AS n FROM s WHERE t IS NOT NULL GROUP BY 1, 2),
+        |tot AS (SELECT f, sum(n) AS tt FROM c GROUP BY f)
+        |SELECT c.f AS from_type, c.t AS to_type, CAST(n AS BIGINT) AS n,
+        |  CAST((1000000 * n) // tot.tt AS BIGINT) AS p_micro
+        |FROM c JOIN tot ON c.f = tot.f""".stripMargin),
+    // stream-stream interval join run in batch form: click→view attribution
+    // within a trailing 1-day event-time window (watermarks bound the
+    // streaming state; identical rows in batch)
+    Entry("events_interval_join", (s, d) => {
+      val ev = t(s, d, "events").select(col("event_id"), col("user_id"),
+        col("event_type"), timestamp_seconds(expr("ts DIV 1000000000")).as("ts"))
+      graft.streaming.EventStreams.intervalJoin(
+        ev.where(col("event_type") === "click"),
+        ev.where(col("event_type") === "view"),
+        windowSeconds = 86400)
+    },
       """WITH e AS (SELECT event_id, user_id, event_type, epoch_ns(ts) // 1000000000 AS sec FROM events)
         |SELECT c.user_id, c.event_id AS click_id, v.event_id AS view_id, c.sec - v.sec AS lag_sec
         |FROM e c JOIN e v ON v.user_id = c.user_id AND c.event_type = 'click' AND v.event_type = 'view'
-        |AND v.sec BETWEEN c.sec - 86400 AND c.sec""".stripMargin,
-    "events_window_agg" ->
+        |AND v.sec BETWEEN c.sec - 86400 AND c.sec""".stripMargin),
+    // ts arrives as LONG nanoseconds (TpchGraph.table's canonical boundary
+    // normalizes whatever the parquet stores); bucket with exact integer
+    // division
+    Entry("events_window_agg", (s, d) =>
+      t(s, d, "events").groupBy(
+        col("event_type"),
+        expr("ts DIV 300000000000").as("bucket")).agg(
+        count(lit(1)).as("cnt"),
+        round(sum(col("value").cast("decimal(18,6)")), 4).cast("double").as("sum_value")),
       """SELECT event_type, epoch_ns(ts) // 300000000000 AS bucket, count(*) AS cnt,
         |CAST(round(sum(CAST(value AS DECIMAL(18,6))), 4) AS DOUBLE) AS sum_value
-        |FROM events GROUP BY event_type, bucket""".stripMargin,
-    // hourly micro-unit shares, full-joined to the predecessor window's
-    // shares per type, L1-summed; first/gap-successor windows drop
-    "events_label_drift" ->
+        |FROM events GROUP BY event_type, bucket""".stripMargin),
+    // SLIDING 10-minute windows every 5 minutes through the real streaming
+    // transform (Spark window() with slideDuration; batch==stream parity
+    // asserted in StreamingSpec) — each event lands in exactly 2 windows
+    Entry("events_sliding_window", (s, d) =>
+      graft.streaming.EventStreams.slidingCounts(
+          t(s, d, "events").select(
+            timestamp_seconds(expr("ts DIV 1000000000")).as("ts"),
+            col("event_type"), col("value")))
+        .select(col("window_start").cast("long").as("w_start"),
+          col("event_type"), col("cnt"), col("sum_value")),
+      // sliding windows: an event at second t belongs to starts
+      // {floor(t/300)*300 - 300*i : i in 0..1} (Spark window() epoch-aligned
+      // membership, s <= t < s + 600)
+      """WITH e AS (SELECT event_type, epoch_ns(ts) // 1000000000 AS t, value FROM events),
+        |w AS (SELECT event_type, value, (t // 300) * 300 - 300 * i AS w_start
+        |  FROM e CROSS JOIN (SELECT unnest(range(0, 2)) AS i))
+        |SELECT w_start, event_type, count(*) AS cnt,
+        |  CAST(round(sum(CAST(value AS DECIMAL(18,6))), 4) AS DOUBLE) AS sum_value
+        |FROM w GROUP BY w_start, event_type""".stripMargin),
+    // event-type distribution DRIFT between consecutive hourly windows:
+    // integer micro-unit shares, L1 distance — the serving-pipeline
+    // health monitor (a data regression shifts the mix)
+    Entry("events_label_drift", (s, d) =>
+      graft.streaming.EventStreams.labelDrift(
+          t(s, d, "events").select(
+            timestamp_seconds(expr("ts DIV 1000000000")).as("ts"),
+            col("event_type")))
+        .select(col("window_start").cast("long").as("w_start"),
+          col("n_events"), col("drift_micro")),
+      // hourly micro-unit shares, full-joined to the predecessor window's
+      // shares per type, L1-summed; first/gap-successor windows drop
       """WITH e AS (SELECT event_type, ((epoch_ns(ts) // 1000000000) // 3600) * 3600 AS w FROM events),
         |per AS (SELECT w, event_type AS t, count(*) AS c FROM e GROUP BY 1, 2),
         |tot AS (SELECT w, sum(c) AS n FROM per GROUP BY 1),
@@ -1978,8 +1883,13 @@ object GraphQueries {
         |SELECT CAST(d.w AS BIGINT) AS w_start, CAST(d.n AS BIGINT) AS n_events,
         |  CAST(d.drift AS BIGINT) AS drift_micro
         |FROM d JOIN (SELECT DISTINCT w + 3600 AS w FROM tot) p ON p.w = d.w
-        |WHERE d.n IS NOT NULL""".stripMargin,
-    "events_user_sequences" ->
+        |WHERE d.n IS NOT NULL""".stripMargin),
+    // per-user behavioral sequences: first-20 event-type prefix string in
+    // (ts, event_id) order + full event count — the sequence-model feed
+    Entry("events_user_sequences", (s, d) =>
+      graft.streaming.EventStreams.userSequences(
+        t(s, d, "events").select(col("user_id"), col("ts").as("tns"),
+          col("event_id"), col("event_type"))),
       """WITH e AS (SELECT user_id, epoch_ns(ts) AS tns, event_id, event_type FROM events),
         |r AS (SELECT user_id, event_type, tns, event_id,
         |    row_number() OVER (PARTITION BY user_id ORDER BY tns, event_id) AS rn
@@ -1988,16 +1898,26 @@ object GraphQueries {
         |  FROM r WHERE rn <= 20 GROUP BY user_id),
         |c AS (SELECT user_id, count(*) AS n_events FROM e GROUP BY 1)
         |SELECT c.user_id, c.n_events, s.seq_prefix
-        |FROM c JOIN seq s USING (user_id)""".stripMargin,
-    "events_retention" ->
+        |FROM c JOIN seq s USING (user_id)""".stripMargin),
+    // weekly retention cohorts: users bucketed by first-seen week,
+    // distinct-user counts per (cohort, week offset)
+    Entry("events_retention", (s, d) =>
+      graft.streaming.EventStreams.retentionCohorts(
+        t(s, d, "events").select(col("user_id"),
+          timestamp_seconds(expr("ts DIV 1000000000")).as("ts"))),
       """WITH e AS (SELECT DISTINCT user_id AS u, (epoch_ns(ts) // 1000000000) // 604800 AS w FROM events),
         |c AS (SELECT u, min(w) AS cw FROM e GROUP BY 1)
         |SELECT CAST(c.cw AS BIGINT) AS cohort_week, CAST(e.w - c.cw AS BIGINT) AS offset_weeks,
         |  count(*) AS n_users
-        |FROM e JOIN c USING (u) GROUP BY 1, 2""".stripMargin,
-    // same dense grid + trailing frame + integer cross-multiplication as
-    // rateAnomalies; partial trailing windows are excluded by nw = 24
-    "events_rate_anomaly" ->
+        |FROM e JOIN c USING (u) GROUP BY 1, 2""".stripMargin),
+    // hourly per-type rate anomalies vs the trailing-24h window on a dense
+    // zero-filled hour grid — exact integer cross-multiplied thresholds
+    Entry("events_rate_anomaly", (s, d) =>
+      graft.streaming.EventStreams.rateAnomalies(
+        t(s, d, "events").select(col("event_type"),
+          timestamp_seconds(expr("ts DIV 1000000000")).as("ts"))),
+      // same dense grid + trailing frame + integer cross-multiplication as
+      // rateAnomalies; partial trailing windows are excluded by nw = 24
       """WITH cnt AS (SELECT event_type AS t, (epoch_ns(ts) // 1000000000) // 3600 AS h, count(*) AS c
         |  FROM events GROUP BY 1, 2),
         |b AS (SELECT min(h) AS h0, max(h) AS h1 FROM cnt),
@@ -2012,26 +1932,19 @@ object GraphQueries {
         |SELECT t AS event_type, CAST(h * 3600 AS BIGINT) AS hour_start, CAST(c AS BIGINT) AS cnt,
         |  CAST(tsum AS BIGINT) AS trail_sum,
         |  CASE WHEN c * 24 > tsum * 2 THEN 'spike' ELSE 'drop' END AS flag
-        |FROM win WHERE nw = 24 AND (c * 24 > tsum * 2 OR c * 24 * 2 < tsum)""".stripMargin,
-    // sliding windows: an event at second t belongs to starts
-    // {floor(t/300)*300 - 300*i : i in 0..1} (Spark window() epoch-aligned
-    // membership, s <= t < s + 600)
-    "events_sliding_window" ->
-      """WITH e AS (SELECT event_type, epoch_ns(ts) // 1000000000 AS t, value FROM events),
-        |w AS (SELECT event_type, value, (t // 300) * 300 - 300 * i AS w_start
-        |  FROM e CROSS JOIN (SELECT unnest(range(0, 2)) AS i))
-        |SELECT w_start, event_type, count(*) AS cnt,
-        |  CAST(round(sum(CAST(value AS DECIMAL(18,6))), 4) AS DOUBLE) AS sum_value
-        |FROM w GROUP BY w_start, event_type""".stripMargin,
-    "stream_graph_ingest" ->
-      """SELECT
-        |  (SELECT count(DISTINCT user_id) + count(DISTINCT event_type) FROM events) AS n_vertices,
-        |  (SELECT count(*) FROM (SELECT DISTINCT user_id, event_type FROM events) t) AS n_edges""".stripMargin,
-    // mirrors the union + carry-forward + rejoin plan of
-    // TemporalJoins.asofJoin exactly (same explicit null ordering, the
-    // winning row's id carried and its payload joined back in one piece),
-    // so tie cases are pinned rather than left to an engine's ASOF choice
-    "events_funnel" ->
+        |FROM win WHERE nw = 24 AND (c * 24 > tsum * 2 OR c * 24 * 2 < tsum)""".stripMargin),
+    // conversion funnel click→view→purchase with STRICT first-occurrence
+    // chaining: per user, the first click, the first view after it, the
+    // first purchase after that — three conditional-min aggregations all
+    // keyed by user_id (co-partitioned shuffles, exchange reuse at scale),
+    // reduced to one row of stage counts + conversion rates
+    Entry("events_funnel", (s, d) =>
+      graft.streaming.EventStreams.funnelCounts(t(s, d, "events"),
+        "user_id", "event_type", "ts", Seq("click", "view", "purchase")),
+      // mirrors the union + carry-forward + rejoin plan of
+      // TemporalJoins.asofJoin exactly (same explicit null ordering, the
+      // winning row's id carried and its payload joined back in one piece),
+      // so tie cases are pinned rather than left to an engine's ASOF choice
       """WITH e AS (SELECT user_id, event_type, epoch_ns(ts) AS tns FROM events),
         |s1 AS (SELECT user_id, min(CASE WHEN event_type = 'click' THEN tns END) AS t_click
         |  FROM e GROUP BY user_id HAVING min(CASE WHEN event_type = 'click' THEN tns END) IS NOT NULL),
@@ -2048,8 +1961,21 @@ object GraphQueries {
         |SELECT n_click, n_click_view, n_click_view_purchase,
         |  round(CAST(n_click_view AS DOUBLE) / NULLIF(n_click, 0), 4) AS rate_view,
         |  round(CAST(n_click_view_purchase AS DOUBLE) / NULLIF(n_click_view, 0), 4) AS rate_purchase
-        |FROM c""".stripMargin,
-    "events_asof_join" ->
+        |FROM c""".stripMargin),
+    // as-of join: each click matched to the user's most recent view at or
+    // before it (union + window carry-forward — one shuffle by user, no
+    // per-row range probe); clicks before any view keep nulls
+    Entry("events_asof_join", (s, d) => {
+      val ev = t(s, d, "events")
+      val clicks = ev.where(col("event_type") === "click")
+        .select(col("event_id"), col("user_id"), col("ts"))
+      val views = ev.where(col("event_type") === "view")
+        .select(col("user_id"), col("ts"), col("event_id").as("view_id"),
+          col("value").as("view_value"))
+      graft.pipeline.TemporalJoins.asofJoin(clicks, views, "user_id", "ts", "view_id")
+        .select(col("event_id"), col("user_id"),
+          col("asof_view_id").as("view_id"), col("asof_view_value").as("view_value"))
+    },
       """WITH e AS (SELECT event_id, user_id, event_type, value, epoch_ns(ts) AS tns FROM events),
         |u AS (
         |  SELECT user_id, tns, 1 AS side, event_id, NULL::BIGINT AS tie
@@ -2062,12 +1988,25 @@ object GraphQueries {
         |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW))
         |SELECT c.event_id, c.user_id, v.event_id AS view_id, v.value AS view_value
         |FROM c LEFT JOIN e v ON v.event_type = 'view' AND v.user_id = c.user_id AND v.event_id = c.m
-        |WHERE c.side = 1""".stripMargin,
-    "events_range_join" ->
+        |WHERE c.side = 1""".stripMargin),
+    // binned range join: purchases inside a 4-hour attribution window after
+    // each signup — intervals exploded onto 1-hour bins, equi-join on
+    // (user, bin), exact BETWEEN filter; never a nested-loop range join
+    Entry("events_range_join", (s, d) => {
+      val ev = t(s, d, "events")
+      val purchases = ev.where(col("event_type") === "purchase")
+        .select(col("event_id"), col("user_id"), col("ts"))
+      val windows = ev.where(col("event_type") === "signup")
+        .select(col("user_id"), col("event_id").as("w_id"), col("ts").as("w_start"),
+          (col("ts") + lit(14400000000000L)).as("w_end"))
+      graft.pipeline.TemporalJoins.rangeJoinBinned(purchases, windows,
+        "ts", "w_start", "w_end", binWidth = 3600000000000L, keys = Seq("user_id"))
+        .select("event_id", "w_id")
+    },
       """WITH e AS (SELECT event_id, user_id, event_type, epoch_ns(ts) AS tns FROM events),
         |w AS (SELECT event_id AS w_id, user_id, tns AS ws, tns + 14400000000000 AS we
         |  FROM e WHERE event_type = 'signup')
         |SELECT p.event_id, w_id FROM e p JOIN w ON p.user_id = w.user_id AND p.tns BETWEEN ws AND we
-        |WHERE p.event_type = 'purchase'""".stripMargin,
+        |WHERE p.event_type = 'purchase'""".stripMargin),
   )
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.pipeline.{Dedup, Similarity, TextAnalysis}
 import graft.Materialize.checkpoint
+import graft.SparkEntry.{Entry, SiblingOf}
 
 /** Driver-facing inventory for the training-data-pipeline operators (dedup,
   * similarity search, text analysis), each with a DuckDB oracle reproducing
@@ -391,37 +392,311 @@ object PipelineQueries {
     s"list_transform(range(1, len(w)-${n - 2}), i -> $parts)"
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "dedup_exact" -> ((s, d) =>
-      Dedup.exactDupGroups(dedupCorpus(s, d), "doc_id", "text")),
-    "dedup_minhash_sigs" -> ((s, d) =>
-      Dedup.minhashSignatures(dedupCorpus(s, d), "doc_id", "text", k = 4)),
-    "dedup_minhash_pairs" -> ((s, d) =>
-      Dedup.minhashCandidatePairs(dedupCorpus(s, d), "doc_id", "text", k = 4)),
-    "dedup_simhash" -> ((s, d) =>
-      Dedup.simhash(dedupCorpus(s, d), "doc_id", "text", bits = 16)),
+  // bit j of md5(token): hex digit j/4, bit (3 - j%4)
+  private def simhashTermsFor(bits: Int): String = (0 until bits).map { j =>
+    val digit = s"substr(md5(t), ${j / 4 + 1}, 1)"
+    val bit = s"((strpos('0123456789abcdef', $digit) - 1) >> ${3 - j % 4}) & 1"
+    val contrib = s"list_sum(list_transform(w, t -> CASE WHEN ($bit) = 1 THEN 1 ELSE -1 END))"
+    s"CASE WHEN $contrib > 0 THEN CAST(${1L << (bits - 1 - j)} AS BIGINT) ELSE 0 END"
+  }.mkString(" + ")
+  private val simhashTerms = simhashTermsFor(16)
+
+  private def langOcc(w: String) =
+    s"((len(p) - len(replace(p, ' $w ', ''))) // ${w.length + 2})"
+  private def langScore(ws: Seq[String]) = ws.map(langOcc).mkString(" + ")
+  private val langMarkers = TextAnalysis.langMarkers
+
+  // mirrors Clustering.kmeans step for step with unrolled iterations:
+  // same distance expression shape (vv - vc*2 + cc, left-fold list_sum ≙
+  // the native dot's fold order), same decimal mean, same tie-breaks.
+  // Returns the CTE chain (ending in cents$iters + final_assign) so the
+  // IVF-with-fitted-quantizer oracle can compose on top of it.
+  // squared-L2 of vector alias v.ve against centroid alias $c.cv — the
+  // exact expression shape Clustering's assignment evaluates (also used
+  // by the embedding_outliers oracle)
+  private def kmeansDist(c: String) =
+    s"(list_sum(list_transform(range(0, len(v.ve)), i -> v.ve[i+1] * v.ve[i+1]))" +
+      s" - list_sum(list_transform(range(0, len(v.ve)), i -> v.ve[i+1] * $c.cv[i+1])) * 2" +
+      s" + list_sum(list_transform(range(0, len($c.cv)), i -> $c.cv[i+1] * $c.cv[i+1])))"
+
+  private def kmeansCtes(k: Int, iters: Int): String = {
+    def dist(c: String) = kmeansDist(c)
+    val steps = (0 until iters).map { t =>
+      s"""a$t AS (SELECT vec_id, cid FROM (
+         |  SELECT v.vec_id, c.cid,
+         |    row_number() OVER (PARTITION BY v.vec_id ORDER BY ${dist("c")} ASC, c.cid ASC) AS rn
+         |  FROM v, cents$t c) WHERE rn = 1),
+         |s$t AS (SELECT a.cid, vu.pos,
+         |    CAST(sum(CAST(vu.val AS DECIMAL(30,10))) AS DOUBLE) / count(*) AS m
+         |  FROM a$t a JOIN vu ON vu.vec_id = a.vec_id GROUP BY a.cid, vu.pos),
+         |f$t AS (SELECT cid, array_agg(m ORDER BY pos) AS fresh FROM s$t GROUP BY cid),
+         |cents${t + 1} AS (SELECT c.cid, coalesce(f.fresh, c.cv) AS cv
+         |  FROM cents$t c LEFT JOIN f$t f USING (cid))""".stripMargin
+    }.mkString(",\n")
+    s"""v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS ve FROM embeddings),
+       |vu AS (SELECT vec_id, unnest(ve) AS val, unnest(range(0, len(ve))) AS pos FROM v),
+       |cents0 AS (SELECT vec_id AS cid, ve AS cv FROM v ORDER BY vec_id LIMIT $k),
+       |$steps,
+       |final_assign AS (SELECT vec_id, cid FROM (
+       |  SELECT v.vec_id, c.cid,
+       |    row_number() OVER (PARTITION BY v.vec_id ORDER BY ${dist("c")} ASC, c.cid ASC) AS rn
+       |  FROM v, cents$iters c) WHERE rn = 1)""".stripMargin
+  }
+
+  // shared by text_langid, corpus_report and curate_pipeline (nested
+  // WITH is legal inside a CTE subquery, so these compose verbatim);
+  // the `For` variants re-source the same expressions for a chain stage
+  private def textLangidSqlFor(src: String) =
+    s"""WITH norm AS (SELECT doc_id, ' '||$normSql||' ' AS p FROM $src),
+       |scores AS (SELECT doc_id,
+       |  ${langScore(langMarkers("en"))} AS s_en, ${langScore(langMarkers("de"))} AS s_de,
+       |  ${langScore(langMarkers("fr"))} AS s_fr, ${langScore(langMarkers("es"))} AS s_es
+       |FROM norm)
+       |SELECT doc_id, CASE
+       |  WHEN greatest(s_en, s_de, s_fr, s_es) = 0 THEN 'und'
+       |  WHEN s_fr = greatest(s_en, s_de, s_fr, s_es) THEN 'fr'
+       |  WHEN s_es = greatest(s_en, s_de, s_fr, s_es) THEN 'es'
+       |  WHEN s_en = greatest(s_en, s_de, s_fr, s_es) THEN 'en'
+       |  ELSE 'de' END AS lang_guess
+       |FROM scores""".stripMargin
+  private val textLangidSql = textLangidSqlFor("documents")
+  private def textQualitySqlFor(src: String) =
+    s"""WITH f AS (SELECT doc_id, text, $normSql AS norm,
+       |  ' '||$normSql||' ' AS p,
+       |  CASE WHEN len($normSql) = 0 THEN 0 ELSE len(string_split($normSql, ' ')) END AS nw
+       |FROM $src)
+       |SELECT doc_id,
+       |  CAST(len(text) AS BIGINT) AS n_chars,
+       |  CAST(nw AS BIGINT) AS n_words,
+       |  round(CASE WHEN nw = 0 THEN 0.0 ELSE CAST(len(norm) - (nw - 1) AS DOUBLE) / nw END, 4) AS avg_word_len,
+       |  round(CASE WHEN len(text) = 0 THEN 0.0 ELSE CAST(len(text) - len(regexp_replace(text, '[.,;:!?''"]', '', 'g')) AS DOUBLE) / len(text) END, 4) AS punct_ratio,
+       |  round(CASE WHEN len(text) = 0 THEN 0.0 ELSE CAST(len(text) - len(regexp_replace(text, '[0-9]', '', 'g')) AS DOUBLE) / len(text) END, 4) AS digit_ratio,
+       |  round(CASE WHEN nw = 0 THEN 0.0 ELSE CAST(${langScore(Seq("the", "and", "of", "to", "a", "in", "is", "that"))} AS DOUBLE) / nw END, 4) AS stopword_ratio,
+       |  round(greatest(0.0,
+       |    least(CAST(nw AS DOUBLE) / 100.0, 1.0) * 0.4 +
+       |    least(round(CASE WHEN nw = 0 THEN 0.0 ELSE CAST(${langScore(Seq("the", "and", "of", "to", "a", "in", "is", "that"))} AS DOUBLE) / nw END, 4) * 4.0, 1.0) * 0.4 +
+       |    (1.0 - least(round(CASE WHEN len(text) = 0 THEN 0.0 ELSE CAST(len(text) - len(regexp_replace(text, '[0-9]', '', 'g')) AS DOUBLE) / len(text) END, 4) * 5.0, 1.0)) * 0.2), 4) AS quality
+       |FROM f""".stripMargin
+  private val textQualitySql = textQualitySqlFor("documents")
+
+  // shared by dedup_semantic_pairs / curate_semdedup_corpus: the fitted
+  // assignment joined back to the vectors, then intra-cluster pairs —
+  // mirroring Dedup.semanticPairs' mega-cluster guard: members of
+  // clusters larger than SemMaxCluster are sub-split by md5(id) mod
+  // ceil(size/cap) and pairs only form within a (cid, sub) cell
+  // (composes on top of kmeansCtes' v + final_assign)
+  private def semPairCtes(minCosSql: String): String =
+    s"""${kmeansCtes(k = SemK, iters = SemIters)},
+       |asgv AS (SELECT f.vec_id, f.cid, v.ve FROM final_assign f JOIN v USING (vec_id)),
+       |csz AS (SELECT cid, count(*) AS csz FROM final_assign GROUP BY cid),
+       |asgs AS (SELECT a.vec_id, a.cid, a.ve,
+       |    CAST(concat('0x', substr(md5('sem|' || CAST(a.vec_id AS VARCHAR)), 1, 6)) AS BIGINT)
+       |      % ((csz + ${SemMaxCluster - 1}) // $SemMaxCluster) AS sub
+       |  FROM asgv a JOIN csz USING (cid)),
+       |prs AS MATERIALIZED (SELECT l.vec_id AS a, r.vec_id AS b,
+       |    round(list_cosine_similarity(l.ve, r.ve), 4) AS cos
+       |  FROM asgs l JOIN asgs r ON l.cid = r.cid AND l.sub = r.sub AND l.vec_id < r.vec_id)""".stripMargin +
+      s",\nhits AS (SELECT a, b, cos FROM prs WHERE cos >= $minCosSql)"
+
+  // shared by embedding_pq / ann_pq_topk: sub-vector split, static
+  // codebook, argmin encoding (mirrors Quantization.subVectors /
+  // pqCodebook / pqEncode at m=4, k=16)
+  private val pqBaseCtes =
+    """v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS ve FROM embeddings),
+      |sv AS (SELECT vec_id, s,
+      |    list_slice(ve, s * (len(ve) // 4) + 1, (s + 1) * (len(ve) // 4)) AS x
+      |  FROM v CROSS JOIN (SELECT unnest(range(0, 4)) AS s))""".stripMargin
+  // residual IVF-PQ chain (mirrors Quantization.ivfPqTopK): coarse
+  // assignment, residual codebook from ids [16, 32), residual-ADC encode
+  // and per-(query, probed-list) ADC tables — dist(x − c, cw) expanded
+  // into the same pinned dot-product association as resSubDist
+  private def dotSql(a: String, b: String) =
+    s"list_sum(list_transform(range(0, len($a)), i -> $a[i+1] * $b[i+1]))"
+  private def resDistSql(x: String, c: String, cw: String) =
+    s"${dotSql(x, x)} - ${dotSql(x, c)} * 2 + ${dotSql(c, c)}" +
+      s" - (${dotSql(x, cw)} - ${dotSql(c, cw)}) * 2 + ${dotSql(cw, cw)}"
+  private def ivfpqResCtes(qBound: Int, m: Int = 16, cw: Int = 256, nprobe: Int = 8): String = {
+    val iters = 2
+    val nlist = 16
+    // fitted coarse quantizer: the same unrolled Lloyd chain as
+    // kmeansCtes (L2 assignment, DECIMAL(30,10) sums), rq_-prefixed so
+    // it composes with queries that already define v/cent/etc.
+    val coarse = (0 until iters).map { t =>
+      s"""rq_a$t AS (SELECT vec_id, cid FROM (
+         |  SELECT v.vec_id, c.cid,
+         |    row_number() OVER (PARTITION BY v.vec_id ORDER BY ${kmeansDist("c")} ASC, c.cid ASC) AS rn
+         |  FROM v, rq_cents$t c) WHERE rn = 1),
+         |rq_s$t AS (SELECT a.cid, vu.pos,
+         |    CAST(sum(CAST(vu.val AS DECIMAL(30,10))) AS DOUBLE) / count(*) AS m
+         |  FROM rq_a$t a JOIN rq_vu vu ON vu.vec_id = a.vec_id GROUP BY a.cid, vu.pos),
+         |rq_f$t AS (SELECT cid, array_agg(m ORDER BY pos) AS fresh FROM rq_s$t GROUP BY cid),
+         |rq_cents${t + 1} AS (SELECT c.cid, coalesce(f.fresh, c.cv) AS cv
+         |  FROM rq_cents$t c LEFT JOIN rq_f$t f USING (cid))""".stripMargin
+    }.mkString(",\n")
+    // residual codebook training: seeds = residual sub-vectors of ids
+    // [16, 32), then `iters` unrolled Lloyd steps in each subspace with
+    // the pinned resSubDist association and decimal-sum means
+    val train = (0 until iters).map { t =>
+      s"""rq_pa$t AS (SELECT vec_id, s, cid FROM (
+         |  SELECT e.vec_id, e.s, b.cid,
+         |    row_number() OVER (PARTITION BY e.vec_id, e.s ORDER BY
+         |      ${resDistSql("e.x", "c.c", "b.cw")} ASC, b.cid ASC) AS rn
+         |  FROM rq_sv e JOIN rq_asg g ON g.vec_id = e.vec_id
+         |  JOIN rq_cs c ON c.lcid = g.lcid AND c.s = e.s
+         |  JOIN rq_cb$t b ON b.s = e.s) t WHERE rn = 1),
+         |rq_ps$t AS (SELECT a.s, a.cid, rc.pos,
+         |    CAST(sum(CAST(rc.rval AS DECIMAL(30,10))) AS DOUBLE) / count(*) AS mv
+         |  FROM rq_pa$t a JOIN rq_rcomp rc ON rc.vec_id = a.vec_id AND rc.s = a.s
+         |  GROUP BY a.s, a.cid, rc.pos),
+         |rq_pf$t AS (SELECT s, cid, array_agg(mv ORDER BY pos) AS fresh
+         |  FROM rq_ps$t GROUP BY s, cid),
+         |rq_cb${t + 1} AS (SELECT c.s, c.cid, coalesce(f.fresh, c.cw) AS cw
+         |  FROM rq_cb$t c LEFT JOIN rq_pf$t f ON f.s = c.s AND f.cid = c.cid)""".stripMargin
+    }.mkString(",\n")
+    s"""rq_vu AS (SELECT vec_id, unnest(ve) AS val, unnest(range(0, len(ve))) AS pos FROM v),
+       |rq_sv AS (SELECT vec_id, s,
+       |    list_slice(ve, s * (len(ve) // $m) + 1, (s + 1) * (len(ve) // $m)) AS x
+       |  FROM v CROSS JOIN (SELECT unnest(range(0, $m)) AS s)),
+       |rq_cents0 AS (SELECT vec_id AS cid, ve AS cv FROM v ORDER BY vec_id LIMIT $nlist),
+       |$coarse,
+       |rq_cent AS (SELECT cid AS lcid, cv FROM rq_cents$iters),
+       |rq_cs AS (SELECT lcid, s,
+       |    list_slice(cv, s * (len(cv) // $m) + 1, (s + 1) * (len(cv) // $m)) AS c
+       |  FROM rq_cent CROSS JOIN (SELECT unnest(range(0, $m)) AS s)),
+       |rq_asg AS MATERIALIZED (SELECT vec_id, lcid FROM (
+       |  SELECT v.vec_id, c.lcid,
+       |    row_number() OVER (PARTITION BY v.vec_id ORDER BY list_cosine_similarity(v.ve, c.cv) DESC, c.lcid ASC) AS rn
+       |  FROM v, rq_cent c) t WHERE rn = 1),
+       |rq_rcomp AS MATERIALIZED (SELECT vec_id, s, pos, xv - cv AS rval FROM (
+       |  SELECT e.vec_id, e.s, unnest(e.x) AS xv, unnest(c.c) AS cv,
+       |    unnest(range(0, len(e.x))) AS pos
+       |  FROM rq_sv e JOIN rq_asg g ON g.vec_id = e.vec_id
+       |  JOIN rq_cs c ON c.lcid = g.lcid AND c.s = e.s)),
+       |rq_cb0 AS (SELECT r.s, r.vec_id AS cid,
+       |    list_transform(range(0, len(r.x)), i -> r.x[i+1] - c.c[i+1]) AS cw
+       |  FROM rq_sv r JOIN rq_asg g ON g.vec_id = r.vec_id
+       |  JOIN rq_cs c ON c.lcid = g.lcid AND c.s = r.s
+       |  WHERE r.vec_id >= $nlist AND r.vec_id < ${nlist + cw}),
+       |$train,
+       |rq_enc AS (SELECT vec_id, lcid, s, cid FROM (
+       |  SELECT e.vec_id, g.lcid, e.s, b.cid,
+       |    row_number() OVER (PARTITION BY e.vec_id, e.s ORDER BY
+       |      ${resDistSql("e.x", "c.c", "b.cw")} ASC, b.cid ASC) AS rn
+       |  FROM rq_sv e JOIN rq_asg g ON g.vec_id = e.vec_id
+       |  JOIN rq_cs c ON c.lcid = g.lcid AND c.s = e.s
+       |  JOIN rq_cb$iters b ON b.s = e.s) t WHERE rn = 1),
+       |rq_probes AS MATERIALIZED (SELECT query_id, lcid FROM (
+       |  SELECT v.vec_id AS query_id, c.lcid,
+       |    row_number() OVER (PARTITION BY v.vec_id ORDER BY list_cosine_similarity(v.ve, c.cv) DESC, c.lcid ASC) AS rn
+       |  FROM v, rq_cent c WHERE v.vec_id < $qBound) t WHERE rn <= $nprobe),
+       |rq_adc AS (SELECT q.vec_id AS query_id, p.lcid, q.s, b.cid,
+       |    CAST(floor((${resDistSql("q.x", "c.c", "b.cw")}) * 1000000.0 + 0.5) AS BIGINT) AS micro
+       |  FROM rq_sv q JOIN rq_probes p ON p.query_id = q.vec_id
+       |  JOIN rq_cs c ON c.lcid = p.lcid AND c.s = q.s
+       |  JOIN rq_cb$iters b ON b.s = q.s),
+       |rq_dd AS (SELECT a.query_id, e.vec_id AS neighbor_id, CAST(sum(a.micro) AS BIGINT) AS micros
+       |  FROM rq_enc e JOIN rq_adc a ON a.lcid = e.lcid AND a.s = e.s AND a.cid = e.cid
+       |    AND a.query_id <> e.vec_id
+       |  GROUP BY 1, 2)""".stripMargin
+  }
+  private val pqCtes =
+    s"""$pqBaseCtes,
+      |cb AS (SELECT s, vec_id AS cid, x AS cw FROM sv WHERE vec_id < 16),
+      |dsc AS (SELECT a.vec_id, a.s, c.cid,
+      |    (list_sum(list_transform(range(0, len(a.x)), i -> a.x[i+1] * a.x[i+1]))
+      |     - list_sum(list_transform(range(0, len(a.x)), i -> a.x[i+1] * c.cw[i+1])) * 2
+      |     + list_sum(list_transform(range(0, len(c.cw)), i -> c.cw[i+1] * c.cw[i+1]))) AS d
+      |  FROM sv a JOIN cb c USING (s)),
+      |enc AS (SELECT vec_id, s, cid, d FROM (
+      |    SELECT vec_id, s, cid, d,
+      |      row_number() OVER (PARTITION BY vec_id, s ORDER BY d ASC, cid ASC) AS rn
+      |    FROM dsc) t WHERE rn = 1)""".stripMargin
+
+  val entries: Seq[Entry] = Seq(
+    Entry("dedup_exact", (s, d) =>
+      Dedup.exactDupGroups(dedupCorpus(s, d), "doc_id", "text"),
+      s"""$corpusCte
+         |SELECT md5(text) AS content_hash, count(*) AS dup_cnt, min(doc_id) AS keep_id
+         |FROM corpus GROUP BY md5(text) HAVING count(*) > 1""".stripMargin),
+    Entry("dedup_minhash_sigs", (s, d) =>
+      Dedup.minhashSignatures(dedupCorpus(s, d), "doc_id", "text", k = 4),
+      s"""$corpusCte, ${toksCte("corpus")},
+         |sh AS (SELECT doc_id, ${shinglesExpr(3)} AS s FROM toks WHERE len(w) >= 3)
+         |SELECT doc_id,
+         |  list_min(list_transform(s, x -> substr(md5(x), 1, 8))) AS h0,
+         |  list_min(list_transform(s, x -> substr(md5(x), 9, 8))) AS h1,
+         |  list_min(list_transform(s, x -> substr(md5(x), 17, 8))) AS h2,
+         |  list_min(list_transform(s, x -> substr(md5(x), 25, 8))) AS h3
+         |FROM sh""".stripMargin,
+      // the first stage of dedup_minhash_pairs
+      SiblingOf("dedup_minhash_pairs")),
+    Entry("dedup_minhash_pairs", (s, d) =>
+      Dedup.minhashCandidatePairs(dedupCorpus(s, d), "doc_id", "text", k = 4),
+      s"""$corpusCte, ${toksCte("corpus")},
+         |sh AS (SELECT doc_id, ${shinglesExpr(3)} AS s FROM toks WHERE len(w) >= 3),
+         |sig AS (SELECT doc_id,
+         |  list_min(list_transform(s, x -> substr(md5(x), 1, 8))) AS h0,
+         |  list_min(list_transform(s, x -> substr(md5(x), 9, 8))) AS h1,
+         |  list_min(list_transform(s, x -> substr(md5(x), 17, 8))) AS h2,
+         |  list_min(list_transform(s, x -> substr(md5(x), 25, 8))) AS h3
+         |FROM sh),
+         |banded0 AS (
+         |  SELECT doc_id, 0 AS band, h0 AS sig FROM sig
+         |  UNION ALL SELECT doc_id, 1, h1 FROM sig
+         |  UNION ALL SELECT doc_id, 2, h2 FROM sig
+         |  UNION ALL SELECT doc_id, 3, h3 FROM sig),
+         |banded AS (
+         |  SELECT b.* FROM banded0 b JOIN (SELECT band, sig FROM banded0
+         |    GROUP BY band, sig HAVING count(*) <= 1024) ok
+         |  ON ok.band = b.band AND ok.sig = b.sig)
+         |SELECT DISTINCT l.doc_id AS a, r.doc_id AS b
+         |FROM banded l JOIN banded r ON l.band = r.band AND l.sig = r.sig AND l.doc_id < r.doc_id""".stripMargin),
+    Entry("dedup_simhash", (s, d) =>
+      Dedup.simhash(dedupCorpus(s, d), "doc_id", "text", bits = 16),
+      s"""$corpusCte, ${toksCte("corpus")}
+         |SELECT doc_id, $simhashTerms AS simhash FROM toks""".stripMargin,
+      // the signature stage of dedup_simhash_pairs, at 16 bits instead of 64
+      SiblingOf("dedup_simhash_pairs")),
     // simhash near-dup pairs: banded chunk equi-join proposes candidates,
     // exact popcount Hamming verifies — recall is exact for hamming <
     // bands. 64-bit signatures / 16-bit chunks (round 15): the 8-bit-chunk
     // form's buckets are corpus/256 BY CONSTRUCTION — a measured 28.7
     // BILLION proposed pairs at the 100x probe corpus vs 694M for 16-bit
     // chunks (SCALE.md census) — the Manku et al. 2007 production shape
-    "dedup_simhash_pairs" -> ((s, d) =>
+    Entry("dedup_simhash_pairs", (s, d) =>
       Dedup.simhashPairs(dedupCorpus(s, d), "doc_id", "text",
-        bits = 64, bands = 4, maxHamming = 3)),
+        bits = 64, bands = 4, maxHamming = 3),
+      s"""$corpusCte, ${toksCte("corpus")},
+         |sig AS (SELECT doc_id, ${simhashTermsFor(64)} AS simhash FROM toks),
+         |banded AS (
+         |  SELECT doc_id, simhash, 0 AS band, (simhash >> 0) & 65535 AS chunk FROM sig
+         |  UNION ALL SELECT doc_id, simhash, 1, (simhash >> 16) & 65535 FROM sig
+         |  UNION ALL SELECT doc_id, simhash, 2, (simhash >> 32) & 65535 FROM sig
+         |  UNION ALL SELECT doc_id, simhash, 3, (simhash >> 48) & 65535 FROM sig),
+         |cand AS (SELECT DISTINCT l.doc_id AS a, r.doc_id AS b, l.simhash AS sa, r.simhash AS sb
+         |  FROM banded l JOIN banded r ON l.band = r.band AND l.chunk = r.chunk AND l.doc_id < r.doc_id)
+         |SELECT a, b, CAST(bit_count(xor(sa, sb)) AS BIGINT) AS hamming
+         |FROM cand WHERE bit_count(xor(sa, sb)) <= 3""".stripMargin),
     // scale-safe default: LSH banding proposes candidates, exact Jaccard
     // verifies them — the unguarded all-sharing-pairs self-join fans out
     // quadratically on boilerplate shingles (the 100 TB failure mode)
     // one-pass shared-propose report: jaccard AND max-containment from a
     // single shingle scan / signature agg / candidate join / verify agg
-    "dedup_similarity_report" -> ((s, d) =>
+    Entry("dedup_similarity_report", (s, d) =>
       Dedup.similarityReport(dedupCorpus(s, d), "doc_id", "text",
-        n = 3, k = 4, minSim = 0.5, minContain = 0.9)),
+        n = 3, k = 4, minSim = 0.5, minContain = 0.9),
+      s"""$ngramInterCtes,
+         |sc AS (SELECT a, b,
+         |    round(CAST(i AS DOUBLE) / CAST(sa.n_sh + sb.n_sh - i AS DOUBLE), 4) AS jaccard,
+         |    round(CAST(i AS DOUBLE) / CAST(least(sa.n_sh, sb.n_sh) AS DOUBLE), 4) AS containment
+         |  FROM inter JOIN sizes sa ON sa.doc_id = a JOIN sizes sb ON sb.doc_id = b)
+         |SELECT a, b, jaccard, containment FROM sc
+         |WHERE jaccard >= 0.5 OR containment >= 0.9""".stripMargin),
     // per-source distinct-shingle cardinality: KMV sketch (bounded k-double
     // state, native TypedImperativeAggregate) next to the exact count it
     // approximates — the sketch estimate is deterministic and the oracle
     // replays it bit-for-bit
-    "agg_kmv_distinct" -> ((s, d) => {
+    Entry("agg_kmv_distinct", (s, d) => {
       val dd = docs(s, d)
       val sh = TextAnalysis.shingleRows(dd, "doc_id", "text", n = 3)
       sh.join(dd.select(col("doc_id"), col("source")), Seq("doc_id"))
@@ -429,46 +704,124 @@ object PipelineQueries {
         .agg(
           graft.functions.KmvDistinct.kmvDistinct(col("shingle"), k = 128).as("est_distinct"),
           countDistinct(col("shingle")).as("exact_distinct"))
-    }),
-    "dedup_ngram_jaccard" -> ((s, d) =>
+    },
+      s"""WITH ${toksCte("documents")},
+         |sh AS (SELECT doc_id, unnest(${shinglesExpr(3)}) AS shingle FROM toks WHERE len(w) >= 3),
+         |d AS (SELECT DISTINCT doc.source AS source, s.shingle
+         |  FROM sh s JOIN documents doc USING (doc_id)),
+         |ex AS (SELECT source, count(*) AS exact_distinct FROM d GROUP BY source),
+         |uu AS (SELECT DISTINCT source,
+         |    CAST(CAST(concat('0x', substr(md5(shingle), 1, 12)) AS BIGINT) AS DOUBLE)
+         |      / 281474976710656.0 AS u
+         |  FROM d),
+         |r AS (SELECT source, u,
+         |    row_number() OVER (PARTITION BY source ORDER BY u ASC) AS rn,
+         |    count(*) OVER (PARTITION BY source) AS nu
+         |  FROM uu),
+         |est AS (SELECT source, max(nu) AS nu,
+         |    max(CASE WHEN rn = 128 THEN u END) AS u128
+         |  FROM r GROUP BY source)
+         |SELECT e.source,
+         |  CASE WHEN e.nu < 128 THEN CAST(e.nu AS DOUBLE) ELSE 127.0 / e.u128 END AS est_distinct,
+         |  CAST(x.exact_distinct AS BIGINT) AS exact_distinct
+         |FROM est e JOIN ex x ON e.source = x.source""".stripMargin),
+    Entry("dedup_ngram_jaccard", (s, d) =>
       Dedup.ngramJaccardViaMinhash(dedupCorpus(s, d), "doc_id", "text",
-        n = 3, k = 4, minSim = 0.5)),
+        n = 3, k = 4, minSim = 0.5),
+      s"""$ngramInterCtes
+         |SELECT a, b, round(CAST(i AS DOUBLE) / CAST(sa.n_sh + sb.n_sh - i AS DOUBLE), 4) AS jaccard
+         |FROM inter JOIN sizes sa ON sa.doc_id = a JOIN sizes sb ON sb.doc_id = b
+         |WHERE round(CAST(i AS DOUBLE) / CAST(sa.n_sh + sb.n_sh - i AS DOUBLE), 4) >= 0.5""".stripMargin),
     // paragraph-granularity exact dedup (the C4/RefinedWeb cleaning step):
     // composite multi-paragraph docs assembled from the planted-dup corpus
     // (each source doc = one paragraph, 40 composites), boilerplate
     // paragraphs removed corpus-wide keep-first, docs reassembled in order
-    "dedup_paragraphs" -> ((s, d) => {
+    Entry("dedup_paragraphs", (s, d) => {
       val comp = dedupCorpus(s, d)
         .groupBy((col("doc_id") % 40).as("cid"))
         .agg(concat_ws("\n",
           array_sort(collect_list(struct(col("doc_id"), col("text"))))
             .getField("text")).as("text"))
       Dedup.paragraphDedup(comp, "cid", "text")
-    }),
+    },
+      s"""$corpusCte,
+         |comp AS (SELECT doc_id % 40 AS cid,
+         |    string_agg(text, chr(10) ORDER BY doc_id) AS text
+         |  FROM corpus GROUP BY 1),
+         |paras AS (SELECT cid, len(string_split(text, chr(10))) AS n,
+         |    unnest(string_split(text, chr(10))) AS para,
+         |    unnest(range(len(string_split(text, chr(10))))) AS pos
+         |  FROM comp),
+         |keep AS (SELECT cid, n, pos, para FROM (
+         |    SELECT *, row_number() OVER (PARTITION BY para ORDER BY cid, pos) AS rn
+         |    FROM paras) t WHERE rn = 1)
+         |SELECT cid, string_agg(para, chr(10) ORDER BY pos) AS text,
+         |  count(*) AS n_kept, CAST(any_value(n) - count(*) AS BIGINT) AS n_dropped
+         |FROM keep GROUP BY cid""".stripMargin),
     // deterministic epoch shuffle: reproducible per-epoch shard +
     // within-shard order from md5(epoch|id), no RNG state
-    "curate_epoch_shuffle" -> ((s, d) =>
-      pipeline.Curation.epochShuffle(docs(s, d), "doc_id", epoch = 1, nShards = 8)),
+    Entry("curate_epoch_shuffle", (s, d) =>
+      pipeline.Curation.epochShuffle(docs(s, d), "doc_id", epoch = 1, nShards = 8),
+      """WITH h AS (SELECT doc_id, md5('epoch|1|' || CAST(doc_id AS VARCHAR)) AS hx FROM documents),
+        |s AS (SELECT doc_id, hx,
+        |  CAST(concat('0x', substr(hx, 1, 6)) AS BIGINT) % 8 AS shard FROM h)
+        |SELECT doc_id, shard,
+        |  CAST(row_number() OVER (PARTITION BY shard ORDER BY hx, doc_id) AS BIGINT) AS ord
+        |FROM s""".stripMargin),
     // cross-document duplicated-paragraph ratios (the CCNet/RefinedWeb
     // boilerplate signal): share of each composite's paragraphs and bytes
     // seen in at least one other composite
-    "dedup_paragraph_report" -> ((s, d) => {
+    Entry("dedup_paragraph_report", (s, d) => {
       val comp = dedupCorpus(s, d)
         .groupBy((col("doc_id") % 40).as("cid"))
         .agg(concat_ws("\n",
           array_sort(collect_list(struct(col("doc_id"), col("text"))))
             .getField("text")).as("text"))
       Dedup.dupParagraphReport(comp, "cid", "text")
-    }),
+    },
+      s"""$corpusCte,
+         |comp AS (SELECT doc_id % 40 AS cid,
+         |    string_agg(text, chr(10) ORDER BY doc_id) AS text
+         |  FROM corpus GROUP BY 1),
+         |pr AS (SELECT cid, unnest(string_split(text, chr(10))) AS para FROM comp),
+         |ph AS (SELECT cid, para, strlen(para) AS len FROM pr),
+         |grp AS (SELECT para, count(DISTINCT cid) AS ndocs FROM ph GROUP BY para),
+         |j AS (SELECT p.cid, p.len, g.ndocs FROM ph p JOIN grp g ON g.para = p.para)
+         |SELECT cid, count(*) AS n_paras,
+         |  round(CAST(sum(CASE WHEN ndocs > 1 THEN 1 ELSE 0 END) AS DOUBLE) / count(*), 4) AS dup_para_frac,
+         |  round(coalesce(CAST(sum(CASE WHEN ndocs > 1 THEN len ELSE 0 END) AS DOUBLE)
+         |    / (CASE WHEN sum(len) > 0 THEN sum(len) END), 0.0), 4) AS dup_char_frac
+         |FROM j GROUP BY cid""".stripMargin),
     // duplicated-span REMOVAL (the rewrite side of text_hot_spans): hot
     // 5-gram windows (df >= 2) deleted at token granularity, documents
     // reassembled from the surviving normalized tokens
-    "curate_remove_spans" -> ((s, d) =>
+    Entry("curate_remove_spans", (s, d) =>
       pipeline.Curation.removeHotSpans(dedupCorpus(s, d), "doc_id", "text",
-        n = 5, minDf = 2)),
+        n = 5, minDf = 2),
+      // mirrors Curation.removeHotSpans: same hot-gram CTEs as
+      // text_hot_spans, then an indexed list_filter rewrite (DuckDB
+      // lambda index is 1-based; covered positions are 0-based)
+      s"""$corpusCte, ${toksCte("corpus")},
+         |sh AS (SELECT doc_id, unnest(range(len(w) - 4)) AS pos, w
+         |  FROM toks WHERE len(w) >= 5),
+         |sh2 AS (SELECT doc_id, pos,
+         |  w[pos+1]||' '||w[pos+2]||' '||w[pos+3]||' '||w[pos+4]||' '||w[pos+5] AS g
+         |  FROM sh),
+         |hot AS (SELECT g FROM (SELECT g, count(DISTINCT doc_id) AS df
+         |  FROM sh2 GROUP BY g) WHERE df >= 2),
+         |cl AS (SELECT doc_id, list(DISTINCT cp) AS cov FROM
+         |  (SELECT doc_id, unnest(range(pos, pos + 5)) AS cp FROM sh2
+         |   WHERE g IN (SELECT g FROM hot)) GROUP BY doc_id),
+         |tot AS (SELECT doc_id, w FROM toks WHERE len(w) >= 1 AND w[1] <> '')
+         |SELECT t.doc_id,
+         |  coalesce(array_to_string(list_filter(t.w,
+         |    (x, i) -> c.cov IS NULL OR NOT list_contains(c.cov, i - 1)), ' '), '') AS clean_text,
+         |  CAST(len(t.w) AS BIGINT) AS n_tokens,
+         |  CAST(coalesce(len(c.cov), 0) AS BIGINT) AS n_removed
+         |FROM tot t LEFT JOIN cl c ON c.doc_id = t.doc_id""".stripMargin),
     // C4-style line cleaning: short lines (< 30 words) and a blacklist
     // phrase dropped, documents reassembled from the survivors
-    "curate_clean_lines" -> ((s, d) => {
+    Entry("curate_clean_lines", (s, d) => {
       val comp = docs(s, d)
         .groupBy((col("doc_id") % 50).as("cid"))
         .agg(concat_ws("\n",
@@ -476,167 +829,518 @@ object PipelineQueries {
             .getField("text")).as("text"))
       pipeline.Curation.lineFilter(comp, "cid", "text", minWords = 30,
         blacklist = Seq("spark"))
-    }),
-    "text_langid" -> ((s, d) =>
-      docs(s, d).select(col("doc_id"), TextAnalysis.langId(col("text")).as("lang_guess"))),
+    },
+      """WITH comp AS (SELECT doc_id % 50 AS cid,
+        |    string_agg(text, chr(10) ORDER BY doc_id) AS text
+        |  FROM documents GROUP BY 1),
+        |lines AS (SELECT cid, len(string_split(text, chr(10))) AS n,
+        |    unnest(string_split(text, chr(10))) AS line,
+        |    unnest(range(len(string_split(text, chr(10))))) AS pos
+        |  FROM comp),
+        |keep AS (SELECT * FROM lines
+        |  WHERE len(regexp_extract_all(lower(line), '[a-z0-9]+')) >= 30
+        |    AND NOT contains(lower(line), 'spark'))
+        |SELECT cid, string_agg(line, chr(10) ORDER BY pos) AS text,
+        |  count(*) AS n_kept, CAST(any_value(n) - count(*) AS BIGINT) AS n_dropped
+        |FROM keep GROUP BY cid""".stripMargin),
+    Entry("text_langid", (s, d) =>
+      docs(s, d).select(col("doc_id"), TextAnalysis.langId(col("text")).as("lang_guess")),
+      textLangidSql,
+      // corpus_report runs this projection over the same documents
+      SiblingOf("corpus_report")),
     // Gopher (MassiveText) document-filter rule bundle over the 50
     // multi-line composites (same construction as curate_clean_lines so
     // the line-level rules see real lines): token stats, symbol/alpha
     // ratios, stopword count, bullet/ellipsis line ratios, conjunctive
     // pass verdict — one narrow row-local projection, no explode
-    "text_gopher_rules" -> ((s, d) => {
+    Entry("text_gopher_rules", (s, d) => {
       val comp = docs(s, d)
         .groupBy((col("doc_id") % 50).as("cid"))
         .agg(concat_ws("\n",
           array_sort(collect_list(struct(col("doc_id"), col("text"))))
             .getField("text")).as("text"))
       TextAnalysis.gopherRules(comp, "cid", "text")
-    }),
-    "text_quality" -> ((s, d) =>
-      TextAnalysis.qualityTable(docs(s, d), "doc_id", "text")),
-    "text_tokens" -> ((s, d) =>
+    },
+      // gopherRules replayed over the same 50 composites: list HOFs fold
+      // the token/line arrays, integer-DIV micro ratios, the same padded
+      // stopword count as the quality oracle
+      s"""WITH comp AS (SELECT doc_id % 50 AS cid,
+         |    string_agg(text, chr(10) ORDER BY doc_id) AS text
+         |  FROM documents GROUP BY 1),
+         |f AS (SELECT cid, text,
+         |    list_filter(regexp_split_to_array(text, '\\s+'), x -> x <> '') AS w,
+         |    list_filter(list_transform(string_split(text, chr(10)), x -> trim(x)), x -> x <> '') AS l,
+         |    len(text) - len(replace(text, '#', '')) AS hsh,
+         |    (len(text) - len(regexp_replace(text, '\\.\\.\\.', '', 'g'))) // 3
+         |      + (len(text) - len(replace(text, '…', ''))) AS ell,
+         |    ' '||$normSql||' ' AS p
+         |  FROM comp),
+         |g AS (SELECT cid, len(w) AS nw,
+         |    coalesce(list_sum(list_transform(w, x -> len(x))), 0) AS wlen,
+         |    len(list_filter(w, x -> regexp_matches(x, '[A-Za-z]'))) AS alpha,
+         |    len(l) AS nl2,
+         |    len(list_filter(l, x -> substr(x, 1, 1) IN ('-', '*', '\u2022'))) AS bul,
+         |    len(list_filter(l, x -> regexp_matches(x, '(\\.\\.\\.|\u2026)$$'))) AS eol,
+         |    hsh, ell,
+         |    ${langScore(graft.pipeline.TextAnalysis.qualityStopwords)} AS stop
+         |  FROM f)
+         |SELECT CAST(cid AS BIGINT) AS cid, CAST(nw AS BIGINT) AS n_words,
+         |  CAST(CASE WHEN nw = 0 THEN 0 ELSE wlen * 1000000 // nw END AS BIGINT) AS mean_word_len_micro,
+         |  CAST(CASE WHEN nw = 0 THEN 0 ELSE (hsh + ell) * 1000000 // nw END AS BIGINT) AS symbol_ratio_micro,
+         |  CAST(CASE WHEN nw = 0 THEN 0 ELSE alpha * 1000000 // nw END AS BIGINT) AS alpha_ratio_micro,
+         |  CAST(stop AS BIGINT) AS stopword_count,
+         |  CAST(nl2 AS BIGINT) AS n_lines,
+         |  CAST(CASE WHEN nl2 = 0 THEN 0 ELSE bul * 1000000 // nl2 END AS BIGINT) AS bullet_ratio_micro,
+         |  CAST(CASE WHEN nl2 = 0 THEN 0 ELSE eol * 1000000 // nl2 END AS BIGINT) AS ellipsis_ratio_micro,
+         |  CAST(CASE WHEN nw BETWEEN 50 AND 100000
+         |    AND (CASE WHEN nw = 0 THEN 0 ELSE wlen * 1000000 // nw END) BETWEEN 3000000 AND 10000000
+         |    AND (CASE WHEN nw = 0 THEN 0 ELSE (hsh + ell) * 1000000 // nw END) < 100000
+         |    AND (CASE WHEN nw = 0 THEN 0 ELSE alpha * 1000000 // nw END) >= 800000
+         |    AND stop >= 2 THEN 1 ELSE 0 END AS BIGINT) AS gopher_pass
+         |FROM g""".stripMargin),
+    Entry("text_quality", (s, d) =>
+      TextAnalysis.qualityTable(docs(s, d), "doc_id", "text"), textQualitySql),
+    Entry("text_tokens", (s, d) =>
       docs(s, d).select(col("doc_id"),
         TextAnalysis.wordCount(col("text")).cast("long").as("n_words"),
-        TextAnalysis.tokenCount(col("text")).cast("long").as("n_tokens"))),
-    "text_fingerprint" -> ((s, d) =>
-      TextAnalysis.fingerprints(docs(s, d), "doc_id", "text")),
+        TextAnalysis.tokenCount(col("text")).cast("long").as("n_tokens")),
+      s"""SELECT doc_id,
+         |  CAST(CASE WHEN len($normSql) = 0 THEN 0 ELSE len(string_split($normSql, ' ')) END AS BIGINT) AS n_words,
+         |  CAST(len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]')) AS BIGINT) AS n_tokens
+         |FROM documents""".stripMargin),
+    Entry("text_fingerprint", (s, d) =>
+      TextAnalysis.fingerprints(docs(s, d), "doc_id", "text"),
+      s"""WITH ${toksCte("documents")},
+         |sh AS (SELECT doc_id, ${shinglesExpr(4)} AS s, w FROM toks)
+         |SELECT doc_id, CASE WHEN len(w) < 4 THEN md5(array_to_string(w, ' '))
+         |  ELSE list_min(list_transform(s, x -> md5(x))) END AS fingerprint
+         |FROM sh""".stripMargin),
     // Flesch reading-ease per document (vowel-group syllable proxy) —
     // the classic readability quality-filter signal, micro-unit exact
-    "text_readability" -> ((s, d) =>
-      TextAnalysis.readabilityReport(docs(s, d), "doc_id", "text")),
+    Entry("text_readability", (s, d) =>
+      TextAnalysis.readabilityReport(docs(s, d), "doc_id", "text"),
+      s"""WITH c AS (SELECT doc_id,
+         |  CASE WHEN len($normSql) = 0 THEN 0 ELSE len(string_split($normSql, ' ')) END AS nw,
+         |  greatest(len(regexp_extract_all(text, '[.!?]+')), 1) AS ns,
+         |  len(regexp_extract_all(lower(text), '[aeiouy]+')) AS sy
+         |FROM documents)
+         |SELECT doc_id, CAST(nw AS BIGINT) AS n_words, CAST(ns AS BIGINT) AS n_sentences,
+         |  CAST(sy AS BIGINT) AS n_syllables,
+         |  CASE WHEN nw = 0 THEN 0 ELSE CAST(floor((206.835
+         |    - 1.015 * (CAST(nw AS DOUBLE) / ns)
+         |    - 84.6 * (CAST(sy AS DOUBLE) / nw)) * 1000000.0 + 0.5) AS BIGINT) END AS flesch_micro
+         |FROM c""".stripMargin),
     // ANN baseline: brute-force cosine top-k, query side broadcast
     // (exact-bit parity with the DuckDB oracle verified: double left-fold)
-    "ann_topk" -> ((s, d) => {
+    Entry("ann_topk", (s, d) => {
       val e = embeddings(s, d)
       Similarity.bruteForceTopK(e, e.where(col("vec_id") < 5), "vec_id", "embedding", k = 3)
         .withColumn("rank", col("rank").cast("long"))
-    }),
+    },
+      """WITH q AS (SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qv FROM embeddings WHERE vec_id < 5),
+        |s AS (SELECT query_id, e.vec_id AS neighbor_id,
+        |  round(list_cosine_similarity(qv, CAST(e.embedding AS DOUBLE[])), 6) AS cos
+        |  FROM q, embeddings e WHERE e.vec_id <> query_id),
+        |r AS (SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id ASC) AS rnk FROM s)
+        |SELECT query_id, neighbor_id, cos, CAST(rnk AS BIGINT) AS rank FROM r WHERE rnk <= 3""".stripMargin),
     // embedding near-dup pairs over a bounded candidate set
-    "embedding_cosine_pairs" -> ((s, d) =>
+    Entry("embedding_cosine_pairs", (s, d) =>
       Dedup.embeddingCosinePairs(embeddings(s, d).where(col("vec_id") < 100),
-        "vec_id", "embedding", minCos = 0.3)),
+        "vec_id", "embedding", minCos = 0.3),
+      """WITH c AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings WHERE vec_id < 100)
+        |SELECT a.vec_id AS a, b.vec_id AS b, round(list_cosine_similarity(a.v, b.v), 4) AS cos
+        |FROM c a, c b WHERE a.vec_id < b.vec_id
+        |AND round(list_cosine_similarity(a.v, b.v), 4) >= 0.3""".stripMargin),
     // LSH-bucketed ANN (scale path; md5-derived plane signs make the
     // buckets — and so the whole query — oracle-reproducible)
-    "ann_lsh_topk" -> ((s, d) => {
+    Entry("ann_lsh_topk", (s, d) => {
       val e = embeddings(s, d)
       Similarity.lshTopK(e, e.where(col("vec_id") < 50), "vec_id", "embedding", k = 3, planes = 4)
         .withColumn("rank", col("rank").cast("long"))
-    }),
+    },
+      {
+      def sign(p: Int) =
+        s"(CASE WHEN (strpos('0123456789abcdef', substr(md5('$p|'||i), 1, 1)) - 1) % 2 = 1 THEN 1.0 ELSE -1.0 END)"
+      def bit(p: Int) =
+        s"(CASE WHEN list_sum(list_transform(range(0, len(ve)), i -> ve[i+1] * ${sign(p)})) >= 0 THEN ${1L << p} ELSE 0 END)"
+      val bucket = (0 until 4).map(bit).mkString(" + ")
+      s"""WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS ve FROM embeddings),
+         |b AS (SELECT vec_id, ve, $bucket AS bucket FROM v),
+         |q AS (SELECT vec_id AS query_id, ve AS qv, bucket FROM b WHERE vec_id < 50),
+         |s AS (SELECT query_id, c.vec_id AS neighbor_id,
+         |  round(list_cosine_similarity(qv, c.ve), 6) AS cos
+         |  FROM q JOIN b c ON q.bucket = c.bucket AND c.vec_id <> q.query_id),
+         |r AS (SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id ASC) AS rnk FROM s)
+         |SELECT query_id, neighbor_id, cos, CAST(rnk AS BIGINT) AS rank FROM r WHERE rnk <= 3""".stripMargin
+    },
+      // the LSH arm of ann_recall_report, over 50 queries instead of 30
+      SiblingOf("ann_recall_report")),
     // multimodal: batch feature extraction over binary payloads — the
     // oracle-able slice (asset_id, media_type, n_bytes, payload sha256);
     // the decoded feature vector itself is engine-specific (stub decoder)
-    "multimodal_features" -> ((s, d) =>
+    Entry("multimodal_features", (s, d) =>
       pipeline.Multimodal.extractFeatures(pipeline.Multimodal.syntheticAssets(s, 300))
         .toDF()
         .select(col("assetId").as("asset_id"), col("mediaType").as("media_type"),
-          col("nBytes").as("n_bytes"), col("sha"))),
+          col("nBytes").as("n_bytes"), col("sha")),
+      """WITH a AS (SELECT range AS id FROM range(0, 300)),
+        |b AS (SELECT id,
+        |  CASE CAST(id % 3 AS INTEGER) WHEN 0 THEN 'image' WHEN 1 THEN 'audio' ELSE 'video' END AS media_type,
+        |  substr(sha256(CAST(id AS VARCHAR)), 1, CAST(((id % 32) + 1) * 2 AS INTEGER)) AS hexpay
+        |FROM a)
+        |SELECT id AS asset_id, media_type,
+        |  CAST(len(hexpay) AS BIGINT) AS n_bytes,
+        |  upper(sha256(hexpay)) AS sha
+        |FROM b""".stripMargin),
     // multimodal REAL decode path: documents as text-typed binary assets,
     // UTF-8 decode (pure codegen), text features over the decoded column
-    "multimodal_text_decode" -> ((s, d) => {
+    Entry("multimodal_text_decode", (s, d) => {
       val assets = docs(s, d).select(col("doc_id").as("asset_id"),
         lit("text").as("media_type"), col("text").cast("binary").as("payload"))
       pipeline.Multimodal.decodeTextAssets(assets)
         .select(col("asset_id"),
           length(col("text")).cast("long").as("n_chars"),
           TextAnalysis.wordCount(col("text")).cast("long").as("n_words"))
-    }),
+    },
+      s"""SELECT doc_id AS asset_id,
+         |  CAST(len(text) AS BIGINT) AS n_chars,
+         |  CAST(CASE WHEN len($normSql) = 0 THEN 0 ELSE len(string_split($normSql, ' ')) END AS BIGINT) AS n_words
+         |FROM documents""".stripMargin),
     // multimodal REAL image decode: PNG payloads generated from a pixel
     // formula on the executors, decoded back via JDK ImageIO — PNG is
     // lossless, so the oracle reproduces every feature from the formula
     // without parsing a PNG
-    "multimodal_image_features" -> ((s, d) =>
+    Entry("multimodal_image_features", (s, d) =>
       pipeline.Multimodal.imageFeatures(
         pipeline.Multimodal.syntheticImageAssets(s, 120)).toDF()
         .withColumn("width", col("width").cast("long"))
-        .withColumn("height", col("height").cast("long"))),
+        .withColumn("height", col("height").cast("long")),
+      // mirrors Multimodal.imageFeatures: the pixel formula of
+      // syntheticImageAssets re-derived in SQL (PNG decode is lossless, so
+      // the decoded pixels ARE the formula values)
+      """WITH a AS (SELECT range AS id,
+        |    CAST(4 + range % 5 AS INTEGER) AS w, CAST(4 + range % 3 AS INTEGER) AS h
+        |  FROM range(0, 120)),
+        |px AS (SELECT id, w, h, xs.x, ys.y FROM a,
+        |  (SELECT range AS x FROM range(0, 8)) xs,
+        |  (SELECT range AS y FROM range(0, 6)) ys
+        |  WHERE xs.x < w AND ys.y < h),
+        |c AS (SELECT id, w, h,
+        |    (id * 31 + x * 7 + y * 13) % 256 AS r,
+        |    (id * 17 + x * 3 + y * 5) % 256 AS g,
+        |    (id * 11 + x * 19 + y * 23) % 256 AS b
+        |  FROM px),
+        |l AS (SELECT id, w, h, r, g, b,
+        |    (r * 299 + g * 587 + b * 114) // 1000 AS lum FROM c)
+        |SELECT id AS asset_id, CAST(w AS BIGINT) AS width, CAST(h AS BIGINT) AS height,
+        |  count(*) AS n_px,
+        |  CAST(sum(r) AS BIGINT) AS sum_r, CAST(sum(g) AS BIGINT) AS sum_g,
+        |  CAST(sum(b) AS BIGINT) AS sum_b, CAST(sum(lum) AS BIGINT) AS sum_luma,
+        |  CAST(sum(CASE WHEN lum // 64 = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_l0,
+        |  CAST(sum(CASE WHEN lum // 64 = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_l1,
+        |  CAST(sum(CASE WHEN lum // 64 = 2 THEN 1 ELSE 0 END) AS BIGINT) AS n_l2,
+        |  CAST(sum(CASE WHEN lum // 64 = 3 THEN 1 ELSE 0 END) AS BIGINT) AS n_l3,
+        |  round(CAST(sum(lum) AS DOUBLE) / count(*), 6) AS mean_luma
+        |FROM l GROUP BY 1, 2, 3""".stripMargin),
     // multimodal REAL audio decode: WAV/PCM payloads from a sample formula,
     // decoded back via javax.sound.sampled; oracle mirrors the formula
-    "multimodal_audio_features" -> ((s, d) =>
+    Entry("multimodal_audio_features", (s, d) =>
       pipeline.Multimodal.audioFeatures(
-        pipeline.Multimodal.syntheticAudioAssets(s, 150)).toDF()),
+        pipeline.Multimodal.syntheticAudioAssets(s, 150)).toDF(),
+      // mirrors Multimodal.audioFeatures: the PCM sample formula of
+      // syntheticAudioAssets re-derived in SQL (WAV/PCM is lossless)
+      """WITH a AS (SELECT range AS id, 64 + 16 * (range % 8) AS n FROM range(0, 150)),
+        |s AS (SELECT id, n, ts.t,
+        |    ((id + 1) * 2654435761 + ts.t * 40503) % 4001 - 2000 AS v
+        |  FROM a, (SELECT range AS t FROM range(0, 176)) ts WHERE ts.t < n),
+        |z AS (SELECT id, t, v, lag(v) OVER (PARTITION BY id ORDER BY t) AS pv FROM s)
+        |SELECT id AS asset_id,
+        |  count(*) AS n_samples,
+        |  CAST(sum(v) AS BIGINT) AS sum_amp,
+        |  CAST(sum(v * v) AS BIGINT) AS sum_sq,
+        |  CAST(max(abs(v)) AS BIGINT) AS max_abs,
+        |  CAST(sum(CASE WHEN pv IS NOT NULL AND ((pv < 0) <> (v < 0)) THEN 1 ELSE 0 END) AS BIGINT) AS zero_crossings,
+        |  round(sqrt(CAST(sum(v * v) AS DOUBLE) / count(*)), 6) AS rms
+        |FROM z GROUP BY 1""".stripMargin),
     // the full decode->resize->encode->decode chain: nearest-neighbor
     // downsample into a 5px box then re-extract features; source indices
     // are integer math, so the oracle derives every resized pixel from
     // the generation formula without touching a PNG
-    "multimodal_resize_features" -> ((s, d) =>
+    Entry("multimodal_resize_features", (s, d) =>
       pipeline.Multimodal.imageFeatures(
         pipeline.Multimodal.resizeImages(
           pipeline.Multimodal.syntheticImageAssets(s, 120), maxDim = 5)).toDF()
         .withColumn("width", col("width").cast("long"))
-        .withColumn("height", col("height").cast("long"))),
+        .withColumn("height", col("height").cast("long")),
+      // mirrors Multimodal.imageFeatures ∘ resizeImages(maxDim=5): target
+      // dims by the resizePlan rule, nearest-neighbor source indices by
+      // integer division, then the same pixel-formula feature replay
+      """WITH a AS (SELECT range AS id,
+        |    CAST(4 + range % 5 AS INTEGER) AS w, CAST(4 + range % 3 AS INTEGER) AS h
+        |  FROM range(0, 120)),
+        |r AS (SELECT id, w, h,
+        |    CAST(floor(w * least(5.0 / w, 5.0 / h, 1.0)) AS INTEGER) AS tw,
+        |    CAST(floor(h * least(5.0 / w, 5.0 / h, 1.0)) AS INTEGER) AS th
+        |  FROM a),
+        |px AS (SELECT id, w, h, tw, th, xs.x, ys.y FROM r,
+        |  (SELECT range AS x FROM range(0, 8)) xs,
+        |  (SELECT range AS y FROM range(0, 6)) ys
+        |  WHERE xs.x < tw AND ys.y < th),
+        |sp AS (SELECT id, tw, th, (x * w) // tw AS sx, (y * h) // th AS sy FROM px),
+        |c AS (SELECT id, tw, th,
+        |    (id * 31 + sx * 7 + sy * 13) % 256 AS r,
+        |    (id * 17 + sx * 3 + sy * 5) % 256 AS g,
+        |    (id * 11 + sx * 19 + sy * 23) % 256 AS b
+        |  FROM sp),
+        |l AS (SELECT id, tw, th, r, g, b,
+        |    (r * 299 + g * 587 + b * 114) // 1000 AS lum FROM c)
+        |SELECT id AS asset_id, CAST(tw AS BIGINT) AS width, CAST(th AS BIGINT) AS height,
+        |  count(*) AS n_px,
+        |  CAST(sum(r) AS BIGINT) AS sum_r, CAST(sum(g) AS BIGINT) AS sum_g,
+        |  CAST(sum(b) AS BIGINT) AS sum_b, CAST(sum(lum) AS BIGINT) AS sum_luma,
+        |  CAST(sum(CASE WHEN lum // 64 = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_l0,
+        |  CAST(sum(CASE WHEN lum // 64 = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_l1,
+        |  CAST(sum(CASE WHEN lum // 64 = 2 THEN 1 ELSE 0 END) AS BIGINT) AS n_l2,
+        |  CAST(sum(CASE WHEN lum // 64 = 3 THEN 1 ELSE 0 END) AS BIGINT) AS n_l3,
+        |  round(CAST(sum(lum) AS DOUBLE) / count(*), 6) AS mean_luma
+        |FROM l GROUP BY 1, 2, 3""".stripMargin),
     // REAL video decode: animated-GIF container, every-2nd-frame sampling,
     // per-frame integer features; GIF with exact palettes is lossless, so
     // the oracle replays the frame-pixel generation formula
-    "multimodal_video_features" -> ((s, d) =>
+    Entry("multimodal_video_features", (s, d) =>
       pipeline.Multimodal.videoFrameFeatures(
         pipeline.Multimodal.syntheticVideoAssets(s, 100), everyK = 2).toDF()
         .withColumn("width", col("width").cast("long"))
-        .withColumn("height", col("height").cast("long"))),
+        .withColumn("height", col("height").cast("long")),
+      // mirrors Multimodal.videoFrameFeatures(everyK=2) over
+      // syntheticVideoAssets: frames f < 3 + id%4 with f%2=0, then the
+      // frame-pixel generation formula replayed per sampled frame
+      """WITH a AS (SELECT range AS id,
+        |    CAST(4 + range % 5 AS INTEGER) AS w, CAST(4 + range % 3 AS INTEGER) AS h,
+        |    CAST(3 + range % 4 AS INTEGER) AS nf
+        |  FROM range(0, 100)),
+        |fr AS (SELECT id, w, h, fs.f FROM a,
+        |  (SELECT range AS f FROM range(0, 6)) fs
+        |  WHERE fs.f < nf AND fs.f % 2 = 0),
+        |px AS (SELECT id, f, w, h, xs.x, ys.y FROM fr,
+        |  (SELECT range AS x FROM range(0, 8)) xs,
+        |  (SELECT range AS y FROM range(0, 6)) ys
+        |  WHERE xs.x < w AND ys.y < h),
+        |c AS (SELECT id, f, w, h,
+        |    (id * 31 + f * 29 + x * 7 + y * 13) % 256 AS r,
+        |    (id * 17 + f * 37 + x * 3 + y * 5) % 256 AS g,
+        |    (id * 11 + f * 41 + x * 19 + y * 23) % 256 AS b
+        |  FROM px),
+        |l AS (SELECT id, f, w, h, r, g, b,
+        |    (r * 299 + g * 587 + b * 114) // 1000 AS lum FROM c)
+        |SELECT id AS asset_id, CAST(f AS BIGINT) AS frame_idx,
+        |  CAST(w AS BIGINT) AS width, CAST(h AS BIGINT) AS height,
+        |  count(*) AS n_px,
+        |  CAST(sum(r) AS BIGINT) AS sum_r, CAST(sum(g) AS BIGINT) AS sum_g,
+        |  CAST(sum(b) AS BIGINT) AS sum_b, CAST(sum(lum) AS BIGINT) AS sum_luma,
+        |  CAST(sum(CASE WHEN lum // 64 = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_l0,
+        |  CAST(sum(CASE WHEN lum // 64 = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_l1,
+        |  CAST(sum(CASE WHEN lum // 64 = 2 THEN 1 ELSE 0 END) AS BIGINT) AS n_l2,
+        |  CAST(sum(CASE WHEN lum // 64 = 3 THEN 1 ELSE 0 END) AS BIGINT) AS n_l3,
+        |  round(CAST(sum(lum) AS DOUBLE) / count(*), 6) AS mean_luma
+        |FROM l GROUP BY 1, 2, 3, 4""".stripMargin),
     // IVF-routed ANN: static coarse quantizer, inverted-list probe
-    "ann_ivf_topk" -> ((s, d) => {
+    Entry("ann_ivf_topk", (s, d) => {
       val e = embeddings(s, d)
       Similarity.ivfTopK(e, e.where(col("vec_id") < 50), "vec_id", "embedding",
         k = 3, nlist = 16, nprobe = 4)
         .withColumn("rank", col("rank").cast("long"))
-    }),
+    },
+      """WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS ve FROM embeddings),
+        |cent AS (SELECT vec_id AS cid, ve AS cv FROM v WHERE vec_id < 16),
+        |asg AS (SELECT vec_id, cid FROM (
+        |  SELECT v.vec_id, c.cid,
+        |    row_number() OVER (PARTITION BY v.vec_id ORDER BY list_cosine_similarity(v.ve, c.cv) DESC, c.cid ASC) AS rn
+        |  FROM v, cent c) t WHERE rn = 1),
+        |probes AS (SELECT query_id, cid FROM (
+        |  SELECT v.vec_id AS query_id, c.cid,
+        |    row_number() OVER (PARTITION BY v.vec_id ORDER BY list_cosine_similarity(v.ve, c.cv) DESC, c.cid ASC) AS rn
+        |  FROM v, cent c WHERE v.vec_id < 50) t WHERE rn <= 4),
+        |s AS (SELECT p.query_id, a.vec_id AS neighbor_id,
+        |  round(list_cosine_similarity(qv.ve, av.ve), 6) AS cos
+        |  FROM probes p JOIN asg a ON p.cid = a.cid AND a.vec_id <> p.query_id
+        |  JOIN v qv ON qv.vec_id = p.query_id JOIN v av ON av.vec_id = a.vec_id),
+        |r AS (SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id ASC) AS rnk FROM s)
+        |SELECT query_id, neighbor_id, cos, CAST(rnk AS BIGINT) AS rank FROM r WHERE rnk <= 3""".stripMargin,
+      // the IVF arm of ann_recall_report, over 50 queries instead of 30
+      SiblingOf("ann_recall_report")),
     // hard-negative mining: per anchor, the top-3 highest-cosine
     // DIFFERENT-label vectors from the IVF probed lists (label inequality
     // filters before the top-k window)
-    "ann_hard_negatives" -> ((s, d) => {
+    Entry("ann_hard_negatives", (s, d) => {
       val e = embeddings(s, d)
       val cents = e.where(col("vec_id") < 16)
         .select(col("vec_id").cast("long").as("cid"), col("embedding").as("centroid"))
       Similarity.hardNegatives(e, e.where(col("vec_id") < 50), cents,
         "vec_id", "embedding", "label", k = 3, nprobe = 4)
         .withColumn("rank", col("rank").cast("long"))
-    }),
+    },
+      """WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS ve, CAST(label AS BIGINT) AS lbl FROM embeddings),
+        |cent AS (SELECT vec_id AS cid, ve AS cv FROM v WHERE vec_id < 16),
+        |asg AS (SELECT vec_id, cid FROM (
+        |  SELECT v.vec_id, c.cid,
+        |    row_number() OVER (PARTITION BY v.vec_id ORDER BY list_cosine_similarity(v.ve, c.cv) DESC, c.cid ASC) AS rn
+        |  FROM v, cent c) t WHERE rn = 1),
+        |probes AS (SELECT query_id, cid FROM (
+        |  SELECT v.vec_id AS query_id, c.cid,
+        |    row_number() OVER (PARTITION BY v.vec_id ORDER BY list_cosine_similarity(v.ve, c.cv) DESC, c.cid ASC) AS rn
+        |  FROM v, cent c WHERE v.vec_id < 50) t WHERE rn <= 4),
+        |s AS (SELECT p.query_id, qv.lbl AS anchor_label, a.vec_id AS neighbor_id, av.lbl AS neighbor_label,
+        |  round(list_cosine_similarity(qv.ve, av.ve), 6) AS cos
+        |  FROM probes p JOIN asg a ON p.cid = a.cid AND a.vec_id <> p.query_id
+        |  JOIN v qv ON qv.vec_id = p.query_id JOIN v av ON av.vec_id = a.vec_id
+        |  WHERE qv.lbl <> av.lbl),
+        |r AS (SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id ASC) AS rnk FROM s)
+        |SELECT query_id, anchor_label, neighbor_id, neighbor_label, cos, CAST(rnk AS BIGINT) AS rank
+        |FROM r WHERE rnk <= 3""".stripMargin),
     // contrastive training-pair mining: per anchor, the nearest
     // same-label neighbor (positive) + the 3 nearest different-label
     // neighbors (hard negatives), one IVF-routed scoring pass
-    "ann_contrastive_pairs" -> ((s, d) => {
+    Entry("ann_contrastive_pairs", (s, d) => {
       val e = embeddings(s, d)
       val cents = e.where(col("vec_id") < 16)
         .select(col("vec_id").cast("long").as("cid"), col("embedding").as("centroid"))
       Similarity.contrastivePairs(e, e.where(col("vec_id") < 50), cents,
         "vec_id", "embedding", "label", kNeg = 3, nprobe = 4)
-    }),
+    },
+      // same candidate CTEs as hard_negatives; positives keep the
+      // same-label rows at rank 1, negatives the different-label top-3
+      """WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS ve, CAST(label AS BIGINT) AS lbl FROM embeddings),
+        |cent AS (SELECT vec_id AS cid, ve AS cv FROM v WHERE vec_id < 16),
+        |asg AS (SELECT vec_id, cid FROM (
+        |  SELECT v.vec_id, c.cid,
+        |    row_number() OVER (PARTITION BY v.vec_id ORDER BY list_cosine_similarity(v.ve, c.cv) DESC, c.cid ASC) AS rn
+        |  FROM v, cent c) t WHERE rn = 1),
+        |probes AS (SELECT query_id, cid FROM (
+        |  SELECT v.vec_id AS query_id, c.cid,
+        |    row_number() OVER (PARTITION BY v.vec_id ORDER BY list_cosine_similarity(v.ve, c.cv) DESC, c.cid ASC) AS rn
+        |  FROM v, cent c WHERE v.vec_id < 50) t WHERE rn <= 4),
+        |s AS (SELECT p.query_id, qv.lbl AS anchor_label, a.vec_id AS neighbor_id, av.lbl AS neighbor_label,
+        |  round(list_cosine_similarity(qv.ve, av.ve), 6) AS cos
+        |  FROM probes p JOIN asg a ON p.cid = a.cid AND a.vec_id <> p.query_id
+        |  JOIN v qv ON qv.vec_id = p.query_id JOIN v av ON av.vec_id = a.vec_id),
+        |pos AS (SELECT *, 'positive' AS role FROM (
+        |  SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id ASC) AS rnk
+        |  FROM s WHERE anchor_label = neighbor_label) t WHERE rnk <= 1),
+        |neg AS (SELECT *, 'negative' AS role FROM (
+        |  SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id ASC) AS rnk
+        |  FROM s WHERE anchor_label <> neighbor_label) t WHERE rnk <= 3)
+        |SELECT query_id, anchor_label, neighbor_id, neighbor_label, cos, role, CAST(rnk AS BIGINT) AS rank
+        |FROM (SELECT * FROM pos UNION ALL SELECT * FROM neg)""".stripMargin),
     // kNN label-vote noise report: per anchor, the majority label among
     // the IVF top-5 neighbors vs the anchor's own (the geometric
     // label-noise signal; ties count-desc then label-asc)
-    "ann_label_noise" -> ((s, d) => {
+    Entry("ann_label_noise", (s, d) => {
       val e = embeddings(s, d)
       val cents = e.where(col("vec_id") < 16)
         .select(col("vec_id").cast("long").as("cid"), col("embedding").as("centroid"))
       Similarity.knnLabelVote(e, e.where(col("vec_id") < 50), cents,
         "vec_id", "embedding", "label", k = 5, nprobe = 4)
-    }),
+    },
+      """WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS ve, CAST(label AS BIGINT) AS lbl FROM embeddings),
+        |cent AS (SELECT vec_id AS cid, ve AS cv FROM v WHERE vec_id < 16),
+        |asg AS (SELECT vec_id, cid FROM (
+        |  SELECT v.vec_id, c.cid,
+        |    row_number() OVER (PARTITION BY v.vec_id ORDER BY list_cosine_similarity(v.ve, c.cv) DESC, c.cid ASC) AS rn
+        |  FROM v, cent c) t WHERE rn = 1),
+        |probes AS (SELECT query_id, cid FROM (
+        |  SELECT v.vec_id AS query_id, c.cid,
+        |    row_number() OVER (PARTITION BY v.vec_id ORDER BY list_cosine_similarity(v.ve, c.cv) DESC, c.cid ASC) AS rn
+        |  FROM v, cent c WHERE v.vec_id < 50) t WHERE rn <= 4),
+        |s AS (SELECT p.query_id, qv.lbl AS anchor_label, a.vec_id AS neighbor_id, av.lbl AS neighbor_label,
+        |  round(list_cosine_similarity(qv.ve, av.ve), 6) AS cos
+        |  FROM probes p JOIN asg a ON p.cid = a.cid AND a.vec_id <> p.query_id
+        |  JOIN v qv ON qv.vec_id = p.query_id JOIN v av ON av.vec_id = a.vec_id),
+        |r AS (SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id ASC) AS rnk FROM s),
+        |votes AS (SELECT query_id, anchor_label, neighbor_label, count(*) AS votes
+        |  FROM r WHERE rnk <= 5 GROUP BY 1, 2, 3),
+        |top AS (SELECT query_id, anchor_label, neighbor_label AS voted_label, votes,
+        |    row_number() OVER (PARTITION BY query_id ORDER BY votes DESC, neighbor_label ASC) AS vrn
+        |  FROM votes)
+        |SELECT query_id, anchor_label, voted_label, CAST(votes AS BIGINT) AS votes,
+        |  voted_label <> anchor_label AS mismatch
+        |FROM top WHERE vrn = 1""".stripMargin),
     // IVF probe-depth tuning table: recall@3 + scored-candidate volume per
     // nprobe rung (1/2/4), all rungs from ONE assignment + probe ranking
-    "ann_nprobe_sweep" -> ((s, d) => {
+    Entry("ann_nprobe_sweep", (s, d) => {
       val e = embeddings(s, d)
       Similarity.ivfNprobeSweep(e, e.where(col("vec_id") < 50), "vec_id",
         "embedding", k = 3, nlist = 16, nprobes = Seq(1, 2, 4))
-    }),
+    },
+      """WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS ve FROM embeddings),
+        |cent AS (SELECT vec_id AS cid, ve AS cv FROM v WHERE vec_id < 16),
+        |asg AS (SELECT vec_id, cid FROM (
+        |  SELECT v.vec_id, c.cid,
+        |    row_number() OVER (PARTITION BY v.vec_id ORDER BY list_cosine_similarity(v.ve, c.cv) DESC, c.cid ASC) AS rn
+        |  FROM v, cent c) t WHERE rn = 1),
+        |pr AS (SELECT query_id, cid, rn AS probe_rank FROM (
+        |  SELECT v.vec_id AS query_id, c.cid,
+        |    row_number() OVER (PARTITION BY v.vec_id ORDER BY list_cosine_similarity(v.ve, c.cv) DESC, c.cid ASC) AS rn
+        |  FROM v, cent c WHERE v.vec_id < 50) t WHERE rn <= 4),
+        |s AS (SELECT p.query_id, a.vec_id AS neighbor_id, p.probe_rank,
+        |  round(list_cosine_similarity(qv.ve, av.ve), 6) AS cos
+        |  FROM pr p JOIN asg a ON p.cid = a.cid AND a.vec_id <> p.query_id
+        |  JOIN v qv ON qv.vec_id = p.query_id JOIN v av ON av.vec_id = a.vec_id),
+        |ex AS (SELECT query_id, neighbor_id FROM (
+        |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
+        |    row_number() OVER (PARTITION BY q.vec_id ORDER BY round(list_cosine_similarity(q.ve, c.ve), 6) DESC, c.vec_id ASC) AS rnk
+        |  FROM v q JOIN v c ON c.vec_id <> q.vec_id WHERE q.vec_id < 50) t WHERE rnk <= 3),
+        |den AS (SELECT count(DISTINCT query_id) AS n_queries, count(*) AS n_exact FROM ex),
+        |rung(p) AS (VALUES (1), (2), (4)),
+        |cand AS (SELECT r.p, s.query_id, s.neighbor_id, s.cos FROM rung r JOIN s ON s.probe_rank <= r.p),
+        |topk AS (SELECT p, query_id, neighbor_id FROM (
+        |  SELECT p, query_id, neighbor_id,
+        |    row_number() OVER (PARTITION BY p, query_id ORDER BY cos DESC, neighbor_id ASC) AS rnk
+        |  FROM cand) t WHERE rnk <= 3),
+        |cagg AS (SELECT p, count(*) AS n_candidates FROM cand GROUP BY p),
+        |hagg AS (SELECT t.p, count(*) AS n_found,
+        |    CAST(coalesce(sum(CASE WHEN ex.query_id IS NOT NULL THEN 1 END), 0) AS BIGINT) AS n_hit
+        |  FROM topk t LEFT JOIN ex ON t.query_id = ex.query_id AND t.neighbor_id = ex.neighbor_id
+        |  GROUP BY t.p)
+        |SELECT CAST(c.p AS BIGINT) AS nprobe, den.n_queries, den.n_exact,
+        |  c.n_candidates, h.n_found, h.n_hit,
+        |  round(CASE WHEN den.n_exact = 0 THEN 1.0 ELSE CAST(h.n_hit AS DOUBLE) / den.n_exact END, 4) AS recall
+        |FROM cagg c JOIN hagg h ON c.p = h.p, den""".stripMargin),
     // embedding near-dup at scale: LSH bucket join over the WHOLE corpus
     // (no candidate-set bound), exact cosine verify
-    "embedding_lsh_pairs" -> ((s, d) =>
+    Entry("embedding_lsh_pairs", (s, d) =>
       Similarity.lshCosinePairs(embeddings(s, d), "vec_id", "embedding",
-        planes = 8, minCos = 0.3)),
+        planes = 8, minCos = 0.3),
+      {
+      def sign(p: Int) =
+        s"(CASE WHEN (strpos('0123456789abcdef', substr(md5('$p|'||i), 1, 1)) - 1) % 2 = 1 THEN 1.0 ELSE -1.0 END)"
+      def bit(p: Int) =
+        s"(CASE WHEN list_sum(list_transform(range(0, len(ve)), i -> ve[i+1] * ${sign(p)})) >= 0 THEN ${1L << p} ELSE 0 END)"
+      val bucket = (0 until 8).map(bit).mkString(" + ")
+      s"""WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS ve FROM embeddings),
+         |b0 AS (SELECT vec_id, ve, $bucket AS bucket FROM v),
+         |b AS (SELECT vec_id, ve, bucket FROM b0
+         |  QUALIFY count(*) OVER (PARTITION BY bucket) <= 65536)
+         |SELECT l.vec_id AS a, r.vec_id AS b,
+         |  round(list_cosine_similarity(l.ve, r.ve), 4) AS cos
+         |FROM b l JOIN b r ON l.bucket = r.bucket AND l.vec_id < r.vec_id
+         |WHERE round(list_cosine_similarity(l.ve, r.ve), 4) >= 0.3""".stripMargin
+    }),
     // streaming exact dedup through the REAL streaming engine (readStream →
     // dropDuplicatesWithinWatermark → memory sink) over a corpus with
     // planted duplicates (every 7th event re-appended); the fixture parquet
     // is staged via the shared fixture memo (untimed in the bench), the
     // stream run + memory-sink table are memoized per (session, dir) so
     // repeated harness invocations don't accumulate sinks
-    "events_stream_dedup" -> Memo.coldResult("events_stream_dedup", Memo.Stream) { (s, d) =>
+    Entry("events_stream_dedup", Memo.coldResult("events_stream_dedup", Memo.Stream) { (s, d) =>
       graft.streaming.EventStreams.runToMemory(s, streamFixtures(s, d, "events_stream_dedup"),
         df => graft.streaming.EventStreams.streamingDedup(df).select("event_id"))
-    },
+    }, "SELECT DISTINCT event_id FROM events"),
     // streaming NEAR-dup dedup: per-row minhash signatures through the
     // real streaming engine (readStream → dropDuplicatesWithinWatermark on
     // the signature tuple → memory sink) over the planted-dup corpus; the
     // output is the distinct signature set — arrival-order independent
-    "stream_sig_dedup" -> Memo.coldResult("stream_sig_dedup", Memo.Stream) { (s, d) =>
+    Entry("stream_sig_dedup", Memo.coldResult("stream_sig_dedup", Memo.Stream) { (s, d) =>
       val tmp = streamFixtures(s, d, "stream_sig_dedup")
       val schema = org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField("ts",
@@ -647,11 +1351,15 @@ object PipelineQueries {
         df => graft.streaming.EventStreams.streamingSignatureDedup(df),
         schema = schema)
     },
+      // distinct minhash signatures of the planted-dup corpus — the
+      // streaming dedup's output is this set regardless of arrival order
+      s"""$ngramInterCtes
+         |SELECT DISTINCT h0, h1, h2, h3 FROM sig""".stripMargin),
     // streaming multimodal ingest: the BATCH image decoder runs unchanged
     // on a readStream of asset files (filter + typed mapPartitions are
     // streaming-legal narrow ops), the continuous-media-ingest shape —
     // per micro-batch, per partition, one decoder; no state, no shuffle
-    "stream_asset_features" -> Memo.coldResult("stream_asset_features", Memo.Stream) { (s, d) =>
+    Entry("stream_asset_features", Memo.coldResult("stream_asset_features", Memo.Stream) { (s, d) =>
       val tmp = streamFixtures(s, d, "stream_asset_features")
       graft.streaming.EventStreams.runToMemory(s, tmp,
         df => pipeline.Multimodal.imageFeatures(df).toDF()
@@ -659,11 +1367,38 @@ object PipelineQueries {
           .withColumn("height", col("height").cast("long")),
         schema = pipeline.Multimodal.assetWriteSchema)
     },
+      // mirrors imageFeatures run THROUGH the streaming engine over 60
+      // assets — decode is deterministic per payload, so stream == batch
+      // and the oracle is the same pixel-formula replay
+      """WITH a AS (SELECT range AS id,
+        |    CAST(4 + range % 5 AS INTEGER) AS w, CAST(4 + range % 3 AS INTEGER) AS h
+        |  FROM range(0, 60)),
+        |px AS (SELECT id, w, h, xs.x, ys.y FROM a,
+        |  (SELECT range AS x FROM range(0, 8)) xs,
+        |  (SELECT range AS y FROM range(0, 6)) ys
+        |  WHERE xs.x < w AND ys.y < h),
+        |c AS (SELECT id, w, h,
+        |    (id * 31 + x * 7 + y * 13) % 256 AS r,
+        |    (id * 17 + x * 3 + y * 5) % 256 AS g,
+        |    (id * 11 + x * 19 + y * 23) % 256 AS b
+        |  FROM px),
+        |l AS (SELECT id, w, h, r, g, b,
+        |    (r * 299 + g * 587 + b * 114) // 1000 AS lum FROM c)
+        |SELECT id AS asset_id, CAST(w AS BIGINT) AS width, CAST(h AS BIGINT) AS height,
+        |  count(*) AS n_px,
+        |  CAST(sum(r) AS BIGINT) AS sum_r, CAST(sum(g) AS BIGINT) AS sum_g,
+        |  CAST(sum(b) AS BIGINT) AS sum_b, CAST(sum(lum) AS BIGINT) AS sum_luma,
+        |  CAST(sum(CASE WHEN lum // 64 = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_l0,
+        |  CAST(sum(CASE WHEN lum // 64 = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_l1,
+        |  CAST(sum(CASE WHEN lum // 64 = 2 THEN 1 ELSE 0 END) AS BIGINT) AS n_l2,
+        |  CAST(sum(CASE WHEN lum // 64 = 3 THEN 1 ELSE 0 END) AS BIGINT) AS n_l3,
+        |  round(CAST(sum(lum) AS DOUBLE) / count(*), 6) AS mean_luma
+        |FROM l GROUP BY 1, 2, 3""".stripMargin),
     // streaming model serving: fit NB on the labeled batch corpus, score a
     // readStream of the same documents per micro-batch (foreachBatch replays
     // the oracle-verified batch scorer; whole-file batches keep per-doc
     // scoring single-shot), append scored rows to a parquet sink
-    "stream_nb_classify" -> Memo.coldResult("stream_nb_classify", Memo.Stream) { (s, d) =>
+    Entry("stream_nb_classify", Memo.coldResult("stream_nb_classify", Memo.Stream) { (s, d) =>
       val (wm, lt) = nbServeModel(s, d)
       val src = streamFixtures(s, d, "stream_nb_classify")
       // the parquet SINK is part of the serving pipeline (fresh per run —
@@ -673,17 +1408,38 @@ object PipelineQueries {
       graft.streaming.EventStreams.streamingNbClassify(s, src, out, wm, lt,
         "doc_id", "text", docs(s, d).schema, maxFilesPerTrigger = 3)
     },
+      // the streaming serve appends the SAME scored rows the batch argmax
+      // produces (micro-batch-local scoring, whole-file batches)
+      nbClassifySql),
     // BPE-style merge-rule learning: 4 rounds of top-pair promotion with
     // literal two-pass rewrites; later rounds merge against merged tokens
-    "curate_bpe_merges" -> ((s, d) =>
-      pipeline.Tokenizer.bpeMerges(docs(s, d), "doc_id", "text", rounds = BpeRounds)),
+    Entry("curate_bpe_merges", (s, d) =>
+      pipeline.Tokenizer.bpeMerges(docs(s, d), "doc_id", "text", rounds = BpeRounds),
+      // mirrors Tokenizer.bpeMerges round for round: same pair counting
+      // (shinglesExpr(2)), same tie-break, same two-pass literal rewrite
+      {
+      val union = (0 until BpeRounds).map(r => s"SELECT * FROM m$r").mkString(" UNION ALL ")
+      s"""WITH ${bpeCtes(BpeRounds)}
+         |SELECT CAST(merge_round AS BIGINT) AS merge_round,
+         |  split_part(pair, ' ', 1) AS merge_left,
+         |  split_part(pair, ' ', 2) AS merge_right,
+         |  CAST(cnt AS BIGINT) AS pair_count
+         |FROM ($union)""".stripMargin
+    }),
     // the compression the learned merges buy, per document
-    "curate_bpe_tokenize" -> ((s, d) =>
-      pipeline.Tokenizer.bpeTokenCounts(docs(s, d), "doc_id", "text", rounds = BpeRounds)),
+    Entry("curate_bpe_tokenize", (s, d) =>
+      pipeline.Tokenizer.bpeTokenCounts(docs(s, d), "doc_id", "text", rounds = BpeRounds),
+      // the final rewritten text t{R} carries the merged tokens; raw counts
+      // come from t0 (both space-padded)
+      s"""WITH ${bpeCtes(BpeRounds)}
+         |SELECT t0.doc_id,
+         |  len(list_filter(string_split(trim(t0.t), ' '), x -> x <> '')) AS n_tokens_raw,
+         |  len(list_filter(string_split(trim(tf.t), ' '), x -> x <> '')) AS n_tokens_merged
+         |FROM t0 JOIN t$BpeRounds tf ON t0.doc_id = tf.doc_id""".stripMargin),
     // incremental ingest dedup: the new batch (tail-marked docs, exact
     // copies of corpus docs, and a planted within-batch duplicate slice)
     // deduped against the stored corpus hash index + itself
-    "dedup_incremental" -> ((s, d) => {
+    Entry("dedup_incremental", (s, d) => {
       val corpusHashes = docs(s, d).select(md5(col("text")).as("hash"))
       val base = dedupCorpus(s, d).where(col("doc_id") >= 1000000L)
       val batch = base.unionByName(
@@ -691,31 +1447,101 @@ object PipelineQueries {
           .select((col("doc_id") + 3000000L).as("doc_id"), col("text")))
       Dedup.dedupIncrement(corpusHashes, batch, "doc_id", "text")
         .select("doc_id")
-    }),
+    },
+      // batch = corpus rows >= 1M plus a +3M within-batch dup slice;
+      // survivors miss the corpus hash index and win their batch group
+      s"""$corpusCte,
+         |ch AS (SELECT DISTINCT md5(text) AS h FROM documents),
+         |base AS (SELECT doc_id, text FROM corpus WHERE doc_id >= 1000000),
+         |batch AS (SELECT doc_id, text FROM base
+         |  UNION ALL SELECT doc_id + 3000000, text FROM base WHERE doc_id % 7 = 0),
+         |wb AS (SELECT md5(text) AS h, min(doc_id) AS doc_id FROM batch GROUP BY 1)
+         |SELECT doc_id FROM wb WHERE h NOT IN (SELECT h FROM ch)""".stripMargin),
     // dup-cluster size histogram over the near-dup pair graph: how much
     // mass sits in how-big clusters (the dedup-savings profile)
-    "curate_cluster_histogram" -> ((s, d) =>
+    Entry("curate_cluster_histogram", (s, d) =>
       neardupLabels(s, d)
         .groupBy("cluster").agg(count(lit(1)).as("__sz"))
         .groupBy(col("__sz").as("cluster_size"))
-        .agg(count(lit(1)).as("n_clusters"))),
+        .agg(count(lit(1)).as("n_clusters")),
+      // cluster sizes from the same recursive min-reachable labeling as
+      // curate_dup_clusters_df, rolled into a size histogram
+      s"""${ngramInterCtes.replaceFirst("WITH ", "WITH RECURSIVE ")},
+         |prs AS MATERIALIZED (SELECT a, b
+         |  FROM inter JOIN sizes sa ON sa.doc_id = a JOIN sizes sb ON sb.doc_id = b
+         |  WHERE round(CAST(i AS DOUBLE) / CAST(sa.n_sh + sb.n_sh - i AS DOUBLE), 4) >= 0.5),
+         |und AS (SELECT a, b FROM prs UNION SELECT b, a FROM prs),
+         |reach AS (SELECT a, b FROM und
+         |  UNION SELECT r.a, u.b FROM reach r JOIN und u ON r.b = u.a),
+         |lbl AS (SELECT a AS doc_id, least(a, min(b)) AS cluster FROM reach GROUP BY a),
+         |sz AS (SELECT cluster, count(*) AS s FROM lbl GROUP BY cluster)
+         |SELECT s AS cluster_size, count(*) AS n_clusters FROM sz GROUP BY s""".stripMargin),
     // LSH banding recall measured against exact all-pairs ground truth on
     // a ~10% hash sample (sampled on the BASE doc identity so planted
     // dup/near-dup pairs survive sampling together)
-    "dedup_recall_report" -> ((s, d) => {
+    Entry("dedup_recall_report", (s, d) => {
       val sample = dedupCorpus(s, d).where(
         substring(md5(concat(lit("rs|"), (col("doc_id") % 1000000).cast("string"))), 1, 2)
           < lit("1a"))
       Dedup.lshRecallReport(sample, "doc_id", "text", n = 3, k = 4, minSim = 0.5)
-    }),
+    },
+      // exact arm: ALL shared-shingle pairs verified; lsh arm: the banded
+      // candidates verified (the standard pipeline CTEs); recall from the
+      // two pair sets — the via-minhash arm is a verified subset by
+      // construction, measured here rather than assumed
+      s"""$corpusCte,
+         |samp AS (SELECT doc_id, text FROM corpus
+         |  WHERE substr(md5('rs|' || CAST(doc_id % 1000000 AS VARCHAR)), 1, 2) < '1a'),
+         |${ngramPipelineCtes("samp")},
+         |lshp AS (SELECT a, b
+         |  FROM inter JOIN sizes sa ON sa.doc_id = a JOIN sizes sb ON sb.doc_id = b
+         |  WHERE round(CAST(i AS DOUBLE) / CAST(sa.n_sh + sb.n_sh - i AS DOUBLE), 4) >= 0.5),
+         |candE AS (SELECT DISTINCT la.doc_id AS a, rb.doc_id AS b
+         |  FROM ex la JOIN ex rb ON la.shingle = rb.shingle AND la.doc_id < rb.doc_id),
+         |interE AS (SELECT a, b, count(*) AS i
+         |  FROM candE JOIN ex la ON la.doc_id = a JOIN ex rb ON rb.doc_id = b AND rb.shingle = la.shingle
+         |  GROUP BY 1, 2),
+         |exactp AS (SELECT a, b
+         |  FROM interE JOIN sizes sa ON sa.doc_id = a JOIN sizes sb ON sb.doc_id = b
+         |  WHERE round(CAST(i AS DOUBLE) / CAST(sa.n_sh + sb.n_sh - i AS DOUBLE), 4) >= 0.5),
+         |cmn AS (SELECT a, b FROM lshp INTERSECT SELECT a, b FROM exactp),
+         |cnts AS (SELECT
+         |  (SELECT count(*) FROM exactp) AS n_exact,
+         |  (SELECT count(*) FROM lshp) AS n_lsh,
+         |  (SELECT count(*) FROM cmn) AS n_common)
+         |SELECT n_exact, n_lsh, n_common,
+         |  round(CASE WHEN n_exact = 0 THEN 1.0
+         |    ELSE CAST(n_common AS DOUBLE) / n_exact END, 4) AS recall
+         |FROM cnts""".stripMargin),
     // count-min frequency sketch vs exact counts per event type: bounded
     // depth×width counter state, md5-bucket hashing an oracle can replay
-    "agg_countmin" -> ((s, d) =>
+    Entry("agg_countmin", (s, d) =>
       pipeline.Sketches.countMinReport(
-        TpchGraph.table(s, d, "events").select(col("event_type")), "event_type")),
+        TpchGraph.table(s, d, "events").select(col("event_type")), "event_type"),
+      // mirrors Sketches.countMinReport at depth 3 / width 64: the same
+      // md5-prefix bucket hashing, counter build, and min-probe
+      {
+      val bucketSql = (i: Int) =>
+        s"CAST(CAST(concat('0x', substr(md5('$i|' || key), 1, 8)) AS BIGINT) % 64 AS BIGINT)"
+      val counterRows = (0 until 3).map(i =>
+        s"SELECT $i AS hrow, ${bucketSql(i)} AS bucket, count(*) AS cnt FROM k GROUP BY 2")
+        .mkString("\n  UNION ALL ")
+      val probeRows = (0 until 3).map(i =>
+        s"SELECT key, $i AS hrow, ${bucketSql(i)} AS bucket FROM dk")
+        .mkString("\n  UNION ALL ")
+      s"""WITH k AS (SELECT CAST(event_type AS VARCHAR) AS key FROM events),
+         |b AS ($counterRows),
+         |dk AS (SELECT DISTINCT key FROM k),
+         |rb AS ($probeRows),
+         |est AS (SELECT key, min(cnt) AS est_count FROM rb JOIN b USING (hrow, bucket) GROUP BY key),
+         |ex AS (SELECT key, count(*) AS exact_count FROM k GROUP BY key)
+         |SELECT e.key, CAST(e.est_count AS BIGINT) AS est_count,
+         |  CAST(x.exact_count AS BIGINT) AS exact_count
+         |FROM est e JOIN ex x USING (key)""".stripMargin
+    }),
     // the chained production pipeline as one report: raw → exact-dedup →
     // near-dedup → decontaminate, one surviving-count row per stage
-    "curate_funnel" -> ((s, d) =>
+    Entry("curate_funnel", (s, d) =>
       // shares the memoized LSH+verify+cc labels with the dup-cluster
       // queries (raw-corpus labels are drop-equivalent on exact survivors
       // — see curationFunnel's scaladoc); memo-backed, so the bench busts
@@ -725,14 +1551,42 @@ object PipelineQueries {
       // sf0.1), so measurement keeps the memo form.
       pipeline.Curation.curationFunnel(dedupCorpus(s, d),
         docs(s, d).where(col("doc_id") % 10 === 0), "doc_id", "text",
-        dupLabels = Some(neardupLabels(s, d)))),
+        dupLabels = Some(neardupLabels(s, d))),
+      // the funnel restricts each stage's pairwise work to the previous
+      // stage's survivors — valid because candidates/verification are
+      // pairwise-deterministic on per-document text
+      s"""${ngramInterCtes.replaceFirst("WITH ", "WITH RECURSIVE ")},
+         |surv1 AS (SELECT doc_id FROM (
+         |  SELECT doc_id, min(doc_id) OVER (PARTITION BY md5(text)) AS m FROM corpus)
+         |  WHERE doc_id = m),
+         |prs AS MATERIALIZED (SELECT a, b
+         |  FROM inter JOIN sizes sa ON sa.doc_id = a JOIN sizes sb ON sb.doc_id = b
+         |  WHERE round(CAST(i AS DOUBLE) / CAST(sa.n_sh + sb.n_sh - i AS DOUBLE), 4) >= 0.5
+         |    AND a IN (SELECT doc_id FROM surv1) AND b IN (SELECT doc_id FROM surv1)),
+         |und AS (SELECT a, b FROM prs UNION SELECT b, a FROM prs),
+         |reach AS (SELECT a, b FROM und
+         |  UNION SELECT r.a, u.b FROM reach r JOIN und u ON r.b = u.a),
+         |dropd AS MATERIALIZED (SELECT a FROM reach GROUP BY a HAVING min(b) < a),
+         |surv2 AS (SELECT doc_id FROM surv1 WHERE doc_id NOT IN (SELECT a FROM dropd)),
+         |ct AS (SELECT doc_id, string_split($normSql, ' ') AS w FROM corpus),
+         |cg AS (SELECT DISTINCT doc_id, g FROM
+         |  (SELECT doc_id, unnest(${shinglesExpr(5)}) AS g FROM ct WHERE len(w) >= 5)),
+         |bt AS (SELECT doc_id, string_split($normSql, ' ') AS w FROM documents WHERE doc_id % 10 = 0),
+         |bg AS (SELECT DISTINCT g FROM
+         |  (SELECT unnest(${shinglesExpr(5)}) AS g FROM bt WHERE len(w) >= 5)),
+         |bad AS (SELECT DISTINCT cg.doc_id FROM cg JOIN bg USING (g)),
+         |surv3 AS (SELECT doc_id FROM surv2 WHERE doc_id NOT IN (SELECT doc_id FROM bad))
+         |SELECT 'raw' AS stage, count(*) AS n_docs FROM corpus
+         |UNION ALL SELECT 'exact_dedup', count(*) FROM surv1
+         |UNION ALL SELECT 'near_dedup', count(*) FROM surv2
+         |UNION ALL SELECT 'decontaminated', count(*) FROM surv3""".stripMargin),
     // funnel variant with the rare-shingle containment RECALL ARM on:
     // the corpus additionally plants engulfed-prefix docs (+4M = 8-token
     // prefix of every 5th doc — containment 1.0, Jaccard ~0, invisible to
     // LSH banding), and the production pipeline drops them, not just
     // reports them. Labels are computed over this corpus (the shared memo
     // covers a different document set).
-    "curate_funnel_rare" -> ((s, d) => {
+    Entry("curate_funnel_rare", (s, d) => {
       val base = docs(s, d).select("doc_id", "text")
       val eng = dedupCorpus(s, d).unionByName(
         base.where(col("doc_id") % 5 === 0)
@@ -741,42 +1595,126 @@ object PipelineQueries {
       pipeline.Curation.curationFunnel(eng,
         docs(s, d).where(col("doc_id") % 10 === 0), "doc_id", "text",
         rareShingleArm = true)
-    }),
+    },
+      // the rare-arm funnel over the engulfed-prefix corpus: the funnel
+      // replay plus the dedup_containment_rare replay restricted to
+      // near-dup survivors, containment clusters closed transitively and
+      // dropped to the min id
+      s"""${corpusCte.replaceFirst("WITH ", "WITH RECURSIVE ")},
+         |eng AS (SELECT doc_id, text FROM corpus
+         |  UNION ALL SELECT doc_id + 4000000,
+         |    array_to_string(list_slice(string_split($normSql, ' '), 1, 8), ' ')
+         |  FROM documents WHERE doc_id % 5 = 0),
+         |${ngramPipelineCtes("eng")},
+         |surv1 AS (SELECT doc_id FROM (
+         |  SELECT doc_id, min(doc_id) OVER (PARTITION BY md5(text)) AS m FROM eng)
+         |  WHERE doc_id = m),
+         |prs AS MATERIALIZED (SELECT a, b
+         |  FROM inter JOIN sizes sa ON sa.doc_id = a JOIN sizes sb ON sb.doc_id = b
+         |  WHERE round(CAST(i AS DOUBLE) / CAST(sa.n_sh + sb.n_sh - i AS DOUBLE), 4) >= 0.5
+         |    AND a IN (SELECT doc_id FROM surv1) AND b IN (SELECT doc_id FROM surv1)),
+         |und AS (SELECT a, b FROM prs UNION SELECT b, a FROM prs),
+         |reach AS (SELECT a, b FROM und
+         |  UNION SELECT r.a, u.b FROM reach r JOIN und u ON r.b = u.a),
+         |dropd AS MATERIALIZED (SELECT a FROM reach GROUP BY a HAVING min(b) < a),
+         |surv2 AS (SELECT doc_id FROM surv1 WHERE doc_id NOT IN (SELECT a FROM dropd)),
+         |cex AS MATERIALIZED (SELECT doc_id, unnest(s) AS shingle FROM sh
+         |  WHERE doc_id IN (SELECT doc_id FROM surv2)),
+         |rare AS (SELECT shingle FROM (SELECT shingle, count(*) AS c FROM cex GROUP BY 1)
+         |  WHERE c BETWEEN 2 AND 8),
+         |rex AS MATERIALIZED (SELECT cex.doc_id, cex.shingle FROM cex JOIN rare USING (shingle)),
+         |ccand AS (SELECT DISTINCT l.doc_id AS a, r.doc_id AS b
+         |  FROM rex l JOIN rex r ON l.shingle = r.shingle AND l.doc_id < r.doc_id),
+         |cinter AS (SELECT a, b, count(*) AS i
+         |  FROM ccand JOIN cex la ON la.doc_id = a JOIN cex rb ON rb.doc_id = b AND rb.shingle = la.shingle
+         |  GROUP BY 1, 2),
+         |cpr AS (SELECT a, b FROM cinter JOIN sizes sa ON sa.doc_id = a JOIN sizes sb ON sb.doc_id = b
+         |  WHERE round(CAST(i AS DOUBLE) / CAST(least(sa.n_sh, sb.n_sh) AS DOUBLE), 4) >= 0.9),
+         |cund AS (SELECT a, b FROM cpr UNION SELECT b, a FROM cpr),
+         |creach AS (SELECT a, b FROM cund
+         |  UNION SELECT r.a, u.b FROM creach r JOIN cund u ON r.b = u.a),
+         |cdropd AS (SELECT a FROM creach GROUP BY a HAVING min(b) < a),
+         |surv2b AS (SELECT doc_id FROM surv2 WHERE doc_id NOT IN (SELECT a FROM cdropd)),
+         |ct AS (SELECT doc_id, string_split($normSql, ' ') AS w FROM eng),
+         |cg AS (SELECT DISTINCT doc_id, g FROM
+         |  (SELECT doc_id, unnest(${shinglesExpr(5)}) AS g FROM ct WHERE len(w) >= 5)),
+         |bt AS (SELECT doc_id, string_split($normSql, ' ') AS w FROM documents WHERE doc_id % 10 = 0),
+         |bg AS (SELECT DISTINCT g FROM
+         |  (SELECT unnest(${shinglesExpr(5)}) AS g FROM bt WHERE len(w) >= 5)),
+         |bad AS (SELECT DISTINCT cg.doc_id FROM cg JOIN bg USING (g)),
+         |surv3 AS (SELECT doc_id FROM surv2b WHERE doc_id NOT IN (SELECT doc_id FROM bad))
+         |SELECT 'raw' AS stage, count(*) AS n_docs FROM eng
+         |UNION ALL SELECT 'exact_dedup', count(*) FROM surv1
+         |UNION ALL SELECT 'near_dedup', count(*) FROM surv2
+         |UNION ALL SELECT 'contain_dedup', count(*) FROM surv2b
+         |UNION ALL SELECT 'decontaminated', count(*) FROM surv3""".stripMargin),
     // curation: survivor selection over the planted-duplicate corpus
-    "curate_dedup_corpus" -> ((s, d) =>
+    Entry("curate_dedup_corpus", (s, d) =>
       pipeline.Curation.dedupExactKeepFirst(dedupCorpus(s, d), "doc_id", "text")
-        .select("doc_id")),
+        .select("doc_id"),
+      s"""$corpusCte
+         |SELECT doc_id FROM corpus
+         |WHERE doc_id = (SELECT min(c2.doc_id) FROM corpus c2 WHERE md5(c2.text) = md5(corpus.text))""".stripMargin,
+      // curate_funnel's exact-dedup stage over the same corpus
+      SiblingOf("curate_funnel")),
     // curation: END-TO-END near-dup dedup — LSH proposes, exact Jaccard
     // verifies, cc clusters, min-id survivor kept per cluster
-    "curate_neardup_corpus" -> ((s, d) =>
+    Entry("curate_neardup_corpus", (s, d) =>
       pipeline.Curation.dedupNearKeepFirst(dedupCorpus(s, d), "doc_id", "text",
           n = 3, k = 4, minSim = 0.5)
-        .select("doc_id")),
+        .select("doc_id"),
+      // replays the same minhash-then-verify pairs, then takes the
+      // transitive closure (recursive CTE = connected components on the
+      // tiny verified-pair graph) and keeps only cluster-minimum ids
+      s"""${ngramInterCtes.replaceFirst("WITH ", "WITH RECURSIVE ")},
+         |prs AS MATERIALIZED (SELECT a, b
+         |  FROM inter JOIN sizes sa ON sa.doc_id = a JOIN sizes sb ON sb.doc_id = b
+         |  WHERE round(CAST(i AS DOUBLE) / CAST(sa.n_sh + sb.n_sh - i AS DOUBLE), 4) >= 0.5),
+         |und AS (SELECT a, b FROM prs UNION SELECT b, a FROM prs),
+         |reach AS (SELECT a, b FROM und
+         |  UNION SELECT r.a, u.b FROM reach r JOIN und u ON r.b = u.a),
+         |dropd AS MATERIALIZED (SELECT a FROM reach GROUP BY a HAVING min(b) < a)
+         |SELECT doc_id FROM corpus WHERE doc_id NOT IN (SELECT a FROM dropd)""".stripMargin),
     // curation: connected components over exact-dup STAR edges —
     // (min_id, member) per content group, O(n) edges per group; the clique
     // expansion would be O(n²) and melt down on boilerplate mega-groups
-    "curate_dup_clusters" -> ((s, d) =>
+    Entry("curate_dup_clusters", (s, d) =>
       pipeline.ConnectedComponents.labels(
           pipeline.Curation.exactDupStarPairs(dedupCorpus(s, d), "doc_id", "text"))
-        .select(col("id").as("doc_id"), col("cluster"))),
+        .select(col("id").as("doc_id"), col("cluster")),
+      s"""$corpusCte,
+         |grouped AS (SELECT doc_id, min(doc_id) OVER (PARTITION BY md5(text)) AS cluster,
+         |  count(*) OVER (PARTITION BY md5(text)) AS n FROM corpus)
+         |SELECT doc_id, cluster FROM grouped WHERE n > 1""".stripMargin),
     // the same connected components (min-label propagation + pointer
     // jumping) over the NEAR-dup verified
     // pair graph; near-dup pairs chain transitively (A~B~C without A~C),
     // so this exercises multi-round convergence, not just depth-1 stars
-    "curate_dup_clusters_df" -> ((s, d) =>
+    Entry("curate_dup_clusters_df", (s, d) =>
       neardupLabels(s, d)
-        .select(col("id").as("doc_id"), col("cluster"))),
+        .select(col("id").as("doc_id"), col("cluster")),
+      // same pair graph as curate_neardup_corpus; cluster = min reachable
+      // node (including self) per node in some pair
+      s"""${ngramInterCtes.replaceFirst("WITH ", "WITH RECURSIVE ")},
+         |prs AS MATERIALIZED (SELECT a, b
+         |  FROM inter JOIN sizes sa ON sa.doc_id = a JOIN sizes sb ON sb.doc_id = b
+         |  WHERE round(CAST(i AS DOUBLE) / CAST(sa.n_sh + sb.n_sh - i AS DOUBLE), 4) >= 0.5),
+         |und AS (SELECT a, b FROM prs UNION SELECT b, a FROM prs),
+         |reach AS (SELECT a, b FROM und
+         |  UNION SELECT r.a, u.b FROM reach r JOIN und u ON r.b = u.a)
+         |SELECT a AS doc_id, least(a, min(b)) AS cluster FROM reach GROUP BY a""".stripMargin),
     // triangle counting over the exact-dup pair graph (both names, one body)
-    "graphx_triangles" -> cliqueTriangles,
-    "graph_triangles_df" -> cliqueTriangles,
+    Entry("graphx_triangles", cliqueTriangles, cliqueTrianglesSql),
+    Entry("graph_triangles_df", cliqueTriangles, cliqueTrianglesSql),
     // curation: deterministic md5-bucket sampling (~16%)
-    "curate_sample" -> ((s, d) =>
+    Entry("curate_sample", (s, d) =>
       pipeline.Curation.sampleByHash(docs(s, d), "doc_id", keepOf256 = 41)
-        .select("doc_id")),
+        .select("doc_id"),
+      "SELECT doc_id FROM documents WHERE substr(md5('s|'||doc_id), 1, 2) < '29'"),
     // the pipeline SINK: corpus written partitioned by (split, lang) and
     // the manifest aggregated from the read-back directory tree — counts
     // prove partition values survive the layout round-trip
-    "curate_export_manifest" -> Memo.coldResult("curate_export_manifest", Memo.Shared) { (s, d) =>
+    Entry("curate_export_manifest", Memo.coldResult("curate_export_manifest", Memo.Shared) { (s, d) =>
       val labeled = pipeline.Curation.splitLabel(docs(s, d), "doc_id")
         .withColumn("lang_guess", TextAnalysis.langId(col("text")))
         .select("doc_id", "split", "lang_guess")
@@ -792,11 +1730,21 @@ object PipelineQueries {
         s"graft-export-$dirKey-${System.getProperty("user.name", "u")}-${ProcessHandle.current.pid}").toString
       checkpoint(pipeline.Curation.exportPartitioned(labeled, tmp, Seq("split", "lang_guess")))
     },
+      // manifest = per-(split, lang) counts; split replays the md5-bucket
+      // rule of curate_split, lang the shared lang-id scorer
+      s"""WITH tl AS ($textLangidSql),
+         |sp AS (SELECT doc_id, CASE
+         |  WHEN substr(md5('split|'||doc_id), 1, 2) < '0d' THEN 'test'
+         |  WHEN substr(md5('split|'||doc_id), 1, 2) < '1a' THEN 'val'
+         |  ELSE 'train' END AS split
+         |FROM documents)
+         |SELECT sp.split, tl.lang_guess, count(*) AS n_docs
+         |FROM sp JOIN tl USING (doc_id) GROUP BY 1, 2""".stripMargin),
     // JSONL sink + source round-trip: write the corpus as JSON Lines,
     // read it back under the original schema, aggregate the read-back —
     // counts/sums prove the values survived the text format (the
     // export_manifest discipline for the LLM interchange format)
-    "io_jsonl_roundtrip" -> ((s, d) => {
+    Entry("io_jsonl_roundtrip", (s, d) => {
       val dirKey = java.security.MessageDigest.getInstance("MD5")
         .digest(d.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(16)
       val tmp = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
@@ -804,22 +1752,36 @@ object PipelineQueries {
       pipeline.Curation.jsonlRoundTrip(docs(s, d), tmp)
         .groupBy("lang")
         .agg(count(lit(1)).as("n_docs"), sum("n_chars").as("total_chars"))
-    }),
+    },
+      // aggregate over the raw table: equality proves the JSONL write +
+      // schema-bound read-back preserved every row and value
+      """SELECT lang, count(*) AS n_docs, CAST(sum(n_chars) AS BIGINT) AS total_chars
+        |FROM documents GROUP BY lang""".stripMargin),
     // budget-constrained selection: per language, the best documents by
     // quality until 3000 words — the mix-building step between scoring
     // and shard export (two-phase exact greedy, no corpus-wide
     // low-cardinality window)
-    "curate_token_budget" -> ((s, d) => {
+    Entry("curate_token_budget", (s, d) => {
       val q = TextAnalysis.qualityTable(docs(s, d), "doc_id", "text")
         .select(col("doc_id"), col("n_words"), col("quality"))
         .join(docs(s, d).select("doc_id", "lang"), Seq("doc_id"))
       pipeline.Curation.tokenBudgetSelect(q, "doc_id", "n_words", "quality",
         "lang", budget = 3000)
-    }),
+    },
+      // the NAIVE greedy replay — one window per language ordered by
+      // (quality desc, id); the Spark side's two-phase bucket plan must
+      // select the identical document set
+      s"""WITH tq AS ($textQualitySql),
+         |t AS (SELECT tq.doc_id, d.lang, tq.n_words AS tk, tq.quality AS q
+         |  FROM tq JOIN documents d USING (doc_id)),
+         |r AS (SELECT *, sum(tk) OVER (PARTITION BY lang ORDER BY q DESC, doc_id ASC
+         |    ROWS UNBOUNDED PRECEDING) AS cum FROM t)
+         |SELECT lang, doc_id, CAST(tk AS BIGINT) AS n_words
+         |FROM r WHERE cum <= 3000""".stripMargin),
     // ORC sink + source round-trip: the second leg of the format matrix
     // (columnar interchange), same aggregate-equality discipline keyed by
     // source instead of lang
-    "io_orc_roundtrip" -> ((s, d) => {
+    Entry("io_orc_roundtrip", (s, d) => {
       val dirKey = java.security.MessageDigest.getInstance("MD5")
         .digest(d.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(16)
       val tmp = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
@@ -827,10 +1789,12 @@ object PipelineQueries {
       pipeline.Curation.formatRoundTrip(docs(s, d), tmp, "orc")
         .groupBy("source")
         .agg(count(lit(1)).as("n_docs"), sum("n_chars").as("total_chars"))
-    }),
+    },
+      """SELECT source, count(*) AS n_docs, CAST(sum(n_chars) AS BIGINT) AS total_chars
+        |FROM documents GROUP BY source""".stripMargin),
     // CSV leg of the format matrix (delimited text with header): same
     // write-then-schema-bound-read discipline, keyed by (lang, source)
-    "io_csv_roundtrip" -> ((s, d) => {
+    Entry("io_csv_roundtrip", (s, d) => {
       val dirKey = java.security.MessageDigest.getInstance("MD5")
         .digest(d.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(16)
       val tmp = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
@@ -838,16 +1802,38 @@ object PipelineQueries {
       pipeline.Curation.formatRoundTrip(docs(s, d), tmp, "csv")
         .groupBy("lang", "source")
         .agg(count(lit(1)).as("n_docs"), sum("n_chars").as("total_chars"))
-    }),
+    },
+      """SELECT lang, source, count(*) AS n_docs, CAST(sum(n_chars) AS BIGINT) AS total_chars
+        |FROM documents GROUP BY lang, source""".stripMargin),
     // streaming label drift: per-window counts as a watermarked APPEND
     // aggregation through the real streaming engine (closed windows emit
     // once), drift reported over the emitted frame; memoized like the
     // other stream fixtures
-    "stream_label_drift" -> Memo.coldResult("stream_label_drift", Memo.Stream) { (s, d) =>
+    Entry("stream_label_drift", Memo.coldResult("stream_label_drift", Memo.Stream) { (s, d) =>
       checkpoint(graft.streaming.EventStreams.streamingLabelDrift(s, streamFixtures(s, d, "stream_label_drift"))
         .select(col("window_start").cast("long").as("w_start"),
           col("n_events"), col("drift_micro")))
     },
+      // the batch drift replay restricted to WATERMARK-CLOSED windows:
+      // append mode emits a window once the watermark (max event time −
+      // 10 min) passes its end, so the emitted set is exactly
+      // end <= max_ts − 600 s — deterministic from the data
+      """WITH e AS (SELECT event_type, ((epoch_ns(ts) // 1000000000) // 3600) * 3600 AS w FROM events),
+        |per AS (SELECT w, event_type AS t, count(*) AS c FROM e GROUP BY 1, 2),
+        |tot AS (SELECT w, sum(c) AS n FROM per GROUP BY 1),
+        |sh AS (SELECT per.w, per.t, (per.c * 1000000) // tot.n AS s, tot.n AS n
+        |  FROM per JOIN tot USING (w)),
+        |pv AS (SELECT w + 3600 AS w, t, s AS sp FROM sh),
+        |j AS (SELECT coalesce(sh.w, pv.w) AS w, coalesce(sh.s, 0) AS s,
+        |    coalesce(pv.sp, 0) AS sp, sh.n AS n
+        |  FROM sh FULL JOIN pv ON sh.w = pv.w AND sh.t = pv.t),
+        |d AS (SELECT w, max(n) AS n, sum(abs(s - sp)) AS drift FROM j GROUP BY w),
+        |mx AS (SELECT max(epoch_ns(ts) // 1000000000) AS m FROM events)
+        |SELECT CAST(d.w AS BIGINT) AS w_start, CAST(d.n AS BIGINT) AS n_events,
+        |  CAST(d.drift AS BIGINT) AS drift_micro
+        |FROM d JOIN (SELECT DISTINCT w + 3600 AS w FROM tot) p ON p.w = d.w
+        |CROSS JOIN mx
+        |WHERE d.n IS NOT NULL AND d.w + 3600 <= mx.m - 600""".stripMargin),
     // streaming sessionization: the flatMapGroupsWithState session
     // assembler through the REAL streaming engine (multi-batch file
     // source, maxFilesPerTrigger=2 over the user-partitioned fixture)
@@ -856,7 +1842,7 @@ object PipelineQueries {
     // users' state flushes deterministically with the data and the
     // end-of-run output is a pure function of the input (the oracle
     // replays both emission rules)
-    "stream_sessionize" -> Memo.coldResult("stream_sessionize", Memo.Stream) { (s, d) =>
+    Entry("stream_sessionize", Memo.coldResult("stream_sessionize", Memo.Stream) { (s, d) =>
       checkpoint(graft.streaming.EventStreams.runToMemory(s, streamFixtures(s, d, "stream_sessionize"),
           df => graft.streaming.EventStreams
             .sessionizeEventTime(df, gapSeconds = 1800, watermarkDelay = "10 minutes").toDF()
@@ -864,42 +1850,136 @@ object PipelineQueries {
               col("firstTs").as("first_ts"), col("lastTs").as("last_ts")),
           maxFilesPerTrigger = Some(2)))
     },
+      // the batch gap-sessionization replay, PLUS the event-time expiry
+      // rule: a session emits if a later event closed it (grp < maxg) OR
+      // the final watermark (global max event time − 10 min) passed its
+      // lastTs + gap — exactly the streaming run's two emission paths
+      """WITH e AS (SELECT user_id, epoch_ns(ts) // 1000000000 AS sec FROM events),
+        |o AS (SELECT user_id, sec,
+        |  CASE WHEN sec - lag(sec) OVER (PARTITION BY user_id ORDER BY sec) > 1800 THEN 1 ELSE 0 END AS brk
+        |FROM e),
+        |g AS (SELECT user_id, sec,
+        |  sum(brk) OVER (PARTITION BY user_id ORDER BY sec ROWS UNBOUNDED PRECEDING) AS grp
+        |FROM o),
+        |sess AS (SELECT user_id, grp, count(*) AS n_events, min(sec) AS first_ts, max(sec) AS last_ts
+        |  FROM g GROUP BY 1, 2),
+        |last AS (SELECT user_id, max(grp) AS maxg FROM sess GROUP BY 1),
+        |mx AS (SELECT max(sec) AS m FROM e)
+        |SELECT s.user_id, n_events, first_ts, last_ts
+        |FROM sess s JOIN last l ON s.user_id = l.user_id, mx
+        |WHERE s.grp < l.maxg OR s.last_ts + 1800 < mx.m - 600""".stripMargin),
     // distribution-shift screen: PSI of the document word-count histogram
     // between the train and test split slices (fixed 10-wide buckets
     // capped at 20, +1 Laplace smoothing over the 21-bucket domain)
-    "curate_psi_report" -> ((s, d) => {
+    Entry("curate_psi_report", (s, d) => {
       val withF = pipeline.Curation.splitLabel(docs(s, d), "doc_id")
         .select(TextAnalysis.wordCount(col("text")).cast("long").as("n_words"),
           col("split"))
       pipeline.Curation.psiReport(withF, "n_words", "split", "train", "test")
-    }),
+    },
+      s"""WITH s AS (SELECT CASE
+         |    WHEN substr(md5('split|'||doc_id), 1, 2) < '0d' THEN 'test'
+         |    WHEN substr(md5('split|'||doc_id), 1, 2) < '1a' THEN 'val'
+         |    ELSE 'train' END AS split,
+         |  CASE WHEN len($normSql) = 0 THEN 0 ELSE len(string_split($normSql, ' ')) END AS nw
+         |FROM documents),
+         |b AS (SELECT greatest(least(nw // 10, 20), 0) AS bucket, split FROM s WHERE split IN ('train', 'test')),
+         |raw AS (SELECT bucket,
+         |    sum(CASE WHEN split = 'train' THEN 1 ELSE 0 END) AS n_a,
+         |    sum(CASE WHEN split = 'test' THEN 1 ELSE 0 END) AS n_b
+         |  FROM b GROUP BY bucket),
+         |c AS (SELECT gs.bucket, coalesce(n_a, 0) AS n_a, coalesce(n_b, 0) AS n_b
+         |  FROM generate_series(0, 20) gs(bucket) LEFT JOIN raw ON raw.bucket = gs.bucket),
+         |t AS (SELECT sum(n_a) AS ta, sum(n_b) AS tb FROM c)
+         |SELECT CAST(bucket AS BIGINT) AS bucket, CAST(n_a AS BIGINT) AS n_a,
+         |  CAST(n_b AS BIGINT) AS n_b,
+         |  CAST(floor((CAST(n_a + 1 AS DOUBLE) / (ta + 21) - CAST(n_b + 1 AS DOUBLE) / (tb + 21))
+         |    * ln((CAST(n_a + 1 AS DOUBLE) / (ta + 21)) / (CAST(n_b + 1 AS DOUBLE) / (tb + 21)))
+         |    * 1000000.0 + 0.5) AS BIGINT) AS psi_contrib_micro
+         |FROM c, t""".stripMargin),
     // curation: deterministic train/val/test split labels
-    "curate_split" -> ((s, d) =>
+    Entry("curate_split", (s, d) =>
       pipeline.Curation.splitLabel(docs(s, d), "doc_id")
-        .select("doc_id", "split")),
+        .select("doc_id", "split"),
+      """SELECT doc_id, CASE
+        |  WHEN substr(md5('split|'||doc_id), 1, 2) < '0d' THEN 'test'
+        |  WHEN substr(md5('split|'||doc_id), 1, 2) < '1a' THEN 'val'
+        |  ELSE 'train' END AS split
+        |FROM documents""".stripMargin,
+      // curate_psi_report labels the same documents
+      SiblingOf("curate_psi_report")),
     // leakage-safe split: every near-dup cluster (the shared memoized cc
     // labels) lands whole in one split; docs in no dup pair hash their own
     // id, i.e. reduce to exactly the curate_split rule
-    "curate_leakage_split" -> ((s, d) =>
+    Entry("curate_leakage_split", (s, d) =>
       pipeline.Curation.leakageSafeSplitFromLabels(
           dedupCorpus(s, d), "doc_id", neardupLabels(s, d))
-        .select("doc_id", "split")),
+        .select("doc_id", "split"),
+      // same recursive min-reachable labeling as curate_dup_clusters_df,
+      // split rule applied to the cluster root (own id for singletons)
+      s"""${ngramInterCtes.replaceFirst("WITH ", "WITH RECURSIVE ")},
+         |prs AS MATERIALIZED (SELECT a, b
+         |  FROM inter JOIN sizes sa ON sa.doc_id = a JOIN sizes sb ON sb.doc_id = b
+         |  WHERE round(CAST(i AS DOUBLE) / CAST(sa.n_sh + sb.n_sh - i AS DOUBLE), 4) >= 0.5),
+         |und AS (SELECT a, b FROM prs UNION SELECT b, a FROM prs),
+         |reach AS (SELECT a, b FROM und
+         |  UNION SELECT r.a, u.b FROM reach r JOIN und u ON r.b = u.a),
+         |lbl AS (SELECT a AS doc_id, least(a, min(b)) AS cluster FROM reach GROUP BY a),
+         |alldocs AS (SELECT c.doc_id, coalesce(l.cluster, c.doc_id) AS root
+         |  FROM corpus c LEFT JOIN lbl l ON l.doc_id = c.doc_id)
+         |SELECT doc_id, CASE
+         |  WHEN substr(md5('split|'||root), 1, 2) < '0d' THEN 'test'
+         |  WHEN substr(md5('split|'||root), 1, 2) < '1a' THEN 'val'
+         |  ELSE 'train' END AS split
+         |FROM alldocs""".stripMargin),
     // DSIR importance resampling: non-English documents ranked by how much
     // more likely their hashed unigram+bigram features are under the
     // English target LM than under the raw (non-English) LM; top 150 kept
-    "curate_dsir" -> ((s, d) =>
+    Entry("curate_dsir", (s, d) =>
       pipeline.Curation.dsirSelect(docs(s, d), "doc_id", "text",
-        col("lang") === "en", k = 150)),
+        col("lang") === "en", k = 150),
+      // DSIR replay: same hashed unigram+bigram buckets (4 md5 hex chars
+      // mod 256), same per-cell micro-ln quantization BEFORE the per-doc sum
+      s"""WITH ${toksCte("documents")},
+         |feats AS (
+         |  SELECT doc_id, f FROM (SELECT doc_id, unnest(w) AS f FROM toks) u WHERE f <> ''
+         |  UNION ALL
+         |  SELECT doc_id, unnest(${shinglesExpr(2)}) AS f FROM toks WHERE len(w) >= 2),
+         |fb AS (SELECT t.doc_id, (d.lang = 'en') AS tgt,
+         |    CAST(concat('0x', substr(md5('dsir|' || f), 1, 4)) AS BIGINT) % 256 AS b
+         |  FROM feats t JOIN documents d ON d.doc_id = t.doc_id),
+         |cnt AS (SELECT tgt, b, count(*) AS c FROM fb GROUP BY 1, 2),
+         |tot AS (SELECT
+         |    coalesce(sum(CASE WHEN tgt THEN c END), 0) AS ttot,
+         |    coalesce(sum(CASE WHEN NOT tgt THEN c END), 0) AS stot FROM cnt),
+         |base AS (SELECT unnest(range(256)) AS b),
+         |model AS (SELECT base.b,
+         |    CAST(floor(ln((coalesce(t.c, 0) + 1.0) / (tot.ttot + 256)) * 1000000.0 + 0.5) AS BIGINT)
+         |  - CAST(floor(ln((coalesce(s.c, 0) + 1.0) / (tot.stot + 256)) * 1000000.0 + 0.5) AS BIGINT) AS dw
+         |  FROM base CROSS JOIN tot
+         |  LEFT JOIN (SELECT b, c FROM cnt WHERE tgt) t ON t.b = base.b
+         |  LEFT JOIN (SELECT b, c FROM cnt WHERE NOT tgt) s ON s.b = base.b),
+         |sc AS (SELECT fb.doc_id, sum(m.dw) AS w
+         |  FROM fb JOIN model m USING (b) WHERE NOT fb.tgt GROUP BY 1)
+         |SELECT r.doc_id, CAST(coalesce(sc.w, 0) AS BIGINT) AS weight_micro
+         |FROM (SELECT doc_id FROM documents WHERE lang <> 'en') r
+         |LEFT JOIN sc USING (doc_id)
+         |ORDER BY weight_micro DESC, doc_id ASC LIMIT 150""".stripMargin),
     // curation: pattern redaction
-    "curate_redact" -> ((s, d) =>
+    Entry("curate_redact", (s, d) =>
       docs(s, d).select(col("doc_id"),
         pipeline.Curation.redact(concat(col("text"),
-          lit(" contact bob@example.com id 1234567890"))).as("clean"))),
+          lit(" contact bob@example.com id 1234567890"))).as("clean")),
+      """SELECT doc_id,
+        |regexp_replace(regexp_replace(text || ' contact bob@example.com id 1234567890',
+        |  '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<EMAIL>', 'g'),
+        |  '[0-9]{6,}', '<NUM>', 'g') AS clean
+        |FROM documents""".stripMargin),
     // PII exposure audit per source: every 13th document gets a planted
     // email + IPv4 + phone + account number (the synthetic corpus has no
     // natural PII), the report counts per-class matches — the pre-redact
     // audit and post-redact regression check
-    "text_pii_report" -> ((s, d) => {
+    Entry("text_pii_report", (s, d) => {
       val planted = docs(s, d).select(col("doc_id"), col("source"),
         when(col("doc_id") % 13 === 0,
           concat(col("text"), lit(" contact user"), col("doc_id"),
@@ -907,26 +1987,52 @@ object PipelineQueries {
             lit(".7 call +49 170 555 0101 acct 903442187650")))
           .otherwise(col("text")).as("text"))
       pipeline.Curation.piiReport(planted, "doc_id", "text", "source")
-    }),
+    },
+      """WITH planted AS (SELECT source,
+        |  CASE WHEN doc_id % 13 = 0 THEN text || ' contact user' || doc_id ||
+        |    '@mail.example.org from 10.0.' || (doc_id % 256) ||
+        |    '.7 call +49 170 555 0101 acct 903442187650' ELSE text END AS text
+        |FROM documents),
+        |cnt AS (SELECT source,
+        |  len(regexp_extract_all(text, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}')) AS e,
+        |  len(regexp_extract_all(text, '\b[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\b')) AS ip,
+        |  len(regexp_extract_all(text, '\+[0-9][0-9 \-]{6,}[0-9]')) AS ph,
+        |  len(regexp_extract_all(text, '[0-9]{9,}')) AS n
+        |FROM planted)
+        |SELECT source, count(*) AS n_docs,
+        |  CAST(sum(CASE WHEN e + ip + ph + n > 0 THEN 1 ELSE 0 END) AS BIGINT) AS docs_with_pii,
+        |  CAST(sum(e) AS BIGINT) AS n_emails, CAST(sum(ip) AS BIGINT) AS n_ipv4,
+        |  CAST(sum(ph) AS BIGINT) AS n_phones, CAST(sum(n) AS BIGINT) AS n_longnums
+        |FROM cnt GROUP BY source""".stripMargin),
     // curation: corpus vocabulary (top-20 by doc frequency, word tiebreak)
-    "curate_vocab" -> ((s, d) =>
+    Entry("curate_vocab", (s, d) =>
       pipeline.Curation.vocabulary(docs(s, d), "doc_id", "text")
-        .orderBy(desc("doc_freq"), asc("word")).limit(20)),
+        .orderBy(desc("doc_freq"), asc("word")).limit(20),
+      s"""WITH ${toksCte("documents")},
+         |words AS (SELECT doc_id, unnest(w) AS word FROM toks)
+         |SELECT word, count(DISTINCT doc_id) AS doc_freq, count(*) AS term_freq
+         |FROM words WHERE word <> ''
+         |GROUP BY word ORDER BY doc_freq DESC, word ASC LIMIT 20""".stripMargin,
+      // text_oov_rate's vocabulary, top 500 instead of top 20
+      SiblingOf("text_oov_rate")),
     // decontamination: benchmark = every 10th source doc; any corpus doc
     // sharing a word 5-gram with it (the original itself, its planted
     // copies, or a natural collision) is dropped — broadcast gram probe
-    "curate_decontaminate" -> ((s, d) =>
+    Entry("curate_decontaminate", (s, d) =>
       pipeline.Curation.decontaminate(dedupCorpus(s, d),
         docs(s, d).where(col("doc_id") % 10 === 0), "doc_id", "text", n = 5)
-        .select("doc_id")),
+        .select("doc_id"), decontaminateSql),
     // decontamination with Spark's native bloom_filter_agg/might_contain
     // prefilter: the codegen'd sketch probe drops ~all clean grams before
     // the dedup shuffle, an exact semi-join removes the false positives —
     // byte-identical result to curate_decontaminate, same oracle
-    "curate_decontaminate_bloom" -> ((s, d) =>
+    Entry("curate_decontaminate_bloom", (s, d) =>
       pipeline.Curation.decontaminateBloom(dedupCorpus(s, d),
         docs(s, d).where(col("doc_id") % 10 === 0), "doc_id", "text", n = 5)
-        .select("doc_id")),
+        .select("doc_id"),
+      // the bloom variant is exact (sketch prefilter + exact verification),
+      // so it answers to the identical oracle
+      decontaminateSql),
     // the COMPOSED curation pipeline — every stage an operator that
     // already ships alone: per-doc predicates (length >= 5, langid = en,
     // quality >= 0.35) fused into a single pass, 5-gram decontamination
@@ -942,7 +2048,7 @@ object PipelineQueries {
     // downstream scan re-ran the quality/langid/decon prefix (the
     // measurement this entry exists to make). Within a stage the chain
     // stays lazy; PlanQualitySpec pins no-cartesian + bounded exchanges.
-    "curate_pipeline" -> ((s, d) => {
+    Entry("curate_pipeline", (s, d) => {
       val corpus = dedupCorpus(s, d)
       val q = TextAnalysis.qualityTable(corpus, "doc_id", "text")
         .select(col("doc_id"), col("quality"), col("n_words"))
@@ -970,33 +2076,120 @@ object PipelineQueries {
         .groupBy("shard")
         .agg(count(lit(1)).as("n_docs"), countDistinct("chunk").as("n_chunks"),
           sum("n_words").as("total_tokens"))
-    }),
+    },
+      // the composed pipeline replayed stage by stage: fused per-doc
+      // predicates (nested-WITH quality/langid subqueries over the
+      // corpus), decon NOT IN, md5 keep-first, the shared
+      // LSH-propose/verify CTEs over the exact-stage survivors, recursive
+      // min-reachable cc, chop-packing window, per-shard rollup
+      s"""${corpusCte.replaceFirst("WITH ", "WITH RECURSIVE ")},
+         |pqual AS MATERIALIZED (SELECT doc_id, quality, n_words AS nw
+         |  FROM (${textQualitySqlFor("corpus")}) tq),
+         |plang AS MATERIALIZED (SELECT doc_id, lang_guess FROM (${textLangidSqlFor("corpus")}) tl),
+         |pfil AS MATERIALIZED (SELECT c.doc_id, c.text, q.nw FROM corpus c
+         |  JOIN pqual q USING (doc_id) JOIN plang l USING (doc_id)
+         |  WHERE q.nw >= 5 AND l.lang_guess = 'en' AND q.quality >= 0.35),
+         |pct AS MATERIALIZED (SELECT doc_id, string_split($normSql, ' ') AS w FROM pfil),
+         |pcg AS MATERIALIZED (SELECT DISTINCT doc_id, g FROM
+         |  (SELECT doc_id, unnest(${shinglesExpr(5)}) AS g FROM pct WHERE len(w) >= 5)),
+         |pbt AS MATERIALIZED (SELECT doc_id, string_split($normSql, ' ') AS w FROM documents WHERE doc_id % 10 = 3),
+         |pbg AS MATERIALIZED (SELECT DISTINCT g FROM
+         |  (SELECT unnest(${shinglesExpr(5)}) AS g FROM pbt WHERE len(w) >= 5)),
+         |pbad AS MATERIALIZED (SELECT DISTINCT pcg.doc_id FROM pcg JOIN pbg USING (g)),
+         |pdecon AS MATERIALIZED (SELECT * FROM pfil WHERE doc_id NOT IN (SELECT doc_id FROM pbad)),
+         |pexh AS MATERIALIZED (SELECT md5(text) AS h, min(doc_id) AS keep FROM pdecon GROUP BY 1),
+         |pexact AS MATERIALIZED (SELECT d.doc_id, d.text, d.nw FROM pdecon d
+         |  JOIN pexh ON md5(d.text) = pexh.h AND d.doc_id = pexh.keep),
+         |${ngramPipelineCtes("pexact")},
+         |prs AS MATERIALIZED (SELECT a, b
+         |  FROM inter JOIN sizes sa ON sa.doc_id = a JOIN sizes sb ON sb.doc_id = b
+         |  WHERE round(CAST(i AS DOUBLE) / CAST(sa.n_sh + sb.n_sh - i AS DOUBLE), 4) >= 0.5),
+         |und AS (SELECT a, b FROM prs UNION SELECT b, a FROM prs),
+         |reach AS (SELECT a, b FROM und
+         |  UNION SELECT r.a, u.b FROM reach r JOIN und u ON r.b = u.a),
+         |dropd AS MATERIALIZED (SELECT a FROM reach GROUP BY a HAVING min(b) < a),
+         |psurv AS MATERIALIZED (SELECT doc_id, nw FROM pexact WHERE doc_id NOT IN (SELECT a FROM dropd)),
+         |ppk AS MATERIALIZED (SELECT doc_id, nw, doc_id % 8 AS shard,
+         |  sum(nw) OVER (PARTITION BY doc_id % 8 ORDER BY doc_id
+         |    ROWS UNBOUNDED PRECEDING) - nw AS strt FROM psurv)
+         |SELECT CAST(shard AS BIGINT) AS shard, CAST(count(*) AS BIGINT) AS n_docs,
+         |  CAST(count(DISTINCT strt // 512) AS BIGINT) AS n_chunks,
+         |  CAST(sum(nw) AS BIGINT) AS total_tokens
+         |FROM ppk GROUP BY shard""".stripMargin),
     // within-document repetition signals (Gopher-style quality rules)
-    "text_repetition" -> ((s, d) =>
-      TextAnalysis.repetitionTable(docs(s, d), "doc_id", "text")),
+    Entry("text_repetition", (s, d) =>
+      TextAnalysis.repetitionTable(docs(s, d), "doc_id", "text"),
+      s"""WITH n AS (SELECT doc_id, $normSql AS norm FROM documents),
+         |toks AS (SELECT doc_id, list_filter(string_split(norm, ' '), x -> x <> '') AS w FROM n),
+         |wst AS (SELECT doc_id, len(w) AS nw, len(list_distinct(w)) AS dw FROM toks),
+         |c2 AS (SELECT doc_id, g, count(*) AS c FROM
+         |  (SELECT doc_id, unnest(${shinglesExpr(2)}) AS g FROM toks) GROUP BY 1, 2),
+         |s2 AS (SELECT doc_id, sum(c) AS n2, max(c) AS m2 FROM c2 GROUP BY 1),
+         |c3 AS (SELECT doc_id, g, count(*) AS c FROM
+         |  (SELECT doc_id, unnest(${shinglesExpr(3)}) AS g FROM toks) GROUP BY 1, 2),
+         |s3 AS (SELECT doc_id, sum(c) AS n3, count(*) AS d3 FROM c3 GROUP BY 1)
+         |SELECT t.doc_id,
+         |  round(coalesce(CAST(nw - dw AS DOUBLE) / nullif(nw, 0), 0.0), 4) AS dup_word_frac,
+         |  round(coalesce(CAST(m2 AS DOUBLE) / n2, 0.0), 4) AS top_2gram_frac,
+         |  round(coalesce(CAST(n3 - d3 AS DOUBLE) / n3, 0.0), 4) AS dup_3gram_frac
+         |FROM toks t LEFT JOIN wst USING (doc_id) LEFT JOIN s2 USING (doc_id) LEFT JOIN s3 USING (doc_id)""".stripMargin),
     // deterministic distributed k-means over embeddings (fitted coarse
     // quantizer for IVF): static min-id seeds, argmin assignment, decimal
     // elementwise means — every step partition-order independent, so the
     // oracle replays the run exactly (unrolled iterations)
-    "embedding_kmeans" -> ((s, d) =>
+    Entry("embedding_kmeans", (s, d) =>
       pipeline.Clustering.kmeans(embeddings(s, d), "vec_id", "embedding",
-        k = 8, iters = 2)),
+        k = 8, iters = 2),
+      s"WITH ${kmeansCtes(k = 8, iters = 2)}\nSELECT vec_id, cid FROM final_assign"),
     // cluster-quality QA: per-cluster simplified silhouette (distance to
     // own vs second-nearest centroid) over the same fitted k-means —
     // exact micro-unit sums, floor-division means
-    "embedding_silhouette" -> ((s, d) =>
+    Entry("embedding_silhouette", (s, d) =>
       pipeline.Clustering.silhouetteReport(embeddings(s, d), "vec_id", "embedding",
-        k = 8, iters = 2)),
+        k = 8, iters = 2),
+      s"""WITH ${kmeansCtes(k = 8, iters = 2)},
+         |sd AS (SELECT vec_id, cid, d2, rn FROM (
+         |  SELECT v.vec_id, c.cid, ${kmeansDist("c")} AS d2,
+         |    row_number() OVER (PARTITION BY v.vec_id ORDER BY ${kmeansDist("c")} ASC, c.cid ASC) AS rn
+         |  FROM v, cents2 c) t WHERE rn <= 2),
+         |ab AS (SELECT vec_id,
+         |    max(CASE WHEN rn = 1 THEN cid END) AS cid,
+         |    sqrt(greatest(max(CASE WHEN rn = 1 THEN d2 END), 0)) AS a,
+         |    sqrt(greatest(max(CASE WHEN rn = 2 THEN d2 END), 0)) AS b
+         |  FROM sd GROUP BY vec_id),
+         |sm AS (SELECT cid, CASE WHEN greatest(a, b) = 0 THEN 0
+         |    ELSE CAST(floor((b - a) / greatest(a, b) * 1000000.0 + 0.5) AS BIGINT) END AS s
+         |  FROM ab)
+         |SELECT CAST(cid AS BIGINT) AS cid, count(*) AS n_members,
+         |  CAST(sum(s) AS BIGINT) AS sum_sil_micro,
+         |  CAST(floor(CAST(sum(s) AS DOUBLE) / count(*)) AS BIGINT) AS mean_sil_micro
+         |FROM sm GROUP BY cid""".stripMargin),
     // IVF ANN with the FITTED k-means quantizer (vs ann_ivf_topk's static
     // min-id quantizer): centroids from 2 Lloyd iterations at nlist=16
-    "ann_ivf_kmeans_topk" -> ((s, d) => {
+    Entry("ann_ivf_kmeans_topk", (s, d) => {
       val e = embeddings(s, d)
       val cents = pipeline.Clustering.kmeansCentroids(e, "vec_id", "embedding",
         k = 16, iters = 2)
       Similarity.ivfTopKWith(e, e.where(col("vec_id") < 50), cents,
         "vec_id", "embedding", k = 3, nprobe = 4)
         .withColumn("rank", col("rank").cast("long"))
-    }),
+    },
+      s"""WITH ${kmeansCtes(k = 16, iters = 2)},
+         |cent AS (SELECT cid, cv FROM cents2),
+         |asg AS (SELECT vec_id, cid FROM (
+         |  SELECT v.vec_id, c.cid,
+         |    row_number() OVER (PARTITION BY v.vec_id ORDER BY list_cosine_similarity(v.ve, c.cv) DESC, c.cid ASC) AS rn
+         |  FROM v, cent c) t WHERE rn = 1),
+         |probes AS (SELECT query_id, cid FROM (
+         |  SELECT v.vec_id AS query_id, c.cid,
+         |    row_number() OVER (PARTITION BY v.vec_id ORDER BY list_cosine_similarity(v.ve, c.cv) DESC, c.cid ASC) AS rn
+         |  FROM v, cent c WHERE v.vec_id < 50) t WHERE rn <= 4),
+         |sc AS (SELECT p.query_id, a.vec_id AS neighbor_id,
+         |  round(list_cosine_similarity(qv.ve, av.ve), 6) AS cos
+         |  FROM probes p JOIN asg a ON p.cid = a.cid AND a.vec_id <> p.query_id
+         |  JOIN v qv ON qv.vec_id = p.query_id JOIN v av ON av.vec_id = a.vec_id),
+         |r AS (SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id ASC) AS rnk FROM sc)
+         |SELECT query_id, neighbor_id, cos, CAST(rnk AS BIGINT) AS rank FROM r WHERE rnk <= 3""".stripMargin),
     // corpus composition report: per detected language, document count,
     // average quality and total word volume. The average runs ENTIRELY in
     // integer space: quality is already a 4-decimal double, so
@@ -1005,7 +2198,7 @@ object PipelineQueries {
     // bit-identical in every engine — no double->decimal cast, decimal
     // division, or round(double, scale) whose rounding path an oracle
     // engine could implement differently
-    "corpus_report" -> ((s, d) => {
+    Entry("corpus_report", (s, d) => {
       val q = TextAnalysis.qualityTable(docs(s, d), "doc_id", "text")
         .select(col("doc_id"),
           round(col("quality") * 10000).cast("long").as("q4"),
@@ -1021,71 +2214,197 @@ object PipelineQueries {
           (expr("(2 * sum_q4 + n_docs) DIV (2 * n_docs)").cast("double") / 10000.0)
             .as("avg_quality"),
           col("total_words"))
-    }),
+    },
+      s"""WITH tq AS ($textQualitySql),
+         |tl AS ($textLangidSql),
+         |j AS (SELECT lang_guess, CAST(round(quality * 10000) AS BIGINT) AS q4, n_words
+         |  FROM tl JOIN tq USING (doc_id))
+         |SELECT lang_guess, count(*) AS n_docs,
+         |  CAST((2 * sum(q4) + count(*)) // (2 * count(*)) AS DOUBLE) / 10000.0 AS avg_quality,
+         |  CAST(sum(n_words) AS BIGINT) AS total_words
+         |FROM j GROUP BY lang_guess""".stripMargin),
     // corpus balancing: equal-quota deterministic sample per detected
     // language (two-phase: broadcast hash-cutoff prefilter, then exact
     // rank over survivors only — never a full-stratum sort)
-    "curate_stratified" -> ((s, d) => {
+    Entry("curate_stratified", (s, d) => {
       val withLang = docs(s, d).select(col("doc_id"),
         TextAnalysis.langId(col("text")).as("lang_guess"))
       pipeline.Curation.stratifiedSample(withLang, "doc_id", "lang_guess",
           quota = StratQuota, seed = StratSeed, overshoot = StratOvershoot)
         .select("doc_id", "lang_guess")
-    }),
+    },
+      // mirrors Curation.stratifiedSample: same two-phase plan — per-stratum
+      // 6-hex cutoff (consulted only when cnt > overshoot*quota), exact
+      // hash-order rank over survivors
+      s"""WITH tl AS ($textLangidSql),
+         |cnts AS (SELECT lang_guess, count(*) AS cnt FROM tl GROUP BY lang_guess),
+         |cuts AS (SELECT lang_guess, cnt,
+         |  printf('%06x', CAST(ceil(16777216.0 * $StratTarget / cnt) AS BIGINT)) AS cut FROM cnts),
+         |surv AS (SELECT t.doc_id, t.lang_guess,
+         |    md5('$StratSeed|' || CAST(t.doc_id AS VARCHAR)) AS h
+         |  FROM tl t JOIN cuts c USING (lang_guess)
+         |  WHERE c.cnt <= $StratTarget
+         |    OR substr(md5('$StratSeed|' || CAST(t.doc_id AS VARCHAR)), 1, 6) < c.cut),
+         |r AS (SELECT doc_id, lang_guess,
+         |    row_number() OVER (PARTITION BY lang_guess ORDER BY h ASC, doc_id ASC) AS rn
+         |  FROM surv)
+         |SELECT doc_id, lang_guess FROM r WHERE rn <= $StratQuota""".stripMargin),
     // training-batch sequence packing: concat-and-chop into 512-token
     // chunks, one independent chain per shard (doc_id mod 8)
-    "curate_pack" -> ((s, d) =>
+    Entry("curate_pack", (s, d) =>
       pipeline.Curation.packSequences(
         docs(s, d).select(col("doc_id"),
           TextAnalysis.wordCount(col("text")).cast("long").as("n_words"),
           (col("doc_id") % 8).as("shard")),
-        "doc_id", "n_words", "shard", budget = 512L)),
+        "doc_id", "n_words", "shard", budget = 512L),
+      s"""WITH t AS (SELECT doc_id,
+         |    CAST(CASE WHEN len($normSql) = 0 THEN 0
+         |      ELSE len(string_split($normSql, ' ')) END AS BIGINT) AS n_words,
+         |    doc_id % 8 AS shard
+         |  FROM documents),
+         |c AS (SELECT doc_id, shard, n_words,
+         |    sum(n_words) OVER (PARTITION BY shard ORDER BY doc_id
+         |      ROWS UNBOUNDED PRECEDING) - n_words AS strt
+         |  FROM t)
+         |SELECT doc_id, shard, CAST(strt // 512 AS BIGINT) AS chunk,
+         |  CAST(strt % 512 AS BIGINT) AS offset FROM c""".stripMargin),
     // whole-document best-fit-decreasing packing over the same inputs as
     // curate_pack (512-token bins, doc_id mod 8 shards) — documents are
     // never chopped; fill quality vs arrival-order and the chop baseline
     // is measured in SCALE.md "BFD fill-ratio table" (sf0.1: 99.38% vs
     // 98.27% vs the 99.76% chop ceiling; ScaleProbe bfd reproduces it)
-    "curate_pack_bfd" -> ((s, d) =>
+    Entry("curate_pack_bfd", (s, d) =>
       pipeline.Curation.packBinsBfd(
         docs(s, d).select(col("doc_id"),
           TextAnalysis.wordCount(col("text")).cast("long").as("n_words"),
           (col("doc_id") % 8).as("shard")),
-        "doc_id", "n_words", "shard", budget = 512L)),
+        "doc_id", "n_words", "shard", budget = 512L),
+      // BFD replayed as a recursive CTE: one recursion step per placement
+      // rank (all shards advance in lockstep), state = the open-bin list
+      // {'rem','b'} (field order makes list_sort order by (rem, b), so
+      // [1] of the fits-filtered sort IS the best-fit choice with ties to
+      // the smaller bin id — exactly the TreeSet.minAfter rule)
+      s"""WITH RECURSIVE t AS (SELECT doc_id,
+         |    CAST(CASE WHEN len($normSql) = 0 THEN 0
+         |      ELSE len(string_split($normSql, ' ')) END AS BIGINT) AS n_words,
+         |    doc_id % 8 AS shard
+         |  FROM documents),
+         |items AS (SELECT shard, doc_id, n_words,
+         |    row_number() OVER (PARTITION BY shard ORDER BY n_words DESC, doc_id) AS rn
+         |  FROM t),
+         |pack AS (
+         |  SELECT shard, CAST(0 AS BIGINT) AS rn, CAST(NULL AS BIGINT) AS doc_id,
+         |    CAST(NULL AS BIGINT) AS bin, CAST(NULL AS BIGINT) AS off,
+         |    CAST([] AS STRUCT(rem BIGINT, b BIGINT)[]) AS bins,
+         |    CAST(0 AS BIGINT) AS nbins
+         |  FROM (SELECT DISTINCT shard FROM t)
+         |  UNION ALL
+         |  SELECT p.shard, CAST(i.rn AS BIGINT), i.doc_id,
+         |    coalesce(list_sort(list_filter(p.bins, x -> x.rem >= i.n_words))[1].b,
+         |      p.nbins) AS bin,
+         |    CAST(coalesce(512 - list_sort(list_filter(p.bins, x -> x.rem >= i.n_words))[1].rem,
+         |      0) AS BIGINT) AS off,
+         |    CASE WHEN list_sort(list_filter(p.bins, x -> x.rem >= i.n_words))[1].b IS NULL
+         |      THEN CASE WHEN 512 - i.n_words > 0
+         |        THEN list_append(p.bins, {'rem': 512 - i.n_words, 'b': p.nbins})
+         |        ELSE p.bins END
+         |      ELSE CASE WHEN list_sort(list_filter(p.bins, x -> x.rem >= i.n_words))[1].rem - i.n_words > 0
+         |        THEN list_append(
+         |          list_filter(p.bins, x -> x.b <> list_sort(list_filter(p.bins, y -> y.rem >= i.n_words))[1].b),
+         |          {'rem': list_sort(list_filter(p.bins, x -> x.rem >= i.n_words))[1].rem - i.n_words,
+         |           'b': list_sort(list_filter(p.bins, x -> x.rem >= i.n_words))[1].b})
+         |        ELSE list_filter(p.bins, x -> x.b <> list_sort(list_filter(p.bins, y -> y.rem >= i.n_words))[1].b)
+         |        END
+         |      END AS bins,
+         |    CASE WHEN list_sort(list_filter(p.bins, x -> x.rem >= i.n_words))[1].b IS NULL
+         |      THEN p.nbins + 1 ELSE p.nbins END AS nbins
+         |  FROM pack p JOIN items i ON i.shard = p.shard AND i.rn = p.rn + 1)
+         |SELECT doc_id, shard, bin, off AS offset
+         |FROM pack WHERE doc_id IS NOT NULL""".stripMargin),
     // symmetric per-vector int8 quantization of the embedding column —
     // long-form (vec_id, pos, code, scale) rows: every column scalar, so
     // the driver harness can sort/hash them (the packed-array variant
     // Quantization.int8 is the library surface, not the oracled one)
-    "embedding_quantize" -> ((s, d) =>
-      pipeline.Quantization.int8Rows(embeddings(s, d), "vec_id", "embedding")),
+    Entry("embedding_quantize", (s, d) =>
+      pipeline.Quantization.int8Rows(embeddings(s, d), "vec_id", "embedding"),
+      """WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS ve FROM embeddings),
+        |vu AS (SELECT vec_id, unnest(ve) AS val, unnest(range(0, len(ve))) AS pos FROM v),
+        |m AS (SELECT vec_id, max(abs(val)) / 127.0 AS scale FROM vu GROUP BY vec_id)
+        |SELECT vu.vec_id, CAST(pos AS BIGINT) AS pos,
+        |  CASE WHEN scale = 0.0 THEN CAST(0 AS BIGINT)
+        |    ELSE CAST(floor(val / scale + 0.5) AS BIGINT) END AS code,
+        |  scale
+        |FROM vu JOIN m USING (vec_id)""".stripMargin),
     // top-3 characteristic terms per document (rational BM25-style idf)
-    "text_tfidf" -> ((s, d) =>
-      TextAnalysis.tfidfTop(docs(s, d), "doc_id", "text", topK = 3)),
+    Entry("text_tfidf", (s, d) =>
+      TextAnalysis.tfidfTop(docs(s, d), "doc_id", "text", topK = 3),
+      s"""WITH ${toksCte("documents")},
+         |tok AS (SELECT doc_id, unnest(w) AS word FROM toks),
+         |tf AS (SELECT doc_id, word, count(*) AS tf FROM tok WHERE word <> '' GROUP BY doc_id, word),
+         |dfq AS (SELECT word, count(DISTINCT doc_id) AS df FROM tok WHERE word <> '' GROUP BY word),
+         |n AS (SELECT count(DISTINCT doc_id) AS n FROM documents),
+         |sc AS (SELECT doc_id, word, tf * ((n - df + 0.5) / (df + 0.5)) AS score
+         |  FROM tf JOIN dfq USING (word) CROSS JOIN n),
+         |r AS (SELECT doc_id, word, score,
+         |    row_number() OVER (PARTITION BY doc_id ORDER BY score DESC, word ASC) AS rank
+         |  FROM sc)
+         |SELECT doc_id, word, floor(score * 10000.0 + 0.5) / 10000.0 AS tfidf,
+         |  CAST(rank AS BIGINT) AS rank
+         |FROM r WHERE rank <= 3""".stripMargin),
     // unigram-LM mean log-probability per document (the perplexity-filter
     // signal); micro-unit quantization before the per-doc sum
-    "text_unigram_logprob" -> ((s, d) =>
-      TextAnalysis.unigramLogProb(docs(s, d), "doc_id", "text")),
+    Entry("text_unigram_logprob", (s, d) =>
+      TextAnalysis.unigramLogProb(docs(s, d), "doc_id", "text"),
+      s"""WITH ${toksCte("documents")},
+         |tok AS (SELECT doc_id, unnest(w) AS word FROM toks),
+         |words AS (SELECT doc_id, word FROM tok WHERE word <> ''),
+         |m AS (SELECT word, count(*) AS cnt FROM words GROUP BY word),
+         |tot AS (SELECT count(*) AS total FROM words),
+         |s AS (SELECT w.doc_id,
+         |    CAST(floor(ln(CAST(m.cnt AS DOUBLE) / tot.total) * 1000000.0 + 0.5) AS BIGINT) AS lp
+         |  FROM words w JOIN m USING (word) CROSS JOIN tot)
+         |SELECT doc_id, count(*) AS n_tokens,
+         |  round(CAST(sum(lp) AS DOUBLE) / (count(*) * 1000000.0), 4) AS logprob
+         |FROM s GROUP BY doc_id""".stripMargin),
     // bigram-LM mean log-probability — one order up; context totals
     // reduce the MODEL, never the corpus stream
-    "text_bigram_logprob" -> ((s, d) =>
-      TextAnalysis.bigramLogProb(docs(s, d), "doc_id", "text")),
+    Entry("text_bigram_logprob", (s, d) =>
+      TextAnalysis.bigramLogProb(docs(s, d), "doc_id", "text"),
+      // bigram LM: P(w2|w1) = c(w1w2)/c(w1·), micro-ln per model cell,
+      // context totals summed from the model counts
+      s"""WITH ${toksCte("documents")},
+         |bg AS (SELECT doc_id, unnest(${shinglesExpr(2)}) AS s FROM toks WHERE len(w) >= 2),
+         |m AS (SELECT s, count(*) AS cnt FROM bg GROUP BY s),
+         |ctx AS (SELECT string_split(s, ' ')[1] AS w1, sum(cnt) AS ctx FROM m GROUP BY 1),
+         |mlp AS (SELECT s,
+         |    CAST(floor(ln(CAST(m.cnt AS DOUBLE) / ctx.ctx) * 1000000.0 + 0.5) AS BIGINT) AS lp
+         |  FROM m JOIN ctx ON string_split(m.s, ' ')[1] = ctx.w1)
+         |SELECT doc_id, count(*) AS n_bigrams,
+         |  round(CAST(sum(lp) AS DOUBLE) / (count(*) * 1000000.0), 4) AS logprob
+         |FROM bg JOIN mlp USING (s) GROUP BY doc_id""".stripMargin),
     // Naive Bayes document classifier (the fastText/CCNet quality-filter
     // shape): self-train on the lang label, argmax posterior per document
-    "text_nb_classify" -> ((s, d) => {
+    Entry("text_nb_classify", (s, d) => {
       val dd = docs(s, d)
       val (wm, lt) = TextAnalysis.naiveBayesModel(dd, "text", "lang")
       TextAnalysis.naiveBayesClassify(dd, "doc_id", "text", wm, lt)
-    }),
+    },
+      nbClassifySql,
+      // text_nb_confusion fits and scores the same model
+      SiblingOf("text_nb_confusion")),
     // NB with a REAL out-of-vocabulary path: the model fits on even
     // doc_ids only, so odd documents carry words the model never saw and
     // exercise the per-label OOV fallback cell end-to-end vs the oracle
-    "text_nb_oov_classify" -> ((s, d) => {
+    Entry("text_nb_oov_classify", (s, d) => {
       val dd = docs(s, d)
       val (wm, lt) = TextAnalysis.naiveBayesModel(
         dd.where(col("doc_id") % 2 === 0), "text", "lang")
       TextAnalysis.naiveBayesClassify(dd, "doc_id", "text", wm, lt)
-    }),
+    },
+      // even-doc fit / full-corpus score: odd docs hit the OOV cell
+      nbClassifySqlFor("doc_id % 2 = 0")),
     // NB resubstitution confusion matrix: actual × predicted label counts
-    "text_nb_confusion" -> ((s, d) => {
+    Entry("text_nb_confusion", (s, d) => {
       val dd = docs(s, d)
       val (wm, lt) = TextAnalysis.naiveBayesModel(dd, "text", "lang")
       TextAnalysis.naiveBayesClassify(dd, "doc_id", "text", wm, lt)
@@ -1093,27 +2412,89 @@ object PipelineQueries {
         .join(dd.select(col("doc_id"), col("lang").as("actual")), Seq("doc_id"))
         .groupBy("actual", "predicted")
         .agg(count(lit(1)).as("n_docs"))
-    }),
+    },
+      s"""WITH ${toksCte("documents")},
+         |tok AS (SELECT doc_id, unnest(w) AS word FROM toks),
+         |wrds AS (SELECT doc_id, word FROM tok WHERE word <> ''),
+         |wl AS (SELECT w.doc_id, d.lang, w.word FROM wrds w JOIN documents d USING (doc_id)),
+         |cnt AS (SELECT lang, word, count(*) AS cnt FROM wl GROUP BY 1, 2),
+         |tot AS (SELECT lang, sum(cnt) AS tot FROM cnt GROUP BY 1),
+         |vs AS (SELECT count(DISTINCT word) AS v FROM cnt),
+         |model AS (SELECT vw.word, t.lang,
+         |    CAST(floor(ln((coalesce(c.cnt, 0) + 1.0) / (t.tot + vs.v)) * 1000000.0 + 0.5) AS BIGINT) AS lp
+         |  FROM (SELECT DISTINCT word FROM cnt) vw
+         |  CROSS JOIN tot t CROSS JOIN vs
+         |  LEFT JOIN cnt c ON c.word = vw.word AND c.lang = t.lang),
+         |pri AS (SELECT lang,
+         |    CAST(floor(ln(CAST(count(*) AS DOUBLE) / (SELECT count(*) FROM documents)) * 1000000.0 + 0.5) AS BIGINT) AS prior
+         |  FROM documents GROUP BY 1),
+         |tf AS (SELECT doc_id, word, count(*) AS tf FROM wrds GROUP BY 1, 2),
+         |sc AS (SELECT tf.doc_id, m.lang, p.prior + sum(tf.tf * m.lp) AS score
+         |  FROM tf JOIN model m USING (word) JOIN pri p ON p.lang = m.lang
+         |  GROUP BY tf.doc_id, m.lang, p.prior),
+         |rk AS (SELECT doc_id, lang, row_number() OVER (PARTITION BY doc_id ORDER BY score DESC, lang ASC) AS rn FROM sc),
+         |pred AS (SELECT doc_id, lang AS predicted FROM rk WHERE rn = 1)
+         |SELECT d.lang AS actual, p.predicted, count(*) AS n_docs
+         |FROM pred p JOIN documents d USING (doc_id)
+         |GROUP BY 1, 2""".stripMargin),
     // length-weighted sample without replacement (Efraimidis–Spirakis
     // keys over deterministic md5 uniforms), k = 200
-    "curate_weighted_sample" -> ((s, d) =>
+    Entry("curate_weighted_sample", (s, d) =>
       pipeline.Curation.weightedSample(docs(s, d), "doc_id", "n_chars", k = 200)
-        .select(col("doc_id"), col("n_chars").cast("long").as("n_chars"))),
+        .select(col("doc_id"), col("n_chars").cast("long").as("n_chars")),
+      """WITH u AS (SELECT doc_id, n_chars,
+        |  CAST(CAST(concat('0x', substr(md5('wsample|' || CAST(doc_id AS VARCHAR)), 1, 12)) AS BIGINT) AS DOUBLE)
+        |    / 281474976710656.0 AS u
+        |  FROM documents)
+        |SELECT doc_id, CAST(n_chars AS BIGINT) AS n_chars FROM u
+        |ORDER BY ln(u) / n_chars DESC, doc_id ASC LIMIT 200""".stripMargin),
     // BM25 retrieval: queries are the first-8-word prefixes of every
     // 101st document; rational idf, integer micro-unit score accumulation
-    "text_bm25" -> ((s, d) => {
+    Entry("text_bm25", (s, d) => {
       val dd = docs(s, d)
       val q = dd.where(col("doc_id") % 101 === 0)
         .select(col("doc_id").as("query_id"),
           concat_ws(" ", slice(TextAnalysis.words(col("text")), 1, 8)).as("qtext"))
       TextAnalysis.bm25TopK(dd, q, "doc_id", "text", "query_id", "qtext",
         topK = Bm25TopK, k1 = Bm25K1, b = Bm25B)
+    },
+      {
+      val k1 = s"$Bm25K1"
+      val k1p1 = s"${Bm25K1 + 1.0}"
+      val b = s"$Bm25B"
+      val oneMinusB = s"${1.0 - Bm25B}"
+      s"""WITH ${toksCte("documents")},
+         |tok AS (SELECT doc_id, unnest(w) AS word FROM toks),
+         |tf AS (SELECT doc_id, word, count(*) AS tf FROM tok WHERE word <> '' GROUP BY 1, 2),
+         |dl AS (SELECT doc_id, count(*) AS dl FROM tok WHERE word <> '' GROUP BY 1),
+         |dfq AS (SELECT word, count(DISTINCT doc_id) AS df FROM tok WHERE word <> '' GROUP BY 1),
+         |g AS (SELECT (SELECT count(DISTINCT doc_id) FROM documents) AS n,
+         |             (SELECT count(*) FROM tok WHERE word <> '') AS tt),
+         |q AS (SELECT doc_id AS query_id,
+         |    array_to_string(list_slice(string_split($normSql, ' '), 1, 8), ' ') AS qtext
+         |  FROM documents WHERE doc_id % 101 = 0),
+         |qt AS (SELECT DISTINCT query_id, word FROM
+         |    (SELECT query_id, unnest(string_split(qtext, ' ')) AS word FROM q)
+         |  WHERE word <> ''),
+         |sc AS (SELECT qt.query_id, tf.doc_id,
+         |    CAST(floor((g.n - dfq.df + 0.5) / (dfq.df + 0.5) *
+         |      ((tf.tf * $k1p1) / (tf.tf + $k1 * ($oneMinusB + ($b * dl.dl) / (CAST(g.tt AS DOUBLE) / CAST(g.n AS DOUBLE)))))
+         |      * 1000000.0 + 0.5) AS BIGINT) AS micro
+         |  FROM tf JOIN qt USING (word) JOIN dfq USING (word)
+         |  JOIN dl ON dl.doc_id = tf.doc_id CROSS JOIN g),
+         |su AS (SELECT query_id, doc_id, CAST(sum(micro) AS BIGINT) AS micros FROM sc GROUP BY 1, 2),
+         |r AS (SELECT query_id, doc_id, micros,
+         |    row_number() OVER (PARTITION BY query_id ORDER BY micros DESC, doc_id ASC) AS rnk FROM su)
+         |SELECT query_id, doc_id,
+         |  floor(CAST(micros AS DOUBLE) / 100.0 + 0.5) / 10000.0 AS score,
+         |  CAST(rnk AS BIGINT) AS rank
+         |FROM r WHERE rnk <= $Bm25TopK""".stripMargin
     }),
     // HYBRID retrieval: reciprocal-rank fusion of the BM25 lexical arm and
     // the brute-force-cosine vector arm over the shared query set (doc ids
     // divisible by 101 that also have an embedding) — integer micro-unit
     // contributions, so the fusion is bit-replayable from the arm ranks
-    "ann_hybrid_rrf" -> ((s, d) => {
+    Entry("ann_hybrid_rrf", (s, d) => {
       val dd = docs(s, d)
       val e = embeddings(s, d)
       val q = dd.where(col("doc_id") % 101 === 0)
@@ -1128,79 +2509,210 @@ object PipelineQueries {
         .select(col("query_id"), col("neighbor_id").as("doc_id"),
           col("rank").cast("long").as("rank"))
       Similarity.rrfFuse(Seq(lex, vec), c = RrfC, topK = RrfTopK)
+    },
+      {
+      val k1 = s"$Bm25K1"
+      val k1p1 = s"${Bm25K1 + 1.0}"
+      val b = s"$Bm25B"
+      val oneMinusB = s"${1.0 - Bm25B}"
+      s"""WITH ${toksCte("documents")},
+         |tok AS (SELECT doc_id, unnest(w) AS word FROM toks),
+         |tf AS (SELECT doc_id, word, count(*) AS tf FROM tok WHERE word <> '' GROUP BY 1, 2),
+         |dl AS (SELECT doc_id, count(*) AS dl FROM tok WHERE word <> '' GROUP BY 1),
+         |dfq AS (SELECT word, count(DISTINCT doc_id) AS df FROM tok WHERE word <> '' GROUP BY 1),
+         |g AS (SELECT (SELECT count(DISTINCT doc_id) FROM documents) AS n,
+         |             (SELECT count(*) FROM tok WHERE word <> '') AS tt),
+         |q AS (SELECT doc_id AS query_id,
+         |    array_to_string(list_slice(string_split($normSql, ' '), 1, 8), ' ') AS qtext
+         |  FROM documents
+         |  WHERE doc_id % 101 = 0 AND doc_id IN (SELECT vec_id FROM embeddings)),
+         |qt AS (SELECT DISTINCT query_id, word FROM
+         |    (SELECT query_id, unnest(string_split(qtext, ' ')) AS word FROM q)
+         |  WHERE word <> ''),
+         |sc AS (SELECT qt.query_id, tf.doc_id,
+         |    CAST(floor((g.n - dfq.df + 0.5) / (dfq.df + 0.5) *
+         |      ((tf.tf * $k1p1) / (tf.tf + $k1 * ($oneMinusB + ($b * dl.dl) / (CAST(g.tt AS DOUBLE) / CAST(g.n AS DOUBLE)))))
+         |      * 1000000.0 + 0.5) AS BIGINT) AS micro
+         |  FROM tf JOIN qt USING (word) JOIN dfq USING (word)
+         |  JOIN dl ON dl.doc_id = tf.doc_id CROSS JOIN g),
+         |su AS (SELECT query_id, doc_id, CAST(sum(micro) AS BIGINT) AS micros FROM sc GROUP BY 1, 2),
+         |lexarm AS (SELECT query_id, doc_id, rnk FROM (
+         |    SELECT query_id, doc_id,
+         |      row_number() OVER (PARTITION BY query_id ORDER BY micros DESC, doc_id ASC) AS rnk
+         |    FROM su) t WHERE rnk <= $RrfArmK),
+         |v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS ve FROM embeddings),
+         |vq AS (SELECT vec_id AS query_id, ve AS qv FROM v
+         |  WHERE vec_id IN (SELECT query_id FROM q)),
+         |vs AS (SELECT query_id, e.vec_id AS doc_id,
+         |    round(list_cosine_similarity(qv, e.ve), 6) AS cos
+         |  FROM vq, v e WHERE e.vec_id <> query_id),
+         |varm AS (SELECT query_id, doc_id, rnk FROM (
+         |    SELECT query_id, doc_id,
+         |      row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, doc_id ASC) AS rnk
+         |    FROM vs) t WHERE rnk <= $RrfArmK),
+         |uni AS (SELECT query_id, doc_id, CAST(1000000 // ($RrfC + rnk) AS BIGINT) AS rrf
+         |  FROM (SELECT * FROM lexarm UNION ALL SELECT * FROM varm) arms),
+         |fus AS (SELECT query_id, doc_id, count(*) AS n_arms, sum(rrf) AS rrf_micro
+         |  FROM uni GROUP BY 1, 2),
+         |fr AS (SELECT query_id, doc_id, n_arms, rrf_micro,
+         |    row_number() OVER (PARTITION BY query_id ORDER BY rrf_micro DESC, doc_id ASC) AS rnk2
+         |  FROM fus)
+         |SELECT query_id, doc_id, CAST(n_arms AS BIGINT) AS n_arms,
+         |  CAST(rrf_micro AS BIGINT) AS rrf_micro, CAST(rnk2 AS BIGINT) AS rank
+         |FROM fr WHERE rnk2 <= $RrfTopK""".stripMargin
     }),
     // exact-substring dedup signal: per document, how many of its 8-word
     // windows appear verbatim in some other document
-    "dedup_substring" -> ((s, d) =>
-      Dedup.duplicatedWindowStats(dedupCorpus(s, d), "doc_id", "text", n = 8)),
+    Entry("dedup_substring", (s, d) =>
+      Dedup.duplicatedWindowStats(dedupCorpus(s, d), "doc_id", "text", n = 8),
+      s"""$corpusCte, ${toksCte("corpus")},
+         |win AS (SELECT doc_id, unnest(${shinglesExpr(8)}) AS g FROM toks WHERE len(w) >= 8),
+         |shared AS (SELECT g FROM (SELECT g, count(DISTINCT doc_id) AS c FROM win GROUP BY g) WHERE c > 1),
+         |tot AS (SELECT doc_id, count(*) AS nw FROM win GROUP BY doc_id),
+         |dup AS (SELECT w.doc_id, count(*) AS du FROM win w JOIN shared USING (g) GROUP BY w.doc_id)
+         |SELECT c.doc_id, coalesce(nw, 0) AS n_windows, coalesce(du, 0) AS dup_windows,
+         |  round(coalesce(CAST(du AS DOUBLE) / nw, 0.0), 4) AS dup_frac
+         |FROM corpus c LEFT JOIN tot USING (doc_id) LEFT JOIN dup USING (doc_id)""".stripMargin),
     // asymmetric near-dup: max containment |A∩B|/min(|A|,|B|) — 1.0 for
     // the planted tail-extended copies that Jaccard under-scores
-    "dedup_containment" -> ((s, d) =>
+    Entry("dedup_containment", (s, d) =>
       Dedup.containmentViaMinhash(dedupCorpus(s, d), "doc_id", "text",
-        n = 3, k = 4, minContain = 0.9)),
+        n = 3, k = 4, minContain = 0.9),
+      s"""$ngramInterCtes
+         |SELECT a, b, round(CAST(i AS DOUBLE) / CAST(least(sa.n_sh, sb.n_sh) AS DOUBLE), 4) AS containment
+         |FROM inter JOIN sizes sa ON sa.doc_id = a JOIN sizes sb ON sb.doc_id = b
+         |WHERE round(CAST(i AS DOUBLE) / CAST(least(sa.n_sh, sb.n_sh) AS DOUBLE), 4) >= 0.9""".stripMargin),
     // SemDeDup candidate stage: intra-k-means-cluster cosine pairs
-    "dedup_semantic_pairs" -> ((s, d) =>
+    Entry("dedup_semantic_pairs", (s, d) =>
       Dedup.semanticPairs(embeddings(s, d), "vec_id", "embedding",
         k = SemK, iters = SemIters, minCos = SemMinCos,
-        maxClusterSize = SemMaxCluster)),
+        maxClusterSize = SemMaxCluster),
+      s"""WITH ${semPairCtes(s"$SemMinCos")}
+         |SELECT a, b, cos FROM hits""".stripMargin),
     // END-TO-END semantic dedup: k-means bounds candidates, cosine
     // verifies, cc clusters, min-id survivor per cluster
-    "curate_semdedup_corpus" -> ((s, d) =>
+    Entry("curate_semdedup_corpus", (s, d) =>
       pipeline.Curation.dedupSemanticKeepFirst(embeddings(s, d), "vec_id", "embedding",
           k = SemK, iters = SemIters, minCos = SemMinCos,
           maxClusterSize = SemMaxCluster)
-        .select("vec_id")),
+        .select("vec_id"),
+      s"""WITH RECURSIVE ${semPairCtes(s"$SemMinCos")},
+         |und AS (SELECT a, b FROM hits UNION SELECT b, a FROM hits),
+         |reach AS (SELECT a, b FROM und
+         |  UNION SELECT r.a, u.b FROM reach r JOIN und u ON r.b = u.a),
+         |dropd AS MATERIALIZED (SELECT a FROM reach GROUP BY a HAVING min(b) < a)
+         |SELECT vec_id FROM embeddings WHERE vec_id NOT IN (SELECT a FROM dropd)""".stripMargin),
     // product quantization: m=4 subspaces, k=16 static codewords each
-    "embedding_pq" -> ((s, d) =>
+    Entry("embedding_pq", (s, d) =>
       pipeline.Quantization.pqEncode(embeddings(s, d), "vec_id", "embedding",
-        m = 4, k = 16)),
+        m = 4, k = 16),
+      s"""WITH $pqCtes
+         |SELECT vec_id, CAST(s AS BIGINT) AS sub, CAST(cid AS BIGINT) AS code, round(d, 6) AS err2
+         |FROM enc""".stripMargin),
     // ANN over PQ codes with asymmetric distance (broadcast ADC tables)
-    "ann_pq_topk" -> ((s, d) => {
+    Entry("ann_pq_topk", (s, d) => {
       val e = embeddings(s, d)
       pipeline.Quantization.pqTopK(e, e.where(col("vec_id") < 5),
         "vec_id", "embedding", k = 3, m = 4, codewords = 16)
-    }),
+    },
+      s"""WITH $pqCtes,
+         |qs AS (SELECT vec_id AS query_id, s, x FROM sv WHERE vec_id < 5),
+         |adc AS (SELECT q.query_id, c.s, c.cid,
+         |    CAST(floor((list_sum(list_transform(range(0, len(q.x)), i -> q.x[i+1] * q.x[i+1]))
+         |     - list_sum(list_transform(range(0, len(q.x)), i -> q.x[i+1] * c.cw[i+1])) * 2
+         |     + list_sum(list_transform(range(0, len(c.cw)), i -> c.cw[i+1] * c.cw[i+1])))
+         |     * 1000000.0 + 0.5) AS BIGINT) AS micro
+         |  FROM qs q JOIN cb c USING (s)),
+         |dd AS (SELECT a.query_id, e.vec_id AS neighbor_id, CAST(sum(a.micro) AS BIGINT) AS micros
+         |  FROM enc e JOIN adc a ON a.s = e.s AND a.cid = e.cid AND a.query_id <> e.vec_id
+         |  GROUP BY 1, 2),
+         |r AS (SELECT query_id, neighbor_id, micros,
+         |    row_number() OVER (PARTITION BY query_id ORDER BY micros ASC, neighbor_id ASC) AS rnk FROM dd)
+         |SELECT query_id, neighbor_id,
+         |  floor(CAST(micros AS DOUBLE) / 100.0 + 0.5) / 10000.0 AS dist,
+         |  CAST(rnk AS BIGINT) AS rank
+         |FROM r WHERE rnk <= 3""".stripMargin),
     // IVF-PQ: inverted-list routing + ADC scoring over the STORED codes —
     // the per-query serving cost of the build-once index lifecycle (the
     // r11 entry re-encoded the whole corpus per call, so its bench number
     // measured one-time index build and inflated with every code-size
     // increase; the encode pass now has its own entry below)
-    "ann_ivfpq_topk" -> ((s, d) => {
+    Entry("ann_ivfpq_topk", (s, d) => {
       val e = embeddings(s, d)
       val (cent, cb) = ivfPqIdx(s, d)
       pipeline.Quantization.ivfPqSearchCodes(ivfPqCodes(s, d),
         e.where(col("vec_id") < 5),
         "vec_id", "embedding", k = 3, nprobe = 8, m = 16, cent, cb)
-    }),
+    },
+      s"""WITH $pqBaseCtes,
+         |${ivfpqResCtes(5)},
+         |r AS (SELECT query_id, neighbor_id, micros,
+         |    row_number() OVER (PARTITION BY query_id ORDER BY micros ASC, neighbor_id ASC) AS rnk FROM rq_dd)
+         |SELECT query_id, neighbor_id,
+         |  floor(CAST(micros AS DOUBLE) / 100.0 + 0.5) / 10000.0 AS dist,
+         |  CAST(rnk AS BIGINT) AS rank
+         |FROM r WHERE rnk <= 3""".stripMargin),
     // the one-time encode pass in the open: corpus → (vec_id, lcid, sub,
     // code) against the trained quantizers — benched on its own so the
     // index-build cost stays visible without riding any query entry
     // (bypasses the codes memo by construction: it IS the cold pass)
-    "ann_ivfpq_encode" -> ((s, d) => {
+    Entry("ann_ivfpq_encode", (s, d) => {
       val (cent, cb) = ivfPqIdx(s, d)
       pipeline.Quantization.ivfPqEncode(embeddings(s, d), "vec_id", "embedding",
         16, cent, cb)
-    }),
+    },
+      // the encode pass replayed verbatim: rq_enc IS the stored-code
+      // representation every serve-path query above searches
+      s"""WITH $pqBaseCtes,
+         |${ivfpqResCtes(5)}
+         |SELECT vec_id, lcid, CAST(s AS BIGINT) AS sub, CAST(cid AS BIGINT) AS code
+         |FROM rq_enc""".stripMargin),
     // IVF-PQ + exact rerank (the faiss "refine" pattern): ADC proposes
     // k·rerank candidates from the codes, only those rows' raw vectors
     // are fetched and exactly rescored — quantization error becomes a
     // recall-only concern at candidate-bounded cost
-    "ann_ivfpq_rerank" -> ((s, d) => {
+    Entry("ann_ivfpq_rerank", (s, d) => {
       val e = embeddings(s, d)
       val (cent, cb) = ivfPqIdx(s, d)
       pipeline.Quantization.ivfPqTopKRerank(e, e.where(col("vec_id") < 5),
         "vec_id", "embedding", k = 3, rerank = 4, nprobe = 8, m = 16, cent, cb)
-    }),
+    },
+      // ADC candidates (k·rerank = 12 by micros) exactly rescored with
+      // cosine, top-3 by exact score — mirrors ivfPqTopKRerank
+      s"""WITH $pqBaseCtes,
+         |${ivfpqResCtes(5)},
+         |rcand AS (SELECT query_id, neighbor_id FROM (
+         |  SELECT query_id, neighbor_id,
+         |    row_number() OVER (PARTITION BY query_id ORDER BY micros ASC, neighbor_id ASC) AS rnk
+         |  FROM rq_dd) t WHERE rnk <= 12),
+         |rsc AS (SELECT c.query_id, c.neighbor_id,
+         |  round(list_cosine_similarity(q.ve, n.ve), 6) AS cos
+         |  FROM rcand c JOIN v q ON q.vec_id = c.query_id JOIN v n ON n.vec_id = c.neighbor_id),
+         |rr AS (SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id ASC) AS rnk FROM rsc)
+         |SELECT query_id, neighbor_id, cos, CAST(rnk AS BIGINT) AS rank
+         |FROM rr WHERE rnk <= 3""".stripMargin),
     // the persisted-index lifecycle: load the parquet index (centroids /
     // codebooks / codes / meta, built + saved once per corpus) and serve
     // top-k from the STORED codes — the raw embeddings never enter the
     // serving plan
-    "ann_ivfpq_serve" -> ((s, d) => {
+    Entry("ann_ivfpq_serve", (s, d) => {
       val e = embeddings(s, d)
       val idx = pipeline.AnnIndex.load(s, savedAnnIndex(s, d))
       pipeline.AnnIndex.search(idx, e.where(col("vec_id") < 5),
         "vec_id", "embedding", k = 3, nprobe = 8)
-    }),
+    },
+      // the persisted-index serve path is pinned to IDENTICAL results as
+      // the direct ivf-pq search (same quantizers, same codes, same ADC
+      // arithmetic — only read back from parquet), so the oracle is the
+      // same replay
+      s"""WITH $pqBaseCtes,
+         |${ivfpqResCtes(5)},
+         |r AS (SELECT query_id, neighbor_id, micros,
+         |    row_number() OVER (PARTITION BY query_id ORDER BY micros ASC, neighbor_id ASC) AS rnk FROM rq_dd)
+         |SELECT query_id, neighbor_id,
+         |  floor(CAST(micros AS DOUBLE) / 100.0 + 0.5) / 10000.0 AS dist,
+         |  CAST(rnk AS BIGINT) AS rank
+         |FROM r WHERE rnk <= 3""".stripMargin),
     // STREAMING ANN ingest — AnnIndex.appendSave driven by the real
     // streaming engine: a staged source of new embeddings (every 3rd
     // vector re-keyed +10000) arrives in 3 micro-batches
@@ -1213,7 +2725,7 @@ object PipelineQueries {
     // run (appends are cumulative) and outlives the served checkpoint until
     // the memo is busted; quantizers/codes come from the build-once memo,
     // staged untimed.
-    "stream_ann_ingest" -> Memo.coldResult("stream_ann_ingest", Memo.Stream) { (s, d) =>
+    Entry("stream_ann_ingest", Memo.coldResult("stream_ann_ingest", Memo.Stream) { (s, d) =>
       val src = streamFixtures(s, d, "stream_ann_ingest")
       val idxDir = Memo.tempDir("graft-annidx-ingest")
       val (cent, cb) = ivfPqIdx(s, d)
@@ -1235,1259 +2747,34 @@ object PipelineQueries {
       checkpoint(pipeline.AnnIndex.search(pipeline.AnnIndex.load(s, idxDir),
           e.where(col("vec_id") < 5), "vec_id", "embedding", k = 3, nprobe = 8))
     },
-    // ANN QA: measured recall@k per approximate method (LSH buckets, IVF
-    // probing, IVF-PQ ADC) against the exact brute-force top-k over the
-    // same query slice — the vector-space sibling of dedup_recall_report
-    "ann_recall_report" -> ((s, d) => {
-      val e = embeddings(s, d)
-      Similarity.annRecallReport(e, e.where(col("vec_id") < 30),
-        "vec_id", "embedding", k = 3, planes = 4, nlist = 16, nprobe = 4,
-        m = 16, codewords = 256, ivfPqNprobe = 8, ivfPqIdx = Some(ivfPqIdx(s, d)))
-    }),
-    // int8 quantization-loss recall: top-k served from the code*scale
-    // reconstruction (full-precision queries) vs the exact ground truth —
-    // the precision-truncation twin of the matryoshka rungs
-    "ann_int8_recall" -> ((s, d) => {
-      val e = embeddings(s, d)
-      pipeline.Quantization.int8Recall(e, e.where(col("vec_id") < 30),
-        "vec_id", "embedding", k = 3)
-    }),
-    // Matryoshka acceptance test: cosine top-k recall when only the first
-    // 8/16/32/64 dimensions are scored, vs the full-dim exact top-k —
-    // the measurement that licenses storing truncated prefixes on the
-    // serving tier
-    "ann_matryoshka_recall" -> ((s, d) => {
-      val e = embeddings(s, d)
-      Similarity.matryoshkaRecall(e, e.where(col("vec_id") < 30),
-        "vec_id", "embedding", k = 3, prefixes = Seq(8, 16, 32, 64))
-    }),
-    // right-to-forget over the persisted index: ids 40-43 removed (one
-    // anti-join on the stored codes, quantizers frozen), then served —
-    // results must equal an index whose corpus never held those vectors
-    "ann_ivfpq_forget" -> ((s, d) => {
-      val e = embeddings(s, d)
-      val idx = pipeline.AnnIndex.load(s, savedAnnIndex(s, d))
-      import s.implicits._
-      val gone = pipeline.AnnIndex.remove(idx, Seq(40L, 41L, 42L, 43L).toDF("vec_id"))
-      pipeline.AnnIndex.search(gone, e.where(col("vec_id") < 5),
-        "vec_id", "embedding", k = 3, nprobe = 8)
-    }),
-    // corpus rebalancing: sqrt-temperature quotas per detected language
-    "curate_temperature_sample" -> ((s, d) => {
-      val withLang = docs(s, d).select(col("doc_id"),
-        TextAnalysis.langId(col("text")).as("lang_guess"))
-      pipeline.Curation.temperatureSample(withLang, "doc_id", "lang_guess",
-          total = TempTotal, seed = TempSeed, overshoot = StratOvershoot)
-        .select("doc_id", "lang_guess")
-    }),
-    // pipeline QA: which sources copy from which — per (source_a, source_b),
-    // exact-dup pair counts from per-group tallies (never enumerated pairs);
-    // planted corpus: every 10th doc mirrored under source 'mirror'
-    "dedup_cross_source" -> ((s, d) => {
-      val dd = docs(s, d)
-      val sourced = dd.select(col("doc_id"), col("text"), col("source"))
-        .unionByName(dd.where(col("doc_id") % 10 === 0)
-          .select((col("doc_id") + 2000000L).as("doc_id"), col("text"),
-            lit("mirror").as("source")))
-      Dedup.crossSourceDupMatrix(sourced, "doc_id", "text", "source")
-    }),
-    // pipeline QA: language-ID confusion matrix against the ground-truth
-    // lang column — per (lang, lang_guess), document count
-    "text_langid_confusion" -> ((s, d) =>
-      docs(s, d).select(col("lang"), TextAnalysis.langId(col("text")).as("lang_guess"))
-        .groupBy("lang", "lang_guess").agg(count(lit(1)).as("n_docs"))),
-    // pipeline QA: embedding-space outliers — the 20 vectors farthest from
-    // their own fitted k-means centroid (off-distribution surface first)
-    "embedding_outliers" -> ((s, d) =>
-      pipeline.Clustering.centroidOutliers(embeddings(s, d), "vec_id", "embedding",
-        k = SemK, iters = SemIters, topN = 20)),
-    // per-cluster prototypes: the 10 vectors CLOSEST to their fitted
-    // k-means centroid per cluster (the selection half of a D4-style
-    // pipeline; dual of embedding_outliers)
-    "curate_prototypes" -> ((s, d) =>
-      pipeline.Clustering.clusterPrototypes(embeddings(s, d), "vec_id", "embedding",
-        k = SemK, iters = SemIters, perCluster = 10)),
-    // collocation mining: top-20 adjacent word pairs by PMI (micro-ln)
-    // among bigrams with count >= 5 — multi-word-expression detection
-    "text_collocations" -> ((s, d) =>
-      TextAnalysis.collocations(docs(s, d), "doc_id", "text",
-        minCount = 5, topK = 20)),
-    // per-source unigram entropy (exact micro-ln cell sums) — the corpus
-    // diversity diagnostic
-    "corpus_entropy" -> ((s, d) =>
-      TextAnalysis.sourceEntropy(docs(s, d), "source", "text")),
-    // corpus length profile: 50-word histogram buckets, all-integer
-    "corpus_histogram" -> ((s, d) =>
-      docs(s, d).select(col("doc_id"),
-        TextAnalysis.wordCount(col("text")).cast("long").as("nw"),
-        length(col("text")).cast("long").as("nc"))
-        .groupBy(expr("nw DIV 50").as("bucket"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum("nw").as("total_words"), sum("nc").as("total_chars"),
-          min("nw").as("min_words"), max("nw").as("max_words"))),
-    // containment recall for ENGULFED pairs: every 5th doc contributes an
-    // 8-word prefix copy (containment 1.0, Jaccard ~0 — the pair class
-    // LSH banding systematically misses); candidates come from the
-    // df-bounded rare-shingle join, verified with exact containment
-    "dedup_containment_rare" -> ((s, d) => {
-      val base = docs(s, d).select("doc_id", "text")
-      val tiny = base.where(col("doc_id") % 5 === 0)
-        .select((col("doc_id") + 4000000L).as("doc_id"),
-          array_join(slice(TextAnalysis.words(col("text")), 1, 8), " ").as("text"))
-      Dedup.containmentViaRareShingles(base.unionByName(tiny), "doc_id", "text",
-        n = 3, maxDf = 8, minContain = 0.9)
-    }),
-    // winnowing (MOSS) fingerprints: per-window minimum gram hash,
-    // distinct selected set per document — position-robust overlap
-    // detection with the SWA'03 guarantee
-    "text_winnowing" -> ((s, d) =>
-      TextAnalysis.winnowingFingerprints(docs(s, d), "doc_id", "text",
-        n = 4, window = 4)),
-    // embedding-QA: per-dimension corpus stats (collapsed dims, scale
-    // drift, clipping) with exact DECIMAL-carried moments
-    "embedding_dim_stats" -> ((s, d) =>
-      pipeline.Clustering.dimStats(embeddings(s, d), "embedding")),
-    // tokenizer-budget QA: per-doc OOV rate against the corpus's own
-    // top-500 terms (term_freq desc, word asc)
-    "text_oov_rate" -> ((s, d) =>
-      pipeline.Curation.oovReport(docs(s, d), "doc_id", "text", vocabSize = 500)),
-    // eval-suite screening: contamination matrix over three overlapping
-    // synthetic benchmarks (doc_id % 10 / % 7 / % 13 slices) — one corpus
-    // gram scan serves all three
-    "curate_contamination_matrix" -> ((s, d) => {
-      val dd = docs(s, d).select("doc_id", "text")
-      def bench(name: String, m: Int) = dd.where(col("doc_id") % m === 0)
-        .select(lit(name).as("bench_id"), col("doc_id"), col("text"))
-      val suite = bench("b10", 10).unionByName(bench("b7", 7))
-        .unionByName(bench("b13", 13))
-      pipeline.Curation.contaminationMatrix(dd, suite, "doc_id", "text",
-        "bench_id", n = 5)
-    }),
-    // banding-config tuning: verified-pair counts at a threshold ladder
-    // from ONE propose/verify pass over the planted-dup corpus
-    "dedup_threshold_sweep" -> ((s, d) =>
-      Dedup.thresholdSweep(dedupCorpus(s, d), "doc_id", "text",
-        n = 3, k = 4, thresholds = Seq(0.5, 0.7, 0.9))),
-    // context-window chunking: 32-token chunks starting every 24 tokens
-    // (8-token overlap between consecutive chunks)
-    "curate_chunk" -> ((s, d) =>
-      pipeline.Curation.chunkDocuments(docs(s, d), "doc_id", "text",
-        chunkSize = 32, stride = 24)),
-    // duplicated-span coverage over the planted-dup corpus: fraction of
-    // each doc's token positions covered by a 5-gram appearing in >= 2
-    // distinct documents
-    "text_hot_spans" -> ((s, d) =>
-      Dedup.hotSpanCoverage(dedupCorpus(s, d), "doc_id", "text",
-        n = 5, minDf = 2)),
-    // PCA/whitening prep: exact upper-triangle covariance of the embedding
-    // dimensions (decimal-carried moments, like embedding_dim_stats)
-    "embedding_covariance" -> ((s, d) =>
-      pipeline.Clustering.covariance(embeddings(s, d), "embedding")),
-    // semantic decontamination: scrub corpus vectors (vec_id % 50 != 0)
-    // that LSH-bucket with AND cosine-verify against the synthetic eval
-    // slice (vec_id % 50 = 0); survivors come back
-    "curate_semantic_decontaminate" -> ((s, d) => {
-      val e = embeddings(s, d)
-      pipeline.Curation.semanticDecontaminate(
-        e.where(col("vec_id") % 50 =!= 0), e.where(col("vec_id") % 50 === 0),
-        "vec_id", "embedding", planes = 8, minCos = 0.3)
-    }),
-    // embedding-health screen: per-vector L1/L2/Linf norms
-    "embedding_norms" -> ((s, d) =>
-      pipeline.Clustering.norms(embeddings(s, d), "vec_id", "embedding")),
-    // corpus naturalness: least-squares Zipf fit over the top-200 terms
-    "text_zipf" -> ((s, d) =>
-      pipeline.TextAnalysis.zipfFit(docs(s, d), "doc_id", "text", topV = 200)),
-    // tokenizer-QA: learned-BPE fertility (tokens per word) and chars per
-    // token, per (lang, source) slice — the screen that catches slices
-    // whose script the merges never saw before they burn token budget
-    "text_fertility" -> ((s, d) =>
-      pipeline.Tokenizer.fertilityReport(docs(s, d), "doc_id", "text",
-        Seq("lang", "source"), rounds = BpeRounds)),
-    // synthetic-data QA: distinct-bigram diversity per source (the
-    // distinct-n / mode-collapse screen)
-    "text_distinct_ngrams" -> ((s, d) =>
-      pipeline.TextAnalysis.distinctNgramReport(docs(s, d), "source", "text",
-        n = 2)),
-    // Gopher-style LINE-level repetition rules over the composite
-    // paragraph corpus (same cid % 40 fixture as dedup_paragraphs — the
-    // planted exact copies land in the same composite, so duplicate
-    // lines really occur); the n-gram-level rules are text_repetition
-    "text_dup_lines" -> ((s, d) => {
-      val comp = dedupCorpus(s, d)
-        .groupBy((col("doc_id") % 40).as("cid"))
-        .agg(concat_ws("\n",
-          array_sort(collect_list(struct(col("doc_id"), col("text"))))
-            .getField("text")).as("text"))
-      pipeline.TextAnalysis.dupLineReport(comp, "cid", "text")
-    }),
-    // exact-percentile length gate via the token-count histogram: keep the
-    // [5%, 95%] word-count band
-    "curate_length_filter" -> ((s, d) =>
-      pipeline.Curation.lengthBandFilter(docs(s, d), "doc_id", "text",
-        pLo = 0.05, pHi = 0.95)),
-    // top principal component via 3 power-iteration rounds over the
-    // covariance matrix — corpus touched once, eigensolve on d-row frames
-    "embedding_pca_loadings" -> ((s, d) =>
-      pipeline.Clustering.pcaLoadings(embeddings(s, d), "embedding", iters = 3)),
-    // mixture weights: per-(lang, source) doc/token counts and corpus shares
-    "curate_mix_report" -> ((s, d) =>
-      pipeline.Curation.mixReport(docs(s, d), "text", Seq("lang", "source"))),
-    // PCA projection: centered coordinates on the top-2 components
-    // (leading loadings + one Hotelling deflation), the usable
-    // dimensionality-reduction transform built on embedding_pca_loadings
-    "embedding_pca_project" -> ((s, d) =>
-      pipeline.Clustering.pcaProject(embeddings(s, d), "vec_id", "embedding",
-        p = 2, iters = 3)),
-    // PCA whitening: the projection divided by sqrt(Rayleigh lambda) per
-    // component — unit-variance decorrelated coordinates
-    "embedding_whiten" -> ((s, d) =>
-      pipeline.Clustering.pcaWhiten(embeddings(s, d), "vec_id", "embedding",
-        p = 2, iters = 3)),
-  )
-
-  val oracles: Map[String, String] = {
-    // bit j of md5(token): hex digit j/4, bit (3 - j%4)
-    def simhashTermsFor(bits: Int): String = (0 until bits).map { j =>
-      val digit = s"substr(md5(t), ${j / 4 + 1}, 1)"
-      val bit = s"((strpos('0123456789abcdef', $digit) - 1) >> ${3 - j % 4}) & 1"
-      val contrib = s"list_sum(list_transform(w, t -> CASE WHEN ($bit) = 1 THEN 1 ELSE -1 END))"
-      s"CASE WHEN $contrib > 0 THEN CAST(${1L << (bits - 1 - j)} AS BIGINT) ELSE 0 END"
-    }.mkString(" + ")
-    val simhashTerms = simhashTermsFor(16)
-
-    def langOcc(w: String) =
-      s"((len(p) - len(replace(p, ' $w ', ''))) // ${w.length + 2})"
-    def langScore(ws: Seq[String]) = ws.map(langOcc).mkString(" + ")
-    val m = TextAnalysis.langMarkers
-
-    // mirrors Clustering.kmeans step for step with unrolled iterations:
-    // same distance expression shape (vv - vc*2 + cc, left-fold list_sum ≙
-    // the native dot's fold order), same decimal mean, same tie-breaks.
-    // Returns the CTE chain (ending in cents$iters + final_assign) so the
-    // IVF-with-fitted-quantizer oracle can compose on top of it.
-    // squared-L2 of vector alias v.ve against centroid alias $c.cv — the
-    // exact expression shape Clustering's assignment evaluates (also used
-    // by the embedding_outliers oracle)
-    def kmeansDist(c: String) =
-      s"(list_sum(list_transform(range(0, len(v.ve)), i -> v.ve[i+1] * v.ve[i+1]))" +
-        s" - list_sum(list_transform(range(0, len(v.ve)), i -> v.ve[i+1] * $c.cv[i+1])) * 2" +
-        s" + list_sum(list_transform(range(0, len($c.cv)), i -> $c.cv[i+1] * $c.cv[i+1])))"
-
-    def kmeansCtes(k: Int, iters: Int): String = {
-      def dist(c: String) = kmeansDist(c)
-      val steps = (0 until iters).map { t =>
-        s"""a$t AS (SELECT vec_id, cid FROM (
-           |  SELECT v.vec_id, c.cid,
-           |    row_number() OVER (PARTITION BY v.vec_id ORDER BY ${dist("c")} ASC, c.cid ASC) AS rn
-           |  FROM v, cents$t c) WHERE rn = 1),
-           |s$t AS (SELECT a.cid, vu.pos,
-           |    CAST(sum(CAST(vu.val AS DECIMAL(30,10))) AS DOUBLE) / count(*) AS m
-           |  FROM a$t a JOIN vu ON vu.vec_id = a.vec_id GROUP BY a.cid, vu.pos),
-           |f$t AS (SELECT cid, array_agg(m ORDER BY pos) AS fresh FROM s$t GROUP BY cid),
-           |cents${t + 1} AS (SELECT c.cid, coalesce(f.fresh, c.cv) AS cv
-           |  FROM cents$t c LEFT JOIN f$t f USING (cid))""".stripMargin
-      }.mkString(",\n")
-      s"""v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS ve FROM embeddings),
-         |vu AS (SELECT vec_id, unnest(ve) AS val, unnest(range(0, len(ve))) AS pos FROM v),
-         |cents0 AS (SELECT vec_id AS cid, ve AS cv FROM v ORDER BY vec_id LIMIT $k),
-         |$steps,
-         |final_assign AS (SELECT vec_id, cid FROM (
-         |  SELECT v.vec_id, c.cid,
-         |    row_number() OVER (PARTITION BY v.vec_id ORDER BY ${dist("c")} ASC, c.cid ASC) AS rn
-         |  FROM v, cents$iters c) WHERE rn = 1)""".stripMargin
-    }
-
-    // shared by text_langid, corpus_report and curate_pipeline (nested
-    // WITH is legal inside a CTE subquery, so these compose verbatim);
-    // the `For` variants re-source the same expressions for a chain stage
-    def textLangidSqlFor(src: String) =
-      s"""WITH norm AS (SELECT doc_id, ' '||$normSql||' ' AS p FROM $src),
-         |scores AS (SELECT doc_id,
-         |  ${langScore(m("en"))} AS s_en, ${langScore(m("de"))} AS s_de,
-         |  ${langScore(m("fr"))} AS s_fr, ${langScore(m("es"))} AS s_es
-         |FROM norm)
-         |SELECT doc_id, CASE
-         |  WHEN greatest(s_en, s_de, s_fr, s_es) = 0 THEN 'und'
-         |  WHEN s_fr = greatest(s_en, s_de, s_fr, s_es) THEN 'fr'
-         |  WHEN s_es = greatest(s_en, s_de, s_fr, s_es) THEN 'es'
-         |  WHEN s_en = greatest(s_en, s_de, s_fr, s_es) THEN 'en'
-         |  ELSE 'de' END AS lang_guess
-         |FROM scores""".stripMargin
-    val textLangidSql = textLangidSqlFor("documents")
-    def textQualitySqlFor(src: String) =
-      s"""WITH f AS (SELECT doc_id, text, $normSql AS norm,
-         |  ' '||$normSql||' ' AS p,
-         |  CASE WHEN len($normSql) = 0 THEN 0 ELSE len(string_split($normSql, ' ')) END AS nw
-         |FROM $src)
-         |SELECT doc_id,
-         |  CAST(len(text) AS BIGINT) AS n_chars,
-         |  CAST(nw AS BIGINT) AS n_words,
-         |  round(CASE WHEN nw = 0 THEN 0.0 ELSE CAST(len(norm) - (nw - 1) AS DOUBLE) / nw END, 4) AS avg_word_len,
-         |  round(CASE WHEN len(text) = 0 THEN 0.0 ELSE CAST(len(text) - len(regexp_replace(text, '[.,;:!?''"]', '', 'g')) AS DOUBLE) / len(text) END, 4) AS punct_ratio,
-         |  round(CASE WHEN len(text) = 0 THEN 0.0 ELSE CAST(len(text) - len(regexp_replace(text, '[0-9]', '', 'g')) AS DOUBLE) / len(text) END, 4) AS digit_ratio,
-         |  round(CASE WHEN nw = 0 THEN 0.0 ELSE CAST(${langScore(Seq("the", "and", "of", "to", "a", "in", "is", "that"))} AS DOUBLE) / nw END, 4) AS stopword_ratio,
-         |  round(greatest(0.0,
-         |    least(CAST(nw AS DOUBLE) / 100.0, 1.0) * 0.4 +
-         |    least(round(CASE WHEN nw = 0 THEN 0.0 ELSE CAST(${langScore(Seq("the", "and", "of", "to", "a", "in", "is", "that"))} AS DOUBLE) / nw END, 4) * 4.0, 1.0) * 0.4 +
-         |    (1.0 - least(round(CASE WHEN len(text) = 0 THEN 0.0 ELSE CAST(len(text) - len(regexp_replace(text, '[0-9]', '', 'g')) AS DOUBLE) / len(text) END, 4) * 5.0, 1.0)) * 0.2), 4) AS quality
-         |FROM f""".stripMargin
-    val textQualitySql = textQualitySqlFor("documents")
-
-    // shared by dedup_semantic_pairs / curate_semdedup_corpus: the fitted
-    // assignment joined back to the vectors, then intra-cluster pairs —
-    // mirroring Dedup.semanticPairs' mega-cluster guard: members of
-    // clusters larger than SemMaxCluster are sub-split by md5(id) mod
-    // ceil(size/cap) and pairs only form within a (cid, sub) cell
-    // (composes on top of kmeansCtes' v + final_assign)
-    def semPairCtes(minCosSql: String): String =
-      s"""${kmeansCtes(k = SemK, iters = SemIters)},
-         |asgv AS (SELECT f.vec_id, f.cid, v.ve FROM final_assign f JOIN v USING (vec_id)),
-         |csz AS (SELECT cid, count(*) AS csz FROM final_assign GROUP BY cid),
-         |asgs AS (SELECT a.vec_id, a.cid, a.ve,
-         |    CAST(concat('0x', substr(md5('sem|' || CAST(a.vec_id AS VARCHAR)), 1, 6)) AS BIGINT)
-         |      % ((csz + ${SemMaxCluster - 1}) // $SemMaxCluster) AS sub
-         |  FROM asgv a JOIN csz USING (cid)),
-         |prs AS MATERIALIZED (SELECT l.vec_id AS a, r.vec_id AS b,
-         |    round(list_cosine_similarity(l.ve, r.ve), 4) AS cos
-         |  FROM asgs l JOIN asgs r ON l.cid = r.cid AND l.sub = r.sub AND l.vec_id < r.vec_id)""".stripMargin +
-        s",\nhits AS (SELECT a, b, cos FROM prs WHERE cos >= $minCosSql)"
-
-    // shared by embedding_pq / ann_pq_topk: sub-vector split, static
-    // codebook, argmin encoding (mirrors Quantization.subVectors /
-    // pqCodebook / pqEncode at m=4, k=16)
-    val pqBaseCtes =
-      """v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS ve FROM embeddings),
-        |sv AS (SELECT vec_id, s,
-        |    list_slice(ve, s * (len(ve) // 4) + 1, (s + 1) * (len(ve) // 4)) AS x
-        |  FROM v CROSS JOIN (SELECT unnest(range(0, 4)) AS s))""".stripMargin
-    // residual IVF-PQ chain (mirrors Quantization.ivfPqTopK): coarse
-    // assignment, residual codebook from ids [16, 32), residual-ADC encode
-    // and per-(query, probed-list) ADC tables — dist(x − c, cw) expanded
-    // into the same pinned dot-product association as resSubDist
-    def dotSql(a: String, b: String) =
-      s"list_sum(list_transform(range(0, len($a)), i -> $a[i+1] * $b[i+1]))"
-    def resDistSql(x: String, c: String, cw: String) =
-      s"${dotSql(x, x)} - ${dotSql(x, c)} * 2 + ${dotSql(c, c)}" +
-        s" - (${dotSql(x, cw)} - ${dotSql(c, cw)}) * 2 + ${dotSql(cw, cw)}"
-    def ivfpqResCtes(qBound: Int, m: Int = 16, cw: Int = 256, nprobe: Int = 8): String = {
-      val iters = 2
-      val nlist = 16
-      // fitted coarse quantizer: the same unrolled Lloyd chain as
-      // kmeansCtes (L2 assignment, DECIMAL(30,10) sums), rq_-prefixed so
-      // it composes with queries that already define v/cent/etc.
-      val coarse = (0 until iters).map { t =>
-        s"""rq_a$t AS (SELECT vec_id, cid FROM (
-           |  SELECT v.vec_id, c.cid,
-           |    row_number() OVER (PARTITION BY v.vec_id ORDER BY ${kmeansDist("c")} ASC, c.cid ASC) AS rn
-           |  FROM v, rq_cents$t c) WHERE rn = 1),
-           |rq_s$t AS (SELECT a.cid, vu.pos,
-           |    CAST(sum(CAST(vu.val AS DECIMAL(30,10))) AS DOUBLE) / count(*) AS m
-           |  FROM rq_a$t a JOIN rq_vu vu ON vu.vec_id = a.vec_id GROUP BY a.cid, vu.pos),
-           |rq_f$t AS (SELECT cid, array_agg(m ORDER BY pos) AS fresh FROM rq_s$t GROUP BY cid),
-           |rq_cents${t + 1} AS (SELECT c.cid, coalesce(f.fresh, c.cv) AS cv
-           |  FROM rq_cents$t c LEFT JOIN rq_f$t f USING (cid))""".stripMargin
-      }.mkString(",\n")
-      // residual codebook training: seeds = residual sub-vectors of ids
-      // [16, 32), then `iters` unrolled Lloyd steps in each subspace with
-      // the pinned resSubDist association and decimal-sum means
-      val train = (0 until iters).map { t =>
-        s"""rq_pa$t AS (SELECT vec_id, s, cid FROM (
-           |  SELECT e.vec_id, e.s, b.cid,
-           |    row_number() OVER (PARTITION BY e.vec_id, e.s ORDER BY
-           |      ${resDistSql("e.x", "c.c", "b.cw")} ASC, b.cid ASC) AS rn
-           |  FROM rq_sv e JOIN rq_asg g ON g.vec_id = e.vec_id
-           |  JOIN rq_cs c ON c.lcid = g.lcid AND c.s = e.s
-           |  JOIN rq_cb$t b ON b.s = e.s) t WHERE rn = 1),
-           |rq_ps$t AS (SELECT a.s, a.cid, rc.pos,
-           |    CAST(sum(CAST(rc.rval AS DECIMAL(30,10))) AS DOUBLE) / count(*) AS mv
-           |  FROM rq_pa$t a JOIN rq_rcomp rc ON rc.vec_id = a.vec_id AND rc.s = a.s
-           |  GROUP BY a.s, a.cid, rc.pos),
-           |rq_pf$t AS (SELECT s, cid, array_agg(mv ORDER BY pos) AS fresh
-           |  FROM rq_ps$t GROUP BY s, cid),
-           |rq_cb${t + 1} AS (SELECT c.s, c.cid, coalesce(f.fresh, c.cw) AS cw
-           |  FROM rq_cb$t c LEFT JOIN rq_pf$t f ON f.s = c.s AND f.cid = c.cid)""".stripMargin
-      }.mkString(",\n")
-      s"""rq_vu AS (SELECT vec_id, unnest(ve) AS val, unnest(range(0, len(ve))) AS pos FROM v),
-         |rq_sv AS (SELECT vec_id, s,
-         |    list_slice(ve, s * (len(ve) // $m) + 1, (s + 1) * (len(ve) // $m)) AS x
-         |  FROM v CROSS JOIN (SELECT unnest(range(0, $m)) AS s)),
-         |rq_cents0 AS (SELECT vec_id AS cid, ve AS cv FROM v ORDER BY vec_id LIMIT $nlist),
-         |$coarse,
-         |rq_cent AS (SELECT cid AS lcid, cv FROM rq_cents$iters),
-         |rq_cs AS (SELECT lcid, s,
-         |    list_slice(cv, s * (len(cv) // $m) + 1, (s + 1) * (len(cv) // $m)) AS c
-         |  FROM rq_cent CROSS JOIN (SELECT unnest(range(0, $m)) AS s)),
-         |rq_asg AS MATERIALIZED (SELECT vec_id, lcid FROM (
-         |  SELECT v.vec_id, c.lcid,
-         |    row_number() OVER (PARTITION BY v.vec_id ORDER BY list_cosine_similarity(v.ve, c.cv) DESC, c.lcid ASC) AS rn
-         |  FROM v, rq_cent c) t WHERE rn = 1),
-         |rq_rcomp AS MATERIALIZED (SELECT vec_id, s, pos, xv - cv AS rval FROM (
-         |  SELECT e.vec_id, e.s, unnest(e.x) AS xv, unnest(c.c) AS cv,
-         |    unnest(range(0, len(e.x))) AS pos
-         |  FROM rq_sv e JOIN rq_asg g ON g.vec_id = e.vec_id
-         |  JOIN rq_cs c ON c.lcid = g.lcid AND c.s = e.s)),
-         |rq_cb0 AS (SELECT r.s, r.vec_id AS cid,
-         |    list_transform(range(0, len(r.x)), i -> r.x[i+1] - c.c[i+1]) AS cw
-         |  FROM rq_sv r JOIN rq_asg g ON g.vec_id = r.vec_id
-         |  JOIN rq_cs c ON c.lcid = g.lcid AND c.s = r.s
-         |  WHERE r.vec_id >= $nlist AND r.vec_id < ${nlist + cw}),
-         |$train,
-         |rq_enc AS (SELECT vec_id, lcid, s, cid FROM (
-         |  SELECT e.vec_id, g.lcid, e.s, b.cid,
-         |    row_number() OVER (PARTITION BY e.vec_id, e.s ORDER BY
-         |      ${resDistSql("e.x", "c.c", "b.cw")} ASC, b.cid ASC) AS rn
-         |  FROM rq_sv e JOIN rq_asg g ON g.vec_id = e.vec_id
-         |  JOIN rq_cs c ON c.lcid = g.lcid AND c.s = e.s
-         |  JOIN rq_cb$iters b ON b.s = e.s) t WHERE rn = 1),
-         |rq_probes AS MATERIALIZED (SELECT query_id, lcid FROM (
-         |  SELECT v.vec_id AS query_id, c.lcid,
-         |    row_number() OVER (PARTITION BY v.vec_id ORDER BY list_cosine_similarity(v.ve, c.cv) DESC, c.lcid ASC) AS rn
-         |  FROM v, rq_cent c WHERE v.vec_id < $qBound) t WHERE rn <= $nprobe),
-         |rq_adc AS (SELECT q.vec_id AS query_id, p.lcid, q.s, b.cid,
-         |    CAST(floor((${resDistSql("q.x", "c.c", "b.cw")}) * 1000000.0 + 0.5) AS BIGINT) AS micro
-         |  FROM rq_sv q JOIN rq_probes p ON p.query_id = q.vec_id
-         |  JOIN rq_cs c ON c.lcid = p.lcid AND c.s = q.s
-         |  JOIN rq_cb$iters b ON b.s = q.s),
-         |rq_dd AS (SELECT a.query_id, e.vec_id AS neighbor_id, CAST(sum(a.micro) AS BIGINT) AS micros
-         |  FROM rq_enc e JOIN rq_adc a ON a.lcid = e.lcid AND a.s = e.s AND a.cid = e.cid
-         |    AND a.query_id <> e.vec_id
-         |  GROUP BY 1, 2)""".stripMargin
-    }
-    val pqCtes =
-      s"""$pqBaseCtes,
-        |cb AS (SELECT s, vec_id AS cid, x AS cw FROM sv WHERE vec_id < 16),
-        |dsc AS (SELECT a.vec_id, a.s, c.cid,
-        |    (list_sum(list_transform(range(0, len(a.x)), i -> a.x[i+1] * a.x[i+1]))
-        |     - list_sum(list_transform(range(0, len(a.x)), i -> a.x[i+1] * c.cw[i+1])) * 2
-        |     + list_sum(list_transform(range(0, len(c.cw)), i -> c.cw[i+1] * c.cw[i+1]))) AS d
-        |  FROM sv a JOIN cb c USING (s)),
-        |enc AS (SELECT vec_id, s, cid, d FROM (
-        |    SELECT vec_id, s, cid, d,
-        |      row_number() OVER (PARTITION BY vec_id, s ORDER BY d ASC, cid ASC) AS rn
-        |    FROM dsc) t WHERE rn = 1)""".stripMargin
-
-    Map(
-      "dedup_exact" ->
-        s"""$corpusCte
-           |SELECT md5(text) AS content_hash, count(*) AS dup_cnt, min(doc_id) AS keep_id
-           |FROM corpus GROUP BY md5(text) HAVING count(*) > 1""".stripMargin,
-      "dedup_minhash_sigs" ->
-        s"""$corpusCte, ${toksCte("corpus")},
-           |sh AS (SELECT doc_id, ${shinglesExpr(3)} AS s FROM toks WHERE len(w) >= 3)
-           |SELECT doc_id,
-           |  list_min(list_transform(s, x -> substr(md5(x), 1, 8))) AS h0,
-           |  list_min(list_transform(s, x -> substr(md5(x), 9, 8))) AS h1,
-           |  list_min(list_transform(s, x -> substr(md5(x), 17, 8))) AS h2,
-           |  list_min(list_transform(s, x -> substr(md5(x), 25, 8))) AS h3
-           |FROM sh""".stripMargin,
-      "dedup_minhash_pairs" ->
-        s"""$corpusCte, ${toksCte("corpus")},
-           |sh AS (SELECT doc_id, ${shinglesExpr(3)} AS s FROM toks WHERE len(w) >= 3),
-           |sig AS (SELECT doc_id,
-           |  list_min(list_transform(s, x -> substr(md5(x), 1, 8))) AS h0,
-           |  list_min(list_transform(s, x -> substr(md5(x), 9, 8))) AS h1,
-           |  list_min(list_transform(s, x -> substr(md5(x), 17, 8))) AS h2,
-           |  list_min(list_transform(s, x -> substr(md5(x), 25, 8))) AS h3
-           |FROM sh),
-           |banded0 AS (
-           |  SELECT doc_id, 0 AS band, h0 AS sig FROM sig
-           |  UNION ALL SELECT doc_id, 1, h1 FROM sig
-           |  UNION ALL SELECT doc_id, 2, h2 FROM sig
-           |  UNION ALL SELECT doc_id, 3, h3 FROM sig),
-           |banded AS (
-           |  SELECT b.* FROM banded0 b JOIN (SELECT band, sig FROM banded0
-           |    GROUP BY band, sig HAVING count(*) <= 1024) ok
-           |  ON ok.band = b.band AND ok.sig = b.sig)
-           |SELECT DISTINCT l.doc_id AS a, r.doc_id AS b
-           |FROM banded l JOIN banded r ON l.band = r.band AND l.sig = r.sig AND l.doc_id < r.doc_id""".stripMargin,
-      "dedup_simhash" ->
-        s"""$corpusCte, ${toksCte("corpus")}
-           |SELECT doc_id, $simhashTerms AS simhash FROM toks""".stripMargin,
-      "dedup_simhash_pairs" ->
-        s"""$corpusCte, ${toksCte("corpus")},
-           |sig AS (SELECT doc_id, ${simhashTermsFor(64)} AS simhash FROM toks),
-           |banded AS (
-           |  SELECT doc_id, simhash, 0 AS band, (simhash >> 0) & 65535 AS chunk FROM sig
-           |  UNION ALL SELECT doc_id, simhash, 1, (simhash >> 16) & 65535 FROM sig
-           |  UNION ALL SELECT doc_id, simhash, 2, (simhash >> 32) & 65535 FROM sig
-           |  UNION ALL SELECT doc_id, simhash, 3, (simhash >> 48) & 65535 FROM sig),
-           |cand AS (SELECT DISTINCT l.doc_id AS a, r.doc_id AS b, l.simhash AS sa, r.simhash AS sb
-           |  FROM banded l JOIN banded r ON l.band = r.band AND l.chunk = r.chunk AND l.doc_id < r.doc_id)
-           |SELECT a, b, CAST(bit_count(xor(sa, sb)) AS BIGINT) AS hamming
-           |FROM cand WHERE bit_count(xor(sa, sb)) <= 3""".stripMargin,
-      "dedup_ngram_jaccard" ->
-        s"""$ngramInterCtes
-           |SELECT a, b, round(CAST(i AS DOUBLE) / CAST(sa.n_sh + sb.n_sh - i AS DOUBLE), 4) AS jaccard
-           |FROM inter JOIN sizes sa ON sa.doc_id = a JOIN sizes sb ON sb.doc_id = b
-           |WHERE round(CAST(i AS DOUBLE) / CAST(sa.n_sh + sb.n_sh - i AS DOUBLE), 4) >= 0.5""".stripMargin,
-      "agg_kmv_distinct" ->
-        s"""WITH ${toksCte("documents")},
-           |sh AS (SELECT doc_id, unnest(${shinglesExpr(3)}) AS shingle FROM toks WHERE len(w) >= 3),
-           |d AS (SELECT DISTINCT doc.source AS source, s.shingle
-           |  FROM sh s JOIN documents doc USING (doc_id)),
-           |ex AS (SELECT source, count(*) AS exact_distinct FROM d GROUP BY source),
-           |uu AS (SELECT DISTINCT source,
-           |    CAST(CAST(concat('0x', substr(md5(shingle), 1, 12)) AS BIGINT) AS DOUBLE)
-           |      / 281474976710656.0 AS u
-           |  FROM d),
-           |r AS (SELECT source, u,
-           |    row_number() OVER (PARTITION BY source ORDER BY u ASC) AS rn,
-           |    count(*) OVER (PARTITION BY source) AS nu
-           |  FROM uu),
-           |est AS (SELECT source, max(nu) AS nu,
-           |    max(CASE WHEN rn = 128 THEN u END) AS u128
-           |  FROM r GROUP BY source)
-           |SELECT e.source,
-           |  CASE WHEN e.nu < 128 THEN CAST(e.nu AS DOUBLE) ELSE 127.0 / e.u128 END AS est_distinct,
-           |  CAST(x.exact_distinct AS BIGINT) AS exact_distinct
-           |FROM est e JOIN ex x ON e.source = x.source""".stripMargin,
-      // mirrors Tokenizer.bpeMerges round for round: same pair counting
-      // (shinglesExpr(2)), same tie-break, same two-pass literal rewrite
-      "curate_bpe_merges" -> {
-        val union = (0 until BpeRounds).map(r => s"SELECT * FROM m$r").mkString(" UNION ALL ")
-        s"""WITH ${bpeCtes(BpeRounds)}
-           |SELECT CAST(merge_round AS BIGINT) AS merge_round,
-           |  split_part(pair, ' ', 1) AS merge_left,
-           |  split_part(pair, ' ', 2) AS merge_right,
-           |  CAST(cnt AS BIGINT) AS pair_count
-           |FROM ($union)""".stripMargin
-      },
-      // the final rewritten text t{R} carries the merged tokens; raw counts
-      // come from t0 (both space-padded)
-      "curate_bpe_tokenize" ->
-        s"""WITH ${bpeCtes(BpeRounds)}
-           |SELECT t0.doc_id,
-           |  len(list_filter(string_split(trim(t0.t), ' '), x -> x <> '')) AS n_tokens_raw,
-           |  len(list_filter(string_split(trim(tf.t), ' '), x -> x <> '')) AS n_tokens_merged
-           |FROM t0 JOIN t$BpeRounds tf ON t0.doc_id = tf.doc_id""".stripMargin,
-      // exact arm: ALL shared-shingle pairs verified; lsh arm: the banded
-      // candidates verified (the standard pipeline CTEs); recall from the
-      // two pair sets — the via-minhash arm is a verified subset by
-      // construction, measured here rather than assumed
-      "dedup_recall_report" ->
-        s"""$corpusCte,
-           |samp AS (SELECT doc_id, text FROM corpus
-           |  WHERE substr(md5('rs|' || CAST(doc_id % 1000000 AS VARCHAR)), 1, 2) < '1a'),
-           |${ngramPipelineCtes("samp")},
-           |lshp AS (SELECT a, b
-           |  FROM inter JOIN sizes sa ON sa.doc_id = a JOIN sizes sb ON sb.doc_id = b
-           |  WHERE round(CAST(i AS DOUBLE) / CAST(sa.n_sh + sb.n_sh - i AS DOUBLE), 4) >= 0.5),
-           |candE AS (SELECT DISTINCT la.doc_id AS a, rb.doc_id AS b
-           |  FROM ex la JOIN ex rb ON la.shingle = rb.shingle AND la.doc_id < rb.doc_id),
-           |interE AS (SELECT a, b, count(*) AS i
-           |  FROM candE JOIN ex la ON la.doc_id = a JOIN ex rb ON rb.doc_id = b AND rb.shingle = la.shingle
-           |  GROUP BY 1, 2),
-           |exactp AS (SELECT a, b
-           |  FROM interE JOIN sizes sa ON sa.doc_id = a JOIN sizes sb ON sb.doc_id = b
-           |  WHERE round(CAST(i AS DOUBLE) / CAST(sa.n_sh + sb.n_sh - i AS DOUBLE), 4) >= 0.5),
-           |cmn AS (SELECT a, b FROM lshp INTERSECT SELECT a, b FROM exactp),
-           |cnts AS (SELECT
-           |  (SELECT count(*) FROM exactp) AS n_exact,
-           |  (SELECT count(*) FROM lshp) AS n_lsh,
-           |  (SELECT count(*) FROM cmn) AS n_common)
-           |SELECT n_exact, n_lsh, n_common,
-           |  round(CASE WHEN n_exact = 0 THEN 1.0
-           |    ELSE CAST(n_common AS DOUBLE) / n_exact END, 4) AS recall
-           |FROM cnts""".stripMargin,
-      // mirrors Sketches.countMinReport at depth 3 / width 64: the same
-      // md5-prefix bucket hashing, counter build, and min-probe
-      "agg_countmin" -> {
-        val bucketSql = (i: Int) =>
-          s"CAST(CAST(concat('0x', substr(md5('$i|' || key), 1, 8)) AS BIGINT) % 64 AS BIGINT)"
-        val counterRows = (0 until 3).map(i =>
-          s"SELECT $i AS hrow, ${bucketSql(i)} AS bucket, count(*) AS cnt FROM k GROUP BY 2")
-          .mkString("\n  UNION ALL ")
-        val probeRows = (0 until 3).map(i =>
-          s"SELECT key, $i AS hrow, ${bucketSql(i)} AS bucket FROM dk")
-          .mkString("\n  UNION ALL ")
-        s"""WITH k AS (SELECT CAST(event_type AS VARCHAR) AS key FROM events),
-           |b AS ($counterRows),
-           |dk AS (SELECT DISTINCT key FROM k),
-           |rb AS ($probeRows),
-           |est AS (SELECT key, min(cnt) AS est_count FROM rb JOIN b USING (hrow, bucket) GROUP BY key),
-           |ex AS (SELECT key, count(*) AS exact_count FROM k GROUP BY key)
-           |SELECT e.key, CAST(e.est_count AS BIGINT) AS est_count,
-           |  CAST(x.exact_count AS BIGINT) AS exact_count
-           |FROM est e JOIN ex x USING (key)""".stripMargin
-      },
-      // the funnel restricts each stage's pairwise work to the previous
-      // stage's survivors — valid because candidates/verification are
-      // pairwise-deterministic on per-document text
-      "curate_funnel" ->
-        s"""${ngramInterCtes.replaceFirst("WITH ", "WITH RECURSIVE ")},
-           |surv1 AS (SELECT doc_id FROM (
-           |  SELECT doc_id, min(doc_id) OVER (PARTITION BY md5(text)) AS m FROM corpus)
-           |  WHERE doc_id = m),
-           |prs AS MATERIALIZED (SELECT a, b
-           |  FROM inter JOIN sizes sa ON sa.doc_id = a JOIN sizes sb ON sb.doc_id = b
-           |  WHERE round(CAST(i AS DOUBLE) / CAST(sa.n_sh + sb.n_sh - i AS DOUBLE), 4) >= 0.5
-           |    AND a IN (SELECT doc_id FROM surv1) AND b IN (SELECT doc_id FROM surv1)),
-           |und AS (SELECT a, b FROM prs UNION SELECT b, a FROM prs),
-           |reach AS (SELECT a, b FROM und
-           |  UNION SELECT r.a, u.b FROM reach r JOIN und u ON r.b = u.a),
-           |dropd AS MATERIALIZED (SELECT a FROM reach GROUP BY a HAVING min(b) < a),
-           |surv2 AS (SELECT doc_id FROM surv1 WHERE doc_id NOT IN (SELECT a FROM dropd)),
-           |ct AS (SELECT doc_id, string_split($normSql, ' ') AS w FROM corpus),
-           |cg AS (SELECT DISTINCT doc_id, g FROM
-           |  (SELECT doc_id, unnest(${shinglesExpr(5)}) AS g FROM ct WHERE len(w) >= 5)),
-           |bt AS (SELECT doc_id, string_split($normSql, ' ') AS w FROM documents WHERE doc_id % 10 = 0),
-           |bg AS (SELECT DISTINCT g FROM
-           |  (SELECT unnest(${shinglesExpr(5)}) AS g FROM bt WHERE len(w) >= 5)),
-           |bad AS (SELECT DISTINCT cg.doc_id FROM cg JOIN bg USING (g)),
-           |surv3 AS (SELECT doc_id FROM surv2 WHERE doc_id NOT IN (SELECT doc_id FROM bad))
-           |SELECT 'raw' AS stage, count(*) AS n_docs FROM corpus
-           |UNION ALL SELECT 'exact_dedup', count(*) FROM surv1
-           |UNION ALL SELECT 'near_dedup', count(*) FROM surv2
-           |UNION ALL SELECT 'decontaminated', count(*) FROM surv3""".stripMargin,
-      // the rare-arm funnel over the engulfed-prefix corpus: the funnel
-      // replay plus the dedup_containment_rare replay restricted to
-      // near-dup survivors, containment clusters closed transitively and
-      // dropped to the min id
-      "curate_funnel_rare" ->
-        s"""${corpusCte.replaceFirst("WITH ", "WITH RECURSIVE ")},
-           |eng AS (SELECT doc_id, text FROM corpus
-           |  UNION ALL SELECT doc_id + 4000000,
-           |    array_to_string(list_slice(string_split($normSql, ' '), 1, 8), ' ')
-           |  FROM documents WHERE doc_id % 5 = 0),
-           |${ngramPipelineCtes("eng")},
-           |surv1 AS (SELECT doc_id FROM (
-           |  SELECT doc_id, min(doc_id) OVER (PARTITION BY md5(text)) AS m FROM eng)
-           |  WHERE doc_id = m),
-           |prs AS MATERIALIZED (SELECT a, b
-           |  FROM inter JOIN sizes sa ON sa.doc_id = a JOIN sizes sb ON sb.doc_id = b
-           |  WHERE round(CAST(i AS DOUBLE) / CAST(sa.n_sh + sb.n_sh - i AS DOUBLE), 4) >= 0.5
-           |    AND a IN (SELECT doc_id FROM surv1) AND b IN (SELECT doc_id FROM surv1)),
-           |und AS (SELECT a, b FROM prs UNION SELECT b, a FROM prs),
-           |reach AS (SELECT a, b FROM und
-           |  UNION SELECT r.a, u.b FROM reach r JOIN und u ON r.b = u.a),
-           |dropd AS MATERIALIZED (SELECT a FROM reach GROUP BY a HAVING min(b) < a),
-           |surv2 AS (SELECT doc_id FROM surv1 WHERE doc_id NOT IN (SELECT a FROM dropd)),
-           |cex AS MATERIALIZED (SELECT doc_id, unnest(s) AS shingle FROM sh
-           |  WHERE doc_id IN (SELECT doc_id FROM surv2)),
-           |rare AS (SELECT shingle FROM (SELECT shingle, count(*) AS c FROM cex GROUP BY 1)
-           |  WHERE c BETWEEN 2 AND 8),
-           |rex AS MATERIALIZED (SELECT cex.doc_id, cex.shingle FROM cex JOIN rare USING (shingle)),
-           |ccand AS (SELECT DISTINCT l.doc_id AS a, r.doc_id AS b
-           |  FROM rex l JOIN rex r ON l.shingle = r.shingle AND l.doc_id < r.doc_id),
-           |cinter AS (SELECT a, b, count(*) AS i
-           |  FROM ccand JOIN cex la ON la.doc_id = a JOIN cex rb ON rb.doc_id = b AND rb.shingle = la.shingle
-           |  GROUP BY 1, 2),
-           |cpr AS (SELECT a, b FROM cinter JOIN sizes sa ON sa.doc_id = a JOIN sizes sb ON sb.doc_id = b
-           |  WHERE round(CAST(i AS DOUBLE) / CAST(least(sa.n_sh, sb.n_sh) AS DOUBLE), 4) >= 0.9),
-           |cund AS (SELECT a, b FROM cpr UNION SELECT b, a FROM cpr),
-           |creach AS (SELECT a, b FROM cund
-           |  UNION SELECT r.a, u.b FROM creach r JOIN cund u ON r.b = u.a),
-           |cdropd AS (SELECT a FROM creach GROUP BY a HAVING min(b) < a),
-           |surv2b AS (SELECT doc_id FROM surv2 WHERE doc_id NOT IN (SELECT a FROM cdropd)),
-           |ct AS (SELECT doc_id, string_split($normSql, ' ') AS w FROM eng),
-           |cg AS (SELECT DISTINCT doc_id, g FROM
-           |  (SELECT doc_id, unnest(${shinglesExpr(5)}) AS g FROM ct WHERE len(w) >= 5)),
-           |bt AS (SELECT doc_id, string_split($normSql, ' ') AS w FROM documents WHERE doc_id % 10 = 0),
-           |bg AS (SELECT DISTINCT g FROM
-           |  (SELECT unnest(${shinglesExpr(5)}) AS g FROM bt WHERE len(w) >= 5)),
-           |bad AS (SELECT DISTINCT cg.doc_id FROM cg JOIN bg USING (g)),
-           |surv3 AS (SELECT doc_id FROM surv2b WHERE doc_id NOT IN (SELECT doc_id FROM bad))
-           |SELECT 'raw' AS stage, count(*) AS n_docs FROM eng
-           |UNION ALL SELECT 'exact_dedup', count(*) FROM surv1
-           |UNION ALL SELECT 'near_dedup', count(*) FROM surv2
-           |UNION ALL SELECT 'contain_dedup', count(*) FROM surv2b
-           |UNION ALL SELECT 'decontaminated', count(*) FROM surv3""".stripMargin,
-      // distinct minhash signatures of the planted-dup corpus — the
-      // streaming dedup's output is this set regardless of arrival order
-      "stream_sig_dedup" ->
-        s"""$ngramInterCtes
-           |SELECT DISTINCT h0, h1, h2, h3 FROM sig""".stripMargin,
-      "dedup_similarity_report" ->
-        s"""$ngramInterCtes,
-           |sc AS (SELECT a, b,
-           |    round(CAST(i AS DOUBLE) / CAST(sa.n_sh + sb.n_sh - i AS DOUBLE), 4) AS jaccard,
-           |    round(CAST(i AS DOUBLE) / CAST(least(sa.n_sh, sb.n_sh) AS DOUBLE), 4) AS containment
-           |  FROM inter JOIN sizes sa ON sa.doc_id = a JOIN sizes sb ON sb.doc_id = b)
-           |SELECT a, b, jaccard, containment FROM sc
-           |WHERE jaccard >= 0.5 OR containment >= 0.9""".stripMargin,
-      // replays the same minhash-then-verify pairs, then takes the
-      // transitive closure (recursive CTE = connected components on the
-      // tiny verified-pair graph) and keeps only cluster-minimum ids
-      "curate_neardup_corpus" ->
-        s"""${ngramInterCtes.replaceFirst("WITH ", "WITH RECURSIVE ")},
-           |prs AS MATERIALIZED (SELECT a, b
-           |  FROM inter JOIN sizes sa ON sa.doc_id = a JOIN sizes sb ON sb.doc_id = b
-           |  WHERE round(CAST(i AS DOUBLE) / CAST(sa.n_sh + sb.n_sh - i AS DOUBLE), 4) >= 0.5),
-           |und AS (SELECT a, b FROM prs UNION SELECT b, a FROM prs),
-           |reach AS (SELECT a, b FROM und
-           |  UNION SELECT r.a, u.b FROM reach r JOIN und u ON r.b = u.a),
-           |dropd AS MATERIALIZED (SELECT a FROM reach GROUP BY a HAVING min(b) < a)
-           |SELECT doc_id FROM corpus WHERE doc_id NOT IN (SELECT a FROM dropd)""".stripMargin,
-      // manifest = per-(split, lang) counts; split replays the md5-bucket
-      // rule of curate_split, lang the shared lang-id scorer
-      "curate_export_manifest" ->
-        s"""WITH tl AS ($textLangidSql),
-           |sp AS (SELECT doc_id, CASE
-           |  WHEN substr(md5('split|'||doc_id), 1, 2) < '0d' THEN 'test'
-           |  WHEN substr(md5('split|'||doc_id), 1, 2) < '1a' THEN 'val'
-           |  ELSE 'train' END AS split
-           |FROM documents)
-           |SELECT sp.split, tl.lang_guess, count(*) AS n_docs
-           |FROM sp JOIN tl USING (doc_id) GROUP BY 1, 2""".stripMargin,
-      // batch = corpus rows >= 1M plus a +3M within-batch dup slice;
-      // survivors miss the corpus hash index and win their batch group
-      "dedup_incremental" ->
-        s"""$corpusCte,
-           |ch AS (SELECT DISTINCT md5(text) AS h FROM documents),
-           |base AS (SELECT doc_id, text FROM corpus WHERE doc_id >= 1000000),
-           |batch AS (SELECT doc_id, text FROM base
-           |  UNION ALL SELECT doc_id + 3000000, text FROM base WHERE doc_id % 7 = 0),
-           |wb AS (SELECT md5(text) AS h, min(doc_id) AS doc_id FROM batch GROUP BY 1)
-           |SELECT doc_id FROM wb WHERE h NOT IN (SELECT h FROM ch)""".stripMargin,
-      // cluster sizes from the same recursive min-reachable labeling as
-      // curate_dup_clusters_df, rolled into a size histogram
-      "curate_cluster_histogram" ->
-        s"""${ngramInterCtes.replaceFirst("WITH ", "WITH RECURSIVE ")},
-           |prs AS MATERIALIZED (SELECT a, b
-           |  FROM inter JOIN sizes sa ON sa.doc_id = a JOIN sizes sb ON sb.doc_id = b
-           |  WHERE round(CAST(i AS DOUBLE) / CAST(sa.n_sh + sb.n_sh - i AS DOUBLE), 4) >= 0.5),
-           |und AS (SELECT a, b FROM prs UNION SELECT b, a FROM prs),
-           |reach AS (SELECT a, b FROM und
-           |  UNION SELECT r.a, u.b FROM reach r JOIN und u ON r.b = u.a),
-           |lbl AS (SELECT a AS doc_id, least(a, min(b)) AS cluster FROM reach GROUP BY a),
-           |sz AS (SELECT cluster, count(*) AS s FROM lbl GROUP BY cluster)
-           |SELECT s AS cluster_size, count(*) AS n_clusters FROM sz GROUP BY s""".stripMargin,
-      // same pair graph as curate_neardup_corpus; cluster = min reachable
-      // node (including self) per node in some pair
-      "curate_dup_clusters_df" ->
-        s"""${ngramInterCtes.replaceFirst("WITH ", "WITH RECURSIVE ")},
-           |prs AS MATERIALIZED (SELECT a, b
-           |  FROM inter JOIN sizes sa ON sa.doc_id = a JOIN sizes sb ON sb.doc_id = b
-           |  WHERE round(CAST(i AS DOUBLE) / CAST(sa.n_sh + sb.n_sh - i AS DOUBLE), 4) >= 0.5),
-           |und AS (SELECT a, b FROM prs UNION SELECT b, a FROM prs),
-           |reach AS (SELECT a, b FROM und
-           |  UNION SELECT r.a, u.b FROM reach r JOIN und u ON r.b = u.a)
-           |SELECT a AS doc_id, least(a, min(b)) AS cluster FROM reach GROUP BY a""".stripMargin,
-      "embedding_kmeans" ->
-        s"WITH ${kmeansCtes(k = 8, iters = 2)}\nSELECT vec_id, cid FROM final_assign",
-      "embedding_silhouette" ->
-        s"""WITH ${kmeansCtes(k = 8, iters = 2)},
-           |sd AS (SELECT vec_id, cid, d2, rn FROM (
-           |  SELECT v.vec_id, c.cid, ${kmeansDist("c")} AS d2,
-           |    row_number() OVER (PARTITION BY v.vec_id ORDER BY ${kmeansDist("c")} ASC, c.cid ASC) AS rn
-           |  FROM v, cents2 c) t WHERE rn <= 2),
-           |ab AS (SELECT vec_id,
-           |    max(CASE WHEN rn = 1 THEN cid END) AS cid,
-           |    sqrt(greatest(max(CASE WHEN rn = 1 THEN d2 END), 0)) AS a,
-           |    sqrt(greatest(max(CASE WHEN rn = 2 THEN d2 END), 0)) AS b
-           |  FROM sd GROUP BY vec_id),
-           |sm AS (SELECT cid, CASE WHEN greatest(a, b) = 0 THEN 0
-           |    ELSE CAST(floor((b - a) / greatest(a, b) * 1000000.0 + 0.5) AS BIGINT) END AS s
-           |  FROM ab)
-           |SELECT CAST(cid AS BIGINT) AS cid, count(*) AS n_members,
-           |  CAST(sum(s) AS BIGINT) AS sum_sil_micro,
-           |  CAST(floor(CAST(sum(s) AS DOUBLE) / count(*)) AS BIGINT) AS mean_sil_micro
-           |FROM sm GROUP BY cid""".stripMargin,
-      "ann_ivf_kmeans_topk" ->
-        s"""WITH ${kmeansCtes(k = 16, iters = 2)},
-           |cent AS (SELECT cid, cv FROM cents2),
-           |asg AS (SELECT vec_id, cid FROM (
-           |  SELECT v.vec_id, c.cid,
-           |    row_number() OVER (PARTITION BY v.vec_id ORDER BY list_cosine_similarity(v.ve, c.cv) DESC, c.cid ASC) AS rn
-           |  FROM v, cent c) t WHERE rn = 1),
-           |probes AS (SELECT query_id, cid FROM (
-           |  SELECT v.vec_id AS query_id, c.cid,
-           |    row_number() OVER (PARTITION BY v.vec_id ORDER BY list_cosine_similarity(v.ve, c.cv) DESC, c.cid ASC) AS rn
-           |  FROM v, cent c WHERE v.vec_id < 50) t WHERE rn <= 4),
-           |sc AS (SELECT p.query_id, a.vec_id AS neighbor_id,
-           |  round(list_cosine_similarity(qv.ve, av.ve), 6) AS cos
-           |  FROM probes p JOIN asg a ON p.cid = a.cid AND a.vec_id <> p.query_id
-           |  JOIN v qv ON qv.vec_id = p.query_id JOIN v av ON av.vec_id = a.vec_id),
-           |r AS (SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id ASC) AS rnk FROM sc)
-           |SELECT query_id, neighbor_id, cos, CAST(rnk AS BIGINT) AS rank FROM r WHERE rnk <= 3""".stripMargin,
-      "text_langid" -> textLangidSql,
-      // gopherRules replayed over the same 50 composites: list HOFs fold
-      // the token/line arrays, integer-DIV micro ratios, the same padded
-      // stopword count as the quality oracle
-      "text_gopher_rules" ->
-        s"""WITH comp AS (SELECT doc_id % 50 AS cid,
-           |    string_agg(text, chr(10) ORDER BY doc_id) AS text
-           |  FROM documents GROUP BY 1),
-           |f AS (SELECT cid, text,
-           |    list_filter(regexp_split_to_array(text, '\\s+'), x -> x <> '') AS w,
-           |    list_filter(list_transform(string_split(text, chr(10)), x -> trim(x)), x -> x <> '') AS l,
-           |    len(text) - len(replace(text, '#', '')) AS hsh,
-           |    (len(text) - len(regexp_replace(text, '\\.\\.\\.', '', 'g'))) // 3
-           |      + (len(text) - len(replace(text, '…', ''))) AS ell,
-           |    ' '||$normSql||' ' AS p
-           |  FROM comp),
-           |g AS (SELECT cid, len(w) AS nw,
-           |    coalesce(list_sum(list_transform(w, x -> len(x))), 0) AS wlen,
-           |    len(list_filter(w, x -> regexp_matches(x, '[A-Za-z]'))) AS alpha,
-           |    len(l) AS nl2,
-           |    len(list_filter(l, x -> substr(x, 1, 1) IN ('-', '*', '\u2022'))) AS bul,
-           |    len(list_filter(l, x -> regexp_matches(x, '(\\.\\.\\.|\u2026)$$'))) AS eol,
-           |    hsh, ell,
-           |    ${langScore(graft.pipeline.TextAnalysis.qualityStopwords)} AS stop
-           |  FROM f)
-           |SELECT CAST(cid AS BIGINT) AS cid, CAST(nw AS BIGINT) AS n_words,
-           |  CAST(CASE WHEN nw = 0 THEN 0 ELSE wlen * 1000000 // nw END AS BIGINT) AS mean_word_len_micro,
-           |  CAST(CASE WHEN nw = 0 THEN 0 ELSE (hsh + ell) * 1000000 // nw END AS BIGINT) AS symbol_ratio_micro,
-           |  CAST(CASE WHEN nw = 0 THEN 0 ELSE alpha * 1000000 // nw END AS BIGINT) AS alpha_ratio_micro,
-           |  CAST(stop AS BIGINT) AS stopword_count,
-           |  CAST(nl2 AS BIGINT) AS n_lines,
-           |  CAST(CASE WHEN nl2 = 0 THEN 0 ELSE bul * 1000000 // nl2 END AS BIGINT) AS bullet_ratio_micro,
-           |  CAST(CASE WHEN nl2 = 0 THEN 0 ELSE eol * 1000000 // nl2 END AS BIGINT) AS ellipsis_ratio_micro,
-           |  CAST(CASE WHEN nw BETWEEN 50 AND 100000
-           |    AND (CASE WHEN nw = 0 THEN 0 ELSE wlen * 1000000 // nw END) BETWEEN 3000000 AND 10000000
-           |    AND (CASE WHEN nw = 0 THEN 0 ELSE (hsh + ell) * 1000000 // nw END) < 100000
-           |    AND (CASE WHEN nw = 0 THEN 0 ELSE alpha * 1000000 // nw END) >= 800000
-           |    AND stop >= 2 THEN 1 ELSE 0 END AS BIGINT) AS gopher_pass
-           |FROM g""".stripMargin,
-      "text_quality" -> textQualitySql,
-      "corpus_report" ->
-        s"""WITH tq AS ($textQualitySql),
-           |tl AS ($textLangidSql),
-           |j AS (SELECT lang_guess, CAST(round(quality * 10000) AS BIGINT) AS q4, n_words
-           |  FROM tl JOIN tq USING (doc_id))
-           |SELECT lang_guess, count(*) AS n_docs,
-           |  CAST((2 * sum(q4) + count(*)) // (2 * count(*)) AS DOUBLE) / 10000.0 AS avg_quality,
-           |  CAST(sum(n_words) AS BIGINT) AS total_words
-           |FROM j GROUP BY lang_guess""".stripMargin,
-      // mirrors Curation.stratifiedSample: same two-phase plan — per-stratum
-      // 6-hex cutoff (consulted only when cnt > overshoot*quota), exact
-      // hash-order rank over survivors
-      "curate_stratified" ->
-        s"""WITH tl AS ($textLangidSql),
-           |cnts AS (SELECT lang_guess, count(*) AS cnt FROM tl GROUP BY lang_guess),
-           |cuts AS (SELECT lang_guess, cnt,
-           |  printf('%06x', CAST(ceil(16777216.0 * $StratTarget / cnt) AS BIGINT)) AS cut FROM cnts),
-           |surv AS (SELECT t.doc_id, t.lang_guess,
-           |    md5('$StratSeed|' || CAST(t.doc_id AS VARCHAR)) AS h
-           |  FROM tl t JOIN cuts c USING (lang_guess)
-           |  WHERE c.cnt <= $StratTarget
-           |    OR substr(md5('$StratSeed|' || CAST(t.doc_id AS VARCHAR)), 1, 6) < c.cut),
-           |r AS (SELECT doc_id, lang_guess,
-           |    row_number() OVER (PARTITION BY lang_guess ORDER BY h ASC, doc_id ASC) AS rn
-           |  FROM surv)
-           |SELECT doc_id, lang_guess FROM r WHERE rn <= $StratQuota""".stripMargin,
-      "curate_pack" ->
-        s"""WITH t AS (SELECT doc_id,
-           |    CAST(CASE WHEN len($normSql) = 0 THEN 0
-           |      ELSE len(string_split($normSql, ' ')) END AS BIGINT) AS n_words,
-           |    doc_id % 8 AS shard
-           |  FROM documents),
-           |c AS (SELECT doc_id, shard, n_words,
-           |    sum(n_words) OVER (PARTITION BY shard ORDER BY doc_id
-           |      ROWS UNBOUNDED PRECEDING) - n_words AS strt
-           |  FROM t)
-           |SELECT doc_id, shard, CAST(strt // 512 AS BIGINT) AS chunk,
-           |  CAST(strt % 512 AS BIGINT) AS offset FROM c""".stripMargin,
-      // BFD replayed as a recursive CTE: one recursion step per placement
-      // rank (all shards advance in lockstep), state = the open-bin list
-      // {'rem','b'} (field order makes list_sort order by (rem, b), so
-      // [1] of the fits-filtered sort IS the best-fit choice with ties to
-      // the smaller bin id — exactly the TreeSet.minAfter rule)
-      "curate_pack_bfd" ->
-        s"""WITH RECURSIVE t AS (SELECT doc_id,
-           |    CAST(CASE WHEN len($normSql) = 0 THEN 0
-           |      ELSE len(string_split($normSql, ' ')) END AS BIGINT) AS n_words,
-           |    doc_id % 8 AS shard
-           |  FROM documents),
-           |items AS (SELECT shard, doc_id, n_words,
-           |    row_number() OVER (PARTITION BY shard ORDER BY n_words DESC, doc_id) AS rn
-           |  FROM t),
-           |pack AS (
-           |  SELECT shard, CAST(0 AS BIGINT) AS rn, CAST(NULL AS BIGINT) AS doc_id,
-           |    CAST(NULL AS BIGINT) AS bin, CAST(NULL AS BIGINT) AS off,
-           |    CAST([] AS STRUCT(rem BIGINT, b BIGINT)[]) AS bins,
-           |    CAST(0 AS BIGINT) AS nbins
-           |  FROM (SELECT DISTINCT shard FROM t)
-           |  UNION ALL
-           |  SELECT p.shard, CAST(i.rn AS BIGINT), i.doc_id,
-           |    coalesce(list_sort(list_filter(p.bins, x -> x.rem >= i.n_words))[1].b,
-           |      p.nbins) AS bin,
-           |    CAST(coalesce(512 - list_sort(list_filter(p.bins, x -> x.rem >= i.n_words))[1].rem,
-           |      0) AS BIGINT) AS off,
-           |    CASE WHEN list_sort(list_filter(p.bins, x -> x.rem >= i.n_words))[1].b IS NULL
-           |      THEN CASE WHEN 512 - i.n_words > 0
-           |        THEN list_append(p.bins, {'rem': 512 - i.n_words, 'b': p.nbins})
-           |        ELSE p.bins END
-           |      ELSE CASE WHEN list_sort(list_filter(p.bins, x -> x.rem >= i.n_words))[1].rem - i.n_words > 0
-           |        THEN list_append(
-           |          list_filter(p.bins, x -> x.b <> list_sort(list_filter(p.bins, y -> y.rem >= i.n_words))[1].b),
-           |          {'rem': list_sort(list_filter(p.bins, x -> x.rem >= i.n_words))[1].rem - i.n_words,
-           |           'b': list_sort(list_filter(p.bins, x -> x.rem >= i.n_words))[1].b})
-           |        ELSE list_filter(p.bins, x -> x.b <> list_sort(list_filter(p.bins, y -> y.rem >= i.n_words))[1].b)
-           |        END
-           |      END AS bins,
-           |    CASE WHEN list_sort(list_filter(p.bins, x -> x.rem >= i.n_words))[1].b IS NULL
-           |      THEN p.nbins + 1 ELSE p.nbins END AS nbins
-           |  FROM pack p JOIN items i ON i.shard = p.shard AND i.rn = p.rn + 1)
-           |SELECT doc_id, shard, bin, off AS offset
-           |FROM pack WHERE doc_id IS NOT NULL""".stripMargin,
-      "embedding_quantize" ->
-        """WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS ve FROM embeddings),
-          |vu AS (SELECT vec_id, unnest(ve) AS val, unnest(range(0, len(ve))) AS pos FROM v),
-          |m AS (SELECT vec_id, max(abs(val)) / 127.0 AS scale FROM vu GROUP BY vec_id)
-          |SELECT vu.vec_id, CAST(pos AS BIGINT) AS pos,
-          |  CASE WHEN scale = 0.0 THEN CAST(0 AS BIGINT)
-          |    ELSE CAST(floor(val / scale + 0.5) AS BIGINT) END AS code,
-          |  scale
-          |FROM vu JOIN m USING (vec_id)""".stripMargin,
-      "text_unigram_logprob" ->
-        s"""WITH ${toksCte("documents")},
-           |tok AS (SELECT doc_id, unnest(w) AS word FROM toks),
-           |words AS (SELECT doc_id, word FROM tok WHERE word <> ''),
-           |m AS (SELECT word, count(*) AS cnt FROM words GROUP BY word),
-           |tot AS (SELECT count(*) AS total FROM words),
-           |s AS (SELECT w.doc_id,
-           |    CAST(floor(ln(CAST(m.cnt AS DOUBLE) / tot.total) * 1000000.0 + 0.5) AS BIGINT) AS lp
-           |  FROM words w JOIN m USING (word) CROSS JOIN tot)
-           |SELECT doc_id, count(*) AS n_tokens,
-           |  round(CAST(sum(lp) AS DOUBLE) / (count(*) * 1000000.0), 4) AS logprob
-           |FROM s GROUP BY doc_id""".stripMargin,
-      // bigram LM: P(w2|w1) = c(w1w2)/c(w1·), micro-ln per model cell,
-      // context totals summed from the model counts
-      "text_bigram_logprob" ->
-        s"""WITH ${toksCte("documents")},
-           |bg AS (SELECT doc_id, unnest(${shinglesExpr(2)}) AS s FROM toks WHERE len(w) >= 2),
-           |m AS (SELECT s, count(*) AS cnt FROM bg GROUP BY s),
-           |ctx AS (SELECT string_split(s, ' ')[1] AS w1, sum(cnt) AS ctx FROM m GROUP BY 1),
-           |mlp AS (SELECT s,
-           |    CAST(floor(ln(CAST(m.cnt AS DOUBLE) / ctx.ctx) * 1000000.0 + 0.5) AS BIGINT) AS lp
-           |  FROM m JOIN ctx ON string_split(m.s, ' ')[1] = ctx.w1)
-           |SELECT doc_id, count(*) AS n_bigrams,
-           |  round(CAST(sum(lp) AS DOUBLE) / (count(*) * 1000000.0), 4) AS logprob
-           |FROM bg JOIN mlp USING (s) GROUP BY doc_id""".stripMargin,
-      "text_nb_classify" -> nbClassifySql,
-      // even-doc fit / full-corpus score: odd docs hit the OOV cell
-      "text_nb_oov_classify" -> nbClassifySqlFor("doc_id % 2 = 0"),
-      // the streaming serve appends the SAME scored rows the batch argmax
-      // produces (micro-batch-local scoring, whole-file batches)
-      "stream_nb_classify" -> nbClassifySql,
-      "text_nb_confusion" ->
-        s"""WITH ${toksCte("documents")},
-           |tok AS (SELECT doc_id, unnest(w) AS word FROM toks),
-           |wrds AS (SELECT doc_id, word FROM tok WHERE word <> ''),
-           |wl AS (SELECT w.doc_id, d.lang, w.word FROM wrds w JOIN documents d USING (doc_id)),
-           |cnt AS (SELECT lang, word, count(*) AS cnt FROM wl GROUP BY 1, 2),
-           |tot AS (SELECT lang, sum(cnt) AS tot FROM cnt GROUP BY 1),
-           |vs AS (SELECT count(DISTINCT word) AS v FROM cnt),
-           |model AS (SELECT vw.word, t.lang,
-           |    CAST(floor(ln((coalesce(c.cnt, 0) + 1.0) / (t.tot + vs.v)) * 1000000.0 + 0.5) AS BIGINT) AS lp
-           |  FROM (SELECT DISTINCT word FROM cnt) vw
-           |  CROSS JOIN tot t CROSS JOIN vs
-           |  LEFT JOIN cnt c ON c.word = vw.word AND c.lang = t.lang),
-           |pri AS (SELECT lang,
-           |    CAST(floor(ln(CAST(count(*) AS DOUBLE) / (SELECT count(*) FROM documents)) * 1000000.0 + 0.5) AS BIGINT) AS prior
-           |  FROM documents GROUP BY 1),
-           |tf AS (SELECT doc_id, word, count(*) AS tf FROM wrds GROUP BY 1, 2),
-           |sc AS (SELECT tf.doc_id, m.lang, p.prior + sum(tf.tf * m.lp) AS score
-           |  FROM tf JOIN model m USING (word) JOIN pri p ON p.lang = m.lang
-           |  GROUP BY tf.doc_id, m.lang, p.prior),
-           |rk AS (SELECT doc_id, lang, row_number() OVER (PARTITION BY doc_id ORDER BY score DESC, lang ASC) AS rn FROM sc),
-           |pred AS (SELECT doc_id, lang AS predicted FROM rk WHERE rn = 1)
-           |SELECT d.lang AS actual, p.predicted, count(*) AS n_docs
-           |FROM pred p JOIN documents d USING (doc_id)
-           |GROUP BY 1, 2""".stripMargin,
-      "curate_weighted_sample" ->
-        """WITH u AS (SELECT doc_id, n_chars,
-          |  CAST(CAST(concat('0x', substr(md5('wsample|' || CAST(doc_id AS VARCHAR)), 1, 12)) AS BIGINT) AS DOUBLE)
-          |    / 281474976710656.0 AS u
-          |  FROM documents)
-          |SELECT doc_id, CAST(n_chars AS BIGINT) AS n_chars FROM u
-          |ORDER BY ln(u) / n_chars DESC, doc_id ASC LIMIT 200""".stripMargin,
-      // DSIR replay: same hashed unigram+bigram buckets (4 md5 hex chars
-      // mod 256), same per-cell micro-ln quantization BEFORE the per-doc sum
-      "curate_dsir" ->
-        s"""WITH ${toksCte("documents")},
-           |feats AS (
-           |  SELECT doc_id, f FROM (SELECT doc_id, unnest(w) AS f FROM toks) u WHERE f <> ''
-           |  UNION ALL
-           |  SELECT doc_id, unnest(${shinglesExpr(2)}) AS f FROM toks WHERE len(w) >= 2),
-           |fb AS (SELECT t.doc_id, (d.lang = 'en') AS tgt,
-           |    CAST(concat('0x', substr(md5('dsir|' || f), 1, 4)) AS BIGINT) % 256 AS b
-           |  FROM feats t JOIN documents d ON d.doc_id = t.doc_id),
-           |cnt AS (SELECT tgt, b, count(*) AS c FROM fb GROUP BY 1, 2),
-           |tot AS (SELECT
-           |    coalesce(sum(CASE WHEN tgt THEN c END), 0) AS ttot,
-           |    coalesce(sum(CASE WHEN NOT tgt THEN c END), 0) AS stot FROM cnt),
-           |base AS (SELECT unnest(range(256)) AS b),
-           |model AS (SELECT base.b,
-           |    CAST(floor(ln((coalesce(t.c, 0) + 1.0) / (tot.ttot + 256)) * 1000000.0 + 0.5) AS BIGINT)
-           |  - CAST(floor(ln((coalesce(s.c, 0) + 1.0) / (tot.stot + 256)) * 1000000.0 + 0.5) AS BIGINT) AS dw
-           |  FROM base CROSS JOIN tot
-           |  LEFT JOIN (SELECT b, c FROM cnt WHERE tgt) t ON t.b = base.b
-           |  LEFT JOIN (SELECT b, c FROM cnt WHERE NOT tgt) s ON s.b = base.b),
-           |sc AS (SELECT fb.doc_id, sum(m.dw) AS w
-           |  FROM fb JOIN model m USING (b) WHERE NOT fb.tgt GROUP BY 1)
-           |SELECT r.doc_id, CAST(coalesce(sc.w, 0) AS BIGINT) AS weight_micro
-           |FROM (SELECT doc_id FROM documents WHERE lang <> 'en') r
-           |LEFT JOIN sc USING (doc_id)
-           |ORDER BY weight_micro DESC, doc_id ASC LIMIT 150""".stripMargin,
-      "text_tfidf" ->
-        s"""WITH ${toksCte("documents")},
-           |tok AS (SELECT doc_id, unnest(w) AS word FROM toks),
-           |tf AS (SELECT doc_id, word, count(*) AS tf FROM tok WHERE word <> '' GROUP BY doc_id, word),
-           |dfq AS (SELECT word, count(DISTINCT doc_id) AS df FROM tok WHERE word <> '' GROUP BY word),
-           |n AS (SELECT count(DISTINCT doc_id) AS n FROM documents),
-           |sc AS (SELECT doc_id, word, tf * ((n - df + 0.5) / (df + 0.5)) AS score
-           |  FROM tf JOIN dfq USING (word) CROSS JOIN n),
-           |r AS (SELECT doc_id, word, score,
-           |    row_number() OVER (PARTITION BY doc_id ORDER BY score DESC, word ASC) AS rank
-           |  FROM sc)
-           |SELECT doc_id, word, floor(score * 10000.0 + 0.5) / 10000.0 AS tfidf,
-           |  CAST(rank AS BIGINT) AS rank
-           |FROM r WHERE rank <= 3""".stripMargin,
-      "text_bm25" -> {
-        val k1 = s"$Bm25K1"
-        val k1p1 = s"${Bm25K1 + 1.0}"
-        val b = s"$Bm25B"
-        val oneMinusB = s"${1.0 - Bm25B}"
-        s"""WITH ${toksCte("documents")},
-           |tok AS (SELECT doc_id, unnest(w) AS word FROM toks),
-           |tf AS (SELECT doc_id, word, count(*) AS tf FROM tok WHERE word <> '' GROUP BY 1, 2),
-           |dl AS (SELECT doc_id, count(*) AS dl FROM tok WHERE word <> '' GROUP BY 1),
-           |dfq AS (SELECT word, count(DISTINCT doc_id) AS df FROM tok WHERE word <> '' GROUP BY 1),
-           |g AS (SELECT (SELECT count(DISTINCT doc_id) FROM documents) AS n,
-           |             (SELECT count(*) FROM tok WHERE word <> '') AS tt),
-           |q AS (SELECT doc_id AS query_id,
-           |    array_to_string(list_slice(string_split($normSql, ' '), 1, 8), ' ') AS qtext
-           |  FROM documents WHERE doc_id % 101 = 0),
-           |qt AS (SELECT DISTINCT query_id, word FROM
-           |    (SELECT query_id, unnest(string_split(qtext, ' ')) AS word FROM q)
-           |  WHERE word <> ''),
-           |sc AS (SELECT qt.query_id, tf.doc_id,
-           |    CAST(floor((g.n - dfq.df + 0.5) / (dfq.df + 0.5) *
-           |      ((tf.tf * $k1p1) / (tf.tf + $k1 * ($oneMinusB + ($b * dl.dl) / (CAST(g.tt AS DOUBLE) / CAST(g.n AS DOUBLE)))))
-           |      * 1000000.0 + 0.5) AS BIGINT) AS micro
-           |  FROM tf JOIN qt USING (word) JOIN dfq USING (word)
-           |  JOIN dl ON dl.doc_id = tf.doc_id CROSS JOIN g),
-           |su AS (SELECT query_id, doc_id, CAST(sum(micro) AS BIGINT) AS micros FROM sc GROUP BY 1, 2),
-           |r AS (SELECT query_id, doc_id, micros,
-           |    row_number() OVER (PARTITION BY query_id ORDER BY micros DESC, doc_id ASC) AS rnk FROM su)
-           |SELECT query_id, doc_id,
-           |  floor(CAST(micros AS DOUBLE) / 100.0 + 0.5) / 10000.0 AS score,
-           |  CAST(rnk AS BIGINT) AS rank
-           |FROM r WHERE rnk <= $Bm25TopK""".stripMargin
-      },
-      "ann_int8_recall" ->
-        """WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS ve FROM embeddings),
-          |q AS (SELECT vec_id, ve FROM v WHERE vec_id < 30),
-          |ex AS (SELECT query_id, neighbor_id FROM (
-          |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-          |    row_number() OVER (PARTITION BY q.vec_id
-          |      ORDER BY round(list_cosine_similarity(q.ve, c.ve), 6) DESC, c.vec_id ASC) AS rnk
-          |  FROM q JOIN v c ON c.vec_id <> q.vec_id) t WHERE rnk <= 3),
-          |den AS (SELECT count(DISTINCT query_id) AS n_queries, count(*) AS n_exact FROM ex),
-          |m AS (SELECT vec_id, ve, list_max(list_transform(ve, x -> abs(x))) / 127.0 AS scale FROM v),
-          |rc AS (SELECT vec_id, CASE WHEN scale = 0.0 THEN list_transform(ve, x -> 0.0)
-          |  ELSE list_transform(ve, x -> floor(x / scale + 0.5) * scale) END AS rv FROM m),
-          |sv AS (SELECT query_id, neighbor_id FROM (
-          |  SELECT q.vec_id AS query_id, r.vec_id AS neighbor_id,
-          |    row_number() OVER (PARTITION BY q.vec_id
-          |      ORDER BY round(list_cosine_similarity(q.ve, r.rv), 6) DESC, r.vec_id ASC) AS rnk
-          |  FROM q JOIN rc r ON r.vec_id <> q.vec_id) t WHERE rnk <= 3),
-          |h AS (SELECT count(*) AS n_found,
-          |    CAST(coalesce(sum(CASE WHEN ex.query_id IS NOT NULL THEN 1 END), 0) AS BIGINT) AS n_hit
-          |  FROM sv LEFT JOIN ex ON sv.query_id = ex.query_id AND sv.neighbor_id = ex.neighbor_id)
-          |SELECT den.n_queries, den.n_exact, h.n_found, h.n_hit,
-          |  round(CASE WHEN den.n_exact = 0 THEN 1.0 ELSE CAST(h.n_hit AS DOUBLE) / den.n_exact END, 4) AS recall
-          |FROM h, den""".stripMargin,
-      "ann_matryoshka_recall" ->
-        """WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS ve FROM embeddings),
-          |q AS (SELECT vec_id, ve FROM v WHERE vec_id < 30),
-          |ex AS (SELECT query_id, neighbor_id FROM (
-          |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-          |    row_number() OVER (PARTITION BY q.vec_id
-          |      ORDER BY round(list_cosine_similarity(q.ve, c.ve), 6) DESC, c.vec_id ASC) AS rnk
-          |  FROM q JOIN v c ON c.vec_id <> q.vec_id) t WHERE rnk <= 3),
-          |den AS (SELECT count(DISTINCT query_id) AS n_queries, count(*) AS n_exact FROM ex),
-          |rung(d) AS (VALUES (8), (16), (32), (64)),
-          |rs AS (SELECT r.d, q.vec_id AS query_id, c.vec_id AS neighbor_id,
-          |    row_number() OVER (PARTITION BY r.d, q.vec_id
-          |      ORDER BY round(list_cosine_similarity(list_slice(q.ve, 1, r.d), list_slice(c.ve, 1, r.d)), 6) DESC,
-          |        c.vec_id ASC) AS rnk
-          |  FROM rung r, q JOIN v c ON c.vec_id <> q.vec_id),
-          |topd AS (SELECT d, query_id, neighbor_id FROM rs WHERE rnk <= 3),
-          |h AS (SELECT t.d, count(*) AS n_found,
-          |    CAST(coalesce(sum(CASE WHEN ex.query_id IS NOT NULL THEN 1 END), 0) AS BIGINT) AS n_hit
-          |  FROM topd t LEFT JOIN ex ON t.query_id = ex.query_id AND t.neighbor_id = ex.neighbor_id
-          |  GROUP BY t.d)
-          |SELECT CAST(h.d AS BIGINT) AS dims, den.n_queries, den.n_exact, h.n_found, h.n_hit,
-          |  round(CASE WHEN den.n_exact = 0 THEN 1.0 ELSE CAST(h.n_hit AS DOUBLE) / den.n_exact END, 4) AS recall
-          |FROM h, den""".stripMargin,
-      "ann_hybrid_rrf" -> {
-        val k1 = s"$Bm25K1"
-        val k1p1 = s"${Bm25K1 + 1.0}"
-        val b = s"$Bm25B"
-        val oneMinusB = s"${1.0 - Bm25B}"
-        s"""WITH ${toksCte("documents")},
-           |tok AS (SELECT doc_id, unnest(w) AS word FROM toks),
-           |tf AS (SELECT doc_id, word, count(*) AS tf FROM tok WHERE word <> '' GROUP BY 1, 2),
-           |dl AS (SELECT doc_id, count(*) AS dl FROM tok WHERE word <> '' GROUP BY 1),
-           |dfq AS (SELECT word, count(DISTINCT doc_id) AS df FROM tok WHERE word <> '' GROUP BY 1),
-           |g AS (SELECT (SELECT count(DISTINCT doc_id) FROM documents) AS n,
-           |             (SELECT count(*) FROM tok WHERE word <> '') AS tt),
-           |q AS (SELECT doc_id AS query_id,
-           |    array_to_string(list_slice(string_split($normSql, ' '), 1, 8), ' ') AS qtext
-           |  FROM documents
-           |  WHERE doc_id % 101 = 0 AND doc_id IN (SELECT vec_id FROM embeddings)),
-           |qt AS (SELECT DISTINCT query_id, word FROM
-           |    (SELECT query_id, unnest(string_split(qtext, ' ')) AS word FROM q)
-           |  WHERE word <> ''),
-           |sc AS (SELECT qt.query_id, tf.doc_id,
-           |    CAST(floor((g.n - dfq.df + 0.5) / (dfq.df + 0.5) *
-           |      ((tf.tf * $k1p1) / (tf.tf + $k1 * ($oneMinusB + ($b * dl.dl) / (CAST(g.tt AS DOUBLE) / CAST(g.n AS DOUBLE)))))
-           |      * 1000000.0 + 0.5) AS BIGINT) AS micro
-           |  FROM tf JOIN qt USING (word) JOIN dfq USING (word)
-           |  JOIN dl ON dl.doc_id = tf.doc_id CROSS JOIN g),
-           |su AS (SELECT query_id, doc_id, CAST(sum(micro) AS BIGINT) AS micros FROM sc GROUP BY 1, 2),
-           |lexarm AS (SELECT query_id, doc_id, rnk FROM (
-           |    SELECT query_id, doc_id,
-           |      row_number() OVER (PARTITION BY query_id ORDER BY micros DESC, doc_id ASC) AS rnk
-           |    FROM su) t WHERE rnk <= $RrfArmK),
-           |v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS ve FROM embeddings),
-           |vq AS (SELECT vec_id AS query_id, ve AS qv FROM v
-           |  WHERE vec_id IN (SELECT query_id FROM q)),
-           |vs AS (SELECT query_id, e.vec_id AS doc_id,
-           |    round(list_cosine_similarity(qv, e.ve), 6) AS cos
-           |  FROM vq, v e WHERE e.vec_id <> query_id),
-           |varm AS (SELECT query_id, doc_id, rnk FROM (
-           |    SELECT query_id, doc_id,
-           |      row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, doc_id ASC) AS rnk
-           |    FROM vs) t WHERE rnk <= $RrfArmK),
-           |uni AS (SELECT query_id, doc_id, CAST(1000000 // ($RrfC + rnk) AS BIGINT) AS rrf
-           |  FROM (SELECT * FROM lexarm UNION ALL SELECT * FROM varm) arms),
-           |fus AS (SELECT query_id, doc_id, count(*) AS n_arms, sum(rrf) AS rrf_micro
-           |  FROM uni GROUP BY 1, 2),
-           |fr AS (SELECT query_id, doc_id, n_arms, rrf_micro,
-           |    row_number() OVER (PARTITION BY query_id ORDER BY rrf_micro DESC, doc_id ASC) AS rnk2
-           |  FROM fus)
-           |SELECT query_id, doc_id, CAST(n_arms AS BIGINT) AS n_arms,
-           |  CAST(rrf_micro AS BIGINT) AS rrf_micro, CAST(rnk2 AS BIGINT) AS rank
-           |FROM fr WHERE rnk2 <= $RrfTopK""".stripMargin
-      },
-      "dedup_substring" ->
-        s"""$corpusCte, ${toksCte("corpus")},
-           |win AS (SELECT doc_id, unnest(${shinglesExpr(8)}) AS g FROM toks WHERE len(w) >= 8),
-           |shared AS (SELECT g FROM (SELECT g, count(DISTINCT doc_id) AS c FROM win GROUP BY g) WHERE c > 1),
-           |tot AS (SELECT doc_id, count(*) AS nw FROM win GROUP BY doc_id),
-           |dup AS (SELECT w.doc_id, count(*) AS du FROM win w JOIN shared USING (g) GROUP BY w.doc_id)
-           |SELECT c.doc_id, coalesce(nw, 0) AS n_windows, coalesce(du, 0) AS dup_windows,
-           |  round(coalesce(CAST(du AS DOUBLE) / nw, 0.0), 4) AS dup_frac
-           |FROM corpus c LEFT JOIN tot USING (doc_id) LEFT JOIN dup USING (doc_id)""".stripMargin,
-      "dedup_containment" ->
-        s"""$ngramInterCtes
-           |SELECT a, b, round(CAST(i AS DOUBLE) / CAST(least(sa.n_sh, sb.n_sh) AS DOUBLE), 4) AS containment
-           |FROM inter JOIN sizes sa ON sa.doc_id = a JOIN sizes sb ON sb.doc_id = b
-           |WHERE round(CAST(i AS DOUBLE) / CAST(least(sa.n_sh, sb.n_sh) AS DOUBLE), 4) >= 0.9""".stripMargin,
-      "dedup_semantic_pairs" ->
-        s"""WITH ${semPairCtes(s"$SemMinCos")}
-           |SELECT a, b, cos FROM hits""".stripMargin,
-      "curate_semdedup_corpus" ->
-        s"""WITH RECURSIVE ${semPairCtes(s"$SemMinCos")},
-           |und AS (SELECT a, b FROM hits UNION SELECT b, a FROM hits),
-           |reach AS (SELECT a, b FROM und
-           |  UNION SELECT r.a, u.b FROM reach r JOIN und u ON r.b = u.a),
-           |dropd AS MATERIALIZED (SELECT a FROM reach GROUP BY a HAVING min(b) < a)
-           |SELECT vec_id FROM embeddings WHERE vec_id NOT IN (SELECT a FROM dropd)""".stripMargin,
-      "embedding_pq" ->
-        s"""WITH $pqCtes
-           |SELECT vec_id, CAST(s AS BIGINT) AS sub, CAST(cid AS BIGINT) AS code, round(d, 6) AS err2
-           |FROM enc""".stripMargin,
-      "ann_pq_topk" ->
-        s"""WITH $pqCtes,
-           |qs AS (SELECT vec_id AS query_id, s, x FROM sv WHERE vec_id < 5),
-           |adc AS (SELECT q.query_id, c.s, c.cid,
-           |    CAST(floor((list_sum(list_transform(range(0, len(q.x)), i -> q.x[i+1] * q.x[i+1]))
-           |     - list_sum(list_transform(range(0, len(q.x)), i -> q.x[i+1] * c.cw[i+1])) * 2
-           |     + list_sum(list_transform(range(0, len(c.cw)), i -> c.cw[i+1] * c.cw[i+1])))
-           |     * 1000000.0 + 0.5) AS BIGINT) AS micro
-           |  FROM qs q JOIN cb c USING (s)),
-           |dd AS (SELECT a.query_id, e.vec_id AS neighbor_id, CAST(sum(a.micro) AS BIGINT) AS micros
-           |  FROM enc e JOIN adc a ON a.s = e.s AND a.cid = e.cid AND a.query_id <> e.vec_id
-           |  GROUP BY 1, 2),
-           |r AS (SELECT query_id, neighbor_id, micros,
-           |    row_number() OVER (PARTITION BY query_id ORDER BY micros ASC, neighbor_id ASC) AS rnk FROM dd)
-           |SELECT query_id, neighbor_id,
-           |  floor(CAST(micros AS DOUBLE) / 100.0 + 0.5) / 10000.0 AS dist,
-           |  CAST(rnk AS BIGINT) AS rank
-           |FROM r WHERE rnk <= 3""".stripMargin,
-      "ann_ivfpq_topk" ->
-        s"""WITH $pqBaseCtes,
-           |${ivfpqResCtes(5)},
-           |r AS (SELECT query_id, neighbor_id, micros,
-           |    row_number() OVER (PARTITION BY query_id ORDER BY micros ASC, neighbor_id ASC) AS rnk FROM rq_dd)
-           |SELECT query_id, neighbor_id,
-           |  floor(CAST(micros AS DOUBLE) / 100.0 + 0.5) / 10000.0 AS dist,
-           |  CAST(rnk AS BIGINT) AS rank
-           |FROM r WHERE rnk <= 3""".stripMargin,
-      // the encode pass replayed verbatim: rq_enc IS the stored-code
-      // representation every serve-path query above searches
-      "ann_ivfpq_encode" ->
-        s"""WITH $pqBaseCtes,
-           |${ivfpqResCtes(5)}
-           |SELECT vec_id, lcid, CAST(s AS BIGINT) AS sub, CAST(cid AS BIGINT) AS code
-           |FROM rq_enc""".stripMargin,
-      // the serve replay minus the forgotten ids' candidate rows — code
-      // deletion is row-drop on the code table, so filtering rq_dd by
-      // neighbor replays it exactly
-      "ann_ivfpq_forget" ->
-        s"""WITH $pqBaseCtes,
-           |${ivfpqResCtes(5)},
-           |kept AS (SELECT * FROM rq_dd WHERE neighbor_id NOT IN (40, 41, 42, 43)),
-           |r AS (SELECT query_id, neighbor_id, micros,
-           |    row_number() OVER (PARTITION BY query_id ORDER BY micros ASC, neighbor_id ASC) AS rnk FROM kept)
-           |SELECT query_id, neighbor_id,
-           |  floor(CAST(micros AS DOUBLE) / 100.0 + 0.5) / 10000.0 AS dist,
-           |  CAST(rnk AS BIGINT) AS rank
-           |FROM r WHERE rnk <= 3""".stripMargin,
-      // ADC candidates (k·rerank = 12 by micros) exactly rescored with
-      // cosine, top-3 by exact score — mirrors ivfPqTopKRerank
-      "ann_ivfpq_rerank" ->
-        s"""WITH $pqBaseCtes,
-           |${ivfpqResCtes(5)},
-           |rcand AS (SELECT query_id, neighbor_id FROM (
-           |  SELECT query_id, neighbor_id,
-           |    row_number() OVER (PARTITION BY query_id ORDER BY micros ASC, neighbor_id ASC) AS rnk
-           |  FROM rq_dd) t WHERE rnk <= 12),
-           |rsc AS (SELECT c.query_id, c.neighbor_id,
-           |  round(list_cosine_similarity(q.ve, n.ve), 6) AS cos
-           |  FROM rcand c JOIN v q ON q.vec_id = c.query_id JOIN v n ON n.vec_id = c.neighbor_id),
-           |rr AS (SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id ASC) AS rnk FROM rsc)
-           |SELECT query_id, neighbor_id, cos, CAST(rnk AS BIGINT) AS rank
-           |FROM rr WHERE rnk <= 3""".stripMargin,
-      // the persisted-index serve path is pinned to IDENTICAL results as
-      // the direct ivf-pq search (same quantizers, same codes, same ADC
-      // arithmetic — only read back from parquet), so the oracle is the
-      // same replay
-      "ann_ivfpq_serve" ->
-        s"""WITH $pqBaseCtes,
-           |${ivfpqResCtes(5)},
-           |r AS (SELECT query_id, neighbor_id, micros,
-           |    row_number() OVER (PARTITION BY query_id ORDER BY micros ASC, neighbor_id ASC) AS rnk FROM rq_dd)
-           |SELECT query_id, neighbor_id,
-           |  floor(CAST(micros AS DOUBLE) / 100.0 + 0.5) / 10000.0 AS dist,
-           |  CAST(rnk AS BIGINT) AS rank
-           |FROM r WHERE rnk <= 3""".stripMargin,
       // the streamed append replayed relationally: frozen quantizers make
       // encoding a pure function of the vector, so the ingested re-keyed
       // copies carry exactly their originals' codes — the post-ingest
       // code table is base rq_enc plus its %3-slice re-keyed +10000, and
       // serving is the same ADC scoring over that union
-      "stream_ann_ingest" ->
-        s"""WITH $pqBaseCtes,
-           |${ivfpqResCtes(5)},
-           |allc AS (SELECT vec_id, lcid, s, cid FROM rq_enc
-           |  UNION ALL SELECT vec_id + 10000, lcid, s, cid FROM rq_enc WHERE vec_id % 3 = 0),
-           |dd2 AS (SELECT a.query_id, e.vec_id AS neighbor_id, CAST(sum(a.micro) AS BIGINT) AS micros
-           |  FROM allc e JOIN rq_adc a ON a.lcid = e.lcid AND a.s = e.s AND a.cid = e.cid
-           |    AND a.query_id <> e.vec_id
-           |  GROUP BY 1, 2),
-           |r AS (SELECT query_id, neighbor_id, micros,
-           |    row_number() OVER (PARTITION BY query_id ORDER BY micros ASC, neighbor_id ASC) AS rnk FROM dd2)
-           |SELECT query_id, neighbor_id,
-           |  floor(CAST(micros AS DOUBLE) / 100.0 + 0.5) / 10000.0 AS dist,
-           |  CAST(rnk AS BIGINT) AS rank
-           |FROM r WHERE rnk <= 3""".stripMargin,
+      s"""WITH $pqBaseCtes,
+         |${ivfpqResCtes(5)},
+         |allc AS (SELECT vec_id, lcid, s, cid FROM rq_enc
+         |  UNION ALL SELECT vec_id + 10000, lcid, s, cid FROM rq_enc WHERE vec_id % 3 = 0),
+         |dd2 AS (SELECT a.query_id, e.vec_id AS neighbor_id, CAST(sum(a.micro) AS BIGINT) AS micros
+         |  FROM allc e JOIN rq_adc a ON a.lcid = e.lcid AND a.s = e.s AND a.cid = e.cid
+         |    AND a.query_id <> e.vec_id
+         |  GROUP BY 1, 2),
+         |r AS (SELECT query_id, neighbor_id, micros,
+         |    row_number() OVER (PARTITION BY query_id ORDER BY micros ASC, neighbor_id ASC) AS rnk FROM dd2)
+         |SELECT query_id, neighbor_id,
+         |  floor(CAST(micros AS DOUBLE) / 100.0 + 0.5) / 10000.0 AS dist,
+         |  CAST(rnk AS BIGINT) AS rank
+         |FROM r WHERE rnk <= 3""".stripMargin),
+    // ANN QA: measured recall@k per approximate method (LSH buckets, IVF
+    // probing, IVF-PQ ADC) against the exact brute-force top-k over the
+    // same query slice — the vector-space sibling of dedup_recall_report
+    Entry("ann_recall_report", (s, d) => {
+      val e = embeddings(s, d)
+      Similarity.annRecallReport(e, e.where(col("vec_id") < 30),
+        "vec_id", "embedding", k = 3, planes = 4, nlist = 16, nprobe = 4,
+        m = 16, codewords = 256, ivfPqNprobe = 8, ivfPqIdx = Some(ivfPqIdx(s, d)))
+    },
       // mirrors Similarity.annRecallReport(k=3, planes=4, nlist=16,
       // nprobe=4 for plain IVF, and the round-11 IVF-PQ default m=16,
       // codewords=256, nprobe=8 — measured recall@10 0.58 at sf0.1 vs
@@ -2495,1168 +2782,779 @@ object PipelineQueries {
       // brute-force arm plus the lsh/ivf/ivfpq arm replays (same CTE
       // shapes as ann_topk / ann_lsh_topk / ann_ivf_topk / ann_ivfpq_topk)
       // joined per-method against the exact pairs
-      "ann_recall_report" -> {
-        def sign(p: Int) =
-          s"(CASE WHEN (strpos('0123456789abcdef', substr(md5('$p|'||i), 1, 1)) - 1) % 2 = 1 THEN 1.0 ELSE -1.0 END)"
-        def bit(p: Int) =
-          s"(CASE WHEN list_sum(list_transform(range(0, len(ve)), i -> ve[i+1] * ${sign(p)})) >= 0 THEN ${1L << p} ELSE 0 END)"
-        val bucket = (0 until 4).map(bit).mkString(" + ")
-        s"""WITH $pqBaseCtes,
-           |xq AS (SELECT vec_id AS query_id, ve AS qv FROM v WHERE vec_id < 30),
-           |xs AS (SELECT query_id, e.vec_id AS neighbor_id,
-           |  round(list_cosine_similarity(qv, e.ve), 6) AS cos
-           |  FROM xq, v e WHERE e.vec_id <> query_id),
-           |xr AS (SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id ASC) AS rnk FROM xs),
-           |exact AS MATERIALIZED (SELECT query_id, neighbor_id FROM xr WHERE rnk <= 3),
-           |lb AS (SELECT vec_id, ve, $bucket AS bucket FROM v),
-           |lq AS (SELECT vec_id AS query_id, ve AS qv, bucket FROM lb WHERE vec_id < 30),
-           |ls AS (SELECT query_id, c.vec_id AS neighbor_id,
-           |  round(list_cosine_similarity(qv, c.ve), 6) AS cos
-           |  FROM lq JOIN lb c ON lq.bucket = c.bucket AND c.vec_id <> lq.query_id),
-           |lr AS (SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id ASC) AS rnk FROM ls),
-           |lsh AS MATERIALIZED (SELECT query_id, neighbor_id FROM lr WHERE rnk <= 3),
-           |cent AS (SELECT vec_id AS cid, ve AS cv FROM v WHERE vec_id < 16),
-           |iasg AS MATERIALIZED (SELECT vec_id, cid FROM (
-           |  SELECT v.vec_id, c.cid,
-           |    row_number() OVER (PARTITION BY v.vec_id ORDER BY list_cosine_similarity(v.ve, c.cv) DESC, c.cid ASC) AS rn
-           |  FROM v, cent c) t WHERE rn = 1),
-           |iprobes AS MATERIALIZED (SELECT query_id, cid FROM (
-           |  SELECT v.vec_id AS query_id, c.cid,
-           |    row_number() OVER (PARTITION BY v.vec_id ORDER BY list_cosine_similarity(v.ve, c.cv) DESC, c.cid ASC) AS rn
-           |  FROM v, cent c WHERE v.vec_id < 30) t WHERE rn <= 4),
-           |ivs AS (SELECT p.query_id, a.vec_id AS neighbor_id,
-           |  round(list_cosine_similarity(qv.ve, av.ve), 6) AS cos
-           |  FROM iprobes p JOIN iasg a ON p.cid = a.cid AND a.vec_id <> p.query_id
-           |  JOIN v qv ON qv.vec_id = p.query_id JOIN v av ON av.vec_id = a.vec_id),
-           |ir AS (SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id ASC) AS rnk FROM ivs),
-           |ivf AS MATERIALIZED (SELECT query_id, neighbor_id FROM ir WHERE rnk <= 3),
-           |${ivfpqResCtes(30)},
-           |pr2 AS (SELECT query_id, neighbor_id,
-           |    row_number() OVER (PARTITION BY query_id ORDER BY micros ASC, neighbor_id ASC) AS rnk FROM rq_dd),
-           |ipq AS MATERIALIZED (SELECT query_id, neighbor_id FROM pr2 WHERE rnk <= 3),
-           |rrsc AS (SELECT c.query_id, c.neighbor_id,
-           |    round(list_cosine_similarity(q.ve, n.ve), 6) AS cos
-           |  FROM (SELECT query_id, neighbor_id FROM pr2 WHERE rnk <= 12) c
-           |  JOIN v q ON q.vec_id = c.query_id JOIN v n ON n.vec_id = c.neighbor_id),
-           |ipqr AS MATERIALIZED (SELECT query_id, neighbor_id FROM (
-           |  SELECT query_id, neighbor_id,
-           |    row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id ASC) AS rnk
-           |  FROM rrsc) t WHERE rnk <= 3),
-           |arms AS (SELECT 'lsh' AS method, query_id, neighbor_id FROM lsh
-           |  UNION ALL SELECT 'ivf', query_id, neighbor_id FROM ivf
-           |  UNION ALL SELECT 'ivfpq', query_id, neighbor_id FROM ipq
-           |  UNION ALL SELECT 'ivfpq_rerank', query_id, neighbor_id FROM ipqr),
-           |hits AS (SELECT a.method, count(*) AS n_found,
-           |    sum(CASE WHEN e.query_id IS NOT NULL THEN 1 ELSE 0 END) AS n_hit
-           |  FROM arms a LEFT JOIN exact e
-           |    ON e.query_id = a.query_id AND e.neighbor_id = a.neighbor_id
-           |  GROUP BY 1),
-           |den AS (SELECT count(DISTINCT query_id) AS n_queries, count(*) AS n_exact FROM exact)
-           |SELECT method,
-           |  CAST(n_queries AS BIGINT) AS n_queries, CAST(n_exact AS BIGINT) AS n_exact,
-           |  CAST(n_found AS BIGINT) AS n_found, CAST(n_hit AS BIGINT) AS n_hit,
-           |  round(CASE WHEN n_exact = 0 THEN 1.0 ELSE CAST(n_hit AS DOUBLE) / n_exact END, 4) AS recall
-           |FROM hits, den""".stripMargin
-      },
+      {
+      def sign(p: Int) =
+        s"(CASE WHEN (strpos('0123456789abcdef', substr(md5('$p|'||i), 1, 1)) - 1) % 2 = 1 THEN 1.0 ELSE -1.0 END)"
+      def bit(p: Int) =
+        s"(CASE WHEN list_sum(list_transform(range(0, len(ve)), i -> ve[i+1] * ${sign(p)})) >= 0 THEN ${1L << p} ELSE 0 END)"
+      val bucket = (0 until 4).map(bit).mkString(" + ")
+      s"""WITH $pqBaseCtes,
+         |xq AS (SELECT vec_id AS query_id, ve AS qv FROM v WHERE vec_id < 30),
+         |xs AS (SELECT query_id, e.vec_id AS neighbor_id,
+         |  round(list_cosine_similarity(qv, e.ve), 6) AS cos
+         |  FROM xq, v e WHERE e.vec_id <> query_id),
+         |xr AS (SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id ASC) AS rnk FROM xs),
+         |exact AS MATERIALIZED (SELECT query_id, neighbor_id FROM xr WHERE rnk <= 3),
+         |lb AS (SELECT vec_id, ve, $bucket AS bucket FROM v),
+         |lq AS (SELECT vec_id AS query_id, ve AS qv, bucket FROM lb WHERE vec_id < 30),
+         |ls AS (SELECT query_id, c.vec_id AS neighbor_id,
+         |  round(list_cosine_similarity(qv, c.ve), 6) AS cos
+         |  FROM lq JOIN lb c ON lq.bucket = c.bucket AND c.vec_id <> lq.query_id),
+         |lr AS (SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id ASC) AS rnk FROM ls),
+         |lsh AS MATERIALIZED (SELECT query_id, neighbor_id FROM lr WHERE rnk <= 3),
+         |cent AS (SELECT vec_id AS cid, ve AS cv FROM v WHERE vec_id < 16),
+         |iasg AS MATERIALIZED (SELECT vec_id, cid FROM (
+         |  SELECT v.vec_id, c.cid,
+         |    row_number() OVER (PARTITION BY v.vec_id ORDER BY list_cosine_similarity(v.ve, c.cv) DESC, c.cid ASC) AS rn
+         |  FROM v, cent c) t WHERE rn = 1),
+         |iprobes AS MATERIALIZED (SELECT query_id, cid FROM (
+         |  SELECT v.vec_id AS query_id, c.cid,
+         |    row_number() OVER (PARTITION BY v.vec_id ORDER BY list_cosine_similarity(v.ve, c.cv) DESC, c.cid ASC) AS rn
+         |  FROM v, cent c WHERE v.vec_id < 30) t WHERE rn <= 4),
+         |ivs AS (SELECT p.query_id, a.vec_id AS neighbor_id,
+         |  round(list_cosine_similarity(qv.ve, av.ve), 6) AS cos
+         |  FROM iprobes p JOIN iasg a ON p.cid = a.cid AND a.vec_id <> p.query_id
+         |  JOIN v qv ON qv.vec_id = p.query_id JOIN v av ON av.vec_id = a.vec_id),
+         |ir AS (SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id ASC) AS rnk FROM ivs),
+         |ivf AS MATERIALIZED (SELECT query_id, neighbor_id FROM ir WHERE rnk <= 3),
+         |${ivfpqResCtes(30)},
+         |pr2 AS (SELECT query_id, neighbor_id,
+         |    row_number() OVER (PARTITION BY query_id ORDER BY micros ASC, neighbor_id ASC) AS rnk FROM rq_dd),
+         |ipq AS MATERIALIZED (SELECT query_id, neighbor_id FROM pr2 WHERE rnk <= 3),
+         |rrsc AS (SELECT c.query_id, c.neighbor_id,
+         |    round(list_cosine_similarity(q.ve, n.ve), 6) AS cos
+         |  FROM (SELECT query_id, neighbor_id FROM pr2 WHERE rnk <= 12) c
+         |  JOIN v q ON q.vec_id = c.query_id JOIN v n ON n.vec_id = c.neighbor_id),
+         |ipqr AS MATERIALIZED (SELECT query_id, neighbor_id FROM (
+         |  SELECT query_id, neighbor_id,
+         |    row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id ASC) AS rnk
+         |  FROM rrsc) t WHERE rnk <= 3),
+         |arms AS (SELECT 'lsh' AS method, query_id, neighbor_id FROM lsh
+         |  UNION ALL SELECT 'ivf', query_id, neighbor_id FROM ivf
+         |  UNION ALL SELECT 'ivfpq', query_id, neighbor_id FROM ipq
+         |  UNION ALL SELECT 'ivfpq_rerank', query_id, neighbor_id FROM ipqr),
+         |hits AS (SELECT a.method, count(*) AS n_found,
+         |    sum(CASE WHEN e.query_id IS NOT NULL THEN 1 ELSE 0 END) AS n_hit
+         |  FROM arms a LEFT JOIN exact e
+         |    ON e.query_id = a.query_id AND e.neighbor_id = a.neighbor_id
+         |  GROUP BY 1),
+         |den AS (SELECT count(DISTINCT query_id) AS n_queries, count(*) AS n_exact FROM exact)
+         |SELECT method,
+         |  CAST(n_queries AS BIGINT) AS n_queries, CAST(n_exact AS BIGINT) AS n_exact,
+         |  CAST(n_found AS BIGINT) AS n_found, CAST(n_hit AS BIGINT) AS n_hit,
+         |  round(CASE WHEN n_exact = 0 THEN 1.0 ELSE CAST(n_hit AS DOUBLE) / n_exact END, 4) AS recall
+         |FROM hits, den""".stripMargin
+    }),
+    // int8 quantization-loss recall: top-k served from the code*scale
+    // reconstruction (full-precision queries) vs the exact ground truth —
+    // the precision-truncation twin of the matryoshka rungs
+    Entry("ann_int8_recall", (s, d) => {
+      val e = embeddings(s, d)
+      pipeline.Quantization.int8Recall(e, e.where(col("vec_id") < 30),
+        "vec_id", "embedding", k = 3)
+    },
+      """WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS ve FROM embeddings),
+        |q AS (SELECT vec_id, ve FROM v WHERE vec_id < 30),
+        |ex AS (SELECT query_id, neighbor_id FROM (
+        |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
+        |    row_number() OVER (PARTITION BY q.vec_id
+        |      ORDER BY round(list_cosine_similarity(q.ve, c.ve), 6) DESC, c.vec_id ASC) AS rnk
+        |  FROM q JOIN v c ON c.vec_id <> q.vec_id) t WHERE rnk <= 3),
+        |den AS (SELECT count(DISTINCT query_id) AS n_queries, count(*) AS n_exact FROM ex),
+        |m AS (SELECT vec_id, ve, list_max(list_transform(ve, x -> abs(x))) / 127.0 AS scale FROM v),
+        |rc AS (SELECT vec_id, CASE WHEN scale = 0.0 THEN list_transform(ve, x -> 0.0)
+        |  ELSE list_transform(ve, x -> floor(x / scale + 0.5) * scale) END AS rv FROM m),
+        |sv AS (SELECT query_id, neighbor_id FROM (
+        |  SELECT q.vec_id AS query_id, r.vec_id AS neighbor_id,
+        |    row_number() OVER (PARTITION BY q.vec_id
+        |      ORDER BY round(list_cosine_similarity(q.ve, r.rv), 6) DESC, r.vec_id ASC) AS rnk
+        |  FROM q JOIN rc r ON r.vec_id <> q.vec_id) t WHERE rnk <= 3),
+        |h AS (SELECT count(*) AS n_found,
+        |    CAST(coalesce(sum(CASE WHEN ex.query_id IS NOT NULL THEN 1 END), 0) AS BIGINT) AS n_hit
+        |  FROM sv LEFT JOIN ex ON sv.query_id = ex.query_id AND sv.neighbor_id = ex.neighbor_id)
+        |SELECT den.n_queries, den.n_exact, h.n_found, h.n_hit,
+        |  round(CASE WHEN den.n_exact = 0 THEN 1.0 ELSE CAST(h.n_hit AS DOUBLE) / den.n_exact END, 4) AS recall
+        |FROM h, den""".stripMargin),
+    // Matryoshka acceptance test: cosine top-k recall when only the first
+    // 8/16/32/64 dimensions are scored, vs the full-dim exact top-k —
+    // the measurement that licenses storing truncated prefixes on the
+    // serving tier
+    Entry("ann_matryoshka_recall", (s, d) => {
+      val e = embeddings(s, d)
+      Similarity.matryoshkaRecall(e, e.where(col("vec_id") < 30),
+        "vec_id", "embedding", k = 3, prefixes = Seq(8, 16, 32, 64))
+    },
+      """WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS ve FROM embeddings),
+        |q AS (SELECT vec_id, ve FROM v WHERE vec_id < 30),
+        |ex AS (SELECT query_id, neighbor_id FROM (
+        |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
+        |    row_number() OVER (PARTITION BY q.vec_id
+        |      ORDER BY round(list_cosine_similarity(q.ve, c.ve), 6) DESC, c.vec_id ASC) AS rnk
+        |  FROM q JOIN v c ON c.vec_id <> q.vec_id) t WHERE rnk <= 3),
+        |den AS (SELECT count(DISTINCT query_id) AS n_queries, count(*) AS n_exact FROM ex),
+        |rung(d) AS (VALUES (8), (16), (32), (64)),
+        |rs AS (SELECT r.d, q.vec_id AS query_id, c.vec_id AS neighbor_id,
+        |    row_number() OVER (PARTITION BY r.d, q.vec_id
+        |      ORDER BY round(list_cosine_similarity(list_slice(q.ve, 1, r.d), list_slice(c.ve, 1, r.d)), 6) DESC,
+        |        c.vec_id ASC) AS rnk
+        |  FROM rung r, q JOIN v c ON c.vec_id <> q.vec_id),
+        |topd AS (SELECT d, query_id, neighbor_id FROM rs WHERE rnk <= 3),
+        |h AS (SELECT t.d, count(*) AS n_found,
+        |    CAST(coalesce(sum(CASE WHEN ex.query_id IS NOT NULL THEN 1 END), 0) AS BIGINT) AS n_hit
+        |  FROM topd t LEFT JOIN ex ON t.query_id = ex.query_id AND t.neighbor_id = ex.neighbor_id
+        |  GROUP BY t.d)
+        |SELECT CAST(h.d AS BIGINT) AS dims, den.n_queries, den.n_exact, h.n_found, h.n_hit,
+        |  round(CASE WHEN den.n_exact = 0 THEN 1.0 ELSE CAST(h.n_hit AS DOUBLE) / den.n_exact END, 4) AS recall
+        |FROM h, den""".stripMargin),
+    // right-to-forget over the persisted index: ids 40-43 removed (one
+    // anti-join on the stored codes, quantizers frozen), then served —
+    // results must equal an index whose corpus never held those vectors
+    Entry("ann_ivfpq_forget", (s, d) => {
+      val e = embeddings(s, d)
+      val idx = pipeline.AnnIndex.load(s, savedAnnIndex(s, d))
+      import s.implicits._
+      val gone = pipeline.AnnIndex.remove(idx, Seq(40L, 41L, 42L, 43L).toDF("vec_id"))
+      pipeline.AnnIndex.search(gone, e.where(col("vec_id") < 5),
+        "vec_id", "embedding", k = 3, nprobe = 8)
+    },
+      // the serve replay minus the forgotten ids' candidate rows — code
+      // deletion is row-drop on the code table, so filtering rq_dd by
+      // neighbor replays it exactly
+      s"""WITH $pqBaseCtes,
+         |${ivfpqResCtes(5)},
+         |kept AS (SELECT * FROM rq_dd WHERE neighbor_id NOT IN (40, 41, 42, 43)),
+         |r AS (SELECT query_id, neighbor_id, micros,
+         |    row_number() OVER (PARTITION BY query_id ORDER BY micros ASC, neighbor_id ASC) AS rnk FROM kept)
+         |SELECT query_id, neighbor_id,
+         |  floor(CAST(micros AS DOUBLE) / 100.0 + 0.5) / 10000.0 AS dist,
+         |  CAST(rnk AS BIGINT) AS rank
+         |FROM r WHERE rnk <= 3""".stripMargin),
+    // corpus rebalancing: sqrt-temperature quotas per detected language
+    Entry("curate_temperature_sample", (s, d) => {
+      val withLang = docs(s, d).select(col("doc_id"),
+        TextAnalysis.langId(col("text")).as("lang_guess"))
+      pipeline.Curation.temperatureSample(withLang, "doc_id", "lang_guess",
+          total = TempTotal, seed = TempSeed, overshoot = StratOvershoot)
+        .select("doc_id", "lang_guess")
+    },
       // mirrors Curation.temperatureSample: integer micro-weights from the
       // correctly-rounded sqrt, floor-division quotas, then the same
       // two-phase per-stratum hash-rank as curate_stratified
-      "curate_temperature_sample" ->
-        s"""WITH tl AS ($textLangidSql),
-           |cnts AS (SELECT lang_guess, count(*) AS cnt FROM tl GROUP BY lang_guess),
-           |wts AS (SELECT lang_guess, cnt,
-           |    CAST(floor(sqrt(CAST(cnt AS DOUBLE)) * 1000000.0) AS BIGINT) AS w FROM cnts),
-           |tw AS (SELECT CAST(sum(w) AS BIGINT) AS tw FROM wts),
-           |qs AS (SELECT lang_guess, cnt, ($TempTotal * w) // tw AS quota FROM wts CROSS JOIN tw),
-           |tg AS (SELECT lang_guess, cnt, quota,
-           |    greatest(quota * $StratOvershoot, quota + 64) AS target FROM qs),
-           |cuts AS (SELECT lang_guess, cnt, quota, target,
-           |    printf('%06x', CAST(ceil(16777216.0 * target / cnt) AS BIGINT)) AS cut FROM tg),
-           |surv AS (SELECT t.doc_id, t.lang_guess, c.quota,
-           |    md5('$TempSeed|' || CAST(t.doc_id AS VARCHAR)) AS h
-           |  FROM tl t JOIN cuts c USING (lang_guess)
-           |  WHERE c.cnt <= c.target
-           |    OR substr(md5('$TempSeed|' || CAST(t.doc_id AS VARCHAR)), 1, 6) < c.cut),
-           |r AS (SELECT doc_id, lang_guess, quota,
-           |    row_number() OVER (PARTITION BY lang_guess ORDER BY h ASC, doc_id ASC) AS rn
-           |  FROM surv)
-           |SELECT doc_id, lang_guess FROM r WHERE rn <= quota""".stripMargin,
-      "dedup_paragraphs" ->
-        s"""$corpusCte,
-           |comp AS (SELECT doc_id % 40 AS cid,
-           |    string_agg(text, chr(10) ORDER BY doc_id) AS text
-           |  FROM corpus GROUP BY 1),
-           |paras AS (SELECT cid, len(string_split(text, chr(10))) AS n,
-           |    unnest(string_split(text, chr(10))) AS para,
-           |    unnest(range(len(string_split(text, chr(10))))) AS pos
-           |  FROM comp),
-           |keep AS (SELECT cid, n, pos, para FROM (
-           |    SELECT *, row_number() OVER (PARTITION BY para ORDER BY cid, pos) AS rn
-           |    FROM paras) t WHERE rn = 1)
-           |SELECT cid, string_agg(para, chr(10) ORDER BY pos) AS text,
-           |  count(*) AS n_kept, CAST(any_value(n) - count(*) AS BIGINT) AS n_dropped
-           |FROM keep GROUP BY cid""".stripMargin,
-      "curate_epoch_shuffle" ->
-        """WITH h AS (SELECT doc_id, md5('epoch|1|' || CAST(doc_id AS VARCHAR)) AS hx FROM documents),
-          |s AS (SELECT doc_id, hx,
-          |  CAST(concat('0x', substr(hx, 1, 6)) AS BIGINT) % 8 AS shard FROM h)
-          |SELECT doc_id, shard,
-          |  CAST(row_number() OVER (PARTITION BY shard ORDER BY hx, doc_id) AS BIGINT) AS ord
-          |FROM s""".stripMargin,
-      "dedup_paragraph_report" ->
-        s"""$corpusCte,
-           |comp AS (SELECT doc_id % 40 AS cid,
-           |    string_agg(text, chr(10) ORDER BY doc_id) AS text
-           |  FROM corpus GROUP BY 1),
-           |pr AS (SELECT cid, unnest(string_split(text, chr(10))) AS para FROM comp),
-           |ph AS (SELECT cid, para, strlen(para) AS len FROM pr),
-           |grp AS (SELECT para, count(DISTINCT cid) AS ndocs FROM ph GROUP BY para),
-           |j AS (SELECT p.cid, p.len, g.ndocs FROM ph p JOIN grp g ON g.para = p.para)
-           |SELECT cid, count(*) AS n_paras,
-           |  round(CAST(sum(CASE WHEN ndocs > 1 THEN 1 ELSE 0 END) AS DOUBLE) / count(*), 4) AS dup_para_frac,
-           |  round(coalesce(CAST(sum(CASE WHEN ndocs > 1 THEN len ELSE 0 END) AS DOUBLE)
-           |    / (CASE WHEN sum(len) > 0 THEN sum(len) END), 0.0), 4) AS dup_char_frac
-           |FROM j GROUP BY cid""".stripMargin,
-      "curate_clean_lines" ->
-        """WITH comp AS (SELECT doc_id % 50 AS cid,
-          |    string_agg(text, chr(10) ORDER BY doc_id) AS text
-          |  FROM documents GROUP BY 1),
-          |lines AS (SELECT cid, len(string_split(text, chr(10))) AS n,
-          |    unnest(string_split(text, chr(10))) AS line,
-          |    unnest(range(len(string_split(text, chr(10))))) AS pos
-          |  FROM comp),
-          |keep AS (SELECT * FROM lines
-          |  WHERE len(regexp_extract_all(lower(line), '[a-z0-9]+')) >= 30
-          |    AND NOT contains(lower(line), 'spark'))
-          |SELECT cid, string_agg(line, chr(10) ORDER BY pos) AS text,
-          |  count(*) AS n_kept, CAST(any_value(n) - count(*) AS BIGINT) AS n_dropped
-          |FROM keep GROUP BY cid""".stripMargin,
-      "dedup_cross_source" ->
-        """WITH sourced AS (
-          |  SELECT doc_id, text, source FROM documents
-          |  UNION ALL SELECT doc_id + 2000000, text, 'mirror' FROM documents WHERE doc_id % 10 = 0),
-          |per AS (SELECT md5(text) AS h, source AS src, count(*) AS c FROM sourced GROUP BY 1, 2),
-          |cross_p AS (SELECT l.src AS source_a, r.src AS source_b,
-          |    CAST(sum(l.c * r.c) AS BIGINT) AS dup_pairs
-          |  FROM per l JOIN per r ON l.h = r.h AND l.src < r.src GROUP BY 1, 2),
-          |diag AS (SELECT src AS source_a, src AS source_b,
-          |    CAST(sum(c * (c - 1) // 2) AS BIGINT) AS dup_pairs
-          |  FROM per WHERE c > 1 GROUP BY 1, 2)
-          |SELECT * FROM (SELECT * FROM cross_p UNION ALL SELECT * FROM diag) t
-          |WHERE dup_pairs > 0""".stripMargin,
-      "text_langid_confusion" ->
-        s"""WITH tl AS ($textLangidSql)
-           |SELECT d.lang, tl.lang_guess, count(*) AS n_docs
-           |FROM documents d JOIN tl USING (doc_id)
-           |GROUP BY d.lang, tl.lang_guess""".stripMargin,
-      "embedding_outliers" ->
-        s"""WITH ${kmeansCtes(k = SemK, iters = SemIters)},
-           |sc AS (SELECT v.vec_id, c.cid, ${kmeansDist("c")} AS d,
-           |    row_number() OVER (PARTITION BY v.vec_id ORDER BY ${kmeansDist("c")} ASC, c.cid ASC) AS rn
-           |  FROM v, cents$SemIters c),
-           |best AS (SELECT vec_id, cid, round(d, 6) AS dist2 FROM sc WHERE rn = 1)
-           |SELECT vec_id, cid, dist2 FROM best
-           |ORDER BY dist2 DESC, vec_id ASC LIMIT 20""".stripMargin,
+      s"""WITH tl AS ($textLangidSql),
+         |cnts AS (SELECT lang_guess, count(*) AS cnt FROM tl GROUP BY lang_guess),
+         |wts AS (SELECT lang_guess, cnt,
+         |    CAST(floor(sqrt(CAST(cnt AS DOUBLE)) * 1000000.0) AS BIGINT) AS w FROM cnts),
+         |tw AS (SELECT CAST(sum(w) AS BIGINT) AS tw FROM wts),
+         |qs AS (SELECT lang_guess, cnt, ($TempTotal * w) // tw AS quota FROM wts CROSS JOIN tw),
+         |tg AS (SELECT lang_guess, cnt, quota,
+         |    greatest(quota * $StratOvershoot, quota + 64) AS target FROM qs),
+         |cuts AS (SELECT lang_guess, cnt, quota, target,
+         |    printf('%06x', CAST(ceil(16777216.0 * target / cnt) AS BIGINT)) AS cut FROM tg),
+         |surv AS (SELECT t.doc_id, t.lang_guess, c.quota,
+         |    md5('$TempSeed|' || CAST(t.doc_id AS VARCHAR)) AS h
+         |  FROM tl t JOIN cuts c USING (lang_guess)
+         |  WHERE c.cnt <= c.target
+         |    OR substr(md5('$TempSeed|' || CAST(t.doc_id AS VARCHAR)), 1, 6) < c.cut),
+         |r AS (SELECT doc_id, lang_guess, quota,
+         |    row_number() OVER (PARTITION BY lang_guess ORDER BY h ASC, doc_id ASC) AS rn
+         |  FROM surv)
+         |SELECT doc_id, lang_guess FROM r WHERE rn <= quota""".stripMargin),
+    // pipeline QA: which sources copy from which — per (source_a, source_b),
+    // exact-dup pair counts from per-group tallies (never enumerated pairs);
+    // planted corpus: every 10th doc mirrored under source 'mirror'
+    Entry("dedup_cross_source", (s, d) => {
+      val dd = docs(s, d)
+      val sourced = dd.select(col("doc_id"), col("text"), col("source"))
+        .unionByName(dd.where(col("doc_id") % 10 === 0)
+          .select((col("doc_id") + 2000000L).as("doc_id"), col("text"),
+            lit("mirror").as("source")))
+      Dedup.crossSourceDupMatrix(sourced, "doc_id", "text", "source")
+    },
+      """WITH sourced AS (
+        |  SELECT doc_id, text, source FROM documents
+        |  UNION ALL SELECT doc_id + 2000000, text, 'mirror' FROM documents WHERE doc_id % 10 = 0),
+        |per AS (SELECT md5(text) AS h, source AS src, count(*) AS c FROM sourced GROUP BY 1, 2),
+        |cross_p AS (SELECT l.src AS source_a, r.src AS source_b,
+        |    CAST(sum(l.c * r.c) AS BIGINT) AS dup_pairs
+        |  FROM per l JOIN per r ON l.h = r.h AND l.src < r.src GROUP BY 1, 2),
+        |diag AS (SELECT src AS source_a, src AS source_b,
+        |    CAST(sum(c * (c - 1) // 2) AS BIGINT) AS dup_pairs
+        |  FROM per WHERE c > 1 GROUP BY 1, 2)
+        |SELECT * FROM (SELECT * FROM cross_p UNION ALL SELECT * FROM diag) t
+        |WHERE dup_pairs > 0""".stripMargin),
+    // pipeline QA: language-ID confusion matrix against the ground-truth
+    // lang column — per (lang, lang_guess), document count
+    Entry("text_langid_confusion", (s, d) =>
+      docs(s, d).select(col("lang"), TextAnalysis.langId(col("text")).as("lang_guess"))
+        .groupBy("lang", "lang_guess").agg(count(lit(1)).as("n_docs")),
+      s"""WITH tl AS ($textLangidSql)
+         |SELECT d.lang, tl.lang_guess, count(*) AS n_docs
+         |FROM documents d JOIN tl USING (doc_id)
+         |GROUP BY d.lang, tl.lang_guess""".stripMargin),
+    // pipeline QA: embedding-space outliers — the 20 vectors farthest from
+    // their own fitted k-means centroid (off-distribution surface first)
+    Entry("embedding_outliers", (s, d) =>
+      pipeline.Clustering.centroidOutliers(embeddings(s, d), "vec_id", "embedding",
+        k = SemK, iters = SemIters, topN = 20),
+      s"""WITH ${kmeansCtes(k = SemK, iters = SemIters)},
+         |sc AS (SELECT v.vec_id, c.cid, ${kmeansDist("c")} AS d,
+         |    row_number() OVER (PARTITION BY v.vec_id ORDER BY ${kmeansDist("c")} ASC, c.cid ASC) AS rn
+         |  FROM v, cents$SemIters c),
+         |best AS (SELECT vec_id, cid, round(d, 6) AS dist2 FROM sc WHERE rn = 1)
+         |SELECT vec_id, cid, dist2 FROM best
+         |ORDER BY dist2 DESC, vec_id ASC LIMIT 20""".stripMargin),
+    // per-cluster prototypes: the 10 vectors CLOSEST to their fitted
+    // k-means centroid per cluster (the selection half of a D4-style
+    // pipeline; dual of embedding_outliers)
+    Entry("curate_prototypes", (s, d) =>
+      pipeline.Clustering.clusterPrototypes(embeddings(s, d), "vec_id", "embedding",
+        k = SemK, iters = SemIters, perCluster = 10),
       // same fitted centroids + distance as embedding_outliers, ranked
       // ASC per cluster instead of DESC globally
-      "curate_prototypes" ->
-        s"""WITH ${kmeansCtes(k = SemK, iters = SemIters)},
-           |sc AS (SELECT v.vec_id, c.cid, ${kmeansDist("c")} AS d,
-           |    row_number() OVER (PARTITION BY v.vec_id ORDER BY ${kmeansDist("c")} ASC, c.cid ASC) AS rn
-           |  FROM v, cents$SemIters c),
-           |best AS (SELECT vec_id, cid, round(d, 6) AS dist2 FROM sc WHERE rn = 1),
-           |r AS (SELECT vec_id, cid, dist2,
-           |    row_number() OVER (PARTITION BY cid ORDER BY dist2 ASC, vec_id ASC) AS rank
-           |  FROM best)
-           |SELECT vec_id, cid, CAST(rank AS BIGINT) AS rank, dist2
-           |FROM r WHERE rank <= 10""".stripMargin,
+      s"""WITH ${kmeansCtes(k = SemK, iters = SemIters)},
+         |sc AS (SELECT v.vec_id, c.cid, ${kmeansDist("c")} AS d,
+         |    row_number() OVER (PARTITION BY v.vec_id ORDER BY ${kmeansDist("c")} ASC, c.cid ASC) AS rn
+         |  FROM v, cents$SemIters c),
+         |best AS (SELECT vec_id, cid, round(d, 6) AS dist2 FROM sc WHERE rn = 1),
+         |r AS (SELECT vec_id, cid, dist2,
+         |    row_number() OVER (PARTITION BY cid ORDER BY dist2 ASC, vec_id ASC) AS rank
+         |  FROM best)
+         |SELECT vec_id, cid, CAST(rank AS BIGINT) AS rank, dist2
+         |FROM r WHERE rank <= 10""".stripMargin),
+    // collocation mining: top-20 adjacent word pairs by PMI (micro-ln)
+    // among bigrams with count >= 5 — multi-word-expression detection
+    Entry("text_collocations", (s, d) =>
+      TextAnalysis.collocations(docs(s, d), "doc_id", "text",
+        minCount = 5, topK = 20),
       // bigram-marginal PMI — the same expression shape as the walk-PMI
       // oracle, fed by the bigram tally instead of walk pairs
-      "text_collocations" ->
-        s"""WITH ${toksCte("documents")},
-           |bg AS (SELECT unnest(${shinglesExpr(2)}) AS s FROM toks WHERE len(w) >= 2),
-           |cnt AS (SELECT string_split(s, ' ')[1] AS center, string_split(s, ' ')[2] AS context,
-           |    count(*) AS n
-           |  FROM bg GROUP BY s),
-           |tot AS (SELECT sum(n) AS nn FROM cnt),
-           |ct AS (SELECT center, sum(n) AS nc FROM cnt GROUP BY 1),
-           |xt AS (SELECT context, sum(n) AS nx FROM cnt GROUP BY 1),
-           |p AS (SELECT c.center, c.context, c.n,
-           |    CAST(floor(ln(CAST(c.n AS DOUBLE) * tot.nn / (ct.nc * xt.nx)) * 1000000.0 + 0.5) AS BIGINT) AS pmi_micro
-           |  FROM cnt c JOIN ct USING (center) JOIN xt USING (context) CROSS JOIN tot)
-           |SELECT center, context, CAST(n AS BIGINT) AS n_pairs, pmi_micro
-           |FROM p WHERE n >= 5
-           |ORDER BY pmi_micro DESC, center ASC, context ASC LIMIT 20""".stripMargin,
-      "corpus_entropy" ->
-        s"""WITH ${toksCte("documents")},
-           |tk AS (SELECT d.source, t.f
-           |  FROM (SELECT doc_id, unnest(w) AS f FROM toks) t
-           |  JOIN documents d USING (doc_id) WHERE f <> ''),
-           |cnt AS (SELECT source, f, count(*) AS c FROM tk GROUP BY 1, 2),
-           |tot AS (SELECT source, sum(c) AS tt, count(*) AS n_types FROM cnt GROUP BY 1),
-           |e AS (SELECT c.source, t.tt, t.n_types,
-           |    c.c * CAST(floor(ln(CAST(c.c AS DOUBLE) / t.tt) * 1000000.0 + 0.5) AS BIGINT) AS e
-           |  FROM cnt c JOIN tot t USING (source))
-           |SELECT source, CAST(tt AS BIGINT) AS n_tokens, CAST(n_types AS BIGINT) AS n_types,
-           |  CAST(sum(e) AS BIGINT) AS ent_sum_micro
-           |FROM e GROUP BY source, tt, n_types""".stripMargin,
-      "corpus_histogram" ->
-        s"""WITH t AS (SELECT doc_id,
-           |    CAST(CASE WHEN len($normSql) = 0 THEN 0
-           |      ELSE len(string_split($normSql, ' ')) END AS BIGINT) AS nw,
-           |    CAST(len(text) AS BIGINT) AS nc
-           |  FROM documents)
-           |SELECT nw // 50 AS bucket, count(*) AS n_docs,
-           |  CAST(sum(nw) AS BIGINT) AS total_words, CAST(sum(nc) AS BIGINT) AS total_chars,
-           |  min(nw) AS min_words, max(nw) AS max_words
-           |FROM t GROUP BY nw // 50""".stripMargin,
-      "multimodal_text_decode" ->
-        s"""SELECT doc_id AS asset_id,
-           |  CAST(len(text) AS BIGINT) AS n_chars,
-           |  CAST(CASE WHEN len($normSql) = 0 THEN 0 ELSE len(string_split($normSql, ' ')) END AS BIGINT) AS n_words
-           |FROM documents""".stripMargin,
-      // mirrors Multimodal.imageFeatures: the pixel formula of
-      // syntheticImageAssets re-derived in SQL (PNG decode is lossless, so
-      // the decoded pixels ARE the formula values)
-      "multimodal_image_features" ->
-        """WITH a AS (SELECT range AS id,
-          |    CAST(4 + range % 5 AS INTEGER) AS w, CAST(4 + range % 3 AS INTEGER) AS h
-          |  FROM range(0, 120)),
-          |px AS (SELECT id, w, h, xs.x, ys.y FROM a,
-          |  (SELECT range AS x FROM range(0, 8)) xs,
-          |  (SELECT range AS y FROM range(0, 6)) ys
-          |  WHERE xs.x < w AND ys.y < h),
-          |c AS (SELECT id, w, h,
-          |    (id * 31 + x * 7 + y * 13) % 256 AS r,
-          |    (id * 17 + x * 3 + y * 5) % 256 AS g,
-          |    (id * 11 + x * 19 + y * 23) % 256 AS b
-          |  FROM px),
-          |l AS (SELECT id, w, h, r, g, b,
-          |    (r * 299 + g * 587 + b * 114) // 1000 AS lum FROM c)
-          |SELECT id AS asset_id, CAST(w AS BIGINT) AS width, CAST(h AS BIGINT) AS height,
-          |  count(*) AS n_px,
-          |  CAST(sum(r) AS BIGINT) AS sum_r, CAST(sum(g) AS BIGINT) AS sum_g,
-          |  CAST(sum(b) AS BIGINT) AS sum_b, CAST(sum(lum) AS BIGINT) AS sum_luma,
-          |  CAST(sum(CASE WHEN lum // 64 = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_l0,
-          |  CAST(sum(CASE WHEN lum // 64 = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_l1,
-          |  CAST(sum(CASE WHEN lum // 64 = 2 THEN 1 ELSE 0 END) AS BIGINT) AS n_l2,
-          |  CAST(sum(CASE WHEN lum // 64 = 3 THEN 1 ELSE 0 END) AS BIGINT) AS n_l3,
-          |  round(CAST(sum(lum) AS DOUBLE) / count(*), 6) AS mean_luma
-          |FROM l GROUP BY 1, 2, 3""".stripMargin,
-      // mirrors imageFeatures run THROUGH the streaming engine over 60
-      // assets — decode is deterministic per payload, so stream == batch
-      // and the oracle is the same pixel-formula replay
-      "stream_asset_features" ->
-        """WITH a AS (SELECT range AS id,
-          |    CAST(4 + range % 5 AS INTEGER) AS w, CAST(4 + range % 3 AS INTEGER) AS h
-          |  FROM range(0, 60)),
-          |px AS (SELECT id, w, h, xs.x, ys.y FROM a,
-          |  (SELECT range AS x FROM range(0, 8)) xs,
-          |  (SELECT range AS y FROM range(0, 6)) ys
-          |  WHERE xs.x < w AND ys.y < h),
-          |c AS (SELECT id, w, h,
-          |    (id * 31 + x * 7 + y * 13) % 256 AS r,
-          |    (id * 17 + x * 3 + y * 5) % 256 AS g,
-          |    (id * 11 + x * 19 + y * 23) % 256 AS b
-          |  FROM px),
-          |l AS (SELECT id, w, h, r, g, b,
-          |    (r * 299 + g * 587 + b * 114) // 1000 AS lum FROM c)
-          |SELECT id AS asset_id, CAST(w AS BIGINT) AS width, CAST(h AS BIGINT) AS height,
-          |  count(*) AS n_px,
-          |  CAST(sum(r) AS BIGINT) AS sum_r, CAST(sum(g) AS BIGINT) AS sum_g,
-          |  CAST(sum(b) AS BIGINT) AS sum_b, CAST(sum(lum) AS BIGINT) AS sum_luma,
-          |  CAST(sum(CASE WHEN lum // 64 = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_l0,
-          |  CAST(sum(CASE WHEN lum // 64 = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_l1,
-          |  CAST(sum(CASE WHEN lum // 64 = 2 THEN 1 ELSE 0 END) AS BIGINT) AS n_l2,
-          |  CAST(sum(CASE WHEN lum // 64 = 3 THEN 1 ELSE 0 END) AS BIGINT) AS n_l3,
-          |  round(CAST(sum(lum) AS DOUBLE) / count(*), 6) AS mean_luma
-          |FROM l GROUP BY 1, 2, 3""".stripMargin,
-      // mirrors Multimodal.imageFeatures ∘ resizeImages(maxDim=5): target
-      // dims by the resizePlan rule, nearest-neighbor source indices by
-      // integer division, then the same pixel-formula feature replay
-      "multimodal_resize_features" ->
-        """WITH a AS (SELECT range AS id,
-          |    CAST(4 + range % 5 AS INTEGER) AS w, CAST(4 + range % 3 AS INTEGER) AS h
-          |  FROM range(0, 120)),
-          |r AS (SELECT id, w, h,
-          |    CAST(floor(w * least(5.0 / w, 5.0 / h, 1.0)) AS INTEGER) AS tw,
-          |    CAST(floor(h * least(5.0 / w, 5.0 / h, 1.0)) AS INTEGER) AS th
-          |  FROM a),
-          |px AS (SELECT id, w, h, tw, th, xs.x, ys.y FROM r,
-          |  (SELECT range AS x FROM range(0, 8)) xs,
-          |  (SELECT range AS y FROM range(0, 6)) ys
-          |  WHERE xs.x < tw AND ys.y < th),
-          |sp AS (SELECT id, tw, th, (x * w) // tw AS sx, (y * h) // th AS sy FROM px),
-          |c AS (SELECT id, tw, th,
-          |    (id * 31 + sx * 7 + sy * 13) % 256 AS r,
-          |    (id * 17 + sx * 3 + sy * 5) % 256 AS g,
-          |    (id * 11 + sx * 19 + sy * 23) % 256 AS b
-          |  FROM sp),
-          |l AS (SELECT id, tw, th, r, g, b,
-          |    (r * 299 + g * 587 + b * 114) // 1000 AS lum FROM c)
-          |SELECT id AS asset_id, CAST(tw AS BIGINT) AS width, CAST(th AS BIGINT) AS height,
-          |  count(*) AS n_px,
-          |  CAST(sum(r) AS BIGINT) AS sum_r, CAST(sum(g) AS BIGINT) AS sum_g,
-          |  CAST(sum(b) AS BIGINT) AS sum_b, CAST(sum(lum) AS BIGINT) AS sum_luma,
-          |  CAST(sum(CASE WHEN lum // 64 = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_l0,
-          |  CAST(sum(CASE WHEN lum // 64 = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_l1,
-          |  CAST(sum(CASE WHEN lum // 64 = 2 THEN 1 ELSE 0 END) AS BIGINT) AS n_l2,
-          |  CAST(sum(CASE WHEN lum // 64 = 3 THEN 1 ELSE 0 END) AS BIGINT) AS n_l3,
-          |  round(CAST(sum(lum) AS DOUBLE) / count(*), 6) AS mean_luma
-          |FROM l GROUP BY 1, 2, 3""".stripMargin,
-      // mirrors Multimodal.videoFrameFeatures(everyK=2) over
-      // syntheticVideoAssets: frames f < 3 + id%4 with f%2=0, then the
-      // frame-pixel generation formula replayed per sampled frame
-      "multimodal_video_features" ->
-        """WITH a AS (SELECT range AS id,
-          |    CAST(4 + range % 5 AS INTEGER) AS w, CAST(4 + range % 3 AS INTEGER) AS h,
-          |    CAST(3 + range % 4 AS INTEGER) AS nf
-          |  FROM range(0, 100)),
-          |fr AS (SELECT id, w, h, fs.f FROM a,
-          |  (SELECT range AS f FROM range(0, 6)) fs
-          |  WHERE fs.f < nf AND fs.f % 2 = 0),
-          |px AS (SELECT id, f, w, h, xs.x, ys.y FROM fr,
-          |  (SELECT range AS x FROM range(0, 8)) xs,
-          |  (SELECT range AS y FROM range(0, 6)) ys
-          |  WHERE xs.x < w AND ys.y < h),
-          |c AS (SELECT id, f, w, h,
-          |    (id * 31 + f * 29 + x * 7 + y * 13) % 256 AS r,
-          |    (id * 17 + f * 37 + x * 3 + y * 5) % 256 AS g,
-          |    (id * 11 + f * 41 + x * 19 + y * 23) % 256 AS b
-          |  FROM px),
-          |l AS (SELECT id, f, w, h, r, g, b,
-          |    (r * 299 + g * 587 + b * 114) // 1000 AS lum FROM c)
-          |SELECT id AS asset_id, CAST(f AS BIGINT) AS frame_idx,
-          |  CAST(w AS BIGINT) AS width, CAST(h AS BIGINT) AS height,
-          |  count(*) AS n_px,
-          |  CAST(sum(r) AS BIGINT) AS sum_r, CAST(sum(g) AS BIGINT) AS sum_g,
-          |  CAST(sum(b) AS BIGINT) AS sum_b, CAST(sum(lum) AS BIGINT) AS sum_luma,
-          |  CAST(sum(CASE WHEN lum // 64 = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_l0,
-          |  CAST(sum(CASE WHEN lum // 64 = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_l1,
-          |  CAST(sum(CASE WHEN lum // 64 = 2 THEN 1 ELSE 0 END) AS BIGINT) AS n_l2,
-          |  CAST(sum(CASE WHEN lum // 64 = 3 THEN 1 ELSE 0 END) AS BIGINT) AS n_l3,
-          |  round(CAST(sum(lum) AS DOUBLE) / count(*), 6) AS mean_luma
-          |FROM l GROUP BY 1, 2, 3, 4""".stripMargin,
-      // mirrors Multimodal.audioFeatures: the PCM sample formula of
-      // syntheticAudioAssets re-derived in SQL (WAV/PCM is lossless)
-      "multimodal_audio_features" ->
-        """WITH a AS (SELECT range AS id, 64 + 16 * (range % 8) AS n FROM range(0, 150)),
-          |s AS (SELECT id, n, ts.t,
-          |    ((id + 1) * 2654435761 + ts.t * 40503) % 4001 - 2000 AS v
-          |  FROM a, (SELECT range AS t FROM range(0, 176)) ts WHERE ts.t < n),
-          |z AS (SELECT id, t, v, lag(v) OVER (PARTITION BY id ORDER BY t) AS pv FROM s)
-          |SELECT id AS asset_id,
-          |  count(*) AS n_samples,
-          |  CAST(sum(v) AS BIGINT) AS sum_amp,
-          |  CAST(sum(v * v) AS BIGINT) AS sum_sq,
-          |  CAST(max(abs(v)) AS BIGINT) AS max_abs,
-          |  CAST(sum(CASE WHEN pv IS NOT NULL AND ((pv < 0) <> (v < 0)) THEN 1 ELSE 0 END) AS BIGINT) AS zero_crossings,
-          |  round(sqrt(CAST(sum(v * v) AS DOUBLE) / count(*)), 6) AS rms
-          |FROM z GROUP BY 1""".stripMargin,
+      s"""WITH ${toksCte("documents")},
+         |bg AS (SELECT unnest(${shinglesExpr(2)}) AS s FROM toks WHERE len(w) >= 2),
+         |cnt AS (SELECT string_split(s, ' ')[1] AS center, string_split(s, ' ')[2] AS context,
+         |    count(*) AS n
+         |  FROM bg GROUP BY s),
+         |tot AS (SELECT sum(n) AS nn FROM cnt),
+         |ct AS (SELECT center, sum(n) AS nc FROM cnt GROUP BY 1),
+         |xt AS (SELECT context, sum(n) AS nx FROM cnt GROUP BY 1),
+         |p AS (SELECT c.center, c.context, c.n,
+         |    CAST(floor(ln(CAST(c.n AS DOUBLE) * tot.nn / (ct.nc * xt.nx)) * 1000000.0 + 0.5) AS BIGINT) AS pmi_micro
+         |  FROM cnt c JOIN ct USING (center) JOIN xt USING (context) CROSS JOIN tot)
+         |SELECT center, context, CAST(n AS BIGINT) AS n_pairs, pmi_micro
+         |FROM p WHERE n >= 5
+         |ORDER BY pmi_micro DESC, center ASC, context ASC LIMIT 20""".stripMargin),
+    // per-source unigram entropy (exact micro-ln cell sums) — the corpus
+    // diversity diagnostic
+    Entry("corpus_entropy", (s, d) =>
+      TextAnalysis.sourceEntropy(docs(s, d), "source", "text"),
+      s"""WITH ${toksCte("documents")},
+         |tk AS (SELECT d.source, t.f
+         |  FROM (SELECT doc_id, unnest(w) AS f FROM toks) t
+         |  JOIN documents d USING (doc_id) WHERE f <> ''),
+         |cnt AS (SELECT source, f, count(*) AS c FROM tk GROUP BY 1, 2),
+         |tot AS (SELECT source, sum(c) AS tt, count(*) AS n_types FROM cnt GROUP BY 1),
+         |e AS (SELECT c.source, t.tt, t.n_types,
+         |    c.c * CAST(floor(ln(CAST(c.c AS DOUBLE) / t.tt) * 1000000.0 + 0.5) AS BIGINT) AS e
+         |  FROM cnt c JOIN tot t USING (source))
+         |SELECT source, CAST(tt AS BIGINT) AS n_tokens, CAST(n_types AS BIGINT) AS n_types,
+         |  CAST(sum(e) AS BIGINT) AS ent_sum_micro
+         |FROM e GROUP BY source, tt, n_types""".stripMargin),
+    // corpus length profile: 50-word histogram buckets, all-integer
+    Entry("corpus_histogram", (s, d) =>
+      docs(s, d).select(col("doc_id"),
+        TextAnalysis.wordCount(col("text")).cast("long").as("nw"),
+        length(col("text")).cast("long").as("nc"))
+        .groupBy(expr("nw DIV 50").as("bucket"))
+        .agg(count(lit(1)).as("n_docs"),
+          sum("nw").as("total_words"), sum("nc").as("total_chars"),
+          min("nw").as("min_words"), max("nw").as("max_words")),
+      s"""WITH t AS (SELECT doc_id,
+         |    CAST(CASE WHEN len($normSql) = 0 THEN 0
+         |      ELSE len(string_split($normSql, ' ')) END AS BIGINT) AS nw,
+         |    CAST(len(text) AS BIGINT) AS nc
+         |  FROM documents)
+         |SELECT nw // 50 AS bucket, count(*) AS n_docs,
+         |  CAST(sum(nw) AS BIGINT) AS total_words, CAST(sum(nc) AS BIGINT) AS total_chars,
+         |  min(nw) AS min_words, max(nw) AS max_words
+         |FROM t GROUP BY nw // 50""".stripMargin),
+    // containment recall for ENGULFED pairs: every 5th doc contributes an
+    // 8-word prefix copy (containment 1.0, Jaccard ~0 — the pair class
+    // LSH banding systematically misses); candidates come from the
+    // df-bounded rare-shingle join, verified with exact containment
+    Entry("dedup_containment_rare", (s, d) => {
+      val base = docs(s, d).select("doc_id", "text")
+      val tiny = base.where(col("doc_id") % 5 === 0)
+        .select((col("doc_id") + 4000000L).as("doc_id"),
+          array_join(slice(TextAnalysis.words(col("text")), 1, 8), " ").as("text"))
+      Dedup.containmentViaRareShingles(base.unionByName(tiny), "doc_id", "text",
+        n = 3, maxDf = 8, minContain = 0.9)
+    },
       // mirrors Dedup.containmentViaRareShingles over the engulfed-prefix
       // corpus: rare shingles (df in [2, 8]) propose, exact containment
       // verifies — the candidate class LSH banding cannot reach
-      "dedup_containment_rare" ->
-        s"""WITH eng AS (
-           |  SELECT doc_id, text FROM documents
-           |  UNION ALL SELECT doc_id + 4000000,
-           |    array_to_string(list_slice(string_split($normSql, ' '), 1, 8), ' ')
-           |  FROM documents WHERE doc_id % 5 = 0),
-           |${toksCte("eng")},
-           |sh AS (SELECT doc_id, list_distinct(${shinglesExpr(3)}) AS s FROM toks WHERE len(w) >= 3),
-           |ex AS (SELECT doc_id, unnest(s) AS shingle FROM sh),
-           |rare AS (SELECT shingle FROM (SELECT shingle, count(*) AS c FROM ex GROUP BY 1)
-           |  WHERE c BETWEEN 2 AND 8),
-           |rex AS (SELECT ex.doc_id, ex.shingle FROM ex JOIN rare USING (shingle)),
-           |cand AS (SELECT DISTINCT l.doc_id AS a, r.doc_id AS b
-           |  FROM rex l JOIN rex r ON l.shingle = r.shingle AND l.doc_id < r.doc_id),
-           |sizes AS (SELECT doc_id, len(s) AS n_sh FROM sh),
-           |inter AS (SELECT a, b, count(*) AS i
-           |  FROM cand JOIN ex la ON la.doc_id = a JOIN ex rb ON rb.doc_id = b AND rb.shingle = la.shingle
-           |  GROUP BY 1, 2)
-           |SELECT a, b, round(CAST(i AS DOUBLE) / CAST(least(sa.n_sh, sb.n_sh) AS DOUBLE), 4) AS containment
-           |FROM inter JOIN sizes sa ON sa.doc_id = a JOIN sizes sb ON sb.doc_id = b
-           |WHERE round(CAST(i AS DOUBLE) / CAST(least(sa.n_sh, sb.n_sh) AS DOUBLE), 4) >= 0.9""".stripMargin,
+      s"""WITH eng AS (
+         |  SELECT doc_id, text FROM documents
+         |  UNION ALL SELECT doc_id + 4000000,
+         |    array_to_string(list_slice(string_split($normSql, ' '), 1, 8), ' ')
+         |  FROM documents WHERE doc_id % 5 = 0),
+         |${toksCte("eng")},
+         |sh AS (SELECT doc_id, list_distinct(${shinglesExpr(3)}) AS s FROM toks WHERE len(w) >= 3),
+         |ex AS (SELECT doc_id, unnest(s) AS shingle FROM sh),
+         |rare AS (SELECT shingle FROM (SELECT shingle, count(*) AS c FROM ex GROUP BY 1)
+         |  WHERE c BETWEEN 2 AND 8),
+         |rex AS (SELECT ex.doc_id, ex.shingle FROM ex JOIN rare USING (shingle)),
+         |cand AS (SELECT DISTINCT l.doc_id AS a, r.doc_id AS b
+         |  FROM rex l JOIN rex r ON l.shingle = r.shingle AND l.doc_id < r.doc_id),
+         |sizes AS (SELECT doc_id, len(s) AS n_sh FROM sh),
+         |inter AS (SELECT a, b, count(*) AS i
+         |  FROM cand JOIN ex la ON la.doc_id = a JOIN ex rb ON rb.doc_id = b AND rb.shingle = la.shingle
+         |  GROUP BY 1, 2)
+         |SELECT a, b, round(CAST(i AS DOUBLE) / CAST(least(sa.n_sh, sb.n_sh) AS DOUBLE), 4) AS containment
+         |FROM inter JOIN sizes sa ON sa.doc_id = a JOIN sizes sb ON sb.doc_id = b
+         |WHERE round(CAST(i AS DOUBLE) / CAST(least(sa.n_sh, sb.n_sh) AS DOUBLE), 4) >= 0.9""".stripMargin),
+    // winnowing (MOSS) fingerprints: per-window minimum gram hash,
+    // distinct selected set per document — position-robust overlap
+    // detection with the SWA'03 guarantee
+    Entry("text_winnowing", (s, d) =>
+      TextAnalysis.winnowingFingerprints(docs(s, d), "doc_id", "text",
+        n = 4, window = 4),
       // mirrors TextAnalysis.winnowingFingerprints at n=4, window=4: md5
       // per positional 4-gram, min per 4-hash sliding window, distinct
       // selected set per document
-      "text_winnowing" ->
-        s"""WITH ${toksCte("documents")},
-           |g AS (SELECT doc_id, ${shinglesExpr(4)} AS gs FROM toks WHERE len(w) >= 4),
-           |h AS (SELECT doc_id, list_transform(gs, x -> md5(x)) AS hs FROM g),
-           |wm AS (SELECT doc_id,
-           |    list_transform(range(1, len(hs) - 2), i -> list_min(list_slice(hs, i, i + 3))) AS ms
-           |  FROM h WHERE len(hs) >= 4)
-           |SELECT DISTINCT doc_id, unnest(ms) AS fp FROM wm""".stripMargin,
+      s"""WITH ${toksCte("documents")},
+         |g AS (SELECT doc_id, ${shinglesExpr(4)} AS gs FROM toks WHERE len(w) >= 4),
+         |h AS (SELECT doc_id, list_transform(gs, x -> md5(x)) AS hs FROM g),
+         |wm AS (SELECT doc_id,
+         |    list_transform(range(1, len(hs) - 2), i -> list_min(list_slice(hs, i, i + 3))) AS ms
+         |  FROM h WHERE len(hs) >= 4)
+         |SELECT DISTINCT doc_id, unnest(ms) AS fp FROM wm""".stripMargin),
+    // embedding-QA: per-dimension corpus stats (collapsed dims, scale
+    // drift, clipping) with exact DECIMAL-carried moments
+    Entry("embedding_dim_stats", (s, d) =>
+      pipeline.Clustering.dimStats(embeddings(s, d), "embedding"),
       // mirrors Clustering.dimStats: DECIMAL-carried exact moments per
       // embedding dimension, population variance, 6-decimal rounding
-      "embedding_dim_stats" ->
-        """WITH v AS (SELECT CAST(embedding AS DOUBLE[]) AS ve FROM embeddings),
-          |vu AS (SELECT unnest(ve) AS val, unnest(range(0, len(ve))) AS pos FROM v),
-          |a AS (SELECT CAST(pos AS BIGINT) AS pos, count(*) AS n_vals,
-          |    CAST(sum(CAST(val AS DECIMAL(30,10))) AS DOUBLE) AS s,
-          |    CAST(sum(CAST(val * val AS DECIMAL(30,10))) AS DOUBLE) AS s2,
-          |    min(val) AS mn, max(val) AS mx
-          |  FROM vu GROUP BY 1)
-          |SELECT pos, n_vals,
-          |  CASE WHEN round(s / n_vals, 6) = 0 THEN 0.0 ELSE round(s / n_vals, 6) END AS mean,
-          |  CASE WHEN round(s2 / n_vals - (s / n_vals) * (s / n_vals), 6) = 0 THEN 0.0
-          |    ELSE round(s2 / n_vals - (s / n_vals) * (s / n_vals), 6) END AS variance,
-          |  CASE WHEN round(mn, 6) = 0 THEN 0.0 ELSE round(mn, 6) END AS min_val,
-          |  CASE WHEN round(mx, 6) = 0 THEN 0.0 ELSE round(mx, 6) END AS max_val
-          |FROM a""".stripMargin,
+      """WITH v AS (SELECT CAST(embedding AS DOUBLE[]) AS ve FROM embeddings),
+        |vu AS (SELECT unnest(ve) AS val, unnest(range(0, len(ve))) AS pos FROM v),
+        |a AS (SELECT CAST(pos AS BIGINT) AS pos, count(*) AS n_vals,
+        |    CAST(sum(CAST(val AS DECIMAL(30,10))) AS DOUBLE) AS s,
+        |    CAST(sum(CAST(val * val AS DECIMAL(30,10))) AS DOUBLE) AS s2,
+        |    min(val) AS mn, max(val) AS mx
+        |  FROM vu GROUP BY 1)
+        |SELECT pos, n_vals,
+        |  CASE WHEN round(s / n_vals, 6) = 0 THEN 0.0 ELSE round(s / n_vals, 6) END AS mean,
+        |  CASE WHEN round(s2 / n_vals - (s / n_vals) * (s / n_vals), 6) = 0 THEN 0.0
+        |    ELSE round(s2 / n_vals - (s / n_vals) * (s / n_vals), 6) END AS variance,
+        |  CASE WHEN round(mn, 6) = 0 THEN 0.0 ELSE round(mn, 6) END AS min_val,
+        |  CASE WHEN round(mx, 6) = 0 THEN 0.0 ELSE round(mx, 6) END AS max_val
+        |FROM a""".stripMargin),
+    // tokenizer-budget QA: per-doc OOV rate against the corpus's own
+    // top-500 terms (term_freq desc, word asc)
+    Entry("text_oov_rate", (s, d) =>
+      pipeline.Curation.oovReport(docs(s, d), "doc_id", "text", vocabSize = 500),
+      // mirrors Curation.oovReport: top-500 vocab by (term_freq desc,
+      // word asc), per-doc OOV tally, zero-token docs rate 0
+      s"""WITH ${toksCte("documents")},
+         |tok AS (SELECT doc_id, unnest(w) AS word FROM toks),
+         |vocab AS (SELECT word FROM (
+         |    SELECT word, count(*) AS tf FROM tok WHERE word <> '' GROUP BY word)
+         |  ORDER BY tf DESC, word ASC LIMIT 500),
+         |per AS (SELECT doc_id, count(*) AS n_tokens,
+         |    CAST(sum(CASE WHEN v.word IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_oov
+         |  FROM tok LEFT JOIN vocab v ON v.word = tok.word
+         |  WHERE tok.word <> '' GROUP BY doc_id)
+         |SELECT d.doc_id,
+         |  CAST(coalesce(n_tokens, 0) AS BIGINT) AS n_tokens,
+         |  CAST(coalesce(n_oov, 0) AS BIGINT) AS n_oov,
+         |  round(coalesce(CAST(n_oov AS DOUBLE) / n_tokens, 0.0), 4) AS oov_rate
+         |FROM documents d LEFT JOIN per USING (doc_id)""".stripMargin),
+    // eval-suite screening: contamination matrix over three overlapping
+    // synthetic benchmarks (doc_id % 10 / % 7 / % 13 slices) — one corpus
+    // gram scan serves all three
+    Entry("curate_contamination_matrix", (s, d) => {
+      val dd = docs(s, d).select("doc_id", "text")
+      def bench(name: String, m: Int) = dd.where(col("doc_id") % m === 0)
+        .select(lit(name).as("bench_id"), col("doc_id"), col("text"))
+      val suite = bench("b10", 10).unionByName(bench("b7", 7))
+        .unionByName(bench("b13", 13))
+      pipeline.Curation.contaminationMatrix(dd, suite, "doc_id", "text",
+        "bench_id", n = 5)
+    },
       // mirrors Curation.contaminationMatrix over the three synthetic
       // benchmark slices: distinct (bench, gram) sets probe the distinct
       // corpus (doc, gram) table once
-      "curate_contamination_matrix" ->
-        s"""WITH ${toksCte("documents")},
-           |cg AS (SELECT DISTINCT doc_id, g FROM
-           |  (SELECT doc_id, unnest(${shinglesExpr(5)}) AS g FROM toks WHERE len(w) >= 5)),
-           |suite AS (
-           |  SELECT 'b10' AS bench_id, doc_id FROM documents WHERE doc_id % 10 = 0
-           |  UNION ALL SELECT 'b7', doc_id FROM documents WHERE doc_id % 7 = 0
-           |  UNION ALL SELECT 'b13', doc_id FROM documents WHERE doc_id % 13 = 0),
-           |bg AS (SELECT DISTINCT s.bench_id, cg.g FROM suite s JOIN cg ON cg.doc_id = s.doc_id)
-           |SELECT bg.bench_id,
-           |  CAST(count(DISTINCT cg.doc_id) AS BIGINT) AS n_docs_hit,
-           |  CAST(count(DISTINCT bg.g) AS BIGINT) AS n_grams_shared
-           |FROM cg JOIN bg ON bg.g = cg.g
-           |GROUP BY bg.bench_id""".stripMargin,
+      s"""WITH ${toksCte("documents")},
+         |cg AS (SELECT DISTINCT doc_id, g FROM
+         |  (SELECT doc_id, unnest(${shinglesExpr(5)}) AS g FROM toks WHERE len(w) >= 5)),
+         |suite AS (
+         |  SELECT 'b10' AS bench_id, doc_id FROM documents WHERE doc_id % 10 = 0
+         |  UNION ALL SELECT 'b7', doc_id FROM documents WHERE doc_id % 7 = 0
+         |  UNION ALL SELECT 'b13', doc_id FROM documents WHERE doc_id % 13 = 0),
+         |bg AS (SELECT DISTINCT s.bench_id, cg.g FROM suite s JOIN cg ON cg.doc_id = s.doc_id)
+         |SELECT bg.bench_id,
+         |  CAST(count(DISTINCT cg.doc_id) AS BIGINT) AS n_docs_hit,
+         |  CAST(count(DISTINCT bg.g) AS BIGINT) AS n_grams_shared
+         |FROM cg JOIN bg ON bg.g = cg.g
+         |GROUP BY bg.bench_id""".stripMargin),
+    // banding-config tuning: verified-pair counts at a threshold ladder
+    // from ONE propose/verify pass over the planted-dup corpus
+    Entry("dedup_threshold_sweep", (s, d) =>
+      Dedup.thresholdSweep(dedupCorpus(s, d), "doc_id", "text",
+        n = 3, k = 4, thresholds = Seq(0.5, 0.7, 0.9)),
       // mirrors Dedup.thresholdSweep: the dedup_ngram_jaccard verified
       // pairs bucketed by a threshold ladder, one pass
-      "dedup_threshold_sweep" ->
-        s"""$ngramInterCtes,
-           |pr AS (SELECT a, b, round(CAST(i AS DOUBLE) / CAST(sa.n_sh + sb.n_sh - i AS DOUBLE), 4) AS j
-           |  FROM inter JOIN sizes sa ON sa.doc_id = a JOIN sizes sb ON sb.doc_id = b
-           |  WHERE round(CAST(i AS DOUBLE) / CAST(sa.n_sh + sb.n_sh - i AS DOUBLE), 4) >= 0.5),
-           |lad AS (SELECT unnest(CAST([0.5, 0.7, 0.9] AS DOUBLE[])) AS threshold),
-           |sweep AS (SELECT threshold, a AS doc FROM pr JOIN lad ON j >= threshold
-           |  UNION ALL SELECT threshold, b FROM pr JOIN lad ON j >= threshold),
-           |agg AS (SELECT threshold, CAST(count(*) // 2 AS BIGINT) AS n_pairs,
-           |  CAST(count(DISTINCT doc) AS BIGINT) AS n_docs
-           |  FROM sweep GROUP BY threshold)
-           |SELECT lad.threshold, CAST(coalesce(n_pairs, 0) AS BIGINT) AS n_pairs,
-           |  CAST(coalesce(n_docs, 0) AS BIGINT) AS n_docs
-           |FROM lad LEFT JOIN agg ON agg.threshold = lad.threshold""".stripMargin,
+      s"""$ngramInterCtes,
+         |pr AS (SELECT a, b, round(CAST(i AS DOUBLE) / CAST(sa.n_sh + sb.n_sh - i AS DOUBLE), 4) AS j
+         |  FROM inter JOIN sizes sa ON sa.doc_id = a JOIN sizes sb ON sb.doc_id = b
+         |  WHERE round(CAST(i AS DOUBLE) / CAST(sa.n_sh + sb.n_sh - i AS DOUBLE), 4) >= 0.5),
+         |lad AS (SELECT unnest(CAST([0.5, 0.7, 0.9] AS DOUBLE[])) AS threshold),
+         |sweep AS (SELECT threshold, a AS doc FROM pr JOIN lad ON j >= threshold
+         |  UNION ALL SELECT threshold, b FROM pr JOIN lad ON j >= threshold),
+         |agg AS (SELECT threshold, CAST(count(*) // 2 AS BIGINT) AS n_pairs,
+         |  CAST(count(DISTINCT doc) AS BIGINT) AS n_docs
+         |  FROM sweep GROUP BY threshold)
+         |SELECT lad.threshold, CAST(coalesce(n_pairs, 0) AS BIGINT) AS n_pairs,
+         |  CAST(coalesce(n_docs, 0) AS BIGINT) AS n_docs
+         |FROM lad LEFT JOIN agg ON agg.threshold = lad.threshold""".stripMargin),
+    // context-window chunking: 32-token chunks starting every 24 tokens
+    // (8-token overlap between consecutive chunks)
+    Entry("curate_chunk", (s, d) =>
+      pipeline.Curation.chunkDocuments(docs(s, d), "doc_id", "text",
+        chunkSize = 32, stride = 24),
       // mirrors Curation.chunkDocuments(chunkSize=32, stride=24): token at
       // pos belongs to chunks [ceil((pos-31)/24), floor(pos/24)]
-      "curate_chunk" ->
-        s"""WITH ${toksCte("documents")},
-           |tr AS (SELECT doc_id, unnest(w) AS word, unnest(range(len(w))) AS pos
-           |  FROM toks WHERE len(w) >= 1 AND w[1] <> ''),
-           |ch AS (SELECT doc_id, pos, word,
-           |  unnest(range(CASE WHEN pos < 32 THEN 0 ELSE (pos - 32 + 24) // 24 END,
-           |    pos // 24 + 1)) AS chunk_id
-           |  FROM tr)
-           |SELECT doc_id, CAST(chunk_id AS BIGINT) AS chunk_id,
-           |  CAST(count(*) AS BIGINT) AS n_tokens,
-           |  string_agg(word, ' ' ORDER BY pos) AS chunk_text
-           |FROM ch GROUP BY doc_id, chunk_id""".stripMargin,
+      s"""WITH ${toksCte("documents")},
+         |tr AS (SELECT doc_id, unnest(w) AS word, unnest(range(len(w))) AS pos
+         |  FROM toks WHERE len(w) >= 1 AND w[1] <> ''),
+         |ch AS (SELECT doc_id, pos, word,
+         |  unnest(range(CASE WHEN pos < 32 THEN 0 ELSE (pos - 32 + 24) // 24 END,
+         |    pos // 24 + 1)) AS chunk_id
+         |  FROM tr)
+         |SELECT doc_id, CAST(chunk_id AS BIGINT) AS chunk_id,
+         |  CAST(count(*) AS BIGINT) AS n_tokens,
+         |  string_agg(word, ' ' ORDER BY pos) AS chunk_text
+         |FROM ch GROUP BY doc_id, chunk_id""".stripMargin),
+    // duplicated-span coverage over the planted-dup corpus: fraction of
+    // each doc's token positions covered by a 5-gram appearing in >= 2
+    // distinct documents
+    Entry("text_hot_spans", (s, d) =>
+      Dedup.hotSpanCoverage(dedupCorpus(s, d), "doc_id", "text",
+        n = 5, minDf = 2),
       // mirrors Dedup.hotSpanCoverage(n=5, minDf=2) over the planted-dup
       // corpus: positions covered by any 5-gram with document freq >= 2
-      "text_hot_spans" ->
-        s"""$corpusCte, ${toksCte("corpus")},
-           |sh AS (SELECT doc_id, unnest(range(len(w) - 4)) AS pos, w
-           |  FROM toks WHERE len(w) >= 5),
-           |sh2 AS (SELECT doc_id, pos,
-           |  w[pos+1]||' '||w[pos+2]||' '||w[pos+3]||' '||w[pos+4]||' '||w[pos+5] AS g
-           |  FROM sh),
-           |hot AS (SELECT g FROM (SELECT g, count(DISTINCT doc_id) AS df
-           |  FROM sh2 GROUP BY g) WHERE df >= 2),
-           |cov AS (SELECT doc_id, count(DISTINCT cp) AS covered FROM
-           |  (SELECT doc_id, unnest(range(pos, pos + 5)) AS cp FROM sh2
-           |   WHERE g IN (SELECT g FROM hot)) GROUP BY doc_id),
-           |tot AS (SELECT doc_id, len(w) AS n_tokens FROM toks
-           |  WHERE len(w) >= 1 AND w[1] <> '')
-           |SELECT t.doc_id, CAST(t.n_tokens AS BIGINT) AS n_tokens,
-           |  CAST(coalesce(c.covered, 0) AS BIGINT) AS covered_tokens,
-           |  round(CAST(coalesce(c.covered, 0) AS DOUBLE) /
-           |    CAST(t.n_tokens AS DOUBLE), 4) AS coverage
-           |FROM tot t LEFT JOIN cov c ON c.doc_id = t.doc_id""".stripMargin,
-      // mirrors Curation.removeHotSpans: same hot-gram CTEs as
-      // text_hot_spans, then an indexed list_filter rewrite (DuckDB
-      // lambda index is 1-based; covered positions are 0-based)
-      "curate_remove_spans" ->
-        s"""$corpusCte, ${toksCte("corpus")},
-           |sh AS (SELECT doc_id, unnest(range(len(w) - 4)) AS pos, w
-           |  FROM toks WHERE len(w) >= 5),
-           |sh2 AS (SELECT doc_id, pos,
-           |  w[pos+1]||' '||w[pos+2]||' '||w[pos+3]||' '||w[pos+4]||' '||w[pos+5] AS g
-           |  FROM sh),
-           |hot AS (SELECT g FROM (SELECT g, count(DISTINCT doc_id) AS df
-           |  FROM sh2 GROUP BY g) WHERE df >= 2),
-           |cl AS (SELECT doc_id, list(DISTINCT cp) AS cov FROM
-           |  (SELECT doc_id, unnest(range(pos, pos + 5)) AS cp FROM sh2
-           |   WHERE g IN (SELECT g FROM hot)) GROUP BY doc_id),
-           |tot AS (SELECT doc_id, w FROM toks WHERE len(w) >= 1 AND w[1] <> '')
-           |SELECT t.doc_id,
-           |  coalesce(array_to_string(list_filter(t.w,
-           |    (x, i) -> c.cov IS NULL OR NOT list_contains(c.cov, i - 1)), ' '), '') AS clean_text,
-           |  CAST(len(t.w) AS BIGINT) AS n_tokens,
-           |  CAST(coalesce(len(c.cov), 0) AS BIGINT) AS n_removed
-           |FROM tot t LEFT JOIN cl c ON c.doc_id = t.doc_id""".stripMargin,
+      s"""$corpusCte, ${toksCte("corpus")},
+         |sh AS (SELECT doc_id, unnest(range(len(w) - 4)) AS pos, w
+         |  FROM toks WHERE len(w) >= 5),
+         |sh2 AS (SELECT doc_id, pos,
+         |  w[pos+1]||' '||w[pos+2]||' '||w[pos+3]||' '||w[pos+4]||' '||w[pos+5] AS g
+         |  FROM sh),
+         |hot AS (SELECT g FROM (SELECT g, count(DISTINCT doc_id) AS df
+         |  FROM sh2 GROUP BY g) WHERE df >= 2),
+         |cov AS (SELECT doc_id, count(DISTINCT cp) AS covered FROM
+         |  (SELECT doc_id, unnest(range(pos, pos + 5)) AS cp FROM sh2
+         |   WHERE g IN (SELECT g FROM hot)) GROUP BY doc_id),
+         |tot AS (SELECT doc_id, len(w) AS n_tokens FROM toks
+         |  WHERE len(w) >= 1 AND w[1] <> '')
+         |SELECT t.doc_id, CAST(t.n_tokens AS BIGINT) AS n_tokens,
+         |  CAST(coalesce(c.covered, 0) AS BIGINT) AS covered_tokens,
+         |  round(CAST(coalesce(c.covered, 0) AS DOUBLE) /
+         |    CAST(t.n_tokens AS DOUBLE), 4) AS coverage
+         |FROM tot t LEFT JOIN cov c ON c.doc_id = t.doc_id""".stripMargin),
+    // PCA/whitening prep: exact upper-triangle covariance of the embedding
+    // dimensions (decimal-carried moments, like embedding_dim_stats)
+    Entry("embedding_covariance", (s, d) =>
+      pipeline.Clustering.covariance(embeddings(s, d), "embedding"),
       // mirrors Clustering.covariance: upper-triangle pair products summed
       // in DECIMAL(30,10), means from the same decimal-carried moments
-      "embedding_covariance" ->
-        s"""WITH $covCtes
-           |SELECT i, j, n_vals, cov FROM covq""".stripMargin,
+      s"""WITH $covCtes
+         |SELECT i, j, n_vals, cov FROM covq""".stripMargin),
+    // semantic decontamination: scrub corpus vectors (vec_id % 50 != 0)
+    // that LSH-bucket with AND cosine-verify against the synthetic eval
+    // slice (vec_id % 50 = 0); survivors come back
+    Entry("curate_semantic_decontaminate", (s, d) => {
+      val e = embeddings(s, d)
+      pipeline.Curation.semanticDecontaminate(
+        e.where(col("vec_id") % 50 =!= 0), e.where(col("vec_id") % 50 === 0),
+        "vec_id", "embedding", planes = 8, minCos = 0.3)
+    },
+      // mirrors Curation.semanticDecontaminate(planes=8, minCos=0.3): the
+      // embedding_lsh_pairs bucket formula, corpus % 50 != 0 vs eval slice
+      {
+      def sign(p: Int) =
+        s"(CASE WHEN (strpos('0123456789abcdef', substr(md5('$p|'||i), 1, 1)) - 1) % 2 = 1 THEN 1.0 ELSE -1.0 END)"
+      def bit(p: Int) =
+        s"(CASE WHEN list_sum(list_transform(range(0, len(ve)), i -> ve[i+1] * ${sign(p)})) >= 0 THEN ${1L << p} ELSE 0 END)"
+      val bucket = (0 until 8).map(bit).mkString(" + ")
+      s"""WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS ve FROM embeddings),
+         |b AS (SELECT vec_id, ve, $bucket AS bucket FROM v),
+         |c AS (SELECT * FROM b WHERE vec_id % 50 <> 0),
+         |e AS (SELECT * FROM b WHERE vec_id % 50 = 0),
+         |hit AS (SELECT DISTINCT c.vec_id FROM c JOIN e ON c.bucket = e.bucket
+         |  WHERE round(list_cosine_similarity(c.ve, e.ve), 4) >= 0.3)
+         |SELECT vec_id FROM c WHERE vec_id NOT IN (SELECT vec_id FROM hit)""".stripMargin
+    }),
+    // embedding-health screen: per-vector L1/L2/Linf norms
+    Entry("embedding_norms", (s, d) =>
+      pipeline.Clustering.norms(embeddings(s, d), "vec_id", "embedding"),
+      // mirrors Clustering.norms: left-fold list sums match the native
+      // dot-product kernel's accumulation order
+      """WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS ve FROM embeddings)
+        |SELECT vec_id,
+        |  round(list_sum(list_transform(ve, x -> abs(x))), 6) AS l1,
+        |  round(sqrt(list_sum(list_transform(range(0, len(ve)), i -> ve[i+1] * ve[i+1]))), 6) AS l2,
+        |  round(list_max(list_transform(ve, x -> abs(x))), 6) AS linf
+        |FROM v""".stripMargin),
+    // corpus naturalness: least-squares Zipf fit over the top-200 terms
+    Entry("text_zipf", (s, d) =>
+      pipeline.TextAnalysis.zipfFit(docs(s, d), "doc_id", "text", topV = 200),
+      // mirrors TextAnalysis.zipfFit(topV=200): ln() rounded to 8 digits,
+      // decimal-carried regression moments, identical slope formula
+      s"""WITH ${toksCte("documents")},
+         |words AS (SELECT doc_id, unnest(w) AS word FROM toks),
+         |vocab AS (SELECT word, count(*) AS term_freq FROM words WHERE word <> ''
+         |  GROUP BY word ORDER BY term_freq DESC, word ASC LIMIT 200),
+         |xy AS (SELECT
+         |  round(ln(CAST(row_number() OVER (ORDER BY term_freq DESC, word ASC) AS DOUBLE)), 8) AS x,
+         |  round(ln(CAST(term_freq AS DOUBLE)), 8) AS y FROM vocab),
+         |m AS (SELECT count(*) AS n,
+         |  CAST(sum(CAST(x AS DECIMAL(30,10))) AS DOUBLE) AS sx,
+         |  CAST(sum(CAST(y AS DECIMAL(30,10))) AS DOUBLE) AS sy,
+         |  CAST(sum(CAST(x * y AS DECIMAL(30,10))) AS DOUBLE) AS sxy,
+         |  CAST(sum(CAST(x * x AS DECIMAL(30,10))) AS DOUBLE) AS sxx FROM xy)
+         |SELECT CAST(n AS BIGINT) AS n_terms,
+         |  round((sxy - sx * sy / n) / NULLIF(sxx - sx * sx / n, 0), 6) AS slope,
+         |  round(sy / n - (sxy - sx * sy / n) / NULLIF(sxx - sx * sx / n, 0) * (sx / n), 6) AS intercept
+         |FROM m""".stripMargin),
+    // tokenizer-QA: learned-BPE fertility (tokens per word) and chars per
+    // token, per (lang, source) slice — the screen that catches slices
+    // whose script the merges never saw before they burn token budget
+    Entry("text_fertility", (s, d) =>
+      pipeline.Tokenizer.fertilityReport(docs(s, d), "doc_id", "text",
+        Seq("lang", "source"), rounds = BpeRounds),
+      // mirrors Tokenizer.fertilityReport: t0/t{R} token counts per doc,
+      // normalized char length, zero-word docs excluded, slice ratios as
+      // integer micro-units of the slice sums (same DIV arithmetic)
+      s"""WITH ${bpeCtes(BpeRounds)},
+         |wc AS (SELECT doc_id,
+         |  len(list_filter(string_split(trim(t), ' '), x -> x <> '')) AS nw,
+         |  length(trim(t)) AS nc FROM t0),
+         |mc AS (SELECT doc_id,
+         |  len(list_filter(string_split(trim(t), ' '), x -> x <> '')) AS nt
+         |  FROM t$BpeRounds),
+         |j AS (SELECT d.lang, d.source, wc.nw, wc.nc, mc.nt
+         |  FROM documents d
+         |  JOIN wc ON wc.doc_id = d.doc_id
+         |  JOIN mc ON mc.doc_id = d.doc_id
+         |  WHERE wc.nw > 0)
+         |SELECT lang, source,
+         |  CAST(count(*) AS BIGINT) AS n_docs,
+         |  CAST(sum(nw) AS BIGINT) AS n_words,
+         |  CAST(sum(nt) AS BIGINT) AS n_tokens,
+         |  CAST(sum(nc) AS BIGINT) AS n_chars,
+         |  CAST((1000000 * sum(nt)) // sum(nw) AS BIGINT) AS fertility_micro,
+         |  CAST((1000000 * sum(nc)) // sum(nt) AS BIGINT) AS chars_per_token_micro
+         |FROM j GROUP BY 1, 2""".stripMargin),
+    // synthetic-data QA: distinct-bigram diversity per source (the
+    // distinct-n / mode-collapse screen)
+    Entry("text_distinct_ngrams", (s, d) =>
+      pipeline.TextAnalysis.distinctNgramReport(docs(s, d), "source", "text",
+        n = 2),
+      // mirrors TextAnalysis.distinctNgramReport(n=2): (source, gram)
+      // partial counts, then the slice rollup with the same integer
+      // micro-unit division
+      s"""WITH ${toksCte("documents")},
+         |g AS (SELECT doc_id, unnest(${shinglesExpr(2)}) AS gram
+         |  FROM toks WHERE len(w) >= 2),
+         |j AS (SELECT d.source, g.gram FROM g
+         |  JOIN documents d ON d.doc_id = g.doc_id),
+         |c AS (SELECT source, gram, count(*) AS cnt FROM j GROUP BY 1, 2)
+         |SELECT source,
+         |  CAST(count(*) AS BIGINT) AS n_distinct,
+         |  CAST(sum(cnt) AS BIGINT) AS n_total,
+         |  CAST((1000000 * count(*)) // sum(cnt) AS BIGINT) AS distinct_ratio_micro
+         |FROM c GROUP BY 1""".stripMargin),
+    // Gopher-style LINE-level repetition rules over the composite
+    // paragraph corpus (same cid % 40 fixture as dedup_paragraphs — the
+    // planted exact copies land in the same composite, so duplicate
+    // lines really occur); the n-gram-level rules are text_repetition
+    Entry("text_dup_lines", (s, d) => {
+      val comp = dedupCorpus(s, d)
+        .groupBy((col("doc_id") % 40).as("cid"))
+        .agg(concat_ws("\n",
+          array_sort(collect_list(struct(col("doc_id"), col("text"))))
+            .getField("text")).as("text"))
+      pipeline.TextAnalysis.dupLineReport(comp, "cid", "text")
+    },
+      // LINE-level repetition rules over the composite corpus: duplicate
+      // lines by exact content, micro ratios via the same // division
+      s"""$corpusCte,
+         |comp AS (SELECT doc_id % 40 AS cid,
+         |    string_agg(text, chr(10) ORDER BY doc_id) AS text
+         |  FROM corpus GROUP BY 1),
+         |lns AS (SELECT cid, unnest(string_split(text, chr(10))) AS l FROM comp),
+         |nl AS (SELECT cid, l, count(*) AS c FROM lns WHERE trim(l) <> '' GROUP BY 1, 2)
+         |SELECT cid, CAST(sum(c) AS BIGINT) AS n_lines,
+         |  CAST((1000000 * sum(c - 1)) // sum(c) AS BIGINT) AS dup_line_frac_micro,
+         |  CAST((1000000 * sum(len(l) * (c - 1))) // sum(len(l) * c) AS BIGINT) AS dup_line_char_frac_micro
+         |FROM nl GROUP BY 1""".stripMargin),
+    // exact-percentile length gate via the token-count histogram: keep the
+    // [5%, 95%] word-count band
+    Entry("curate_length_filter", (s, d) =>
+      pipeline.Curation.lengthBandFilter(docs(s, d), "doc_id", "text",
+        pLo = 0.05, pHi = 0.95),
+      // mirrors Curation.lengthBandFilter(0.05, 0.95): k-th smallest word
+      // count with k = ceil(p*n), cutoffs from the count histogram
+      s"""WITH wd AS (SELECT doc_id,
+         |  CAST(CASE WHEN len($normSql) = 0 THEN 0 ELSE len(string_split($normSql, ' ')) END AS BIGINT) AS n_tokens
+         |  FROM documents),
+         |h AS (SELECT n_tokens, count(*) AS c FROM wd GROUP BY 1),
+         |cum AS (SELECT n_tokens, sum(c) OVER (ORDER BY n_tokens ASC
+         |  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cm FROM h),
+         |t AS (SELECT count(*) AS n FROM wd),
+         |cuts AS (SELECT
+         |  min(CASE WHEN cm >= ceil(n * 0.05) THEN n_tokens END) AS lo,
+         |  min(CASE WHEN cm >= ceil(n * 0.95) THEN n_tokens END) AS hi FROM cum, t)
+         |SELECT wd.doc_id, wd.n_tokens FROM wd, cuts
+         |WHERE wd.n_tokens BETWEEN lo AND hi""".stripMargin),
+    // top principal component via 3 power-iteration rounds over the
+    // covariance matrix — corpus touched once, eigensolve on d-row frames
+    Entry("embedding_pca_loadings", (s, d) =>
+      pipeline.Clustering.pcaLoadings(embeddings(s, d), "embedding", iters = 3),
       // mirrors Clustering.pcaLoadings(iters=3): the covariance CTEs,
       // mirrored to the full symmetric matrix, three unrolled
       // decimal-carried matrix-vector products, one final normalization
-      "embedding_pca_loadings" -> {
-        def mul(src: String, dst: String) =
-          s"""w$dst AS (SELECT f.i AS d, CAST(sum(CAST(f.cov * x.v AS DECIMAL(30,10))) AS DOUBLE) AS v
-             |  FROM fm f JOIN $src x ON x.d = f.j GROUP BY f.i),
-             |$dst AS (SELECT d, v / NULLIF((SELECT max(abs(v)) FROM w$dst), 0) AS v FROM w$dst)""".stripMargin
-        s"""WITH $covCtes,
-           |fm AS (SELECT i, j, cov FROM covq
-           |  UNION ALL SELECT j, i, cov FROM covq WHERE i <> j),
-           |v0 AS (SELECT DISTINCT i AS d, 1.0 AS v FROM fm),
-           |${mul("v0", "v1")},
-           |${mul("v1", "v2")},
-           |${mul("v2", "v3")},
-           |nrm AS (SELECT sqrt(CAST(sum(CAST(v * v AS DECIMAL(30,10))) AS DOUBLE)) AS nv FROM v3)
-           |SELECT CAST(d AS BIGINT) AS dim,
-           |  CASE WHEN round(v / nv, 6) = 0 THEN 0.0 ELSE round(v / nv, 6) END AS loading
-           |FROM v3, nrm""".stripMargin
-      },
+      {
+      def mul(src: String, dst: String) =
+        s"""w$dst AS (SELECT f.i AS d, CAST(sum(CAST(f.cov * x.v AS DECIMAL(30,10))) AS DOUBLE) AS v
+           |  FROM fm f JOIN $src x ON x.d = f.j GROUP BY f.i),
+           |$dst AS (SELECT d, v / NULLIF((SELECT max(abs(v)) FROM w$dst), 0) AS v FROM w$dst)""".stripMargin
+      s"""WITH $covCtes,
+         |fm AS (SELECT i, j, cov FROM covq
+         |  UNION ALL SELECT j, i, cov FROM covq WHERE i <> j),
+         |v0 AS (SELECT DISTINCT i AS d, 1.0 AS v FROM fm),
+         |${mul("v0", "v1")},
+         |${mul("v1", "v2")},
+         |${mul("v2", "v3")},
+         |nrm AS (SELECT sqrt(CAST(sum(CAST(v * v AS DECIMAL(30,10))) AS DOUBLE)) AS nv FROM v3)
+         |SELECT CAST(d AS BIGINT) AS dim,
+         |  CASE WHEN round(v / nv, 6) = 0 THEN 0.0 ELSE round(v / nv, 6) END AS loading
+         |FROM v3, nrm""".stripMargin
+    }),
+    // mixture weights: per-(lang, source) doc/token counts and corpus shares
+    Entry("curate_mix_report", (s, d) =>
+      pipeline.Curation.mixReport(docs(s, d), "text", Seq("lang", "source")),
+      // mirrors Curation.mixReport over (lang, source)
+      s"""WITH g AS (SELECT lang, source, count(*) AS n_docs,
+         |  sum(CASE WHEN len($normSql) = 0 THEN 0 ELSE len(string_split($normSql, ' ')) END) AS n_tokens
+         |  FROM documents GROUP BY 1, 2),
+         |t AS (SELECT sum(n_docs) AS td, sum(n_tokens) AS tt FROM g)
+         |SELECT lang, source, CAST(n_docs AS BIGINT) AS n_docs,
+         |  CAST(n_tokens AS BIGINT) AS n_tokens,
+         |  round(CAST(n_docs AS DOUBLE) / td, 6) AS doc_share,
+         |  round(CAST(n_tokens AS DOUBLE) / tt, 6) AS token_share
+         |FROM g, t""".stripMargin),
+    // PCA projection: centered coordinates on the top-2 components
+    // (leading loadings + one Hotelling deflation), the usable
+    // dimensionality-reduction transform built on embedding_pca_loadings
+    Entry("embedding_pca_project", (s, d) =>
+      pipeline.Clustering.pcaProject(embeddings(s, d), "vec_id", "embedding",
+        p = 2, iters = 3),
       // mirrors Clustering.pcaProject(p=2, iters=3): the pca_loadings
       // replay for component 0, a Hotelling deflation with the published
       // (rounded) leading loadings, the same replay over the deflated
       // matrix for component 1, then centered decimal-carried projections
-      "embedding_pca_project" -> {
-        // every intermediate is MATERIALIZED: DuckDB inlines plain CTEs per
-        // reference, and this chain (6 matrix-vector products, each read
-        // twice by its own rescale) would otherwise expand to thousands of
-        // parquet scans of the base table
-        def mul(mat: String, src: String, dst: String) =
-          s"""w$dst AS MATERIALIZED (SELECT f.i AS d, CAST(sum(CAST(f.cov * x.v AS DECIMAL(30,10))) AS DOUBLE) AS v
-             |  FROM $mat f JOIN $src x ON x.d = f.j GROUP BY f.i),
-             |$dst AS MATERIALIZED (SELECT d, v / NULLIF((SELECT max(abs(v)) FROM w$dst), 0) AS v FROM w$dst)""".stripMargin
-        def norm(src: String, dst: String) =
-          s"""n$dst AS MATERIALIZED (SELECT sqrt(CAST(sum(CAST(v * v AS DECIMAL(30,10))) AS DOUBLE)) AS nv FROM $src),
-             |$dst AS MATERIALIZED (SELECT d, CASE WHEN round(v / nv, 6) = 0 THEN 0.0
-             |  ELSE round(v / nv, 6) END AS loading FROM $src, n$dst)""".stripMargin
-        s"""WITH $covCtes,
-           |fm AS MATERIALIZED (SELECT i, j, cov FROM covq
-           |  UNION ALL SELECT j, i, cov FROM covq WHERE i <> j),
-           |v0 AS (SELECT DISTINCT i AS d, 1.0 AS v FROM fm),
-           |${mul("fm", "v0", "v1")},
-           |${mul("fm", "v1", "v2")},
-           |${mul("fm", "v2", "v3")},
-           |${norm("v3", "l1")},
-           |lam AS MATERIALIZED (SELECT CAST(sum(CAST(f.cov * a.loading * b.loading AS DECIMAL(30,10))) AS DOUBLE) AS lam
-           |  FROM fm f JOIN l1 a ON a.d = f.i JOIN l1 b ON b.d = f.j),
-           |fm2 AS MATERIALIZED (SELECT f.i, f.j, f.cov - lam.lam * a.loading * b.loading AS cov
-           |  FROM fm f JOIN l1 a ON a.d = f.i JOIN l1 b ON b.d = f.j, lam),
-           |u0 AS (SELECT DISTINCT i AS d, 1.0 AS v FROM fm2),
-           |${mul("fm2", "u0", "u1")},
-           |${mul("fm2", "u1", "u2")},
-           |${mul("fm2", "u2", "u3")},
-           |${norm("u3", "l2")},
-           |comps AS (SELECT CAST(0 AS BIGINT) AS component, d, loading FROM l1
-           |  UNION ALL SELECT 1, d, loading FROM l2),
-           |vid AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS ve FROM embeddings),
-           |px AS (SELECT vec_id, CAST(unnest(range(len(ve))) AS BIGINT) AS d, unnest(ve) AS x FROM vid),
-           |proj AS (SELECT px.vec_id, c.component,
-           |    CAST(sum(CAST((px.x - m.mean) * c.loading AS DECIMAL(30,10))) AS DOUBLE) AS s
-           |  FROM px JOIN m ON m.d = px.d JOIN comps c ON c.d = px.d
-           |  GROUP BY 1, 2)
-           |SELECT vec_id, component,
-           |  CASE WHEN round(s, 6) = 0 THEN 0.0 ELSE round(s, 6) END AS coord
-           |FROM proj""".stripMargin
-      },
+      {
+      // every intermediate is MATERIALIZED: DuckDB inlines plain CTEs per
+      // reference, and this chain (6 matrix-vector products, each read
+      // twice by its own rescale) would otherwise expand to thousands of
+      // parquet scans of the base table
+      def mul(mat: String, src: String, dst: String) =
+        s"""w$dst AS MATERIALIZED (SELECT f.i AS d, CAST(sum(CAST(f.cov * x.v AS DECIMAL(30,10))) AS DOUBLE) AS v
+           |  FROM $mat f JOIN $src x ON x.d = f.j GROUP BY f.i),
+           |$dst AS MATERIALIZED (SELECT d, v / NULLIF((SELECT max(abs(v)) FROM w$dst), 0) AS v FROM w$dst)""".stripMargin
+      def norm(src: String, dst: String) =
+        s"""n$dst AS MATERIALIZED (SELECT sqrt(CAST(sum(CAST(v * v AS DECIMAL(30,10))) AS DOUBLE)) AS nv FROM $src),
+           |$dst AS MATERIALIZED (SELECT d, CASE WHEN round(v / nv, 6) = 0 THEN 0.0
+           |  ELSE round(v / nv, 6) END AS loading FROM $src, n$dst)""".stripMargin
+      s"""WITH $covCtes,
+         |fm AS MATERIALIZED (SELECT i, j, cov FROM covq
+         |  UNION ALL SELECT j, i, cov FROM covq WHERE i <> j),
+         |v0 AS (SELECT DISTINCT i AS d, 1.0 AS v FROM fm),
+         |${mul("fm", "v0", "v1")},
+         |${mul("fm", "v1", "v2")},
+         |${mul("fm", "v2", "v3")},
+         |${norm("v3", "l1")},
+         |lam AS MATERIALIZED (SELECT CAST(sum(CAST(f.cov * a.loading * b.loading AS DECIMAL(30,10))) AS DOUBLE) AS lam
+         |  FROM fm f JOIN l1 a ON a.d = f.i JOIN l1 b ON b.d = f.j),
+         |fm2 AS MATERIALIZED (SELECT f.i, f.j, f.cov - lam.lam * a.loading * b.loading AS cov
+         |  FROM fm f JOIN l1 a ON a.d = f.i JOIN l1 b ON b.d = f.j, lam),
+         |u0 AS (SELECT DISTINCT i AS d, 1.0 AS v FROM fm2),
+         |${mul("fm2", "u0", "u1")},
+         |${mul("fm2", "u1", "u2")},
+         |${mul("fm2", "u2", "u3")},
+         |${norm("u3", "l2")},
+         |comps AS (SELECT CAST(0 AS BIGINT) AS component, d, loading FROM l1
+         |  UNION ALL SELECT 1, d, loading FROM l2),
+         |vid AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS ve FROM embeddings),
+         |px AS (SELECT vec_id, CAST(unnest(range(len(ve))) AS BIGINT) AS d, unnest(ve) AS x FROM vid),
+         |proj AS (SELECT px.vec_id, c.component,
+         |    CAST(sum(CAST((px.x - m.mean) * c.loading AS DECIMAL(30,10))) AS DOUBLE) AS s
+         |  FROM px JOIN m ON m.d = px.d JOIN comps c ON c.d = px.d
+         |  GROUP BY 1, 2)
+         |SELECT vec_id, component,
+         |  CASE WHEN round(s, 6) = 0 THEN 0.0 ELSE round(s, 6) END AS coord
+         |FROM proj""".stripMargin
+    }),
+    // PCA whitening: the projection divided by sqrt(Rayleigh lambda) per
+    // component — unit-variance decorrelated coordinates
+    Entry("embedding_whiten", (s, d) =>
+      pipeline.Clustering.pcaWhiten(embeddings(s, d), "vec_id", "embedding",
+        p = 2, iters = 3),
       // the pca_project replay with each component's Rayleigh lambda
       // (against its extraction-time deflated matrix, matching
       // Clustering.pcaComponents) dividing the raw projection
-      "embedding_whiten" -> {
-        def mul(mat: String, src: String, dst: String) =
-          s"""w$dst AS MATERIALIZED (SELECT f.i AS d, CAST(sum(CAST(f.cov * x.v AS DECIMAL(30,10))) AS DOUBLE) AS v
-             |  FROM $mat f JOIN $src x ON x.d = f.j GROUP BY f.i),
-             |$dst AS MATERIALIZED (SELECT d, v / NULLIF((SELECT max(abs(v)) FROM w$dst), 0) AS v FROM w$dst)""".stripMargin
-        def norm(src: String, dst: String) =
-          s"""n$dst AS MATERIALIZED (SELECT sqrt(CAST(sum(CAST(v * v AS DECIMAL(30,10))) AS DOUBLE)) AS nv FROM $src),
-             |$dst AS MATERIALIZED (SELECT d, CASE WHEN round(v / nv, 6) = 0 THEN 0.0
-             |  ELSE round(v / nv, 6) END AS loading FROM $src, n$dst)""".stripMargin
-        s"""WITH $covCtes,
-           |fm AS MATERIALIZED (SELECT i, j, cov FROM covq
-           |  UNION ALL SELECT j, i, cov FROM covq WHERE i <> j),
-           |v0 AS (SELECT DISTINCT i AS d, 1.0 AS v FROM fm),
-           |${mul("fm", "v0", "v1")},
-           |${mul("fm", "v1", "v2")},
-           |${mul("fm", "v2", "v3")},
-           |${norm("v3", "l1")},
-           |lam AS MATERIALIZED (SELECT CAST(sum(CAST(f.cov * a.loading * b.loading AS DECIMAL(30,10))) AS DOUBLE) AS lam
-           |  FROM fm f JOIN l1 a ON a.d = f.i JOIN l1 b ON b.d = f.j),
-           |fm2 AS MATERIALIZED (SELECT f.i, f.j, f.cov - lam.lam * a.loading * b.loading AS cov
-           |  FROM fm f JOIN l1 a ON a.d = f.i JOIN l1 b ON b.d = f.j, lam),
-           |u0 AS (SELECT DISTINCT i AS d, 1.0 AS v FROM fm2),
-           |${mul("fm2", "u0", "u1")},
-           |${mul("fm2", "u1", "u2")},
-           |${mul("fm2", "u2", "u3")},
-           |${norm("u3", "l2")},
-           |lam2 AS MATERIALIZED (SELECT CAST(sum(CAST(f.cov * a.loading * b.loading AS DECIMAL(30,10))) AS DOUBLE) AS lam
-           |  FROM fm2 f JOIN l2 a ON a.d = f.i JOIN l2 b ON b.d = f.j),
-           |lams AS (SELECT CAST(0 AS BIGINT) AS component, lam FROM lam
-           |  UNION ALL SELECT 1, lam FROM lam2),
-           |comps AS (SELECT CAST(0 AS BIGINT) AS component, d, loading FROM l1
-           |  UNION ALL SELECT 1, d, loading FROM l2),
-           |vid AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS ve FROM embeddings),
-           |px AS (SELECT vec_id, CAST(unnest(range(len(ve))) AS BIGINT) AS d, unnest(ve) AS x FROM vid),
-           |proj AS (SELECT px.vec_id, c.component,
-           |    CAST(sum(CAST((px.x - m.mean) * c.loading AS DECIMAL(30,10))) AS DOUBLE) AS s
-           |  FROM px JOIN m ON m.d = px.d JOIN comps c ON c.d = px.d
-           |  GROUP BY 1, 2)
-           |SELECT p.vec_id, p.component,
-           |  CASE WHEN l.lam <= 0 THEN NULL
-           |       WHEN round(p.s / sqrt(l.lam), 6) = 0 THEN 0.0
-           |       ELSE round(p.s / sqrt(l.lam), 6) END AS white
-           |FROM proj p JOIN lams l USING (component)""".stripMargin
-      },
-      // mirrors Curation.semanticDecontaminate(planes=8, minCos=0.3): the
-      // embedding_lsh_pairs bucket formula, corpus % 50 != 0 vs eval slice
-      "curate_semantic_decontaminate" -> {
-        def sign(p: Int) =
-          s"(CASE WHEN (strpos('0123456789abcdef', substr(md5('$p|'||i), 1, 1)) - 1) % 2 = 1 THEN 1.0 ELSE -1.0 END)"
-        def bit(p: Int) =
-          s"(CASE WHEN list_sum(list_transform(range(0, len(ve)), i -> ve[i+1] * ${sign(p)})) >= 0 THEN ${1L << p} ELSE 0 END)"
-        val bucket = (0 until 8).map(bit).mkString(" + ")
-        s"""WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS ve FROM embeddings),
-           |b AS (SELECT vec_id, ve, $bucket AS bucket FROM v),
-           |c AS (SELECT * FROM b WHERE vec_id % 50 <> 0),
-           |e AS (SELECT * FROM b WHERE vec_id % 50 = 0),
-           |hit AS (SELECT DISTINCT c.vec_id FROM c JOIN e ON c.bucket = e.bucket
-           |  WHERE round(list_cosine_similarity(c.ve, e.ve), 4) >= 0.3)
-           |SELECT vec_id FROM c WHERE vec_id NOT IN (SELECT vec_id FROM hit)""".stripMargin
-      },
-      // mirrors Clustering.norms: left-fold list sums match the native
-      // dot-product kernel's accumulation order
-      "embedding_norms" ->
-        """WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS ve FROM embeddings)
-          |SELECT vec_id,
-          |  round(list_sum(list_transform(ve, x -> abs(x))), 6) AS l1,
-          |  round(sqrt(list_sum(list_transform(range(0, len(ve)), i -> ve[i+1] * ve[i+1]))), 6) AS l2,
-          |  round(list_max(list_transform(ve, x -> abs(x))), 6) AS linf
-          |FROM v""".stripMargin,
-      // mirrors TextAnalysis.zipfFit(topV=200): ln() rounded to 8 digits,
-      // decimal-carried regression moments, identical slope formula
-      "text_zipf" ->
-        s"""WITH ${toksCte("documents")},
-           |words AS (SELECT doc_id, unnest(w) AS word FROM toks),
-           |vocab AS (SELECT word, count(*) AS term_freq FROM words WHERE word <> ''
-           |  GROUP BY word ORDER BY term_freq DESC, word ASC LIMIT 200),
-           |xy AS (SELECT
-           |  round(ln(CAST(row_number() OVER (ORDER BY term_freq DESC, word ASC) AS DOUBLE)), 8) AS x,
-           |  round(ln(CAST(term_freq AS DOUBLE)), 8) AS y FROM vocab),
-           |m AS (SELECT count(*) AS n,
-           |  CAST(sum(CAST(x AS DECIMAL(30,10))) AS DOUBLE) AS sx,
-           |  CAST(sum(CAST(y AS DECIMAL(30,10))) AS DOUBLE) AS sy,
-           |  CAST(sum(CAST(x * y AS DECIMAL(30,10))) AS DOUBLE) AS sxy,
-           |  CAST(sum(CAST(x * x AS DECIMAL(30,10))) AS DOUBLE) AS sxx FROM xy)
-           |SELECT CAST(n AS BIGINT) AS n_terms,
-           |  round((sxy - sx * sy / n) / NULLIF(sxx - sx * sx / n, 0), 6) AS slope,
-           |  round(sy / n - (sxy - sx * sy / n) / NULLIF(sxx - sx * sx / n, 0) * (sx / n), 6) AS intercept
-           |FROM m""".stripMargin,
-      // mirrors Tokenizer.fertilityReport: t0/t{R} token counts per doc,
-      // normalized char length, zero-word docs excluded, slice ratios as
-      // integer micro-units of the slice sums (same DIV arithmetic)
-      "text_fertility" ->
-        s"""WITH ${bpeCtes(BpeRounds)},
-           |wc AS (SELECT doc_id,
-           |  len(list_filter(string_split(trim(t), ' '), x -> x <> '')) AS nw,
-           |  length(trim(t)) AS nc FROM t0),
-           |mc AS (SELECT doc_id,
-           |  len(list_filter(string_split(trim(t), ' '), x -> x <> '')) AS nt
-           |  FROM t$BpeRounds),
-           |j AS (SELECT d.lang, d.source, wc.nw, wc.nc, mc.nt
-           |  FROM documents d
-           |  JOIN wc ON wc.doc_id = d.doc_id
-           |  JOIN mc ON mc.doc_id = d.doc_id
-           |  WHERE wc.nw > 0)
-           |SELECT lang, source,
-           |  CAST(count(*) AS BIGINT) AS n_docs,
-           |  CAST(sum(nw) AS BIGINT) AS n_words,
-           |  CAST(sum(nt) AS BIGINT) AS n_tokens,
-           |  CAST(sum(nc) AS BIGINT) AS n_chars,
-           |  CAST((1000000 * sum(nt)) // sum(nw) AS BIGINT) AS fertility_micro,
-           |  CAST((1000000 * sum(nc)) // sum(nt) AS BIGINT) AS chars_per_token_micro
-           |FROM j GROUP BY 1, 2""".stripMargin,
-      // mirrors TextAnalysis.distinctNgramReport(n=2): (source, gram)
-      // partial counts, then the slice rollup with the same integer
-      // micro-unit division
-      "text_distinct_ngrams" ->
-        s"""WITH ${toksCte("documents")},
-           |g AS (SELECT doc_id, unnest(${shinglesExpr(2)}) AS gram
-           |  FROM toks WHERE len(w) >= 2),
-           |j AS (SELECT d.source, g.gram FROM g
-           |  JOIN documents d ON d.doc_id = g.doc_id),
-           |c AS (SELECT source, gram, count(*) AS cnt FROM j GROUP BY 1, 2)
-           |SELECT source,
-           |  CAST(count(*) AS BIGINT) AS n_distinct,
-           |  CAST(sum(cnt) AS BIGINT) AS n_total,
-           |  CAST((1000000 * count(*)) // sum(cnt) AS BIGINT) AS distinct_ratio_micro
-           |FROM c GROUP BY 1""".stripMargin,
-      // LINE-level repetition rules over the composite corpus: duplicate
-      // lines by exact content, micro ratios via the same // division
-      "text_dup_lines" ->
-        s"""$corpusCte,
-           |comp AS (SELECT doc_id % 40 AS cid,
-           |    string_agg(text, chr(10) ORDER BY doc_id) AS text
-           |  FROM corpus GROUP BY 1),
-           |lns AS (SELECT cid, unnest(string_split(text, chr(10))) AS l FROM comp),
-           |nl AS (SELECT cid, l, count(*) AS c FROM lns WHERE trim(l) <> '' GROUP BY 1, 2)
-           |SELECT cid, CAST(sum(c) AS BIGINT) AS n_lines,
-           |  CAST((1000000 * sum(c - 1)) // sum(c) AS BIGINT) AS dup_line_frac_micro,
-           |  CAST((1000000 * sum(len(l) * (c - 1))) // sum(len(l) * c) AS BIGINT) AS dup_line_char_frac_micro
-           |FROM nl GROUP BY 1""".stripMargin,
-      // mirrors Curation.mixReport over (lang, source)
-      "curate_mix_report" ->
-        s"""WITH g AS (SELECT lang, source, count(*) AS n_docs,
-           |  sum(CASE WHEN len($normSql) = 0 THEN 0 ELSE len(string_split($normSql, ' ')) END) AS n_tokens
-           |  FROM documents GROUP BY 1, 2),
-           |t AS (SELECT sum(n_docs) AS td, sum(n_tokens) AS tt FROM g)
-           |SELECT lang, source, CAST(n_docs AS BIGINT) AS n_docs,
-           |  CAST(n_tokens AS BIGINT) AS n_tokens,
-           |  round(CAST(n_docs AS DOUBLE) / td, 6) AS doc_share,
-           |  round(CAST(n_tokens AS DOUBLE) / tt, 6) AS token_share
-           |FROM g, t""".stripMargin,
-      // mirrors Curation.lengthBandFilter(0.05, 0.95): k-th smallest word
-      // count with k = ceil(p*n), cutoffs from the count histogram
-      "curate_length_filter" ->
-        s"""WITH wd AS (SELECT doc_id,
-           |  CAST(CASE WHEN len($normSql) = 0 THEN 0 ELSE len(string_split($normSql, ' ')) END AS BIGINT) AS n_tokens
-           |  FROM documents),
-           |h AS (SELECT n_tokens, count(*) AS c FROM wd GROUP BY 1),
-           |cum AS (SELECT n_tokens, sum(c) OVER (ORDER BY n_tokens ASC
-           |  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cm FROM h),
-           |t AS (SELECT count(*) AS n FROM wd),
-           |cuts AS (SELECT
-           |  min(CASE WHEN cm >= ceil(n * 0.05) THEN n_tokens END) AS lo,
-           |  min(CASE WHEN cm >= ceil(n * 0.95) THEN n_tokens END) AS hi FROM cum, t)
-           |SELECT wd.doc_id, wd.n_tokens FROM wd, cuts
-           |WHERE wd.n_tokens BETWEEN lo AND hi""".stripMargin,
-      // mirrors Curation.oovReport: top-500 vocab by (term_freq desc,
-      // word asc), per-doc OOV tally, zero-token docs rate 0
-      "text_oov_rate" ->
-        s"""WITH ${toksCte("documents")},
-           |tok AS (SELECT doc_id, unnest(w) AS word FROM toks),
-           |vocab AS (SELECT word FROM (
-           |    SELECT word, count(*) AS tf FROM tok WHERE word <> '' GROUP BY word)
-           |  ORDER BY tf DESC, word ASC LIMIT 500),
-           |per AS (SELECT doc_id, count(*) AS n_tokens,
-           |    CAST(sum(CASE WHEN v.word IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_oov
-           |  FROM tok LEFT JOIN vocab v ON v.word = tok.word
-           |  WHERE tok.word <> '' GROUP BY doc_id)
-           |SELECT d.doc_id,
-           |  CAST(coalesce(n_tokens, 0) AS BIGINT) AS n_tokens,
-           |  CAST(coalesce(n_oov, 0) AS BIGINT) AS n_oov,
-           |  round(coalesce(CAST(n_oov AS DOUBLE) / n_tokens, 0.0), 4) AS oov_rate
-           |FROM documents d LEFT JOIN per USING (doc_id)""".stripMargin,
-      "text_tokens" ->
-        s"""SELECT doc_id,
-           |  CAST(CASE WHEN len($normSql) = 0 THEN 0 ELSE len(string_split($normSql, ' ')) END AS BIGINT) AS n_words,
-           |  CAST(len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]')) AS BIGINT) AS n_tokens
-           |FROM documents""".stripMargin,
-      "text_readability" ->
-        s"""WITH c AS (SELECT doc_id,
-           |  CASE WHEN len($normSql) = 0 THEN 0 ELSE len(string_split($normSql, ' ')) END AS nw,
-           |  greatest(len(regexp_extract_all(text, '[.!?]+')), 1) AS ns,
-           |  len(regexp_extract_all(lower(text), '[aeiouy]+')) AS sy
-           |FROM documents)
-           |SELECT doc_id, CAST(nw AS BIGINT) AS n_words, CAST(ns AS BIGINT) AS n_sentences,
-           |  CAST(sy AS BIGINT) AS n_syllables,
-           |  CASE WHEN nw = 0 THEN 0 ELSE CAST(floor((206.835
-           |    - 1.015 * (CAST(nw AS DOUBLE) / ns)
-           |    - 84.6 * (CAST(sy AS DOUBLE) / nw)) * 1000000.0 + 0.5) AS BIGINT) END AS flesch_micro
-           |FROM c""".stripMargin,
-      "text_fingerprint" ->
-        s"""WITH ${toksCte("documents")},
-           |sh AS (SELECT doc_id, ${shinglesExpr(4)} AS s, w FROM toks)
-           |SELECT doc_id, CASE WHEN len(w) < 4 THEN md5(array_to_string(w, ' '))
-           |  ELSE list_min(list_transform(s, x -> md5(x))) END AS fingerprint
-           |FROM sh""".stripMargin,
-      "ann_topk" ->
-        """WITH q AS (SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qv FROM embeddings WHERE vec_id < 5),
-          |s AS (SELECT query_id, e.vec_id AS neighbor_id,
-          |  round(list_cosine_similarity(qv, CAST(e.embedding AS DOUBLE[])), 6) AS cos
-          |  FROM q, embeddings e WHERE e.vec_id <> query_id),
-          |r AS (SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id ASC) AS rnk FROM s)
-          |SELECT query_id, neighbor_id, cos, CAST(rnk AS BIGINT) AS rank FROM r WHERE rnk <= 3""".stripMargin,
-      "ann_nprobe_sweep" ->
-        """WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS ve FROM embeddings),
-          |cent AS (SELECT vec_id AS cid, ve AS cv FROM v WHERE vec_id < 16),
-          |asg AS (SELECT vec_id, cid FROM (
-          |  SELECT v.vec_id, c.cid,
-          |    row_number() OVER (PARTITION BY v.vec_id ORDER BY list_cosine_similarity(v.ve, c.cv) DESC, c.cid ASC) AS rn
-          |  FROM v, cent c) t WHERE rn = 1),
-          |pr AS (SELECT query_id, cid, rn AS probe_rank FROM (
-          |  SELECT v.vec_id AS query_id, c.cid,
-          |    row_number() OVER (PARTITION BY v.vec_id ORDER BY list_cosine_similarity(v.ve, c.cv) DESC, c.cid ASC) AS rn
-          |  FROM v, cent c WHERE v.vec_id < 50) t WHERE rn <= 4),
-          |s AS (SELECT p.query_id, a.vec_id AS neighbor_id, p.probe_rank,
-          |  round(list_cosine_similarity(qv.ve, av.ve), 6) AS cos
-          |  FROM pr p JOIN asg a ON p.cid = a.cid AND a.vec_id <> p.query_id
-          |  JOIN v qv ON qv.vec_id = p.query_id JOIN v av ON av.vec_id = a.vec_id),
-          |ex AS (SELECT query_id, neighbor_id FROM (
-          |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-          |    row_number() OVER (PARTITION BY q.vec_id ORDER BY round(list_cosine_similarity(q.ve, c.ve), 6) DESC, c.vec_id ASC) AS rnk
-          |  FROM v q JOIN v c ON c.vec_id <> q.vec_id WHERE q.vec_id < 50) t WHERE rnk <= 3),
-          |den AS (SELECT count(DISTINCT query_id) AS n_queries, count(*) AS n_exact FROM ex),
-          |rung(p) AS (VALUES (1), (2), (4)),
-          |cand AS (SELECT r.p, s.query_id, s.neighbor_id, s.cos FROM rung r JOIN s ON s.probe_rank <= r.p),
-          |topk AS (SELECT p, query_id, neighbor_id FROM (
-          |  SELECT p, query_id, neighbor_id,
-          |    row_number() OVER (PARTITION BY p, query_id ORDER BY cos DESC, neighbor_id ASC) AS rnk
-          |  FROM cand) t WHERE rnk <= 3),
-          |cagg AS (SELECT p, count(*) AS n_candidates FROM cand GROUP BY p),
-          |hagg AS (SELECT t.p, count(*) AS n_found,
-          |    CAST(coalesce(sum(CASE WHEN ex.query_id IS NOT NULL THEN 1 END), 0) AS BIGINT) AS n_hit
-          |  FROM topk t LEFT JOIN ex ON t.query_id = ex.query_id AND t.neighbor_id = ex.neighbor_id
-          |  GROUP BY t.p)
-          |SELECT CAST(c.p AS BIGINT) AS nprobe, den.n_queries, den.n_exact,
-          |  c.n_candidates, h.n_found, h.n_hit,
-          |  round(CASE WHEN den.n_exact = 0 THEN 1.0 ELSE CAST(h.n_hit AS DOUBLE) / den.n_exact END, 4) AS recall
-          |FROM cagg c JOIN hagg h ON c.p = h.p, den""".stripMargin,
-      "ann_lsh_topk" -> {
-        def sign(p: Int) =
-          s"(CASE WHEN (strpos('0123456789abcdef', substr(md5('$p|'||i), 1, 1)) - 1) % 2 = 1 THEN 1.0 ELSE -1.0 END)"
-        def bit(p: Int) =
-          s"(CASE WHEN list_sum(list_transform(range(0, len(ve)), i -> ve[i+1] * ${sign(p)})) >= 0 THEN ${1L << p} ELSE 0 END)"
-        val bucket = (0 until 4).map(bit).mkString(" + ")
-        s"""WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS ve FROM embeddings),
-           |b AS (SELECT vec_id, ve, $bucket AS bucket FROM v),
-           |q AS (SELECT vec_id AS query_id, ve AS qv, bucket FROM b WHERE vec_id < 50),
-           |s AS (SELECT query_id, c.vec_id AS neighbor_id,
-           |  round(list_cosine_similarity(qv, c.ve), 6) AS cos
-           |  FROM q JOIN b c ON q.bucket = c.bucket AND c.vec_id <> q.query_id),
-           |r AS (SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id ASC) AS rnk FROM s)
-           |SELECT query_id, neighbor_id, cos, CAST(rnk AS BIGINT) AS rank FROM r WHERE rnk <= 3""".stripMargin
-      },
-      "embedding_cosine_pairs" ->
-        """WITH c AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings WHERE vec_id < 100)
-          |SELECT a.vec_id AS a, b.vec_id AS b, round(list_cosine_similarity(a.v, b.v), 4) AS cos
-          |FROM c a, c b WHERE a.vec_id < b.vec_id
-          |AND round(list_cosine_similarity(a.v, b.v), 4) >= 0.3""".stripMargin,
-      "multimodal_features" ->
-        """WITH a AS (SELECT range AS id FROM range(0, 300)),
-          |b AS (SELECT id,
-          |  CASE CAST(id % 3 AS INTEGER) WHEN 0 THEN 'image' WHEN 1 THEN 'audio' ELSE 'video' END AS media_type,
-          |  substr(sha256(CAST(id AS VARCHAR)), 1, CAST(((id % 32) + 1) * 2 AS INTEGER)) AS hexpay
-          |FROM a)
-          |SELECT id AS asset_id, media_type,
-          |  CAST(len(hexpay) AS BIGINT) AS n_bytes,
-          |  upper(sha256(hexpay)) AS sha
-          |FROM b""".stripMargin,
-      "ann_hard_negatives" ->
-        """WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS ve, CAST(label AS BIGINT) AS lbl FROM embeddings),
-          |cent AS (SELECT vec_id AS cid, ve AS cv FROM v WHERE vec_id < 16),
-          |asg AS (SELECT vec_id, cid FROM (
-          |  SELECT v.vec_id, c.cid,
-          |    row_number() OVER (PARTITION BY v.vec_id ORDER BY list_cosine_similarity(v.ve, c.cv) DESC, c.cid ASC) AS rn
-          |  FROM v, cent c) t WHERE rn = 1),
-          |probes AS (SELECT query_id, cid FROM (
-          |  SELECT v.vec_id AS query_id, c.cid,
-          |    row_number() OVER (PARTITION BY v.vec_id ORDER BY list_cosine_similarity(v.ve, c.cv) DESC, c.cid ASC) AS rn
-          |  FROM v, cent c WHERE v.vec_id < 50) t WHERE rn <= 4),
-          |s AS (SELECT p.query_id, qv.lbl AS anchor_label, a.vec_id AS neighbor_id, av.lbl AS neighbor_label,
-          |  round(list_cosine_similarity(qv.ve, av.ve), 6) AS cos
-          |  FROM probes p JOIN asg a ON p.cid = a.cid AND a.vec_id <> p.query_id
-          |  JOIN v qv ON qv.vec_id = p.query_id JOIN v av ON av.vec_id = a.vec_id
-          |  WHERE qv.lbl <> av.lbl),
-          |r AS (SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id ASC) AS rnk FROM s)
-          |SELECT query_id, anchor_label, neighbor_id, neighbor_label, cos, CAST(rnk AS BIGINT) AS rank
-          |FROM r WHERE rnk <= 3""".stripMargin,
-      // same candidate CTEs as hard_negatives; positives keep the
-      // same-label rows at rank 1, negatives the different-label top-3
-      "ann_contrastive_pairs" ->
-        """WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS ve, CAST(label AS BIGINT) AS lbl FROM embeddings),
-          |cent AS (SELECT vec_id AS cid, ve AS cv FROM v WHERE vec_id < 16),
-          |asg AS (SELECT vec_id, cid FROM (
-          |  SELECT v.vec_id, c.cid,
-          |    row_number() OVER (PARTITION BY v.vec_id ORDER BY list_cosine_similarity(v.ve, c.cv) DESC, c.cid ASC) AS rn
-          |  FROM v, cent c) t WHERE rn = 1),
-          |probes AS (SELECT query_id, cid FROM (
-          |  SELECT v.vec_id AS query_id, c.cid,
-          |    row_number() OVER (PARTITION BY v.vec_id ORDER BY list_cosine_similarity(v.ve, c.cv) DESC, c.cid ASC) AS rn
-          |  FROM v, cent c WHERE v.vec_id < 50) t WHERE rn <= 4),
-          |s AS (SELECT p.query_id, qv.lbl AS anchor_label, a.vec_id AS neighbor_id, av.lbl AS neighbor_label,
-          |  round(list_cosine_similarity(qv.ve, av.ve), 6) AS cos
-          |  FROM probes p JOIN asg a ON p.cid = a.cid AND a.vec_id <> p.query_id
-          |  JOIN v qv ON qv.vec_id = p.query_id JOIN v av ON av.vec_id = a.vec_id),
-          |pos AS (SELECT *, 'positive' AS role FROM (
-          |  SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id ASC) AS rnk
-          |  FROM s WHERE anchor_label = neighbor_label) t WHERE rnk <= 1),
-          |neg AS (SELECT *, 'negative' AS role FROM (
-          |  SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id ASC) AS rnk
-          |  FROM s WHERE anchor_label <> neighbor_label) t WHERE rnk <= 3)
-          |SELECT query_id, anchor_label, neighbor_id, neighbor_label, cos, role, CAST(rnk AS BIGINT) AS rank
-          |FROM (SELECT * FROM pos UNION ALL SELECT * FROM neg)""".stripMargin,
-      "ann_label_noise" ->
-        """WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS ve, CAST(label AS BIGINT) AS lbl FROM embeddings),
-          |cent AS (SELECT vec_id AS cid, ve AS cv FROM v WHERE vec_id < 16),
-          |asg AS (SELECT vec_id, cid FROM (
-          |  SELECT v.vec_id, c.cid,
-          |    row_number() OVER (PARTITION BY v.vec_id ORDER BY list_cosine_similarity(v.ve, c.cv) DESC, c.cid ASC) AS rn
-          |  FROM v, cent c) t WHERE rn = 1),
-          |probes AS (SELECT query_id, cid FROM (
-          |  SELECT v.vec_id AS query_id, c.cid,
-          |    row_number() OVER (PARTITION BY v.vec_id ORDER BY list_cosine_similarity(v.ve, c.cv) DESC, c.cid ASC) AS rn
-          |  FROM v, cent c WHERE v.vec_id < 50) t WHERE rn <= 4),
-          |s AS (SELECT p.query_id, qv.lbl AS anchor_label, a.vec_id AS neighbor_id, av.lbl AS neighbor_label,
-          |  round(list_cosine_similarity(qv.ve, av.ve), 6) AS cos
-          |  FROM probes p JOIN asg a ON p.cid = a.cid AND a.vec_id <> p.query_id
-          |  JOIN v qv ON qv.vec_id = p.query_id JOIN v av ON av.vec_id = a.vec_id),
-          |r AS (SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id ASC) AS rnk FROM s),
-          |votes AS (SELECT query_id, anchor_label, neighbor_label, count(*) AS votes
-          |  FROM r WHERE rnk <= 5 GROUP BY 1, 2, 3),
-          |top AS (SELECT query_id, anchor_label, neighbor_label AS voted_label, votes,
-          |    row_number() OVER (PARTITION BY query_id ORDER BY votes DESC, neighbor_label ASC) AS vrn
-          |  FROM votes)
-          |SELECT query_id, anchor_label, voted_label, CAST(votes AS BIGINT) AS votes,
-          |  voted_label <> anchor_label AS mismatch
-          |FROM top WHERE vrn = 1""".stripMargin,
-      "ann_ivf_topk" ->
-        """WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS ve FROM embeddings),
-          |cent AS (SELECT vec_id AS cid, ve AS cv FROM v WHERE vec_id < 16),
-          |asg AS (SELECT vec_id, cid FROM (
-          |  SELECT v.vec_id, c.cid,
-          |    row_number() OVER (PARTITION BY v.vec_id ORDER BY list_cosine_similarity(v.ve, c.cv) DESC, c.cid ASC) AS rn
-          |  FROM v, cent c) t WHERE rn = 1),
-          |probes AS (SELECT query_id, cid FROM (
-          |  SELECT v.vec_id AS query_id, c.cid,
-          |    row_number() OVER (PARTITION BY v.vec_id ORDER BY list_cosine_similarity(v.ve, c.cv) DESC, c.cid ASC) AS rn
-          |  FROM v, cent c WHERE v.vec_id < 50) t WHERE rn <= 4),
-          |s AS (SELECT p.query_id, a.vec_id AS neighbor_id,
-          |  round(list_cosine_similarity(qv.ve, av.ve), 6) AS cos
-          |  FROM probes p JOIN asg a ON p.cid = a.cid AND a.vec_id <> p.query_id
-          |  JOIN v qv ON qv.vec_id = p.query_id JOIN v av ON av.vec_id = a.vec_id),
-          |r AS (SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id ASC) AS rnk FROM s)
-          |SELECT query_id, neighbor_id, cos, CAST(rnk AS BIGINT) AS rank FROM r WHERE rnk <= 3""".stripMargin,
-      "embedding_lsh_pairs" -> {
-        def sign(p: Int) =
-          s"(CASE WHEN (strpos('0123456789abcdef', substr(md5('$p|'||i), 1, 1)) - 1) % 2 = 1 THEN 1.0 ELSE -1.0 END)"
-        def bit(p: Int) =
-          s"(CASE WHEN list_sum(list_transform(range(0, len(ve)), i -> ve[i+1] * ${sign(p)})) >= 0 THEN ${1L << p} ELSE 0 END)"
-        val bucket = (0 until 8).map(bit).mkString(" + ")
-        s"""WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS ve FROM embeddings),
-           |b0 AS (SELECT vec_id, ve, $bucket AS bucket FROM v),
-           |b AS (SELECT vec_id, ve, bucket FROM b0
-           |  QUALIFY count(*) OVER (PARTITION BY bucket) <= 65536)
-           |SELECT l.vec_id AS a, r.vec_id AS b,
-           |  round(list_cosine_similarity(l.ve, r.ve), 4) AS cos
-           |FROM b l JOIN b r ON l.bucket = r.bucket AND l.vec_id < r.vec_id
-           |WHERE round(list_cosine_similarity(l.ve, r.ve), 4) >= 0.3""".stripMargin
-      },
-      "events_stream_dedup" ->
-        "SELECT DISTINCT event_id FROM events",
-      "curate_dedup_corpus" ->
-        s"""$corpusCte
-           |SELECT doc_id FROM corpus
-           |WHERE doc_id = (SELECT min(c2.doc_id) FROM corpus c2 WHERE md5(c2.text) = md5(corpus.text))""".stripMargin,
-      "curate_dup_clusters" ->
-        s"""$corpusCte,
-           |grouped AS (SELECT doc_id, min(doc_id) OVER (PARTITION BY md5(text)) AS cluster,
-           |  count(*) OVER (PARTITION BY md5(text)) AS n FROM corpus)
-           |SELECT doc_id, cluster FROM grouped WHERE n > 1""".stripMargin,
-      "graphx_triangles" -> cliqueTrianglesSql,
-      "graph_triangles_df" -> cliqueTrianglesSql,
-      "curate_sample" ->
-        "SELECT doc_id FROM documents WHERE substr(md5('s|'||doc_id), 1, 2) < '29'",
-      // aggregate over the raw table: equality proves the JSONL write +
-      // schema-bound read-back preserved every row and value
-      "io_jsonl_roundtrip" ->
-        """SELECT lang, count(*) AS n_docs, CAST(sum(n_chars) AS BIGINT) AS total_chars
-          |FROM documents GROUP BY lang""".stripMargin,
-      "io_orc_roundtrip" ->
-        """SELECT source, count(*) AS n_docs, CAST(sum(n_chars) AS BIGINT) AS total_chars
-          |FROM documents GROUP BY source""".stripMargin,
-      "io_csv_roundtrip" ->
-        """SELECT lang, source, count(*) AS n_docs, CAST(sum(n_chars) AS BIGINT) AS total_chars
-          |FROM documents GROUP BY lang, source""".stripMargin,
-      // the NAIVE greedy replay — one window per language ordered by
-      // (quality desc, id); the Spark side's two-phase bucket plan must
-      // select the identical document set
-      "curate_token_budget" ->
-        s"""WITH tq AS ($textQualitySql),
-           |t AS (SELECT tq.doc_id, d.lang, tq.n_words AS tk, tq.quality AS q
-           |  FROM tq JOIN documents d USING (doc_id)),
-           |r AS (SELECT *, sum(tk) OVER (PARTITION BY lang ORDER BY q DESC, doc_id ASC
-           |    ROWS UNBOUNDED PRECEDING) AS cum FROM t)
-           |SELECT lang, doc_id, CAST(tk AS BIGINT) AS n_words
-           |FROM r WHERE cum <= 3000""".stripMargin,
-      // the batch drift replay restricted to WATERMARK-CLOSED windows:
-      // append mode emits a window once the watermark (max event time −
-      // 10 min) passes its end, so the emitted set is exactly
-      // end <= max_ts − 600 s — deterministic from the data
-      "stream_label_drift" ->
-        """WITH e AS (SELECT event_type, ((epoch_ns(ts) // 1000000000) // 3600) * 3600 AS w FROM events),
-          |per AS (SELECT w, event_type AS t, count(*) AS c FROM e GROUP BY 1, 2),
-          |tot AS (SELECT w, sum(c) AS n FROM per GROUP BY 1),
-          |sh AS (SELECT per.w, per.t, (per.c * 1000000) // tot.n AS s, tot.n AS n
-          |  FROM per JOIN tot USING (w)),
-          |pv AS (SELECT w + 3600 AS w, t, s AS sp FROM sh),
-          |j AS (SELECT coalesce(sh.w, pv.w) AS w, coalesce(sh.s, 0) AS s,
-          |    coalesce(pv.sp, 0) AS sp, sh.n AS n
-          |  FROM sh FULL JOIN pv ON sh.w = pv.w AND sh.t = pv.t),
-          |d AS (SELECT w, max(n) AS n, sum(abs(s - sp)) AS drift FROM j GROUP BY w),
-          |mx AS (SELECT max(epoch_ns(ts) // 1000000000) AS m FROM events)
-          |SELECT CAST(d.w AS BIGINT) AS w_start, CAST(d.n AS BIGINT) AS n_events,
-          |  CAST(d.drift AS BIGINT) AS drift_micro
-          |FROM d JOIN (SELECT DISTINCT w + 3600 AS w FROM tot) p ON p.w = d.w
-          |CROSS JOIN mx
-          |WHERE d.n IS NOT NULL AND d.w + 3600 <= mx.m - 600""".stripMargin,
-      // the batch gap-sessionization replay, PLUS the event-time expiry
-      // rule: a session emits if a later event closed it (grp < maxg) OR
-      // the final watermark (global max event time − 10 min) passed its
-      // lastTs + gap — exactly the streaming run's two emission paths
-      "stream_sessionize" ->
-        """WITH e AS (SELECT user_id, epoch_ns(ts) // 1000000000 AS sec FROM events),
-          |o AS (SELECT user_id, sec,
-          |  CASE WHEN sec - lag(sec) OVER (PARTITION BY user_id ORDER BY sec) > 1800 THEN 1 ELSE 0 END AS brk
-          |FROM e),
-          |g AS (SELECT user_id, sec,
-          |  sum(brk) OVER (PARTITION BY user_id ORDER BY sec ROWS UNBOUNDED PRECEDING) AS grp
-          |FROM o),
-          |sess AS (SELECT user_id, grp, count(*) AS n_events, min(sec) AS first_ts, max(sec) AS last_ts
-          |  FROM g GROUP BY 1, 2),
-          |last AS (SELECT user_id, max(grp) AS maxg FROM sess GROUP BY 1),
-          |mx AS (SELECT max(sec) AS m FROM e)
-          |SELECT s.user_id, n_events, first_ts, last_ts
-          |FROM sess s JOIN last l ON s.user_id = l.user_id, mx
-          |WHERE s.grp < l.maxg OR s.last_ts + 1800 < mx.m - 600""".stripMargin,
-      "curate_psi_report" ->
-        s"""WITH s AS (SELECT CASE
-           |    WHEN substr(md5('split|'||doc_id), 1, 2) < '0d' THEN 'test'
-           |    WHEN substr(md5('split|'||doc_id), 1, 2) < '1a' THEN 'val'
-           |    ELSE 'train' END AS split,
-           |  CASE WHEN len($normSql) = 0 THEN 0 ELSE len(string_split($normSql, ' ')) END AS nw
-           |FROM documents),
-           |b AS (SELECT greatest(least(nw // 10, 20), 0) AS bucket, split FROM s WHERE split IN ('train', 'test')),
-           |raw AS (SELECT bucket,
-           |    sum(CASE WHEN split = 'train' THEN 1 ELSE 0 END) AS n_a,
-           |    sum(CASE WHEN split = 'test' THEN 1 ELSE 0 END) AS n_b
-           |  FROM b GROUP BY bucket),
-           |c AS (SELECT gs.bucket, coalesce(n_a, 0) AS n_a, coalesce(n_b, 0) AS n_b
-           |  FROM generate_series(0, 20) gs(bucket) LEFT JOIN raw ON raw.bucket = gs.bucket),
-           |t AS (SELECT sum(n_a) AS ta, sum(n_b) AS tb FROM c)
-           |SELECT CAST(bucket AS BIGINT) AS bucket, CAST(n_a AS BIGINT) AS n_a,
-           |  CAST(n_b AS BIGINT) AS n_b,
-           |  CAST(floor((CAST(n_a + 1 AS DOUBLE) / (ta + 21) - CAST(n_b + 1 AS DOUBLE) / (tb + 21))
-           |    * ln((CAST(n_a + 1 AS DOUBLE) / (ta + 21)) / (CAST(n_b + 1 AS DOUBLE) / (tb + 21)))
-           |    * 1000000.0 + 0.5) AS BIGINT) AS psi_contrib_micro
-           |FROM c, t""".stripMargin,
-      "curate_split" ->
-        """SELECT doc_id, CASE
-          |  WHEN substr(md5('split|'||doc_id), 1, 2) < '0d' THEN 'test'
-          |  WHEN substr(md5('split|'||doc_id), 1, 2) < '1a' THEN 'val'
-          |  ELSE 'train' END AS split
-          |FROM documents""".stripMargin,
-      // same recursive min-reachable labeling as curate_dup_clusters_df,
-      // split rule applied to the cluster root (own id for singletons)
-      "curate_leakage_split" ->
-        s"""${ngramInterCtes.replaceFirst("WITH ", "WITH RECURSIVE ")},
-           |prs AS MATERIALIZED (SELECT a, b
-           |  FROM inter JOIN sizes sa ON sa.doc_id = a JOIN sizes sb ON sb.doc_id = b
-           |  WHERE round(CAST(i AS DOUBLE) / CAST(sa.n_sh + sb.n_sh - i AS DOUBLE), 4) >= 0.5),
-           |und AS (SELECT a, b FROM prs UNION SELECT b, a FROM prs),
-           |reach AS (SELECT a, b FROM und
-           |  UNION SELECT r.a, u.b FROM reach r JOIN und u ON r.b = u.a),
-           |lbl AS (SELECT a AS doc_id, least(a, min(b)) AS cluster FROM reach GROUP BY a),
-           |alldocs AS (SELECT c.doc_id, coalesce(l.cluster, c.doc_id) AS root
-           |  FROM corpus c LEFT JOIN lbl l ON l.doc_id = c.doc_id)
-           |SELECT doc_id, CASE
-           |  WHEN substr(md5('split|'||root), 1, 2) < '0d' THEN 'test'
-           |  WHEN substr(md5('split|'||root), 1, 2) < '1a' THEN 'val'
-           |  ELSE 'train' END AS split
-           |FROM alldocs""".stripMargin,
-      "curate_redact" ->
-        """SELECT doc_id,
-          |regexp_replace(regexp_replace(text || ' contact bob@example.com id 1234567890',
-          |  '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<EMAIL>', 'g'),
-          |  '[0-9]{6,}', '<NUM>', 'g') AS clean
-          |FROM documents""".stripMargin,
-      "text_pii_report" ->
-        """WITH planted AS (SELECT source,
-          |  CASE WHEN doc_id % 13 = 0 THEN text || ' contact user' || doc_id ||
-          |    '@mail.example.org from 10.0.' || (doc_id % 256) ||
-          |    '.7 call +49 170 555 0101 acct 903442187650' ELSE text END AS text
-          |FROM documents),
-          |cnt AS (SELECT source,
-          |  len(regexp_extract_all(text, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}')) AS e,
-          |  len(regexp_extract_all(text, '\b[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\b')) AS ip,
-          |  len(regexp_extract_all(text, '\+[0-9][0-9 \-]{6,}[0-9]')) AS ph,
-          |  len(regexp_extract_all(text, '[0-9]{9,}')) AS n
-          |FROM planted)
-          |SELECT source, count(*) AS n_docs,
-          |  CAST(sum(CASE WHEN e + ip + ph + n > 0 THEN 1 ELSE 0 END) AS BIGINT) AS docs_with_pii,
-          |  CAST(sum(e) AS BIGINT) AS n_emails, CAST(sum(ip) AS BIGINT) AS n_ipv4,
-          |  CAST(sum(ph) AS BIGINT) AS n_phones, CAST(sum(n) AS BIGINT) AS n_longnums
-          |FROM cnt GROUP BY source""".stripMargin,
-      "curate_vocab" ->
-        s"""WITH ${toksCte("documents")},
-           |words AS (SELECT doc_id, unnest(w) AS word FROM toks)
-           |SELECT word, count(DISTINCT doc_id) AS doc_freq, count(*) AS term_freq
-           |FROM words WHERE word <> ''
-           |GROUP BY word ORDER BY doc_freq DESC, word ASC LIMIT 20""".stripMargin,
-      "curate_decontaminate" -> decontaminateSql,
-      // the composed pipeline replayed stage by stage: fused per-doc
-      // predicates (nested-WITH quality/langid subqueries over the
-      // corpus), decon NOT IN, md5 keep-first, the shared
-      // LSH-propose/verify CTEs over the exact-stage survivors, recursive
-      // min-reachable cc, chop-packing window, per-shard rollup
-      "curate_pipeline" ->
-        s"""${corpusCte.replaceFirst("WITH ", "WITH RECURSIVE ")},
-           |pqual AS MATERIALIZED (SELECT doc_id, quality, n_words AS nw
-           |  FROM (${textQualitySqlFor("corpus")}) tq),
-           |plang AS MATERIALIZED (SELECT doc_id, lang_guess FROM (${textLangidSqlFor("corpus")}) tl),
-           |pfil AS MATERIALIZED (SELECT c.doc_id, c.text, q.nw FROM corpus c
-           |  JOIN pqual q USING (doc_id) JOIN plang l USING (doc_id)
-           |  WHERE q.nw >= 5 AND l.lang_guess = 'en' AND q.quality >= 0.35),
-           |pct AS MATERIALIZED (SELECT doc_id, string_split($normSql, ' ') AS w FROM pfil),
-           |pcg AS MATERIALIZED (SELECT DISTINCT doc_id, g FROM
-           |  (SELECT doc_id, unnest(${shinglesExpr(5)}) AS g FROM pct WHERE len(w) >= 5)),
-           |pbt AS MATERIALIZED (SELECT doc_id, string_split($normSql, ' ') AS w FROM documents WHERE doc_id % 10 = 3),
-           |pbg AS MATERIALIZED (SELECT DISTINCT g FROM
-           |  (SELECT unnest(${shinglesExpr(5)}) AS g FROM pbt WHERE len(w) >= 5)),
-           |pbad AS MATERIALIZED (SELECT DISTINCT pcg.doc_id FROM pcg JOIN pbg USING (g)),
-           |pdecon AS MATERIALIZED (SELECT * FROM pfil WHERE doc_id NOT IN (SELECT doc_id FROM pbad)),
-           |pexh AS MATERIALIZED (SELECT md5(text) AS h, min(doc_id) AS keep FROM pdecon GROUP BY 1),
-           |pexact AS MATERIALIZED (SELECT d.doc_id, d.text, d.nw FROM pdecon d
-           |  JOIN pexh ON md5(d.text) = pexh.h AND d.doc_id = pexh.keep),
-           |${ngramPipelineCtes("pexact")},
-           |prs AS MATERIALIZED (SELECT a, b
-           |  FROM inter JOIN sizes sa ON sa.doc_id = a JOIN sizes sb ON sb.doc_id = b
-           |  WHERE round(CAST(i AS DOUBLE) / CAST(sa.n_sh + sb.n_sh - i AS DOUBLE), 4) >= 0.5),
-           |und AS (SELECT a, b FROM prs UNION SELECT b, a FROM prs),
-           |reach AS (SELECT a, b FROM und
-           |  UNION SELECT r.a, u.b FROM reach r JOIN und u ON r.b = u.a),
-           |dropd AS MATERIALIZED (SELECT a FROM reach GROUP BY a HAVING min(b) < a),
-           |psurv AS MATERIALIZED (SELECT doc_id, nw FROM pexact WHERE doc_id NOT IN (SELECT a FROM dropd)),
-           |ppk AS MATERIALIZED (SELECT doc_id, nw, doc_id % 8 AS shard,
-           |  sum(nw) OVER (PARTITION BY doc_id % 8 ORDER BY doc_id
-           |    ROWS UNBOUNDED PRECEDING) - nw AS strt FROM psurv)
-           |SELECT CAST(shard AS BIGINT) AS shard, CAST(count(*) AS BIGINT) AS n_docs,
-           |  CAST(count(DISTINCT strt // 512) AS BIGINT) AS n_chunks,
-           |  CAST(sum(nw) AS BIGINT) AS total_tokens
-           |FROM ppk GROUP BY shard""".stripMargin,
-      // the bloom variant is exact (sketch prefilter + exact verification),
-      // so it answers to the identical oracle
-      "curate_decontaminate_bloom" -> decontaminateSql,
-      "text_repetition" ->
-        s"""WITH n AS (SELECT doc_id, $normSql AS norm FROM documents),
-           |toks AS (SELECT doc_id, list_filter(string_split(norm, ' '), x -> x <> '') AS w FROM n),
-           |wst AS (SELECT doc_id, len(w) AS nw, len(list_distinct(w)) AS dw FROM toks),
-           |c2 AS (SELECT doc_id, g, count(*) AS c FROM
-           |  (SELECT doc_id, unnest(${shinglesExpr(2)}) AS g FROM toks) GROUP BY 1, 2),
-           |s2 AS (SELECT doc_id, sum(c) AS n2, max(c) AS m2 FROM c2 GROUP BY 1),
-           |c3 AS (SELECT doc_id, g, count(*) AS c FROM
-           |  (SELECT doc_id, unnest(${shinglesExpr(3)}) AS g FROM toks) GROUP BY 1, 2),
-           |s3 AS (SELECT doc_id, sum(c) AS n3, count(*) AS d3 FROM c3 GROUP BY 1)
-           |SELECT t.doc_id,
-           |  round(coalesce(CAST(nw - dw AS DOUBLE) / nullif(nw, 0), 0.0), 4) AS dup_word_frac,
-           |  round(coalesce(CAST(m2 AS DOUBLE) / n2, 0.0), 4) AS top_2gram_frac,
-           |  round(coalesce(CAST(n3 - d3 AS DOUBLE) / n3, 0.0), 4) AS dup_3gram_frac
-           |FROM toks t LEFT JOIN wst USING (doc_id) LEFT JOIN s2 USING (doc_id) LEFT JOIN s3 USING (doc_id)""".stripMargin,
-    )
-  }
+      {
+      def mul(mat: String, src: String, dst: String) =
+        s"""w$dst AS MATERIALIZED (SELECT f.i AS d, CAST(sum(CAST(f.cov * x.v AS DECIMAL(30,10))) AS DOUBLE) AS v
+           |  FROM $mat f JOIN $src x ON x.d = f.j GROUP BY f.i),
+           |$dst AS MATERIALIZED (SELECT d, v / NULLIF((SELECT max(abs(v)) FROM w$dst), 0) AS v FROM w$dst)""".stripMargin
+      def norm(src: String, dst: String) =
+        s"""n$dst AS MATERIALIZED (SELECT sqrt(CAST(sum(CAST(v * v AS DECIMAL(30,10))) AS DOUBLE)) AS nv FROM $src),
+           |$dst AS MATERIALIZED (SELECT d, CASE WHEN round(v / nv, 6) = 0 THEN 0.0
+           |  ELSE round(v / nv, 6) END AS loading FROM $src, n$dst)""".stripMargin
+      s"""WITH $covCtes,
+         |fm AS MATERIALIZED (SELECT i, j, cov FROM covq
+         |  UNION ALL SELECT j, i, cov FROM covq WHERE i <> j),
+         |v0 AS (SELECT DISTINCT i AS d, 1.0 AS v FROM fm),
+         |${mul("fm", "v0", "v1")},
+         |${mul("fm", "v1", "v2")},
+         |${mul("fm", "v2", "v3")},
+         |${norm("v3", "l1")},
+         |lam AS MATERIALIZED (SELECT CAST(sum(CAST(f.cov * a.loading * b.loading AS DECIMAL(30,10))) AS DOUBLE) AS lam
+         |  FROM fm f JOIN l1 a ON a.d = f.i JOIN l1 b ON b.d = f.j),
+         |fm2 AS MATERIALIZED (SELECT f.i, f.j, f.cov - lam.lam * a.loading * b.loading AS cov
+         |  FROM fm f JOIN l1 a ON a.d = f.i JOIN l1 b ON b.d = f.j, lam),
+         |u0 AS (SELECT DISTINCT i AS d, 1.0 AS v FROM fm2),
+         |${mul("fm2", "u0", "u1")},
+         |${mul("fm2", "u1", "u2")},
+         |${mul("fm2", "u2", "u3")},
+         |${norm("u3", "l2")},
+         |lam2 AS MATERIALIZED (SELECT CAST(sum(CAST(f.cov * a.loading * b.loading AS DECIMAL(30,10))) AS DOUBLE) AS lam
+         |  FROM fm2 f JOIN l2 a ON a.d = f.i JOIN l2 b ON b.d = f.j),
+         |lams AS (SELECT CAST(0 AS BIGINT) AS component, lam FROM lam
+         |  UNION ALL SELECT 1, lam FROM lam2),
+         |comps AS (SELECT CAST(0 AS BIGINT) AS component, d, loading FROM l1
+         |  UNION ALL SELECT 1, d, loading FROM l2),
+         |vid AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS ve FROM embeddings),
+         |px AS (SELECT vec_id, CAST(unnest(range(len(ve))) AS BIGINT) AS d, unnest(ve) AS x FROM vid),
+         |proj AS (SELECT px.vec_id, c.component,
+         |    CAST(sum(CAST((px.x - m.mean) * c.loading AS DECIMAL(30,10))) AS DOUBLE) AS s
+         |  FROM px JOIN m ON m.d = px.d JOIN comps c ON c.d = px.d
+         |  GROUP BY 1, 2)
+         |SELECT p.vec_id, p.component,
+         |  CASE WHEN l.lam <= 0 THEN NULL
+         |       WHEN round(p.s / sqrt(l.lam), 6) = 0 THEN 0.0
+         |       ELSE round(p.s / sqrt(l.lam), 6) END AS white
+         |FROM proj p JOIN lams l USING (component)""".stripMargin
+    }),
+  )
 }

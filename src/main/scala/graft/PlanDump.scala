@@ -45,6 +45,8 @@ object PlanDump {
     val outDir = args(0)
     val tag = args(1)
     val names = args(2).split(",").map(_.trim).filter(_.nonEmpty)
+    // fail on an unknown name before any plan is built
+    SparkEntry.select(names.filterNot(special.contains))
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = GraftSession(s"local[$cpus]", cpus.toInt)

@@ -7,10 +7,12 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
-    // optional third arg: comma-separated query-name filter for fast
-    // local iteration on one operator (the driver always passes two args)
-    val only: Option[Set[String]] =
-      if (args.length > 2) Some(args(2).split(",").map(_.trim).toSet) else None
+    // optional third arg: comma-separated entry names for fast local
+    // iteration on one operator (the full gate passes two args); an
+    // unknown name fails the run
+    val selected =
+      if (args.length > 2) SparkEntry.select(args(2).split(",").map(_.trim).filter(_.nonEmpty))
+      else SparkEntry.entries
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // config-sensitivity knobs (round 13): the r10 float bug was
     // parallelism-dependent and the dual 16/32-CPU gate guards that axis;
@@ -30,18 +32,16 @@ object Verify {
     val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
     implicit val ec: scala.concurrent.ExecutionContext =
       scala.concurrent.ExecutionContext.fromExecutorService(pool)
-    val selected = SparkEntry.queries.toSeq
-      .filter { case (name, _) => only.forall(_.contains(name)) }
     // Coverage tripwire: round 8 lost 7 queries from the correctness record
     // with NO red signal — they errored, Verify printed one stderr line per
     // failure, and the driver's compare silently skipped the missing dumps.
     // Track per-query outcome (error or row count) and make any failure or
     // empty result unmissable in both the artifact and the process output.
     val outcomes = new java.util.concurrent.ConcurrentHashMap[String, Either[String, Long]]
-    val futures = selected.map { case (name, fn) =>
+    val futures = selected.map { case SparkEntry.Entry(name, build, _, _) =>
       scala.concurrent.Future {
         try {
-          fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+          build(spark, sfDir).coalesce(1).write.mode("overwrite")
             .parquet(s"$outDir/$name")
           val rows = spark.read.parquet(s"$outDir/$name").count()
           outcomes.put(name, Right(rows))
@@ -66,24 +66,22 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
-      .filter { case (k, _) => only.forall(_.contains(k)) }
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    val json = selected.map(e => s"${q(e.name)}: ${q(e.oracleSql)}").mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     // coverage.json: the machine-readable tripwire. n_ok must equal
     // n_queries; a failed or empty entry names itself here AND triggers the
     // banner below, so a harness- or data-side change can never silently
     // shrink the checked set again.
-    val failed = selected.map(_._1).flatMap(n => outcomes.get(n) match {
+    val failed = selected.map(_.name).flatMap(n => outcomes.get(n) match {
       case Left(err) => Some(n -> err)
       case _ => None
     })
-    val empty = selected.map(_._1).filter(n => outcomes.get(n) match {
+    val empty = selected.map(_.name).filter(n => outcomes.get(n) match {
       case Right(0L) => true
       case null => true // never ran (should be impossible)
       case _ => false
     })
-    val rowsJson = selected.map(_._1).flatMap(n => Option(outcomes.get(n)).collect {
+    val rowsJson = selected.map(_.name).flatMap(n => Option(outcomes.get(n)).collect {
       case Right(r) => s"${q(n)}: $r"
     }).mkString("{", ",", "}")
     val covJson =

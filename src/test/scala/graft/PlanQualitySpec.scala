@@ -876,7 +876,7 @@ class PlanQualitySpec extends SparkSuite {
     // 122.9 s vs ~15 s sum-of-parts at sf0.1), everything else stays
     // lazy, with equi-joins only and an exchange count that stays fixed
     // as data grows (exchanges scale the plan's shuffle count, not rows)
-    val df = PipelineQueries.queries("curate_pipeline")(spark, dir)
+    val df = SparkEntry.queries("curate_pipeline")(spark, dir)
     df.collect() // finalize adaptive plans
     val plan = df.queryExecution.executedPlan.toString.split("== Initial Plan ==").head
     assert(!plan.toLowerCase.contains("cartesianproduct"), s"cartesian:\n$plan")
@@ -959,5 +959,26 @@ class PlanQualitySpec extends SparkSuite {
     val names = Memo.all.flatMap(m => m.stagedFor.keys ++ m.coldFor)
     assert(names.nonEmpty)
     names.foreach(n => assert(SparkEntry.queries.contains(n), s"$n is not in SparkEntry.queries"))
+  }
+
+  test("inventory: unique names, an oracle per entry, every sibling benched") {
+    import SparkEntry.{Entry, SiblingOf}
+    val names = SparkEntry.entries.map(_.name)
+    assert(names.distinct == names, s"duplicate names: ${names.diff(names.distinct)}")
+    SparkEntry.entries.foreach(e => assert(e.oracleSql.trim.nonEmpty, s"${e.name}: empty oracle"))
+    val benched = SparkEntry.benched.toSet
+    SparkEntry.entries.collect { case Entry(n, _, _, SiblingOf(x)) => n -> x }
+      .foreach { case (n, x) => assert(benched(x), s"$n is a sibling of $x, which is not benched") }
+    assert(benched.subsetOf(SparkEntry.queries.keySet))
+    assert(SparkEntry.oracleSql.keySet == SparkEntry.queries.keySet)
+  }
+
+  test("an unknown entry name fails the selection, and the error names it") {
+    val e = intercept[IllegalArgumentException](
+      SparkEntry.select(Seq("zoe_v_all", "zoe_v_al", "no_such_entry")))
+    assert(e.getMessage.contains("zoe_v_al,") && e.getMessage.contains("no_such_entry"), e.getMessage)
+    assert(!e.getMessage.contains("zoe_v_all"), e.getMessage)
+    assert(SparkEntry.select(Seq("graph_lpa_df", "zoe_v_all")).map(_.name) ==
+      Seq("zoe_v_all", "graph_lpa_df"))
   }
 }

@@ -71,7 +71,7 @@ object ScaleProbe {
       // VERDICT r11 item 4: 100x arms for the three flagship claims. Runs
       // 1x first (codegen warm), then 10x AND 100x so the 10->100 decade
       // factor is measured in the same JVM as the 1->10 one.
-      val qs = graft.PipelineQueries.queries
+      val qs = graft.SparkEntry.queries
       for (name <- Seq("curate_neardup_corpus", "curate_funnel_rare")) {
         graft.Memo.bust(graft.Memo.Shared, spark, base)
         qs(name)(spark, base).count() // warm
@@ -633,7 +633,7 @@ object ScaleProbe {
       }
       buildPipe(10, "target/scaleprobe/pipe10x")
       buildPipe(100, "target/scaleprobe/pipe100x")
-      val qs = graft.PipelineQueries.queries
+      val qs = graft.SparkEntry.queries
       qs("curate_pipeline")(spark, base).count() // warm
       for ((dir, tag) <- Seq((base, "1x"), ("target/scaleprobe/pipe10x", "10x"),
           ("target/scaleprobe/pipe100x", "100x"))) {
@@ -871,7 +871,7 @@ object ScaleProbe {
       // replicate users with offset ids (independent copies — cohort and
       // sequence volume scale linearly by design); adamic-adar runs over
       // disjoint co-purchase graph copies like the walks arm.
-      val qs2 = graft.PipelineQueries.queries
+      val qs2 = graft.SparkEntry.queries
       val wave2Docs = Seq("curate_dsir", "curate_prototypes",
         "text_collocations", "corpus_entropy", "curate_leakage_split")
       // warm codegen/JIT on the 1x plans once so the 1x numbers measure
@@ -935,7 +935,7 @@ object ScaleProbe {
       spark.stop(); return
     }
 
-    val qs = graft.PipelineQueries.queries
+    val qs = graft.SparkEntry.queries
     for ((dir, tag) <- Seq((base, "1x"), (big, "10x"))) {
       for (name <- Seq("dedup_paragraphs", "curate_neardup_corpus",
           "curate_funnel_rare", "ann_ivf_kmeans_topk",
