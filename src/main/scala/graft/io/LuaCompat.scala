@@ -4,6 +4,7 @@ import org.apache.spark.sql.SparkSession
 import graft.exec.ZoeCompiler
 import graft.model.{GraphStore, Hashing, PropValue}
 import graft.ql.{BasicQuery, EdgeQuery, PropertyQuery, VertexQuery}
+import graft.store.BulkMutations
 
 /** Lua-compat script runner: executes the reference's documented Lua builder
   * surface (lua.rs:27-318 — globals `vq_all/vq_from_ids/vq_from_property/
@@ -243,15 +244,6 @@ object LuaCompat {
       }
     }
 
-    def rawProp(value: String): PropValue =
-      PropValue("Raw", Some(value), Nil, Some(Hashing.sha256HexUpper(value)))
-
-    def applyProps(g: GraphStore, pv: PropValue, value: String): GraphStore = {
-      val s2 = spark; import s2.implicits._
-      graft.store.BulkMutations.createProperties(g,
-        Seq((pv.hash, value, pv.variant)).toDF("hash", "value", "schema_type"))
-    }
-
     def dbCall(method: String, args: Seq[V], pos: Int): V = {
       val s2 = spark; import s2.implicits._
       def argStr(i: Int): String = args.lift(i) match {
@@ -270,30 +262,22 @@ object LuaCompat {
           Res(ZoeCli.renderResult(new ZoeCompiler(store).run(bq)))
         case "create_node" =>
           val value = argStr(0)
-          val pv = rawProp(value)
           val id = java.util.UUID.randomUUID().toString
-          store = graft.store.BulkMutations.createNodes(
-            applyProps(store, pv, value), Seq((id, pv.hash)).toDF("id", "prop_hash"))
+          store = BulkMutations.createNodes(BulkMutations.createRawProperty(store, value),
+            Seq((id, PropValue.raw(value).hash)).toDF("id", "prop_hash"))
           mutated = true
           Str(id)
         case "update_node" =>
           val id = argStr(0)
           val value = argStr(1)
-          val pv = rawProp(value)
-          require(!store.vertices.where(org.apache.spark.sql.functions.col("id") === id).isEmpty,
-            s"node $id does not exist")
-          val repointed = applyProps(store, pv, value).copy(vertices =
-            store.vertices.withColumn("prop_hash",
-              org.apache.spark.sql.functions.when(
-                org.apache.spark.sql.functions.col("id") === id,
-                pv.hash).otherwise(org.apache.spark.sql.functions.col("prop_hash"))))
-          store = graft.store.BulkMutations.gcOrphanProps(repointed)
+          store = BulkMutations.gcOrphanProps(BulkMutations.updateNodes(
+            BulkMutations.createRawProperty(store, value),
+            Seq((id, PropValue.raw(value).hash)).toDF("id", "prop_hash")))
           mutated = true
           Str(id)
         case "delete_node" =>
           val id = argStr(0)
-          store = graft.store.BulkMutations.gcOrphanProps(
-            graft.store.BulkMutations.deleteNodes(store, Seq(id).toDF("id")))
+          store = BulkMutations.gcOrphanProps(BulkMutations.deleteNodes(store, Seq(id).toDF("id")))
           mutated = true
           // the reference returns the deleted id (lua.rs:42-47), so
           // scripts binding the result (x = db:delete_node(id)) agree;
@@ -301,15 +285,14 @@ object LuaCompat {
           Str(id)
         case "create_edge" =>
           val (src, dst, value) = (argStr(0), argStr(1), argStr(2))
-          val pv = rawProp(value)
-          store = graft.store.BulkMutations.createEdges(
-            applyProps(store, pv, value), Seq((src, dst, pv.hash)).toDF("src", "dst", "prop_hash"))
+          val hash = PropValue.raw(value).hash
+          store = BulkMutations.createEdges(BulkMutations.createRawProperty(store, value),
+            Seq((src, dst, hash)).toDF("src", "dst", "prop_hash"))
           mutated = true
-          Str(Hashing.edgeId(pv.hash, src, dst))
+          Str(Hashing.edgeId(hash, src, dst))
         case "delete_edge" =>
           val id = argStr(0)
-          store = graft.store.BulkMutations.gcOrphanProps(
-            graft.store.BulkMutations.deleteEdges(store, Seq(id).toDF("edge_id")))
+          store = BulkMutations.gcOrphanProps(BulkMutations.deleteEdges(store, Seq(id).toDF("edge_id")))
           mutated = true
           Unit0
         case other => fail(s"unknown db method '$other'", pos)

@@ -2,8 +2,9 @@ package graft.io
 
 import org.apache.spark.sql.SparkSession
 import graft.exec.{ZoeCompiler, ZoeResult}
-import graft.model.GraphStore
+import graft.model.{GraphStore, PropValue}
 import graft.ql.ZoeJson
+import graft.store.BulkMutations
 
 /** CLI parity with the reference's `gravitydb` binary (cli_helpers.rs:39-251):
   *
@@ -109,29 +110,21 @@ object ZoeCli {
     // flag set: --id/--create-id/--update/--get-or-create)
     case "create-node" :: path :: rest =>
       val value = readStdin()
-      val p = rawProp(value)
-      val g = GraphStore.load(spark, path)
+      val p = PropValue.raw(value)
+      val g = BulkMutations.createRawProperty(GraphStore.load(spark, path), value)
       val spark2 = spark
       import spark2.implicits._
-      def withProp(st: GraphStore) = graft.store.BulkMutations.createProperties(st,
-        Seq((p.hash, value, p.variant)).toDF("hash", "value", "schema_type"))
       rest match {
         case "--get-or-create" :: Nil =>
           // reuse the node if exactly one already holds this property
           // (cli_helpers.rs:118-174)
-          val (g2, id) = graft.store.BulkMutations.getOrCreateNode(g, p)
+          val (g2, id) = BulkMutations.getOrCreateNode(g, p)
           g2.save(path)
           println(id)
         case "--update" :: id :: Nil =>
           // repoint an existing node to the new property + GC the old one
-          require(!g.vertices.where(org.apache.spark.sql.functions.col("id") === id).isEmpty,
-            s"node $id does not exist")
-          val repointed = withProp(g).copy(vertices =
-            g.vertices.withColumn("prop_hash",
-              org.apache.spark.sql.functions.when(
-                org.apache.spark.sql.functions.col("id") === id,
-                p.hash).otherwise(org.apache.spark.sql.functions.col("prop_hash"))))
-          graft.store.BulkMutations.gcOrphanProps(repointed).save(path)
+          BulkMutations.gcOrphanProps(
+            BulkMutations.updateNodes(g, Seq((id, p.hash)).toDF("id", "prop_hash"))).save(path)
           println(id)
         case flags =>
           val id = flags match {
@@ -139,29 +132,24 @@ object ZoeCli {
             case Nil                => java.util.UUID.randomUUID().toString
             case other => sys.error(s"unknown create-node args: $other")
           }
-          graft.store.BulkMutations
-            .createNodes(withProp(g), Seq((id, p.hash)).toDF("id", "prop_hash"))
-            .save(path)
+          BulkMutations.createNodes(g, Seq((id, p.hash)).toDF("id", "prop_hash")).save(path)
           println(id)
       }
     case "delete-node" :: path :: "--id" :: id :: Nil =>
       val g = GraphStore.load(spark, path)
       val spark2 = spark
       import spark2.implicits._
-      graft.store.BulkMutations.gcOrphanProps(
-        graft.store.BulkMutations.deleteNodes(g, Seq(id).toDF("id"))).save(path)
+      BulkMutations.gcOrphanProps(BulkMutations.deleteNodes(g, Seq(id).toDF("id"))).save(path)
       println(s"deleted $id")
     // create-edge --out <srcId> --in <dstId>, property from stdin; prints
     // the edge hash
     case "create-edge" :: path :: "--out" :: src :: "--in" :: dst :: Nil =>
       val value = readStdin()
-      val p = rawProp(value)
+      val p = PropValue.raw(value)
       val g = GraphStore.load(spark, path)
       val spark2 = spark
       import spark2.implicits._
-      val withProps = graft.store.BulkMutations.createProperties(g,
-        Seq((p.hash, value, p.variant)).toDF("hash", "value", "schema_type"))
-      graft.store.BulkMutations.createEdges(withProps,
+      BulkMutations.createEdges(BulkMutations.createRawProperty(g, value),
         Seq((src, dst, p.hash)).toDF("src", "dst", "prop_hash")).save(path)
       println(graft.model.Hashing.edgeId(p.hash, src, dst))
     case other =>
@@ -199,12 +187,6 @@ object ZoeCli {
     * Console.withIn, defaults to System.in). */
   private def readStdin(): String =
     Iterator.continually(Console.in.read()).takeWhile(_ != -1).map(_.toChar).mkString
-
-  /** Raw-bytes property (reference GenericProperty, schema.rs:88-115): the
-    * key is the content hash of the bytes as-is. */
-  private def rawProp(value: String): graft.model.PropValue =
-    graft.model.PropValue("Raw", Some(value), Nil,
-      Some(graft.model.Hashing.sha256HexUpper(value)))
 
   /** Reference QueryResult JSON: vertices/edges as [id, propId] pairs (propId
     * always null, ql.rs:407), paths as [start, [[v,e]...], end]. Collects to

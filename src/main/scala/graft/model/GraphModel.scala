@@ -121,6 +121,11 @@ object PropValue {
     PropValue(variant, payload, Seq(schemaType(variant)))
 
   def schemaType(label: String): PropValue = PropValue("SchemaType", Some(label))
+
+  /** Raw-bytes property (reference GenericProperty, schema.rs:88-115): the
+    * key is the content hash of the bytes as-is. */
+  def raw(value: String): PropValue =
+    PropValue("Raw", Some(value), Nil, Some(Hashing.sha256HexUpper(value)))
 }
 
 /** The four graph tables. Everything is a plain DataFrame so Catalyst can

@@ -63,30 +63,20 @@ object GraphChange {
       createdEdges, deletedEdges, requiredProps, requiredRefs)
   }
 
-  /** Apply a change: deletes and modifications are anti-joins, inserts are
-    * unions; required properties and their nested() refs upsert
-    * content-addressed (dedup by hash). Safe on a target that has DIVERGED
-    * from the diff's `from`: created ids that already exist are replaced
-    * (the change's version wins — id uniqueness holds and the result still
-    * converges toward `to`) instead of silently duplicating rows. Run
-    * [[BulkMutations.gcOrphanProps]] afterwards to sweep orphans left by
-    * deletions. */
+  /** Apply a change through the [[BulkMutations]] write path: deleted,
+    * modified and created ids are dropped, then created and modified rows
+    * added; required properties and their nested() refs upsert
+    * content-addressed. Safe on a target that has DIVERGED from the diff's
+    * `from`: created ids that already exist are replaced (the change's
+    * version wins — id uniqueness holds and the result still converges
+    * toward `to`). Run [[BulkMutations.gcOrphanProps]] afterwards to sweep
+    * orphans left by deletions. */
   def apply(g: GraphStore, c: GraphChange): GraphStore = {
-    val vertices = g.vertices
-      .join(c.deletedNodes.select("id").unionByName(c.modifiedNodes.select("id"))
-          .unionByName(c.createdNodes.select("id")),
-        Seq("id"), "left_anti")
-      .unionByName(c.createdNodes.select("id", "prop_hash"))
-      .unionByName(c.modifiedNodes.select("id", "prop_hash"))
-    val edges = g.edges
-      .join(c.deletedEdges.select("edge_id").unionByName(c.createdEdges.select("edge_id")),
-        Seq("edge_id"), "left_anti")
-      .unionByName(c.createdEdges.select("edge_id", "src", "dst", "prop_hash"))
-    val props = g.props.unionByName(
-      c.requiredProps.join(g.props, Seq("hash"), "left_anti").dropDuplicates("hash"))
-    val refs = g.propRefs.unionByName(
-      c.requiredRefs.join(g.propRefs, Seq("parent_hash", "child_hash"), "left_anti")
-        .dropDuplicates("parent_hash", "child_hash"))
-    g.copy(vertices = vertices, edges = edges, props = props, propRefs = refs)
+    import BulkMutations.{add, drop}
+    val nodes = c.createdNodes.unionByName(c.modifiedNodes)
+    BulkMutations.createProperties(g, c.requiredProps, Some(c.requiredRefs)).copy(
+      vertices = add(drop(g.vertices, c.deletedNodes.unionByName(nodes), "id"), nodes, "id"),
+      edges = add(drop(g.edges, c.deletedEdges.unionByName(c.createdEdges), "edge_id"),
+        c.createdEdges, "edge_id"))
   }
 }

@@ -115,10 +115,39 @@ final class GraphBatch {
 }
 
 /** DataFrame-scale mutations: batch-first, no per-row driver round trips.
-  * Every check is a join; every write is a union/anti-join rebuild — the
-  * shape that survives 100 TB (SURVEY.md §7.4 decision 4).
+  * Every check is a join. Every write to a store table is `add` (`old ∪`
+  * a checkpointed delta) or `drop` (`old ⋉̸ keys`), so a write materializes
+  * only its change, and a table's plan stays below a constant however many
+  * batches the store takes without a save/load (SCALE.md, "Mutations").
   */
 object BulkMutations {
+
+  /** Plan leaves past which a write checkpoints the whole table: each write
+    * adds its delta or key set as leaves, and each pending drop is an
+    * anti-join that every read of the table runs again. */
+  private val MaxLeaves = 8
+
+  /** `table`, checkpointed whole once its plan has more than [[MaxLeaves]]
+    * leaves. It is hash-partitioned on `key` first: a union's partitions
+    * are the sum of its inputs', and a checkpoint of the bare union would
+    * carry every delta's partitions into each later scan. */
+  private def compact(table: DataFrame, key: Seq[String]): DataFrame =
+    if (table.queryExecution.analyzed.collectLeaves().size <= MaxLeaves) table
+    else checkpoint(table.repartition(key.map(col): _*))
+
+  /** `old` plus the rows of `rows` whose `key` it lacks, deduplicated on
+    * `key`: one delta, lazily checkpointed, which the first job that reads
+    * the table scans whole. The delta's plan reads `old` again; unioned as
+    * a plan, it would double the table's plan with every write. */
+  private[store] def add(old: DataFrame, rows: DataFrame, key: String*): DataFrame = {
+    val delta = rows.select(old.columns.map(col): _*)
+      .join(old, key, "left_anti").dropDuplicates(key)
+    compact(old.unionByName(checkpoint(delta, eager = false)), key)
+  }
+
+  /** `old` without the rows whose `key` matches a row of `keys`. */
+  private[store] def drop(old: DataFrame, keys: DataFrame, key: String*): DataFrame =
+    compact(old.join(keys, key, "left_anti"), key)
 
   /** Append nodes(id, prop_hash). Throws on any id collision with existing
     * nodes OR duplicate ids within the batch itself (NodeExists parity with
@@ -130,52 +159,54 @@ object BulkMutations {
     if (selfDup.nonEmpty) throw NodeExistsException(selfDup.head.getString(0))
     val clash = newNodes.join(g.vertices, Seq("id"), "left_semi").limit(1).collect()
     if (clash.nonEmpty) throw NodeExistsException(clash.head.getString(0))
-    g.copy(vertices = g.vertices.unionByName(newNodes.select("id", "prop_hash")))
+    g.copy(vertices = add(g.vertices, newNodes, "id"))
+  }
+
+  /** Repoint existing nodes to new properties: `updates(id, prop_hash)`.
+    * Fails naming a node that does not exist. The old properties stay until
+    * [[gcOrphanProps]] sweeps them; the new ones must already be stored. */
+  def updateNodes(g: GraphStore, updates: DataFrame): GraphStore = {
+    val missing = updates.select("id").join(g.vertices, Seq("id"), "left_anti").limit(1).collect()
+    require(missing.isEmpty, s"node ${missing.head.getString(0)} does not exist")
+    g.copy(vertices = add(drop(g.vertices, updates, "id"), updates, "id"))
   }
 
   /** Append properties(hash, value, schema_type) (+ refs), deduplicating by
     * content hash against existing rows — content-addressed upsert. */
   def createProperties(g: GraphStore, newProps: DataFrame,
-                       newRefs: Option[DataFrame] = None): GraphStore = {
-    val p = g.props.unionByName(
-      newProps.select("hash", "value", "schema_type")
-        .join(g.props, Seq("hash"), "left_anti")
-        .dropDuplicates("hash"))
-    val r = newRefs match {
-      case Some(nr) => g.propRefs.unionByName(
-        nr.select("parent_hash", "child_hash")
-          .join(g.propRefs, Seq("parent_hash", "child_hash"), "left_anti")
-          .dropDuplicates("parent_hash", "child_hash"))
-      case None => g.propRefs
-    }
-    g.copy(props = p, propRefs = r)
+                       newRefs: Option[DataFrame] = None): GraphStore =
+    g.copy(props = add(g.props, newProps, "hash"),
+      propRefs = newRefs.fold(g.propRefs)(add(g.propRefs, _, "parent_hash", "child_hash")))
+
+  /** Store the raw-bytes property [[PropValue.raw]]`(value)`: its stored
+    * value is `value` as given, not a JSON encoding. */
+  def createRawProperty(g: GraphStore, value: String): GraphStore = {
+    val p = PropValue.raw(value)
+    val spark = g.props.sparkSession
+    import spark.implicits._
+    createProperties(g, Seq((p.hash, value, p.variant)).toDF("hash", "value", "schema_type"))
   }
 
   /** Append edges(src, dst, prop_hash); edge_id is derived column-level and
     * duplicates (same content) collapse. Endpoint existence enforced with
     * semi-joins, mirroring the reference's read_node failure. */
-  def createEdges(g: GraphStore, newEdges: DataFrame,
-                  validateEndpoints: Boolean = true): GraphStore = {
-    val withId = newEdges.select(
+  def createEdges(g: GraphStore, newEdges: DataFrame): GraphStore = {
+    val ids = g.vertices.select(col("id"))
+    val valid = newEdges
+      .join(ids.withColumnRenamed("id", "src"), Seq("src"), "left_semi")
+      .join(ids.withColumnRenamed("id", "dst"), Seq("dst"), "left_semi")
+    g.copy(edges = add(g.edges, valid.select(
       Hashing.edgeIdCol(col("prop_hash"), col("src"), col("dst")).as("edge_id"),
-      col("src"), col("dst"), col("prop_hash"))
-    val validated = if (validateEndpoints) {
-      val ids = g.vertices.select(col("id"))
-      withId
-        .join(ids.withColumnRenamed("id", "src"), Seq("src"), "left_semi")
-        .join(ids.withColumnRenamed("id", "dst"), Seq("dst"), "left_semi")
-    } else withId
-    g.copy(edges = g.edges.unionByName(
-      validated.join(g.edges, Seq("edge_id"), "left_anti").dropDuplicates("edge_id")))
+      col("src"), col("dst"), col("prop_hash")), "edge_id"))
   }
 
   /** Remove nodes by id; incident edges are left dangling (reference parity,
     * kv_graph_store.rs:584-602). Run [[gcOrphanProps]] afterwards to sweep. */
   def deleteNodes(g: GraphStore, ids: DataFrame): GraphStore =
-    g.copy(vertices = g.vertices.join(ids.select("id"), Seq("id"), "left_anti"))
+    g.copy(vertices = drop(g.vertices, ids, "id"))
 
   def deleteEdges(g: GraphStore, edgeIds: DataFrame): GraphStore =
-    g.copy(edges = g.edges.join(edgeIds.select("edge_id"), Seq("edge_id"), "left_anti"))
+    g.copy(edges = drop(g.edges, edgeIds, "edge_id"))
 
   /** The reference's reference-counting GC (backlink delete cascade,
     * kv_graph_store.rs:736-752) as a delta sweep to the fixpoint: a prop
@@ -187,7 +218,8 @@ object BulkMutations {
     * action that materializes its orphans: round 1 the props without a
     * backlink, round r+1 the children of round r's orphans left without one.
     * Orphan sets scale with the deletions and never repeat a hash; rounds =
-    * cascade depth + 1. All are local checkpoints the returned store reads
+    * cascade depth + 1; prop_refs then drops the refs whose parent is no
+    * surviving prop. All are local checkpoints the returned store reads
     * and releases with it; nothing enters the session's cache.
     */
   def gcOrphanProps(g: GraphStore): GraphStore = {
@@ -202,12 +234,14 @@ object BulkMutations {
     while (dead.count() > 0) {
       val parents = dead.select(col("hash").as("parent"))
       val children = links.join(parents, Seq("parent"), "left_semi").select("hash")
-      props = props.join(dead, Seq("hash"), "left_anti")
+      props = drop(props, dead, "hash")
       links = links.join(parents, Seq("parent"), "left_anti")
       dead = checkpoint(children.join(links, Seq("hash"), "left_anti"), eager = false)
     }
-    g.copy(props = props, propRefs = links.where(col("parent").isNotNull)
-      .select(col("parent").as("parent_hash"), col("hash").as("child_hash")))
+    // lazy: the first read of prop_refs scans it whole
+    val orphanParents = checkpoint(g.propRefs.select("parent_hash")
+      .join(props.select(col("hash").as("parent_hash")), Seq("parent_hash"), "left_anti"), eager = false)
+    g.copy(props = props, propRefs = drop(g.propRefs, orphanParents, "parent_hash"))
   }
 
   /** CLI get_or_create semantics (cli_helpers.rs:118-174): if the property is
@@ -221,7 +255,7 @@ object BulkMutations {
         val id = java.util.UUID.randomUUID().toString
         val spark = g.vertices.sparkSession
         import spark.implicits._
-        val withProps = BulkMutations.createProperties(g,
+        val withProps = createProperties(g,
           p.withNested.map(pv => (pv.hash, pv.json, pv.variant)).distinct.toDF("hash", "value", "schema_type"),
           Some(p.withNested.flatMap(pv => pv.nested.map(c => (pv.hash, c.hash))).distinct.toDF("parent_hash", "child_hash")))
         (createNodes(withProps, Seq((id, h)).toDF("id", "prop_hash")), id)

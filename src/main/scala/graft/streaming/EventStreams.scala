@@ -527,7 +527,8 @@ object EventStreams {
     * exactly-once EFFECTS without exactly-once delivery.
     *
     * State lives in the store itself (no streaming state at all); each
-    * micro-batch is a load→mutate→save on the store layout, which
+    * micro-batch is a load, one materialized delta per table (see
+    * [[graft.store.BulkMutations]]) and a save, which
     * `GraphStore.save` stages through `._tmp` directories so a batch never
     * overwrites the files its own plan is reading. At cluster scale the
     * save becomes an append of bucketed deltas instead of a rewrite. */

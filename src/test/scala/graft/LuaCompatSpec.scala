@@ -133,6 +133,24 @@ class LuaCompatSpec extends SparkSuite {
     assert(graft.model.GraphStore.load(spark, dir).edges.count() == 0)
   }
 
+  test("a session of 25 create_node calls and a query persists every node and property") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-lua-many").toString
+    graft.model.GraphStore.empty(spark).save(dir)
+    val values = (1 to 25).map(i => s"node$i")
+    val bout = new java.io.ByteArrayOutputStream()
+    Console.withOut(new java.io.PrintStream(bout, true, "UTF-8")) {
+      LuaCompat.run(spark, dir,
+        values.map(v => s"db:create_node('$v')").mkString("", "\n", "\ndb:query(vq_all())\n"))
+    }
+    assert(bout.toString("UTF-8").trim.count(_ == '[') >= 25) // every vertex rendered
+    val g = graft.model.GraphStore.load(spark, dir)
+    val rawHashes = values.map(graft.model.PropValue.raw(_).hash).toSet
+    assert(g.vertices.count() == 25)
+    assert(g.vertices.select("prop_hash").collect().map(_.getString(0)).toSet == rawHashes)
+    assert(g.props.select("hash", "value").collect().map(r => (r.getString(0), r.getString(1))).toSet ==
+      values.map(v => (graft.model.PropValue.raw(v).hash, v)).toSet)
+  }
+
   test("constructs outside the reference subset fail with a position") {
     val e = intercept[IllegalArgumentException] {
       runScript("for i=1,10 do db:query(vq_all()) end")

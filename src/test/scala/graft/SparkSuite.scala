@@ -3,7 +3,7 @@ package graft
 import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.GraftSchedulerProbe
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** One shared local session for the whole test JVM. */
@@ -43,4 +43,8 @@ trait SparkSuite extends AnyFunSuite {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevBc)
     }
   }
+
+  /** The node count of `df`'s analyzed plan: the one measure every
+    * plan-size assertion uses. */
+  def planNodes(df: DataFrame): Int = df.queryExecution.analyzed.collect { case n => n }.size
 }

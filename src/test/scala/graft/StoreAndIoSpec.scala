@@ -23,8 +23,7 @@ class StoreAndIoSpec extends SparkSuite {
     intercept[NodeExistsException] {
       BulkMutations.createNodes(g, Seq(("a", p2.hash)).toDF("id", "prop_hash"))
     }
-    g = BulkMutations.createEdges(g, Seq(("a", "b", PropValue("Link").hash)).toDF("src", "dst", "prop_hash"),
-      validateEndpoints = false)
+    g = BulkMutations.createEdges(g, Seq(("a", "b", PropValue("Link").hash)).toDF("src", "dst", "prop_hash"))
     assert(g.edges.head().getString(0) ==
       graft.model.Hashing.edgeId(PropValue("Link").hash, "a", "b"))
     // endpoint validation drops edges to missing nodes
@@ -147,6 +146,43 @@ class StoreAndIoSpec extends SparkSuite {
     assert(jobs <= 5, s"sweep spent $jobs jobs for 3 rounds + the held set")
     assert(hashes(swept) == (kept.withNested :+ link).map(_.hash).toSet)
     assert(refPairs(swept) == Set((kept.hash, PropValue.schemaType("Thing").hash)))
+  }
+
+  test("20 mutation batches without a save: plans stay bounded, batch 20 keeps batch 2's pace") {
+    // per batch 5 props, 5 nodes, 1 edge, 1 node delete, then the sweep;
+    // a GraphBatch replays the same operations as the reference
+    val link = PropValue("Link")
+    val b = new GraphBatch
+    var live = (0 until 20).map(i => b.createNode(s"s$i", PropValue.typed("Thing", Some(s"s$i"))))
+    var g = b.toStore(spark)
+    val walls = (1 to 20).map { batch =>
+      val ps = (0 until 5).map(i => PropValue.typed("Thing", Some(s"b$batch/$i")))
+      val ids = ps.indices.map(i => s"b$batch/$i")
+      ids.zip(ps).foreach { case (id, p) => b.createNode(id, p) }
+      val (src, dst) = (ids.head, live(batch % live.size))
+      b.createEdge(src, dst, link)
+      live = live ++ ids
+      val gone = live((batch * 7) % live.size)
+      b.deleteNode(gone)
+      live = live.filterNot(_ == gone)
+      val t0 = System.nanoTime()
+      g = BulkMutations.createProperties(g, propRows(ps :+ link), Some(refRows(ps)))
+      g = BulkMutations.createNodes(g, ids.zip(ps.map(_.hash)).toDF("id", "prop_hash"))
+      g = BulkMutations.createEdges(g, Seq((src, dst, link.hash)).toDF("src", "dst", "prop_hash"))
+      g = BulkMutations.gcOrphanProps(BulkMutations.deleteNodes(g, Seq(gone).toDF("id")))
+      val wall = (System.nanoTime() - t0) / 1e9
+      Seq("vertices" -> g.vertices, "edges" -> g.edges, "props" -> g.props, "prop_refs" -> g.propRefs)
+        .foreach { case (name, df) =>
+          val n = planNodes(df)
+          assert(n < 40, s"batch $batch: the $name plan has $n nodes")
+        }
+      wall
+    }
+    assert(walls(19) < 2 * walls(1), s"batch walls (s): ${walls.map(w => f"$w%.2f").mkString(" ")}")
+    val want = b.toStore(spark)
+    assert(hashes(g) == hashes(want))
+    assert(refPairs(g) == refPairs(want))
+    assert(g.vertices.count() == live.size && g.edges.count() == 20)
   }
 
 

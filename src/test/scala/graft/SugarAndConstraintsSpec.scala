@@ -85,6 +85,18 @@ class SugarAndConstraintsSpec extends SparkSuite {
     assert(g.props.collect().map(_.getString(1)).toSeq == Seq("v2"))
   }
 
+  test("CLI create-node stores a raw property as given under every flag") {
+    import graft.io.ZoeCli
+    val dir = java.nio.file.Files.createTempDirectory("graft-cli3").toString
+    ZoeCli.run(spark, List("init", dir))
+    def withStdin(text: String)(f: => Unit): Unit =
+      Console.withIn(new java.io.ByteArrayInputStream(text.getBytes))(f)
+    withStdin("v1") { ZoeCli.run(spark, List("create-node", dir, "--id", "n1")) }
+    withStdin("v2") { ZoeCli.run(spark, List("create-node", dir, "--get-or-create")) }
+    val g = graft.model.GraphStore.load(spark, dir)
+    assert(g.props.select("value").collect().map(_.getString(0)).toSet == Set("v1", "v2"))
+  }
+
   test("weighted graph surface extracts numeric weights from edge props") {
     import graft.analytics.GraphAnalytics
     import graft.model.PropValue
