@@ -184,8 +184,8 @@ object GraphQueries {
   // the 3×8 interleaved-leiden partition over the same co-purchase
   // graph, memoized like louvainPartition: the shared input of the
   // graph_leiden and graph_leiden_quality entries (VERDICT r15 #4 —
-  // memoize once consumers grow past one). leiden() checkpoints its
-  // final mapping, so the cached frame is a cheap scan. graph_leiden is
+  // memoize once consumers grow past one). leiden() returns one join of
+  // two checkpoints, so the cached frame is a cheap scan. graph_leiden is
   // timed cold; the quality entry is staged with BOTH partitions and
   // times two modularity rollups, not two ascents.
   private val leidenPartition = Memo("leiden_partition", Memo.Shared,

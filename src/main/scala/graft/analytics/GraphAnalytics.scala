@@ -1068,10 +1068,8 @@ object GraphAnalytics {
     * joins are equi-joins on vertex keys; corner counts are a
     * map-side-combinable sum over the three exploded corners. */
   def triangleCountDF(g: GraphStore, toLong: Column => Column): DataFrame = {
-    val e0 = g.edges.select(toLong(col("src")).as("u"), toLong(col("dst")).as("v"))
-    using(e0.where(col("u") =!= col("v"))
-        .select(least(col("u"), col("v")).as("a"), greatest(col("u"), col("v")).as("b"))
-        .distinct()) { canon =>
+    using(canonicalPairs(
+        g.edges.select(toLong(col("src")).as("a"), toLong(col("dst")).as("b")))) { canon =>
       val (corners, _) = triangleCorners(canon)
       longVerts(g, toLong).join(corners, Seq("vid"), "left")
         .select(col("id"), coalesce(col("__n"), lit(0L)).as("triangles"))
@@ -1096,12 +1094,8 @@ object GraphAnalytics {
     * for isolated members. Returns (vid, label). */
   def refineCommunities(labels: DataFrame, symEdges: DataFrame): DataFrame = {
     val lab = checkpoint(labels.select(col("vid"), col("label")))
-    val intra = symEdges
-      .join(lab.select(col("vid").as("a"), col("label").as("__la")), Seq("a"))
-      .join(lab.select(col("vid").as("b"), col("label").as("__lb")), Seq("b"))
-      .where(col("__la") === col("__lb"))
-      .select(col("a"), col("b"))
-    val frags = graft.pipeline.ConnectedComponents.labels(intra)
+    val frags = graft.pipeline.ConnectedComponents.labels(
+      intraCommunity(symEdges, lab).select(col("a"), col("b")))
     lab.join(frags.select(col("id").as("vid"), col("cluster")), Seq("vid"), "left")
       .select(col("vid"), coalesce(col("cluster"), col("vid")).as("label"))
   }
@@ -1115,20 +1109,9 @@ object GraphAnalytics {
     * id-oriented form paid C(deg_hub, 2) whenever the hub drew the low
     * id. */
   private[graft] def trussWedges(e: DataFrame): (DataFrame, DataFrame) = {
-    val deg = e.select(col("a").as("vid")).unionByName(e.select(col("b").as("vid")))
-      .groupBy("vid").agg(count(lit(1)).as("__deg"))
-    val keyed = e
-      .join(deg.select(col("vid").as("a"), col("__deg").as("__da")), Seq("a"))
-      .join(deg.select(col("vid").as("b"), col("__deg").as("__db")), Seq("b"))
-    val aLower = struct(col("__da"), col("a")) < struct(col("__db"), col("b"))
-    // oriented: s→t with (deg, id)-struct(s) < struct(t); __kt carries
-    // t's sort key so the wedge join can order (t1, t2) without a
-    // second degree lookup. Materialized once — it feeds three scans.
-    val oriented = checkpoint(keyed.select(
-      when(aLower, col("a")).otherwise(col("b")).as("s"),
-      when(aLower, col("b")).otherwise(col("a")).as("t"),
-      when(aLower, struct(col("__db").as("d"), col("b").as("v")))
-        .otherwise(struct(col("__da").as("d"), col("a").as("v"))).as("__kt")))
+    // __kt lets the wedge join order (t1, t2) without a second degree
+    // lookup. Materialized once — it feeds three scans.
+    val oriented = checkpoint(orientByDegree(e)._1)
     val wedges = oriented.select(col("s"), col("t").as("t1"), col("__kt").as("__k1"))
       .join(oriented.select(col("s"), col("t").as("t2"), col("__kt").as("__k2")), Seq("s"))
       .where(col("__k1") < col("__k2"))
@@ -1159,11 +1142,7 @@ object GraphAnalytics {
     * shrink the edge set monotonically. */
   def kTruss(pairs: DataFrame, k: Int, maxRounds: Int = 50): DataFrame = {
     require(k >= 3, s"need k >= 3; got $k")
-    val canon = pairs.select(col("a").cast("long").as("u"), col("b").cast("long").as("v"))
-      .where(col("u") =!= col("v"))
-      .select(least(col("u"), col("v")).as("a"), greatest(col("u"), col("v")).as("b"))
-      .distinct()
-    Superstep.fixpoint(canon, maxRounds, "k-truss peeling") { (e, _) =>
+    Superstep.fixpoint(canonicalPairs(pairs), maxRounds, "k-truss peeling") { (e, _) =>
       val (oriented, wedges) = trussWedges(e.select("a", "b"))
       // the closing edge is oriented exactly t1→t2 (both endpoints above
       // the apex, t1 below t2), so one semi-probe admits each triangle once
@@ -1183,15 +1162,8 @@ object GraphAnalytics {
     * canonicalized (a < b, distinct, loop-free) edge table. See
     * [[triangleCountDF]] for the O(m^1.5) degree-ordered wedge bound. */
   private def triangleCorners(canon: DataFrame): (DataFrame, DataFrame) = {
-    val deg = canon.select(col("a").as("vid")).unionByName(canon.select(col("b").as("vid")))
-      .groupBy("vid").agg(count(lit(1)).as("__deg"))
-    val keyed = canon
-      .join(deg.select(col("vid").as("a"), col("__deg").as("__da")), Seq("a"))
-      .join(deg.select(col("vid").as("b"), col("__deg").as("__db")), Seq("b"))
-    val aLower = struct(col("__da"), col("a")) < struct(col("__db"), col("b"))
-    val oriented = checkpoint(keyed.select(
-      when(aLower, col("a")).otherwise(col("b")).as("s"),
-      when(aLower, col("b")).otherwise(col("a")).as("t")))
+    val (byDegree, deg) = orientByDegree(canon)
+    val oriented = checkpoint(byDegree.select("s", "t"))
     // wedges from each apex s; the probe on the ORIENTED (t1 -> t2)
     // edge admits exactly one of the pair's two orderings
     val wedges = oriented
@@ -1205,6 +1177,33 @@ object GraphAnalytics {
       .groupBy("vid").agg(count(lit(1)).as("__n"))
     (corners, deg)
   }
+
+  /** The degree orientation of [[triangleCorners]] and [[trussWedges]]
+    * over canonical edges (a, b): every edge points from its lower
+    * (degree, id) endpoint `s` to its higher one `t`, and `__kt` is t's
+    * (degree, id) key. Returns (s, t, __kt) edges and the degrees
+    * (vid, __deg). */
+  private def orientByDegree(e: DataFrame): (DataFrame, DataFrame) = {
+    val deg = e.select(col("a").as("vid")).unionByName(e.select(col("b").as("vid")))
+      .groupBy("vid").agg(count(lit(1)).as("__deg"))
+    val keyed = e
+      .join(deg.select(col("vid").as("a"), col("__deg").as("__da")), Seq("a"))
+      .join(deg.select(col("vid").as("b"), col("__deg").as("__db")), Seq("b"))
+    val aLower = struct(col("__da"), col("a")) < struct(col("__db"), col("b"))
+    (keyed.select(
+      when(aLower, col("a")).otherwise(col("b")).as("s"),
+      when(aLower, col("b")).otherwise(col("a")).as("t"),
+      when(aLower, struct(col("__db").as("d"), col("b").as("v")))
+        .otherwise(struct(col("__da").as("d"), col("a").as("v"))).as("__kt")), deg)
+  }
+
+  /** The edges of `edges` (a, b) whose endpoints share a community in
+    * `lab` (vid, label), that community riding along as `__la`. */
+  private def intraCommunity(edges: DataFrame, lab: DataFrame): DataFrame =
+    edges
+      .join(lab.select(col("vid").as("a"), col("label").as("__la")), Seq("a"))
+      .join(lab.select(col("vid").as("b"), col("label").as("__lb")), Seq("b"))
+      .where(col("__la") === col("__lb"))
 
   /** One SYNCHRONOUS Louvain local-move round (Blondel et al.'s phase-1
     * step, synchronized so it is deterministic and oracle-replayable):
@@ -1271,17 +1270,91 @@ object GraphAnalytics {
 
   /** Optimization-round tooling (graft.PlanDump): the level-1 loop-body
     * plan of [[louvain]]/[[leiden]] on a caller-supplied symmetrized edge
-    * table — the plan executed (maxLevels × maxRounds) times per ascent,
-    * with the level inputs prepared exactly as [[louvain]] prepares them. */
+    * table — the plan executed (maxLevels × maxRounds) times per ascent. */
   private[graft] def louvainRoundPlanForDump(symEdges: DataFrame): DataFrame = {
-    val hasW = symEdges.columns.contains("w")
-    val e = checkpoint(symEdges.select(col("a").cast("long").as("a"),
-      col("b").cast("long").as("b"),
-      (if (hasW) col("w").cast("long") else lit(1L)).as("w")))
+    val e = ascentEdges(symEdges)
+    val (deg, bigM, lab) = levelStart(e, None)
+    louvainParityRound(lab, e, deg, bigM, 0)
+  }
+
+  /** The community ascent's level-1 edges: the symmetrized (a, b[, w])
+    * table as longs, w = 1 when the column is absent. */
+  private def ascentEdges(symEdges: DataFrame): DataFrame = {
+    val w = if (symEdges.columns.contains("w")) col("w").cast("long") else lit(1L)
+    checkpoint(symEdges.select(col("a").cast("long").as("a"),
+      col("b").cast("long").as("b"), w.as("w")))
+  }
+
+  /** One ascent level's constants over its edges `e` (a, b, w): the
+    * weighted degrees (vid, __kv), the total weight (__M), and the
+    * starting labels (vid, label) — `init`, else every vertex its own
+    * community. */
+  private def levelStart(e: DataFrame,
+                         init: Option[DataFrame]): (DataFrame, DataFrame, DataFrame) = {
     val deg = checkpoint(e.groupBy(col("a").as("vid")).agg(sum("w").as("__kv")))
     val bigM = checkpoint(e.agg(sum("w").as("__M")))
-    val lab = checkpoint(deg.select(col("vid"), col("vid").as("label")))
-    louvainParityRound(lab, e, deg, bigM, 0)
+    (deg, bigM, checkpoint(init.getOrElse(deg.select(col("vid"), col("vid").as("label")))))
+  }
+
+  /** `map` (vid, label) followed by `next` (vid, label), which relabels
+    * map's labels; a null `map` is the identity. */
+  private def composeLabels(map: DataFrame, next: DataFrame): DataFrame =
+    if (map == null) next
+    else map.select(col("vid"), col("label").as("__mid"))
+      .join(next.select(col("vid").as("__mid"), col("label")), Seq("__mid"))
+      .select("vid", "label")
+
+  /** The coarse graph of `e` (a, b, w) over `groups` (vid, label): one
+    * supervertex per label, edge weights summed, and intra-group weight
+    * on the diagonal, so degree sums and total weight are preserved. */
+  private def coarsen(e: DataFrame, groups: DataFrame): DataFrame =
+    checkpoint(
+      e.join(groups.select(col("vid").as("a"), col("label").as("__ca")), Seq("a"))
+        .join(groups.select(col("vid").as("b"), col("label").as("__cb")), Seq("b"))
+        .groupBy(col("__ca").as("a"), col("__cb").as("b"))
+        .agg(sum("w").as("w")))
+
+  /** The multi-level ascent [[louvain]] and [[leiden]] share. Each level
+    * runs the local-move phase on its edges `e`: parity rounds of
+    * [[louvainParityRound]] until two consecutive zero-move rounds or
+    * `maxRounds`, each round one eager checkpoint plus one moved-count
+    * probe. Below `maxLevels`, `next(e, lab)` then decides on the level's
+    * labels `lab`: None ends the ascent; Some((groups, init)) coarsens on
+    * `groups` (vid, label) and starts the next level from `init` (None:
+    * singletons). Returns (vid, label): the last level's labels composed
+    * onto every ORIGINAL vertex. */
+  private def ascend(symEdges: DataFrame, maxLevels: Int, maxRounds: Int)
+                    (next: (DataFrame, DataFrame) => Option[(DataFrame, Option[DataFrame])]): DataFrame = {
+    require(maxLevels >= 1, s"need maxLevels >= 1; got $maxLevels")
+    require(maxRounds >= 2, s"need maxRounds >= 2; got $maxRounds")
+    var e = ascentEdges(symEdges)
+    var map: DataFrame = null // (vid, label): original vid -> this level's vertex
+    var init: Option[DataFrame] = None
+    var lab: DataFrame = null
+    var level = 0
+    var climbing = true
+    while (climbing) {
+      level += 1
+      val (deg, bigM, start) = levelStart(e, init)
+      lab = start
+      var round = 0
+      var zeroStreak = 0
+      while (round < maxRounds && zeroStreak < 2) {
+        val moves = checkpoint(louvainParityRound(lab, e, deg, bigM, round % 2))
+        val moved = moves.agg(coalesce(sum("__moved"), lit(0L))).head().getLong(0)
+        zeroStreak = if (moved == 0L) zeroStreak + 1 else 0
+        lab = moves.select("vid", "label")
+        round += 1
+      }
+      val coarse = if (level < maxLevels) next(e, lab) else None
+      coarse.foreach { case (groups, nextInit) =>
+        map = checkpoint(composeLabels(map, groups))
+        e = coarsen(e, groups)
+        init = nextInit
+      }
+      climbing = coarse.nonEmpty
+    }
+    composeLabels(map, lab)
   }
 
   /** One parity-restricted weighted local-move round for [[louvain]]:
@@ -1374,46 +1447,12 @@ object GraphAnalytics {
     * surviving community pair, so level cost drops geometrically (the
     * level-1 rounds dominate). Driver holds only per-round moved-counts
     * and the loop bounds. */
-  def louvain(symEdges: DataFrame, maxLevels: Int = 3, maxRounds: Int = 12): DataFrame = {
-    require(maxLevels >= 1, s"need maxLevels >= 1; got $maxLevels")
-    require(maxRounds >= 2, s"need maxRounds >= 2; got $maxRounds")
-    val hasW = symEdges.columns.contains("w")
-    var e = checkpoint(symEdges.select(col("a").cast("long").as("a"),
-      col("b").cast("long").as("b"),
-      (if (hasW) col("w").cast("long") else lit(1L)).as("w")))
-    var mapping: DataFrame = null
-    var level = 0
-    var levelMoved = true
-    while (level < maxLevels && levelMoved) {
-      val deg = checkpoint(e.groupBy(col("a").as("vid")).agg(sum("w").as("__kv")))
-      val bigM = checkpoint(e.agg(sum("w").as("__M")))
-      var lab = checkpoint(deg.select(col("vid"), col("vid").as("label")))
-      var round = 0
-      var zeroStreak = 0
-      while (round < maxRounds && zeroStreak < 2) {
-        val next = checkpoint(louvainParityRound(lab, e, deg, bigM, round % 2))
-        val moved = next.agg(coalesce(sum("__moved"), lit(0L))).head().getLong(0)
-        zeroStreak = if (moved == 0L) zeroStreak + 1 else 0
-        lab = next.select("vid", "label")
-        round += 1
-      }
-      levelMoved = lab.where(col("label") =!= col("vid")).limit(1).count() > 0
-      mapping = checkpoint(
-        if (mapping == null) lab
-        else mapping.select(col("vid"), col("label").as("__mid"))
-          .join(lab.select(col("vid").as("__mid"), col("label")), Seq("__mid"))
-          .select("vid", "label"))
-      if (levelMoved && level + 1 < maxLevels) {
-        e = checkpoint(
-          e.join(lab.select(col("vid").as("a"), col("label").as("__ca")), Seq("a"))
-            .join(lab.select(col("vid").as("b"), col("label").as("__cb")), Seq("b"))
-            .groupBy(col("__ca").as("a"), col("__cb").as("b"))
-            .agg(sum("w").as("w")))
-      }
-      level += 1
-    }
-    mapping
-  }
+  def louvain(symEdges: DataFrame, maxLevels: Int = 3, maxRounds: Int = 12): DataFrame =
+    checkpoint(ascend(symEdges, maxLevels, maxRounds) { (_, lab) =>
+      // a level that moves nothing out of singletons ends the ascent
+      if (lab.where(col("label") =!= col("vid")).limit(1).count() > 0) Some((lab, None))
+      else None
+    })
 
   /** TRUE Leiden schedule (Traag, Waltman & van Eck 2019,
     * arXiv:1810.08473 §III — deterministic connectivity-refinement
@@ -1430,10 +1469,12 @@ object GraphAnalytics {
     * every coarse level above them had ascended on a broken base.)
     * Refinement is the connectivity split — Traag's refinement phase
     * restricted to the guarantee Leiden is named for, kept deterministic
-    * so the oracle can replay it; the move comparator, tie-breaks,
-    * parity schedule and per-level round caps are exactly [[louvain]]'s,
-    * so a fixed (maxLevels × maxRounds) CTE unroll replays the run
-    * bit-for-bit. Returns (vid, label): the top-level COMMUNITY of every
+    * so the oracle can replay it. Both schedules run the one level loop
+    * [[ascend]] (set up by [[levelStart]], coarsened by [[coarsen]]), so
+    * the move comparator ([[louvainParityRound]]), tie-breaks, parity
+    * schedule and per-level round caps are [[louvain]]'s by
+    * construction, and a fixed (maxLevels × maxRounds) CTE unroll
+    * replays the run bit-for-bit. Returns (vid, label): the top-level COMMUNITY of every
     * ORIGINAL vertex (communities, like [[louvain]] — compose
     * [[refineCommunities]] for a final connectivity guarantee).
     *
@@ -1455,57 +1496,20 @@ object GraphAnalytics {
     * modularity on the probe graph (the `graph_leiden_quality` gate row
     * pins Q(leiden) ≥ Q(louvain) exactly), plus the connected-community
     * guarantee the raw ascent lacks. */
-  def leiden(symEdges: DataFrame, maxLevels: Int = 3, maxRounds: Int = 8): DataFrame = {
-    require(maxLevels >= 1, s"need maxLevels >= 1; got $maxLevels")
-    require(maxRounds >= 2, s"need maxRounds >= 2; got $maxRounds")
-    val hasW = symEdges.columns.contains("w")
-    var e = checkpoint(symEdges.select(col("a").cast("long").as("a"),
-      col("b").cast("long").as("b"),
-      (if (hasW) col("w").cast("long") else lit(1L)).as("w")))
-    var map: DataFrame = null  // (vid, cur): original vid -> current-level vertex
-    var init: DataFrame = null // (vid, label): this level's starting communities
-    var lab: DataFrame = null
-    for (level <- 1 to maxLevels) {
-      val deg = checkpoint(e.groupBy(col("a").as("vid")).agg(sum("w").as("__kv")))
-      val bigM = checkpoint(e.agg(sum("w").as("__M")))
-      lab = checkpoint(
-        if (init == null) deg.select(col("vid"), col("vid").as("label")) else init)
-      var round = 0
-      var zeroStreak = 0
-      while (round < maxRounds && zeroStreak < 2) {
-        val next = checkpoint(louvainParityRound(lab, e, deg, bigM, round % 2))
-        val moved = next.agg(coalesce(sum("__moved"), lit(0L))).head().getLong(0)
-        zeroStreak = if (moved == 0L) zeroStreak + 1 else 0
-        lab = next.select("vid", "label")
-        round += 1
-      }
-      if (level < maxLevels) {
-        // refine on the MOVE-phase partition (self-loops excluded: the
-        // diagonal carries coarse intra WEIGHT, not adjacency)
-        val frag = checkpoint(
-          refineCommunities(lab, e.where(col("a") =!= col("b")).select("a", "b"))
-            .withColumnRenamed("label", "__frag"))
-        // every fragment starts the next level in its HOME community —
-        // fragments never straddle communities, so members agree on the
-        // label (min is determinism belt-and-braces, not a choice)
-        init = checkpoint(
-          frag.join(lab, Seq("vid"))
-            .groupBy(col("__frag").as("vid")).agg(min("label").as("label")))
-        map = checkpoint(
-          if (map == null) frag.select(col("vid"), col("__frag").as("cur"))
-          else map.join(frag.select(col("vid").as("cur"), col("__frag")), Seq("cur"))
-            .select(col("vid"), col("__frag").as("cur")))
-        e = checkpoint(
-          e.join(frag.select(col("vid").as("a"), col("__frag").as("__fa")), Seq("a"))
-            .join(frag.select(col("vid").as("b"), col("__frag").as("__fb")), Seq("b"))
-            .groupBy(col("__fa").as("a"), col("__fb").as("b"))
-            .agg(sum("w").as("w")))
-      }
+  def leiden(symEdges: DataFrame, maxLevels: Int = 3, maxRounds: Int = 8): DataFrame =
+    ascend(symEdges, maxLevels, maxRounds) { (e, lab) =>
+      // refine on the MOVE-phase partition (self-loops excluded: the
+      // diagonal carries coarse intra WEIGHT, not adjacency)
+      val frag = checkpoint(
+        refineCommunities(lab, e.where(col("a") =!= col("b")).select("a", "b")))
+      // every fragment starts the next level in its HOME community —
+      // fragments never straddle communities, so members agree on the
+      // label (min is determinism belt-and-braces, not a choice)
+      val home = checkpoint(
+        frag.select(col("vid"), col("label").as("__frag")).join(lab, Seq("vid"))
+          .groupBy(col("__frag").as("vid")).agg(min("label").as("label")))
+      Some((frag, Some(home)))
     }
-    if (map == null) lab
-    else map.join(lab.select(col("vid").as("cur"), col("label")), Seq("cur"))
-      .select("vid", "label")
-  }
 
   /** Whole-partition Newman modularity in ONE exact-integer pass:
     * with M = directed edge count, E_c = intra-community directed edge
@@ -1533,10 +1537,7 @@ object GraphAnalytics {
       .agg(sum(coalesce(col("__deg"), lit(0L))).as("__dsum"))
     val parts = perC.agg(count(lit(1)).as("n_communities"),
       sum(col("__dsum").cast(dec) * col("__dsum").cast(dec)).as("__dsq"))
-    val internal = symEdges
-      .join(lab.select(col("vid").as("a"), col("label").as("__la")), Seq("a"))
-      .join(lab.select(col("vid").as("b"), col("label").as("__lb")), Seq("b"))
-      .where(col("__la") === col("__lb"))
+    val internal = intraCommunity(symEdges, lab)
       .agg(count(lit(1)).as("internal_directed"))
     val m = symEdges.agg(count(lit(1)).as("__M"))
     parts.crossJoin(broadcast(internal)).crossJoin(broadcast(m))
@@ -1548,7 +1549,8 @@ object GraphAnalytics {
   }
 
   /** Per-vertex local clustering coefficient over an undirected edge
-    * table (a, b) (any orientation; duplicates and self-loops tolerated):
+    * table (a, b) (any orientation and numeric ids, read as
+    * [[canonicalPairs]]; duplicates and self-loops tolerated):
     * c(v) = triangles(v) / (deg(v) choose 2) in exact integer micro-units
     * — how close each vertex's neighborhood is to a clique, the classic
     * small-world / community-structure signal. Vertices with deg < 2
@@ -1560,10 +1562,7 @@ object GraphAnalytics {
     * in > 4.6e12 triangles). Returns (vid, degree, triangles,
     * coeff_micro). */
   def clusteringCoefficients(edges: DataFrame): DataFrame = {
-    val canon = checkpoint(edges.select(col("a"), col("b")).where(col("a") =!= col("b"))
-      .select(least(col("a"), col("b")).as("a"), greatest(col("a"), col("b")).as("b"))
-      .distinct())
-    val (corners, deg) = triangleCorners(canon)
+    val (corners, deg) = triangleCorners(checkpoint(canonicalPairs(edges)))
     deg.join(corners, Seq("vid"), "left")
       .select(col("vid"), col("__deg").as("degree"),
         coalesce(col("__n"), lit(0L)).as("triangles"))
@@ -1650,10 +1649,7 @@ object GraphAnalytics {
       .groupBy("label")
       .agg(count(lit(1)).as("n_nodes"),
         sum(coalesce(col("__deg"), lit(0L))).as("degree_sum"))
-    val internal = symEdges
-      .join(lab.select(col("vid").as("a"), col("label").as("__la")), Seq("a"))
-      .join(lab.select(col("vid").as("b"), col("label").as("__lb")), Seq("b"))
-      .where(col("__la") === col("__lb"))
+    val internal = intraCommunity(symEdges, lab)
       .groupBy(col("__la").as("label")).agg(count(lit(1)).as("internal_directed"))
     val m = symEdges.agg(count(lit(1)).as("__M"))
     perC.join(internal, Seq("label"), "left")

@@ -12,8 +12,9 @@ import graft.Materialize.checkpoint
   * non-convergence failure live here.
   *
   *   - [[rounds]] runs a fixed number of rounds (PageRank, PPR, LPA, the
-  *     random-walk hop chain), materializing every `every`-th round and
-  *     the last.
+  *     random-walk hop chain, and with `every = 1` the Lloyd loops of
+  *     k-means centroids and residual PQ codebooks), materializing every
+  *     `every`-th round and the last.
   *   - [[fixpoint]] runs until a round changes nothing (SSSP, weighted
   *     SSSP, k-core, k-truss, connected components). Each round is the
   *     step, a LAZY checkpoint, and the probe — the round's one Spark

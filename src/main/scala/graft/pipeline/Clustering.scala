@@ -3,6 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.Materialize.checkpoint
+import graft.analytics.Superstep
 import graft.functions.VectorFunctions.dotNative
 
 /** Deterministic distributed k-means (Lloyd's) over an embedding column —
@@ -25,8 +26,9 @@ import graft.functions.VectorFunctions.dotNative
   * exchanges, nothing ships the corpus vectors) + one map-side-combinable
   * groupBy(cid, pos) whose shuffle is ~k·dims rows per partition (update).
   * Nothing is quadratic in the corpus; k and iters are the only
-  * multipliers. Centroids are localCheckpointed per iteration so the plan
-  * stays flat across iterations.
+  * multipliers. Each iteration is one [[graft.analytics.Superstep.rounds]]
+  * round that checkpoints its centroids, so the plan stays flat across
+  * iterations.
   */
 object Clustering {
 
@@ -38,9 +40,9 @@ object Clustering {
                       k: Int, iters: Int): DataFrame = {
     require(k > 0 && iters >= 0, s"need k > 0, iters >= 0; got k=$k iters=$iters")
     val corpus = df.select(col(idCol).as("__id"), col(vecCol).cast("array<double>").as("__v"))
-    var cents = checkpoint(corpus.orderBy("__id").limit(k)
+    val seeds = checkpoint(corpus.orderBy("__id").limit(k)
       .select(col("__id").as("cid"), col("__v").as("centroid")))
-    (0 until iters).foreach { _ =>
+    Superstep.rounds(seeds, iters, every = 1) { (cents, _) =>
       val assigned = assign(corpus, cents)
       val sums = assigned
         .select(col("cid"), posexplode(col("__v")).as(Seq("pos", "val")))
@@ -51,10 +53,9 @@ object Clustering {
       val fresh = sums.groupBy("cid")
         .agg(transform(array_sort(collect_list(struct(col("pos"), col("m")))),
           x => x.getField("m")).as("fresh"))
-      cents = checkpoint(cents.join(fresh, Seq("cid"), "left")
-        .select(col("cid"), coalesce(col("fresh"), col("centroid")).as("centroid")))
+      cents.join(fresh, Seq("cid"), "left")
+        .select(col("cid"), coalesce(col("fresh"), col("centroid")).as("centroid"))
     }
-    cents
   }
 
   /** Final cluster assignment after `iters` iterations: (idCol, cid). */

@@ -3,6 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.Materialize.{checkpoint, using}
+import graft.analytics.Superstep
 
 /** Embedding quantization for storage/serving-scale vector pipelines:
   * symmetric per-vector int8 codes (the layout faiss-style scalar
@@ -454,12 +455,13 @@ object Quantization {
                                      centSub: DataFrame, idCol: String,
                                      nlist: Int, codewords: Int,
                                      iters: Int): DataFrame = {
-    var cb = checkpoint(sv.where(col(idCol) >= nlist && col(idCol) < nlist + codewords)
+    val seeds = checkpoint(sv.where(col(idCol) >= nlist && col(idCol) < nlist + codewords)
       .join(assign, col(idCol) === col("__vid"))
       .join(centSub, Seq("lcid", "s"))
       .select(col("s"), col(idCol).cast("long").as("cid"),
         zip_with(col("x"), col("c"), (a, b) => a - b).as("cw")))
-    if (iters > 0) {
+    if (iters == 0) seeds
+    else {
       // residual components (id, s, pos, rval), computed and filled once
       // (every iteration reads them): scalar subtraction against the
       // broadcast centroid component table — no higher-order lambda in the
@@ -472,7 +474,7 @@ object Quantization {
         .join(centComp, Seq("lcid", "s", "pos"))
         .select(col(idCol), col("s"), col("pos"),
           (col("xval") - col("cval")).as("rval")), fill = true) { rcomp =>
-        (0 until iters).foreach { _ =>
+        Superstep.rounds(seeds, iters, every = 1) { (cb, _) =>
           val assigned = sv
             .join(assign, col(idCol) === col("__vid"))
             .join(centSub, Seq("lcid", "s"))
@@ -490,13 +492,12 @@ object Quantization {
           val fresh = means.groupBy("s", "cid")
             .agg(transform(array_sort(collect_list(struct(col("pos"), col("mv")))),
               x => x.getField("mv")).as("fresh"))
-          cb = checkpoint(cb.join(fresh, Seq("s", "cid"), "left")
+          cb.join(fresh, Seq("s", "cid"), "left")
             .select(col("s"), col("cid"),
-              coalesce(col("fresh"), col("cw")).as("cw")))
+              coalesce(col("fresh"), col("cw")).as("cw"))
         }
       }
     }
-    cb
   }
 
   /** (id, scale, codes): per-vector symmetric int8 quantization with the

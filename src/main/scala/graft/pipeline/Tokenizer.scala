@@ -38,32 +38,11 @@ object Tokenizer {
   private def learn[A](df: DataFrame, idCol: String, textCol: String, rounds: Int)
                       (body: (Seq[(Int, String, String, Long)], DataFrame) => A): A = {
     require(rounds >= 1, s"need rounds >= 1; got $rounds")
-    // space-padded normalized text; @@ survives later rounds because the
-    // rewrite operates on the padded string, never re-normalizing
-    var texts = persist(df.select(col(idCol),
-        concat(lit(" "), TextAnalysis.normalized(col(textCol)), lit(" ")).as("__t")))
+    var texts = persist(paddedTexts(df, idCol, textCol))
     val merges = Seq.newBuilder[(Int, String, String, Long)]
     try {
       for (r <- 0 until rounds) {
-        // adjacent pairs ROW-LOCALLY (round 16, guide §2.4): zip each doc's
-        // token array with its own tail instead of posexplode + per-doc
-        // window — the former paid a doc-keyed exchange AND sort of the
-        // full token table EVERY round just to see each token's successor;
-        // this shape pays only the map-side-combinable pair count. The pair
-        // multiset is identical (array order = pos order, empty tokens
-        // dropped before pairing in both shapes), so winners, tie-breaks
-        // and merges match bit-for-bit.
-        val toksArr = filter(split(trim(col("__t")), " "), t => t =!= lit(""))
-        val pairsArr = when(size(toksArr) >= 2,
-            transform(sequence(lit(0), size(toksArr) - lit(2)),
-              i => concat_ws(" ", element_at(toksArr, i + lit(1)),
-                element_at(toksArr, i + lit(2)))))
-          .otherwise(array().cast("array<string>"))
-        val top = texts
-          .select(explode(pairsArr).as("pair"))
-          .groupBy("pair").agg(count(lit(1)).as("cnt"))
-          .orderBy(desc("cnt"), asc("pair"))
-          .limit(1).collect()
+        val top = topPair(texts).collect()
         if (top.nonEmpty) {
           val pair = top.head.getString(0)
           val cnt = top.head.getLong(1)
@@ -87,14 +66,20 @@ object Tokenizer {
     } finally unpersist(texts)
   }
 
-  /** Optimization-round tooling (graft.PlanDump): ONE learn round's
-    * pair-count plan over a caller corpus — the plan [[learn]] executes
-    * per merge round, exposed so its shape is dumpable without running
-    * the eager loop. Mirrors the loop body exactly. */
-  private[graft] def pairCountPlanForDump(df: DataFrame, idCol: String,
-                                          textCol: String): DataFrame = {
-    val texts = df.select(col(idCol),
+  /** (idCol, __t): the space-padded normalized text [[learn]] starts
+    * from. `@@` survives later rounds because the rewrite operates on the
+    * padded string, never re-normalizing. */
+  private def paddedTexts(df: DataFrame, idCol: String, textCol: String): DataFrame =
+    df.select(col(idCol),
       concat(lit(" "), TextAnalysis.normalized(col(textCol)), lit(" ")).as("__t"))
+
+  /** One merge round's pair count over `texts` (…, __t): the most frequent
+    * adjacent token pair (pair, cnt), ties broken by pair ascending, or
+    * no row. Pairs form ROW-LOCALLY, each doc's token array zipped with
+    * its own tail, so a round pays only the map-side-combinable pair
+    * count; a posexplode + per-doc window would add a doc-keyed exchange
+    * and sort of the full token table. */
+  private def topPair(texts: DataFrame): DataFrame = {
     val toksArr = filter(split(trim(col("__t")), " "), t => t =!= lit(""))
     val pairsArr = when(size(toksArr) >= 2,
         transform(sequence(lit(0), size(toksArr) - lit(2)),
@@ -106,24 +91,12 @@ object Tokenizer {
       .orderBy(desc("cnt"), asc("pair")).limit(1)
   }
 
-  /** The round-15 window-based pair-count shape, kept ONLY as the "old"
-    * arm of the ScaleProbe bpe A/B (and the plans/r16 before-dump) — the
-    * live loop uses the row-local form above. Identical pair multiset. */
-  private[graft] def pairCountWindowForDump(df: DataFrame, idCol: String,
-                                            textCol: String): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(idCol).orderBy("pos")
-    val texts = df.select(col(idCol),
-      concat(lit(" "), TextAnalysis.normalized(col(textCol)), lit(" ")).as("__t"))
-    texts
-      .select(col(idCol), posexplode(split(trim(col("__t")), " ")).as(Seq("pos", "tok")))
-      .where(col("tok") =!= "")
-      .select(concat_ws(" ", col("tok"), lead("tok", 1).over(w)).as("pair"),
-        lead("tok", 1).over(w).isNotNull.as("__full"))
-      .where(col("__full"))
-      .groupBy("pair").agg(count(lit(1)).as("cnt"))
-      .orderBy(desc("cnt"), asc("pair")).limit(1)
-  }
+  /** Optimization-round tooling (graft.PlanDump): ONE learn round's
+    * pair-count plan over a caller corpus — the plan [[learn]] executes
+    * per merge round, dumpable without running the eager loop. */
+  private[graft] def pairCountPlanForDump(df: DataFrame, idCol: String,
+                                          textCol: String): DataFrame =
+    topPair(paddedTexts(df, idCol, textCol))
 
   /** The learned merge table: (merge_round, merge_left, merge_right,
     * pair_count), one row per round in learning order. */

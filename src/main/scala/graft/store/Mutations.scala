@@ -136,14 +136,17 @@ object BulkMutations {
     else checkpoint(table.repartition(key.map(col): _*))
 
   /** `old` plus the rows of `rows` whose `key` it lacks, deduplicated on
-    * `key`: one delta, lazily checkpointed, which the first job that reads
-    * the table scans whole. The delta's plan reads `old` again; unioned as
-    * a plan, it would double the table's plan with every write. */
-  private[store] def add(old: DataFrame, rows: DataFrame, key: String*): DataFrame = {
-    val delta = rows.select(old.columns.map(col): _*)
-      .join(old, key, "left_anti").dropDuplicates(key)
-    compact(old.unionByName(checkpoint(delta, eager = false)), key)
-  }
+    * `key`, through [[append]]. */
+  private[store] def add(old: DataFrame, rows: DataFrame, key: String*): DataFrame =
+    append(old, rows.join(old, key, "left_anti").dropDuplicates(key), key)
+
+  /** `old` plus `delta`, whose keys are unique and absent from `old`: one
+    * delta, lazily checkpointed, which the first job that reads the table
+    * scans whole. A delta's plan may read `old` again; unioned as a plan,
+    * it would double the table's plan with every write. */
+  private def append(old: DataFrame, delta: DataFrame, key: Seq[String]): DataFrame =
+    compact(old.unionByName(
+      checkpoint(delta.select(old.columns.map(col): _*), eager = false)), key)
 
   /** `old` without the rows whose `key` matches a row of `keys`. */
   private[store] def drop(old: DataFrame, keys: DataFrame, key: String*): DataFrame =
@@ -152,14 +155,16 @@ object BulkMutations {
   /** Append nodes(id, prop_hash). Throws on any id collision with existing
     * nodes OR duplicate ids within the batch itself (NodeExists parity with
     * the reference's per-insert create_node, which raises on the second
-    * occurrence), each detected via a single semi-join / groupBy probe. */
+    * occurrence), each detected via a single semi-join / groupBy probe.
+    * Past the probes the batch is a valid delta as it stands, so it is
+    * appended without [[add]]'s anti-join and dedup. */
   def createNodes(g: GraphStore, newNodes: DataFrame): GraphStore = {
     val selfDup = newNodes.groupBy("id").agg(count(lit(1)).as("__n"))
       .where(col("__n") > 1).limit(1).collect()
     if (selfDup.nonEmpty) throw NodeExistsException(selfDup.head.getString(0))
     val clash = newNodes.join(g.vertices, Seq("id"), "left_semi").limit(1).collect()
     if (clash.nonEmpty) throw NodeExistsException(clash.head.getString(0))
-    g.copy(vertices = add(g.vertices, newNodes, "id"))
+    g.copy(vertices = append(g.vertices, newNodes, Seq("id")))
   }
 
   /** Repoint existing nodes to new properties: `updates(id, prop_hash)`.

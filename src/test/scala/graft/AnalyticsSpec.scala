@@ -676,7 +676,8 @@ class AnalyticsSpec extends SparkSuite {
     * tie-breaks, two-zero-round fixpoint, coarsen, repeat) on plain Scala
     * collections — the brute-force cross-check twin. */
   private def replayLouvain(sym0: Seq[(Long, Long, Long)],
-                            maxLevels: Int, maxRounds: Int): Map[Long, Long] = {
+                            maxLevels: Int, maxRounds: Int,
+                            onRound: Int => Unit = _ => ()): Map[Long, Long] = {
     var e = sym0
     var mapping: Map[Long, Long] = null
     var level = 0
@@ -709,6 +710,7 @@ class AnalyticsSpec extends SparkSuite {
         zero = if (moved == 0) zero + 1 else 0
         lab = next
         round += 1
+        onRound(level + 1)
       }
       levelMoved = lab.exists { case (v, l) => v != l }
       mapping = if (mapping == null) lab else mapping.map { case (v, m) => v -> lab(m) }
@@ -869,7 +871,8 @@ class AnalyticsSpec extends SparkSuite {
     * over intra-community edges, fragment coarsening and home-community
     * restart — the brute-force cross-check twin. */
   private def replayLeiden(sym0: Seq[(Long, Long, Long)],
-                           maxLevels: Int, maxRounds: Int): Map[Long, Long] = {
+                           maxLevels: Int, maxRounds: Int,
+                           onRound: Int => Unit = _ => ()): Map[Long, Long] = {
     var e = sym0
     var map: Map[Long, Long] = null
     var init: Map[Long, Long] = null
@@ -900,6 +903,7 @@ class AnalyticsSpec extends SparkSuite {
         zero = if (moved == 0) zero + 1 else 0
         lab = next
         round += 1
+        onRound(level)
       }
       if (level < maxLevels) {
         val intra = e.filter(t => t._1 != t._2 && lab(t._1) == lab(t._2))
@@ -1389,5 +1393,36 @@ class AnalyticsSpec extends SparkSuite {
     // budget: the edge checkpoint + per round the oriented-edge checkpoint
     // and the fused probe/materialization + the collect
     assert(jobs <= 2 * rounds + 2, s"kTruss spent $jobs jobs for $rounds rounds")
+  }
+
+  test("louvain and leiden spend at most three jobs per local-move round") {
+    import spark.implicits._
+    // the 16-K4 clique ring (the resolution-limit fixture): level 1 finds
+    // the cliques, the coarse levels merge adjacent supervertices
+    val cliques = (0 until 16).map(c => (4 * c + 1L) to (4 * c + 4L))
+    val intra = cliques.flatMap(vs =>
+      for (i <- vs.indices; j <- (i + 1) until vs.size) yield (vs(i), vs(j)))
+    val bridges = (0 until 16).map(c => (4L * c + 4, (4L * ((c + 1) % 16) + 1)))
+    val symSeq = (intra ++ bridges).flatMap { case (a, b) => Seq((a, b, 1L), (b, a, 1L)) }
+    val sym = symSeq.toDF("a", "b", "w")
+    def pin(name: String, replay: (Int => Unit) => Map[Long, Long],
+            run: => Array[org.apache.spark.sql.Row]): Unit = {
+      val rounds = scala.collection.mutable.Map.empty[Int, Int].withDefaultValue(0)
+      val want = replay(level => rounds(level) += 1)
+      assert(rounds(1) >= 4, s"$name: level 1 swept ${rounds(1)} rounds — too shallow to pin")
+      val (got, jobs) = countJobs(run)
+      assert(got.map(r => r.getLong(0) -> r.getLong(1)).toMap == want)
+      val total = rounds.values.sum
+      // budget: per round the eager checkpoint, the total-weight broadcast
+      // and the moved-count probe; per level up to 12 for its set-up,
+      // refinement and coarsening (here 29 rounds over 3 levels spend
+      // about 110 jobs, against a budget of 123)
+      assert(jobs <= 3 * total + 12 * rounds.size,
+        s"$name spent $jobs jobs for $total rounds over ${rounds.size} levels")
+    }
+    pin("louvain", replayLouvain(symSeq, maxLevels = 3, maxRounds = 12, _),
+      GraphAnalytics.louvain(sym, maxLevels = 3, maxRounds = 12).collect())
+    pin("leiden", replayLeiden(symSeq, maxLevels = 3, maxRounds = 12, _),
+      GraphAnalytics.leiden(sym, maxLevels = 3, maxRounds = 12).collect())
   }
 }

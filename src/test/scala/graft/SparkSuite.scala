@@ -2,7 +2,7 @@ package graft
 
 import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.GraftSchedulerProbe
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageSubmitted}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -21,10 +21,21 @@ trait SparkSuite extends AnyFunSuite {
     * measures actions. The listener bus is drained before and after, so
     * no earlier job leaks in and no job of `body` is missed. */
   def countJobs[A](body: => A): (A, Int) = {
-    val counter = new AtomicInteger
+    val (out, jobs, _) = countJobsAndStages(body)
+    (out, jobs)
+  }
+
+  /** [[countJobs]], also returning the number of stages its jobs ran:
+    * a shuffle inside one action adds a stage, not a job. */
+  def countJobsAndStages[A](body: => A): (A, Int, Int) = {
+    val jobs = new AtomicInteger
+    val stages = new AtomicInteger
     val listener = new SparkListener {
       override def onJobStart(jobStart: SparkListenerJobStart): Unit = {
-        counter.incrementAndGet(); ()
+        jobs.incrementAndGet(); ()
+      }
+      override def onStageSubmitted(stage: SparkListenerStageSubmitted): Unit = {
+        stages.incrementAndGet(); ()
       }
     }
     val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
@@ -36,7 +47,7 @@ trait SparkSuite extends AnyFunSuite {
     try {
       val out = body
       GraftSchedulerProbe.drainListenerBus(spark.sparkContext)
-      (out, counter.get())
+      (out, jobs.get(), stages.get())
     } finally {
       spark.sparkContext.removeSparkListener(listener)
       spark.conf.set("spark.sql.adaptive.enabled", prevAqe)

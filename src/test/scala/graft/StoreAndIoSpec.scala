@@ -48,6 +48,21 @@ class StoreAndIoSpec extends SparkSuite {
   private def refPairs(g: GraphStore): Set[(String, String)] =
     g.propRefs.select("parent_hash", "child_hash").as[(String, String)].collect().toSet
 
+  test("createNodes spends only its two NodeExists probes and the write") {
+    val p = PropValue.typed("Thing", Some("one"))
+    var g = BulkMutations.createProperties(GraphStore.empty(spark), propRows(Seq(p)))
+    g = BulkMutations.createNodes(g, Seq(("a", p.hash)).toDF("id", "prop_hash"))
+    val batch = (1 to 5).map(i => (s"n$i", p.hash)).toDF("id", "prop_hash")
+    val (ids, jobs, stages) = countJobsAndStages(
+      BulkMutations.createNodes(g, batch).vertices.select("id").as[String].collect().toSet)
+    assert(ids == Set("a", "n1", "n2", "n3", "n4", "n5"))
+    // the probes' jobs and the read's. The probes already rule out a clash
+    // and an in-batch duplicate, so the write adds no anti-join or dedup
+    // to the read: either would cost it 2 more stages, not another job
+    assert(jobs <= 5, s"createNodes and one read spent $jobs jobs")
+    assert(stages <= 8, s"createNodes and one read ran $stages stages")
+  }
+
   test("gcOrphanProps: a ref whose parent is not a prop keeps nothing alive") {
     val kept = PropValue.typed("Thing", Some("kept"))
     val orphan = PropValue("Loose", Some("x"))

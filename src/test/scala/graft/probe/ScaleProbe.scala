@@ -444,46 +444,6 @@ object ScaleProbe {
       spark.stop(); return
     }
 
-    if (args.headOption.contains("bpe")) {
-      // round-16 A/B: ONE BPE pair-count round (the stage the round-16
-      // rewrite changed — the merge/rewrite machinery is identical in
-      // both shapes) at 1x and 10x disjoint doc copies. Old = posexplode
-      // + per-doc window (doc-keyed exchange + sort of the full token
-      // table); new = row-local array zip (pair-count exchange only).
-      // repartitioned like the bench's cached base tables: the testdata
-      // parquet is ONE row group, and the row-local shape does its work in
-      // the PRE-exchange narrow stage — on a 1-split scan that stage is a
-      // single task and the A/B inverts (first probe run measured exactly
-      // that; the window shape hides the skew by doing its work AFTER its
-      // exchange). Real corpora (and the bench) scan many splits.
-      val docs1 = spark.read.parquet(s"$base/documents.parquet")
-      def copies(n: Int) = (0 until n).map(c =>
-        docs1.select((col("doc_id") + lit(c.toLong * 10000000L)).as("doc_id"),
-          col("text")))
-        .reduce(_ unionByName _).repartition(64).persist()
-      import graft.pipeline.Tokenizer
-      Tokenizer.pairCountPlanForDump(docs1, "doc_id", "text").count() // warm
-      Tokenizer.pairCountWindowForDump(docs1, "doc_id", "text").count() // warm
-      for ((n, tag) <- Seq((1, "1x"), (10, "10x"))) {
-        val d = copies(n); d.count()
-        time(s"bpe_pairs_window_$tag") {
-          Tokenizer.pairCountWindowForDump(d, "doc_id", "text").count()
-        }
-        time(s"bpe_pairs_rowlocal_$tag") {
-          Tokenizer.pairCountPlanForDump(d, "doc_id", "text").count()
-        }
-        // reverse order too, so neither shape always pays cache-warm costs
-        time(s"bpe_pairs_window_${tag}_b") {
-          Tokenizer.pairCountWindowForDump(d, "doc_id", "text").count()
-        }
-        time(s"bpe_pairs_rowlocal_${tag}_b") {
-          Tokenizer.pairCountPlanForDump(d, "doc_id", "text").count()
-        }
-        d.unpersist()
-      }
-      spark.stop(); return
-    }
-
     if (args.headOption.contains("ktruss100")) {
       // round-15 (VERDICT r14 #2): the DEGREE-ORIENTED k-truss peel over
       // 1/10/100 disjoint copies of the sf0.1 co-purchase graph — truss
