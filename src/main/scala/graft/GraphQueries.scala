@@ -141,6 +141,23 @@ object GraphQueries {
     checkpoint(GraphAnalytics.coPurchasePairs(coPurchaseLineitems(s, d), "o", "p", minShared = 2,
       capDecided = Some(coPairsProbe(s, d))))
   }
+  /** The oracle's co-purchase pairs CTE, `name AS MATERIALIZED (...)`:
+    * part pairs (a < b) that share >= 2 orders, each order's parts capped
+    * at 256 — the SQL twin of [[coPairs]] — with their weight `w` when
+    * `withW`. */
+  private def coPairsCte(name: String, withW: Boolean = false): String =
+    s"""$name AS MATERIALIZED (
+       |  SELECT a, b${if (withW) ", w" else ""} FROM (
+       |    SELECT l1.p AS a, l2.p AS b, count(DISTINCT l1.o) AS w
+       |    FROM (SELECT o, p FROM (SELECT l_orderkey AS o, l_partkey AS p,
+       |        dense_rank() OVER (PARTITION BY l_orderkey ORDER BY l_partkey) AS r
+       |        FROM lineitem) cb1 WHERE r <= 256) l1
+       |    JOIN (SELECT o, p FROM (SELECT l_orderkey AS o, l_partkey AS p,
+       |        dense_rank() OVER (PARTITION BY l_orderkey ORDER BY l_partkey) AS r
+       |        FROM lineitem) cb2 WHERE r <= 256) l2 ON l1.o = l2.o
+       |    WHERE l1.p < l2.p GROUP BY 1, 2)
+       |  WHERE w >= 2)""".stripMargin
+
   private def coPurchaseLineitems(s: SparkSession, d: String): DataFrame =
     t(s, d, "lineitem").select(col("l_orderkey").as("o"), col("l_partkey").as("p"))
 
@@ -236,17 +253,7 @@ object GraphQueries {
          |  GROUP BY s.a),
          |l$i AS MATERIALIZED (SELECT vid FROM d$i WHERE deg >= 3)""".stripMargin
     }.mkString(",\n")
-    s"""WITH e AS MATERIALIZED (
-       |  SELECT a, b FROM (
-       |    SELECT l1.p AS a, l2.p AS b, count(DISTINCT l1.o) AS w
-       |    FROM (SELECT o, p FROM (SELECT l_orderkey AS o, l_partkey AS p,
-       |        dense_rank() OVER (PARTITION BY l_orderkey ORDER BY l_partkey) AS r
-       |        FROM lineitem) cb1 WHERE r <= 256) l1
-       |    JOIN (SELECT o, p FROM (SELECT l_orderkey AS o, l_partkey AS p,
-       |        dense_rank() OVER (PARTITION BY l_orderkey ORDER BY l_partkey) AS r
-       |        FROM lineitem) cb2 WHERE r <= 256) l2 ON l1.o = l2.o
-       |    WHERE l1.p < l2.p GROUP BY 1, 2)
-       |  WHERE w >= 2),
+    s"""WITH ${coPairsCte("e")},
        |sym AS MATERIALIZED (SELECT a, b FROM e UNION ALL SELECT b AS a, a AS b FROM e),
        |l0 AS MATERIALIZED (SELECT DISTINCT a AS vid FROM sym),
        |$steps
@@ -266,17 +273,7 @@ object GraphQueries {
     val walks = (0 to walkLen).map(i =>
       s"SELECT CAST(walk_id AS BIGINT) AS walk_id, CAST($i AS BIGINT) AS step, CAST(node AS BIGINT) AS node FROM w$i")
       .mkString("\n  UNION ALL ")
-    s"""e AS MATERIALIZED (
-       |  SELECT a, b FROM (
-       |    SELECT l1.p AS a, l2.p AS b, count(DISTINCT l1.o) AS w
-       |    FROM (SELECT o, p FROM (SELECT l_orderkey AS o, l_partkey AS p,
-       |        dense_rank() OVER (PARTITION BY l_orderkey ORDER BY l_partkey) AS r
-       |        FROM lineitem) cb1 WHERE r <= 256) l1
-       |    JOIN (SELECT o, p FROM (SELECT l_orderkey AS o, l_partkey AS p,
-       |        dense_rank() OVER (PARTITION BY l_orderkey ORDER BY l_partkey) AS r
-       |        FROM lineitem) cb2 WHERE r <= 256) l2 ON l1.o = l2.o
-       |    WHERE l1.p < l2.p GROUP BY 1, 2)
-       |  WHERE w >= 2),
+    s"""${coPairsCte("e")},
        |sym AS MATERIALIZED (SELECT a AS src, b AS dst FROM e UNION ALL SELECT b AS src, a AS dst FROM e),
        |adj AS MATERIALIZED (SELECT src, dst, row_number() OVER (PARTITION BY src ORDER BY dst) AS rn FROM sym),
        |degs AS MATERIALIZED (SELECT src, max(rn) AS deg FROM adj GROUP BY src),
@@ -313,17 +310,7 @@ object GraphQueries {
     val out = (0 to 4).map(i =>
       s"SELECT CAST(walk_id AS BIGINT) AS walk_id, CAST($i AS BIGINT) AS step, CAST(node AS BIGINT) AS node FROM v$i")
       .mkString("\nUNION ALL ")
-    s"""WITH we AS MATERIALIZED (
-       |  SELECT a, b, w FROM (
-       |    SELECT l1.p AS a, l2.p AS b, count(DISTINCT l1.o) AS w
-       |    FROM (SELECT o, p FROM (SELECT l_orderkey AS o, l_partkey AS p,
-       |        dense_rank() OVER (PARTITION BY l_orderkey ORDER BY l_partkey) AS r
-       |        FROM lineitem) cb1 WHERE r <= 256) l1
-       |    JOIN (SELECT o, p FROM (SELECT l_orderkey AS o, l_partkey AS p,
-       |        dense_rank() OVER (PARTITION BY l_orderkey ORDER BY l_partkey) AS r
-       |        FROM lineitem) cb2 WHERE r <= 256) l2 ON l1.o = l2.o
-       |    WHERE l1.p < l2.p GROUP BY 1, 2)
-       |  WHERE w >= 2),
+    s"""WITH ${coPairsCte("we", withW = true)},
        |wsym AS MATERIALIZED (SELECT a AS src, b AS dst, w FROM we UNION ALL SELECT b AS src, a AS dst, w FROM we),
        |wadj AS MATERIALIZED (SELECT src, dst,
        |  sum(w) OVER (PARTITION BY src ORDER BY dst) AS hi,
@@ -413,17 +400,7 @@ object GraphQueries {
     val out = (0 to walkLen).map(i =>
       s"SELECT CAST(walk_id AS BIGINT) AS walk_id, CAST($i AS BIGINT) AS step, CAST(cur AS BIGINT) AS node FROM m$i")
       .mkString("\nUNION ALL ")
-    s"""WITH e AS MATERIALIZED (
-       |  SELECT a, b FROM (
-       |    SELECT l1.p AS a, l2.p AS b, count(DISTINCT l1.o) AS w
-       |    FROM (SELECT o, p FROM (SELECT l_orderkey AS o, l_partkey AS p,
-       |        dense_rank() OVER (PARTITION BY l_orderkey ORDER BY l_partkey) AS r
-       |        FROM lineitem) cb1 WHERE r <= 256) l1
-       |    JOIN (SELECT o, p FROM (SELECT l_orderkey AS o, l_partkey AS p,
-       |        dense_rank() OVER (PARTITION BY l_orderkey ORDER BY l_partkey) AS r
-       |        FROM lineitem) cb2 WHERE r <= 256) l2 ON l1.o = l2.o
-       |    WHERE l1.p < l2.p GROUP BY 1, 2)
-       |  WHERE w >= 2),
+    s"""WITH ${coPairsCte("e")},
        |sym AS MATERIALIZED (SELECT a AS src, b AS dst FROM e UNION ALL SELECT b AS src, a AS dst FROM e),
        |m0 AS MATERIALIZED (SELECT DISTINCT src AS walk_id, src AS prev, src AS cur FROM sym),
        |$hops
@@ -544,17 +521,7 @@ object GraphQueries {
   // between the endpoint degrees over the directed-symmetric edge list —
   // exact integer sums (HUGEINT / guarded Longs), one double division
   private val assortativitySql =
-    """WITH e AS MATERIALIZED (
-      |  SELECT a, b FROM (
-      |    SELECT l1.p AS a, l2.p AS b, count(DISTINCT l1.o) AS w
-      |    FROM (SELECT o, p FROM (SELECT l_orderkey AS o, l_partkey AS p,
-      |        dense_rank() OVER (PARTITION BY l_orderkey ORDER BY l_partkey) AS r
-      |        FROM lineitem) cb1 WHERE r <= 256) l1
-      |    JOIN (SELECT o, p FROM (SELECT l_orderkey AS o, l_partkey AS p,
-      |        dense_rank() OVER (PARTITION BY l_orderkey ORDER BY l_partkey) AS r
-      |        FROM lineitem) cb2 WHERE r <= 256) l2 ON l1.o = l2.o
-      |    WHERE l1.p < l2.p GROUP BY 1, 2)
-      |  WHERE w >= 2),
+    s"""WITH ${coPairsCte("e")},
       |sym AS MATERIALIZED (SELECT a, b FROM e UNION ALL SELECT b AS a, a AS b FROM e),
       |deg AS (SELECT a AS v, count(*) AS dg FROM sym GROUP BY a),
       |sc AS (SELECT da.dg AS j, db.dg AS k FROM sym s
@@ -583,17 +550,7 @@ object GraphQueries {
     * [[GraphAnalytics.coPurchasePairs]] fan-out cap mirrored — see
     * [[coPairs]]) symmetrized with per-direction weight `w1`. */
   private def epE1Ctes(w1: String): String =
-    s"""WITH ep AS MATERIALIZED (
-      |  SELECT a, b, w FROM (
-      |    SELECT l1.p AS a, l2.p AS b, count(DISTINCT l1.o) AS w
-      |    FROM (SELECT o, p FROM (SELECT l_orderkey AS o, l_partkey AS p,
-      |        dense_rank() OVER (PARTITION BY l_orderkey ORDER BY l_partkey) AS r
-      |        FROM lineitem) cb1 WHERE r <= 256) l1
-      |    JOIN (SELECT o, p FROM (SELECT l_orderkey AS o, l_partkey AS p,
-      |        dense_rank() OVER (PARTITION BY l_orderkey ORDER BY l_partkey) AS r
-      |        FROM lineitem) cb2 WHERE r <= 256) l2 ON l1.o = l2.o
-      |    WHERE l1.p < l2.p GROUP BY 1, 2)
-      |  WHERE w >= 2),
+    s"""WITH ${coPairsCte("ep", withW = true)},
       |e1 AS MATERIALIZED (
       |  SELECT a, b, $w1 AS w FROM ep
       |  UNION ALL SELECT b AS a, a AS b, $w1 FROM ep),
@@ -820,17 +777,7 @@ object GraphQueries {
          |  UNION ALL SELECT b AS a, c AS b FROM t$i) u GROUP BY a, b),
          |e$i AS MATERIALIZED (SELECT a, b FROM s$i WHERE support >= 1)""".stripMargin
     }.mkString(",\n")
-    s"""WITH ep AS MATERIALIZED (
-       |  SELECT a, b FROM (
-       |    SELECT l1.p AS a, l2.p AS b, count(DISTINCT l1.o) AS w
-       |    FROM (SELECT o, p FROM (SELECT l_orderkey AS o, l_partkey AS p,
-       |        dense_rank() OVER (PARTITION BY l_orderkey ORDER BY l_partkey) AS r
-       |        FROM lineitem) cb1 WHERE r <= 256) l1
-       |    JOIN (SELECT o, p FROM (SELECT l_orderkey AS o, l_partkey AS p,
-       |        dense_rank() OVER (PARTITION BY l_orderkey ORDER BY l_partkey) AS r
-       |        FROM lineitem) cb2 WHERE r <= 256) l2 ON l1.o = l2.o
-       |    WHERE l1.p < l2.p GROUP BY 1, 2)
-       |  WHERE w >= 2),
+    s"""WITH ${coPairsCte("ep")},
        |e0 AS MATERIALIZED (SELECT a, b FROM ep),
        |$steps
        |SELECT CAST(a AS BIGINT) AS a, CAST(b AS BIGINT) AS b,
@@ -950,11 +897,7 @@ object GraphQueries {
       val p1 = PropValue.typed("Thing", Some("one"))
       val p2 = PropValue.typed("Thing", Some("two"))
       val link = PropValue("Link")
-      val allProps = (p1.withNested ++ p2.withNested :+ link)
-      var g = graft.store.BulkMutations.createProperties(GraphStore.empty(s),
-        allProps.map(p => (p.hash, p.json, p.variant)).distinct.toDF("hash", "value", "schema_type"),
-        Some(allProps.flatMap(p => p.nested.map(c => (p.hash, c.hash))).distinct
-          .toDF("parent_hash", "child_hash")))
+      var g = graft.store.BulkMutations.createPropertyTrees(GraphStore.empty(s), Seq(p1, p2, link))
       g = graft.store.BulkMutations.createNodes(g,
         Seq(("a", p1.hash), ("b", p2.hash)).toDF("id", "prop_hash"))
       g = graft.store.BulkMutations.createEdges(g,
@@ -1341,17 +1284,7 @@ object GraphQueries {
         .select("a", "b")
       GraphAnalytics.adamicAdar(pairs, topK = 50)
     },
-      """WITH e AS MATERIALIZED (
-        |  SELECT a, b FROM (
-        |    SELECT l1.p AS a, l2.p AS b, count(DISTINCT l1.o) AS w
-        |    FROM (SELECT o, p FROM (SELECT l_orderkey AS o, l_partkey AS p,
-        |        dense_rank() OVER (PARTITION BY l_orderkey ORDER BY l_partkey) AS r
-        |        FROM lineitem) cb1 WHERE r <= 256) l1
-        |    JOIN (SELECT o, p FROM (SELECT l_orderkey AS o, l_partkey AS p,
-        |        dense_rank() OVER (PARTITION BY l_orderkey ORDER BY l_partkey) AS r
-        |        FROM lineitem) cb2 WHERE r <= 256) l2 ON l1.o = l2.o
-        |    WHERE l1.p < l2.p GROUP BY 1, 2)
-        |  WHERE w >= 2),
+      s"""WITH ${coPairsCte("e")},
         |sym AS MATERIALIZED (SELECT a, b FROM e UNION ALL SELECT b AS a, a AS b FROM e),
         |zw AS (SELECT a AS z, CAST(floor(1000000.0 / ln(count(*)) + 0.5) AS BIGINT) AS w
         |  FROM sym GROUP BY a HAVING count(*) BETWEEN 2 AND 1000),
@@ -1550,17 +1483,7 @@ object GraphQueries {
     },
       // synchronous local-move replay from singleton labels: per vertex the
       // (score desc, community asc) argmax of M*k_vc - kv*D'c — exact ints
-      """WITH e AS MATERIALIZED (
-        |  SELECT a, b FROM (
-        |    SELECT l1.p AS a, l2.p AS b, count(DISTINCT l1.o) AS w
-        |    FROM (SELECT o, p FROM (SELECT l_orderkey AS o, l_partkey AS p,
-        |        dense_rank() OVER (PARTITION BY l_orderkey ORDER BY l_partkey) AS r
-        |        FROM lineitem) cb1 WHERE r <= 256) l1
-        |    JOIN (SELECT o, p FROM (SELECT l_orderkey AS o, l_partkey AS p,
-        |        dense_rank() OVER (PARTITION BY l_orderkey ORDER BY l_partkey) AS r
-        |        FROM lineitem) cb2 WHERE r <= 256) l2 ON l1.o = l2.o
-        |    WHERE l1.p < l2.p GROUP BY 1, 2)
-        |  WHERE w >= 2),
+      s"""WITH ${coPairsCte("e")},
         |sym AS MATERIALIZED (SELECT a, b FROM e UNION ALL SELECT b AS a, a AS b FROM e),
         |deg AS (SELECT a AS vid, count(*) AS kv FROM sym GROUP BY a),
         |lab AS (SELECT vid, vid AS label FROM deg),
@@ -1593,17 +1516,7 @@ object GraphQueries {
     },
       // per-vertex wedge-closure replay: tri(v) = closing (x < y) neighbor
       // pairs; coefficient in integer micro-units, deg < 2 scores 0
-      """WITH e AS MATERIALIZED (
-        |  SELECT a, b FROM (
-        |    SELECT l1.p AS a, l2.p AS b, count(DISTINCT l1.o) AS w
-        |    FROM (SELECT o, p FROM (SELECT l_orderkey AS o, l_partkey AS p,
-        |        dense_rank() OVER (PARTITION BY l_orderkey ORDER BY l_partkey) AS r
-        |        FROM lineitem) cb1 WHERE r <= 256) l1
-        |    JOIN (SELECT o, p FROM (SELECT l_orderkey AS o, l_partkey AS p,
-        |        dense_rank() OVER (PARTITION BY l_orderkey ORDER BY l_partkey) AS r
-        |        FROM lineitem) cb2 WHERE r <= 256) l2 ON l1.o = l2.o
-        |    WHERE l1.p < l2.p GROUP BY 1, 2)
-        |  WHERE w >= 2),
+      s"""WITH ${coPairsCte("e")},
         |sym AS MATERIALIZED (SELECT a, b FROM e UNION ALL SELECT b AS a, a AS b FROM e),
         |deg AS (SELECT a AS v, count(*) AS dg FROM sym GROUP BY a),
         |tri AS (SELECT s1.a AS v, count(*) AS t

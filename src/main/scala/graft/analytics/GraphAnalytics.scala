@@ -1286,13 +1286,13 @@ object GraphAnalytics {
   }
 
   /** One ascent level's constants over its edges `e` (a, b, w): the
-    * weighted degrees (vid, __kv), the total weight (__M), and the
-    * starting labels (vid, label) — `init`, else every vertex its own
-    * community. */
+    * weighted degrees (vid, __kv), the total weight M, read once to the
+    * driver so that every round takes it as a literal, and the starting
+    * labels (vid, label) — `init`, else every vertex its own community. */
   private def levelStart(e: DataFrame,
-                         init: Option[DataFrame]): (DataFrame, DataFrame, DataFrame) = {
+                         init: Option[DataFrame]): (DataFrame, Long, DataFrame) = {
     val deg = checkpoint(e.groupBy(col("a").as("vid")).agg(sum("w").as("__kv")))
-    val bigM = checkpoint(e.agg(sum("w").as("__M")))
+    val bigM = e.agg(coalesce(sum("w"), lit(0L))).head().getLong(0)
     (deg, bigM, checkpoint(init.getOrElse(deg.select(col("vid"), col("vid").as("label")))))
   }
 
@@ -1368,7 +1368,7 @@ object GraphAnalytics {
     * weight on the diagonal; `deg`/`bigM` are level constants the caller
     * precomputed. */
   private[analytics] def louvainParityRound(lab: DataFrame, e: DataFrame, deg: DataFrame,
-                                 bigM: DataFrame, parity: Int): DataFrame = {
+                                 bigM: Long, parity: Int): DataFrame = {
     val dC = lab.join(deg, Seq("vid"), "left")
       .groupBy("label").agg(sum(coalesce(col("__kv"), lit(0L))).as("__dc"))
     val active = lab.where(pmod(col("vid"), lit(2L)) === parity)
@@ -1384,7 +1384,7 @@ object GraphAnalytics {
       .join(active, Seq("vid"))
       .join(deg, Seq("vid"))
       .join(dC.select(col("label").as("__c"), col("__dc")), Seq("__c"))
-      .crossJoin(broadcast(bigM))
+      .withColumn("__M", lit(bigM))
       .select(col("vid"), col("label"),
         struct(
           // ns = −score = k_v·D'_c − M·k_{v,c}; min(struct) ⇒ score desc

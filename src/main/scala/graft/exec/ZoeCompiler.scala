@@ -74,14 +74,46 @@ final class ZoeCompiler(g: GraphStore, initialVariables: Map[String, String] = M
   private def spark = g.vertices.sparkSession
 
   private val storeCounter = new java.util.concurrent.atomic.AtomicInteger(0)
-  private val vStoreTables = scala.collection.concurrent.TrieMap.empty[String, DataFrame]
-  private val eStoreTables = scala.collection.concurrent.TrieMap.empty[String, DataFrame]
+
+  /** What the vertex and the edge half of the compiler differ in: the
+    * element table and its id column, and the context column, token prefix
+    * and side tables of their Store nodes. */
+  private final class Side(val fresh: () => DataFrame, val idCol: String,
+                           storeCol: String, tokenPrefix: String) {
+    private val stores = scala.collection.concurrent.TrieMap.empty[String, DataFrame]
+
+    /** Snapshot the whole selection `r` (doc semantics,
+      * docs/key_value_store.adoc:1710-1714): it is registered as a side
+      * table under a fresh token, and only the token rides the rows. */
+    def store(r: DataFrame): DataFrame = {
+      val token = s"$tokenPrefix${storeCounter.incrementAndGet()}"
+      stores.put(token, r.select("id"))
+      r.withColumn(storeCol, array_union(col(storeCol), array(lit(token))))
+    }
+
+    /** Snapshot ids of every Store whose token survives on at least one row
+      * of `d`: tokens are exploded (tiny — one per Store node) and
+      * semi-joined against the union of the side tables. Fully declarative
+      * — no driver collect, no single-partition aggregation. */
+    def liveIds(d: DataFrame): DataFrame =
+      if (stores.isEmpty) emptyIds
+      else {
+        val toks = d.select(explode(col(storeCol)).as("__tok")).distinct()
+        stores.readOnlySnapshot().toSeq
+          .map { case (t, ids) => ids.select(lit(t).as("__tok"), col("id")) }
+          .reduce(_ unionByName _)
+          .join(toks, Seq("__tok"), "left_semi")
+          .select("id")
+      }
+  }
+  private val vertexSide = new Side(() => freshVertices(), "id", "v_store", "__vs")
+  private val edgeSide = new Side(() => freshEdges(), "edge_id", "e_store", "__es")
 
   private def variablesCol: Column = typedLit(initialVariables)
 
   def run(q: BasicQuery): ZoeResult = q match {
-    case BasicQuery.V(v) => assembleV(compileV(v))
-    case BasicQuery.E(e) => assembleE(compileE(e))
+    case BasicQuery.V(v) => assemble(compileV(v), vertexSide)
+    case BasicQuery.E(e) => assemble(compileE(e), edgeSide)
     case BasicQuery.P(p) =>
       val empty = spark.emptyDataFrame.select(lit("").as("id")).limit(0)
       val emptyPaths = spark.range(0).select(
@@ -155,18 +187,11 @@ final class ZoeCompiler(g: GraphStore, initialVariables: Map[String, String] = M
     case VertexQuery.Substract(a, b) =>
       anti(compileV(a), compileV(b))
     case VertexQuery.DisjunctiveUnion(a, b) =>
-      val (ca, cb) = (compileV(a), compileV(b))
-      anti(ca, cb).unionByName(anti(cb, ca))
+      symmetricDifference(compileV(a), compileV(b))
     case VertexQuery.Filter(sub, f) =>
-      applyFilter(compileV(sub), f, isVertex = true)
+      applyFilter(compileV(sub), f, vertexSide)
     case VertexQuery.Store(sub) =>
-      // snapshot the whole current selection into each context's v_store
-      // (doc semantics, docs/key_value_store.adoc:1710-1714) — registered as
-      // a side table under a fresh token; only the token rides the rows
-      val r = compileV(sub)
-      val token = s"__vs${storeCounter.incrementAndGet()}"
-      vStoreTables.put(token, r.select("id"))
-      r.withColumn("v_store", array_union(col("v_store"), array(lit(token))))
+      vertexSide.store(compileV(sub))
   }
 
   // ---- edge traversals ----
@@ -195,15 +220,11 @@ final class ZoeCompiler(g: GraphStore, initialVariables: Map[String, String] = M
     case EdgeQuery.Substract(a, b) =>
       anti(compileE(a), compileE(b))
     case EdgeQuery.DisjunctiveUnion(a, b) =>
-      val (ca, cb) = (compileE(a), compileE(b))
-      anti(ca, cb).unionByName(anti(cb, ca))
+      symmetricDifference(compileE(a), compileE(b))
     case EdgeQuery.Filter(sub, f) =>
-      applyFilter(compileE(sub), f, isVertex = false)
+      applyFilter(compileE(sub), f, edgeSide)
     case EdgeQuery.Store(sub) =>
-      val r = compileE(sub)
-      val token = s"__es${storeCounter.incrementAndGet()}"
-      eStoreTables.put(token, r.select("id"))
-      r.withColumn("e_store", array_union(col("e_store"), array(lit(token))))
+      edgeSide.store(compileE(sub))
   }
 
   /** Initialize a fresh vertex context (VertexQueryContext::new, ql.rs:269-278). */
@@ -256,25 +277,31 @@ final class ZoeCompiler(g: GraphStore, initialVariables: Map[String, String] = M
     a.join(b.select(col("id").as("__other")), a("id") === col("__other"), "left_semi")
   private def anti(a: DataFrame, b: DataFrame): DataFrame =
     a.join(b.select(col("id").as("__other")), a("id") === col("__other"), "left_anti")
+  /** DisjunctiveUnion: the documented symmetric difference. */
+  private def symmetricDifference(a: DataFrame, b: DataFrame): DataFrame =
+    anti(a, b).unionByName(anti(b, a))
 
-  private def applyFilter(df: DataFrame, f: ZFilter, isVertex: Boolean): DataFrame =
+  /** `df` joined (`how`) with the `side` element that `key` names, then
+    * (`propHow`) with that element's property, whose `value` and
+    * `schema_type` join `df`'s columns. With `hide`, the element id, its
+    * `prop_hash` and the property `hash` join as `__vid`, `__ph` and `__h`,
+    * so none shadows a column of `df`. */
+  private def withProperty(df: DataFrame, key: Column, side: Side, how: String,
+                           propHow: String, hide: Boolean = false): DataFrame = {
+    val (id, ph, h) = if (hide) ("__vid", "__ph", "__h") else (side.idCol, "prop_hash", "hash")
+    val t = side.fresh()
+    val el = t.select(t(side.idCol).as(id), t("prop_hash").as(ph))
+    val p = freshProps()
+    val pr = p.select(p("hash").as(h), p("value"), p("schema_type"))
+    df.join(el, key === el(id), how).join(pr, el(ph) === pr(h), propHow)
+  }
+
+  private def applyFilter(df: DataFrame, f: ZFilter, side: Side): DataFrame =
     f.interpreter match {
       case "sql" =>
         // join the element's property once, evaluate `script` as a boolean
         // SQL expression over (id, value, schema_type), keep codegen-friendly
-        val base = if (isVertex) {
-          val v = freshVertices()
-          df.join(v.select(v("id").as("__vid"), v("prop_hash").as("__ph")),
-            df("id") === col("__vid"))
-        } else {
-          val e = freshEdges()
-          df.join(e.select(e("edge_id").as("__vid"), e("prop_hash").as("__ph")),
-            df("id") === col("__vid"))
-        }
-        val p = freshProps()
-        base
-          .join(p.select(p("hash").as("__h"), p("value"), p("schema_type")),
-            col("__ph") === col("__h"), "left")
+        withProperty(df, df("id"), side, "inner", "left", hide = true)
           .where(expr(f.script))
           .drop("__vid", "__ph", "__h", "value", "schema_type")
       case "registry" => FilterRegistry.lookup(f.script)(df)
@@ -292,45 +319,20 @@ final class ZoeCompiler(g: GraphStore, initialVariables: Map[String, String] = M
   // cache (which evicted the shared graph tables and caused recompute
   // storms) the checkpoint blocks are released with the RDD when the result
   // is garbage-collected.
-  private def assembleV(df: DataFrame): ZoeResult = {
+  //
+  // A traversal of `own`'s elements: its ids plus the live Store snapshots of
+  // its kind, the other kind's live snapshots, and one path per element —
+  // which ends at the element if it is a vertex.
+  private def assemble(df: DataFrame, own: Side): ZoeResult = {
     val d = checkpoint(df)
-    val vs = d.select("id")
-      .unionByName(liveStoreIds(d, "v_store", vStoreTables))
-      .distinct()
-    val es = liveStoreIds(d, "e_store", eStoreTables).distinct()
+    def ids(side: Side): DataFrame =
+      (if (side eq own) d.select("id").unionByName(side.liveIds(d)) else side.liveIds(d)).distinct()
+    val end = if (own eq vertexSide) col("id") else lit(null).cast("string")
     val paths = d.groupBy("id")
       .agg(first("path").as("path"), first("start").as("start"))
-      .select(col("start"), col("path"), col("id").as("end"))
-    ZoeResult(vs, es, paths, emptyProps, mergedVariables(d))
+      .select(col("start"), col("path"), end.as("end"))
+    ZoeResult(ids(vertexSide), ids(edgeSide), paths, emptyProps, mergedVariables(d))
   }
-
-  private def assembleE(df: DataFrame): ZoeResult = {
-    val d = checkpoint(df)
-    val es = d.select("id")
-      .unionByName(liveStoreIds(d, "e_store", eStoreTables))
-      .distinct()
-    val vs = liveStoreIds(d, "v_store", vStoreTables).distinct()
-    val paths = d.groupBy("id")
-      .agg(first("path").as("path"), first("start").as("start"))
-      .select(col("start"), col("path"), lit(null).cast("string").as("end"))
-    ZoeResult(vs, es, paths, emptyProps, mergedVariables(d))
-  }
-
-  /** Snapshot ids of every registered Store whose token survives on at least
-    * one traversal row: tokens are exploded (tiny — one per Store node) and
-    * semi-joined against the union of all registered side tables. Fully
-    * declarative — no driver collect, no single-partition aggregation. */
-  private def liveStoreIds(d: DataFrame, storeCol: String,
-                           tables: scala.collection.concurrent.TrieMap[String, DataFrame]): DataFrame =
-    if (tables.isEmpty) emptyIds
-    else {
-      val toks = d.select(explode(col(storeCol)).as("__tok")).distinct()
-      tables.readOnlySnapshot().toSeq
-        .map { case (t, ids) => ids.select(lit(t).as("__tok"), col("id")) }
-        .reduce(_ unionByName _)
-        .join(toks, Seq("__tok"), "left_semi")
-        .select("id")
-    }
 
   /** Result-level variables = union of all surviving contexts' entries
     * (ql.rs:421 `variables.extend`; last-wins collisions cannot arise here
@@ -351,19 +353,9 @@ final class ZoeCompiler(g: GraphStore, initialVariables: Map[String, String] = M
   /** Property values of all result vertices, then edges — one row per
     * element (duplicated values are kept, as in extract_properties). */
   def extractProperties(r: ZoeResult): DataFrame = {
-    val v = freshVertices()
-    val p1 = freshProps()
-    val vprops = r.vertices
-      .join(v, Seq("id"))
-      .join(p1, v("prop_hash") === p1("hash"))
-      .select(col("value"), col("schema_type"))
-    val e = freshEdges()
-    val p2 = freshProps()
-    val eprops = r.edges
-      .join(e, r.edges("id") === e("edge_id"))
-      .join(p2, e("prop_hash") === p2("hash"))
-      .select(col("value"), col("schema_type"))
-    vprops.unionByName(eprops)
+    def props(ids: DataFrame, side: Side): DataFrame =
+      withProperty(ids, ids("id"), side, "inner", "inner").select(col("value"), col("schema_type"))
+    props(r.vertices, vertexSide).unionByName(props(r.edges, edgeSide))
   }
 
   /** Per path: property values as [startEdgeProp?] ++ hops.flatMap(v,e =>
@@ -392,17 +384,9 @@ final class ZoeCompiler(g: GraphStore, initialVariables: Map[String, String] = M
           .as("__hop"))
       .select(col("__pid"), col("end"), col("__hop.__pos").as("__pos"),
         col("__hop.v").as("__vid"), col("__hop.e").as("__eid"))
-    val v = freshVertices()
-    val p1 = freshProps()
-    val withV = rows
-      .join(v, rows("__vid") === v("id"), "left")
-      .join(p1, v("prop_hash") === p1("hash"), "left")
+    val withV = withProperty(rows, rows("__vid"), vertexSide, "left", "left")
       .select(col("__pid"), col("end"), col("__pos"), col("value").as("__vval"), col("__eid"))
-    val e = freshEdges()
-    val p2 = freshProps()
-    val withVE = withV
-      .join(e, withV("__eid") === e("edge_id"), "left")
-      .join(p2, e("prop_hash") === p2("hash"), "left")
+    val withVE = withProperty(withV, withV("__eid"), edgeSide, "left", "left")
       .select(col("__pid"), col("end"), col("__pos"), col("__vval"), col("value").as("__eval"))
     // per hop the order is [vertexProp, edgeProp]; the sentinels contribute
     // [null, startProp] before hop 0 and [endProp, null] after the last —

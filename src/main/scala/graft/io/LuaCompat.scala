@@ -2,9 +2,8 @@ package graft.io
 
 import org.apache.spark.sql.SparkSession
 import graft.exec.ZoeCompiler
-import graft.model.{GraphStore, Hashing, PropValue}
+import graft.model.GraphStore
 import graft.ql.{BasicQuery, EdgeQuery, PropertyQuery, VertexQuery}
-import graft.store.BulkMutations
 
 /** Lua-compat script runner: executes the reference's documented Lua builder
   * surface (lua.rs:27-318 — globals `vq_all/vq_from_ids/vq_from_property/
@@ -26,8 +25,8 @@ import graft.store.BulkMutations
   *  - `v:outgoing("id")` → a bare property id behaves as pq_from_id(id)
   *  - the `e:…` forms mirror with referencing_vertices, per the reference.
   * Mutations apply eagerly to the in-memory store image (content-addressed,
-  * refcount-GC'd — same code paths as the CLI verbs) and persist once at
-  * script end iff any mutation ran.
+  * refcount-GC'd) through the CLI's own verbs (`ZoeCli.createNode` …
+  * `deleteEdge`), and persist once at script end iff any mutation ran.
   */
 object LuaCompat {
 
@@ -220,32 +219,30 @@ object LuaCompat {
     }
 
     // reference filter-dispatch for v:outgoing(x) / v:ingoing(x) and the
-    // edge-query mirrors (lua.rs:130-264)
-    def vHop(q: VertexQuery, out: Boolean, filter: Option[V], pos: Int): V = {
-      def hop = if (out) q.outgoing else q.ingoing
-      filter match {
-        case None => EQ(hop)
-        case Some(PQ(f)) => EQ(hop.intersect(f.referencingEdges))
-        case Some(Str(s)) => EQ(hop.intersect(PropertyQuery.fromId(s).referencingEdges))
-        case Some(EQ(f)) => EQ(hop.intersect(f))
-        case Some(VQ(f)) => VQ((if (out) hop.outgoing else hop.ingoing).intersect(f))
-        case Some(_) => fail("bad filter for vertex hop", pos)
-      }
+    // edge-query mirrors (lua.rs:130-264): the filtered-hop sugar of the
+    // Zoe builders, a bare property id standing for pq_from_id(id)
+    def vHop(q: VertexQuery, out: Boolean, filter: Option[V], pos: Int): V = filter match {
+      case None => EQ(if (out) q.outgoing else q.ingoing)
+      case Some(EQ(f)) => EQ(if (out) q.outgoing(f) else q.ingoing(f))
+      case Some(VQ(f)) => VQ(if (out) q.outgoing(f) else q.ingoing(f))
+      case Some(f @ (PQ(_) | Str(_))) =>
+        val pq = asPq(f, pos)
+        EQ(if (out) q.outgoing(pq) else q.ingoing(pq))
+      case Some(_) => fail("bad filter for vertex hop", pos)
     }
-    def eHop(q: EdgeQuery, out: Boolean, filter: Option[V], pos: Int): V = {
-      def hop = if (out) q.outgoing else q.ingoing
-      filter match {
-        case None => VQ(hop)
-        case Some(PQ(f)) => VQ(hop.intersect(f.referencingVertices))
-        case Some(Str(s)) => VQ(hop.intersect(PropertyQuery.fromId(s).referencingVertices))
-        case Some(VQ(f)) => VQ(hop.intersect(f))
-        case Some(EQ(f)) => EQ((if (out) hop.outgoing else hop.ingoing).intersect(f))
-        case Some(_) => fail("bad filter for edge hop", pos)
-      }
+    def eHop(q: EdgeQuery, out: Boolean, filter: Option[V], pos: Int): V = filter match {
+      case None => VQ(if (out) q.outgoing else q.ingoing)
+      case Some(VQ(f)) => VQ(if (out) q.outgoing(f) else q.ingoing(f))
+      case Some(f @ (PQ(_) | Str(_))) =>
+        val pq = asPq(f, pos)
+        VQ(if (out) q.outgoing(pq) else q.ingoing(pq))
+      // hop through to the far edges: the AST has no EdgeQuery overload
+      case Some(EQ(f)) => EQ((if (out) q.outgoing.outgoing else q.ingoing.ingoing).intersect(f))
+      case Some(_) => fail("bad filter for edge hop", pos)
     }
 
     def dbCall(method: String, args: Seq[V], pos: Int): V = {
-      val s2 = spark; import s2.implicits._
+      def mutate(g: GraphStore): Unit = { store = g; mutated = true }
       def argStr(i: Int): String = args.lift(i) match {
         case Some(Str(s)) => s
         case Some(Num(d)) => numToId(d)
@@ -263,37 +260,25 @@ object LuaCompat {
         case "create_node" =>
           val value = argStr(0)
           val id = java.util.UUID.randomUUID().toString
-          store = BulkMutations.createNodes(BulkMutations.createRawProperty(store, value),
-            Seq((id, PropValue.raw(value).hash)).toDF("id", "prop_hash"))
-          mutated = true
+          mutate(ZoeCli.createNode(store, id, value))
           Str(id)
         case "update_node" =>
-          val id = argStr(0)
-          val value = argStr(1)
-          store = BulkMutations.gcOrphanProps(BulkMutations.updateNodes(
-            BulkMutations.createRawProperty(store, value),
-            Seq((id, PropValue.raw(value).hash)).toDF("id", "prop_hash")))
-          mutated = true
+          val (id, value) = (argStr(0), argStr(1))
+          mutate(ZoeCli.updateNode(store, id, value))
           Str(id)
         case "delete_node" =>
           val id = argStr(0)
-          store = BulkMutations.gcOrphanProps(BulkMutations.deleteNodes(store, Seq(id).toDF("id")))
-          mutated = true
+          mutate(ZoeCli.deleteNode(store, id))
           // the reference returns the deleted id (lua.rs:42-47), so
           // scripts binding the result (x = db:delete_node(id)) agree;
           // delete_edge stays nil — the reference returns () there
           Str(id)
         case "create_edge" =>
-          val (src, dst, value) = (argStr(0), argStr(1), argStr(2))
-          val hash = PropValue.raw(value).hash
-          store = BulkMutations.createEdges(BulkMutations.createRawProperty(store, value),
-            Seq((src, dst, hash)).toDF("src", "dst", "prop_hash"))
-          mutated = true
-          Str(Hashing.edgeId(hash, src, dst))
+          val (g, id) = ZoeCli.createEdge(store, argStr(0), argStr(1), argStr(2))
+          mutate(g)
+          Str(id)
         case "delete_edge" =>
-          val id = argStr(0)
-          store = BulkMutations.gcOrphanProps(BulkMutations.deleteEdges(store, Seq(id).toDF("edge_id")))
-          mutated = true
+          mutate(ZoeCli.deleteEdge(store, argStr(0)))
           Unit0
         case other => fail(s"unknown db method '$other'", pos)
       }

@@ -1,8 +1,9 @@
 package graft.io
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import graft.exec.{ZoeCompiler, ZoeResult}
-import graft.model.{GraphStore, PropValue}
+import graft.model.{GraphStore, Hashing, PropValue}
 import graft.ql.ZoeJson
 import graft.store.BulkMutations
 
@@ -110,21 +111,14 @@ object ZoeCli {
     // flag set: --id/--create-id/--update/--get-or-create)
     case "create-node" :: path :: rest =>
       val value = readStdin()
-      val p = PropValue.raw(value)
-      val g = BulkMutations.createRawProperty(GraphStore.load(spark, path), value)
-      val spark2 = spark
-      import spark2.implicits._
+      val g = GraphStore.load(spark, path)
       rest match {
         case "--get-or-create" :: Nil =>
-          // reuse the node if exactly one already holds this property
-          // (cli_helpers.rs:118-174)
-          val (g2, id) = BulkMutations.getOrCreateNode(g, p)
+          val (g2, id) = getOrCreateNode(g, value)
           g2.save(path)
           println(id)
         case "--update" :: id :: Nil =>
-          // repoint an existing node to the new property + GC the old one
-          BulkMutations.gcOrphanProps(
-            BulkMutations.updateNodes(g, Seq((id, p.hash)).toDF("id", "prop_hash"))).save(path)
+          updateNode(g, id, value).save(path)
           println(id)
         case flags =>
           val id = flags match {
@@ -132,26 +126,18 @@ object ZoeCli {
             case Nil                => java.util.UUID.randomUUID().toString
             case other => sys.error(s"unknown create-node args: $other")
           }
-          BulkMutations.createNodes(g, Seq((id, p.hash)).toDF("id", "prop_hash")).save(path)
+          createNode(g, id, value).save(path)
           println(id)
       }
     case "delete-node" :: path :: "--id" :: id :: Nil =>
-      val g = GraphStore.load(spark, path)
-      val spark2 = spark
-      import spark2.implicits._
-      BulkMutations.gcOrphanProps(BulkMutations.deleteNodes(g, Seq(id).toDF("id"))).save(path)
+      deleteNode(GraphStore.load(spark, path), id).save(path)
       println(s"deleted $id")
     // create-edge --out <srcId> --in <dstId>, property from stdin; prints
     // the edge hash
     case "create-edge" :: path :: "--out" :: src :: "--in" :: dst :: Nil =>
-      val value = readStdin()
-      val p = PropValue.raw(value)
-      val g = GraphStore.load(spark, path)
-      val spark2 = spark
-      import spark2.implicits._
-      BulkMutations.createEdges(BulkMutations.createRawProperty(g, value),
-        Seq((src, dst, p.hash)).toDF("src", "dst", "prop_hash")).save(path)
-      println(graft.model.Hashing.edgeId(p.hash, src, dst))
+      val (g, id) = createEdge(GraphStore.load(spark, path), src, dst, readStdin())
+      g.save(path)
+      println(id)
     case other =>
       System.err.println(
         s"""unknown arguments: ${other.mkString(" ")}
@@ -171,6 +157,46 @@ object ZoeCli {
            |  create-edge <dbPath> --out <src> --in <dst>  (stdin: property bytes)""".stripMargin)
       sys.exit(2)
   }
+
+  // ---- mutation verbs, shared with LuaCompat's db:* methods ----
+  // Each stores its value as a raw property (PropValue.raw: kept as given)
+  // and returns the changed store; deletes and updates sweep the properties
+  // they orphan.
+
+  /** Node `id` holding the raw property `value`. */
+  private[io] def createNode(g: GraphStore, id: String, value: String): GraphStore =
+    BulkMutations.createNodes(BulkMutations.createRawProperty(g, value),
+      row(g, "id" -> id, "prop_hash" -> PropValue.raw(value).hash))
+
+  /** The one node holding `value` if there is one, else a new node with a
+    * fresh id (cli_helpers.rs:118-174); fails if several hold it. */
+  private[io] def getOrCreateNode(g: GraphStore, value: String): (GraphStore, String) =
+    BulkMutations.getOrCreateNode(BulkMutations.createRawProperty(g, value), PropValue.raw(value))
+
+  /** Repoint node `id` to `value`; fails with "node `id` does not exist". */
+  private[io] def updateNode(g: GraphStore, id: String, value: String): GraphStore =
+    BulkMutations.gcOrphanProps(BulkMutations.updateNodes(BulkMutations.createRawProperty(g, value),
+      row(g, "id" -> id, "prop_hash" -> PropValue.raw(value).hash)))
+
+  /** Drop node `id`; its edges stay, dangling (kv_graph_store.rs:584-602). */
+  private[io] def deleteNode(g: GraphStore, id: String): GraphStore =
+    BulkMutations.gcOrphanProps(BulkMutations.deleteNodes(g, row(g, "id" -> id)))
+
+  /** Edge src → dst holding `value`, with its content-hash id. */
+  private[io] def createEdge(g: GraphStore, src: String, dst: String,
+                             value: String): (GraphStore, String) = {
+    val hash = PropValue.raw(value).hash
+    (BulkMutations.createEdges(BulkMutations.createRawProperty(g, value),
+      row(g, "src" -> src, "dst" -> dst, "prop_hash" -> hash)), Hashing.edgeId(hash, src, dst))
+  }
+
+  private[io] def deleteEdge(g: GraphStore, edgeId: String): GraphStore =
+    BulkMutations.gcOrphanProps(BulkMutations.deleteEdges(g, row(g, "edge_id" -> edgeId)))
+
+  /** A one-row frame of string columns, given as (name, value). */
+  private def row(g: GraphStore, cols: (String, String)*): DataFrame =
+    g.vertices.sparkSession.createDataFrame(java.util.List.of(Row(cols.map(_._2): _*)),
+      StructType(cols.map(c => StructField(c._1, StringType))))
 
   /** Evaluate one SQL statement and print the result as JSON lines (guarded
     * by the same driver-side row limit as renderResult). */

@@ -1,7 +1,7 @@
 package graft.store
 
 import scala.collection.mutable
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Materialize.checkpoint
 import graft.model.{GraphStore, Hashing, PropValue}
@@ -152,6 +152,14 @@ object BulkMutations {
   private[store] def drop(old: DataFrame, keys: DataFrame, key: String*): DataFrame =
     compact(old.join(keys, key, "left_anti"), key)
 
+  /** The least `id` of `rows`, if it has any: a probe that is one job
+    * over every partition at once, folded on the driver. `limit(1)` would
+    * scan the partitions in growing waves, a job each; `agg(min)` would
+    * add an exchange, which AQE runs as a job of its own. */
+  private def anyId(rows: DataFrame): Option[String] =
+    Option(rows.select("id").as(Encoders.STRING).rdd
+      .fold(null)((a, b) => if (a == null || (b != null && b < a)) b else a))
+
   /** Append nodes(id, prop_hash). Throws on any id collision with existing
     * nodes OR duplicate ids within the batch itself (NodeExists parity with
     * the reference's per-insert create_node, which raises on the second
@@ -159,11 +167,10 @@ object BulkMutations {
     * Past the probes the batch is a valid delta as it stands, so it is
     * appended without [[add]]'s anti-join and dedup. */
   def createNodes(g: GraphStore, newNodes: DataFrame): GraphStore = {
-    val selfDup = newNodes.groupBy("id").agg(count(lit(1)).as("__n"))
-      .where(col("__n") > 1).limit(1).collect()
-    if (selfDup.nonEmpty) throw NodeExistsException(selfDup.head.getString(0))
-    val clash = newNodes.join(g.vertices, Seq("id"), "left_semi").limit(1).collect()
-    if (clash.nonEmpty) throw NodeExistsException(clash.head.getString(0))
+    anyId(newNodes.groupBy("id").agg(count(lit(1)).as("__n")).where(col("__n") > 1))
+      .foreach(id => throw NodeExistsException(id))
+    anyId(newNodes.join(g.vertices, Seq("id"), "left_semi"))
+      .foreach(id => throw NodeExistsException(id))
     g.copy(vertices = append(g.vertices, newNodes, Seq("id")))
   }
 
@@ -171,8 +178,8 @@ object BulkMutations {
     * Fails naming a node that does not exist. The old properties stay until
     * [[gcOrphanProps]] sweeps them; the new ones must already be stored. */
   def updateNodes(g: GraphStore, updates: DataFrame): GraphStore = {
-    val missing = updates.select("id").join(g.vertices, Seq("id"), "left_anti").limit(1).collect()
-    require(missing.isEmpty, s"node ${missing.head.getString(0)} does not exist")
+    val missing = anyId(updates.select("id").join(g.vertices, Seq("id"), "left_anti"))
+    require(missing.isEmpty, s"node ${missing.get} does not exist")
     g.copy(vertices = add(drop(g.vertices, updates, "id"), updates, "id"))
   }
 
@@ -183,14 +190,25 @@ object BulkMutations {
     g.copy(props = add(g.props, newProps, "hash"),
       propRefs = newRefs.fold(g.propRefs)(add(g.propRefs, _, "parent_hash", "child_hash")))
 
-  /** Store the raw-bytes property [[PropValue.raw]]`(value)`: its stored
-    * value is `value` as given, not a JSON encoding. */
-  def createRawProperty(g: GraphStore, value: String): GraphStore = {
-    val p = PropValue.raw(value)
+  /** Store `values` with their `nested()` trees (kv_graph_store.rs:710-734):
+    * one props row per distinct value, whose stored value is `stored(p)`
+    * (by default its canonical JSON), and one prop_refs row per distinct
+    * parent → child link. */
+  private[graft] def createPropertyTrees(g: GraphStore, values: Seq[PropValue],
+                                        stored: PropValue => String = _.json): GraphStore = {
+    val all = values.flatMap(_.withNested)
+    val refs = all.flatMap(p => p.nested.map(c => (p.hash, c.hash))).distinct
     val spark = g.props.sparkSession
     import spark.implicits._
-    createProperties(g, Seq((p.hash, value, p.variant)).toDF("hash", "value", "schema_type"))
+    createProperties(g,
+      all.map(p => (p.hash, stored(p), p.variant)).distinct.toDF("hash", "value", "schema_type"),
+      if (refs.isEmpty) None else Some(refs.toDF("parent_hash", "child_hash")))
   }
+
+  /** Store the raw-bytes property [[PropValue.raw]]`(value)`: its stored
+    * value is `value` as given, not a JSON encoding. */
+  def createRawProperty(g: GraphStore, value: String): GraphStore =
+    createPropertyTrees(g, Seq(PropValue.raw(value)), _ => value)
 
   /** Append edges(src, dst, prop_hash); edge_id is derived column-level and
     * duplicates (same content) collapse. Endpoint existence enforced with
@@ -260,10 +278,7 @@ object BulkMutations {
         val id = java.util.UUID.randomUUID().toString
         val spark = g.vertices.sparkSession
         import spark.implicits._
-        val withProps = createProperties(g,
-          p.withNested.map(pv => (pv.hash, pv.json, pv.variant)).distinct.toDF("hash", "value", "schema_type"),
-          Some(p.withNested.flatMap(pv => pv.nested.map(c => (pv.hash, c.hash))).distinct.toDF("parent_hash", "child_hash")))
-        (createNodes(withProps, Seq((id, h)).toDF("id", "prop_hash")), id)
+        (createNodes(createPropertyTrees(g, Seq(p)), Seq((id, h)).toDF("id", "prop_hash")), id)
       case 1 => (g, holders.head.getString(0))
       case _ => throw new IllegalStateException(
         s"property $h is referenced by multiple nodes; refine the query")

@@ -557,17 +557,9 @@ object EventStreams {
   def ingestEventsBatch(batch: DataFrame, dbDir: String): Unit = {
     import graft.model.{GraphStore, PropValue}
     import graft.store.BulkMutations
-    val spark = batch.sparkSession
-    import spark.implicits._
-    val g0 = GraphStore.load(spark, dbDir)
+    val g0 = GraphStore.load(batch.sparkSession, dbDir)
     val Seq(userP, typeP, didP) =
       Seq("User", "EventType", "Did").map(v => PropValue.typed(v))
-    val props = Seq(userP, typeP, didP).flatMap(_.withNested)
-      .map(pv => (pv.hash, pv.json, pv.variant)).distinct
-      .toDF("hash", "value", "schema_type")
-    val refs = Seq(userP, typeP, didP)
-      .flatMap(p => p.nested.map(c => (p.hash, c.hash)))
-      .toDF("parent_hash", "child_hash")
     val users = batch.select(concat(lit("user:"), col("user_id")).as("id")).distinct()
       .withColumn("prop_hash", lit(userP.hash))
     val types = batch.select(concat(lit("type:"), col("event_type")).as("id")).distinct()
@@ -580,7 +572,7 @@ object EventStreams {
       .withColumn("prop_hash", lit(didP.hash))
     val g = BulkMutations.createEdges(
       BulkMutations.createNodes(
-        BulkMutations.createProperties(g0, props, Some(refs)), newNodes),
+        BulkMutations.createPropertyTrees(g0, Seq(userP, typeP, didP)), newNodes),
       edges)
     g.save(dbDir)
   }

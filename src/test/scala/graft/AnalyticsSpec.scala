@@ -1425,4 +1425,31 @@ class AnalyticsSpec extends SparkSuite {
     pin("leiden", replayLeiden(symSeq, maxLevels = 3, maxRounds = 12, _),
       GraphAnalytics.leiden(sym, maxLevels = 3, maxRounds = 12).collect())
   }
+
+  test("louvain and leiden spend at most two jobs per local-move round") {
+    import spark.implicits._
+    // the fixture of the three-jobs case above: the total weight rides
+    // each round as a literal, so a round is its eager checkpoint and its
+    // moved-count probe
+    val cliques = (0 until 16).map(c => (4 * c + 1L) to (4 * c + 4L))
+    val intra = cliques.flatMap(vs =>
+      for (i <- vs.indices; j <- (i + 1) until vs.size) yield (vs(i), vs(j)))
+    val bridges = (0 until 16).map(c => (4L * c + 4, (4L * ((c + 1) % 16) + 1)))
+    val symSeq = (intra ++ bridges).flatMap { case (a, b) => Seq((a, b, 1L), (b, a, 1L)) }
+    val sym = symSeq.toDF("a", "b", "w")
+    def pin(name: String, replay: (Int => Unit) => Map[Long, Long],
+            run: => Array[org.apache.spark.sql.Row]): Unit = {
+      val rounds = scala.collection.mutable.Map.empty[Int, Int].withDefaultValue(0)
+      val want = replay(level => rounds(level) += 1)
+      val (got, jobs) = countJobs(run)
+      assert(got.map(r => r.getLong(0) -> r.getLong(1)).toMap == want)
+      val total = rounds.values.sum
+      assert(jobs <= 2 * total + 12 * rounds.size,
+        s"$name spent $jobs jobs for $total rounds over ${rounds.size} levels")
+    }
+    pin("louvain", replayLouvain(symSeq, maxLevels = 3, maxRounds = 12, _),
+      GraphAnalytics.louvain(sym, maxLevels = 3, maxRounds = 12).collect())
+    pin("leiden", replayLeiden(symSeq, maxLevels = 3, maxRounds = 12, _),
+      GraphAnalytics.leiden(sym, maxLevels = 3, maxRounds = 12).collect())
+  }
 }

@@ -2,6 +2,7 @@ package graft
 
 import graft.exec.ZoeCompiler
 import graft.io.{LuaCompat, ZoeCli}
+import graft.model.PropValue
 import graft.ql._
 
 /** The reference's Lua builder surface (lua.rs) through the translator:
@@ -87,6 +88,78 @@ class LuaCompatSpec extends SparkSuite {
          |""".stripMargin)
     // v:ingoing(vq) = v.ingoing.ingoing ∩ vq (the reference's last arm)
     assert(out == rendered(BasicQuery.V(vGin.ingoing.ingoing.intersect(vMartini))))
+  }
+
+  private def runOn(dir: String, code: String): String = {
+    val bout = new java.io.ByteArrayOutputStream()
+    Console.withOut(new java.io.PrintStream(bout, true, "UTF-8")) {
+      LuaCompat.run(spark, dir, code)
+    }
+    bout.toString("UTF-8").trim
+  }
+
+  test("edge-receiver hop dispatch: property query, bare id, vertex and edge filters") {
+    // a→b, b→c and c→d carry Link; b→d carries Tag
+    val b = new graft.store.GraphBatch
+    val thing = Seq("a", "b", "c", "d").map(n => n -> PropValue.typed("Thing", Some(n))).toMap
+    thing.foreach { case (n, p) => b.createNode(n, p) }
+    val (link, tag) = (PropValue("Link"), PropValue("Tag"))
+    Seq(("a", "b"), ("b", "c"), ("c", "d")).foreach { case (s, d) => b.createEdge(s, d, link) }
+    b.createEdge("b", "d", tag)
+    val dir = java.nio.file.Files.createTempDirectory("graft-lua-ehop").toString
+    b.toStore(spark).save(dir)
+    val out = runOn(dir,
+      s"""local e = pq_from_id('${link.hash}'):referencing_edges()
+         |db:query(e:outgoing(pq_from_id('${thing("c").hash}')))
+         |db:query(e:ingoing('${thing("b").hash}'))
+         |db:query(e:outgoing(vq_from_ids{'c', 'd'}))
+         |db:query(e:ingoing(vq_from_ids{'a'}))
+         |db:query(e:outgoing(pq_from_id('${tag.hash}'):referencing_edges()))
+         |db:query(e:ingoing(eq_all()))
+         |""".stripMargin)
+    val e = Zoe.start(link).referencingEdges
+    val direct = new ZoeCompiler(graft.model.GraphStore.load(spark, dir))
+    def r(q: BasicQuery) = ZoeCli.renderResult(direct.run(q))
+    val expected = Seq(
+      r(BasicQuery.V(VertexQuery.Out(e).intersect(VertexQuery.Property(Zoe.start(thing("c")))))),
+      r(BasicQuery.V(VertexQuery.In(e).intersect(VertexQuery.Property(Zoe.start(thing("b")))))),
+      r(BasicQuery.V(VertexQuery.Out(e).intersect(VertexQuery.fromIds(Seq("c", "d"))))),
+      r(BasicQuery.V(VertexQuery.In(e).intersect(VertexQuery.fromIds(Seq("a"))))),
+      r(BasicQuery.E(EdgeQuery.Out(VertexQuery.Out(e)).intersect(EdgeQuery.Property(Zoe.start(tag))))),
+      r(BasicQuery.E(EdgeQuery.In(VertexQuery.In(e)).intersect(EdgeQuery.all))))
+    assert(out.linesIterator.toSeq == expected)
+    // none of the six is vacuous: each names the elements the graph implies
+    val edgeId = (s: String, d: String, p: PropValue) => graft.model.Hashing.edgeId(p.hash, s, d)
+    Seq(Seq("c"), Seq("b"), Seq("c", "d"), Seq("a"), Seq(edgeId("b", "d", tag)),
+        Seq(edgeId("a", "b", link), edgeId("b", "c", link)))
+      .zip(expected).foreach { case (ids, shown) => ids.foreach(id => assert(shown.contains(s""""$id""""))) }
+  }
+
+  test("db:update_node repoints the node, sweeps its old raw property, fails on a missing id") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-lua-upd").toString
+    graft.model.GraphStore.empty(spark).save(dir)
+    val Seq(n, updated) = runOn(dir,
+      """local n = db:create_node('alpha')
+        |db:create_node('kept')
+        |print(n)
+        |print(db:update_node(n, 'beta'))
+        |""".stripMargin).linesIterator.toSeq
+    assert(updated == n)
+    def state = {
+      val g = graft.model.GraphStore.load(spark, dir)
+      (g.vertices.collect().map(r => r.getString(0) -> r.getString(1)).toMap,
+        g.props.select("hash", "value").collect().map(r => r.getString(0) -> r.getString(1)).toMap)
+    }
+    val (nodes, props) = state
+    val raw = (v: String) => PropValue.raw(v).hash
+    assert(nodes(n) == raw("beta") && nodes.size == 2)
+    // alpha is swept, and the raw values are stored as given
+    assert(props == Map(raw("beta") -> "beta", raw("kept") -> "kept"))
+    val e = intercept[IllegalArgumentException] {
+      runOn(dir, "db:update_node('ghost', 'gamma')")
+    }
+    assert(e.getMessage.contains("node ghost does not exist"), e.getMessage)
+    assert(state == ((nodes, props)))
   }
 
   test("set algebra methods and print()") {

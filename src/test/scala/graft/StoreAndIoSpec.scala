@@ -63,6 +63,34 @@ class StoreAndIoSpec extends SparkSuite {
     assert(stages <= 8, s"createNodes and one read ran $stages stages")
   }
 
+  test("each NodeExists probe is one job however many partitions it scans") {
+    val p = PropValue.typed("Thing", Some("one"))
+    var g = BulkMutations.createProperties(GraphStore.empty(spark), propRows(Seq(p)))
+    g = BulkMutations.createNodes(g, Seq(("a", p.hash)).toDF("id", "prop_hash"))
+    val batch = (1 to 5).map(i => (s"n$i", p.hash)).toDF("id", "prop_hash")
+    val prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "16")
+    val (_, jobs) =
+      try countJobs(BulkMutations.createNodes(g, batch))
+      finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+    // the in-batch duplicate probe and the clash probe; the write is lazy.
+    // A limit(1) probe scans 16 partitions in waves of 1, 4 and 11: 3 jobs
+    assert(jobs == 2, s"createNodes' probes spent $jobs jobs over 16 partitions")
+    // each probe still names an offending id
+    val dup = intercept[NodeExistsException] {
+      BulkMutations.createNodes(g, Seq(("n1", p.hash), ("n1", p.hash)).toDF("id", "prop_hash"))
+    }
+    assert(dup.id == "n1")
+    val clash = intercept[NodeExistsException] {
+      BulkMutations.createNodes(g, Seq(("z", p.hash), ("a", p.hash)).toDF("id", "prop_hash"))
+    }
+    assert(clash.id == "a")
+    val missing = intercept[IllegalArgumentException] {
+      BulkMutations.updateNodes(g, Seq(("a", p.hash), ("ghost", p.hash)).toDF("id", "prop_hash"))
+    }
+    assert(missing.getMessage.contains("node ghost does not exist"), missing.getMessage)
+  }
+
   test("gcOrphanProps: a ref whose parent is not a prop keeps nothing alive") {
     val kept = PropValue.typed("Thing", Some("kept"))
     val orphan = PropValue("Loose", Some("x"))
