@@ -382,22 +382,6 @@ object Clustering {
       .agg(sum(col("x").cast("decimal(30,10)")).as("__s"), count(lit(1)).as("__n"))
       .select(col("d"), (col("__s").cast("double") / col("__n")).as("mean"))
 
-  /** PCA projection: coordinates of every (centered) embedding on the top-p
-    * principal components — the dimensionality-reduction transform that
-    * turns [[pcaLoadings]]' eigensolve into a usable pipeline step.
-    * Components after the first come from HOTELLING DEFLATION on the
-    * (rounded, published) leading loadings: λ = v₁ᵀCv₁, C ← C − λ·v₁v₁ᵀ,
-    * re-iterate. Because deflation uses the 6-decimal published v₁, later
-    * components carry an O(1e-6) residual of earlier axes — deterministic,
-    * replayed exactly by the oracle, and negligible against the components
-    * themselves. Returns (id, component, coord), n·p rows.
-    *
-    * Scale: two corpus passes (the fused one-pass covariance aggregate and
-    * the projection scan) and ZERO corpus shuffles — the eigensolve and
-    * deflation run on d-/d²-row frames that broadcast, and the projection
-    * folds row-locally ([[graft.functions.CenteredProjection]], exact
-    * decimal sums) instead of re-keying the corpus by (row id, component).
-    * At 100 TB both passes are scans; nothing is keyed by corpus rows. */
   /** Deflation loop shared by [[pcaProject]] and [[pcaWhiten]]: the top-p
     * unit loadings plus each component's Rayleigh quotient λ_k = vᵀΣ_k v
     * against the matrix it was extracted from (the decimal-summed double
@@ -429,6 +413,22 @@ object Clustering {
     }
   }
 
+  /** PCA projection: coordinates of every (centered) embedding on the top-p
+    * principal components — the dimensionality-reduction transform that
+    * turns [[pcaLoadings]]' eigensolve into a usable pipeline step.
+    * Components after the first come from HOTELLING DEFLATION on the
+    * (rounded, published) leading loadings: λ = v₁ᵀCv₁, C ← C − λ·v₁v₁ᵀ,
+    * re-iterate. Because deflation uses the 6-decimal published v₁, later
+    * components carry an O(1e-6) residual of earlier axes — deterministic,
+    * replayed exactly by the oracle, and negligible against the components
+    * themselves. Returns (id, component, coord), n·p rows.
+    *
+    * Scale: two corpus passes (the fused one-pass covariance aggregate and
+    * the projection scan) and ZERO corpus shuffles — the eigensolve and
+    * deflation run on d-/d²-row frames that broadcast, and the projection
+    * folds row-locally ([[graft.functions.CenteredProjection]], exact
+    * decimal sums) instead of re-keying the corpus by (row id, component).
+    * At 100 TB both passes are scans; nothing is keyed by corpus rows. */
   def pcaProject(df: DataFrame, idCol: String, vecCol: String,
       p: Int = 2, iters: Int = 3): DataFrame = {
     require(p >= 1, s"need p >= 1; got $p")

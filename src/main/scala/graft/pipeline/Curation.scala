@@ -74,16 +74,10 @@ object Curation {
     * and the cc edge list is the verified pair list itself (already sparse).
     * Requires numeric ids (cc runs on long vertex ids). */
   def dedupNearKeepFirst(df: DataFrame, idCol: String, textCol: String,
-                         n: Int = 3, k: Int = 4, minSim: Double = 0.5): DataFrame = {
-    val pairs = Dedup.ngramJaccardViaMinhash(df, idCol, textCol, n, k, minSim)
-      .select("a", "b")
-    // cluster label = minimum member id, so every non-label member drops;
+                         n: Int = 3, k: Int = 4, minSim: Double = 0.5): DataFrame =
     // DataFrame-native cc keeps the flagship dedup pipeline RDD-free
-    val drop = ConnectedComponents.labels(pairs)
-      .where(col("id") =!= col("cluster"))
-      .select(col("id").as("__drop_id"))
-    df.join(drop, df(idCol).cast("long") === col("__drop_id"), "left_anti")
-  }
+    keepClusterMin(df, idCol, ConnectedComponents.labels(
+      Dedup.ngramJaccardViaMinhash(df, idCol, textCol, n, k, minSim).select("a", "b")))
 
   /** End-to-end SEMANTIC dedup (the SemDeDup pipeline): deterministic
     * k-means bounds the candidate set to intra-cluster pairs, exact cosine
@@ -94,13 +88,16 @@ object Curation {
     * numeric ids (cc runs on long vertex ids). */
   def dedupSemanticKeepFirst(df: DataFrame, idCol: String, vecCol: String,
                              k: Int = 8, iters: Int = 2, minCos: Double = 0.5,
-                             maxClusterSize: Int = 10000): DataFrame = {
-    val pairs = Dedup.semanticPairs(df, idCol, vecCol, k, iters, minCos,
-        maxClusterSize)
-      .select("a", "b")
-    val drop = ConnectedComponents.labels(pairs)
-      .where(col("id") =!= col("cluster"))
-      .select(col("id").as("__drop_id"))
+                             maxClusterSize: Int = 10000): DataFrame =
+    keepClusterMin(df, idCol, ConnectedComponents.labels(
+      Dedup.semanticPairs(df, idCol, vecCol, k, iters, minCos, maxClusterSize).select("a", "b")))
+
+  /** The rows of `df` that survive their duplicate cluster: `labels` is a
+    * (id, cluster) component frame whose label is the minimum member id
+    * ([[ConnectedComponents.labels]]), so every member other than the
+    * label drops. Rows in no cluster pass through. Requires numeric ids. */
+  private def keepClusterMin(df: DataFrame, idCol: String, labels: DataFrame): DataFrame = {
+    val drop = labels.where(col("id") =!= col("cluster")).select(col("id").as("__drop_id"))
     df.join(drop, df(idCol).cast("long") === col("__drop_id"), "left_anti")
   }
 
@@ -810,8 +807,8 @@ object Curation {
     // each survivor set feeds BOTH its own count and the next stage's
     // recomputation, so scope a persist per stage: without it the s1
     // dedup replays three times and the near-dup anti-join twice (the
-    // LSH/verify/cc work itself is already eager inside
-    // ngramJaccardOnShingles). Each stage shingles its survivor set
+    // LSH/verify/cc work itself is already eager inside the cc label
+    // fill). Each stage shingles its survivor set
     // directly from the persisted text with the NARROW codegen'd kernel
     // (shingleRows) — no token-table persist and no per-stage window
     // shuffle; a narrow re-scan of cached survivors is cheaper than the
@@ -863,14 +860,10 @@ object Curation {
               Dedup.verifyJaccard(perDoc, Dedup.bandedCandidates(perDoc, k), minSim)
                 .select("a", "b"))
           }
-          val drop = labels
-            .where(col("id") =!= col("cluster"))
-            .select(col("id").as("__drop_id"))
           // filled: s2 feeds several branches of the ONE final checkpoint job
           // (its stage count, the decontam semi-join, the s3 anti-join, and
           // the arm when on)
-          using(s1.join(drop, s1(idCol).cast("long") === col("__drop_id"), "left_anti"),
-              fill = true) { s2 =>
+          using(keepClusterMin(s1, idCol, labels), fill = true) { s2 =>
             // optional containment recall arm: cluster engulfed-prefix pairs
             // over the near-dup survivors, keep the min-id member per
             // cluster. Shingles come from the funnel-shared cached table,
@@ -900,15 +893,12 @@ object Curation {
                 // cost is zero when no doc hits the cap.
                 val candRare = Dedup.rarePairsOnHashed(
                   rareProposalHashes(perDoc, s2, idCol, textCol, n), rareMaxDf)
-                val cDrop = ConnectedComponents.labels(
-                    Dedup.verifyContainment(perDoc.select(col("doc"), col("__set")),
-                        candRare, minContain)
-                      .select("a", "b"))
-                  .where(col("id") =!= col("cluster"))
-                  .select(col("id").as("__cdrop_id"))
+                val cLabels = ConnectedComponents.labels(
+                  Dedup.verifyContainment(perDoc.select(col("doc"), col("__set")),
+                      candRare, minContain)
+                    .select("a", "b"))
                 // filled — same multi-branch rationale as s2
-                using(s2.join(cDrop, s2(idCol).cast("long") === col("__cdrop_id"), "left_anti"),
-                  fill = true)(body)
+                using(keepClusterMin(s2, idCol, cLabels), fill = true)(body)
               }
             withArm { s2b =>
               val benchGrams = TextAnalysis

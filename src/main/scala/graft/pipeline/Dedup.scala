@@ -37,13 +37,18 @@ object Dedup {
   private def bandHash(i: Int, shingle: Column): Column =
     substring(md5(shingle), 8 * i + 1, 8)
 
+  /** The k MinHash aggregates h0..h{k-1} over a group's `shingle` rows:
+    * hash i = min of [[bandHash]] i. */
+  private def minhashAggs(k: Int): Seq[Column] =
+    (0 until k).map(i => min(bandHash(i, col("shingle"))).as(s"h$i"))
+
   /** Per-document MinHash signatures h0..h(k-1) over word-3-gram shingles:
     * hash i = min over shingles of [[bandHash]] i — the classic
     * per-permutation min-wise hash in portable hex-string space, computed on
     * the long-form shingle plan (codegen'd, map-side partial min, one
     * shuffle by id). Documents with fewer than 3 words are excluded. */
   def minhashSignatures(df: DataFrame, idCol: String, textCol: String, k: Int = 4): DataFrame = {
-    val sigs = (0 until k).map(i => min(bandHash(i, col("shingle"))).as(s"h$i"))
+    val sigs = minhashAggs(k)
     TextAnalysis.shingleRows(df, idCol, textCol, 3)
       .groupBy(idCol)
       .agg(sigs.head, sigs.tail: _*)
@@ -64,20 +69,12 @@ object Dedup {
     }
 
   /** LSH banding: candidate near-dup pairs (a < b) sharing at least one of
-    * the k single-hash bands. Equi-join on (band index, hash) — at scale the
-    * shuffle is by bucket, never all-pairs. */
-  def minhashCandidatePairs(df: DataFrame, idCol: String, textCol: String, k: Int = 4): DataFrame = {
-    val sigs = minhashSignatures(df, idCol, textCol, k)
-    val banded = sigs.select(col(idCol).as("doc"),
-      explode(array((0 until k).map(i => struct(lit(i).as("band"), col(s"h$i").as("sig"))): _*))
-        .as("b"))
-      .select(col("doc"), col("b.band"), col("b.sig"))
-    val l = banded.select(col("doc").as("a"), col("band"), col("sig"))
-    val r = banded.select(col("doc").as("b"), col("band"), col("sig"))
-    l.join(r, Seq("band", "sig"))
-      .where(col("a") < col("b"))
-      .select("a", "b").distinct()
-  }
+    * the k single-hash bands — [[bandedCandidates]] over
+    * [[minhashSignatures]], so the hot-bucket bound every minhash propose
+    * (and the DuckDB oracle) applies holds here too. Equi-join on (band
+    * index, hash) — at scale the shuffle is by bucket, never all-pairs. */
+  def minhashCandidatePairs(df: DataFrame, idCol: String, textCol: String, k: Int = 4): DataFrame =
+    bandedCandidates(minhashSignatures(df, idCol, textCol, k).withColumnRenamed(idCol, "doc"), k)
 
   /** 64-bit SimHash over word tokens: bit j of the signature is the sign of
     * sum over tokens of (bit j of md5(token) ? +1 : -1). `bits` trades
@@ -105,8 +102,8 @@ object Dedup {
 
   /** Exact n-gram Jaccard similarity for all pairs sharing at least one
     * shingle: |A∩B| / |A|+|B|-|A∩B| via shingle-set explode + equi-join.
-    * Returns pairs (a, b, jaccard) with a < b and jaccard >= minSim. */
-  /** `maxShingleDf` (0 = off) drops shingles whose document frequency
+    * Returns pairs (a, b, jaccard) with a < b and jaccard >= minSim.
+    * `maxShingleDf` (0 = off) drops shingles whose document frequency
     * exceeds the bound BEFORE the self-join — the 100 TB guard against
     * join fan-out on boilerplate shingles (SCALE.md). Filtering changes
     * the measured shingle sets, so sizes are computed after the filter
@@ -183,21 +180,22 @@ object Dedup {
     // doc-keyed shuffle moves anything. Whole-stage codegen on the hash
     // path wins; the zero-exchange form only pays off when the frame is
     // SHARED across stages (see Curation.curationFunnel's fusion).
-    ngramJaccardOnShingles(
-      TextAnalysis.shingleRows(df, idCol, textCol, n), idCol, k, minSim)
+    minhashProposeVerify(df, idCol, textCol, n, k)(verifyJaccard(_, _, minSim))
 
-  /** [[ngramJaccardViaMinhash]] over a PRE-BUILT (idCol, shingle) table —
-    * the seam for pipelines that tokenize/shingle once and reuse the table
-    * across stages ([[Curation.curationFunnel]]). Same propose → verify →
-    * checkpoint flow, over the one-pass [[perDocSigsAndSet]] frame. */
-  def ngramJaccardOnShingles(shingles: DataFrame, idCol: String,
-                             k: Int = 4, minSim: Double = 0.5): DataFrame = {
-    // filled before the candidate and verify subtrees read it
-    // concurrently ([[graft.Materialize]], eager fill)
-    using(perDocSigsAndSet(shingles.withColumnRenamed(idCol, "doc"), k), fill = true) { perDoc =>
-      checkpoint(verifyJaccard(perDoc, bandedCandidates(perDoc, k), minSim))
+  /** The propose → verify → checkpoint flow of every minhash near-dup
+    * operator: shingle once, build the one-pass [[perDocSigsAndSet]]
+    * frame, propose with [[bandedCandidates]] and checkpoint
+    * `verify(perDoc, candidates)`. The frame is filled before the
+    * candidate and verify subtrees read it concurrently
+    * ([[graft.Materialize]], eager fill) and released on return. */
+  private def minhashProposeVerify(df: DataFrame, idCol: String, textCol: String,
+                                   n: Int, k: Int)(
+      verify: (DataFrame, DataFrame) => DataFrame): DataFrame =
+    using(perDocSigsAndSet(
+        TextAnalysis.shingleRows(df, idCol, textCol, n).withColumnRenamed(idCol, "doc"), k),
+        fill = true) { perDoc =>
+      checkpoint(verify(perDoc, bandedCandidates(perDoc, k)))
     }
-  }
 
   /** ONE doc-keyed aggregation producing the k banded min-hash signatures
     * AND the capped distinct-shingle array together: min() over the raw
@@ -213,7 +211,7 @@ object Dedup {
     * rare-shingle proposer, round 13) re-derive it for exactly those
     * docs instead of silently proposing from a truncated sketch. */
   private[pipeline] def perDocSigsAndSet(shRaw: DataFrame, k: Int): DataFrame = {
-    val sigs = (0 until k).map(i => min(bandHash(i, col("shingle"))).as(s"h$i"))
+    val sigs = minhashAggs(k)
     // collect_set dedupes DURING partial aggregation (map-side hash set),
     // so reduce-side buffers arrive pre-deduped; the previous
     // array_distinct(collect_list(struct(h, s))) shipped the raw multiset
@@ -228,9 +226,12 @@ object Dedup {
       .drop("__hs")
   }
 
-  /** Candidate pairs from a [[perDocSigsAndSet]] frame: k (band, sig)
-    * buckets exploded per doc, bucket equi-join, a < b. Never all-pairs. */
-  /** LSH band-bucket candidate pairs with a HOT-BUCKET bound (round 15):
+  /** Candidate pairs from a (doc, h0..h{k-1}) signature frame — a
+    * [[perDocSigsAndSet]] or renamed [[minhashSignatures]] frame: k
+    * (band, sig) buckets exploded per doc, bucket equi-join, a < b. Never
+    * all-pairs.
+    *
+    * HOT-BUCKET bound (round 15):
     * a (band, sig) bucket with B members emits B(B−1)/2 pairs, and
     * boilerplate shingles make bucket sizes grow LINEARLY with the corpus
     * — measured on the 100× probe corpus (every doc carries a shared
@@ -302,31 +303,10 @@ object Dedup {
     * applies). Returns (a, b, jaccard, containment). */
   def similarityReport(df: DataFrame, idCol: String, textCol: String,
                        n: Int = 3, k: Int = 4, minSim: Double = 0.5,
-                       minContain: Double = 0.9): DataFrame = {
-    // aggregation-form signatures+sets — measured faster than the
-    // row-local projection (see ngramJaccardViaMinhash)
-    val shingles = TextAnalysis.shingleRows(df, idCol, textCol, n).withColumnRenamed(idCol, "doc")
-    using(perDocSigsAndSet(shingles, k), fill = true) { perDoc =>
-      val cand = bandedCandidates(perDoc, k)
-      // same array-based verify as verifyOverlap, scoring BOTH measures
-      // from the one intersection projection; per-doc arrays capped like
-      // shingleSets (mega-doc fat-row guard)
-      val sets = perDoc
-      checkpoint(cand
-        .join(sets.select(col("doc").as("a"), col("__set").as("__sa")), Seq("a"))
-        .join(sets.select(col("doc").as("b"), col("__set").as("__sb")), Seq("b"))
-        .select(col("a"), col("b"),
-          size(array_intersect(col("__sa"), col("__sb"))).cast("long").as("inter"),
-          size(col("__sa")).cast("long").as("na"), size(col("__sb")).cast("long").as("nb"))
-        .where(col("inter") > 0)
-        .select(col("a"), col("b"),
-          round(col("inter").cast("double") / (col("na") + col("nb") - col("inter")).cast("double"), 4)
-            .as("jaccard"),
-          round(col("inter").cast("double") / least(col("na"), col("nb")).cast("double"), 4)
-            .as("containment"))
-        .where(col("jaccard") >= minSim || col("containment") >= minContain))
-    }
-  }
+                       minContain: Double = 0.9): DataFrame =
+    // both measures score from the one intersection projection
+    minhashProposeVerify(df, idCol, textCol, n, k)(verifyOverlap(_, _, Seq(Jaccard, Containment),
+      col("jaccard") >= minSim || col("containment") >= minContain))
 
   /** Incremental exact dedup — the daily-ingest production shape: dedupe
     * a new `batch` against an already-ingested corpus using ONLY the
@@ -530,9 +510,10 @@ object Dedup {
     * note: only pairs touching an over-cap doc are affected; everything
     * under the cap stays exact, and the cap is far above any chunked
     * document). Per-row memory is thereby bounded by `cap`, not by the
-    * longest document in the corpus. */
-  /** Each doc's distinct shingles as a SORTED array of xxhash64 longs.
-    * Hashing before the set collapses the verify payload ~4× (8-byte
+    * longest document in the corpus.
+    *
+    * The array holds SORTED xxhash64 longs, not shingle strings. Hashing
+    * before the set collapses the verify payload ~4× (8-byte
     * longs vs multi-word shingle strings riding every candidate pair) and
     * makes the per-pair intersection a primitive-typed operation instead
     * of UTF8String hashing — |A∩B| over hash sets equals the string-set
@@ -559,12 +540,13 @@ object Dedup {
     * length) — measured 2.5× faster on the 481k-candidate sf0.1 propose
     * set with identical output (shared-band candidates share ≥ 1 shingle,
     * and inter=0 pairs die at the threshold in both forms).
-    * `score(inter, na, nb)` names the overlap measure.
+    * Each of `scores` names an overlap measure `(inter, na, nb) => score`,
+    * rounded to 4 dp; `keep` filters the scored pairs.
     *
     * Per-row memory is bounded: [[shingleSets]] caps each doc's array. */
   private def verifyOverlap(sets: DataFrame, cand: DataFrame,
-                            score: (Column, Column, Column) => Column,
-                            outName: String, min: Double): DataFrame = {
+                            scores: Seq[(String, (Column, Column, Column) => Column)],
+                            keep: Column): DataFrame =
     cand
       .join(sets.select(col("doc").as("a"), col("__set").as("__sa")), Seq("a"))
       .join(sets.select(col("doc").as("b"), col("__set").as("__sb")), Seq("b"))
@@ -574,26 +556,28 @@ object Dedup {
       // disjoint candidates yield NO row even at min = 0.0 — parity with
       // the exploded form's inner join (pinned by PipelineSpec)
       .where(col("__i") > 0)
-      .select(col("a"), col("b"),
-        round(score(col("__i"), col("__na"), col("__nb")), 4).as(outName))
-      .where(col(outName) >= min)
-  }
+      .select(col("a") +: col("b") +: scores.map { case (name, score) =>
+        round(score(col("__i"), col("__na"), col("__nb")), 4).as(name) }: _*)
+      .where(keep)
 
-  /** `sets` = a (doc, __set) frame — [[shingleSets]] over a shingle table,
-    * or the [[perDocSigsAndSet]] frame the minhash propose already built. */
-  private[pipeline] def verifyJaccard(sets: DataFrame, cand: DataFrame, minSim: Double): DataFrame =
-    verifyOverlap(sets, cand,
-      (i, na, nb) => i.cast("double") / (na + nb - i).cast("double"),
-      "jaccard", minSim)
+  /** Jaccard — |A∩B| / |A∪B|. */
+  private val Jaccard = ("jaccard",
+    (i: Column, na: Column, nb: Column) => i.cast("double") / (na + nb - i).cast("double"))
 
   /** MAX-containment — |A∩B| / min(|A|, |B|), the asymmetric near-dup
     * measure: 1.0 whenever one document's shingle set is a subset of the
     * other's (verbatim quotes, documents extended with boilerplate),
     * cases plain Jaccard under-scores by the size imbalance. */
+  private val Containment = ("containment",
+    (i: Column, na: Column, nb: Column) => i.cast("double") / least(na, nb).cast("double"))
+
+  /** `sets` = a (doc, __set) frame — [[shingleSets]] over a shingle table,
+    * or the [[perDocSigsAndSet]] frame the minhash propose already built. */
+  private[pipeline] def verifyJaccard(sets: DataFrame, cand: DataFrame, minSim: Double): DataFrame =
+    verifyOverlap(sets, cand, Seq(Jaccard), col("jaccard") >= minSim)
+
   private[pipeline] def verifyContainment(sets: DataFrame, cand: DataFrame, minContain: Double): DataFrame =
-    verifyOverlap(sets, cand,
-      (i, na, nb) => i.cast("double") / least(na, nb).cast("double"),
-      "containment", minContain)
+    verifyOverlap(sets, cand, Seq(Containment), col("containment") >= minContain)
 
   /** Containment near-dup pairs with MinHash/LSH-proposed candidates and
     * exact shingle-intersection verification — same plan shape (and the
@@ -604,14 +588,8 @@ object Dedup {
     * route such asymmetric corpora through [[containmentVerifyPairs]]
     * with candidates from a df-bounded shared-shingle join. */
   def containmentViaMinhash(df: DataFrame, idCol: String, textCol: String,
-                            n: Int = 3, k: Int = 4, minContain: Double = 0.9): DataFrame = {
-    // aggregation-form signatures+sets — measured faster than the
-    // row-local projection (see ngramJaccardViaMinhash)
-    val shingles = TextAnalysis.shingleRows(df, idCol, textCol, n).withColumnRenamed(idCol, "doc")
-    using(perDocSigsAndSet(shingles, k), fill = true) { perDoc =>
-      checkpoint(verifyContainment(perDoc, bandedCandidates(perDoc, k), minContain))
-    }
-  }
+                            n: Int = 3, k: Int = 4, minContain: Double = 0.9): DataFrame =
+    minhashProposeVerify(df, idCol, textCol, n, k)(verifyContainment(_, _, minContain))
 
   /** Exact containment restricted to an explicit candidate pair set —
     * the verify stage for candidate generators tuned to asymmetric pairs. */
@@ -859,31 +837,6 @@ object Dedup {
       .where(col("cos") >= minCos)
   }
 
-  /** Paragraph-granularity exact dedup — the C4/RefinedWeb/Dolma cleaning
-    * step document-level dedup misses: boilerplate paragraphs repeated
-    * across documents (headers, license blocks, navigation) are removed
-    * CORPUS-WIDE, keeping only the globally first occurrence (min (doc,
-    * position)), and each document is reassembled from its survivors in
-    * original order. Documents whose every paragraph was seen earlier
-    * disappear entirely (they contribute nothing new). Returns
-    * (idCol, text, n_kept, n_dropped).
-    *
-    * Scale: the keep-first winner is a hash-keyed `groupBy(xxhash64(para))`
-    * aggregate, NOT a content-keyed window — partial aggregation combines
-    * hot paragraphs (empty lines, boilerplate headers: exactly the skewed
-    * keys of a web corpus) map-side, so the hottest key contributes one
-    * partial row per map partition, never one reducer-side row per
-    * occurrence. The winner row CARRIES the paragraph text and the winner
-    * doc's paragraph count through the aggregation (all group members
-    * share the para; `__n` is determined by the winning id), so there is
-    * NO join back — two exchanges total: the hash-keyed winner agg and the
-    * doc-keyed ordered reassembly (per-group state bounded by document
-    * length). The explode is narrow. xxhash64 collisions merge distinct
-    * paragraphs with probability ~n²/2⁶⁵ — the standard
-    * exact-dedup-by-hash trade at corpus scale.
-    *
-    * `sep` is treated as a LITERAL separator (regex-quoted for the split),
-    * matching its literal use in the reassembly concat_ws. */
   /** Per-document CROSS-corpus duplicated-paragraph ratios — the
     * CCNet/RefinedWeb boilerplate signal that [[graft.pipeline.TextAnalysis.repetitionTable]]'s
     * WITHIN-document fractions cannot see: for each document, the share
@@ -918,6 +871,31 @@ object Dedup {
             when(sum("__len") > 0, sum("__len")), lit(0.0)), 4).as("dup_char_frac"))
   }
 
+  /** Paragraph-granularity exact dedup — the C4/RefinedWeb/Dolma cleaning
+    * step document-level dedup misses: boilerplate paragraphs repeated
+    * across documents (headers, license blocks, navigation) are removed
+    * CORPUS-WIDE, keeping only the globally first occurrence (min (doc,
+    * position)), and each document is reassembled from its survivors in
+    * original order. Documents whose every paragraph was seen earlier
+    * disappear entirely (they contribute nothing new). Returns
+    * (idCol, text, n_kept, n_dropped).
+    *
+    * Scale: the keep-first winner is a hash-keyed `groupBy(xxhash64(para))`
+    * aggregate, NOT a content-keyed window — partial aggregation combines
+    * hot paragraphs (empty lines, boilerplate headers: exactly the skewed
+    * keys of a web corpus) map-side, so the hottest key contributes one
+    * partial row per map partition, never one reducer-side row per
+    * occurrence. The winner row CARRIES the paragraph text and the winner
+    * doc's paragraph count through the aggregation (all group members
+    * share the para; `__n` is determined by the winning id), so there is
+    * NO join back — two exchanges total: the hash-keyed winner agg and the
+    * doc-keyed ordered reassembly (per-group state bounded by document
+    * length). The explode is narrow. xxhash64 collisions merge distinct
+    * paragraphs with probability ~n²/2⁶⁵ — the standard
+    * exact-dedup-by-hash trade at corpus scale.
+    *
+    * `sep` is treated as a LITERAL separator (regex-quoted for the split),
+    * matching its literal use in the reassembly concat_ws. */
   def paragraphDedup(df: DataFrame, idCol: String, textCol: String,
                      sep: String = "\n"): DataFrame = {
     val sepRe = java.util.regex.Pattern.quote(sep)

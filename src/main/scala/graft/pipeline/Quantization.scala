@@ -25,19 +25,6 @@ import graft.analytics.Superstep
   */
 object Quantization {
 
-  /** (id, pos, code, scale) long form: one row per vector element with its
-    * symmetric int8 code and the per-vector scale.
-    * `dequantized(pos) = code * scale`; an all-zero vector quantizes to
-    * scale 0 with all-zero codes. This is the canonical scan-shaped output
-    * (every column scalar — joins, verification dumps, and columnar sinks
-    * consume it directly); [[int8]] packs it back per vector.
-    *
-    * The scale is a ROW-LOCAL statistic, computed by the codegen'd
-    * [[graft.functions.Int8Scale]] kernel in the projection BELOW the
-    * explode — the old posexplode → groupBy(id) → join-back shape paid two
-    * corpus-keyed exchanges for it; this plan has zero. The two-select
-    * split keeps the scale evaluated once per VECTOR (an attribute under
-    * the Generate), not once per exploded element. */
   /** Int8 quantization-loss recall: cosine top-k served from the int8
     * RECONSTRUCTION (code·scale per dimension, full-precision queries —
     * the asymmetric serving shape) measured against the exact float
@@ -54,8 +41,6 @@ object Quantization {
                  idCol: String, vecCol: String, k: Int): DataFrame = {
     val exact = checkpoint(Similarity.bruteForceTopK(corpus, queries, idCol, vecCol, k)
       .select(col("query_id"), col("neighbor_id")))
-    val den = exact.agg(countDistinct("query_id").as("n_queries"),
-      count(lit(1)).as("n_exact"))
     val recon = corpus
       .select(col(idCol), col(vecCol).cast("array<double>").as("__v"))
       .select(col(idCol), col("__v"),
@@ -65,19 +50,23 @@ object Quantization {
           .otherwise(transform(col("__v"),
             x => floor(x / col("__scale") + 0.5) * col("__scale"))).as(vecCol))
     val q = queries.select(col(idCol), col(vecCol).cast("array<double>").as(vecCol))
-    val served = Similarity.bruteForceTopK(recon, q, idCol, vecCol, k)
-      .select(col("query_id"), col("neighbor_id"))
-    val hits = served
-      .join(exact.withColumn("__hit", lit(1L)), Seq("query_id", "neighbor_id"), "left")
-      .agg(count(lit(1)).as("n_found"),
-        sum(coalesce(col("__hit"), lit(0L))).as("n_hit"))
-    hits.crossJoin(broadcast(den))
-      .select(col("n_queries"), col("n_exact"), col("n_found"),
-        col("n_hit").cast("long").as("n_hit"),
-        round(when(col("n_exact") === 0, 1.0)
-          .otherwise(col("n_hit").cast("double") / col("n_exact")), 4).as("recall"))
+    Similarity.recallAgainst(Similarity.bruteForceTopK(recon, q, idCol, vecCol, k)
+      .select(col("query_id"), col("neighbor_id")), exact)
   }
 
+  /** (id, pos, code, scale) long form: one row per vector element with its
+    * symmetric int8 code and the per-vector scale.
+    * `dequantized(pos) = code * scale`; an all-zero vector quantizes to
+    * scale 0 with all-zero codes. This is the canonical scan-shaped output
+    * (every column scalar — joins, verification dumps, and columnar sinks
+    * consume it directly); [[int8]] packs it back per vector.
+    *
+    * The scale is a ROW-LOCAL statistic, computed by the codegen'd
+    * [[graft.functions.Int8Scale]] kernel in the projection BELOW the
+    * explode — the old posexplode → groupBy(id) → join-back shape paid two
+    * corpus-keyed exchanges for it; this plan has zero. The two-select
+    * split keeps the scale evaluated once per VECTOR (an attribute under
+    * the Generate), not once per exploded element. */
   def int8Rows(df: DataFrame, idCol: String, vecCol: String): DataFrame =
     df.select(col(idCol), col(vecCol).cast("array<double>").as("__v"))
       .select(col(idCol),

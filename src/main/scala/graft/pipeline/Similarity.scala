@@ -88,24 +88,34 @@ object Similarity {
     require(prefixes.forall(_ > 0), s"prefix lengths must be positive; got $prefixes")
     val exact = checkpoint(bruteForceTopK(corpus, queries, idCol, vecCol, k)
       .select(col("query_id"), col("neighbor_id")))
-    val den = exact.agg(countDistinct("query_id").as("n_queries"),
-      count(lit(1)).as("n_exact"))
     val rungs = prefixes.map { d =>
       val c = corpus.select(col(idCol), slice(col(vecCol), 1, d).as(vecCol))
       val q = queries.select(col(idCol), slice(col(vecCol), 1, d).as(vecCol))
       bruteForceTopK(c, q, idCol, vecCol, k)
         .select(lit(d.toLong).as("dims"), col("query_id"), col("neighbor_id"))
     }.reduce(_ unionByName _)
-    val hits = rungs
+    recallAgainst(rungs, exact, "dims")
+  }
+
+  /** Recall@k of `found` (query_id, neighbor_id, groupCols…) against the
+    * `exact` (query_id, neighbor_id) ground truth, one row per group:
+    * (groupCols…, n_queries, n_exact, n_found, n_hit, recall) with
+    * recall = n_hit / n_exact (1.0 when there is no ground truth). The
+    * found pairs left-join the truth once; the denominator is a 1-row
+    * aggregate over `exact`, broadcast to every group. */
+  private[pipeline] def recallAgainst(found: DataFrame, exact: DataFrame,
+                                      groupCols: String*): DataFrame = {
+    val den = exact.agg(countDistinct(col("query_id")).as("n_queries"),
+      count(lit(1)).as("n_exact"))
+    found
       .join(exact.withColumn("__hit", lit(1L)), Seq("query_id", "neighbor_id"), "left")
-      .groupBy("dims")
-      .agg(count(lit(1)).as("n_found"),
-        sum(coalesce(col("__hit"), lit(0L))).as("n_hit"))
-    hits.crossJoin(broadcast(den))
-      .select(col("dims"), col("n_queries"), col("n_exact"), col("n_found"),
-        col("n_hit").cast("long").as("n_hit"),
+      .groupBy(groupCols.map(col): _*)
+      .agg(count(lit(1)).as("n_found"), coalesce(sum(col("__hit")), lit(0L)).as("n_hit"))
+      .crossJoin(broadcast(den))
+      .select(groupCols.map(col) ++ Seq(col("n_queries"), col("n_exact"), col("n_found"),
+        col("n_hit"),
         round(when(col("n_exact") === 0, 1.0)
-          .otherwise(col("n_hit").cast("double") / col("n_exact")), 4).as("recall"))
+          .otherwise(col("n_hit").cast("double") / col("n_exact")), 4).as("recall")): _*)
   }
 
   /** Brute-force cosine top-k: for every query vector, the k nearest corpus
@@ -119,8 +129,15 @@ object Similarity {
     val scored = c.join(q, col("query_id") =!= col("neighbor_id"))
       .select(col("query_id"), col("neighbor_id"),
         round(cosine(col("qv"), col("cv")), 6).as("cos"))
+    topKPerQuery(scored, k)
+  }
+
+  /** The ANN ranking every operator here shares: per query_id, the `k`
+    * best rows by (cos desc, neighbor_id asc), numbered 1..k in
+    * `rankCol`. */
+  private def topKPerQuery(scored: DataFrame, k: Int, rankCol: String = "rank"): DataFrame = {
     val w = Window.partitionBy("query_id").orderBy(desc("cos"), asc("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w)).where(col("rank") <= k)
+    scored.withColumn(rankCol, row_number().over(w)).where(col(rankCol) <= k)
   }
 
   /** Deterministic pseudo-random hyperplane component for (plane, dim):
@@ -239,15 +256,12 @@ object Similarity {
     * their nprobe nearest lists, exact cosine ranks list members only. */
   def ivfTopKWith(corpus: DataFrame, queries: DataFrame, centroids: DataFrame,
                   idCol: String, vecCol: String, k: Int,
-                  nprobe: Int = 4): DataFrame = {
-    val w = Window.partitionBy("query_id").orderBy(desc("cos"), asc("neighbor_id"))
+                  nprobe: Int = 4): DataFrame =
     // trim to (id, vec): any extra payload columns stay out of this
     // operator's canonical (query_id, neighbor_id, cos, rank) shape
-    ivfScoredPairs(corpus.select(col(idCol), col(vecCol)),
+    topKPerQuery(ivfScoredPairs(corpus.select(col(idCol), col(vecCol)),
         queries.select(col(idCol), col(vecCol)), centroids, idCol, vecCol, nprobe)
-      .drop("probe_rank")
-      .withColumn("rank", row_number().over(w)).where(col("rank") <= k)
-  }
+      .drop("probe_rank"), k)
 
   /** The shared IVF propose/score core: probed-list candidate pairs with
     * exact cosine, BEFORE any ranking — [[ivfTopKWith]] windows it to
@@ -323,12 +337,10 @@ object Similarity {
                     nprobe: Int = 4): DataFrame = {
     val c = corpus.select(col(idCol), col(vecCol), col(labelCol).cast("long").as("__lbl"))
     val q = queries.select(col(idCol), col(vecCol), col(labelCol).cast("long").as("__lbl"))
-    val w = Window.partitionBy("query_id").orderBy(desc("cos"), asc("neighbor_id"))
-    ivfScoredPairs(c, q, centroids, idCol, vecCol, nprobe)
+    topKPerQuery(ivfScoredPairs(c, q, centroids, idCol, vecCol, nprobe)
       .where(col("q___lbl") =!= col("n___lbl"))
       .select(col("query_id"), col("q___lbl").as("anchor_label"),
-        col("neighbor_id"), col("n___lbl").as("neighbor_label"), col("cos"))
-      .withColumn("rank", row_number().over(w)).where(col("rank") <= k)
+        col("neighbor_id"), col("n___lbl").as("neighbor_label"), col("cos")), k)
   }
 
   /** Contrastive training-pair miner — the triplet/InfoNCE batch feed:
@@ -351,15 +363,12 @@ object Similarity {
     require(kNeg >= 1, s"need kNeg >= 1; got $kNeg")
     val c = corpus.select(col(idCol), col(vecCol), col(labelCol).cast("long").as("__lbl"))
     val q = queries.select(col(idCol), col(vecCol), col(labelCol).cast("long").as("__lbl"))
-    val w = Window.partitionBy("query_id").orderBy(desc("cos"), asc("neighbor_id"))
     val scored = ivfScoredPairs(c, q, centroids, idCol, vecCol, nprobe)
       .select(col("query_id"), col("q___lbl").as("anchor_label"),
         col("neighbor_id"), col("n___lbl").as("neighbor_label"), col("cos"))
-    val pos = scored.where(col("anchor_label") === col("neighbor_label"))
-      .withColumn("rank", row_number().over(w)).where(col("rank") <= 1)
+    val pos = topKPerQuery(scored.where(col("anchor_label") === col("neighbor_label")), 1)
       .withColumn("role", lit("positive"))
-    val neg = scored.where(col("anchor_label") =!= col("neighbor_label"))
-      .withColumn("rank", row_number().over(w)).where(col("rank") <= kNeg)
+    val neg = topKPerQuery(scored.where(col("anchor_label") =!= col("neighbor_label")), kNeg)
       .withColumn("role", lit("negative"))
     pos.unionByName(neg)
       .select(col("query_id"), col("anchor_label"), col("neighbor_id"),
@@ -386,9 +395,7 @@ object Similarity {
                    nprobe: Int = 4): DataFrame = {
     val c = corpus.select(col(idCol), col(vecCol), col(labelCol).cast("long").as("__lbl"))
     val q = queries.select(col(idCol), col(vecCol), col(labelCol).cast("long").as("__lbl"))
-    val w = Window.partitionBy("query_id").orderBy(desc("cos"), asc("neighbor_id"))
-    val topk = ivfScoredPairs(c, q, centroids, idCol, vecCol, nprobe)
-      .withColumn("__rk", row_number().over(w)).where(col("__rk") <= k)
+    val topk = topKPerQuery(ivfScoredPairs(c, q, centroids, idCol, vecCol, nprobe), k, "__rk")
     topk.groupBy(col("query_id"), col("q___lbl"), col("n___lbl"))
       .agg(count(lit(1)).as("votes"))
       .groupBy(col("query_id"), col("q___lbl").as("anchor_label"))
@@ -424,25 +431,9 @@ object Similarity {
       .where(col("query_id") =!= col("neighbor_id"))
       .select(col("query_id"), col("neighbor_id"),
         round(cosine(col("qv"), col("cv")), 6).as("cos"))
-    val w = Window.partitionBy("query_id").orderBy(desc("cos"), asc("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w)).where(col("rank") <= k)
+    topKPerQuery(scored, k)
   }
 
-  /** ANN recall measured, not assumed — the vector-space sibling of
-    * [[Dedup.lshRecallReport]]: run [[bruteForceTopK]] (ground truth) and
-    * each approximate arm (LSH buckets, IVF inverted lists, IVF-PQ with
-    * ADC scoring) over the SAME query slice and report, per method, how
-    * many of the exact top-k pairs the approximate path found. Recall@k =
-    * |approx ∩ exact| / |exact|; for the cosine-ranked arms any miss is
-    * bucketing/probing loss, for IVF-PQ it additionally folds in
-    * quantization error (ADC ranks by compressed L2, not exact cosine) —
-    * which is precisely what an operator gating a 100 TB ANN rollout wants
-    * folded in. Returns one row per method:
-    * (method, n_queries, n_exact, n_found, n_hit, recall).
-    *
-    * Scale: run on a hash-sampled query slice — the exact arm is a full
-    * scan per query and only exists at sample scale; the approximate arms
-    * are the production plans unchanged. */
   /** IVF probe-depth sweep — the nprobe tuning table an operator reads
     * before a rollout (the ANN sibling of [[Dedup.thresholdSweep]]):
     * recall@k AND the scored-candidate volume (the cost proxy — work per
@@ -472,27 +463,32 @@ object Similarity {
         idCol, vecCol, maxP))
     val exact = checkpoint(bruteForceTopK(corpus, queries, idCol, vecCol, k)
       .select(col("query_id").cast("long"), col("neighbor_id").cast("long")))
-    val denom = broadcast(exact.agg(
-      countDistinct(col("query_id")).as("n_queries"),
-      count(lit(1)).as("n_exact")))
     nprobes.sorted.map { p =>
       val cand = scored.where(col("probe_rank") <= p)
-      val w = Window.partitionBy("query_id").orderBy(desc("cos"), asc("neighbor_id"))
-      val top = cand.withColumn("rank", row_number().over(w)).where(col("rank") <= k)
+      val top = topKPerQuery(cand, k)
         .select(col("query_id").cast("long"), col("neighbor_id").cast("long"))
-      val hits = top
-        .join(exact.withColumn("__hit", lit(1L)), Seq("query_id", "neighbor_id"), "left")
-        .agg(count(lit(1)).as("n_found"), coalesce(sum(col("__hit")), lit(0L)).as("n_hit"))
       cand.agg(count(lit(1)).as("n_candidates"))
-        .crossJoin(broadcast(hits))
-        .crossJoin(denom)
+        .crossJoin(broadcast(recallAgainst(top, exact)))
         .select(lit(p.toLong).as("nprobe"), col("n_queries"), col("n_exact"),
-          col("n_candidates"), col("n_found"), col("n_hit"),
-          round(when(col("n_exact") === 0, 1.0)
-            .otherwise(col("n_hit").cast("double") / col("n_exact")), 4).as("recall"))
+          col("n_candidates"), col("n_found"), col("n_hit"), col("recall"))
     }.reduce(_ unionByName _)
   }
 
+  /** ANN recall measured, not assumed — the vector-space sibling of
+    * [[Dedup.lshRecallReport]]: run [[bruteForceTopK]] (ground truth) and
+    * each approximate arm (LSH buckets, IVF inverted lists, IVF-PQ with
+    * ADC scoring) over the SAME query slice and report, per method, how
+    * many of the exact top-k pairs the approximate path found. Recall@k =
+    * |approx ∩ exact| / |exact|; for the cosine-ranked arms any miss is
+    * bucketing/probing loss, for IVF-PQ it additionally folds in
+    * quantization error (ADC ranks by compressed L2, not exact cosine) —
+    * which is precisely what an operator gating a 100 TB ANN rollout wants
+    * folded in. Returns one row per method:
+    * (method, n_queries, n_exact, n_found, n_hit, recall).
+    *
+    * Scale: run on a hash-sampled query slice — the exact arm is a full
+    * scan per query and only exists at sample scale; the approximate arms
+    * are the production plans unchanged. */
   def annRecallReport(corpus: DataFrame, queries: DataFrame,
                       idCol: String, vecCol: String, k: Int,
                       planes: Int = 4, nlist: Int = 16, nprobe: Int = 4,
@@ -508,9 +504,6 @@ object Similarity {
         col("neighbor_id").cast("long"))
     val (cent, cb) = ivfPqIdx.getOrElse(
       Quantization.ivfPqIndex(corpus, idCol, vecCol, nlist, m, codewords))
-    val denom = broadcast(exact.agg(
-      countDistinct(col("query_id")).as("n_queries"),
-      count(lit(1)).as("n_exact")))
     // ONE corpus-scan encode shared by BOTH ivfpq arms (round 16): the
     // plain-ADC arm and the rerank arm consumed bit-identical encode
     // output yet each paid its own corpus encode inside one report.
@@ -527,19 +520,10 @@ object Similarity {
         .unionByName(arm("ivfpq_rerank",
           Quantization.ivfPqTopKRerankCodes(codes, corpus, queries, idCol, vecCol,
             k, 4, ivfPqNprobe, m, cent, cb)))
-      val perArm = arms
-        .join(exact.withColumn("__hit", lit(1L)), Seq("query_id", "neighbor_id"), "left")
-        .groupBy("method")
-        .agg(count(lit(1)).as("n_found"),
-          coalesce(sum(col("__hit")), lit(0L)).as("n_hit"))
       // the 4-row report is evaluated eagerly so the shared-codes cache is
       // released before returning — a lazily returned frame could never
       // release it safely
-      checkpoint(perArm.crossJoin(denom)
-        .select(col("method"), col("n_queries"), col("n_exact"),
-          col("n_found"), col("n_hit"),
-          round(when(col("n_exact") === 0, 1.0)
-            .otherwise(col("n_hit").cast("double") / col("n_exact")), 4).as("recall")))
+      checkpoint(recallAgainst(arms, exact, "method"))
     }
   }
 }

@@ -658,8 +658,9 @@ object EventStreams {
     * with fewer than n words carry no signature and pass through the
     * where-filter (they cannot near-dup at shingle granularity). Returns
     * the distinct signature tuples — set semantics, deterministic
-    * regardless of arrival order. */
-  /** BUCKET-SIZE MATH (round-16 sweep): state is keyed by the EXACT
+    * regardless of arrival order.
+    *
+    * BUCKET-SIZE MATH (round-16 sweep): state is keyed by the EXACT
     * k-hash signature, so a hot signature (boilerplate duplicated across
     * the stream) COLLAPSES to one state-store entry rather than fanning
     * out — dedup-by-key is linear in arriving rows and state is bounded

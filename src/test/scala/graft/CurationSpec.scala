@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.pipeline.{ConnectedComponents, Curation}
+import graft.pipeline.{ConnectedComponents, Curation, Dedup}
 
 class CurationSpec extends SparkSuite {
 
@@ -508,6 +508,61 @@ class CurationSpec extends SparkSuite {
     // raw 5 → exact dedup drops 2 → near-dup drops 3 → decontam drops 4
     assert(funnel == Map("raw" -> 5L, "exact_dedup" -> 4L,
       "near_dedup" -> 3L, "decontaminated" -> 2L))
+  }
+
+  /** A funnel corpus with an exact copy, two near-dup clusters (one of
+    * them a chain of three) and unrelated singletons. */
+  private def funnelCorpus = Seq(
+    (1L, "the quick brown fox jumps over the lazy dog tonight"),
+    (2L, "the quick brown fox jumps over the lazy dog tonight"),    // exact dup of 1
+    (3L, "the quick brown fox jumps over the lazy cat tonight"),    // near dup of 1
+    (4L, "the quick brown fox jumps over the lazy cat this morning"), // near dup of 3
+    (5L, "river boats carry grain down to the harbor every autumn"),
+    (6L, "river boats carry grain down to the harbor every winter"), // near dup of 5
+    (7L, "alpha beta gamma delta epsilon zeta eta theta"),          // contaminated
+    (8L, "unique words entirely separate from everything else here"))
+    .toDF("doc_id", "text")
+
+  private def funnelCounts(df: org.apache.spark.sql.DataFrame): Map[String, Long] =
+    df.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+
+  test("curationFunnel: dupLabels over the raw corpus give the internal labels' stage counts") {
+    val corpus = funnelCorpus
+    val bench = Seq((100L, "alpha beta gamma delta epsilon")).toDF("doc_id", "text")
+    val internal = funnelCounts(Curation.curationFunnel(corpus, bench, "doc_id", "text"))
+    val labels = ConnectedComponents.labels(
+      Dedup.ngramJaccardViaMinhash(corpus, "doc_id", "text").select("a", "b"))
+    val external = funnelCounts(Curation.curationFunnel(corpus, bench, "doc_id", "text",
+      dupLabels = Some(labels)))
+    assert(external == internal)
+    // the near-dup stage really drops something, or the labels are idle
+    assert(internal("near_dedup") < internal("exact_dedup"), s"got $internal")
+  }
+
+  test("curationFunnel: near_dedup counts dedupNearKeepFirst over the exact-dedup survivors") {
+    val corpus = funnelCorpus
+    val bench = Seq((100L, "alpha beta gamma delta epsilon")).toDF("doc_id", "text")
+    val funnel = funnelCounts(Curation.curationFunnel(corpus, bench, "doc_id", "text"))
+    val s1 = Curation.dedupExactKeepFirst(corpus, "doc_id", "text")
+    assert(s1.count() == funnel("exact_dedup"))
+    assert(Curation.dedupNearKeepFirst(s1, "doc_id", "text").count() == funnel("near_dedup"))
+  }
+
+  test("curationFunnel: the rare-shingle arm drops an engulfed-prefix document at contain_dedup") {
+    val long = "orchards along the valley floor bloom early when the spring rains " +
+      "arrive before the equinox and the growers prune the old branches back"
+    // doc 9 is the first seven words of doc 1: containment 1.0, Jaccard
+    // 5/21, so the near-dup stage keeps it and only the arm can drop it
+    val corpus = Seq((1L, long), (9L, long.split(" ").take(7).mkString(" ")),
+      (5L, "unique words entirely separate from everything else here")).toDF("doc_id", "text")
+    val bench = Seq((100L, "alpha beta gamma delta epsilon")).toDF("doc_id", "text")
+    val off = funnelCounts(Curation.curationFunnel(corpus, bench, "doc_id", "text"))
+    val on = funnelCounts(Curation.curationFunnel(corpus, bench, "doc_id", "text",
+      rareShingleArm = true))
+    assert(off == Map("raw" -> 3L, "exact_dedup" -> 3L, "near_dedup" -> 3L,
+      "decontaminated" -> 3L), s"got $off")
+    assert(on == Map("raw" -> 3L, "exact_dedup" -> 3L, "near_dedup" -> 3L,
+      "contain_dedup" -> 2L, "decontaminated" -> 2L), s"got $on")
   }
 
   test("ConnectedComponents.labels matches GraphX dupClusters on assorted graphs") {

@@ -82,21 +82,36 @@ class MaterializeSpec extends SparkSuite {
 
   private val mainRoot = Paths.get("src/main/scala")
 
-  /** Every `src/main` Scala source with its numbered code lines: block
-    * comments blanked (newlines kept, so line numbers hold), line
-    * comments cut. */
-  private def mainSources: List[(Path, Seq[(String, Int)])] = {
+  /** Every `src/main` Scala source with its raw text. */
+  private def mainFiles: List[(Path, String)] = {
     assert(Files.isDirectory(mainRoot), s"source tree not found under ${mainRoot.toAbsolutePath}")
     val walk = Files.walk(mainRoot)
     val sources = try walk.iterator.asScala.filter(_.toString.endsWith(".scala")).toList
     finally walk.close()
-    sources.map { p =>
-      val text = """(?s)/\*.*?\*/""".r.replaceAllIn(new String(Files.readAllBytes(p), "UTF-8"),
+    sources.map(p => p -> new String(Files.readAllBytes(p), "UTF-8"))
+  }
+
+  /** Every `src/main` Scala source with its numbered code lines: block
+    * comments blanked (newlines kept, so line numbers hold), line
+    * comments cut. */
+  private def mainSources: List[(Path, Seq[(String, Int)])] =
+    mainFiles.map { case (p, raw) =>
+      val text = """(?s)/\*.*?\*/""".r.replaceAllIn(raw,
         m => m.matched.replaceAll("[^\n]", " "))
       p -> text.split("\n", -1).toSeq.zipWithIndex.map { case (l, i) =>
         (l.indexOf("//") match { case -1 => l; case k => l.take(k) }, i + 1)
       }
     }
+
+  test("no scaladoc block is stacked directly on another (scaladoc keeps only the last)") {
+    // a /** … */ followed by nothing but whitespace and then another /**:
+    // the first block documents nothing and hides from the generated docs
+    val stacked = """(?s)/\*\*.*?\*/\s*(/\*\*)""".r
+    val offenders = for {
+      (p, raw) <- mainFiles
+      m <- stacked.findAllMatchIn(raw)
+    } yield s"${mainRoot.relativize(p)}:${raw.take(m.start(1)).count(_ == '\n') + 1}"
+    assert(offenders.isEmpty, offenders.mkString("scaladoc stacked on another scaladoc:\n", "\n", ""))
   }
 
   test("no module but graft.Materialize checkpoints, persists or unpersists") {

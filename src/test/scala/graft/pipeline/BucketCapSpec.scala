@@ -32,4 +32,18 @@ class BucketCapSpec extends SparkSuite {
     val loose = Dedup.bandedCandidates(perDoc, k = 4, maxBucket = 8).collect()
     assert(loose.length == 28, s"got ${loose.length}")
   }
+
+  test("minhashCandidatePairs: a boilerplate bucket over the cap proposes no pairs") {
+    import spark.implicits._
+    // 1 030 copies of one text fill each of its four band buckets past the
+    // default cap of 1 024; one exact pair of another text shares buckets
+    // of size 2. The oracle (dedup_minhash_pairs) keeps only that pair.
+    val boiler = "shared footer text copied onto every page of the site"
+    val docs = ((1L to 1030L).map(i => (i, boiler)) ++
+      Seq((2001L, "a private note written twice by one author"),
+        (2002L, "a private note written twice by one author"))).toDF("doc_id", "text")
+    val pairs = Dedup.minhashCandidatePairs(docs, "doc_id", "text", k = 4)
+    assert(pairs.count() == 1L, s"got ${pairs.count()} candidate pairs")
+    assert(pairs.where(col("a") === 2001L && col("b") === 2002L).count() == 1L)
+  }
 }
