@@ -189,10 +189,15 @@ object PipelineQueries {
   // never touch the raw embeddings. A Fixture, same rationale as ivfPqIdx.
   private val savedAnnIndex = Memo("saved_ann_index", Memo.Fixture) { (s, d) =>
     val dir = Memo.tempDir("graft-annidx")
-    val (cent, cb) = ivfPqIdx(s, d)
-    val codes = ivfPqCodes(s, d).withColumnRenamed("vec_id", "id")
-    pipeline.AnnIndex.save(pipeline.AnnIndex.IvfPq(cent, cb, codes, 16), dir)
+    pipeline.AnnIndex.save(memoIvfPq(s, d), dir)
     dir
+  }
+
+  // the in-memory index the two memos above make up: trained quantizers
+  // plus the stored codes in the index layout
+  private def memoIvfPq(s: SparkSession, d: String): pipeline.AnnIndex.IvfPq = {
+    val (cent, cb) = ivfPqIdx(s, d)
+    pipeline.AnnIndex.IvfPq(cent, cb, ivfPqCodes(s, d).withColumnRenamed("vec_id", "id"), 16)
   }
 
   private def docs(spark: SparkSession, dir: String): DataFrame =
@@ -599,6 +604,19 @@ object PipelineQueries {
        |    AND a.query_id <> e.vec_id
        |  GROUP BY 1, 2)""".stripMargin
   }
+
+  /** The oracle's ADC top-3 tail over `src` (query_id, neighbor_id,
+    * micros): rank per query by (micros asc, neighbor_id asc) and turn
+    * the micro-unit sum back into a 4-decimal `dist` — the SQL twin of
+    * Quantization's ADC ranking. */
+  private def adcTop3Sql(src: String): String =
+    s"""r AS (SELECT query_id, neighbor_id, micros,
+       |    row_number() OVER (PARTITION BY query_id ORDER BY micros ASC, neighbor_id ASC) AS rnk FROM $src)
+       |SELECT query_id, neighbor_id,
+       |  floor(CAST(micros AS DOUBLE) / 100.0 + 0.5) / 10000.0 AS dist,
+       |  CAST(rnk AS BIGINT) AS rank
+       |FROM r WHERE rnk <= 3""".stripMargin
+
   private val pqCtes =
     s"""$pqBaseCtes,
       |cb AS (SELECT s, vec_id AS cid, x AS cw FROM sv WHERE vec_id < 16),
@@ -2626,12 +2644,7 @@ object PipelineQueries {
          |dd AS (SELECT a.query_id, e.vec_id AS neighbor_id, CAST(sum(a.micro) AS BIGINT) AS micros
          |  FROM enc e JOIN adc a ON a.s = e.s AND a.cid = e.cid AND a.query_id <> e.vec_id
          |  GROUP BY 1, 2),
-         |r AS (SELECT query_id, neighbor_id, micros,
-         |    row_number() OVER (PARTITION BY query_id ORDER BY micros ASC, neighbor_id ASC) AS rnk FROM dd)
-         |SELECT query_id, neighbor_id,
-         |  floor(CAST(micros AS DOUBLE) / 100.0 + 0.5) / 10000.0 AS dist,
-         |  CAST(rnk AS BIGINT) AS rank
-         |FROM r WHERE rnk <= 3""".stripMargin),
+         |${adcTop3Sql("dd")}""".stripMargin),
     // IVF-PQ: inverted-list routing + ADC scoring over the STORED codes —
     // the per-query serving cost of the build-once index lifecycle (the
     // r11 entry re-encoded the whole corpus per call, so its bench number
@@ -2646,12 +2659,7 @@ object PipelineQueries {
     },
       s"""WITH $pqBaseCtes,
          |${ivfpqResCtes(5)},
-         |r AS (SELECT query_id, neighbor_id, micros,
-         |    row_number() OVER (PARTITION BY query_id ORDER BY micros ASC, neighbor_id ASC) AS rnk FROM rq_dd)
-         |SELECT query_id, neighbor_id,
-         |  floor(CAST(micros AS DOUBLE) / 100.0 + 0.5) / 10000.0 AS dist,
-         |  CAST(rnk AS BIGINT) AS rank
-         |FROM r WHERE rnk <= 3""".stripMargin),
+         |${adcTop3Sql("rq_dd")}""".stripMargin),
     // the one-time encode pass in the open: corpus → (vec_id, lcid, sub,
     // code) against the trained quantizers — benched on its own so the
     // index-build cost stays visible without riding any query entry
@@ -2707,12 +2715,7 @@ object PipelineQueries {
       // same replay
       s"""WITH $pqBaseCtes,
          |${ivfpqResCtes(5)},
-         |r AS (SELECT query_id, neighbor_id, micros,
-         |    row_number() OVER (PARTITION BY query_id ORDER BY micros ASC, neighbor_id ASC) AS rnk FROM rq_dd)
-         |SELECT query_id, neighbor_id,
-         |  floor(CAST(micros AS DOUBLE) / 100.0 + 0.5) / 10000.0 AS dist,
-         |  CAST(rnk AS BIGINT) AS rank
-         |FROM r WHERE rnk <= 3""".stripMargin),
+         |${adcTop3Sql("rq_dd")}""".stripMargin),
     // STREAMING ANN ingest — AnnIndex.appendSave driven by the real
     // streaming engine: a staged source of new embeddings (every 3rd
     // vector re-keyed +10000) arrives in 3 micro-batches
@@ -2728,22 +2731,10 @@ object PipelineQueries {
     Entry("stream_ann_ingest", Memo.coldResult("stream_ann_ingest", Memo.Stream) { (s, d) =>
       val src = streamFixtures(s, d, "stream_ann_ingest")
       val idxDir = Memo.tempDir("graft-annidx-ingest")
-      val (cent, cb) = ivfPqIdx(s, d)
-      pipeline.AnnIndex.save(
-        pipeline.AnnIndex.IvfPq(cent, cb,
-          ivfPqCodes(s, d).withColumnRenamed("vec_id", "id"), 16), idxDir)
+      pipeline.AnnIndex.save(memoIvfPq(s, d), idxDir)
       val e = embeddings(s, d)
-      val q = s.readStream.schema(e.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-        .writeStream
-        .foreachBatch {
-          (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-            pipeline.AnnIndex.appendSave(s, idxDir, batch.toDF(), "vec_id", "embedding")
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+      graft.streaming.EventStreams.drainParquet(s, src, e.schema, maxFilesPerTrigger = 1)(
+        pipeline.AnnIndex.appendSave(s, idxDir, _, "vec_id", "embedding"))
       checkpoint(pipeline.AnnIndex.search(pipeline.AnnIndex.load(s, idxDir),
           e.where(col("vec_id") < 5), "vec_id", "embedding", k = 3, nprobe = 8))
     },
@@ -2760,12 +2751,7 @@ object PipelineQueries {
          |  FROM allc e JOIN rq_adc a ON a.lcid = e.lcid AND a.s = e.s AND a.cid = e.cid
          |    AND a.query_id <> e.vec_id
          |  GROUP BY 1, 2),
-         |r AS (SELECT query_id, neighbor_id, micros,
-         |    row_number() OVER (PARTITION BY query_id ORDER BY micros ASC, neighbor_id ASC) AS rnk FROM dd2)
-         |SELECT query_id, neighbor_id,
-         |  floor(CAST(micros AS DOUBLE) / 100.0 + 0.5) / 10000.0 AS dist,
-         |  CAST(rnk AS BIGINT) AS rank
-         |FROM r WHERE rnk <= 3""".stripMargin),
+         |${adcTop3Sql("dd2")}""".stripMargin),
     // ANN QA: measured recall@k per approximate method (LSH buckets, IVF
     // probing, IVF-PQ ADC) against the exact brute-force top-k over the
     // same query slice — the vector-space sibling of dedup_recall_report
@@ -2923,12 +2909,7 @@ object PipelineQueries {
       s"""WITH $pqBaseCtes,
          |${ivfpqResCtes(5)},
          |kept AS (SELECT * FROM rq_dd WHERE neighbor_id NOT IN (40, 41, 42, 43)),
-         |r AS (SELECT query_id, neighbor_id, micros,
-         |    row_number() OVER (PARTITION BY query_id ORDER BY micros ASC, neighbor_id ASC) AS rnk FROM kept)
-         |SELECT query_id, neighbor_id,
-         |  floor(CAST(micros AS DOUBLE) / 100.0 + 0.5) / 10000.0 AS dist,
-         |  CAST(rnk AS BIGINT) AS rank
-         |FROM r WHERE rnk <= 3""".stripMargin),
+         |${adcTop3Sql("kept")}""".stripMargin),
     // corpus rebalancing: sqrt-temperature quotas per detected language
     Entry("curate_temperature_sample", (s, d) => {
       val withLang = docs(s, d).select(col("doc_id"),

@@ -40,10 +40,15 @@ object AnnIndex {
                  iters: Int = 2): IvfPq = {
     val (cent, cb) = Quantization.ivfPqIndex(
       corpus, idCol, vecCol, nlist, m, codewords, iters)
-    val codes = Quantization.ivfPqEncode(corpus, idCol, vecCol, m, cent, cb)
-      .withColumnRenamed(idCol, "id")
-    IvfPq(cent, cb, codes, m)
+    IvfPq(cent, cb, encode(cent, cb, m, corpus, idCol, vecCol), m)
   }
+
+  /** `batch` encoded against the quantizers into the stored code layout
+    * (id, lcid, sub, code). */
+  private def encode(centroids: DataFrame, codebooks: DataFrame, m: Int,
+                     batch: DataFrame, idCol: String, vecCol: String): DataFrame =
+    Quantization.ivfPqEncode(batch, idCol, vecCol, m, centroids, codebooks)
+      .withColumnRenamed(idCol, "id")
 
   /** Persist the index under `path` as four parquet tables. `codes` is the
     * corpus-sized table and writes with whatever partitioning it arrives
@@ -91,9 +96,7 @@ object AnnIndex {
     * a collision would double-count the vector at serve time). */
   def append(index: IvfPq, batch: DataFrame, idCol: String, vecCol: String): IvfPq =
     index.copy(codes = index.codes.unionByName(
-      Quantization.ivfPqEncode(batch, idCol, vecCol, index.m,
-          index.centroids, index.codebooks)
-        .withColumnRenamed(idCol, "id")))
+      encode(index.centroids, index.codebooks, index.m, batch, idCol, vecCol)))
 
   /** Delete vectors from the index — the GDPR/right-to-forget and
     * corpus-refresh path that completes the lifecycle next to [[append]]:
@@ -120,9 +123,7 @@ object AnnIndex {
   def appendSave(spark: SparkSession, path: String, batch: DataFrame,
                  idCol: String, vecCol: String): Unit = {
     val idx = load(spark, path)
-    Quantization.ivfPqEncode(batch, idCol, vecCol, idx.m,
-        idx.centroids, idx.codebooks)
-      .withColumnRenamed(idCol, "id")
+    encode(idx.centroids, idx.codebooks, idx.m, batch, idCol, vecCol)
       .write.mode("append").parquet(s"$path/codes.parquet")
   }
 }

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.Materialize.checkpoint
 import graft.analytics.Superstep
@@ -43,19 +43,30 @@ object Clustering {
     val seeds = checkpoint(corpus.orderBy("__id").limit(k)
       .select(col("__id").as("cid"), col("__v").as("centroid")))
     Superstep.rounds(seeds, iters, every = 1) { (cents, _) =>
-      val assigned = assign(corpus, cents)
-      val sums = assigned
-        .select(col("cid"), posexplode(col("__v")).as(Seq("pos", "val")))
-        .groupBy("cid", "pos")
-        .agg(sum(col("val").cast("decimal(30,10)")).as("s"), count(lit(1)).as("n"))
-        .select(col("cid"), col("pos"),
-          (col("s").cast("double") / col("n")).as("m"))
-      val fresh = sums.groupBy("cid")
-        .agg(transform(array_sort(collect_list(struct(col("pos"), col("m")))),
-          x => x.getField("m")).as("fresh"))
-      cents.join(fresh, Seq("cid"), "left")
-        .select(col("cid"), coalesce(col("fresh"), col("centroid")).as("centroid"))
+      recenter(cents, assign(corpus, cents)
+        .select(col("cid"), posexplode(col("__v")).as(Seq("pos", "val"))),
+        Seq("cid"), "centroid")
     }
+  }
+
+  /** One Lloyd update, shared by [[kmeansCentroids]] and the residual PQ
+    * codebook training: `members` (keys…, pos, val) holds one row per
+    * member vector component; each (keys…) group's new vector is the
+    * element-wise mean, its sums carried in DECIMAL(30,10) (exact and
+    * partition-order independent) and divided as double, assembled in
+    * pos order. `prev` (keys…, vecCol) rows that lost every member keep
+    * their previous vector. Returns (keys…, vecCol). */
+  private[pipeline] def recenter(prev: DataFrame, members: DataFrame,
+                                 keys: Seq[String], vecCol: String): DataFrame = {
+    val means = members
+      .groupBy((keys :+ "pos").map(col): _*)
+      .agg(sum(col("val").cast("decimal(30,10)")).as("sm"), count(lit(1)).as("n"))
+      .select((keys :+ "pos").map(col) :+ (col("sm").cast("double") / col("n")).as("m"): _*)
+    val fresh = means.groupBy(keys.map(col): _*)
+      .agg(transform(array_sort(collect_list(struct(col("pos"), col("m")))),
+        x => x.getField("m")).as("fresh"))
+    prev.join(fresh, keys, "left")
+      .select(keys.map(col) :+ coalesce(col("fresh"), col(vecCol)).as(vecCol): _*)
   }
 
   /** Final cluster assignment after `iters` iterations: (idCol, cid). */
@@ -76,12 +87,9 @@ object Clustering {
     * empty centroid set) are dropped. */
   def assignTo(df: DataFrame, idCol: String, vecCol: String,
                cents: DataFrame): DataFrame =
-    df.crossJoin(broadcast(centroidArray(cents)))
-      .withColumn("cid", graft.functions.VectorFunctions
-        .nearestCentroidL2(col(vecCol).cast("array<double>"), col("__cents"))
-        .getField("cid"))
-      .where(col("cid").isNotNull)
-      .drop("__cents")
+    nearestL2(df, col(vecCol).cast("array<double>"), cents)
+      .withColumn("cid", col("__s.cid"))
+      .drop("__s")
 
   /** Per-cluster SIMPLIFIED silhouette (Hruschka et al.'s centroid-based
     * variant): per vector, a = distance to its own (nearest) centroid and
@@ -154,17 +162,7 @@ object Clustering {
   def centroidOutliers(df: DataFrame, idCol: String, vecCol: String,
                        k: Int, iters: Int, topN: Int): DataFrame = {
     require(topN > 0, s"need topN > 0; got $topN")
-    val corpus = df.select(col(idCol).as("__id"), col(vecCol).cast("array<double>").as("__v"))
-    val cents = kmeansCentroids(df, idCol, vecCol, k, iters)
-    // narrow row-local argmin (see assign) — scoring and winner identical
-    // to the old crossJoin+min(struct), with the distance kept for ranking
-    corpus.crossJoin(broadcast(centroidArray(cents)))
-      .select(col("__id"),
-        graft.functions.VectorFunctions
-          .nearestCentroidL2(col("__v"), col("__cents")).as("__s"))
-      .where(col("__s").isNotNull)
-      .select(col("__id").as(idCol), col("__s.cid").as("cid"),
-        round(col("__s.d"), 6).as("dist2"))
+    ownCentroidDist(df, idCol, vecCol, k, iters)
       .orderBy(desc("dist2"), col(idCol).asc)
       .limit(topN)
   }
@@ -192,15 +190,7 @@ object Clustering {
   def clusterPrototypes(df: DataFrame, idCol: String, vecCol: String,
                         k: Int, iters: Int, perCluster: Int): DataFrame = {
     require(perCluster > 0, s"need perCluster > 0; got $perCluster")
-    val corpus = df.select(col(idCol).as("__id"), col(vecCol).cast("array<double>").as("__v"))
-    val cents = kmeansCentroids(df, idCol, vecCol, k, iters)
-    val scored = corpus.crossJoin(broadcast(centroidArray(cents)))
-      .select(col("__id"),
-        graft.functions.VectorFunctions
-          .nearestCentroidL2(col("__v"), col("__cents")).as("__s"))
-      .where(col("__s").isNotNull)
-      .select(col("__id").as(idCol), col("__s.cid").as("cid"),
-        round(col("__s.d"), 6).as("dist2"))
+    val scored = ownCentroidDist(df, idCol, vecCol, k, iters)
     val wLocal = org.apache.spark.sql.expressions.Window
       .partitionBy(col("cid"), col("__shard"))
       .orderBy(col("dist2").asc, col(idCol).asc)
@@ -213,6 +203,19 @@ object Clustering {
     pruned.withColumn("rank", row_number().over(wGlobal).cast("long"))
       .where(col("rank") <= perCluster)
       .select(col(idCol), col("cid"), col("rank"), col("dist2"))
+  }
+
+  /** (idCol, cid, dist2): each vector's own fitted k-means centroid and
+    * its L2² distance to it, rounded to 6 decimals BEFORE any ranking so
+    * ranking boundaries are deterministic — the scoring half of
+    * [[centroidOutliers]] and [[clusterPrototypes]], the same
+    * zero-exchange row-local argmin as [[assignTo]]. */
+  private def ownCentroidDist(df: DataFrame, idCol: String, vecCol: String,
+                              k: Int, iters: Int): DataFrame = {
+    val corpus = df.select(col(idCol).as("__id"), col(vecCol).cast("array<double>").as("__v"))
+    nearestL2(corpus, col("__v"), kmeansCentroids(df, idCol, vecCol, k, iters))
+      .select(col("__id").as(idCol), col("__s.cid").as("cid"),
+        round(col("__s.d"), 6).as("dist2"))
   }
 
   /** Per-dimension corpus statistics over an embedding column — the
@@ -433,11 +436,22 @@ object Clustering {
       p: Int = 2, iters: Int = 3): DataFrame = {
     require(p >= 1, s"need p >= 1; got $p")
     val comps = pcaComponents(df, vecCol, p, iters, needLambda = false).map(_._1)
-    // round 10: the projection folds ROW-LOCALLY — means and per-component
-    // loading arrays ride ONE broadcast row each, and CenteredProjection
-    // reproduces the exact decimal quantization + sum of the old
-    // groupBy(id, component) aggregation, which re-keyed the whole corpus
-    // by row id. The corpus-side plan is scan → project → explode(p).
+    val coord = round(col("__s").cast("double"), 6)
+    projectCentered(df, idCol, vecCol, comps)
+      .select(col(idCol), col("component"),
+        when(coord === 0.0, lit(0.0)).otherwise(coord).as("coord"))
+  }
+
+  /** The corpus-side half of [[pcaProject]] and [[pcaWhiten]]: every
+    * centered embedding's raw (decimal-summed) coordinate on each of the
+    * `comps` loadings, (idCol, component, __s). The projection folds
+    * ROW-LOCALLY — means and per-component loading arrays ride ONE
+    * broadcast row each, and CenteredProjection reproduces the exact
+    * decimal quantization + sum of a groupBy(id, component) aggregation
+    * without re-keying the corpus by row id. The corpus-side plan is
+    * scan → project → explode(p). */
+  private def projectCentered(df: DataFrame, idCol: String, vecCol: String,
+                              comps: Seq[DataFrame]): DataFrame = {
     val meansArr = broadcast(dimMeans(df, vecCol)
       .agg(array_sort(collect_list(struct(col("d"), col("mean")))).as("__ms"))
       .select(transform(col("__ms"), x => x.getField("mean")).as("__means")))
@@ -448,13 +462,11 @@ object Clustering {
         transform(col("__ls"), x => x.getField("loading")).as("__l"))
       .agg(array_sort(collect_list(struct(col("component"), col("__l"))))
         .as("__loads")))
-    val coord = round(col("e.s").cast("double"), 6)
     df.select(col(idCol), col(vecCol).cast("array<double>").as("__v"))
       .crossJoin(meansArr).crossJoin(loadArr)
       .select(col(idCol), explode(graft.functions.CenteredProjection
         .centeredProjection(col("__v"), col("__means"), col("__loads"))).as("e"))
-      .select(col(idCol), col("e.component").as("component"),
-        when(coord === 0.0, lit(0.0)).otherwise(coord).as("coord"))
+      .select(col(idCol), col("e.component").as("component"), col("e.s").as("__s"))
   }
 
   /** PCA WHITENING — [[pcaProject]]'s coordinates rescaled to unit
@@ -471,25 +483,10 @@ object Clustering {
       p: Int = 2, iters: Int = 3): DataFrame = {
     require(p >= 1, s"need p >= 1; got $p")
     val cl = pcaComponents(df, vecCol, p, iters)
-    val comps = cl.map(_._1)
     val lams = broadcast(cl.map(_._2).reduce(_ unionByName _)
       .select(col("component"), col("__lam")))
-    val meansArr = broadcast(dimMeans(df, vecCol)
-      .agg(array_sort(collect_list(struct(col("d"), col("mean")))).as("__ms"))
-      .select(transform(col("__ms"), x => x.getField("mean")).as("__means")))
-    val loadArr = broadcast(comps.reduce(_ unionByName _)
-      .groupBy("component")
-      .agg(array_sort(collect_list(struct(col("d"), col("loading")))).as("__ls"))
-      .select(col("component"),
-        transform(col("__ls"), x => x.getField("loading")).as("__l"))
-      .agg(array_sort(collect_list(struct(col("component"), col("__l"))))
-        .as("__loads")))
     val white = round(col("__s").cast("double") / sqrt(col("__lam")), 6)
-    df.select(col(idCol), col(vecCol).cast("array<double>").as("__v"))
-      .crossJoin(meansArr).crossJoin(loadArr)
-      .select(col(idCol), explode(graft.functions.CenteredProjection
-        .centeredProjection(col("__v"), col("__means"), col("__loads"))).as("e"))
-      .select(col(idCol), col("e.component").as("component"), col("e.s").as("__s"))
+    projectCentered(df, idCol, vecCol, cl.map(_._1))
       .join(lams, Seq("component"))
       .select(col(idCol), col("component"),
         when(col("__lam") <= 0.0, lit(null).cast("double"))
@@ -504,18 +501,24 @@ object Clustering {
     cents.agg(array_sort(collect_list(struct(
       col("cid").cast("long").as("cid"), col("centroid")))).as("__cents"))
 
-  /** Argmin-distance assignment — a NARROW projection: the broadcast
-    * centroid array is folded row-locally by the codegen'd
+  /** L2 argmin assignment — a NARROW projection: the broadcast centroid
+    * array is folded row-locally by the codegen'd
     * [[graft.functions.NearestCentroid]] kernel (bit-identical arithmetic
     * and (distance asc, cid asc) winner as the old
     * crossJoin+groupBy(min(struct)) shape), so assignment costs ZERO
     * exchanges — the old form shuffled the whole corpus (vectors aboard)
     * once per call, once per k-means ITERATION. The n×k scored expansion
-    * never exists as rows. */
+    * never exists as rows. Appends the kernel's struct<d, cid> winner to
+    * `df` as `__s`; rows without one (null vector, empty centroid set)
+    * are dropped. */
+  private def nearestL2(df: DataFrame, vec: Column, cents: DataFrame): DataFrame =
+    df.crossJoin(broadcast(centroidArray(cents)))
+      .withColumn("__s", graft.functions.VectorFunctions.nearestCentroidL2(vec, col("__cents")))
+      .where(col("__s.cid").isNotNull)
+      .drop("__cents")
+
+  /** (__id, __v, cid): the corpus with its k-means assignment. */
   private def assign(corpus: DataFrame, cents: DataFrame): DataFrame =
-    corpus.crossJoin(broadcast(centroidArray(cents)))
-      .select(col("__id"), col("__v"),
-        graft.functions.VectorFunctions
-          .nearestCentroidL2(col("__v"), col("__cents")).getField("cid").as("cid"))
-      .where(col("cid").isNotNull)
+    nearestL2(corpus, col("__v"), cents)
+      .select(col("__id"), col("__v"), col("__s.cid").as("cid"))
 }

@@ -72,9 +72,13 @@ object Dedup {
     * the k single-hash bands — [[bandedCandidates]] over
     * [[minhashSignatures]], so the hot-bucket bound every minhash propose
     * (and the DuckDB oracle) applies holds here too. Equi-join on (band
-    * index, hash) — at scale the shuffle is by bucket, never all-pairs. */
+    * index, hash) — at scale the shuffle is by bucket, never all-pairs.
+    * The hot-bucket rollup and both self-join sides read the signature
+    * frame, so it is checkpointed first: left as a lazy aggregate, every
+    * reader re-ran the corpus shingle scan (four scans per action). */
   def minhashCandidatePairs(df: DataFrame, idCol: String, textCol: String, k: Int = 4): DataFrame =
-    bandedCandidates(minhashSignatures(df, idCol, textCol, k).withColumnRenamed(idCol, "doc"), k)
+    bandedCandidates(
+      checkpoint(minhashSignatures(df, idCol, textCol, k).withColumnRenamed(idCol, "doc")), k)
 
   /** 64-bit SimHash over word tokens: bit j of the signature is the sign of
     * sum over tokens of (bit j of md5(token) ? +1 : -1). `bits` trades

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.Materialize.{checkpoint, using}
 import graft.analytics.Superstep
@@ -41,14 +41,9 @@ object Quantization {
                  idCol: String, vecCol: String, k: Int): DataFrame = {
     val exact = checkpoint(Similarity.bruteForceTopK(corpus, queries, idCol, vecCol, k)
       .select(col("query_id"), col("neighbor_id")))
-    val recon = corpus
-      .select(col(idCol), col(vecCol).cast("array<double>").as("__v"))
-      .select(col(idCol), col("__v"),
-        graft.functions.VectorFunctions.int8Scale(col("__v")).as("__scale"))
+    val recon = withInt8Scale(corpus, idCol, vecCol)
       .select(col(idCol),
-        when(col("__scale") === 0.0, transform(col("__v"), _ => lit(0.0)))
-          .otherwise(transform(col("__v"),
-            x => floor(x / col("__scale") + 0.5) * col("__scale"))).as(vecCol))
+        transform(col("__v"), x => int8Code(x, col("scale")) * col("scale")).as(vecCol))
     val q = queries.select(col(idCol), col(vecCol).cast("array<double>").as(vecCol))
     Similarity.recallAgainst(Similarity.bruteForceTopK(recon, q, idCol, vecCol, k)
       .select(col("query_id"), col("neighbor_id")), exact)
@@ -68,16 +63,26 @@ object Quantization {
     * split keeps the scale evaluated once per VECTOR (an attribute under
     * the Generate), not once per exploded element. */
   def int8Rows(df: DataFrame, idCol: String, vecCol: String): DataFrame =
+    withInt8Scale(df, idCol, vecCol)
+      .select(col(idCol), col("scale"),
+        posexplode(col("__v")).as(Seq("pos", "val")))
+      .select(col(idCol), col("pos").cast("long").as("pos"),
+        int8Code(col("val"), col("scale")).as("code"), col("scale"))
+
+  /** (idCol, scale, __v): the vector cast to array<double> beside its
+    * symmetric int8 scale, max|x|/127 from the codegen'd
+    * [[graft.functions.Int8Scale]] kernel — the prefix of every int8
+    * path. */
+  private def withInt8Scale(df: DataFrame, idCol: String, vecCol: String): DataFrame =
     df.select(col(idCol), col(vecCol).cast("array<double>").as("__v"))
       .select(col(idCol),
         graft.functions.VectorFunctions.int8Scale(col("__v")).as("scale"),
         col("__v"))
-      .select(col(idCol), col("scale"),
-        posexplode(col("__v")).as(Seq("pos", "val")))
-      .select(col(idCol), col("pos").cast("long").as("pos"),
-        when(col("scale") === 0.0, lit(0L))
-          .otherwise(floor(col("val") / col("scale") + 0.5)).as("code"),
-        col("scale"))
+
+  /** The int8 code of element `x` under its vector's `scale`:
+    * floor(x/scale + 0.5), and 0 for an all-zero vector (scale 0). */
+  private def int8Code(x: Column, scale: Column): Column =
+    when(scale === 0.0, lit(0L)).otherwise(floor(x / scale + 0.5))
 
   /** Product quantization (the faiss PQ layout): each vector is split into
     * `m` equal sub-vectors and every sub-vector is replaced by the id of
@@ -149,7 +154,7 @@ object Quantization {
   /** Squared L2 between a sub-vector `x` and a codeword `cw` — the same
     * `v·v − 2 v·c + c·c` expression shape as [[Clustering]]'s assignment,
     * so every PQ consumer (and its oracle) scores identically. */
-  private def subDist: org.apache.spark.sql.Column = {
+  private def subDist: Column = {
     import graft.functions.VectorFunctions.dotNative
     dotNative(col("x"), col("x")) -
       dotNative(col("x"), col("cw")) * 2.0 +
@@ -182,9 +187,19 @@ object Quantization {
     val adc = qs.join(broadcast(cb), Seq("s"))
       .select(col("query_id"), col("s").cast("long").as("sub"), col("cid").as("code"),
         floor(subDist * 1000000.0 + 0.5).cast("long").as("__micro"))
-    val dists = pqEncode(corpus, idCol, vecCol, m, codewords)
-      .select(col(idCol).as("neighbor_id"), col("sub"), col("code"))
-      .join(broadcast(adc), Seq("sub", "code"))
+    adcTopK(pqEncode(corpus, idCol, vecCol, m, codewords)
+      .select(col(idCol).as("neighbor_id"), col("sub"), col("code")), adc, Seq("sub", "code"), k)
+  }
+
+  /** The ADC ranking tail of [[pqTopK]] and [[ivfPqSearchCodes]]: corpus
+    * `codes` (neighbor_id, keys…) join the broadcast per-query ADC table
+    * `adc` (query_id, keys…, __micro) on `keys`; a vector's distance is
+    * the exact integer sum of its looked-up micro-units (self-matches
+    * excluded), ranked per query by (micros asc, neighbor_id asc). Returns
+    * (query_id, neighbor_id, dist, rank), dist in 4-decimal units. */
+  private def adcTopK(codes: DataFrame, adc: DataFrame, keys: Seq[String], k: Int): DataFrame = {
+    val dists = codes
+      .join(broadcast(adc), keys)
       .where(col("query_id") =!= col("neighbor_id"))
       .groupBy("query_id", "neighbor_id")
       .agg(sum(col("__micro")).as("__micros"))
@@ -250,33 +265,47 @@ object Quantization {
     val cent = checkpoint(Clustering
       .kmeansCentroids(corpus.select(col(idCol), col(vecCol)), idCol, vecCol, nlist, iters)
       .select(col("cid").cast("long").as("lcid"), col("centroid")))
-    val centSub = broadcast(subVectors(
-        cent.select(col("lcid"), col("centroid")), "lcid", "centroid", m)
-      .select(col("lcid").cast("long").as("lcid"), col("s"), col("x").as("c")))
     val resCb = trainResidualCodebooks(subVectors(corpus, idCol, vecCol, m),
-      listAssign(corpus, idCol, vecCol, cent), centSub, idCol, nlist, codewords, iters)
+      listAssign(corpus, idCol, vecCol, cent), centroidSubs(cent, m),
+      idCol, nlist, codewords, iters)
     (cent, resCb)
   }
 
-  /** Corpus → inverted-list assignment: argmax-cosine folded ROW-LOCALLY
-    * over the broadcast centroid array by the codegen'd
-    * [[graft.functions.NearestCentroid]] kernel — a narrow projection with
-    * zero exchanges (the old min(struct) aggregation still shuffled one
-    * winner row per vector); the n×nlist expansion never exists as rows. */
+  /** The (lcid, centroid) coarse centroids as one broadcast
+    * [[Clustering.centroidArray]] row. */
+  private def centroidArray(cent: DataFrame): DataFrame =
+    broadcast(Clustering.centroidArray(cent.select(col("lcid").as("cid"), col("centroid"))))
+
+  /** Corpus → inverted-list assignment (__vid, lcid): the shared
+    * [[Similarity.listAssign]] fold over the centroid array. */
   private def listAssign(corpus: DataFrame, idCol: String, vecCol: String,
-                         cent: DataFrame): DataFrame = {
-    val centArr = broadcast(cent
-      .select(col("lcid").cast("long").as("cid"), col("centroid"))
-      .agg(array_sort(collect_list(struct(col("cid"), col("centroid"))))
-        .as("__cents")))
-    corpus.select(col(idCol).as("__vid"), col(vecCol).as("cv"))
-      .crossJoin(centArr)
-      .select(col("__vid"),
-        graft.functions.VectorFunctions
-          .nearestCentroidNegCos(col("cv"), col("__cents"))
-          .getField("cid").as("lcid"))
-      .where(col("lcid").isNotNull)
-  }
+                         cent: DataFrame): DataFrame =
+    Similarity.listAssign(corpus.select(col(idCol).as("__vid"), col(vecCol).as("cv")), "cv",
+        centroidArray(cent))
+      .select(col("__vid"), col("cid").as("lcid"))
+
+  /** Centroid sub-vectors (lcid, s, c), nlist × m rows, broadcast. */
+  private def centroidSubs(cent: DataFrame, m: Int): DataFrame =
+    broadcast(subVectors(cent.select(col("lcid"), col("centroid")), "lcid", "centroid", m)
+      .select(col("lcid").cast("long").as("lcid"), col("s"), col("x").as("c")))
+
+  /** Corpus sub-vectors `sv` (idCol, s, x) beside their list assignment
+    * and the assigned centroid's sub-vector: (…, lcid, c) — the residual
+    * x − c every residual-PQ step scores without materializing. */
+  private def withCentroidSubs(sv: DataFrame, assign: DataFrame, centSub: DataFrame,
+                               idCol: String): DataFrame =
+    sv.join(assign, col(idCol) === col("__vid")).join(centSub, Seq("lcid", "s"))
+
+  /** Per (keys…) — keys include the subspace `s` — the residual codeword
+    * of `cb` (s, cid, cw) nearest by [[resSubDist]]: a
+    * map-side-combinable min(struct(d, cid)), ties to the smaller cid.
+    * Returns (keys…, __sc). */
+  private def nearestResidualCodeword(svc: DataFrame, cb: DataFrame,
+                                      keys: Seq[String]): DataFrame =
+    svc.join(broadcast(cb), Seq("s"))
+      .select(keys.map(col) :+ struct(resSubDist.as("d"), col("cid")).as("__sc"): _*)
+      .groupBy(keys.map(col): _*)
+      .agg(min(col("__sc")).as("__sc"))
 
   /** Serve ANN top-k from a prebuilt [[ivfPqIndex]]: encode the corpus
     * codes in-line ([[ivfPqEncode]] — same accounting as the raw-PQ
@@ -297,20 +326,9 @@ object Quantization {
     * materialize ([[resSubDist]]). */
   def ivfPqEncode(corpus: DataFrame, idCol: String, vecCol: String, m: Int,
                   centIn: DataFrame, resCbIn: DataFrame): DataFrame = {
-    val resCb = broadcast(resCbIn)
-    val assign = listAssign(corpus, idCol, vecCol, centIn)
-    // centroid sub-vectors (nlist × m rows, broadcast)
-    val centSub = broadcast(subVectors(
-        centIn.select(col("lcid"), col("centroid")), "lcid", "centroid", m)
-      .select(col("lcid").cast("long").as("lcid"), col("s"), col("x").as("c")))
-    subVectors(corpus, idCol, vecCol, m)
-      .join(assign, col(idCol) === col("__vid"))
-      .join(centSub, Seq("lcid", "s"))
-      .join(resCb, Seq("s"))
-      .select(col(idCol), col("lcid"), col("s"),
-        struct(resSubDist.as("d"), col("cid")).as("__sc"))
-      .groupBy(col(idCol), col("lcid"), col("s"))
-      .agg(min(col("__sc")).as("__sc"))
+    val svc = withCentroidSubs(subVectors(corpus, idCol, vecCol, m),
+      listAssign(corpus, idCol, vecCol, centIn), centroidSubs(centIn, m), idCol)
+    nearestResidualCodeword(svc, resCbIn, Seq(idCol, "lcid", "s"))
       .select(col(idCol), col("lcid"),
         col("s").cast("long").as("sub"), col("__sc.cid").as("code"))
   }
@@ -325,50 +343,24 @@ object Quantization {
                        k: Int, nprobe: Int, m: Int,
                        centIn: DataFrame, resCbIn: DataFrame): DataFrame = {
     require(k > 0 && nprobe > 0, s"need k > 0, nprobe > 0; got k=$k nprobe=$nprobe")
-    val w = org.apache.spark.sql.expressions.Window
-    val resCb = broadcast(resCbIn)
-    // probe selection: row-local transform+sort+slice over the broadcast
-    // centroid array (no per-query aggregation shuffle; see ivfTopKWith)
-    val centArr = broadcast(centIn
-      .select(col("lcid").cast("long").as("cid"), col("centroid"))
-      .agg(array_sort(collect_list(struct(col("cid"), col("centroid"))))
-        .as("__cents")))
-    val probes = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
-      .crossJoin(centArr)
-      .select(col("query_id"),
-        explode(slice(array_sort(transform(col("__cents"), c =>
-            struct((-Similarity.cosine(col("qv"), c.getField("centroid"))).as("nc"),
-              c.getField("cid").as("lcid")))),
-          1, nprobe)).as("__p"))
-      .select(col("query_id"), col("__p.lcid").as("lcid"))
-    // centroid sub-vectors (nlist × m rows, broadcast)
-    val centSub = broadcast(subVectors(
-        centIn.select(col("lcid"), col("centroid")), "lcid", "centroid", m)
-      .select(col("lcid").cast("long").as("lcid"), col("s"), col("x").as("c")))
-    val enc = codes.select(col(idCol).as("neighbor_id"), col("lcid"),
-      col("sub"), col("code"))
+    // probe selection: the shared row-local transform+sort+slice over the
+    // broadcast centroid array (no per-query aggregation shuffle)
+    val probes = Similarity.probeLists(
+        queries.select(col(idCol).as("query_id"), col(vecCol).as("qv")), "qv",
+        centroidArray(centIn), nprobe)
+      .select(col("query_id"), col("cid").as("lcid"))
     // per-(query, probed list) ADC table: the query residual against every
     // codeword, integer micro-units (queries × nprobe × m × k rows)
     val adc = subVectors(queries, idCol, vecCol, m)
       .select(col(idCol).as("query_id"), col("s"), col("x"))
       .join(probes, Seq("query_id"))
-      .join(centSub, Seq("lcid", "s"))
-      .join(resCb, Seq("s"))
+      .join(centroidSubs(centIn, m), Seq("lcid", "s"))
+      .join(broadcast(resCbIn), Seq("s"))
       .select(col("query_id"), col("lcid"), col("s").cast("long").as("sub"),
         col("cid").as("code"),
         floor(resSubDist * 1000000.0 + 0.5).cast("long").as("__micro"))
-    val dists = enc
-      .join(broadcast(adc), Seq("lcid", "sub", "code"))
-      .where(col("query_id") =!= col("neighbor_id"))
-      .groupBy("query_id", "neighbor_id")
-      .agg(sum(col("__micro")).as("__micros"))
-    val rankW = w.partitionBy("query_id").orderBy(col("__micros").asc, col("neighbor_id").asc)
-    dists.withColumn("rank", row_number().over(rankW))
-      .where(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"),
-        (floor(col("__micros").cast("double") / 100.0 + 0.5).cast("double") / 10000.0)
-          .as("dist"),
-        col("rank").cast("long").as("rank"))
+    adcTopK(codes.select(col(idCol).as("neighbor_id"), col("lcid"), col("sub"), col("code")),
+      adc, Seq("lcid", "sub", "code"), k)
   }
 
   /** IVF-PQ search with EXACT rerank — the faiss "refine" production
@@ -397,7 +389,6 @@ object Quantization {
                       k: Int, rerank: Int, nprobe: Int, m: Int,
                       centIn: DataFrame, resCbIn: DataFrame): DataFrame = {
     require(rerank >= 1, s"need rerank >= 1; got $rerank")
-    val w = org.apache.spark.sql.expressions.Window
     val cand = ivfPqSearchCodes(codes, queries, idCol, vecCol,
         k * rerank, nprobe, m, centIn, resCbIn)
       .select(col("query_id"), col("neighbor_id"))
@@ -408,9 +399,7 @@ object Quantization {
       .join(qv, Seq("query_id"))
       .select(col("query_id"), col("neighbor_id"),
         round(Similarity.cosine(col("__qv"), col("__cv")), 6).as("cos"))
-    val rankW = w.partitionBy("query_id").orderBy(col("cos").desc, col("neighbor_id").asc)
-    rescored.withColumn("rank", row_number().over(rankW))
-      .where(col("rank") <= k)
+    Similarity.topKPerQuery(rescored, k)
       .select(col("query_id"), col("neighbor_id"), col("cos"),
         col("rank").cast("long").as("rank"))
   }
@@ -419,7 +408,7 @@ object Quantization {
     * x·x − 2x·c + c·c − 2(x·cw − c·cw) + cw·cw — every term a codegen'd
     * native dot product over the raw sub-slices. Term order is pinned;
     * the DuckDB oracle replays the identical association. */
-  private def resSubDist: org.apache.spark.sql.Column = {
+  private def resSubDist: Column = {
     import graft.functions.VectorFunctions.dotNative
     dotNative(col("x"), col("x")) -
       dotNative(col("x"), col("c")) * 2.0 +
@@ -444,9 +433,8 @@ object Quantization {
                                      centSub: DataFrame, idCol: String,
                                      nlist: Int, codewords: Int,
                                      iters: Int): DataFrame = {
-    val seeds = checkpoint(sv.where(col(idCol) >= nlist && col(idCol) < nlist + codewords)
-      .join(assign, col(idCol) === col("__vid"))
-      .join(centSub, Seq("lcid", "s"))
+    val seeds = checkpoint(withCentroidSubs(
+        sv.where(col(idCol) >= nlist && col(idCol) < nlist + codewords), assign, centSub, idCol)
       .select(col("s"), col(idCol).cast("long").as("cid"),
         zip_with(col("x"), col("c"), (a, b) => a - b).as("cw")))
     if (iters == 0) seeds
@@ -462,28 +450,12 @@ object Quantization {
           posexplode(col("x")).as(Seq("pos", "xval")))
         .join(centComp, Seq("lcid", "s", "pos"))
         .select(col(idCol), col("s"), col("pos"),
-          (col("xval") - col("cval")).as("rval")), fill = true) { rcomp =>
+          (col("xval") - col("cval")).as("val")), fill = true) { rcomp =>
         Superstep.rounds(seeds, iters, every = 1) { (cb, _) =>
-          val assigned = sv
-            .join(assign, col(idCol) === col("__vid"))
-            .join(centSub, Seq("lcid", "s"))
-            .join(broadcast(cb), Seq("s"))
-            .select(col(idCol), col("s"),
-              struct(resSubDist.as("d"), col("cid")).as("__sc"))
-            .groupBy(col(idCol), col("s")).agg(min(col("__sc")).as("__sc"))
+          val assigned = nearestResidualCodeword(
+              withCentroidSubs(sv, assign, centSub, idCol), cb, Seq(idCol, "s"))
             .select(col(idCol), col("s"), col("__sc.cid").as("cid"))
-          val means = assigned.join(rcomp, Seq(idCol, "s"))
-            .groupBy("s", "cid", "pos")
-            .agg(sum(col("rval").cast("decimal(30,10)")).as("sm"),
-              count(lit(1)).as("n"))
-            .select(col("s"), col("cid"), col("pos"),
-              (col("sm").cast("double") / col("n")).as("mv"))
-          val fresh = means.groupBy("s", "cid")
-            .agg(transform(array_sort(collect_list(struct(col("pos"), col("mv")))),
-              x => x.getField("mv")).as("fresh"))
-          cb.join(fresh, Seq("s", "cid"), "left")
-            .select(col("s"), col("cid"),
-              coalesce(col("fresh"), col("cw")).as("cw"))
+          Clustering.recenter(cb, assigned.join(rcomp, Seq(idCol, "s")), Seq("s", "cid"), "cw")
         }
       }
     }
@@ -496,11 +468,7 @@ object Quantization {
     * corpus by id. Library surface; the oracled scan shape is
     * [[int8Rows]]. */
   def int8(df: DataFrame, idCol: String, vecCol: String): DataFrame =
-    df.select(col(idCol), col(vecCol).cast("array<double>").as("__v"))
-      .select(col(idCol),
-        graft.functions.VectorFunctions.int8Scale(col("__v")).as("scale"),
-        col("__v"))
+    withInt8Scale(df, idCol, vecCol)
       .select(col(idCol), col("scale"),
-        transform(col("__v"), x => when(col("scale") === 0.0, lit(0L))
-          .otherwise(floor(x / col("scale") + 0.5))).as("codes"))
+        transform(col("__v"), x => int8Code(x, col("scale"))).as("codes"))
 }

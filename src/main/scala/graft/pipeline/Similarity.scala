@@ -135,7 +135,8 @@ object Similarity {
   /** The ANN ranking every operator here shares: per query_id, the `k`
     * best rows by (cos desc, neighbor_id asc), numbered 1..k in
     * `rankCol`. */
-  private def topKPerQuery(scored: DataFrame, k: Int, rankCol: String = "rank"): DataFrame = {
+  private[pipeline] def topKPerQuery(scored: DataFrame, k: Int,
+                                     rankCol: String = "rank"): DataFrame = {
     val w = Window.partitionBy("query_id").orderBy(desc("cos"), asc("neighbor_id"))
     scored.withColumn(rankCol, row_number().over(w)).where(col(rankCol) <= k)
   }
@@ -279,49 +280,54 @@ object Similarity {
     // the nlist centroids as ONE collected cid-sorted row — nlist is
     // bounded by construction (it was the broadcast side already), and the
     // single row broadcasts to both the assignment and the probe scans
-    val cent = broadcast(centroids
-      .select(col("cid").cast("long").as("cid"), col("centroid"))
-      .agg(array_sort(collect_list(struct(col("cid"), col("centroid"))))
-        .as("__cents")))
-    // List assignment: argmax-cosine per corpus vector, folded ROW-LOCALLY
-    // over the broadcast centroid array by the codegen'd NearestCentroid
-    // kernel — a narrow projection with ZERO exchanges, where the old
-    // min(struct(-cos, cid, cv)) aggregation still shuffled one winner row
-    // per vector (float vectors aboard). IEEE negation is exact, so
-    // argmin(-cos) picks the same winner (and smallest-cid tiebreak) as a
-    // desc(cos) ranking for real-valued cosines; a NaN cosine (zero-norm
-    // centroid) compares LARGEST, so a degenerate centroid wins nothing.
-    // The n×nlist scored expansion never exists as rows.
+    val cent = broadcast(Clustering.centroidArray(centroids))
     val nExtra = corpus.columns.filterNot(Set(idCol, vecCol)).toSeq
     val qExtra = queries.columns.filterNot(Set(idCol, vecCol)).toSeq
-    val assign = corpus.select(col(idCol).as("neighbor_id") +: col(vecCol).as("cv") +:
-        nExtra.map(c => col(c).as(s"n_$c")): _*)
-      .crossJoin(cent)
-      .select(col("neighbor_id") +: col("cv") +:
-        graft.functions.VectorFunctions
-          .nearestCentroidNegCos(col("cv"), col("__cents"))
-          .getField("cid").as("cid") +: nExtra.map(c => col(s"n_$c")): _*)
-      .where(col("cid").isNotNull)
-    // Probe selection: the nprobe nearest lists per query via a row-local
-    // transform + array_sort + slice over the same broadcast nlist-bounded
-    // array — no per-query aggregation or window; the sorted array orders
-    // by (-cos, cid), so the slice keeps exactly the top-nprobe winners.
-    val probes = queries.select(col(idCol).as("query_id") +: col(vecCol).as("qv") +:
-        qExtra.map(c => col(c).as(s"q_$c")): _*)
-      .crossJoin(cent)
-      .select(col("query_id") +: col("qv") +:
-        posexplode(slice(array_sort(transform(col("__cents"), c =>
-            struct((-cosine(col("qv"), c.getField("centroid"))).as("nc"),
-              c.getField("cid").as("cid")))),
-          1, nprobe)).as(Seq("__pos", "__p")) +: qExtra.map(c => col(s"q_$c")): _*)
-      .select(col("query_id") +: col("qv") +: (col("__pos") + 1).as("probe_rank") +:
-        col("__p.cid").as("cid") +: qExtra.map(c => col(s"q_$c")): _*)
+    val assign = listAssign(corpus.select(col(idCol).as("neighbor_id") +:
+      col(vecCol).as("cv") +: nExtra.map(c => col(c).as(s"n_$c")): _*), "cv", cent)
+    val probes = probeLists(queries.select(col(idCol).as("query_id") +:
+      col(vecCol).as("qv") +: qExtra.map(c => col(c).as(s"q_$c")): _*), "qv", cent, nprobe)
     probes.join(assign, Seq("cid"))
       .where(col("query_id") =!= col("neighbor_id"))
       .select(col("query_id") +: col("neighbor_id") +: col("probe_rank") +:
         round(cosine(col("qv"), col("cv")), 6).as("cos") +:
         (qExtra.map(c => col(s"q_$c")) ++ nExtra.map(c => col(s"n_$c"))): _*)
   }
+
+  /** Inverted-list assignment of every `df` row: the cid of the
+    * cosine-nearest centroid in `cents` (a broadcast
+    * [[Clustering.centroidArray]] row), appended as `cid`. The argmax-cosine
+    * folds ROW-LOCALLY in the codegen'd NearestCentroid kernel — a narrow
+    * projection with ZERO exchanges, where a min(struct(-cos, cid, cv))
+    * aggregation would shuffle one winner row per vector (float vectors
+    * aboard). IEEE negation is exact, so argmin(-cos) picks the
+    * same winner (and smallest-cid tiebreak) as a desc(cos) ranking for
+    * real-valued cosines; a NaN cosine (zero-norm centroid) compares
+    * LARGEST, so a degenerate centroid wins nothing. The n×nlist scored
+    * expansion never exists as rows; rows without a winner are dropped. */
+  private[pipeline] def listAssign(df: DataFrame, vecCol: String, cents: DataFrame): DataFrame =
+    df.crossJoin(cents)
+      .withColumn("cid", graft.functions.VectorFunctions
+        .nearestCentroidNegCos(col(vecCol), col("__cents")).getField("cid"))
+      .where(col("cid").isNotNull)
+      .drop("__cents")
+
+  /** Probe selection: the `nprobe` cosine-nearest lists of every `df` row,
+    * one row per probed list with (probe_rank, cid) appended — a row-local
+    * transform + array_sort + slice over the broadcast centroid array
+    * `cents` (no per-query aggregation or window); the sorted array
+    * orders by (-cos, cid), so the slice keeps exactly the top-nprobe
+    * winners, ranked 1..nprobe. */
+  private[pipeline] def probeLists(df: DataFrame, vecCol: String, cents: DataFrame,
+                                   nprobe: Int): DataFrame =
+    df.crossJoin(cents)
+      .select(df.columns.map(col) :+
+        posexplode(slice(array_sort(transform(col("__cents"), c =>
+            struct((-cosine(col(vecCol), c.getField("centroid"))).as("nc"),
+              c.getField("cid").as("cid")))),
+          1, nprobe)).as(Seq("__pos", "__p")): _*)
+      .select(df.columns.map(col) ++ Seq((col("__pos") + 1).as("probe_rank"),
+        col("__p.cid").as("cid")): _*)
 
   /** Hard-negative mining for contrastive/embedding training: for every
     * anchor, the `k` most similar corpus vectors whose label DIFFERS from

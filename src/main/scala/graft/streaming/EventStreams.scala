@@ -332,28 +332,43 @@ object EventStreams {
       .flatMapGroupsWithState[SessionState, Session](
         OutputMode.Append, GroupStateTimeout.ProcessingTimeTimeout) {
         case (userId, rows, state: GroupState[SessionState]) =>
-          if (state.hasTimedOut) {
-            // idle past the gap with no new events: flush the open session
-            val st = state.get
-            state.remove()
-            if (st.nEvents > 0) Iterator.single(Session(userId, st.nEvents, st.firstTs, st.lastTs))
-            else Iterator.empty
-          } else {
-            val sorted = rows.map(_._2).toSeq.sorted
-            var st = state.getOption.getOrElse(SessionState(0, Long.MaxValue, Long.MinValue))
-            val closed = Seq.newBuilder[Session]
-            sorted.foreach { t =>
-              if (st.nEvents > 0 && t - st.lastTs > gapSeconds) {
-                closed += Session(userId, st.nEvents, st.firstTs, st.lastTs)
-                st = SessionState(0, Long.MaxValue, Long.MinValue)
-              }
-              st = SessionState(st.nEvents + 1, math.min(st.firstTs, t), math.max(st.lastTs, t))
-            }
+          sessionStep(userId, rows.map(_._2), state, gapSeconds) { st =>
             state.update(st)
             state.setTimeoutDuration(gapSeconds * 1000L)
-            closed.result().iterator
+            false
           }
       }
+  }
+
+  /** One flatMapGroupsWithState step of both sessionizers. A timed-out
+    * user (idle past the gap with no new events) has its open session
+    * flushed: removed from the state and emitted. Otherwise the user's new
+    * event times (epoch seconds) fold in time order into the open session,
+    * and a gap over `gapSeconds` closes it (emitted now). `register` then
+    * either keeps the open session in the state with its timeout and
+    * returns false, or drops it from the state and returns true to emit it
+    * now. */
+  private def sessionStep(userId: Long, epochs: Iterator[Long],
+                          state: GroupState[SessionState], gapSeconds: Long)(
+      register: SessionState => Boolean): Iterator[Session] = {
+    def session(st: SessionState) = Session(userId, st.nEvents, st.firstTs, st.lastTs)
+    if (state.hasTimedOut) {
+      val st = state.get
+      state.remove()
+      if (st.nEvents > 0) Iterator.single(session(st)) else Iterator.empty
+    } else {
+      var st = state.getOption.getOrElse(SessionState(0, Long.MaxValue, Long.MinValue))
+      val closed = Seq.newBuilder[Session]
+      epochs.toSeq.sorted.foreach { t =>
+        if (st.nEvents > 0 && t - st.lastTs > gapSeconds) {
+          closed += session(st)
+          st = SessionState(0, Long.MaxValue, Long.MinValue)
+        }
+        st = SessionState(st.nEvents + 1, math.min(st.firstTs, t), math.max(st.lastTs, t))
+      }
+      if (register(st)) closed += session(st)
+      closed.result().iterator
+    }
   }
 
   /** Event-time sessionization for STREAMING execution
@@ -389,22 +404,7 @@ object EventStreams {
       .flatMapGroupsWithState[SessionState, Session](
         OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
         case (userId, rows, state: GroupState[SessionState]) =>
-          if (state.hasTimedOut) {
-            val st = state.get
-            state.remove()
-            if (st.nEvents > 0) Iterator.single(Session(userId, st.nEvents, st.firstTs, st.lastTs))
-            else Iterator.empty
-          } else {
-            val sorted = rows.map(_._2).toSeq.sorted
-            var st = state.getOption.getOrElse(SessionState(0, Long.MaxValue, Long.MinValue))
-            val closed = Seq.newBuilder[Session]
-            sorted.foreach { t =>
-              if (st.nEvents > 0 && t - st.lastTs > gapSeconds) {
-                closed += Session(userId, st.nEvents, st.firstTs, st.lastTs)
-                st = SessionState(0, Long.MaxValue, Long.MinValue)
-              }
-              st = SessionState(st.nEvents + 1, math.min(st.firstTs, t), math.max(st.lastTs, t))
-            }
+          sessionStep(userId, rows.map(_._2), state, gapSeconds) { st =>
             val expiryMs = (st.lastTs + gapSeconds) * 1000L
             if (expiryMs <= state.getCurrentWatermarkMs()) {
               // already past the horizon when processed: emit now (the
@@ -421,13 +421,13 @@ object EventStreams {
               // session for one extra micro-batch, after which the
               // advancing watermark makes both agree. The gate fixture's
               // time-range batches never produce the equality.
-              closed += Session(userId, st.nEvents, st.firstTs, st.lastTs)
               state.remove()
+              true
             } else {
               state.update(st)
               state.setTimeoutTimestamp(expiryMs)
+              false
             }
-            closed.result().iterator
           }
       }
   }
@@ -538,16 +538,25 @@ object EventStreams {
       new java.net.URI(dbDir), spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(new org.apache.hadoop.fs.Path(s"$dbDir/vertices")))
       graft.model.GraphStore.empty(spark).save(dbDir)
-    val q = spark.readStream.schema(eventsSchema)
+    drainParquet(spark, srcDir, eventsSchema, maxFilesPerTrigger)(ingestEventsBatch(_, dbDir))
+  }
+
+  /** Drain the parquet files under `srcDir` through `each`, one
+    * micro-batch of at most `maxFilesPerTrigger` files at a time, and
+    * return when the source is exhausted (a `Trigger.AvailableNow` query
+    * run to termination). With `checkpointDir` the source records the
+    * files it has processed there, so a rerun resumes after them. */
+  private[graft] def drainParquet(spark: SparkSession, srcDir: String, schema: StructType,
+                                  maxFilesPerTrigger: Int,
+                                  checkpointDir: Option[String] = None)(
+      each: DataFrame => Unit): Unit = {
+    val w = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
       .parquet(srcDir)
       .writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        ingestEventsBatch(batch.toDF(), dbDir)
-      }
+      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) => each(batch.toDF()) }
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    checkpointDir.fold(w)(d => w.option("checkpointLocation", d)).start().awaitTermination()
   }
 
   /** One micro-batch of [[streamIntoGraph]] (also usable as a plain batch
@@ -631,18 +640,11 @@ object EventStreams {
           "an uncheckpointed serve would re-score every file and append " +
           "duplicate rows. Pass checkpointDir to resume, or use a fresh outDir.")
     }
-    val w0 = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(srcDir)
-      .writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        graft.pipeline.TextAnalysis
-          .naiveBayesClassify(batch.toDF(), idCol, textCol, wordModel, labelTable)
-          .write.mode("append").parquet(outDir)
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-    val q = checkpointDir.fold(w0)(d => w0.option("checkpointLocation", d)).start()
-    q.awaitTermination()
+    drainParquet(spark, srcDir, schema, maxFilesPerTrigger, checkpointDir) { batch =>
+      graft.pipeline.TextAnalysis
+        .naiveBayesClassify(batch, idCol, textCol, wordModel, labelTable)
+        .write.mode("append").parquet(outDir)
+    }
     spark.read.parquet(outDir)
   }
 

@@ -48,6 +48,30 @@ class ClusteringSpec extends SparkSuite {
     assert(a == b)
   }
 
+  test("kmeans, assignTo, centroidOutliers and clusterPrototypes give every vector the same cid") {
+    // three loose blobs at irregular offsets, no two points equidistant
+    // from a centroid; seeds 0, 1, 2 start one in each blob
+    val vecs = Seq(
+      (0L, Array(0.3f, 0.1f)), (1L, Array(5.2f, 4.9f)), (2L, Array(9.7f, 0.4f)),
+      (3L, Array(1.1f, 0.7f)), (4L, Array(6.3f, 5.6f)), (5L, Array(8.6f, 1.3f)),
+      (6L, Array(0.2f, 1.9f)), (7L, Array(4.1f, 6.2f)), (8L, Array(10.4f, 2.2f)),
+      (9L, Array(2.3f, 0.05f)))
+      .toDF("vec_id", "embedding")
+    val (k, iters, n) = (3, 2, 10)
+    def cids(df: org.apache.spark.sql.DataFrame): Map[Long, Long] =
+      df.select(col("vec_id"), col("cid")).collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val km = cids(Clustering.kmeans(vecs, "vec_id", "embedding", k, iters))
+    assert(km.size == n && km.values.toSet == Set(0L, 1L, 2L), s"got $km")
+    val cents = Clustering.kmeansCentroids(vecs, "vec_id", "embedding", k, iters)
+    assert(cids(Clustering.assignTo(vecs, "vec_id", "embedding", cents)) == km)
+    val outliers = Clustering.centroidOutliers(vecs, "vec_id", "embedding", k, iters, topN = n)
+    assert(cids(outliers) == km)
+    assert(outliers.select("dist2").distinct().count() == n, "fixture has tied distances")
+    assert(cids(Clustering.clusterPrototypes(vecs, "vec_id", "embedding", k, iters,
+      perCluster = n)) == km)
+  }
+
   test("centroids converge to the blob means") {
     val c = Clustering.kmeansCentroids(blobs, "vec_id", "embedding", k = 2, iters = 3)
       .collect().map(r => r.getLong(0) -> r.getSeq[Double](1)).toMap
